@@ -211,7 +211,7 @@ def test_shingle_df_cutoff_bounds_pair_join(spark, tmp_path):
     try:
         register_tables(spark, sf, ("documents",))
 
-        kept = _shingle_kept_materialized(spark)
+        kept = _shingle_kept_materialized(spark, "jacc_kept_mat")
         max_df = kept.groupBy("shingle").count().agg(F.max("count")).first()[0]
         assert max_df <= _SHINGLE_MAX_DF
 
