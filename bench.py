@@ -141,6 +141,32 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def warm_session(spark, cpus: int = CPUS):
+    """Warm a fresh session so per-query times are steady-state: the
+    JVM/codegen paths (one scan of ``region``) and the Python/Arrow
+    daemon pool. Without the latter, whichever query executes Python
+    first pays the ~2-3 s worker spawn (measured: the payer shifted
+    from dedup_winnowing to dedup_ngram_jaccard in r9 purely from
+    alphabetical pipeline changes). Both Python codepaths are warmed —
+    scalar Arrow UDF and mapInPandas initialize different serializer
+    stacks (a pandas_udf warm alone left ~1 s of mapInPandas first-use
+    cost). Returns the warmed scalar UDF for the python probe."""
+    from pyspark.sql.functions import pandas_udf
+
+    _force(spark.sql("SELECT count(*) AS n FROM region"))
+
+    @pandas_udf("long")
+    def _warm_py(s):
+        return s
+
+    def _warm_mip(it):
+        yield from it
+
+    _force(spark.range(100_000).repartition(cpus).select(_warm_py("id")))
+    _force(spark.range(100_000).repartition(cpus).mapInPandas(_warm_mip, "id long"))
+    return _warm_py
+
+
 def mrshare_queries(n: int) -> list[str]:
     """N same-signature aggregations (GROUP BY l_returnflag,
     l_linestatus; predicates/aggregates differ) — the unconditional-win
@@ -177,24 +203,63 @@ def mrshare_queries(n: int) -> list[str]:
     ]
 
 
-def mrshare_widened_queries(n: int) -> list[str]:
-    """The round-5 widened admission shape: the same batch with the
-    HAVING / ORDER BY / LIMIT clauses real dashboard aggregations
-    carry — all demux-safe (reapplied over the merged view)."""
-    tails = [
-        " HAVING count(*) > 1000 ORDER BY 1, 2 LIMIT 4",
-        " ORDER BY 3 DESC LIMIT 3",
-        " HAVING count(*) > 500",
-        " ORDER BY 1 DESC, 2",
-        " LIMIT 5",
-    ]
-    return [q + tails[i % len(tails)] for i, q in enumerate(mrshare_queries(n))]
+# the cross-signature regime: 4 DIFFERENT grouping keys merge via
+# GROUPING SETS (Expand replicates every row 4x before the shuffle, the
+# inflation MRShareCM priced). The global aggregate runs UNMERGED by
+# the mandatory-row rule: grouping sets over empty input would drop
+# its one required row.
+gs_queries = [
+    "SELECT l_returnflag AS k, count(*) AS n, CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS q"
+    " FROM lineitem_big GROUP BY l_returnflag",
+    "SELECT l_linestatus AS k, count(*) AS n, max(l_extendedprice) AS mx"
+    " FROM lineitem_big GROUP BY l_linestatus",
+    "SELECT l_linenumber AS k, count(*) AS n, CAST(avg(l_discount) AS DOUBLE) AS d"
+    " FROM lineitem_big GROUP BY l_linenumber",
+    "SELECT l_returnflag AS k1, l_linestatus AS k2, min(l_shipdate) AS mn"
+    " FROM lineitem_big WHERE l_quantity >= 25 GROUP BY l_returnflag, l_linestatus",
+    "SELECT count(*) AS n, max(l_shipdate) AS mx FROM lineitem_big",
+]
 
 
 def _median(xs: list[float]) -> float:
     s = sorted(xs)
     mid = len(s) // 2
     return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
+
+
+def _timed_batch(
+    spark,
+    queries: list[str],
+    base_id: int,
+    source_views: dict[str, str],
+    cache_floor: int = 1 << 40,
+    enable_mrshare: bool = False,
+    **executor_opts,
+):
+    """Time one ``run_batch`` of ``queries`` through a fresh executor
+    and return (seconds, bags). The default cache floor sits
+    above any table, vetoing admission; whatever the batch cached is
+    released after the clock stops."""
+    ex = BatchExecutor(
+        spark,
+        cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=cache_floor),
+        source_views=source_views,
+        enable_mrshare=enable_mrshare,
+        **executor_opts,
+    )
+    jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(queries)]
+    t0 = time.monotonic()
+    bags = ex.run_batch(jobs)
+    dt = time.monotonic() - t0
+    ex.cache.clear()
+    return dt, bags
+
+
+def _record_trials(timings: dict, prefix: str, trials: dict[str, list[float]]) -> None:
+    """Headline median and ``_min`` secondary for each arm's trials."""
+    for leg, xs in trials.items():
+        timings[f"{prefix}_{leg}"] = round(_median(xs), 3)
+        timings[f"{prefix}_{leg}_min"] = round(min(xs), 3)
 
 
 # physical-plan node names that mark a query as PYTHON-axis for drift
@@ -299,28 +364,8 @@ def main() -> None:
     spark = get_session("bench", cpus=CPUS)
     timings: dict[str, float] = {}
 
-    # warm the JVM/codegen paths once so per-query times are steady-state
     register_tables(spark, SF_DIR)
-    _force(spark.sql("SELECT count(*) AS n FROM region"))
-    # ...and the Python/Arrow daemon pool: whichever corpus query
-    # executes Python first otherwise pays the ~2-3 s 32-worker spawn
-    # (measured: the payer shifted from dedup_winnowing to
-    # dedup_ngram_jaccard in r9 purely from alphabetical pipeline
-    # changes, confounding the cross-round per-query diff). Warm BOTH
-    # Python codepaths — scalar Arrow UDF and mapInPandas initialize
-    # different serializer stacks (measured: a pandas_udf warm left
-    # ~1 s of mapInPandas first-use cost on the table).
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm_py(s):
-        return s
-
-    def _warm_mip(it):
-        yield from it
-
-    _force(spark.range(100_000).repartition(CPUS).select(_warm_py("id")))
-    _force(spark.range(100_000).repartition(CPUS).mapInPandas(_warm_mip, "id long"))
+    _warm_py = warm_session(spark)
 
     # --- machine-drift calibration (round 9, VERDICT r8 ask #6): the
     # r8 driver box ran ~15-20% slower machine-wide and untangling that
@@ -495,7 +540,7 @@ def main() -> None:
     # equally; the recorded number is the MEDIAN (min kept as a
     # secondary *_min entry, all raw trials in BENCH_DETAIL.json). ------
     ensure_big_table(spark)
-    big_src = BIG_DIR
+    big_views = {BIG_DIR: "lineitem_big"}
     n_big = 10  # the thesis's widest window (Fig 5.1) — the batch must
     # be wide enough that one cached build amortizes over many parses
     queries = big_scan_queries(n_big)
@@ -510,35 +555,16 @@ def main() -> None:
 
     def _run_concurrent(base_id: int) -> float:
         # concurrent FAIR pools, cache vetoed (floor above the table size)
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={big_src: "lineitem_big"},
-            enable_mrshare=False,  # isolated from the merge experiment
-        )
-        jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(queries)]
-        t0 = time.monotonic()
-        ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        ex.cache.clear()
-        return dt
+        return _timed_batch(spark, queries, base_id, big_views)[0]
 
     def _run_batched(base_id: int) -> float:
         # full path: admission (size + read fraction + row-text rescan
         # cost) caches the hot scan
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30),
-            source_views={big_src: "lineitem_big"},
-            enable_mrshare=False,  # isolated from the merge experiment
+        dt, bags = _timed_batch(
+            spark, queries, base_id, big_views, cache_floor=64 << 20
         )
-        jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(queries)]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
         if not any(b.rewrite.value == "caching" for b in bags):
             print("WARN: cache not admitted in cached_scan_batched", file=sys.stderr)
-        ex.cache.clear()
         return dt
 
     cs_trials: dict[str, list[float]] = {"separate": [], "concurrent": [], "batched": []}
@@ -546,9 +572,7 @@ def main() -> None:
         cs_trials["separate"].append(_run_separate())
         cs_trials["concurrent"].append(_run_concurrent(1000 + 100 * rep))
         cs_trials["batched"].append(_run_batched(2000 + 100 * rep))
-    for leg, xs in cs_trials.items():
-        timings[f"cached_scan_{leg}"] = round(_median(xs), 3)
-        timings[f"cached_scan_{leg}_min"] = round(min(xs), 3)
+    _record_trials(timings, "cached_scan", cs_trials)
 
     # --- the honest negative: the SAME rows as parquet. A columnar
     # rescan is a cheap vectorized decode, so the format-aware cost
@@ -569,22 +593,12 @@ def main() -> None:
     # (one round-2 artifact showed batched 16% "slower" purely from
     # ordering; an interleaved A/B measured them within 2%)
     def _run_pq(full_admission: bool, base_id: int) -> float:
-        cache = (
-            CacheManager(spark, budget_bytes=8 << 30)
-            if full_admission
-            else CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40)
+        dt, bags = _timed_batch(
+            spark, pq_queries, base_id, {pq_dir: "lineitem_bigp"},
+            cache_floor=(64 << 20) if full_admission else (1 << 40),
         )
-        ex = BatchExecutor(
-            spark, cache=cache, source_views={pq_dir: "lineitem_bigp"},
-            enable_mrshare=False,  # isolated from the merge experiment
-        )
-        jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(pq_queries)]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
         if full_admission and any(b.rewrite.value == "caching" for b in bags):
             print("WARN: parquet cache unexpectedly admitted", file=sys.stderr)
-        ex.cache.clear()
         return dt
 
     nc_times, full_times = [], []
@@ -600,937 +614,42 @@ def main() -> None:
     # evaluation, report.pdf ch.5 Table 5.1), and the declarative merge
     # (server/mrshare.py: ONE scan + ONE aggregate + trivial demux).
     # Interleaved trials, median recorded — same protocol as cached_scan.
+    # Which batches merge, and that merged rows equal standalone runs,
+    # is pinned per SQL spelling by tests/test_mrshare.py (this batch
+    # and gs_queries below included); the bench times the effect once.
     mr_queries = mrshare_queries(10)
     _force(spark.sql(mr_queries[0]))  # warm
 
     def _run_mrshare(leg: str, base_id: int) -> float:
-        cache = CacheManager(
-            spark,
-            budget_bytes=8 << 30,
-            min_bytes=(1 << 40) if leg != "cached" else (64 << 20),
-        )
-        ex = BatchExecutor(
-            spark,
-            cache=cache,
-            source_views={big_src: "lineitem_big"},
+        return _timed_batch(
+            spark, mr_queries, base_id, big_views,
+            cache_floor=(64 << 20) if leg == "cached" else (1 << 40),
             enable_mrshare=(leg == "merged"),
-        )
-        jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(mr_queries)]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if leg == "merged" and not any(b.merges for b in bags):
-            print("WARN: mrshare merge did not fire", file=sys.stderr)
-        if any(j.status.value != "done" for j in jobs):
-            print(f"WARN: mrshare {leg} had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
+        )[0]
 
     mr_trials: dict[str, list[float]] = {"concurrent": [], "cached": [], "merged": []}
     for rep in range(CACHED_SCAN_TRIALS):
         mr_trials["concurrent"].append(_run_mrshare("concurrent", 5000 + 100 * rep))
         mr_trials["cached"].append(_run_mrshare("cached", 6000 + 100 * rep))
         mr_trials["merged"].append(_run_mrshare("merged", 7000 + 100 * rep))
-    for leg, xs in mr_trials.items():
-        timings[f"mrshare_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare widened admission (round 5): the same 10-member batch
-    # with the presentation clauses a real dashboard query carries
-    # (HAVING / ORDER BY / LIMIT — reapplied demux-side, the merged
-    # aggregate unchanged). Must still merge profitably: demux ORDER BY
-    # and LIMIT run over the result-sized view, so the leg should land
-    # within noise of the bare merged leg.
-    wide_queries = mrshare_widened_queries(10)
-
-    def _run_widened(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={big_src: "lineitem_big"},
-            enable_mrshare=merged,
-        )
-        jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(wide_queries)]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged and not any(b.merges for b in bags):
-            print("WARN: widened mrshare merge did not fire", file=sys.stderr)
-        if ex.stats["mrshare_demux_fallbacks"]:
-            print("WARN: widened demux fell back", file=sys.stderr)
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: widened leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    wide_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        wide_trials["concurrent"].append(_run_widened(False, 11000 + 100 * rep))
-        wide_trials["merged"].append(_run_widened(True, 12000 + 100 * rep))
-    for leg, xs in wide_trials.items():
-        timings[f"mrshare_widened_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_widened_{leg}_min"] = round(min(xs), 3)
+    _record_trials(timings, "mrshare", mr_trials)
 
     # --- MRShare cross-signature regime: 4 DIFFERENT grouping keys
     # merge via GROUPING SETS — Expand replicates every row 4x before
-    # the shuffle, the exact inflation MRShareCM priced. (The batch
-    # also carries a global aggregate, which since round 5 runs
-    # UNMERGED by the mandatory-row rule — grouping sets over empty
-    # input would drop its one required row.)
-    # On a parse-dominated CSV scan the one saved scan should still
-    # win; this leg PRICES that trade instead of assuming it.
-    gs_queries = [
-        "SELECT l_returnflag AS k, count(*) AS n, CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS q"
-        " FROM lineitem_big GROUP BY l_returnflag",
-        "SELECT l_linestatus AS k, count(*) AS n, max(l_extendedprice) AS mx"
-        " FROM lineitem_big GROUP BY l_linestatus",
-        "SELECT l_linenumber AS k, count(*) AS n, CAST(avg(l_discount) AS DOUBLE) AS d"
-        " FROM lineitem_big GROUP BY l_linenumber",
-        "SELECT l_returnflag AS k1, l_linestatus AS k2, min(l_shipdate) AS mn"
-        " FROM lineitem_big WHERE l_quantity >= 25 GROUP BY l_returnflag, l_linestatus",
-        "SELECT count(*) AS n, max(l_shipdate) AS mx FROM lineitem_big",
-    ]
-
+    # the shuffle, the exact inflation MRShareCM priced. On a
+    # parse-dominated CSV scan the one saved scan should still win;
+    # this leg PRICES that trade instead of assuming it.
     def _run_gsets(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={big_src: "lineitem_big"},
-            enable_mrshare=merged,
-            mrshare_max_grouping_sets=8,
-        )
-        jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(gs_queries)]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged and not any(b.merges for b in bags):
-            print("WARN: grouping-sets merge did not fire", file=sys.stderr)
-        ex.cache.clear()
-        return dt
+        return _timed_batch(
+            spark, gs_queries, base_id, big_views,
+            enable_mrshare=merged, mrshare_max_grouping_sets=8,
+        )[0]
 
     gs_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
     for rep in range(CACHED_SCAN_TRIALS):
         gs_trials["concurrent"].append(_run_gsets(False, 8000 + 100 * rep))
         gs_trials["merged"].append(_run_gsets(True, 9000 + 100 * rep))
-    for leg, xs in gs_trials.items():
-        timings[f"mrshare_gsets_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_gsets_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare join-shaped members (round 6): a dashboard batch of
-    # star-join aggregations over the SAME fact⋈dim chain merges into
-    # one join + one aggregate (the reference grouped arbitrary
-    # same-input jobs, MRShareOptimizer.scala:32-146). The shared work
-    # is the parse-dominated CSV fact scan + the broadcast dim join;
-    # per-member predicates fold into CASE aggregates as in the
-    # single-table regime. The dim is supplier (replication keeps
-    # l_suppkey intact; l_orderkey is rewritten by the ×8 fan-out).
-    # Admission runs with the PRODUCTION 64 MiB floor — the CSV fact
-    # clears it honestly.
-    join_preds = [
-        "l_discount > 0.01",
-        "l_quantity >= 25",
-        "l_tax < 0.05",
-        "l_extendedprice > 1000",
-        "l_linenumber = 1",
-        "l_discount < 0.07",
-    ]
-    join_aggs = [
-        "count(*) AS n",
-        "CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS q",
-        "max(l_shipdate) AS mx",
-        "CAST(avg(l_discount) AS DOUBLE) AS d",
-        "min(l_shipdate) AS mn",
-        "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS p",
-    ]
-    join_queries = [
-        f"SELECT s_nationkey, {join_aggs[i]}"
-        " FROM lineitem_big JOIN supplier ON l_suppkey = s_suppkey"
-        f" WHERE {join_preds[i]} GROUP BY s_nationkey"
-        for i in range(6)
-    ]
-    _force(spark.sql(join_queries[0]))  # warm
-
-    def _run_join_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(join_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged and not any(b.merges for b in bags):
-            print("WARN: join-member merge did not fire", file=sys.stderr)
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: join leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    join_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        join_trials["concurrent"].append(_run_join_leg(False, 13000 + 100 * rep))
-        join_trials["merged"].append(_run_join_leg(True, 14000 + 100 * rep))
-    for leg, xs in join_trials.items():
-        timings[f"mrshare_join_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_join_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare LEFT-join members (round 7, VERDICT r6 ask #5): the
-    # same star batch with the join type dashboard generators actually
-    # emit. Identical chain across members -> identical (null-extended)
-    # shared relation -> same CASE-fold; this leg proves the merge win
-    # survives the LEFT regime.
-    left_queries = [q.replace(" JOIN supplier", " LEFT JOIN supplier")
-                    for q in join_queries]
-
-    def _run_left_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(left_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged and not any(b.merges for b in bags):
-            print("WARN: left-join merge did not fire", file=sys.stderr)
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: left-join leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    left_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        left_trials["concurrent"].append(_run_left_leg(False, 17000 + 100 * rep))
-        left_trials["merged"].append(_run_left_leg(True, 18000 + 100 * rep))
-    for leg, xs in left_trials.items():
-        timings[f"mrshare_leftjoin_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_leftjoin_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare RIGHT-join normalization (round 8, VERDICT r7 ask
-    # #3): HALF the batch spelled ``supplier RIGHT JOIN lineitem_big``,
-    # half the mirrored LEFT — the parser normalizes the RIGHT members
-    # so all six land in ONE merged plan; this leg proves the merge win
-    # reaches RIGHT-spelled generator SQL.
-    right_queries = [
-        q if i % 2 == 0 else q.replace(
-            "FROM lineitem_big LEFT JOIN supplier ON",
-            "FROM supplier RIGHT JOIN lineitem_big ON",
-        )
-        for i, q in enumerate(left_queries)
-    ]
-
-    def _run_right_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(right_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(
-                len(mp.jobs) for b in bags for mp in b.merges
-            )
-            if merged_jobs != len(right_queries):
-                print(
-                    "WARN: RIGHT-normalized merge did not cover the batch"
-                    f" ({merged_jobs}/{len(right_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: right-join leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    right_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        right_trials["concurrent"].append(_run_right_leg(False, 19000 + 100 * rep))
-        right_trials["merged"].append(_run_right_leg(True, 19500 + 100 * rep))
-    for leg, xs in right_trials.items():
-        timings[f"mrshare_rightjoin_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_rightjoin_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare FULL-join admission (round 8b): a FULL OUTER chain
-    # preserves both sides, so Catalyst can never broadcast it — each
-    # unmerged member pays a full sort-merge join of the big scan,
-    # which makes this the regime where sharing ONE evaluation pays
-    # most. All six members write the identical chain and must land in
-    # one merged plan.
-    full_queries = [
-        q.replace(
-            "FROM lineitem_big JOIN supplier ON",
-            "FROM lineitem_big FULL JOIN supplier ON",
-        )
-        for q in join_queries
-    ]
-
-    def _run_full_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(full_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(full_queries):
-                print(
-                    "WARN: FULL-join merge did not cover the batch"
-                    f" ({merged_jobs}/{len(full_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: full-join leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    full_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        full_trials["concurrent"].append(_run_full_leg(False, 21000 + 100 * rep))
-        full_trials["merged"].append(_run_full_leg(True, 21500 + 100 * rep))
-    for leg, xs in full_trials.items():
-        timings[f"mrshare_fulljoin_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_fulljoin_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare permuted-order inner joins (round 9, VERDICT r8 ask
-    # #1): six members spelling the SAME 3-table star in four different
-    # join orders (the ORM/BI batch shape). The order-insensitive
-    # segment signature must land all six in ONE merged plan; the
-    # identical-text bar merged none of them (each spelling alone was
-    # under the 2-member floor), so this leg measures the exact
-    # real-world batch the widening targets.
-    perm_chains = [
-        "lineitem_big JOIN supplier ON l_suppkey = s_suppkey"
-        " JOIN nation ON s_nationkey = n_nationkey",
-        "supplier JOIN nation ON s_nationkey = n_nationkey"
-        " JOIN lineitem_big ON l_suppkey = s_suppkey",
-        "supplier JOIN lineitem_big ON l_suppkey = s_suppkey"
-        " JOIN nation ON s_nationkey = n_nationkey",
-        "nation JOIN supplier ON s_nationkey = n_nationkey"
-        " JOIN lineitem_big ON l_suppkey = s_suppkey",
-    ]
-    perm_queries = [
-        f"SELECT n_name, {join_aggs[i]}"
-        f" FROM {perm_chains[i % len(perm_chains)]}"
-        f" WHERE {join_preds[i]} GROUP BY n_name"
-        for i in range(6)
-    ]
-
-    def _run_perm_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-                os.path.join(SF_DIR, "nation.parquet"): "nation",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(perm_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(perm_queries):
-                print(
-                    "WARN: permuted-join merge did not cover the batch"
-                    f" ({merged_jobs}/{len(perm_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: permuted-join leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    perm_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        perm_trials["concurrent"].append(_run_perm_leg(False, 23000 + 100 * rep))
-        perm_trials["merged"].append(_run_perm_leg(True, 23500 + 100 * rep))
-    for leg, xs in perm_trials.items():
-        timings[f"mrshare_permjoin_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_permjoin_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare derived-table members (round 9, VERDICT r8 ask #2):
-    # six members all wrapping the SAME generated subselect (the
-    # dashboard shape — inner text identical modulo case/whitespace,
-    # alias varying) with per-member outer predicates/aggregates. The
-    # merge evaluates the derived relation ONCE; unmerged, each member
-    # re-runs the subquery's scan.
-    derived_inner = (
-        "SELECT l_returnflag AS rf, l_linestatus AS ls, l_quantity AS qty,"
-        " l_discount AS disc, l_tax AS tax, l_extendedprice AS price,"
-        " l_shipdate AS ship, l_linenumber AS ln FROM lineitem_big"
-        " WHERE l_quantity > 0"
-    )
-    derived_variants = [
-        f"({derived_inner}) t{i}" if i % 2 == 0
-        else f"({derived_inner.lower()})  AS u{i}"
-        for i in range(6)
-    ]
-    derived_aggs = [
-        "count(*) AS n",
-        "CAST(sum(CAST(qty AS DECIMAL(18,6))) AS DOUBLE) AS q",
-        "max(ship) AS mx",
-        "CAST(avg(disc) AS DOUBLE) AS d",
-        "min(ship) AS mn",
-        "CAST(sum(CAST(price AS DECIMAL(18,6))) AS DOUBLE) AS p",
-    ]
-    derived_preds = [
-        "disc > 0.01", "qty >= 25", "tax < 0.05",
-        "price > 1000", "ln = 1", "disc < 0.07",
-    ]
-    derived_queries = [
-        f"SELECT rf, {derived_aggs[i]} FROM {derived_variants[i]}"
-        f" WHERE {derived_preds[i]} GROUP BY rf"
-        for i in range(6)
-    ]
-
-    def _run_derived_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={big_src: "lineitem_big"},
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(derived_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(derived_queries):
-                print(
-                    "WARN: derived-table merge did not cover the batch"
-                    f" ({merged_jobs}/{len(derived_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: derived-table leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    drv_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        drv_trials["concurrent"].append(_run_derived_leg(False, 25000 + 100 * rep))
-        drv_trials["merged"].append(_run_derived_leg(True, 25500 + 100 * rep))
-    for leg, xs in drv_trials.items():
-        timings[f"mrshare_derived_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_derived_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare derived tables with INNER JOIN chains (round 10,
-    # VERDICT r9 ask #2): six members wrapping the SAME generated
-    # join-subselect with the inner chain spelled in different orders
-    # and condition spellings. The structure-aware inner signature must
-    # land all six in ONE merged plan whose derived relation — the
-    # expensive scan+join — is evaluated once.
-    dj_inners = [
-        "SELECT s_nationkey AS nk, l_quantity AS qty, l_discount AS disc,"
-        " l_tax AS tax, l_extendedprice AS price, l_shipdate AS ship,"
-        " l_linenumber AS ln FROM lineitem_big JOIN supplier"
-        " ON l_suppkey = s_suppkey",
-        "select s_nationkey AS nk, l_quantity AS qty, l_discount AS disc,"
-        " l_tax AS tax, l_extendedprice AS price, l_shipdate AS ship,"
-        " l_linenumber AS ln from supplier join lineitem_big"
-        " on s_suppkey = l_suppkey",
-    ]
-    derivedjoin_queries = [
-        f"SELECT nk, {derived_aggs[i]} FROM ({dj_inners[i % 2]}) t{i}"
-        f" WHERE {derived_preds[i]} GROUP BY nk"
-        for i in range(6)
-    ]
-
-    def _run_derivedjoin_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(derivedjoin_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(derivedjoin_queries):
-                print(
-                    "WARN: derived-join merge did not cover the batch"
-                    f" ({merged_jobs}/{len(derivedjoin_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: derived-join leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    dj_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        dj_trials["concurrent"].append(_run_derivedjoin_leg(False, 27000 + 100 * rep))
-        dj_trials["merged"].append(_run_derivedjoin_leg(True, 27500 + 100 * rep))
-    for leg, xs in dj_trials.items():
-        timings[f"mrshare_derivedjoin_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_derivedjoin_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare ON-condition spelling variants (round 10, VERDICT r9
-    # ask #1): six members joining the same two tables with the SAME
-    # logical condition spelled four ways — conjunct order permuted,
-    # symmetric operands swapped, inequality mirrored (0 < x vs
-    # x > 0). The conjunct-canonical signature must land all six in
-    # ONE merged plan; the round-9 spelling-exact bar merged only the
-    # members that happened to spell it identically.
-    cond_spellings = [
-        "ON l_suppkey = s_suppkey AND l_quantity > 0",
-        "ON l_quantity > 0 AND s_suppkey = l_suppkey",
-        "ON 0 < l_quantity AND l_suppkey = s_suppkey",
-        "ON s_suppkey = l_suppkey AND 0 < l_quantity",
-    ]
-    condspell_queries = [
-        f"SELECT s_nationkey, {join_aggs[i]}"
-        f" FROM lineitem_big JOIN supplier {cond_spellings[i % 4]}"
-        f" WHERE {join_preds[i]} GROUP BY s_nationkey"
-        for i in range(6)
-    ]
-
-    def _run_condspell_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(condspell_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(condspell_queries):
-                print(
-                    "WARN: condition-spelling merge did not cover the batch"
-                    f" ({merged_jobs}/{len(condspell_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: condition-spelling leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    # NB: this dict was accidentally named cs_trials in round 10,
-    # shadowing the cached_scan dict declared above and clobbering the
-    # serialized BENCH_DETAIL::cached_scan_trials (VERDICT r10 wrong
-    # #1); distinct name + the serialization-time consistency assert
-    # below make the class of bug impossible to reintroduce silently
-    condspell_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        condspell_trials["concurrent"].append(
-            _run_condspell_leg(False, 26000 + 100 * rep)
-        )
-        condspell_trials["merged"].append(
-            _run_condspell_leg(True, 26500 + 100 * rep)
-        )
-    for leg, xs in condspell_trials.items():
-        timings[f"mrshare_condspell_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_condspell_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare OR-disjunct spelling variants (round 11, VERDICT r10
-    # ask #4): six members joining the same two tables with the SAME
-    # logical condition whose OR-group is spelled four ways — disjunct
-    # order permuted, operands swapped, inequality mirrored, bare vs
-    # parenthesized chain. The sorted-disjunct-set signature must land
-    # all six in ONE merged plan; the round-10 bar merged only
-    # byte-canon-equal OR spellings.
-    or_spellings = [
-        "ON l_suppkey = s_suppkey AND (l_discount > 0.05 OR l_tax < 0.03)",
-        "ON (0.03 > l_tax OR l_discount > 0.05) AND s_suppkey = l_suppkey",
-        "ON (l_tax < 0.03 OR 0.05 < l_discount) AND l_suppkey = s_suppkey",
-        "ON l_suppkey = s_suppkey AND (l_discount > 0.05 OR 0.03 > l_tax)",
-    ]
-    orspell_queries = [
-        f"SELECT s_nationkey, {join_aggs[i]}"
-        f" FROM lineitem_big JOIN supplier {or_spellings[i % 4]}"
-        f" WHERE {join_preds[i]} GROUP BY s_nationkey"
-        for i in range(6)
-    ]
-
-    def _run_orspell_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(orspell_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(orspell_queries):
-                print(
-                    "WARN: OR-disjunct merge did not cover the batch"
-                    f" ({merged_jobs}/{len(orspell_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: OR-disjunct leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    orspell_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        orspell_trials["concurrent"].append(
-            _run_orspell_leg(False, 28000 + 100 * rep)
-        )
-        orspell_trials["merged"].append(_run_orspell_leg(True, 28500 + 100 * rep))
-    for leg, xs in orspell_trials.items():
-        timings[f"mrshare_orspell_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_orspell_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare IN/BETWEEN leaf spellings (round 12): six members
-    # joining the same two tables with the SAME logical condition
-    # spelled via IN-lists, their OR-chain expansions, BETWEEN, and its
-    # range-pair expansion (items permuted/duplicated, bounds mirrored).
-    # The leaf-normalized signature must land all six in ONE merged
-    # plan; the round-11 bar left IN/BETWEEN conjuncts opaque, so only
-    # byte-canon-equal spellings merged.
-    inspell_conds = [
-        "ON l_suppkey = s_suppkey AND l_linenumber IN (1, 2, 3)"
-        " AND l_quantity BETWEEN 5 AND 40",
-        "ON (l_linenumber = 3 OR l_linenumber IN (2, 1))"
-        " AND s_suppkey = l_suppkey AND l_quantity >= 5 AND l_quantity <= 40",
-        "ON l_quantity BETWEEN 5 AND 40"
-        " AND (l_linenumber = 1 OR 2 = l_linenumber OR l_linenumber = 3)"
-        " AND l_suppkey = s_suppkey",
-        "ON 40 >= l_quantity AND l_suppkey = s_suppkey"
-        " AND l_linenumber IN (3, 1, 2, 2) AND 5 <= l_quantity",
-    ]
-    inspell_queries = [
-        f"SELECT s_nationkey, {join_aggs[i]}"
-        f" FROM lineitem_big JOIN supplier {inspell_conds[i % 4]}"
-        f" WHERE {join_preds[i]} GROUP BY s_nationkey"
-        for i in range(6)
-    ]
-
-    def _run_inspell_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(inspell_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(inspell_queries):
-                print(
-                    "WARN: IN/BETWEEN-spelling merge did not cover the batch"
-                    f" ({merged_jobs}/{len(inspell_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: IN/BETWEEN-spelling leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    inspell_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        inspell_trials["concurrent"].append(
-            _run_inspell_leg(False, 33000 + 100 * rep)
-        )
-        inspell_trials["merged"].append(_run_inspell_leg(True, 33500 + 100 * rep))
-    for leg, xs in inspell_trials.items():
-        timings[f"mrshare_inspell_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_inspell_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare two-level derived members (round 11, VERDICT r10 ask
-    # #5): six members over the SAME double-wrapped subselect — the
-    # inner FROM is itself a derived table whose innermost join chain
-    # is spelled in different orders. The two-level structural
-    # signature must land all six in ONE merged plan whose innermost
-    # scan+join is evaluated once.
-    d2_queries = [
-        f"SELECT nk, {derived_aggs[i]}"
-        f" FROM (SELECT nk, qty, disc, tax, price, ship, ln"
-        f" FROM ({dj_inners[i % 2]}) u WHERE qty > 0) t{i}"
-        f" WHERE {derived_preds[i]} GROUP BY nk"
-        for i in range(6)
-    ]
-
-    def _run_derived2_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(d2_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(d2_queries):
-                print(
-                    "WARN: two-level derived merge did not cover the batch"
-                    f" ({merged_jobs}/{len(d2_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: two-level derived leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    d2_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        d2_trials["concurrent"].append(_run_derived2_leg(False, 29000 + 100 * rep))
-        d2_trials["merged"].append(_run_derived2_leg(True, 29500 + 100 * rep))
-    for leg, xs in d2_trials.items():
-        timings[f"mrshare_derived2_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_derived2_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare three-level derived members (round 12, VERDICT r11
-    # ask #4: the nest cap lifted to recurse-until-non-signaturable) —
-    # the d2 shape wrapped once more; all six must land in ONE merged
-    # plan whose innermost scan+join runs once.
-    d3_queries = [
-        f"SELECT nk, {derived_aggs[i]}"
-        f" FROM (SELECT nk, qty, disc, tax, price, ship, ln"
-        f" FROM (SELECT nk, qty, disc, tax, price, ship, ln"
-        f" FROM ({dj_inners[i % 2]}) u WHERE qty > 0) v) t{i}"
-        f" WHERE {derived_preds[i]} GROUP BY nk"
-        for i in range(6)
-    ]
-
-    def _run_derived3_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(d3_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(d3_queries):
-                print(
-                    "WARN: three-level derived merge did not cover the batch"
-                    f" ({merged_jobs}/{len(d3_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: three-level derived leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    d3_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        d3_trials["concurrent"].append(_run_derived3_leg(False, 31000 + 100 * rep))
-        d3_trials["merged"].append(_run_derived3_leg(True, 31500 + 100 * rep))
-    for leg, xs in d3_trials.items():
-        timings[f"mrshare_derived3_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_derived3_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare comma-FROM members (round 12, VERDICT r11 ask #6):
-    # half the members spell the join TPC-H-style (comma FROM, equi-
-    # conjunct in WHERE), half explicitly; the rewrite must land all
-    # six in ONE merged plan over one scan of the big table.
-    comma_spellings = [
-        "FROM lineitem_big, supplier WHERE l_suppkey = s_suppkey AND",
-        "FROM lineitem_big JOIN supplier ON l_suppkey = s_suppkey WHERE",
-        "FROM supplier, lineitem_big WHERE s_suppkey = l_suppkey AND",
-    ]
-    comma_queries = [
-        f"SELECT s_nationkey, {join_aggs[i]}"
-        f" {comma_spellings[i % 3]} {join_preds[i]} GROUP BY s_nationkey"
-        for i in range(6)
-    ]
-
-    def _run_commajoin_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={
-                big_src: "lineitem_big",
-                os.path.join(SF_DIR, "supplier.parquet"): "supplier",
-            },
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(comma_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(comma_queries):
-                print(
-                    "WARN: comma-FROM merge did not cover the batch"
-                    f" ({merged_jobs}/{len(comma_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: comma-FROM leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    comma_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        comma_trials["concurrent"].append(
-            _run_commajoin_leg(False, 32000 + 100 * rep)
-        )
-        comma_trials["merged"].append(_run_commajoin_leg(True, 32500 + 100 * rep))
-    for leg, xs in comma_trials.items():
-        timings[f"mrshare_commajoin_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_commajoin_{leg}_min"] = round(min(xs), 3)
-
-    # --- MRShare CTE leg (round 12): single-CTE members inline to the
-    # derived-table form at parse time, so WITH spellings and derived
-    # respellings of one aggregation share a signature and the CTE
-    # body — the dashboard-favorite spelling — evaluates ONCE per
-    # batch instead of once per member. ---
-    cte_inner = (
-        "SELECT l_suppkey, l_quantity, l_extendedprice, l_discount,"
-        " l_shipdate FROM lineitem_big WHERE l_discount > 0.01"
-    )
-    cte_preds = [
-        "l_quantity >= 5",
-        "5 <= l_quantity",
-        "l_quantity >= 5",
-        "l_quantity >= 5",
-        "5 <= l_quantity",
-        "l_quantity >= 5",
-    ]
-    cte_queries = [
-        (
-            f"WITH x AS ({cte_inner}) SELECT l_suppkey, {join_aggs[i]}"
-            f" FROM x WHERE {cte_preds[i]} GROUP BY l_suppkey"
-            if i % 2 == 0
-            else f"SELECT l_suppkey, {join_aggs[i]} FROM ({cte_inner}) x"
-            f" WHERE {cte_preds[i]} GROUP BY l_suppkey"
-        )
-        for i in range(6)
-    ]
-
-    def _run_cte_leg(merged: bool, base_id: int) -> float:
-        ex = BatchExecutor(
-            spark,
-            cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=1 << 40),
-            source_views={big_src: "lineitem_big"},
-            enable_mrshare=merged,
-        )
-        jobs = [
-            QueryJob(job_id=base_id + i, sql=q)
-            for i, q in enumerate(cte_queries)
-        ]
-        t0 = time.monotonic()
-        bags = ex.run_batch(jobs)
-        dt = time.monotonic() - t0
-        if merged:
-            merged_jobs = sum(len(mp.jobs) for b in bags for mp in b.merges)
-            if merged_jobs != len(cte_queries):
-                print(
-                    "WARN: CTE merge did not cover the batch"
-                    f" ({merged_jobs}/{len(cte_queries)})",
-                    file=sys.stderr,
-                )
-        if any(j.status.value != "done" for j in jobs):
-            print("WARN: CTE leg had failed jobs", file=sys.stderr)
-        ex.cache.clear()
-        return dt
-
-    cte_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        cte_trials["concurrent"].append(_run_cte_leg(False, 34000 + 100 * rep))
-        cte_trials["merged"].append(_run_cte_leg(True, 34500 + 100 * rep))
-    for leg, xs in cte_trials.items():
-        timings[f"mrshare_cte_{leg}"] = round(_median(xs), 3)
-        timings[f"mrshare_cte_{leg}_min"] = round(min(xs), 3)
-
+    _record_trials(timings, "mrshare_gsets", gs_trials)
     # --- gateway result cache: repeat deterministic query text served
     # from memory (server/results.py). Measured through the REAL TCP
     # server: cold = first submission (batch window + execution),
@@ -1686,52 +805,6 @@ def main() -> None:
         },
         "mrshare_gsets_trials": {
             leg: [round(x, 3) for x in xs] for leg, xs in gs_trials.items()
-        },
-        "mrshare_widened_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in wide_trials.items()
-        },
-        "mrshare_join_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in join_trials.items()
-        },
-        "mrshare_leftjoin_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in left_trials.items()
-        },
-        "mrshare_rightjoin_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in right_trials.items()
-        },
-        "mrshare_fulljoin_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in full_trials.items()
-        },
-        "mrshare_permjoin_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in perm_trials.items()
-        },
-        "mrshare_derived_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in drv_trials.items()
-        },
-        "mrshare_derivedjoin_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in dj_trials.items()
-        },
-        "mrshare_condspell_trials": {
-            leg: [round(x, 3) for x in xs]
-            for leg, xs in condspell_trials.items()
-        },
-        "mrshare_orspell_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in orspell_trials.items()
-        },
-        "mrshare_inspell_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in inspell_trials.items()
-        },
-        "mrshare_derived2_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in d2_trials.items()
-        },
-        "mrshare_derived3_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in d3_trials.items()
-        },
-        "mrshare_commajoin_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in comma_trials.items()
-        },
-        "mrshare_cte_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in cte_trials.items()
         },
         # fixed machine-speed probes (scan/cpu/shuffle), compiled-once
         # then timed — divide per-query times by the probe-median ratio

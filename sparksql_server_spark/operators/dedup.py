@@ -509,7 +509,7 @@ def _shingle_kept_materialized(spark: SparkSession, view: str) -> DataFrame:
     a whole DISTINCT shuffle removed (per-doc dedup is a Python set).
 
     Round-9 floor measurement (VERDICT r8 ask #5; sf0.1, fresh session
-    with warmed Arrow workers, tools/firstexec_ab.py, 3 trials/arm):
+    with warmed Arrow workers, tools/opt_ab.py on one query, 3 trials/arm):
     dedup_shingle_containment first-exec 7.17/5.62/8.80 s (this build)
     vs 7.85/7.01/7.72 s (HOF build) — a noise-dominated WASH (means
     7.19 vs 7.53); steady 2.33 vs 2.36 — also a wash, the Arrow batch
@@ -582,7 +582,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     store and reused for incremental screening.)
 
     Round-10 first-exec floor measurement (VERDICT r9 ask #5; sf0.1,
-    warmed fresh sessions, tools/firstexec_ab.py regime): first
+    warmed fresh sessions, single-query tools/opt_ab.py regime): first
     6.71/6.56/7.47 s vs steady-min 2.65/2.57/2.53. Stage-isolated, the
     gap splits ~2.6 s in the shingle build+spill (4.69 first / 2.09
     steady alone) and ~1.2 s in the pair-join + count-join rest (4.64
@@ -1129,7 +1129,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure computing the same min-reachable label.
 
     Round-9 floor measurement (VERDICT r8 ask #5; sf0.1, fresh
-    session, tools/firstexec_ab.py): first-exec 8.06 s vs steady
+    session, tools/opt_ab.py on one query): first-exec 8.06 s vs steady
     2.98 s. The delta is compile, split across the shared MinHash band
     pipeline (_mh_candidate_ctes — the same expression the whole LSH
     family compiles, already barrier-optimized with pin() in r8) and

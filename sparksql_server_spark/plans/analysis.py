@@ -15,6 +15,8 @@ concerns don't belong inside the per-query optimizer.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -64,88 +66,60 @@ def _top_level_fields(struct_body: str) -> int:
     return n
 
 
-def scan_nodes(df: DataFrame) -> list[tuple[str, int | None, str | None]]:
+# one file-scan block of a formatted (or extended) plan description:
+#   (1) Scan parquet ...
+#   Location: InMemoryFileIndex [file:/x/y, ... 2 entries]
+#   ReadSchema: struct<a:int,b:array<int>,c:int>
+# The schema capture runs to END OF LINE (ReadSchema prints last on its
+# line in both plan styles), so a nested type's '>' never cuts the
+# field count short. The explain renderer may still truncate very wide
+# schemas ("... N more fields") — then the count is a lower bound and
+# read fractions err toward declining, never over-admitting. Both gaps
+# are tempered — no second 'Scan ' may appear between the format and
+# its Location, or between Location and ReadSchema — so a scan node
+# that prints no Location (Scan ExistingRDD) fails to match instead of
+# pairing with the NEXT file scan's Location (ADVICE r5 #1).
+_SCAN_BLOCK = re.compile(
+    r"Scan\s+(\w+)\s(?:(?!\bScan\s).)*?Location:[^\[\n]*\[([^\]]*)\]"
+    r"(?:(?!\bScan\s).)*?ReadSchema:\s*struct<([^\n]*)",
+    re.S,
+)
+
+
+def parse_scans(plan_text: str) -> list[tuple[str, int, str]]:
+    """(source root, pruned-ReadSchema width, file format) per file
+    scan in a plan description, paths normalized to the
+    ``scan_fingerprints`` form.
+
+    A multi-path Location prints comma-separated and every printed path
+    is a source. Honest cap: Spark 4.1 elides a multi-root index to its
+    FIRST root plus "... N entries" regardless of
+    maxMetadataStringLength, so extra roots of a read.parquet(p1, p2)
+    scan are unrecoverable here — the width/format maps are a
+    cost-model heuristic keyed by what the plan shows, while DETECTION
+    correctness rests on ``scan_fingerprints`` (df.inputFiles), which
+    sees every root."""
+    out: list[tuple[str, int, str]] = []
+    for m in _SCAN_BLOCK.finditer(plan_text):
+        fmt, location, schema = m.group(1).lower(), m.group(2), m.group(3)
+        width = _top_level_fields(schema.rstrip().rsplit(">", 1)[0])
+        for p in location.split(","):
+            p = p.strip()
+            if not p or p.startswith("..."):
+                continue
+            if p.startswith("file:"):
+                p = "/" + p.removeprefix("file:").lstrip("/")
+            out.append((p, width, fmt))
+    return out
+
+
+def scan_nodes(df: DataFrame) -> list[tuple[str, int, str]]:
     """All file-scan nodes of ``df``'s formatted physical plan, as
     (source root, pruned-ReadSchema width, file format) tuples.
     Planning only, no execution."""
-    import re
-
-    jqe = df._jdf.queryExecution()
     jvm = df.sparkSession._jvm
-    text = jqe.explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return parse_scans(
+        df._jdf.queryExecution().explainString(
+            jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        )
     )
-    out: list[tuple[str, int | None, str | None]] = []
-    fmt: str | None = None
-    location: list[str] | None = None
-    for raw in text.splitlines():
-        line = raw.strip()
-        header = re.match(r"\(\d+\) Scan (\w+)", line)
-        if header:
-            fmt = header.group(1).lower()
-        elif line.startswith("Location:"):
-            # "Location: InMemoryFileIndex [file:/p1, file:/p2, ...]"
-            # — multi-path locations print comma-separated and every
-            # printed path is a source (server/observer.py::scan_events
-            # splits identically). Honest cap: Spark 4.1's formatted
-            # explain elides a multi-root index to its FIRST root plus
-            # "... N entries" regardless of maxMetadataStringLength
-            # (verified), so extra roots of a read.parquet(p1, p2) scan
-            # are unrecoverable here — the width/format maps are a
-            # cost-model heuristic keyed by what the plan shows, while
-            # DETECTION correctness always rests on scan_fingerprints
-            # (df.inputFiles), which sees every root
-            inner = line.split("[", 1)[-1].rstrip("]")
-            paths = []
-            for p in inner.split(","):
-                p = p.strip()
-                # Spark elides long path lists as "... N entries"
-                if not p or p.startswith("..."):
-                    continue
-                if p.startswith("file:"):
-                    p = "/" + p.removeprefix("file:").lstrip("/")
-                paths.append(p)
-            location = paths or None
-        elif line.startswith("ReadSchema:") and location is not None:
-            body = line.split("struct<", 1)[-1].rsplit(">", 1)[0]
-            width = _top_level_fields(body)
-            for p in location:
-                out.append((p, width, fmt))
-            location = None
-            fmt = None
-    return out
-
-
-def scan_read_columns(df: DataFrame) -> dict[str, int]:
-    """Per scanned source root: how many top-level columns the query
-    actually READS (the scan's pruned ReadSchema — what column pruning
-    left, not the table width).
-
-    Feeds the cache-admission cost model: a full-table cache build
-    decodes every column, but a narrow query only saves its own
-    ReadSchema's worth of scan work — at 100 TB the difference decides
-    whether caching pays (SURVEY.md §4.3 item 4, the honest B7).
-    Self-joins (same source scanned twice) keep the widest scan.
-    (Derivable from one ``scan_nodes`` call — the executor does that to
-    avoid rendering the formatted plan twice per job.)
-    """
-    out: dict[str, int] = {}
-    for location, ncols, _ in scan_nodes(df):
-        if ncols is not None:
-            out[location] = max(out.get(location, 0), ncols)
-    return out
-
-
-def scan_source_formats(df: DataFrame) -> dict[str, str]:
-    """Per scanned source root: the file format feeding it ("parquet",
-    "csv", "json", "orc", "text", …).
-
-    Cache admission is format-aware: rescanning columnar parquet/orc is
-    cheap (vectorized decode over page-cached bytes — measured: a warm
-    InMemoryRelation wave ran only ~1.2× faster than the uncached
-    concurrent wave), while rescanning row-text csv/json repays a full
-    parse every time, which is exactly what one cached build
-    eliminates. The reference's own evaluation corpus was text files
-    (report.pdf ch.5, Gutenberg), where caching shines.
-    """
-    return {loc: fmt for loc, _, fmt in scan_nodes(df) if fmt is not None}

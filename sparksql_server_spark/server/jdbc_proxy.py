@@ -1176,19 +1176,24 @@ class JdbcLineProxy:
                         daemon=True,
                     )
                     t.start()
-                    outer._pump_client(self.request, up, conn)
+                    try:
+                        outer._pump_client(self.request, up, conn)
+                    finally:
+                        # only the client pump answers through the
+                        # session, so it is released as soon as the
+                        # client is done, not after the upstream drain
+                        if conn.session_id is not None and outer.release is not None:
+                            try:
+                                outer.release(conn.session_id)
+                            except Exception:  # release is best-effort —
+                                # an idle-reap already cleans up eventually
+                                pass
                     t.join(timeout=5)
                 finally:
                     for s in (up, self.request):
                         try:
                             s.close()
                         except OSError:
-                            pass
-                    if conn.session_id is not None and outer.release is not None:
-                        try:
-                            outer.release(conn.session_id)
-                        except Exception:  # release is best-effort —
-                            # an idle-reap already cleans up eventually
                             pass
 
         class Server(socketserver.ThreadingTCPServer):

@@ -44,7 +44,6 @@ evicted by the same LRU that serves the gateway.
 
 from __future__ import annotations
 
-import re
 import threading
 import time
 from collections import deque
@@ -52,49 +51,17 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+# _top_level_fields re-exported: the observer's tests pin the width
+# counting through this module
+from sparksql_server_spark.plans.analysis import _top_level_fields, parse_scans  # noqa: F401
 from sparksql_server_spark.server.cache import CacheManager
-
-# one FileScan block in a formatted/extended plan description:
-#   Scan parquet ... Location: InMemoryFileIndex(1 paths)[file:/x/y]
-#   ... ReadSchema: struct<a:int,b:array<int>,c:int>
-# The schema capture runs to END OF LINE (ReadSchema prints last on its
-# line in both plan styles): stopping at the first '>' truncated any
-# schema with a nested type at its first struct/array/map close,
-# undercounting every later column. The explain renderer may still
-# truncate very wide schemas ("... N more fields") — then the count is
-# a lower bound and read_fraction errs toward declining, never over-
-# admitting. Both gaps are tempered — no second 'Scan ' may appear
-# between the format capture and its Location, or between Location and
-# ReadSchema — so a scan node that prints no Location (Scan
-# ExistingRDD) fails to match instead of pairing with the NEXT file
-# scan's Location and mis-attributing its format (ADVICE r5 #1).
-_SCAN_BLOCK = re.compile(
-    r"Scan\s+(\w+)\s(?:(?!\bScan\s).)*?Location:[^\[\n]*\[([^\]]*)\]"
-    r"(?:(?!\bScan\s).)*?ReadSchema:\s*struct<([^\n]*)",
-    re.S,
-)
-
-
-# ReadSchema width counting is shared with the DataFrame-side plan
-# parser — one implementation, one set of explain-format quirks
-from sparksql_server_spark.plans.analysis import _top_level_fields  # noqa: E402
 
 
 def scan_events(plan_description: str) -> list[tuple[str, str, int]]:
     """(source_path, format, n_read_columns) per file scan in a plan
-    description. Paths are normalized to the fingerprint form the
-    detector/cache use (scheme-less local path)."""
-    out = []
-    for m in _SCAN_BLOCK.finditer(plan_description):
-        fmt, loc, schema = m.group(1).lower(), m.group(2), m.group(3)
-        schema = schema.rstrip().rstrip(">")  # drop the struct's own close
-        # multi-path locations print comma-separated; each is a source
-        for p in loc.split(","):
-            p = p.strip()
-            if not p:
-                continue
-            out.append((p.removeprefix("file:"), fmt, _top_level_fields(schema)))
-    return out
+    description — the DataFrame-side parser (``parse_scans``), so both
+    sides share one set of explain-format quirks."""
+    return [(p, fmt, ncols) for p, ncols, fmt in parse_scans(plan_description)]
 
 
 class ScanObserver:

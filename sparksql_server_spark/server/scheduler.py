@@ -212,10 +212,8 @@ class BatchExecutor:
         job.fingerprints = scan_fingerprints(df)
         # one formatted-plan render feeds both admission inputs
         for location, ncols, fmt in scan_nodes(df):
-            if ncols is not None:
-                job.read_cols[location] = max(job.read_cols.get(location, 0), ncols)
-            if fmt is not None:
-                job.read_formats[location] = fmt
+            job.read_cols[location] = max(job.read_cols.get(location, 0), ncols)
+            job.read_formats[location] = fmt
 
     # -- execution --------------------------------------------------------
 

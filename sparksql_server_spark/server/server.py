@@ -969,11 +969,16 @@ class WorkSharingServer:
                 and job.rows is not None
                 and not job.props.get("truncated")
             ):
+                # a scan served from a cached table lists no input
+                # files: store an empty read set as unknown (None),
+                # which every scoped flush drops
                 self.results.put(
                     rc_key,
                     result,
                     generation=rc_generation,
-                    tables=tables_from_fingerprints(job.fingerprints),
+                    tables=tables_from_fingerprints(job.fingerprints)
+                    if job.fingerprints
+                    else None,
                 )
             return result
         return {"id": job.job_id, "status": job.status.value}

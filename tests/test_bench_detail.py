@@ -30,13 +30,13 @@ def test_trials_consistent_accepts_matching_record():
     timings = {
         "cached_scan_separate": 2.0,
         "cached_scan_separate_min": 1.5,
-        "mrshare_condspell_merged": 1.332,
-        "mrshare_condspell_merged_min": 1.28,
+        "mrshare_gsets_merged": 1.332,
+        "mrshare_gsets_merged_min": 1.28,
     }
     detail = {
         "queries": timings,  # non-*_trials keys are ignored
         "cached_scan_trials": {"separate": [1.5, 2.0, 2.5]},
-        "mrshare_condspell_trials": {"merged": [1.438, 1.332, 1.28]},
+        "mrshare_gsets_trials": {"merged": [1.438, 1.332, 1.28]},
     }
     _assert_trials_consistent(detail, timings)  # must not raise
 
@@ -46,10 +46,10 @@ def test_trials_consistent_rejects_clobbered_block():
     belong to a DIFFERENT experiment's legs."""
     timings = {
         "cached_scan_separate": 12.84,
-        "mrshare_condspell_concurrent": 2.624,
+        "mrshare_gsets_concurrent": 2.624,
     }
     detail = {
-        # condspell's trials serialized under cached_scan's key — the
+        # gsets' trials serialized under cached_scan's key — the
         # leg name doesn't even exist as a cached_scan headline
         "cached_scan_trials": {"concurrent": [2.687, 2.624, 2.53]},
     }

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import pytest
 
+import bench
 from sparksql_server_spark.catalog import register_tables
 from sparksql_server_spark.operators.scratch import persistent_rdd_ids
 from sparksql_server_spark.server import (
@@ -412,6 +413,7 @@ PRESENTATION = [
 def test_presentation_clauses_merge_matches_independent(spark, executor):
     jobs, bags = _run_and_compare(spark, executor, PRESENTATION, {0, 1, 2, 3})
     (bag,) = [b for b in bags if b.merges]
+    assert len(bag.merges) == 1
     assert bag.merges[0].grouping_sets == 1  # same signature throughout
     assert executor.stats["mrshare_demux_fallbacks"] == 0
     # LIMIT respected through the demux
@@ -532,6 +534,37 @@ def test_grouping_sets_merge_matches_independent(spark, executor):
     jobs, bags = _run_and_compare(spark, executor, GROUPING_SETS, {0, 1, 2})
     (bag,) = [b for b in bags if b.merges]
     assert bag.merges[0].grouping_sets == 3
+
+
+@pytest.fixture()
+def lineitem_big(spark, executor):
+    """bench.py's MRShare batches at test scale: ``lineitem_big``
+    aliased to ``lineitem``. The executor fixture already runs with
+    mrshare_min_bytes=0 and the gsets leg's mrshare_max_grouping_sets=8."""
+    spark.table("lineitem").createOrReplaceTempView("lineitem_big")
+    yield
+    spark.catalog.dropTempView("lineitem_big")
+
+
+def test_bench_mrshare_batch_forms_one_merged_plan(spark, executor, lineitem_big):
+    """The batch bench.py's mrshare_* legs time: all 10 members land in
+    ONE same-signature merged plan, each equal to its standalone run."""
+    _, bags = _run_and_compare(
+        spark, executor, bench.mrshare_queries(10), set(range(10))
+    )
+    (bag,) = [b for b in bags if b.merges]
+    assert len(bag.merges) == 1 and bag.merges[0].grouping_sets == 1
+
+
+def test_bench_gsets_batch_forms_one_grouping_sets_plan(
+    spark, executor, lineitem_big
+):
+    """The batch bench.py's mrshare_gsets_* legs time: the four grouped
+    members merge into ONE GROUPING SETS plan, while the global
+    aggregate runs unmerged (its mandatory row)."""
+    _, bags = _run_and_compare(spark, executor, bench.gs_queries, {0, 1, 2, 3})
+    (bag,) = [b for b in bags if b.merges]
+    assert len(bag.merges) == 1 and bag.merges[0].grouping_sets == 4
 
 
 def test_grouping_sets_bound_declines(spark):
@@ -1037,7 +1070,7 @@ def test_left_join_members_merge_matches_independent(spark, executor):
     exactly what its standalone run would."""
     jobs, bags = _run_and_compare(spark, executor, LEFT_STAR, {0, 1})
     (bag,) = [b for b in bags if b.merges]
-    assert bag.rewrite is RewriteKind.MRSHARE
+    assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
 def test_left_and_inner_join_members_do_not_cross_merge(spark, executor):
@@ -1075,7 +1108,7 @@ def test_right_join_member_merges_with_equivalent_left(spark, executor):
     ]
     jobs, bags = _run_and_compare(spark, executor, sqls, {0, 1})
     (bag,) = [b for b in bags if b.merges]
-    assert bag.rewrite is RewriteKind.MRSHARE
+    assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
 def test_using_join_members_merge_matches_independent(spark, executor):
@@ -1289,7 +1322,7 @@ def test_full_join_members_merge_matches_independent(spark, executor):
     the CASE-fold computes exactly the standalone results."""
     jobs, bags = _run_and_compare(spark, executor, FULL_STAR, {0, 1})
     (bag,) = [b for b in bags if b.merges]
-    assert bag.rewrite is RewriteKind.MRSHARE
+    assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
 SEMI_STAR = [

@@ -8,7 +8,11 @@ import time
 import pytest
 
 from sparksql_server_spark.server import WorkSharingServer, client_request
-from sparksql_server_spark.server.results import ResultCache, cacheable_sql
+from sparksql_server_spark.server.results import (
+    ResultCache,
+    cacheable_sql,
+    tables_from_fingerprints,
+)
 from tests.conftest import SF_DIR
 
 Q = "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"
@@ -365,6 +369,21 @@ def test_drop_table_invalidates_its_entries(server, tmp_path):
     ] == "done"
     gone = client_request(server.address, {"sql": qa})
     assert gone["status"] == "error" and "cached" not in gone
+
+
+def test_result_over_cached_table_flushes_on_scoped_invalidation(server):
+    """Once the scan cache holds a table, a query over it lists no
+    input files, so its read set is empty. That result must be stored
+    as read set unknown: a scoped flush of the table's path keys has
+    to drop it, never leave it served stale."""
+    src = f"{SF_DIR}/supplier.parquet"
+    assert server.executor.cache.ensure_cached(src, "supplier", "parquet")
+    qs = "SELECT count(*) AS n, max(s_acctbal) AS mx FROM supplier"
+    assert client_request(server.address, {"sql": qs})["status"] == "done"
+    assert client_request(server.address, {"sql": qs}).get("cached") is True
+    server.results.invalidate_tables(tables_from_fingerprints({src}))
+    again = client_request(server.address, {"sql": qs})
+    assert again["status"] == "done" and "cached" not in again
 
 
 def test_clean_sessions_share_results(server):

@@ -657,17 +657,17 @@ class TestReadFractionCostModel:
     def test_scan_read_columns_sees_pruning(self, spark):
         """The pruned ReadSchema width reaches the cost model: a
         single-column COUNT reads 1 of lineitem's 11 columns."""
-        from sparksql_server_spark.plans.analysis import scan_read_columns
+        from sparksql_server_spark.plans.analysis import scan_nodes
 
         register_tables(spark, SF_DIR)
         narrow = spark.sql("SELECT count(*) AS n FROM lineitem WHERE l_discount > 0.05")
-        cols = scan_read_columns(narrow)
+        cols = {p: n for p, n, _ in scan_nodes(narrow)}
         src = next(p for p in cols if p.endswith("lineitem.parquet"))
         assert cols[src] == 1
         # note: max(x) FROM (SELECT *) would NOT be wide — Catalyst
         # prunes through subqueries; only a full-row output reads all
         wide = spark.sql("SELECT * FROM lineitem")
-        assert scan_read_columns(wide)[src] >= 11
+        assert [n for p, n, _ in scan_nodes(wide) if p == src][0] >= 11
 
     def test_narrow_bag_not_admitted_wide_bag_admitted(self, spark):
         """Σ read-fraction decides, with a format-aware bar: a cheap
@@ -868,18 +868,18 @@ class TestStorageAwareAdmission:
     def test_scan_source_formats(self, spark, tmp_path):
         """The analyzer reports each scanned source's file format —
         the input the format-aware admission bar keys on."""
-        from sparksql_server_spark.plans.analysis import scan_source_formats
+        from sparksql_server_spark.plans.analysis import scan_nodes
 
         register_tables(spark, SF_DIR)
         pq = spark.sql("SELECT count(*) AS n FROM lineitem")
-        fmts = scan_source_formats(pq)
+        fmts = {p: fmt for p, _, fmt in scan_nodes(pq)}
         src = next(p for p in fmts if p.endswith("lineitem.parquet"))
         assert fmts[src] == "parquet"
 
         csv_dir = str(tmp_path / "t.csv")
         spark.table("region").write.option("header", True).csv(csv_dir)
         cdf = spark.read.option("header", True).csv(csv_dir)
-        assert set(scan_source_formats(cdf).values()) == {"csv"}
+        assert {fmt for _, _, fmt in scan_nodes(cdf)} == {"csv"}
 
     def test_declines_when_build_exceeds_free_storage(self, spark):
         """Round-1 regression gate: admission must observe the JVM's

@@ -19,15 +19,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import CPUS, SF_DIR, _force, warm_session  # noqa: E402
 from sparksql_server_spark import get_session  # noqa: E402
 from sparksql_server_spark.catalog import register_tables  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -49,18 +43,7 @@ def main() -> None:
 
     spark = get_session("ab-inline", cpus=CPUS)
     register_tables(spark, SF_DIR)
-    _force(spark.sql("SELECT count(*) AS n FROM region"))
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-
-    def _warm_mip(it):
-        yield from it
-
-    _force(spark.range(100_000).repartition(CPUS).select(_warm("id")))
-    _force(spark.range(100_000).repartition(CPUS).mapInPandas(_warm_mip, "id long"))
+    warm_session(spark)
 
     arms = {"a": mod.build_a, "b": mod.build_b}
     res = {k: {"first": None, "steady": []} for k in arms}

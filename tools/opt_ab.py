@@ -6,7 +6,7 @@ Run: python tools/opt_ab.py q1 q2 ... [--steady N] [--conf k=v ...]
      python tools/opt_ab.py --all-over 1.0   # every query whose r11
                                              # first-exec was >= 1.0 s
 
-Fresh JVM per invocation, same warmup sequence as bench.py (scan +
+Fresh JVM per invocation, warmed by bench.warm_session (scan +
 scalar-Arrow + mapInPandas), so numbers are comparable to the bench's
 per-query regime. Conf overrides apply at session build (context-time
 confs included), which is what an engine-default change would do.
@@ -21,16 +21,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import CPUS, SF_DIR, _force, warm_session  # noqa: E402
 from sparksql_server_spark import get_session  # noqa: E402
 from sparksql_server_spark.catalog import register_tables  # noqa: E402
 from sparksql_server_spark.operators import QUERIES  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -64,18 +58,7 @@ def main() -> None:
             i += 1
     spark = get_session("opt-ab", cpus=CPUS, extra_conf=conf or None)
     register_tables(spark, SF_DIR)
-    _force(spark.sql("SELECT count(*) AS n FROM region"))
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-
-    def _warm_mip(it):
-        yield from it
-
-    _force(spark.range(100_000).repartition(CPUS).select(_warm("id")))
-    _force(spark.range(100_000).repartition(CPUS).mapInPandas(_warm_mip, "id long"))
+    warm_session(spark)
 
     out = {}
     for name in names:
