@@ -141,7 +141,7 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def warm_session(spark, cpus: int = CPUS):
+def warm_session(spark):
     """Warm a fresh session so per-query times are steady-state: the
     JVM/codegen paths (one scan of ``region``) and the Python/Arrow
     daemon pool. Without the latter, whichever query executes Python
@@ -162,8 +162,8 @@ def warm_session(spark, cpus: int = CPUS):
     def _warm_mip(it):
         yield from it
 
-    _force(spark.range(100_000).repartition(cpus).select(_warm_py("id")))
-    _force(spark.range(100_000).repartition(cpus).mapInPandas(_warm_mip, "id long"))
+    _force(spark.range(100_000).repartition(CPUS).select(_warm_py("id")))
+    _force(spark.range(100_000).repartition(CPUS).mapInPandas(_warm_mip, "id long"))
     return _warm_py
 
 
@@ -239,7 +239,8 @@ def _timed_batch(
     """Time one ``run_batch`` of ``queries`` through a fresh executor
     and return (seconds, bags). The default cache floor sits
     above any table, vetoing admission; whatever the batch cached is
-    released after the clock stops."""
+    released after the clock stops. A failed job makes the timing
+    invalid, so it is reported on stderr."""
     ex = BatchExecutor(
         spark,
         cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=cache_floor),
@@ -252,6 +253,13 @@ def _timed_batch(
     bags = ex.run_batch(jobs)
     dt = time.monotonic() - t0
     ex.cache.clear()
+    failed = [j for j in jobs if j.status.value != "done"]
+    if failed:
+        print(
+            f"WARN: batch {base_id} had failed jobs: "
+            + "; ".join(f"{j.job_id} {j.status.value}: {j.error}" for j in failed),
+            file=sys.stderr,
+        )
     return dt, bags
 
 

@@ -75,13 +75,17 @@ def _top_level_fields(struct_body: str) -> int:
 # field count short. The explain renderer may still truncate very wide
 # schemas ("... N more fields") — then the count is a lower bound and
 # read fractions err toward declining, never over-admitting. Both gaps
-# are tempered — no second 'Scan ' may appear between the format and
+# are tempered — no line may open another scan node ("(3) Scan csv",
+# "+- Scan ExistingRDD", "(4) LocalTableScan") between the format and
 # its Location, or between Location and ReadSchema — so a scan node
 # that prints no Location (Scan ExistingRDD) fails to match instead of
-# pairing with the NEXT file scan's Location (ADVICE r5 #1).
+# pairing with the NEXT file scan's Location (ADVICE r5 #1). Only a
+# node header tempers: a pushed literal such as 'Scan x' in the
+# PushedFilters line between Location and ReadSchema does not.
+_NEXT_SCAN_NODE = r"(?!\n[ \t:|+\-*()\d]*\w*Scan\s)"
 _SCAN_BLOCK = re.compile(
-    r"Scan\s+(\w+)\s(?:(?!\bScan\s).)*?Location:[^\[\n]*\[([^\]]*)\]"
-    r"(?:(?!\bScan\s).)*?ReadSchema:\s*struct<([^\n]*)",
+    rf"Scan\s+(\w+)\s(?:{_NEXT_SCAN_NODE}.)*?Location:[^\[\n]*\[([^\]]*)\]"
+    rf"(?:{_NEXT_SCAN_NODE}.)*?ReadSchema:\s*struct<([^\n]*)",
     re.S,
 )
 

@@ -970,15 +970,15 @@ class WorkSharingServer:
                 and not job.props.get("truncated")
             ):
                 # a scan served from a cached table lists no input
-                # files: store an empty read set as unknown (None),
-                # which every scoped flush drops
+                # files, but its plan still prints the scan's Location:
+                # the read set is both. An empty one is stored as
+                # unknown (None), which every scoped flush drops
+                read_set = job.fingerprints | job.read_cols.keys()
                 self.results.put(
                     rc_key,
                     result,
                     generation=rc_generation,
-                    tables=tables_from_fingerprints(job.fingerprints)
-                    if job.fingerprints
-                    else None,
+                    tables=tables_from_fingerprints(read_set) if read_set else None,
                 )
             return result
         return {"id": job.job_id, "status": job.status.value}

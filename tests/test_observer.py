@@ -15,6 +15,7 @@ import time
 import pytest
 
 from sparksql_server_spark.catalog import register_tables
+from sparksql_server_spark.plans.analysis import parse_scans, scan_nodes
 from sparksql_server_spark.server.cache import CacheManager
 from sparksql_server_spark.server.observer import (
     ScanObserver,
@@ -80,6 +81,29 @@ def test_scan_events_do_not_cross_scan_boundaries():
     )
     events = scan_events(desc)
     assert events == [("/data/t.parquet", "parquet", 2)]
+
+
+def test_parse_scans_ignores_scan_text_in_pushed_filters():
+    """Only a scan-node header ends a scan block: a pushed literal that
+    spells 'Scan ' in the PushedFilters line between Location and
+    ReadSchema keeps the scan's width and format."""
+    desc = (
+        "(1) Scan parquet default.t\n"
+        "Output [2]: [b#1, c#2]\n"
+        "Batched: true\n"
+        "Location: InMemoryFileIndex [file:/data/t.parquet]\n"
+        "PushedFilters: [IsNotNull(c), EqualTo(c,Scan x)]\n"
+        "ReadSchema: struct<b:int,c:string>\n"
+    )
+    assert parse_scans(desc) == [("/data/t.parquet", 2, "parquet")]
+
+
+def test_scan_nodes_live_plan_with_scan_literal(spark):
+    register_tables(spark, SF_DIR, ("supplier",))
+    df = spark.sql(
+        "SELECT s_name, s_acctbal FROM supplier WHERE s_name = 'Scan x'"
+    )
+    assert scan_nodes(df) == [(SF_DIR + "/supplier.parquet", 2, "parquet")]
 
 
 # -- unit: low-water bookkeeping over out-of-order completions --------------

@@ -379,11 +379,19 @@ def test_result_over_cached_table_flushes_on_scoped_invalidation(server):
     src = f"{SF_DIR}/supplier.parquet"
     assert server.executor.cache.ensure_cached(src, "supplier", "parquet")
     qs = "SELECT count(*) AS n, max(s_acctbal) AS mx FROM supplier"
-    assert client_request(server.address, {"sql": qs})["status"] == "done"
-    assert client_request(server.address, {"sql": qs}).get("cached") is True
+    # joined with an uncached table the file list is non-empty but
+    # lacks the cached source, which must still be in the read set
+    qj = (
+        "SELECT n_name, count(*) AS n FROM supplier"
+        " JOIN nation ON s_nationkey = n_nationkey GROUP BY n_name"
+    )
+    for q in (qs, qj):
+        assert client_request(server.address, {"sql": q})["status"] == "done"
+        assert client_request(server.address, {"sql": q}).get("cached") is True
     server.results.invalidate_tables(tables_from_fingerprints({src}))
-    again = client_request(server.address, {"sql": qs})
-    assert again["status"] == "done" and "cached" not in again
+    for q in (qs, qj):
+        again = client_request(server.address, {"sql": q})
+        assert again["status"] == "done" and "cached" not in again
 
 
 def test_clean_sessions_share_results(server):
