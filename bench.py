@@ -203,24 +203,6 @@ def mrshare_queries(n: int) -> list[str]:
     ]
 
 
-# the cross-signature regime: 4 DIFFERENT grouping keys merge via
-# GROUPING SETS (Expand replicates every row 4x before the shuffle, the
-# inflation MRShareCM priced). The global aggregate runs UNMERGED by
-# the mandatory-row rule: grouping sets over empty input would drop
-# its one required row.
-gs_queries = [
-    "SELECT l_returnflag AS k, count(*) AS n, CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS q"
-    " FROM lineitem_big GROUP BY l_returnflag",
-    "SELECT l_linestatus AS k, count(*) AS n, max(l_extendedprice) AS mx"
-    " FROM lineitem_big GROUP BY l_linestatus",
-    "SELECT l_linenumber AS k, count(*) AS n, CAST(avg(l_discount) AS DOUBLE) AS d"
-    " FROM lineitem_big GROUP BY l_linenumber",
-    "SELECT l_returnflag AS k1, l_linestatus AS k2, min(l_shipdate) AS mn"
-    " FROM lineitem_big WHERE l_quantity >= 25 GROUP BY l_returnflag, l_linestatus",
-    "SELECT count(*) AS n, max(l_shipdate) AS mx FROM lineitem_big",
-]
-
-
 def _median(xs: list[float]) -> float:
     s = sorted(xs)
     mid = len(s) // 2
@@ -234,7 +216,6 @@ def _timed_batch(
     source_views: dict[str, str],
     cache_floor: int = 1 << 40,
     enable_mrshare: bool = False,
-    **executor_opts,
 ):
     """Time one ``run_batch`` of ``queries`` through a fresh executor
     and return (seconds, bags). The default cache floor sits
@@ -246,7 +227,6 @@ def _timed_batch(
         cache=CacheManager(spark, budget_bytes=8 << 30, min_bytes=cache_floor),
         source_views=source_views,
         enable_mrshare=enable_mrshare,
-        **executor_opts,
     )
     jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(queries)]
     t0 = time.monotonic()
@@ -624,7 +604,7 @@ def main() -> None:
     # Interleaved trials, median recorded — same protocol as cached_scan.
     # Which batches merge, and that merged rows equal standalone runs,
     # is pinned per SQL spelling by tests/test_mrshare.py (this batch
-    # and gs_queries below included); the bench times the effect once.
+    # included); the bench times the effect once.
     mr_queries = mrshare_queries(10)
     _force(spark.sql(mr_queries[0]))  # warm
 
@@ -642,22 +622,6 @@ def main() -> None:
         mr_trials["merged"].append(_run_mrshare("merged", 7000 + 100 * rep))
     _record_trials(timings, "mrshare", mr_trials)
 
-    # --- MRShare cross-signature regime: 4 DIFFERENT grouping keys
-    # merge via GROUPING SETS — Expand replicates every row 4x before
-    # the shuffle, the exact inflation MRShareCM priced. On a
-    # parse-dominated CSV scan the one saved scan should still win;
-    # this leg PRICES that trade instead of assuming it.
-    def _run_gsets(merged: bool, base_id: int) -> float:
-        return _timed_batch(
-            spark, gs_queries, base_id, big_views,
-            enable_mrshare=merged, mrshare_max_grouping_sets=8,
-        )[0]
-
-    gs_trials: dict[str, list[float]] = {"concurrent": [], "merged": []}
-    for rep in range(CACHED_SCAN_TRIALS):
-        gs_trials["concurrent"].append(_run_gsets(False, 8000 + 100 * rep))
-        gs_trials["merged"].append(_run_gsets(True, 9000 + 100 * rep))
-    _record_trials(timings, "mrshare_gsets", gs_trials)
     # --- gateway result cache: repeat deterministic query text served
     # from memory (server/results.py). Measured through the REAL TCP
     # server: cold = first submission (batch window + execution),
@@ -810,9 +774,6 @@ def main() -> None:
         },
         "mrshare_trials": {
             leg: [round(x, 3) for x in xs] for leg, xs in mr_trials.items()
-        },
-        "mrshare_gsets_trials": {
-            leg: [round(x, 3) for x in xs] for leg, xs in gs_trials.items()
         },
         # fixed machine-speed probes (scan/cpu/shuffle), compiled-once
         # then timed — divide per-query times by the probe-median ratio

@@ -28,17 +28,9 @@ relation become ONE Catalyst plan:
   (blocking materialize + demux round-trips) is priced by the
   scheduler's byte-floor admission (BatchExecutor.mrshare_min_bytes —
   measured: merging tiny parquet scans LOST ~2x), not here.
-- **differing signatures**: merged via ``GROUP BY GROUPING SETS``.
-  Spark's Expand replicates every input row once per distinct grouping
-  set BEFORE the shuffle — the exact map-output inflation MRShareCM
-  prices. The cost model here is a hard bound: merge at most
-  ``max_grouping_sets`` distinct sets (scan saving of N-1 jobs must
-  amortize an Expand factor ≤ that bound; at 100 TB the scan is the
-  dominant term for wide tables, so a small constant bound is the safe
-  default). Demux filters on the deterministic ``grouping_id()`` of
-  each query's set (bit k, MSB-first over the GROUP BY list, = 1 when
-  expr k is aggregated away — verified empirically in
-  tests/test_mrshare.py).
+- **differing signatures** do not merge: the GROUPING SETS form (one
+  Expand replicating every input row per set) measured wall-clock parity
+  with concurrent unmerged runs, so it was retired.
 
 Parsing is deliberately conservative (prototype-parity with the
 reference, which only ever merged WordCount-shaped jobs): the canonical
@@ -2400,7 +2392,6 @@ class MergePlan:
     demux_sql: dict[int, str]  # job_id -> rewritten SQL over the view
     view: str
     session: Any = None  # the member jobs' shared session (None = root)
-    grouping_sets: int = 1  # distinct sets merged (1 = no Expand)
     df: Any = None  # persisted merged DataFrame, set at materialize time
 
 
@@ -2427,31 +2418,17 @@ def _rewrite_item(raw_expr: str, calls: list[tuple], pred: Optional[str]) -> str
     return "".join(out)
 
 
-def _build_merge(
-    members: list[tuple[QueryJob, ParsedAgg]], *, grouping_sets: bool
-) -> MergePlan:
+def _build_merge(members: list[tuple[QueryJob, ParsedAgg]]) -> MergePlan:
     """Emit merged SQL + per-job demux SQL for one merge group.
 
-    ``members`` all share a table (and, when not ``grouping_sets``, a
-    grouping signature).
+    ``members`` all share a table and a grouping signature.
     """
     table = members[0][1].from_raw or members[0][1].table
     raw_of: dict[str, str] = {}
     for _, p in members:
         for c, r in p.group_raw.items():
             raw_of.setdefault(c, r)
-    # Spark derives the grouping-expression order (= grouping_id() bit
-    # order, MSB first) from FIRST APPEARANCE across the grouping sets
-    # as written. Emit sets in sorted order, each set's exprs in its own
-    # (sorted-canonical) tuple order, and derive ``ordered`` from that
-    # exact emission so the python-side gid matches Spark's
-    # (empirically pinned in tests/test_mrshare.py).
-    sets_list: list[tuple[str, ...]] = sorted({p.group_canon for _, p in members})
-    ordered: list[str] = []
-    for s in sets_list:
-        for c in s:
-            if c not in ordered:
-                ordered.append(c)
+    ordered: list[str] = list(members[0][1].group_canon)
     g_alias = {c: f"__g{k}" for k, c in enumerate(ordered)}
 
     sel: list[str] = [f"{raw_of[c]} AS {g_alias[c]}" for c in ordered]
@@ -2461,16 +2438,8 @@ def _build_merge(
         merged_where = " WHERE " + " OR ".join(f"({pr})" for pr in preds)
 
     demux: dict[int, str] = {}
-    n = len(ordered)
     for i, (job, p) in enumerate(members):
         conds: list[str] = []
-        if grouping_sets:
-            gid = sum(
-                1 << (n - 1 - k)
-                for k, c in enumerate(ordered)
-                if c not in p.group_canon
-            )
-            conds.append(f"__gid = {gid}")
         # presence counter: a grouped query's result contains a group
         # only if >=1 row matched its predicate. A GLOBAL aggregate
         # (empty signature) always returns exactly one row — count=0 /
@@ -2540,19 +2509,10 @@ def _build_merge(
             f"{order_clause}{limit_clause}"
         )
 
-    if grouping_sets:
-        sel.insert(len(ordered), "grouping_id() AS __gid")
-        sets_sql = ", ".join(
-            "(" + ", ".join(raw_of[c] for c in s) + ")" for s in sets_list
-        )
-        group_clause = f"GROUP BY GROUPING SETS ({sets_sql})"
-        n_sets = len(sets_list)
-    else:
-        # empty ordered = merged GLOBAL aggregation: no GROUP BY at all
-        group_clause = (
-            "GROUP BY " + ", ".join(raw_of[c] for c in ordered) if ordered else ""
-        )
-        n_sets = 1
+    # empty ordered = merged GLOBAL aggregation: no GROUP BY at all
+    group_clause = (
+        "GROUP BY " + ", ".join(raw_of[c] for c in ordered) if ordered else ""
+    )
 
     view = f"mrshare_{uuid.uuid4().hex[:10]}"
     merged_sql = (
@@ -2565,7 +2525,6 @@ def _build_merge(
         demux_sql=demux,
         view=view,
         session=members[0][0].session,
-        grouping_sets=n_sets,
     )
 
 
@@ -2906,7 +2865,6 @@ def semantic_result_key(sql: str):
 def plan_merges(
     jobs: list[QueryJob],
     *,
-    max_grouping_sets: int = 4,
     max_distinct_aggs: int = 2,
     max_members_per_merge: int = 32,
     cost_split: bool = True,
@@ -2914,15 +2872,12 @@ def plan_merges(
 ) -> list[MergePlan]:
     """Group a batch's mergeable jobs into MergePlans.
 
-    Regime 1: same (table, session, grouping signature), ≥2 jobs — the
-    ``_split_members`` DP (reference ``SplitMRShareJobs`` analog)
-    decides WHICH consecutive cost-sorted members merge together;
-    DP singletons fall through to regime 2. Regime 2: leftover
-    single-signature jobs on the same (table, session) merge via
-    GROUPING SETS when 2 ≤ distinct sets ≤ ``max_grouping_sets`` (the
-    Expand-inflation bound standing in for MRShareCM's GAIN).
-    ``max_distinct_aggs`` bounds DISTINCT aggregates per merged plan —
-    each multi-distinct adds its own Expand in Spark."""
+    Members merge when they share (table, session, grouping
+    signature), ≥2 jobs — the ``_split_members`` DP (reference
+    ``SplitMRShareJobs`` analog) decides WHICH consecutive cost-sorted
+    members merge together. ``max_distinct_aggs`` bounds DISTINCT
+    aggregates per merged plan — each multi-distinct adds its own
+    Expand in Spark."""
     from sparksql_server_spark.server.results import cacheable_sql
 
     parsed: dict[int, ParsedAgg] = {}
@@ -2953,58 +2908,19 @@ def plan_merges(
         by_sig.setdefault((id(job.session), p.signature), []).append((job, p))
 
     plans: list[MergePlan] = []
-    leftovers: dict[tuple, list[tuple[QueryJob, ParsedAgg]]] = {}
-    for (sess_key, sig), members in sorted(
+    for (_sess_key, _sig), members in sorted(
         by_sig.items(), key=lambda kv: kv[1][0][0].job_id
     ):
-        if len(members) >= 2:
-            # cost_split=False bypasses the DP (flat one-plan-per-
-            # signature merge) — a semantics-testing hook: the demux
-            # equivalence property must hold for EVERY admissible
-            # grouping, not only the cost-optimal one
-            groups = (
-                _split_members(members, max_distinct_aggs, max_members_per_merge)
-                if cost_split
-                else [members]
-            )
-            for group in groups:
-                if len(group) >= 2:
-                    plans.append(_build_merge(group, grouping_sets=False))
-                else:
-                    leftovers.setdefault((sess_key, sig[0]), []).extend(group)
-        else:
-            leftovers.setdefault((sess_key, sig[0]), []).extend(members)
-
-    for (sess_key, _table), members in sorted(
-        leftovers.items(), key=lambda kv: kv[1][0][0].job_id
-    ):
-        # GLOBAL aggregates (empty signature) never join a GROUPING
-        # SETS merge: grouping-sets aggregation over EMPTY merged input
-        # (all-predicate batch where nothing matches, or empty table)
-        # yields zero groups, but a true global aggregate must return
-        # exactly one row (count=0/NULLs) — ADVICE r4 medium. Regime 1
-        # merges of >=2 global aggregates keep plain no-GROUP-BY SQL,
-        # which preserves the mandatory row; global singletons here run
-        # unmerged.
-        members = [(j, p) for j, p in members if p.group_canon]
-        # pack within the DISTINCT-aggregate budget instead of
-        # all-or-nothing: one over-budget member (e.g. a DP singleton
-        # with several DISTINCTs routed here from regime 1) must not
-        # cost every other leftover its GROUPING SETS merge (review
-        # r7) — cheapest-first keeps the most members, excluded ones
-        # run unmerged exactly as they would have pre-merge
-        members = sorted(
-            members, key=lambda jp: (jp[1].n_distinct_aggs, jp[0].job_id)
-        )
-        kept: list = []
-        budget = max_distinct_aggs
-        for j, p in members:
-            if p.n_distinct_aggs <= budget:
-                kept.append((j, p))
-                budget -= p.n_distinct_aggs
-        kept.sort(key=lambda jp: jp[0].job_id)
-        sets = {p.group_canon for _, p in kept}
-        if len(kept) < 2 or not (2 <= len(sets) <= max_grouping_sets):
+        if len(members) < 2:
             continue
-        plans.append(_build_merge(kept, grouping_sets=True))
+        # cost_split=False bypasses the DP (flat one-plan-per-
+        # signature merge) — a semantics-testing hook: the demux
+        # equivalence property must hold for EVERY admissible
+        # grouping, not only the cost-optimal one
+        groups = (
+            _split_members(members, max_distinct_aggs, max_members_per_merge)
+            if cost_split
+            else [members]
+        )
+        plans.extend(_build_merge(g) for g in groups if len(g) >= 2)
     return plans

@@ -43,7 +43,6 @@ class BatchExecutor:
         max_concurrency: int = 16,
         source_views: dict[str, str] | None = None,
         enable_mrshare: bool = True,
-        mrshare_max_grouping_sets: int = 1,
         mrshare_min_bytes: int = 64 << 20,
     ) -> None:
         self.spark = spark
@@ -52,30 +51,14 @@ class BatchExecutor:
         # MRShare-style aggregation merging (server/mrshare.py ≙ B8).
         # Same-signature merges replace N scans + N shuffles with one
         # of each (measured ~2x faster than both concurrent-unmerged
-        # and the caching rewrite on a 700 MB CSV scan at sf0.1);
-        # cross-signature merges go through GROUPING SETS, whose Expand
-        # replicates input rows once per distinct set — measured a
-        # WALL-CLOCK COIN FLIP at the same scale, so they DECLINE BY
-        # DEFAULT (round 9, VERDICT r8 ask #4). Calibration
-        # (tools/gsets_calibrate.py, 8x CSV fact at sf0.1, local[32],
-        # 3 trials/leg): merged vs concurrent medians 1.25/1.31 s at 2
-        # sets, 1.15/1.14 at 3, 1.33/1.42 at 4 — parity at every set
-        # count, because an otherwise-idle 32-thread box hides the
-        # extra scans inside concurrent parallelism exactly as well as
-        # the merge removes them (total CPU is lower merged; wall
-        # clock isn't). A rewrite that cannot be shown to win stays
-        # out of the hot path; deployments whose executors run at
-        # contention (where saved scans ARE saved wall-clock) opt in
-        # with mrshare_max_grouping_sets >= 2. Same-signature merging
-        # (no Expand) is unaffected by this default. The byte floor
-        # is the merge's admission control (measured: merging 19 MB
-        # parquet scans made a 2-query batch ~2x SLOWER — the blocking
-        # materialize + demux round-trips are a fixed cost only an
-        # expensive shared scan repays; same floor philosophy as
-        # CacheManager.min_bytes, and the modern form of the lesson in
-        # the reference's own MRShare evaluation).
+        # and the caching rewrite on a 700 MB CSV scan at sf0.1). The
+        # byte floor is the merge's admission control (measured:
+        # merging 19 MB parquet scans made a 2-query batch ~2x SLOWER —
+        # the blocking materialize + demux round-trips are a fixed cost
+        # only an expensive shared scan repays; same floor philosophy
+        # as CacheManager.min_bytes, and the modern form of the lesson
+        # in the reference's own MRShare evaluation).
         self.enable_mrshare = enable_mrshare
-        self.mrshare_max_grouping_sets = mrshare_max_grouping_sets
         self.mrshare_min_bytes = mrshare_min_bytes
         self._schema_memo: dict = {}
         # source fingerprint (table root dir) -> registered view name
@@ -258,7 +241,6 @@ class BatchExecutor:
                         if j.status is JobStatus.QUEUED
                         and not j.props.get("prime_only")
                     ],
-                    max_grouping_sets=self.mrshare_max_grouping_sets,
                     schema_fn_for=self._schema_fn_for,
                 ):
                     if self._merge_source_bytes(mp) < self.mrshare_min_bytes:

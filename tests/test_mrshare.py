@@ -6,8 +6,7 @@ into one tagged job; its own evaluation measured a regression
 pipeline. Our declarative rebuild must therefore prove BOTH halves:
 (a) merged results are EXACTLY the per-query results (every test here
 compares against independent unmerged runs), and (b) the merge only
-fires in regimes where it cannot lose (same-signature always; grouping
-sets under the Expand bound).
+fires in the regime where it cannot lose (same grouping signature).
 """
 
 from __future__ import annotations
@@ -212,11 +211,6 @@ def executor(spark):
         # tests exercise the merge machinery itself (admission has its
         # own gate below)
         mrshare_min_bytes=0,
-        # cross-signature GROUPING SETS merging declines by default
-        # since round 9 (measured wall-clock coin flip — see
-        # scheduler.py); the machinery tests opt in here so the Expand
-        # path stays fully exercised for deployments that enable it
-        mrshare_max_grouping_sets=8,
     )
     yield ex
     ex.cache.clear()
@@ -279,7 +273,7 @@ SAME_SIG = [
 def test_same_signature_merge_matches_independent(spark, executor):
     jobs, bags = _run_and_compare(spark, executor, SAME_SIG, {0, 1, 2, 3})
     (bag,) = [b for b in bags if b.merges]
-    assert len(bag.merges) == 1 and bag.merges[0].grouping_sets == 1
+    assert len(bag.merges) == 1
     assert bag.rewrite is RewriteKind.MRSHARE
     for j in jobs:
         assert j.props["rewritten_sql"].lstrip().upper().startswith("SELECT")
@@ -320,7 +314,6 @@ GLOBALS = [
 def test_global_aggregates_merge_matches_independent(spark, executor):
     jobs, bags = _run_and_compare(spark, executor, GLOBALS, {0, 1, 2, 3})
     (bag,) = [b for b in bags if b.merges]
-    assert bag.merges[0].grouping_sets == 1
     # the match-nothing job returned its one row, not zero rows
     assert len(jobs[2].rows) == 1 and jobs[2].rows[0][0] == 0
 
@@ -414,7 +407,6 @@ def test_presentation_clauses_merge_matches_independent(spark, executor):
     jobs, bags = _run_and_compare(spark, executor, PRESENTATION, {0, 1, 2, 3})
     (bag,) = [b for b in bags if b.merges]
     assert len(bag.merges) == 1
-    assert bag.merges[0].grouping_sets == 1  # same signature throughout
     assert executor.stats["mrshare_demux_fallbacks"] == 0
     # LIMIT respected through the demux
     assert len(jobs[0].rows) <= 3 and len(jobs[3].rows) <= 2
@@ -444,16 +436,16 @@ def test_having_filters_global_aggregate_row(spark, executor):
 
 
 def test_presentation_clauses_with_grouping_sets(spark, executor):
+    """Presentation clauses on members with DIFFERENT grouping keys:
+    they never merge (the GROUPING SETS form is retired) and each still
+    equals its standalone run."""
     sqls = [
         "SELECT o_orderstatus, count(*) AS n FROM orders"
         " GROUP BY o_orderstatus HAVING count(*) > 1 ORDER BY n DESC, o_orderstatus LIMIT 2",
         "SELECT o_orderpriority, sum(o_totalprice) AS s FROM orders"
         " GROUP BY o_orderpriority ORDER BY o_orderpriority",
     ]
-    jobs, bags = _run_and_compare(spark, executor, sqls, {0, 1})
-    (bag,) = [b for b in bags if b.merges]
-    assert bag.merges[0].grouping_sets == 2
-    assert executor.stats["mrshare_demux_fallbacks"] == 0
+    _run_and_compare(spark, executor, sqls, set())
 
 
 def test_order_by_alias_shadowing_group_key_resolves_output_first(spark, executor):
@@ -517,30 +509,11 @@ def test_having_reuses_selected_aggregate_column(spark):
     assert "__m0_1 > 5" in mp.demux_sql[0]
 
 
-GROUPING_SETS = [
-    # three signatures over orders, deliberately interleaved widths so
-    # the grouping_id bit order (first-appearance across sets) is
-    # exercised on a non-trivial permutation
-    "SELECT o_orderstatus, count(*) AS n FROM orders"
-    " WHERE o_totalprice > 1000 GROUP BY o_orderstatus",
-    "SELECT o_orderpriority, o_orderstatus, sum(o_totalprice) AS s FROM orders"
-    " GROUP BY o_orderpriority, o_orderstatus",
-    "SELECT o_orderpriority, avg(o_totalprice) AS a, count(*) AS n FROM orders"
-    " WHERE o_orderstatus = 'F' GROUP BY o_orderpriority",
-]
-
-
-def test_grouping_sets_merge_matches_independent(spark, executor):
-    jobs, bags = _run_and_compare(spark, executor, GROUPING_SETS, {0, 1, 2})
-    (bag,) = [b for b in bags if b.merges]
-    assert bag.merges[0].grouping_sets == 3
-
-
 @pytest.fixture()
 def lineitem_big(spark, executor):
     """bench.py's MRShare batches at test scale: ``lineitem_big``
     aliased to ``lineitem``. The executor fixture already runs with
-    mrshare_min_bytes=0 and the gsets leg's mrshare_max_grouping_sets=8."""
+    mrshare_min_bytes=0."""
     spark.table("lineitem").createOrReplaceTempView("lineitem_big")
     yield
     spark.catalog.dropTempView("lineitem_big")
@@ -553,30 +526,19 @@ def test_bench_mrshare_batch_forms_one_merged_plan(spark, executor, lineitem_big
         spark, executor, bench.mrshare_queries(10), set(range(10))
     )
     (bag,) = [b for b in bags if b.merges]
-    assert len(bag.merges) == 1 and bag.merges[0].grouping_sets == 1
-
-
-def test_bench_gsets_batch_forms_one_grouping_sets_plan(
-    spark, executor, lineitem_big
-):
-    """The batch bench.py's mrshare_gsets_* legs time: the four grouped
-    members merge into ONE GROUPING SETS plan, while the global
-    aggregate runs unmerged (its mandatory row)."""
-    _, bags = _run_and_compare(spark, executor, bench.gs_queries, {0, 1, 2, 3})
-    (bag,) = [b for b in bags if b.merges]
-    assert len(bag.merges) == 1 and bag.merges[0].grouping_sets == 4
+    assert len(bag.merges) == 1
 
 
 def test_grouping_sets_bound_declines(spark):
-    """5 distinct signatures with max_grouping_sets=4 → Expand factor
-    too high, no merge; everything still answers correctly unmerged."""
+    """5 distinct grouping signatures over one table: members merge only
+    on an equal signature (the GROUPING SETS form is retired), so
+    nothing merges and everything answers correctly unmerged."""
     register_tables(spark, SF_DIR)
     ex = BatchExecutor(
         spark,
         cache=CacheManager(spark, budget_bytes=1 << 30),
         source_views=source_view_map(SF_DIR),
-        mrshare_max_grouping_sets=4,
-        mrshare_min_bytes=0,  # isolate the grouping-sets bound from size admission
+        mrshare_min_bytes=0,  # isolate the signature rule from size admission
     )
     cols = ["o_orderstatus", "o_orderpriority", "o_orderdate", "o_custkey", "o_orderkey"]
     sqls = [
@@ -609,30 +571,6 @@ def test_multi_distinct_bound_packs_within_cap(spark, executor):
     for job, exp in zip(jobs, expected):
         assert job.status is JobStatus.DONE, f"job {job.job_id}: {job.error}"
         assert _rows_equal(sorted(job.rows), exp)
-
-
-def test_over_budget_leftover_does_not_block_gsets_merge():
-    """Review r7: a single over-budget member landing in the (table,
-    session) leftovers (e.g. a DP singleton carrying several DISTINCT
-    aggregates) must not cost every OTHER leftover its GROUPING SETS
-    merge — the budget packs cheapest-first and the over-budget job
-    simply runs unmerged."""
-    from sparksql_server_spark.server.mrshare import plan_merges
-
-    sqls = [
-        "SELECT o_orderstatus AS k, count(*) AS n FROM orders"
-        " GROUP BY o_orderstatus",
-        "SELECT o_orderpriority AS k, count(*) AS n FROM orders"
-        " GROUP BY o_orderpriority",
-        "SELECT o_orderdate AS k, count(DISTINCT o_custkey) AS a,"
-        " count(DISTINCT o_orderkey) AS b, count(DISTINCT o_totalprice) AS c"
-        " FROM orders GROUP BY o_orderdate",
-    ]
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
-    plans = plan_merges(jobs, max_distinct_aggs=2)
-    assert len(plans) == 1
-    assert {j.job_id for j in plans[0].jobs} == {0, 1}
-    assert plans[0].grouping_sets == 2
 
 
 def test_unmergeable_shapes_run_normal_path(spark, executor):
@@ -809,7 +747,7 @@ def test_parse_join_chain_shapes():
 def test_star_join_members_merge_matches_independent(spark, executor):
     jobs, bags = _run_and_compare(spark, executor, STAR_JOIN, {0, 1})
     (bag,) = [b for b in bags if b.merges]
-    assert len(bag.merges) == 1 and bag.merges[0].grouping_sets == 1
+    assert len(bag.merges) == 1
     assert bag.rewrite is RewriteKind.MRSHARE
 
 
@@ -823,18 +761,6 @@ def test_aliased_star_join_members_merge_matches_independent(spark, executor):
         " GROUP BY o.o_orderpriority",
     ]
     _run_and_compare(spark, executor, sqls, {0, 1})
-
-
-def test_star_join_grouping_sets_merge_matches_independent(spark, executor):
-    sqls = [
-        STAR_JOIN[0],
-        "SELECT o_orderstatus, count(*) AS n"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-        " GROUP BY o_orderstatus",
-    ]
-    jobs, bags = _run_and_compare(spark, executor, sqls, {0, 1})
-    (bag,) = [b for b in bags if b.merges]
-    assert bag.merges[0].grouping_sets == 2
 
 
 def test_join_and_single_table_members_do_not_cross_merge(spark, executor):
