@@ -4,14 +4,20 @@ memory, one level above the reference's scan sharing.
 The reference shares WORK between concurrent queries (ScanSharing);
 repeat submissions of the same query still re-execute. A middleware
 front-end can also share RESULTS across time: an inline result keyed
-by (session, query key) is served straight from the gateway until
-something invalidates it. The query key is the literal-safe normalized
-TEXT for arbitrary statements, and — round 12 — the merge path's
-spelling-insensitive SEMANTIC parse for statements in the canonical
-mergeable-aggregation shape (mrshare.semantic_result_key: conjunct
-order, IN-list vs OR-chain spelling, join operand order all hit one
-entry; anything observable — output aliases, column order, constants —
-keys apart, and the two key regimes are type-disjoint).
+by (session namespace, query) is served straight from the gateway until
+something invalidates it.
+
+The query part of the key is the analyzed plan ``session.sql()``
+returns, normalized (CTEs inlined, BETWEEN replaced, commutative join
+operands in a fixed order — plans/catalyst.py) and with a top literal
+LIMIT split off. Entries are bucketed by
+(namespace, ``semanticHash``, output column names, LIMIT), and a lookup
+confirms a candidate with ``sameResult``, because a 32-bit hash does not
+identify a plan. Catalyst's canonical form makes conjunct order,
+comparison direction and IN-list order one key; output names (which
+canonicalization erases) and column order key apart. Because the plan is
+resolved in the requesting session, the same text over a different or
+redefined temp view is a different key.
 
 Safety rules (all conservative):
 - only complete inline results are cached (sink jobs and truncated
@@ -31,9 +37,9 @@ Safety rules (all conservative):
 - entries expire after ``ttl_seconds`` and the table is LRU-bounded.
 
 At 100 TB this is the cheapest tier of the storage hierarchy: a repeat
-dashboard query costs a dict lookup instead of a cluster job; the
-bounded entry count and inline-rows-only rule keep the driver-memory
-footprint a few MB.
+dashboard query costs an analysis and a dict lookup instead of a
+cluster job; the bounded entry count and inline-rows-only rule keep the
+driver-memory footprint a few MB.
 """
 
 from __future__ import annotations
@@ -43,6 +49,13 @@ import threading
 import time
 from collections import OrderedDict
 from typing import Any, Optional
+
+from sparksql_server_spark.plans.catalyst import (
+    analyzed,
+    normalize,
+    output_names,
+    peel_limit,
+)
 
 # functions whose results depend on when/where the query runs.
 # reflect/java_method call arbitrary JVM code (UUID.randomUUID and
@@ -161,39 +174,41 @@ def keys_intersect(read_set: frozenset[str], tables: frozenset[str]) -> bool:
     return False
 
 
-def _normalize_outside_literals(sql: str) -> str:
-    """Collapse whitespace runs to one space OUTSIDE quoted literals
-    only. Whitespace INSIDE a string literal is query semantics —
-    ``WHERE name = 'a  b'`` and ``WHERE name = 'a b'`` are different
-    queries and must never share a cache key (ADVICE r4 high: the old
-    blanket ``re.sub(r'\\s+', ' ')`` silently served the first query's
-    result to the second). The in-literal classification is
-    ``mrshare._scan`` — ONE lexer for both the cache key and the merge
-    parser, so the escape rules (C-style backslash in single/double
-    quotes, none in backticks, doubled-quote close-reopen) can never
-    drift between the two."""
-    from sparksql_server_spark.server.mrshare import _scan
+class PlanKey(tuple):
+    """A result-cache key: the bucket (namespace, semantic hash, output
+    column names, LIMIT) as a tuple, plus the normalized plan. Two keys
+    are equal when their buckets are and Catalyst confirms the plans
+    with ``sameResult``."""
 
-    s = sql.strip()
-    _, instr = _scan(s)
-    out: list[str] = []
-    pending_ws = False
-    for i, c in enumerate(s):
-        if not instr[i] and c.isspace():
-            pending_ws = True
-            continue
-        if pending_ws:
-            # flush before ANY kept char — including an opening quote:
-            # dropping the space there would conflate ``'a' 'b'`` (two
-            # tokens) with ``'a''b'`` (one doubled-quote literal)
-            out.append(" ")
-            pending_ws = False
-        out.append(c)
-    return "".join(out)
+    def __new__(cls, ns: str, plan: Any, names: tuple, limit: Optional[int]):
+        self = super().__new__(cls, (ns, plan.semanticHash(), names, limit))
+        self.plan = plan
+        return self
+
+    __hash__ = tuple.__hash__
+
+    def __eq__(self, other: object) -> bool:
+        return (
+            isinstance(other, PlanKey)
+            and tuple.__eq__(self, other)
+            and bool(self.plan.sameResult(other.plan))
+        )
+
+
+def _plan_key(ns: str, sql: str, session: Any) -> Optional[PlanKey]:
+    """None when no key can be built — the statement does not analyze
+    (the job then reports the error) or its plan cannot be read: such a
+    request runs uncached rather than failing."""
+    try:
+        plan = analyzed(session.sql(sql))
+        rest, limit = peel_limit(normalize(plan))
+        return PlanKey(ns, rest, output_names(plan), limit)
+    except Exception:
+        return None
 
 
 class ResultCache:
-    """Thread-safe LRU + TTL map of (session, sql) -> result payload."""
+    """Thread-safe LRU + TTL map of :class:`PlanKey` -> result payload."""
 
     def __init__(
         self,
@@ -238,35 +253,21 @@ class ResultCache:
         self._taints: list[tuple[Optional[frozenset[str]], float]] = []
 
     @staticmethod
-    def _sql_key(sql: str):
-        """Semantic key when the statement is the canonical mergeable
-        aggregation shape (round 12: conjunct order, IN/BETWEEN
-        spelling, join operand order — the equivalences the merge path
-        proves sound — now also hit the result cache ACROSS batches),
-        else the literal-safe text normalization. Tuple and string
-        keys are type-disjoint, so the two regimes can never collide."""
-        from sparksql_server_spark.server.mrshare import semantic_result_key
-
-        sem = semantic_result_key(sql)
-        return sem if sem is not None else _normalize_outside_literals(sql)
-
-    @staticmethod
-    def key(session_id: Optional[str], sql: str) -> tuple:
-        # named sessions live under an "s:" prefix so the reserved
-        # namespaces ("" = clean shared, "root" = dirty root session)
-        # can never collide with a client-chosen session id (a client
-        # naming its session "" previously landed IN the shared
-        # namespace while dirty — wrong results both directions)
+    def key(session_id: Optional[str], sql: str, session: Any) -> Optional[PlanKey]:
+        """Key of ``sql`` as ``session`` resolves it. Named sessions
+        live under an "s:" prefix so the reserved namespaces ("" =
+        clean shared, "root" = dirty root session) can never collide
+        with a client-chosen session id."""
         ns = "" if session_id is None else f"s:{session_id}"
-        return (ns, ResultCache._sql_key(sql))
+        return _plan_key(ns, sql, session)
 
     @staticmethod
-    def key_root(sql: str) -> tuple:
+    def key_root(sql: str, session: Any) -> Optional[PlanKey]:
         """Private namespace for the ROOT session once a root command
         has run: root temp views shadow shared tables for root's own
         queries only, so its results must neither serve nor be served
         from the clean cross-session namespace."""
-        return ("root", ResultCache._sql_key(sql))
+        return _plan_key("root", sql, session)
 
     def invalidate_session(self, session_id: str) -> int:
         """Drop every private entry of a named session (called when the
@@ -304,40 +305,30 @@ class ResultCache:
             return dict(payload)
 
     def _limit_subsumed(self, key: tuple) -> Optional[dict]:
-        """LIMIT subsumption (round 12; lock held): a semantic-tuple
-        miss whose key differs from a cached entry ONLY in a smaller
-        LIMIT serves the cached rows' prefix. Sound because key
-        equality modulo LIMIT means the identical relation
-        presentation: with an ORDER BY the first n rows of a valid
-        LIMIT-m answer (m ≥ n, or no LIMIT) ARE the LIMIT-n answer up
-        to Spark's own tie freedom; without one, LIMIT n may return
-        ANY n relation rows — a prefix of actual relation rows
-        qualifies — the same freedom Spark exercises between two runs
-        of one text. Cached entries are always COMPLETE (truncated
-        results are never cached), so a source with fewer than n rows
-        IS the whole answer. O(≤max_entries) scan on the miss path
-        only; the semantic shapes ("sem"/"selp") both carry LIMIT as
-        the final tuple element, and text keys (str) never subsume."""
-        ns, sk = key[0], key[1]
-        if not isinstance(sk, tuple) or not isinstance(sk[-1], int):
+        """LIMIT subsumption (lock held): a miss on ``LIMIT n`` is
+        served the prefix of a cached entry whose key differs only in a
+        larger or absent LIMIT. Sound because the plans under the LIMIT
+        are the same result: with an ORDER BY the first n rows of a
+        valid LIMIT-m answer (m ≥ n, or no LIMIT) ARE the LIMIT-n answer
+        up to Spark's own tie freedom; without one, LIMIT n may return
+        ANY n relation rows — the same freedom Spark exercises between
+        two runs of one text. Cached entries are always COMPLETE
+        (truncated results are never cached), so a source with fewer
+        than n rows IS the whole answer. O(≤max_entries) scan on the
+        miss path only."""
+        if not isinstance(key, PlanKey) or key[3] is None:
             return None
-        n, base = sk[-1], sk[:-1]
+        n, base = key[3], key[:3]
         now = time.monotonic()
         for k2, (stored_at, payload, _tables) in self._entries.items():
-            if k2[0] != ns:
+            if not isinstance(k2, PlanKey) or k2[:3] != base:
                 continue
-            sk2 = k2[1]
-            if (
-                not isinstance(sk2, tuple)
-                or len(sk2) != len(sk)
-                or sk2[:-1] != base
-            ):
-                continue
-            lim2 = sk2[-1]
-            if lim2 is not None and (not isinstance(lim2, int) or lim2 < n):
+            if k2[3] is not None and k2[3] < n:
                 continue
             if now - stored_at > self.ttl:
                 continue  # expired source — its own direct get reaps it
+            if not k2.plan.sameResult(key.plan):
+                continue
             self._entries.move_to_end(k2)
             self.hits += 1
             self.limit_subsumed_hits += 1

@@ -24,11 +24,17 @@ from concurrent.futures import ThreadPoolExecutor, wait
 from pyspark.sql import SparkSession
 
 from sparksql_server_spark.plans.analysis import scan_fingerprints, scan_nodes
+from sparksql_server_spark.plans.catalyst import analyzed
 from sparksql_server_spark.server.batcher import preschedule
-from sparksql_server_spark.server.cache import CacheManager
+from sparksql_server_spark.server.cache import CacheManager, _dir_bytes
 from sparksql_server_spark.server.detector import detect_sharing
 from sparksql_server_spark.server.model import JobStatus, QueryJob, RewriteKind, SharingBag
-from sparksql_server_spark.server.mrshare import MergePlan, plan_merges
+from sparksql_server_spark.server.mrshare import (
+    MergePlan,
+    build_merge,
+    plan_merges,
+    reread,
+)
 
 MAX_INLINE_ROWS = 10_000
 
@@ -60,7 +66,6 @@ class BatchExecutor:
         # in the reference's own MRShare evaluation).
         self.enable_mrshare = enable_mrshare
         self.mrshare_min_bytes = mrshare_min_bytes
-        self._schema_memo: dict = {}
         # source fingerprint (table root dir) -> registered view name
         self.source_views = dict(source_views or {})
         # job-group namespace unique to THIS executor: job ids restart
@@ -164,34 +169,13 @@ class BatchExecutor:
         except Exception:
             return True
 
-    def _schema_fn_for(self, job: QueryJob):
-        """Memoized catalog lookup for NATURAL-join normalization
-        (round 12, VERDICT r11 ask #6): ``table -> column names`` via
-        the job's own session (mirror sessions see their client's temp
-        views), None on any resolution failure — the parser then
-        declines, conservative as ever. The memo lives one batch
-        (reset in run_batch)."""
-        session = job.session or self.spark
-        memo = self._schema_memo.setdefault(id(session), {})
-
-        def lookup(tbl: str):
-            if tbl not in memo:
-                try:
-                    memo[tbl] = [
-                        f.name for f in session.table(tbl).schema.fields
-                    ]
-                except Exception:
-                    memo[tbl] = None
-            return memo[tbl]
-
-        return lookup
-
     def analyze(self, job: QueryJob) -> None:
         """Resolve the job's plan (no execution) and fingerprint its scans."""
         if not self._is_query(job.sql):
             job.fingerprints = frozenset()
             return
         df = (job.session or self.spark).sql(job.sql)
+        job.plan = analyzed(df)
         job.fingerprints = scan_fingerprints(df)
         # one formatted-plan render feeds both admission inputs
         for location, ncols, fmt in scan_nodes(df):
@@ -203,10 +187,6 @@ class BatchExecutor:
     def run_batch(self, jobs: list[QueryJob]) -> list[SharingBag]:
         """Detect → rewrite → execute one batch; returns the bags for
         introspection/tests."""
-        # NATURAL-join schema memo is BATCH-scoped: a temp view replaced
-        # between batches must never feed a stale column set into a
-        # USING resolution (round 12)
-        self._schema_memo = {}
         for job in jobs:
             if not job.fingerprints:
                 try:
@@ -226,28 +206,32 @@ class BatchExecutor:
         merges: list[MergePlan] = []
         if self.enable_mrshare:
             for bag in bags:
-                if len(bag.jobs) < 2:
-                    continue
                 # prime-only jobs (jdbc_proxy window members) never
                 # merge: their demux result would be discarded — the
                 # client's own engine runs the full original statement
                 # — so a merge admitted on their count is pure waste.
                 # They still count for bag membership and cache
                 # admission below, which IS their sharing payoff.
-                for mp in plan_merges(
-                    [
-                        j
-                        for j in bag.jobs
-                        if j.status is JobStatus.QUEUED
-                        and not j.props.get("prime_only")
-                    ],
-                    schema_fn_for=self._schema_fn_for,
+                offered = [
+                    j
+                    for j in bag.jobs
+                    if j.status is JobStatus.QUEUED and not j.props.get("prime_only")
+                ]
+                # price the bag before reading any plan: a merge shares
+                # one of the bag's shared sources, so a bag whose
+                # largest is under the floor cannot hold a merge
+                if len(offered) < 2 or self._bytes_of(bag.shared_sources) < (
+                    self.mrshare_min_bytes
                 ):
+                    continue
+                for mp in plan_merges(offered):
                     if self._merge_source_bytes(mp) < self.mrshare_min_bytes:
                         continue  # scan too cheap to repay merge overhead
                     if self._materialize_merge(mp):
                         merges.append(mp)
                         bag.merges.append(mp)
+        for job in jobs:
+            job.plan = None  # planned: free the JVM-side plan
         merged_ids = {j.job_id for mp in merges for j in mp.jobs}
 
         for bag in bags:
@@ -293,39 +277,42 @@ class BatchExecutor:
 
     # -- MRShare merge (B8) ----------------------------------------------
 
+    def _bytes_of(self, sources) -> int:
+        """On-disk size of the largest of ``sources``. Non-local URIs
+        are priced through the Hadoop FileSystem (cache._dir_bytes), so
+        cluster sources admit by their real size instead of silently
+        declining. 0 when unknown — unknown declines."""
+        return max((_dir_bytes(s, self.spark) for s in sources), default=0)
+
     def _merge_source_bytes(self, mp: MergePlan) -> int:
         """On-disk size of the scan the merge would share: the member
         jobs' common plan-leaf fingerprint (single-table aggregations
-        have exactly one). Non-local URIs are priced through the Hadoop
-        FileSystem (cache._dir_bytes), so cluster sources admit by their
-        real size instead of silently declining. 0 when unknown —
-        unknown declines."""
-        from sparksql_server_spark.server.cache import _dir_bytes
-
+        have exactly one)."""
         sets = [set(j.fingerprints) for j in mp.jobs if j.fingerprints]
-        if not sets:
-            return 0
-        common = set.intersection(*sets)
-        return max((_dir_bytes(s, self.spark) for s in common), default=0)
+        return self._bytes_of(set.intersection(*sets)) if sets else 0
 
     def _materialize_merge(self, mp: MergePlan) -> bool:
         """Run the merged aggregate ONCE (the shared pass), persist the
-        result-set-sized relation, and point member jobs' execution at
-        their demux queries. Any failure rolls back to the unmerged
-        path — a declined/failed merge costs one plan attempt, never
+        result-sized relation, and point member jobs' execution at
+        their demux DataFrames. The members are re-analyzed here, so a
+        table dropped or replaced since admission is seen by all of them
+        alike. Any failure rolls back to the unmerged path — a
+        declined/failed merge costs one plan attempt, never
         correctness."""
         sess = mp.session or self.spark
         df = None
         try:
             from pyspark import StorageLevel
 
-            df = sess.sql(mp.merged_sql)
+            shapes = reread(mp, sess)
+            if shapes is None:
+                return False
+            df, demux = build_merge(sess, shapes)
             df.persist(StorageLevel.MEMORY_AND_DISK)
             df.count()  # materialize: the one shared scan+aggregate
-            df.createOrReplaceTempView(mp.view)
             mp.df = df
-            for job in mp.jobs:
-                job.props["rewritten_sql"] = mp.demux_sql[job.job_id]
+            for job, rows in zip(mp.jobs, demux):
+                job.props["demux"] = rows
             return True
         except Exception:
             if df is not None:
@@ -336,11 +323,8 @@ class BatchExecutor:
             return False
 
     def _release_merge(self, mp: MergePlan) -> None:
-        sess = mp.session or self.spark
-        try:
-            sess.catalog.dropTempView(mp.view)
-        except Exception:  # view never registered (failed merge)
-            pass
+        for job in mp.jobs:
+            job.props.pop("demux", None)
         if mp.df is not None:
             try:
                 mp.df.unpersist()
@@ -441,6 +425,32 @@ class BatchExecutor:
             return "deadline_urgent"
         return f"job{job.job_id}"
 
+    def _execute(self, job: QueryJob, df) -> None:
+        """Run ``df`` as ``job``'s result: a sink write or inline rows."""
+        if job.props.get("cancel_requested"):  # cancelled during planning
+            raise RuntimeError("cancelled")
+        output = job.props.get("output")
+        if output:
+            writer = df.write.mode(job.props.get("output_mode", "overwrite"))
+            part_by = job.props.get("partition_by")
+            if part_by:  # demux sink (A12): route rows by column value
+                cols = [part_by] if isinstance(part_by, str) else list(part_by)
+                writer = writer.partitionBy(*cols)
+            fmt = job.props.get("output_format", "parquet")
+            writer.format(fmt).save(output)
+            job.columns = list(df.columns)
+            job.n_rows = None  # not counted; sink write is the result
+        else:
+            rows = df.limit(MAX_INLINE_ROWS + 1).collect()
+            truncated = len(rows) > MAX_INLINE_ROWS
+            rows = rows[:MAX_INLINE_ROWS]
+            job.columns = list(df.columns)
+            job.dtypes = [t for _c, t in df.dtypes]
+            job.rows = [tuple(r) for r in rows]
+            job.n_rows = len(rows)
+            if truncated:
+                job.props["truncated"] = True
+
     def _run_job(self, job: QueryJob, pool_name: str) -> None:
         """Execute one job in the calling thread, inside a FAIR pool."""
         with job.state_lock:
@@ -475,44 +485,24 @@ class BatchExecutor:
                 # exists to avoid
                 job.status = JobStatus.DONE
                 return
-            # rewritten_sql = MRShare demux over the persisted merged
+            # demux = this member's rows over the persisted merged
             # aggregate (set by _materialize_merge); absent on the
             # normal path
-            rewritten = job.props.get("rewritten_sql")
-            try:
-                df = sess.sql(rewritten or job.sql)
-            except Exception:
-                if not rewritten:
-                    raise
-                # a demux query that fails to PLAN must not fail the
-                # member job: fall back to its original SQL on the
-                # normal path (correctness over sharing), and count it
-                # so a fallback can never silently hide a rewrite bug
-                self._bump_stat("mrshare_demux_fallbacks")
-                df = sess.sql(job.sql)
-            if job.props.get("cancel_requested"):  # cancelled during planning
-                raise RuntimeError("cancelled")
-            output = job.props.get("output")
-            if output:
-                writer = df.write.mode(job.props.get("output_mode", "overwrite"))
-                part_by = job.props.get("partition_by")
-                if part_by:  # demux sink (A12): route rows by column value
-                    cols = [part_by] if isinstance(part_by, str) else list(part_by)
-                    writer = writer.partitionBy(*cols)
-                fmt = job.props.get("output_format", "parquet")
-                writer.format(fmt).save(output)
-                job.columns = list(df.columns)
-                job.n_rows = None  # not counted; sink write is the result
+            demux = job.props.get("demux")
+            if demux is None:
+                self._execute(job, sess.sql(job.sql))
             else:
-                rows = df.limit(MAX_INLINE_ROWS + 1).collect()
-                truncated = len(rows) > MAX_INLINE_ROWS
-                rows = rows[:MAX_INLINE_ROWS]
-                job.columns = list(df.columns)
-                job.dtypes = [t for _c, t in df.dtypes]
-                job.rows = [tuple(r) for r in rows]
-                job.n_rows = len(rows)
-                if truncated:
-                    job.props["truncated"] = True
+                try:
+                    self._execute(job, demux)
+                except Exception:
+                    if job.props.get("cancel_requested"):
+                        raise
+                    # a failing demux must not fail the member job: fall
+                    # back to its original SQL on the normal path
+                    # (correctness over sharing), and count it so a
+                    # fallback can never silently hide a rewrite bug
+                    self._bump_stat("mrshare_demux_fallbacks")
+                    self._execute(job, sess.sql(job.sql))
             job.status = JobStatus.DONE
         except Exception as exc:
             job.status = JobStatus.ERROR

@@ -125,8 +125,8 @@ class WorkSharingServer:
             cache=CacheManager(spark, budget_bytes=cache_budget_bytes),
             source_views=source_view_map(sf_dir),
         )
-        # results served straight from the gateway for repeat query
-        # text (server/results.py); 0 entries disables it
+        # results served straight from the gateway for repeat queries
+        # (server/results.py); 0 entries disables it
         self.results = ResultCache(
             max_entries=result_cache_entries, ttl_seconds=result_cache_ttl
         )
@@ -722,7 +722,7 @@ class WorkSharingServer:
         against that session — its temp views shadow exactly what the
         client's HiveServer2 session shadows, MRShare merging keys by
         session so cross-session merges never mix namespaces
-        (mrshare.py: ``id(job.session)``), and the result cache keys
+        (mrshare.py groups members by session), and the result cache keys
         the session privately (``_dirty_sessions``). Nondeterministic
         bodies, GLOBAL temp views, and every other DDL shape demote as
         before. If the session is idle-reaped, ``session_for`` replays
@@ -866,8 +866,8 @@ class WorkSharingServer:
         if "output" in req:
             props["output"] = req["output"]
 
-        # result cache (server/results.py): repeat deterministic query
-        # text with inline results is served from the gateway; commands
+        # result cache (server/results.py): a repeat of a deterministic
+        # query with inline results is served from the gateway; commands
         # flush by write set after running (whole cache when the write
         # set can't be parsed)
         is_query = self.executor._is_query(sql)
@@ -928,13 +928,15 @@ class WorkSharingServer:
                     if sid is None
                     else sid not in self._dirty_sessions
                 )
+            # the key is the query's analyzed plan, resolved in the
+            # requesting session (its temp views are part of it)
             if clean:
-                rc_key = ResultCache.key(None, sql)
+                rc_key = ResultCache.key(None, sql, session)
             elif sid is None:
-                rc_key = ResultCache.key_root(sql)
+                rc_key = ResultCache.key_root(sql, session)
             else:
-                rc_key = ResultCache.key(sid, sql)
-            cached = self.results.get(rc_key)
+                rc_key = ResultCache.key(sid, sql, session)
+            cached = None if rc_key is None else self.results.get(rc_key)
             if cached is not None:
                 cached["cached"] = True
                 return cached

@@ -23,177 +23,152 @@ from sparksql_server_spark.server import (
     QueryJob,
     RewriteKind,
 )
-from sparksql_server_spark.server.mrshare import parse_agg_query, plan_merges
+from sparksql_server_spark.plans.catalyst import analyzed
+from sparksql_server_spark.server.mrshare import (
+    AggShape,
+    build_merge,
+    plan_merges,
+    read_plan,
+)
 from sparksql_server_spark.server.server import source_view_map
 from tests.conftest import SF_DIR
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _tables(spark):
+    """Plan-level tests resolve statements against the sf0.001 views."""
+    register_tables(spark, SF_DIR)
 
 
 # ---------------------------------------------------------------------------
 # parser: accepted shape
 
 
-def test_parse_canonical_shape():
-    p = parse_agg_query(
+def test_parse_canonical_shape(spark):
+    s = _read(
+        spark,
         "SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sq, "
         "count(*) AS n, count(DISTINCT l_suppkey) AS ns "
         "FROM lineitem WHERE l_discount > 0.02 "
-        "GROUP BY l_returnflag, l_linestatus"
+        "GROUP BY l_returnflag, l_linestatus",
     )
-    assert p is not None
-    assert p.table == "lineitem"
-    assert p.where == "l_discount > 0.02"
-    assert p.group_canon == ("l_linestatus", "l_returnflag")
-    kinds = [it[0] for it in p.items]
-    assert kinds == ["key", "key", "agg", "agg", "agg"]
-    assert [c[2:] for c in p.items[2][2]] == [("sum", "l_quantity", False)]
-    assert [c[2:] for c in p.items[3][2]] == [("count", None, False)]
-    assert [c[2:] for c in p.items[4][2]] == [("count", "l_suppkey", True)]
-    assert p.n_distinct_aggs == 1
+    assert isinstance(s, AggShape) and s.grouped
+    assert s.post == [] and s.where is not None
+    assert s.agg.groupingExpressions().size() == 2
+    assert s.agg.aggregateExpressions().size() == 5
+    assert s.n_distinct_aggs == 1
 
 
-def test_parse_expression_wrapped_aggregates():
+def test_parse_expression_wrapped_aggregates(spark):
     """The TPC-H q1 shape: scalar computation AROUND aggregate calls
-    must parse (CAST, arithmetic over two sums) — round-4 fix: these
-    previously declined, silently shrinking every merge."""
-    p = parse_agg_query(
+    (CAST, arithmetic over two sums) reads as the mergeable shape; a
+    nested aggregate is rejected by Spark's analysis before any read."""
+    s = _read(
+        spark,
         "SELECT l_returnflag, CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS q,"
         " sum(l_extendedprice * (1 - l_discount)) / count(*) AS avg_net"
-        " FROM lineitem GROUP BY l_returnflag"
+        " FROM lineitem GROUP BY l_returnflag",
     )
-    assert p is not None
-    aggs = [it for it in p.items if it[0] == "agg"]
-    assert len(aggs) == 2
-    assert [c[2] for c in aggs[0][2]] == ["sum"]
-    assert [c[2] for c in aggs[1][2]] == ["sum", "count"]
-    # nested aggregates still decline
-    assert (
-        parse_agg_query(
+    assert isinstance(s, AggShape) and s.agg.aggregateExpressions().size() == 3
+    with pytest.raises(Exception):
+        spark.sql(
             "SELECT l_returnflag, sum(count(l_tax)) AS s FROM lineitem GROUP BY l_returnflag"
         )
-        is None
-    )
 
 
-def test_parse_expression_key_and_case_folding():
-    a = parse_agg_query(
-        "SELECT substr(l_shipmode, 1, 2) AS m, max(l_tax) AS t "
-        "FROM lineitem GROUP BY substr(l_shipmode, 1, 2)"
+def test_parse_expression_key_and_case_folding(spark):
+    a = (
+        "SELECT substr(l_linestatus, 1, 2) AS m, max(l_tax) AS t "
+        "FROM lineitem GROUP BY substr(l_linestatus, 1, 2)"
     )
-    b = parse_agg_query(
-        "SELECT SUBSTR(l_shipmode,1,2) AS m, max(l_tax) AS t "
-        "FROM lineitem GROUP BY SUBSTR(l_shipmode,  1,2)"
+    b = (
+        "SELECT SUBSTR(l_linestatus,1,2) AS m, max(l_tax) AS t "
+        "FROM lineitem GROUP BY SUBSTR(l_linestatus,  1,2)"
     )
-    assert a is not None and b is not None
-    assert a.group_canon == b.group_canon  # whitespace/case-insensitive
-    # ...but string literals must stay case-SENSITIVE
-    c = parse_agg_query(
-        "SELECT l_shipmode AS m, count(*) AS n FROM lineitem "
-        "WHERE l_returnflag = 'A' GROUP BY l_shipmode"
+    assert _merge_sets(spark, [a, b]) == [[0, 1]]  # keys equal as expressions
+    # ...but string literals stay case-SENSITIVE
+    c = _read(
+        spark,
+        "SELECT l_linestatus AS m, count(*) AS n FROM lineitem "
+        "WHERE l_returnflag = 'A' GROUP BY l_linestatus",
     )
-    d = parse_agg_query(
-        "SELECT l_shipmode AS m, count(*) AS n FROM lineitem "
-        "WHERE l_returnflag = 'a' GROUP BY l_shipmode"
+    d = _read(
+        spark,
+        "SELECT l_linestatus AS m, count(*) AS n FROM lineitem "
+        "WHERE l_returnflag = 'a' GROUP BY l_linestatus",
     )
-    assert c.where != d.where
+    assert not c.where.semanticEquals(d.where)
 
 
 @pytest.mark.parametrize(
     "sql",
     [
-        # non-admissible joins, set ops, sorts, windows — not the
-        # mergeable shape (inner chains are since round 6, LEFT chains
-        # since round 7, two-table RIGHT + USING since round 8,
-        # FULL/SEMI/ANTI/CROSS since round 8b)
-        "SELECT c_name, count(*) AS n FROM customer c NATURAL JOIN orders o GROUP BY c_name",  # NATURAL needs schema knowledge
-        "SELECT l_orderkey, count(*) AS n FROM lineitem a JOIN lineitem b USING (l_orderkey + 1) GROUP BY l_orderkey",  # USING list must be plain columns
-        # (comma-FROM of bare tables ADMITS since round 12 — see
-        # test_comma_from_normalizes_to_join_chain; a comma whose
-        # operand is not a bare table still declines)
+        # joins, presentation clauses, subqueries, ordinal and ALL
+        # grouping, unaliased items, windows and commands
+        "SELECT c_name, count(*) AS n FROM customer c NATURAL JOIN orders o GROUP BY c_name",
+        "SELECT l_orderkey, count(*) AS n FROM lineitem a JOIN lineitem b USING (l_orderkey + 1) GROUP BY l_orderkey",
         "SELECT c_name, count(*) AS n FROM customer c, (SELECT 1 AS x) t WHERE c_custkey = x GROUP BY c_name",
-        # subquery operands admit since round 9b — but only ALIASED
-        # and DETERMINISTIC ones
-        "SELECT c_name, count(*) AS n FROM customer c JOIN (SELECT c_custkey FROM orders) ON c_custkey = c_custkey GROUP BY c_name",  # unaliased
-        "SELECT c_name, count(*) AS n FROM customer c JOIN (SELECT o_custkey, rand() AS r FROM orders) o2 ON c_custkey = o2.o_custkey GROUP BY c_name",  # nondeterministic
-        "SELECT c_name, count(*) AS n FROM customer c CROSS JOIN orders o ON c_custkey = o_custkey GROUP BY c_name",  # CROSS takes no condition
-        # presentation clauses outside the provably-rewritable surface
-        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag ORDER BY l_tax",  # non-key raw column
+        "SELECT c_name, count(*) AS n FROM customer c JOIN (SELECT c_custkey FROM orders) ON c_custkey = c_custkey GROUP BY c_name",
+        "SELECT c_name, count(*) AS n FROM customer c JOIN (SELECT o_custkey, rand() AS r FROM orders) o2 ON c_custkey = o2.o_custkey GROUP BY c_name",
+        "SELECT c_name, count(*) AS n FROM customer c CROSS JOIN orders o ON c_custkey = o_custkey GROUP BY c_name",
+        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag ORDER BY l_tax",
         "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag LIMIT ALL",
         "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag LIMIT 5 + 1",
-        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag HAVING n IN (SELECT 1)",  # subquery
-        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag HAVING sum(count(*)) > 5",  # nested agg
-        "SELECT l_returnflag, count(*) AS `n` FROM lineitem GROUP BY l_returnflag ORDER BY `n`",  # backticks
-        "SELECT l_returnflag, count(*) AS __m0_1 FROM lineitem GROUP BY l_returnflag",  # reserved namespace
-        # clause sequence violations
+        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag HAVING n IN (SELECT 1)",
+        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag HAVING sum(count(*)) > 5",
+        "SELECT l_returnflag, count(*) AS `n` FROM lineitem GROUP BY l_returnflag ORDER BY `n`",
+        "SELECT l_returnflag, count(*) AS __m0_1 FROM lineitem GROUP BY l_returnflag",
         "SELECT l_returnflag, count(*) AS n FROM lineitem ORDER BY n GROUP BY l_returnflag",
         "SELECT DISTINCT l_returnflag FROM lineitem GROUP BY l_returnflag",
         "SELECT l_returnflag, sum(sum(l_quantity)) OVER () AS s FROM lineitem GROUP BY l_returnflag",
-        # subquery in predicate
         "SELECT l_returnflag, count(*) AS n FROM lineitem WHERE l_orderkey IN (SELECT o_orderkey FROM orders) GROUP BY l_returnflag",
-        # ordinal / ALL group by
         "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY 1",
         "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY ALL",
-        # agg without alias — no stable demux name
         "SELECT l_returnflag, count(*) FROM lineitem GROUP BY l_returnflag",
-        # computed key without alias
         "SELECT substr(l_shipmode,1,2), count(*) AS n FROM lineitem GROUP BY substr(l_shipmode,1,2)",
-        # non-key non-agg select item
         "SELECT l_returnflag, l_tax, count(*) AS n FROM lineitem GROUP BY l_returnflag",
-        # scalar subquery in a select item (round-12 wrong-merge repro:
-        # the embedded max() belongs to the SUBQUERY — classifying it
-        # as an outer aggregate merged this N-row projection into a
-        # 1-row global aggregation)
         "SELECT (SELECT max(r_regionkey) FROM region) AS m FROM region",
         "SELECT (SELECT max(r_regionkey) FROM nation) AS m, count(*) AS n FROM region",
-        # subquery as a grouping expression — same conservative bar
         "SELECT (SELECT 1) AS g, count(*) AS n FROM region GROUP BY (SELECT 1)",
-        # no GROUP BY and a bare (non-aggregate) column
         "SELECT l_returnflag FROM lineitem",
-        # commands
         "CACHE TABLE lineitem",
     ],
 )
-def test_parse_declines(sql):
-    assert parse_agg_query(sql) is None
+def test_parse_declines(spark, executor, sql):
+    _never_wrong(spark, executor, sql)
 
 
-def test_parse_global_aggregate():
-    """No GROUP BY = global aggregation (GROUP BY ()): pure-aggregate
-    selects parse with an empty signature — round-4 extension."""
-    p = parse_agg_query(
+def test_parse_global_aggregate(spark):
+    """No GROUP BY = global aggregation: an empty key set."""
+    s = _read(
+        spark,
         "SELECT count(*) AS n, sum(l_quantity) AS q FROM lineitem"
-        " WHERE l_discount > 0.02"
+        " WHERE l_discount > 0.02",
     )
-    assert p is not None and p.group_canon == ()
-    assert all(it[0] == "agg" for it in p.items)
+    assert isinstance(s, AggShape) and not s.grouped and s.where is not None
 
 
-def test_keyword_inside_string_literal_is_not_structural():
-    p = parse_agg_query(
-        "SELECT l_shipmode AS m, count(*) AS n FROM lineitem "
-        "WHERE l_comment LIKE '%order by%' GROUP BY l_shipmode"
+def test_keyword_inside_string_literal_is_not_structural(spark):
+    s = _read(
+        spark,
+        "SELECT l_linestatus AS m, count(*) AS n FROM lineitem "
+        "WHERE l_returnflag LIKE '%order by%' GROUP BY l_linestatus",
     )
-    assert p is not None and "order by" in p.where
+    assert isinstance(s, AggShape) and s.post == []
+    assert "%order by%" in s.where.sql()
 
 
-def test_backslash_escaped_quote_does_not_flip_string_state():
-    """ADVICE r4 medium: Spark's default lexer treats backslash as a
-    C-style escape inside literals, so ``'don\\'t group by'`` is ONE
-    literal — the keyword inside it must not be read as structural,
-    and the clause slicing after it must stay correct."""
-    p = parse_agg_query(
-        r"SELECT l_shipmode AS m, count(*) AS n FROM lineitem "
-        r"WHERE l_comment LIKE '%don\'t group by%' GROUP BY l_shipmode"
+def test_backslash_escaped_quote_does_not_flip_string_state(spark):
+    """Spark's lexer reads ``'don\\'t group by'`` as ONE literal; the
+    plan reader sees the lexed plan, so the keyword inside stays data."""
+    s = _read(
+        spark,
+        r"SELECT l_linestatus AS m, count(*) AS n FROM lineitem "
+        r"WHERE l_returnflag LIKE '%don\'t group by%' GROUP BY l_linestatus",
     )
-    assert p is not None
-    assert p.where == r"l_comment LIKE '%don\'t group by%'"
-    assert p.group_canon == ("l_shipmode",)
-    # same with a structural keyword after an escaped backslash at the
-    # literal's end: '...\\' closes the string, WHERE must slice clean
-    p2 = parse_agg_query(
-        "SELECT l_shipmode AS m, count(*) AS n FROM lineitem "
-        "WHERE l_comment = 'x\\\\' GROUP BY l_shipmode"
-    )
-    assert p2 is not None and p2.where == "l_comment = 'x\\\\'"
+    assert isinstance(s, AggShape)
+    assert "t group by%" in s.where.sql()
+    assert s.agg.groupingExpressions().size() == 1
 
 
 # ---------------------------------------------------------------------------
@@ -257,6 +232,66 @@ def _run_and_compare(spark, executor, sqls, expect_merged_ids):
     return jobs, bags
 
 
+def _spellings(spark, executor, groups):
+    """Run every statement of ``groups`` in one batch: each group of two
+    or more merges into ONE plan, no plan spans two groups, and every
+    member's rows equal its standalone run."""
+    sqls = [q for g in groups for q in g]
+    ids, i = [], 0
+    for g in groups:
+        ids.append(set(range(i, i + len(g))))
+        i += len(g)
+    want = [s for s in ids if len(s) > 1]
+    jobs, bags = _run_and_compare(spark, executor, sqls, set().union(*want))
+    got = [{j.job_id for j in mp.jobs} for b in bags for mp in b.merges]
+    assert sorted(map(sorted, got)) == sorted(map(sorted, want))
+    return jobs
+
+
+def _read(spark, sql):
+    """The plan reader's verdict on ``sql``: a shape or a decline reason."""
+    return read_plan(analyzed(spark.sql(sql)))
+
+
+def _analyzed_jobs(spark, sqls):
+    return [
+        QueryJob(job_id=i, sql=q, plan=analyzed(spark.sql(q)))
+        for i, q in enumerate(sqls)
+    ]
+
+
+def _merged_physical(spark, sqls) -> str:
+    """Executed plan of the merged aggregate over ``sqls``' members."""
+    merged, _ = build_merge(spark, [_read(spark, q) for q in sqls])
+    return merged._jdf.queryExecution().executedPlan().toString()
+
+
+def _never_wrong(spark, executor, sql):
+    """``sql`` never merges wrongly: it is a command (never read: it
+    carries no plan), rejected by Spark's own analysis (the job fails
+    exactly as standalone), declined by the plan reader with a reason,
+    or read as the mergeable shape — and then an identical twin merges
+    with it and both return the standalone rows."""
+    if not executor._is_query(sql):
+        return
+    try:
+        verdict = _read(spark, sql)
+    except Exception:
+        return
+    if isinstance(verdict, str):
+        assert verdict
+        return
+    # only file-reading twins share a bag (and so a merge)
+    reads_files = bool(spark.sql(sql).inputFiles())
+    _run_and_compare(spark, executor, [sql, sql], {0, 1} if reads_files else set())
+
+
+def _merge_sets(spark, sqls):
+    """Member indices plan_merges puts in one plan (no cost split)."""
+    plans = plan_merges(_analyzed_jobs(spark, sqls), cost_split=False)
+    return sorted(sorted(j.job_id for j in mp.jobs) for mp in plans)
+
+
 SAME_SIG = [
     "SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sq, avg(l_extendedprice) AS ap"
     " FROM lineitem WHERE l_discount > 0.02 GROUP BY l_returnflag, l_linestatus",
@@ -275,8 +310,7 @@ def test_same_signature_merge_matches_independent(spark, executor):
     (bag,) = [b for b in bags if b.merges]
     assert len(bag.merges) == 1
     assert bag.rewrite is RewriteKind.MRSHARE
-    for j in jobs:
-        assert j.props["rewritten_sql"].lstrip().upper().startswith("SELECT")
+    assert executor.stats["mrshare_demux_fallbacks"] == 0
 
 
 def test_expression_wrapped_aggs_merge_matches_independent(spark, executor):
@@ -350,42 +384,37 @@ def test_global_aggregate_mandatory_row_on_empty_merged_input(spark, executor):
 # (demux-safe presentation clauses — reapplied over the merged view)
 
 
-def test_parse_presentation_clauses():
-    p = parse_agg_query(
+def test_parse_presentation_clauses(spark):
+    p = (
         "SELECT l_returnflag, count(*) AS n, sum(l_quantity) AS q FROM lineitem"
         " WHERE l_discount > 0.01 GROUP BY l_returnflag"
         " HAVING sum(l_quantity) > 10 ORDER BY q DESC, l_returnflag LIMIT 3"
     )
-    assert p is not None
-    assert p.having_seg is not None
-    assert len(p.order_seg) == 2 and p.limit == 3
-    # presentation clauses do NOT change the merge signature
-    q = parse_agg_query(
+    s = _read(spark, p)
+    assert [n.getClass().getSimpleName() for n in s.post] == [
+        "GlobalLimit", "LocalLimit", "Sort", "Filter",
+    ]
+    # presentation clauses do NOT change what merges
+    q = (
         "SELECT l_returnflag, count(*) AS n, sum(l_quantity) AS q FROM lineitem"
         " WHERE l_discount > 0.01 GROUP BY l_returnflag"
     )
-    assert p.signature == q.signature
+    assert _merge_sets(spark, [p, q]) == [[0, 1]]
 
 
-def test_parse_aliased_table_strips_qualifier():
-    """FROM lineitem l / FROM lineitem AS l: qualifiers are stripped so
-    differently-aliased members share one signature and re-emit under
-    the merged plain FROM."""
-    a = parse_agg_query(
+def test_parse_aliased_table_strips_qualifier(spark):
+    """FROM lineitem l / FROM lineitem AS l / FROM lineitem: the alias
+    is a SubqueryAlias that canonicalization erases, so all three read
+    one relation and merge."""
+    sqls = [
         "SELECT l.l_returnflag, sum(l.l_quantity) AS q FROM lineitem l"
-        " WHERE l.l_discount > 0.02 GROUP BY l.l_returnflag"
-    )
-    b = parse_agg_query(
+        " WHERE l.l_discount > 0.02 GROUP BY l.l_returnflag",
         "SELECT li.l_returnflag, sum(li.l_quantity) AS q FROM lineitem AS li"
-        " WHERE li.l_discount > 0.02 GROUP BY li.l_returnflag"
-    )
-    c = parse_agg_query(
+        " WHERE li.l_discount > 0.02 GROUP BY li.l_returnflag",
         "SELECT l_returnflag, sum(l_quantity) AS q FROM lineitem"
-        " WHERE l_discount > 0.02 GROUP BY l_returnflag"
-    )
-    assert a is not None and b is not None and c is not None
-    assert a.signature == b.signature == c.signature
-    assert a.where == b.where == c.where == "l_discount > 0.02"
+        " WHERE l_discount > 0.02 GROUP BY l_returnflag",
+    ]
+    assert _merge_sets(spark, sqls) == [[0, 1, 2]]
 
 
 PRESENTATION = [
@@ -467,46 +496,40 @@ def test_order_by_alias_shadowing_group_key_resolves_output_first(spark, executo
 
 
 def test_having_alias_reference_declines(spark, executor):
-    """HAVING's resolution order differs from ORDER BY's (child
-    attributes vs output aliases), so bare alias references in HAVING
-    keep the statement off the merge path rather than risk a
-    divergence."""
-    from sparksql_server_spark.server.mrshare import parse_agg_query
-
-    assert (
-        parse_agg_query(
-            "SELECT l_returnflag, count(*) AS n FROM lineitem"
-            " GROUP BY l_returnflag HAVING n > 5"
-        )
-        is None
-    )
-    # ...but group-key references in HAVING stay mergeable
+    """Catalyst resolves a bare select alias in HAVING (``HAVING n > 5``)
+    to the aggregate it names, so such members no longer need a text
+    decline: they merge, and each returns its standalone rows; group-key
+    references in HAVING merge as well."""
     sqls = [
+        "SELECT l_returnflag, count(*) AS n FROM lineitem"
+        " GROUP BY l_returnflag HAVING n > 5",
         "SELECT l_returnflag, count(*) AS n FROM lineitem"
         " GROUP BY l_returnflag HAVING l_returnflag <> 'N'",
         "SELECT l_returnflag, max(l_tax) AS t FROM lineitem GROUP BY l_returnflag",
     ]
-    _run_and_compare(spark, executor, sqls, {0, 1})
+    _run_and_compare(spark, executor, sqls, {0, 1, 2})
 
 
 def test_having_reuses_selected_aggregate_column(spark):
     """HAVING count(*) > 5 with count(*) AS n selected must NOT widen
-    the merged aggregate with a duplicate hidden column."""
-    jobs = [
-        QueryJob(
-            job_id=0,
-            sql="SELECT l_returnflag, count(*) AS n FROM lineitem"
-            " GROUP BY l_returnflag HAVING count(*) > 5",
-        ),
-        QueryJob(
-            job_id=1,
-            sql="SELECT l_returnflag, sum(l_tax) AS t FROM lineitem"
-            " GROUP BY l_returnflag",
-        ),
-    ]
-    (mp,) = plan_merges(jobs)
-    assert "__m0_h" not in mp.merged_sql  # reused __m0_1, no hidden col
-    assert "__m0_1 > 5" in mp.demux_sql[0]
+    the merged aggregate with a duplicate column: Catalyst's analyzer
+    already points the HAVING at ``n``."""
+    merged, _ = build_merge(
+        spark,
+        [
+            _read(
+                spark,
+                "SELECT l_returnflag, count(*) AS n FROM lineitem"
+                " GROUP BY l_returnflag HAVING count(*) > 5",
+            ),
+            _read(
+                spark,
+                "SELECT l_returnflag, sum(l_tax) AS t FROM lineitem"
+                " GROUP BY l_returnflag",
+            ),
+        ],
+    )
+    assert merged.columns == ["l_returnflag", "n", "t"]
 
 
 @pytest.fixture()
@@ -581,7 +604,7 @@ def test_unmergeable_shapes_run_normal_path(spark, executor):
         " FROM lineitem GROUP BY l_returnflag",  # window function — declined
     ]
     jobs, _ = _run_and_compare(spark, executor, sqls, {0, 1})
-    assert "rewritten_sql" not in jobs[2].props
+    assert jobs[2].props["merge_declined"] == "window"
 
 
 def test_merged_sink_output(tmp_path, spark, executor):
@@ -640,7 +663,8 @@ def test_small_scans_not_merged_by_default(spark):
     bags = ex.run_batch(jobs)
     assert all(not b.merges for b in bags)
     for job in jobs:
-        assert job.status is JobStatus.DONE and "rewritten_sql" not in job.props
+        # priced under the floor before any plan was read
+        assert job.status is JobStatus.DONE and "merge_declined" not in job.props
 
 
 def test_disabled_flag_runs_unmerged(spark):
@@ -698,16 +722,11 @@ def test_cross_client_merge_through_tcp_server(spark):
 
 
 def test_merged_plan_scans_table_once(spark, executor):
-    """The point of the merge: the merged SQL's physical plan contains
-    exactly ONE scan of the shared table, and demux queries scan only
-    the in-memory merged view (no file scan at all)."""
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
-    plans = plan_merges(jobs)
+    """The point of the merge: the merged aggregate's physical plan
+    contains exactly ONE scan of the shared table."""
+    plans = plan_merges(_analyzed_jobs(spark, SAME_SIG))
     assert len(plans) == 1 and len(plans[0].jobs) == 4
-    merged = spark.sql(plans[0].merged_sql)
-    physical = merged._jdf.queryExecution().executedPlan().toString()
-    assert physical.count("FileScan") + physical.count("Scan parquet") >= 1
-    # exactly one leaf scan node feeding everything
+    physical = _merged_physical(spark, SAME_SIG)
     import re as _re
 
     leaves = _re.findall(r"FileScan|BatchScan", physical)
@@ -728,20 +747,14 @@ STAR_JOIN = [
 ]
 
 
-def test_parse_join_chain_shapes():
-    p0 = parse_agg_query(STAR_JOIN[0])
-    p1 = parse_agg_query(STAR_JOIN[1])
-    assert p0 is not None and p0.table.startswith("join:")
-    assert p0.table == p1.table  # identical chain -> shared signature
-    # INNER JOIN spells the same signature
+def test_parse_join_chain_shapes(spark):
     alt = STAR_JOIN[0].replace("JOIN orders", "INNER JOIN orders")
-    assert parse_agg_query(alt).table == p0.table
-    # a different ON condition is a different signature
-    other = STAR_JOIN[0].replace(
+    other = STAR_JOIN[1].replace(
         "ON l_orderkey = o_orderkey", "ON l_orderkey = o_orderkey AND l_tax > 0"
     )
-    po = parse_agg_query(other)
-    assert po is not None and po.table != p0.table
+    # identical chain and its INNER spelling merge; a different ON
+    # condition is a different relation
+    assert _merge_sets(spark, [STAR_JOIN[0], STAR_JOIN[1], alt, other]) == [[0, 1, 2]]
 
 
 def test_star_join_members_merge_matches_independent(spark, executor):
@@ -816,7 +829,7 @@ def test_dp_splits_overcap_bag_instead_of_declining(spark, executor):
         _two_distinct_member(10),
         _two_distinct_member(11),
     ]
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
+    jobs = _analyzed_jobs(spark, sqls)
     plans = plan_merges(jobs)
     merged_ids = sorted(j.job_id for mp in plans for j in mp.jobs)
     assert merged_ids == list(range(11)), (
@@ -837,32 +850,32 @@ def test_dp_feasible_mixed_bag_merges_flat(spark, executor):
         _distinct_member(4, "l_suppkey"),
         _distinct_member(5, "l_partkey"),
     ]
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
+    jobs = _analyzed_jobs(spark, sqls)
     plans = plan_merges(jobs)
     assert len(plans) == 1 and len(plans[0].jobs) == 6
     _run_and_compare(spark, executor, sqls, {0, 1, 2, 3, 4, 5})
 
 
-def test_dp_member_cap_bounds_plan_width():
+def test_dp_member_cap_bounds_plan_width(spark):
     """|group| > max_members_per_merge is infeasible as one plan: 12
     members under a cap of 5 split into ceil(12/5)-ish merged plans,
     every one within the cap, all members still merged somewhere."""
     sqls = [_light_member(i) for i in range(12)]
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
+    jobs = _analyzed_jobs(spark, sqls)
     plans = plan_merges(jobs, max_members_per_merge=5)
     assert all(len(mp.jobs) <= 5 for mp in plans)
     assert sorted(j.job_id for mp in plans for j in mp.jobs) == list(range(12))
     assert len(plans) == 3
 
 
-def test_dp_all_light_bag_still_merges_flat():
+def test_dp_all_light_bag_still_merges_flat(spark):
     sqls = [_light_member(i) for i in range(10)]
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
+    jobs = _analyzed_jobs(spark, sqls)
     plans = plan_merges(jobs)
     assert len(plans) == 1 and len(plans[0].jobs) == 10
 
 
-def test_nondeterministic_member_never_merges():
+def test_nondeterministic_member_never_merges(spark):
     """A member whose text draws randomness must not merge (round 12):
     the CASE-folded rewrite re-evaluates the member's predicate once
     per aggregate, so `rand() < 0.5` would sample independently for
@@ -876,7 +889,7 @@ def test_nondeterministic_member_never_merges():
         "FROM lineitem WHERE rand() < 0.5 GROUP BY l_returnflag"
     )
     det = [_light_member(i) for i in range(2)]
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate([nondet, nondet, *det])]
+    jobs = _analyzed_jobs(spark, [nondet, nondet, *det])
     plans = plan_merges(jobs)
     merged_ids = sorted(j.job_id for mp in plans for j in mp.jobs)
     assert merged_ids == [2, 3], "rand() members stay out; the rest merge"
@@ -899,94 +912,50 @@ LEFT_STAR = [
 ]
 
 
-def test_parse_left_join_chain_shapes():
-    p0 = parse_agg_query(LEFT_STAR[0])
-    p1 = parse_agg_query(LEFT_STAR[1])
-    assert p0 is not None and p0.table.startswith("join:")
-    assert p0.table == p1.table  # identical LEFT chain -> shared signature
-    # LEFT OUTER JOIN spells the same signature
+def test_parse_left_join_chain_shapes(spark):
     alt = LEFT_STAR[0].replace("LEFT JOIN", "LEFT OUTER JOIN")
-    assert parse_agg_query(alt).table == p0.table
-    # join TYPE is part of the signature: the inner chain never merges
-    # with the left chain (different row multiplicity for unmatched rows)
     inner = LEFT_STAR[0].replace("LEFT JOIN", "JOIN")
-    pi = parse_agg_query(inner)
-    assert pi is not None and pi.table != p0.table
-    # FULL admits under its own token (round 8b) — never merging with
-    # LEFT; two-table RIGHT normalizes (see below)
-    pf = parse_agg_query(LEFT_STAR[0].replace("LEFT", "FULL OUTER"))
-    assert pf is not None and pf.table != p0.table
-    pr = parse_agg_query(LEFT_STAR[0].replace("LEFT", "RIGHT"))
-    assert pr is not None and pr.table != p0.table  # keeps-orders ≠ keeps-customers
+    full = LEFT_STAR[0].replace("LEFT", "FULL OUTER")
+    right = LEFT_STAR[0].replace("LEFT", "RIGHT")  # keeps orders, not customers
+    sqls = [LEFT_STAR[0], LEFT_STAR[1], alt, inner, full, right]
+    # the join TYPE is part of the relation: only the LEFT spellings merge
+    assert _merge_sets(spark, sqls) == [[0, 1, 2]]
 
 
-def test_parse_right_join_normalizes_to_left():
-    """Round-8 (VERDICT r7 ask #3): a two-table RIGHT chain is the
-    mirrored LEFT chain — same signature AND same emitted FROM text,
-    so RIGHT members ride the r7 LEFT machinery unchanged."""
-    r = parse_agg_query(
+def test_parse_right_join_normalizes_to_left(spark):
+    """A RIGHT join reads as the mirrored LEFT join (plans/catalyst.py
+    order_joins), so RIGHT and LEFT spellings of one relation merge."""
+    sqls = [
         "SELECT c_mktsegment, count(o_orderkey) AS n FROM orders o"
-        " RIGHT JOIN customer c ON c_custkey = o_custkey GROUP BY c_mktsegment"
-    )
-    l = parse_agg_query(
-        "SELECT c_mktsegment, count(o_orderkey) AS n FROM customer c"
-        " LEFT JOIN orders o ON c_custkey = o_custkey GROUP BY c_mktsegment"
-    )
-    assert r is not None and l is not None
-    assert r.table == l.table and r.table.startswith("join:")
-    assert r.from_raw == l.from_raw
-    # RIGHT OUTER spells the same signature
-    r2 = parse_agg_query(
-        "SELECT c_mktsegment, count(o_orderkey) AS n FROM orders o"
+        " RIGHT JOIN customer c ON c_custkey = o_custkey GROUP BY c_mktsegment",
+        "SELECT c_mktsegment, sum(o_totalprice) AS s FROM customer c"
+        " LEFT JOIN orders o ON c_custkey = o_custkey GROUP BY c_mktsegment",
+        "SELECT c_mktsegment, count(*) AS m FROM orders o"
         " RIGHT OUTER JOIN customer c ON c_custkey = o_custkey"
-        " GROUP BY c_mktsegment"
-    )
-    assert r2.table == r.table
-    # RIGHT deeper in a chain admits since r8c: the preceding chain
-    # re-associates into a parenthesized LEFT-operand
-    deep = parse_agg_query(
-        "SELECT c_name, count(*) AS n FROM customer c"
-        " JOIN nation n ON c_nationkey = n_nationkey"
-        " RIGHT JOIN orders o ON c_custkey = o_custkey GROUP BY c_name"
-    )
-    assert (
-        deep is not None
-        and deep.from_raw.startswith("orders o LEFT JOIN (customer c")
-    )
+        " GROUP BY c_mktsegment",
+    ]
+    assert _merge_sets(spark, sqls) == [[0, 1, 2]]
 
 
-def test_parse_using_join_admitted():
-    """Round-8 (VERDICT r7 ask #3): USING joins are admitted natively —
-    the USING text is part of the signature and re-emitted verbatim, so
-    the coalesced bare column resolves in the merged statement exactly
-    as it did standalone; ON members never cross-merge with USING."""
-    u1 = parse_agg_query(
+def test_parse_using_join_admitted(spark):
+    """USING joins read as the mergeable shape; case/space variants of
+    one USING list merge, while the ON spelling (whose key column is
+    not the coalesced USING column) stays a different relation."""
+    sqls = [
         "SELECT l_orderkey, count(*) AS n FROM lineitem a"
-        " JOIN lineitem b USING (l_orderkey) GROUP BY l_orderkey"
-    )
-    u2 = parse_agg_query(
+        " JOIN lineitem b USING (l_orderkey) GROUP BY l_orderkey",
         "SELECT l_orderkey, max(b.l_tax) AS mt FROM lineitem a"
-        " JOIN lineitem b USING ( L_ORDERKEY ) GROUP BY l_orderkey"
-    )
-    assert u1 is not None and u2 is not None
-    assert u1.table == u2.table  # case/space variants share the signature
-    on_eq = parse_agg_query(
+        " JOIN lineitem b USING ( L_ORDERKEY ) GROUP BY l_orderkey",
         "SELECT a.l_orderkey AS l_orderkey, count(*) AS n FROM lineitem a"
-        " JOIN lineitem b ON a.l_orderkey = b.l_orderkey GROUP BY a.l_orderkey"
-    )
-    assert on_eq is not None and on_eq.table != u1.table
-    # LEFT ... USING and RIGHT ... USING both admit (RIGHT normalized;
-    # the USING column's null-extension side is preserved by the swap)
-    lu = parse_agg_query(
+        " JOIN lineitem b ON a.l_orderkey = b.l_orderkey GROUP BY a.l_orderkey",
+    ]
+    assert _merge_sets(spark, sqls) == [[0, 1]]
+    lu = _read(
+        spark,
         "SELECT l_orderkey, count(*) AS n FROM lineitem a"
-        " LEFT JOIN lineitem b USING (l_orderkey) GROUP BY l_orderkey"
+        " LEFT JOIN lineitem b USING (l_orderkey) GROUP BY l_orderkey",
     )
-    ru = parse_agg_query(
-        "SELECT l_orderkey, count(*) AS n FROM lineitem b"
-        " RIGHT JOIN lineitem a USING (l_orderkey) GROUP BY l_orderkey"
-    )
-    assert lu is not None and ru is not None
-    assert ru.table == lu.table and ru.from_raw == lu.from_raw
+    assert isinstance(lu, AggShape)
 
 
 def test_left_join_members_merge_matches_independent(spark, executor):
@@ -1010,11 +979,10 @@ def test_left_and_inner_join_members_do_not_cross_merge(spark, executor):
 def test_merged_left_join_plan_scans_each_table_once(spark, executor):
     import re as _re
 
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(LEFT_STAR)]
+    jobs = _analyzed_jobs(spark, LEFT_STAR)
     plans = plan_merges(jobs)
     assert len(plans) == 1 and len(plans[0].jobs) == 2
-    merged = spark.sql(plans[0].merged_sql)
-    physical = merged._jdf.queryExecution().executedPlan().toString()
+    physical = _merged_physical(spark, [j.sql for j in plans[0].jobs])
     assert physical.count("customer.parquet") == 1
     assert physical.count("orders.parquet") == 1
 
@@ -1060,11 +1028,10 @@ def test_merged_join_plan_scans_each_table_once(spark, executor):
     unmerged)."""
     import re as _re
 
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(STAR_JOIN)]
+    jobs = _analyzed_jobs(spark, STAR_JOIN)
     plans = plan_merges(jobs)
     assert len(plans) == 1 and len(plans[0].jobs) == 2
-    merged = spark.sql(plans[0].merged_sql)
-    physical = merged._jdf.queryExecution().executedPlan().toString()
+    physical = _merged_physical(spark, [j.sql for j in plans[0].jobs])
     leaves = _re.findall(r"FileScan|BatchScan", physical)
     assert len(leaves) == 2
     assert physical.count("lineitem.parquet") == 1
@@ -1075,154 +1042,59 @@ def test_merged_join_plan_scans_each_table_once(spark, executor):
 # round-8b widening: FULL / SEMI / ANTI / CROSS admission
 
 
-def test_parse_full_semi_anti_cross_join_shapes():
-    """Each spelling normalizes to its own signature token (so types
-    never cross-merge) and re-emits canonical Spark SQL; NATURAL and
-    comma joins still decline."""
-    f1 = parse_agg_query(
-        "SELECT c_mktsegment, count(*) AS n FROM customer c"
-        " FULL OUTER JOIN orders o ON c_custkey = o_custkey"
-        " GROUP BY c_mktsegment"
-    )
-    f2 = parse_agg_query(
-        "SELECT c_mktsegment, count(*) AS n FROM customer c"
-        " full join orders o ON c_custkey = o_custkey"
-        " GROUP BY c_mktsegment"
-    )
-    assert f1 is not None and f1.table == f2.table
-    assert "FULL JOIN" in f1.from_raw
-    l1 = parse_agg_query(
-        "SELECT c_mktsegment, count(*) AS n FROM customer c"
-        " LEFT JOIN orders o ON c_custkey = o_custkey GROUP BY c_mktsegment"
-    )
-    assert l1 is not None and l1.table != f1.table  # FULL never merges with LEFT
-
-    s1 = parse_agg_query(
+def test_parse_full_semi_anti_cross_join_shapes(spark):
+    semi = (
         "SELECT o_orderpriority, count(*) AS n FROM orders o"
         " LEFT SEMI JOIN lineitem l ON o.o_orderkey = l.l_orderkey"
         " GROUP BY o_orderpriority"
     )
-    s2 = parse_agg_query(
-        "SELECT o_orderpriority, count(*) AS n FROM orders o"
-        " SEMI JOIN lineitem l ON o.o_orderkey = l.l_orderkey"
-        " GROUP BY o_orderpriority"
-    )
-    a1 = parse_agg_query(
-        "SELECT o_orderpriority, count(*) AS n FROM orders o"
-        " ANTI JOIN lineitem l ON o.o_orderkey = l.l_orderkey"
-        " GROUP BY o_orderpriority"
-    )
-    assert s1 is not None and s1.table == s2.table  # bare SEMI == LEFT SEMI
-    assert a1 is not None and a1.table != s1.table  # ANTI never merges with SEMI
-    assert "LEFT SEMI JOIN" in s1.from_raw and "LEFT ANTI JOIN" in a1.from_raw
-
-    x1 = parse_agg_query(
+    bare_semi = semi.replace("LEFT SEMI", "SEMI")
+    anti = semi.replace("LEFT SEMI", "ANTI")
+    # bare SEMI == LEFT SEMI; ANTI never merges with SEMI
+    assert _merge_sets(spark, [semi, bare_semi, anti]) == [[0, 1]]
+    cross = (
         "SELECT r_name, count(*) AS n FROM region r CROSS JOIN nation n"
         " GROUP BY r_name"
     )
-    assert x1 is not None and "CROSS JOIN" in x1.from_raw
-    # a conditioned CROSS segment is not SQL — decline, as Spark would
-    assert (
-        parse_agg_query(
-            "SELECT r_name, count(*) AS n FROM region r"
-            " CROSS JOIN nation n ON n_regionkey = r_regionkey GROUP BY r_name"
-        )
-        is None
-    )
-    assert (
-        parse_agg_query(
-            "SELECT r_name, count(*) AS n FROM region r"
-            " NATURAL JOIN nation n GROUP BY r_name"
-        )
-        is None
-    )
-    # round 12: comma-FROM no longer declines — it normalizes to the
-    # explicit inner chain and shares with the JOIN spelling
-    comma = parse_agg_query(
-        "SELECT r_name, count(*) AS n FROM region r, nation n"
-        " WHERE n_regionkey = r_regionkey GROUP BY r_name"
-    )
-    explicit = parse_agg_query(
+    assert isinstance(_read(spark, cross), AggShape)
+    # FULL commutes: both operand orders merge
+    full = [
         "SELECT r_name, count(*) AS n FROM region r"
-        " JOIN nation n ON n_regionkey = r_regionkey GROUP BY r_name"
-    )
-    assert comma is not None and explicit is not None
-    assert comma.table == explicit.table and comma.where is None
-    # RIGHT inside a longer chain (here alongside FULL) admits since
-    # r8c: the accumulated prefix parenthesizes into the LEFT operand
-    deep = parse_agg_query(
-        "SELECT r_name, count(*) AS n FROM region r"
-        " FULL JOIN nation n ON n_regionkey = r_regionkey"
-        " RIGHT JOIN nation m ON m.n_nationkey = n.n_nationkey"
-        " GROUP BY r_name"
-    )
-    assert deep is not None
-    assert "LEFT JOIN (" in deep.from_raw and "FULL JOIN" in deep.from_raw
-
-
-def test_join_keywords_inside_literals_survive():
-    """Keyword rewrites and whitespace collapse are literal-aware: a
-    quoted ON literal containing 'inner join' / 'right join' / runs of
-    spaces must emit byte-for-byte and must NOT fold into the token a
-    real keyword folds into (else members differing only inside a
-    literal would share a signature and falsely merge)."""
-    cases = {
-        "customer c JOIN orders o ON o_comment = 'a right join b'"
-        " AND c_custkey = o_custkey": "'a right join b'",
-        "customer c JOIN orders o ON o_comment = 'use inner join here'"
-        " AND c_custkey = o_custkey": "'use inner join here'",
-        "customer c JOIN orders o ON o_comment = 'left_join me'"
-        " AND c_custkey = o_custkey": "'left_join me'",
-        "customer c JOIN orders o ON o_comment = 'two  spaces'"
-        " AND c_custkey = o_custkey": "'two  spaces'",
-    }
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    for frm, literal in cases.items():
-        sig_emit = _parse_join_from(frm)
-        assert sig_emit is not None and literal in sig_emit[1], (frm, sig_emit)
-    # a literal spelling of the internal token never collides with the
-    # real keyword's signature
-    s_lit = _parse_join_from("a JOIN b ON c = 'x right_join y'")
-    s_kw = _parse_join_from("a JOIN b ON c = 'x right join y'")
-    assert s_lit is not None and s_kw is not None and s_lit[0] != s_kw[0]
-    # literal whitespace is signature-distinguishing end to end
-    q1 = parse_agg_query(
-        "SELECT count(*) AS n FROM customer c JOIN orders o"
-        " ON o_comment = 'a b' AND c_custkey = o_custkey"
-    )
-    q2 = parse_agg_query(
-        "SELECT count(*) AS n FROM customer c JOIN orders o"
-        " ON o_comment = 'a  b' AND c_custkey = o_custkey"
-    )
-    assert q1 is not None and q2 is not None and q1.table != q2.table
-
-
-def test_signature_token_in_member_text_declines():
-    """Member text that literally spells an internal signature token
-    outside a string (``a left_join b on ...`` — a syntax error
-    standalone, or a table NAMED like the token) must decline, never
-    parse as a cut and silently share the valid spelling's signature
-    and merged emission (ADVICE r8 low)."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    bad = [
-        "a left_join b on a.x = b.x",
-        "a right_join b on a.x = b.x",
-        "a full_join b on a.x = b.x",
-        "a semi_join b on a.x = b.x",
-        "a anti_join b on a.x = b.x",
-        "a cross_join b",
-        # token anywhere in the chain, not just as the first cut
-        "a JOIN b ON a.x = b.x left_join c on b.y = c.y",
-        # token as a table name reference
-        "left_join JOIN b ON left_join.x = b.x",
+        " FULL JOIN nation n ON n_regionkey = r_regionkey GROUP BY r_name",
+        "SELECT r_name, max(n_name) AS m FROM nation n"
+        " FULL JOIN region r ON n_regionkey = r_regionkey GROUP BY r_name",
     ]
-    for frm in bad:
-        assert _parse_join_from(frm) is None, frm
-    # inside a string literal the token is data, not a cut — still parses
-    ok = _parse_join_from("a JOIN b ON c = 'left_join' AND a.x = b.x")
-    assert ok is not None and "'left_join'" in ok[1]
+    assert _merge_sets(spark, full) == [[0, 1]]
+
+
+def test_join_keywords_inside_literals_survive(spark):
+    """Keywords and whitespace inside literals are data: members that
+    differ only inside a literal never merge."""
+    sqls = [
+        "SELECT count(*) AS n FROM customer c JOIN orders o"
+        " ON o_orderstatus = 'a b' AND c_custkey = o_custkey",
+        "SELECT count(*) AS n FROM customer c JOIN orders o"
+        " ON o_orderstatus = 'a  b' AND c_custkey = o_custkey",
+        "SELECT count(*) AS n FROM customer c JOIN orders o"
+        " ON o_orderstatus = 'a right join b' AND c_custkey = o_custkey",
+        "SELECT count(*) AS n FROM customer c JOIN orders o"
+        " ON o_orderstatus = 'a right_join b' AND c_custkey = o_custkey",
+    ]
+    assert _merge_sets(spark, sqls) == []
+
+
+def test_signature_token_in_member_text_declines(spark):
+    """Text spelling a join keyword as an identifier (``a left_join b``)
+    is not SQL: Spark rejects it at analysis, so the job fails as it
+    would standalone and the plan reader never sees it."""
+    bad = [
+        "SELECT count(*) AS n FROM customer left_join orders on c_custkey = o_custkey",
+        "SELECT count(*) AS n FROM customer JOIN orders ON c_custkey = o_custkey"
+        " semi_join nation on c_nationkey = n_nationkey",
+    ]
+    for sql in bad:
+        with pytest.raises(Exception):
+            spark.sql(sql)
 
 
 FULL_STAR = [
@@ -1291,11 +1163,10 @@ def test_cross_join_members_merge_matches_independent(spark, executor):
 
 
 def test_merged_full_join_plan_scans_each_table_once(spark, executor):
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(FULL_STAR)]
+    jobs = _analyzed_jobs(spark, FULL_STAR)
     plans = plan_merges(jobs)
     assert len(plans) == 1 and len(plans[0].jobs) == 2
-    merged = spark.sql(plans[0].merged_sql)
-    physical = merged._jdf.queryExecution().executedPlan().toString()
+    physical = _merged_physical(spark, [j.sql for j in plans[0].jobs])
     assert physical.count("customer.parquet") == 1
     assert physical.count("orders.parquet") == 1
 
@@ -1329,129 +1200,54 @@ def test_deep_right_join_members_merge_matches_independent(spark, executor):
 # segments (VERDICT r8 ask #1 — ORM/BI SQL varies join order freely)
 
 
-def test_inner_join_order_canonicalization_signatures():
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    # permuted 3-table inner chains share one signature
-    a = _parse_join_from(
-        "customer c JOIN orders o ON c_custkey = o_custkey"
-        " JOIN nation n ON c.c_nationkey = n.n_nationkey"
-    )
-    b = _parse_join_from(
-        "customer c JOIN nation n ON c.c_nationkey = n.n_nationkey"
-        " JOIN orders o ON c_custkey = o_custkey"
-    )
-    assert a is not None and b is not None and a[0] == b[0]
-    # the EMISSION stays each member's own (valid) spelling
-    assert a[1] != b[1]
-    # two-table head swap shares; AS-fold shares
-    c1 = _parse_join_from("customer c JOIN orders o ON c_custkey = o_custkey")
-    c2 = _parse_join_from("orders o JOIN customer c ON c_custkey = o_custkey")
-    c3 = _parse_join_from("customer AS c JOIN orders o ON c_custkey = o_custkey")
-    assert c1[0] == c2[0] == c3[0]
-    # different alias = different signature (member refs would not resolve)
-    c4 = _parse_join_from("customer x JOIN orders o ON x.c_custkey = o_custkey")
-    assert c4[0] != c1[0]
-    # differing ON conditions never share
-    d2 = _parse_join_from(
-        "customer c JOIN orders o ON c_custkey = o_custkey AND o_totalprice > 5"
-    )
-    assert d2[0] != c1[0]
-    # LEFT/FULL/SEMI/ANTI boundaries do NOT commute
-    x = _parse_join_from("customer c LEFT JOIN orders o ON c_custkey = o_custkey")
-    y = _parse_join_from("orders o LEFT JOIN customer c ON c_custkey = o_custkey")
-    assert x[0] != y[0]
-    # FULL is symmetric as a bag of named tuples — mirror spellings share
-    f1 = _parse_join_from("customer c FULL JOIN orders o ON c_custkey = o_custkey")
-    f2 = _parse_join_from("orders o FULL JOIN customer c ON c_custkey = o_custkey")
-    assert f1[0] == f2[0]
-    # ...but SEMI/ANTI (and LEFT, above) stay ordered
-    s1 = _parse_join_from("orders o SEMI JOIN lineitem l ON o_orderkey = l_orderkey")
-    s2 = _parse_join_from("lineitem l SEMI JOIN orders o ON o_orderkey = l_orderkey")
-    assert s1[0] != s2[0]
-    # permutations must not cross a boundary: moving a table from the
-    # post-LEFT segment into the pre-LEFT segment changes semantics
-    p = _parse_join_from(
-        "customer c JOIN orders o ON c1 = c1"
-        " LEFT JOIN nation n ON c2 = c2 JOIN region r ON c3 = c3"
-    )
-    q = _parse_join_from(
-        "customer c JOIN region r ON c3 = c3 JOIN orders o ON c1 = c1"
-        " LEFT JOIN nation n ON c2 = c2"
-    )
-    assert p[0] != q[0]
-    # ...but permuting WITHIN the post-boundary segment shares
-    p2 = _parse_join_from(
-        "customer c LEFT JOIN nation n ON c2 = c2"
-        " JOIN region r ON c3 = c3 JOIN orders o ON c1 = c1"
-    )
-    q2 = _parse_join_from(
-        "customer c LEFT JOIN nation n ON c2 = c2"
-        " JOIN orders o ON c1 = c1 JOIN region r ON c3 = c3"
-    )
-    assert p2[0] == q2[0]
-    # the r8 two-table RIGHT/LEFT mirror still shares structurally
-    r = _parse_join_from("orders o RIGHT JOIN customer c ON c_custkey = o_custkey")
-    left = _parse_join_from("customer c LEFT JOIN orders o ON c_custkey = o_custkey")
-    assert r[0] == left[0]
-    # USING vs ON never share; permuted USING chains do share
-    u1 = _parse_join_from("lineitem a JOIN lineitem b USING (l_orderkey)")
-    u2 = _parse_join_from("lineitem b JOIN lineitem a USING (l_orderkey)")
-    assert u1[0] == u2[0]
-    on_eq = _parse_join_from("lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey")
-    assert on_eq[0] != u1[0]
+def test_inner_join_order_canonicalization_signatures(spark):
+    """Operand order of a two-table inner or FULL join is erased, and
+    RIGHT mirrors to LEFT; LEFT, SEMI and ANTI operands stay ordered,
+    and a different ON condition is a different relation."""
+    head = "SELECT o_orderpriority, count(*) AS n FROM "
+    tail = " GROUP BY o_orderpriority"
+    froms = [
+        "customer c JOIN orders o ON c_custkey = o_custkey",
+        "orders o JOIN customer c ON c_custkey = o_custkey",
+        "customer AS x JOIN orders o ON x.c_custkey = o_custkey",
+        "customer c JOIN orders o ON c_custkey = o_custkey AND o_totalprice > 5",
+    ]
+    assert _merge_sets(spark, [head + f + tail for f in froms]) == [[0, 1, 2]]
+    left = [
+        "customer c LEFT JOIN orders o ON c_custkey = o_custkey",
+        "orders o RIGHT JOIN customer c ON c_custkey = o_custkey",
+        "orders o LEFT JOIN customer c ON c_custkey = o_custkey",
+    ]
+    assert _merge_sets(spark, [head + f + tail for f in left]) == [[0, 1]]
 
 
-def test_parse_derived_table_from_member():
-    """Round-9 (VERDICT r8 ask #2): ``FROM (SELECT …) t`` is admitted
-    as one opaque signature token — identical inner text modulo
-    case/whitespace shares; alias is stripped like a single-table
-    alias; joined/nondeterministic/non-SELECT derived text declines."""
+def test_parse_derived_table_from_member(spark):
+    """``FROM (SELECT …) t``: the derived table is part of the relation
+    (its alias is not), so spellings of one inner query merge and a
+    different inner predicate or literal never does."""
     base = (
         "SELECT k, count(*) AS n FROM (SELECT l_returnflag AS k,"
         " l_quantity FROM lineitem WHERE l_discount > 0.01) t GROUP BY k"
     )
-    p = parse_agg_query(base)
-    assert p is not None and p.table.startswith("derived:")
-    # case/whitespace/alias variations share the signature
-    q = parse_agg_query(
+    sqls = [
+        base,
         "SELECT k, sum(l_quantity) AS s FROM (select l_returnflag as K,"
-        "   l_quantity from LINEITEM where l_discount > 0.01) x GROUP BY k"
-    )
-    assert q is not None and q.table == p.table
-    # differing inner text (predicate, literal case) never shares
-    assert parse_agg_query(base.replace("0.01", "0.02")).table != p.table
-    l1 = parse_agg_query(
+        "   l_quantity from LINEITEM where l_discount > 0.01) x GROUP BY k",
+        base.replace("0.01", "0.02"),
+    ]
+    assert _merge_sets(spark, sqls) == [[0, 1]]
+    lit = [
         "SELECT k, count(*) AS n FROM (SELECT l_returnflag AS k FROM"
-        " lineitem WHERE l_returnflag = 'A') t GROUP BY k"
-    )
-    l2 = parse_agg_query(
+        " lineitem WHERE l_returnflag = 'A') t GROUP BY k",
         "SELECT k, count(*) AS n FROM (SELECT l_returnflag AS k FROM"
-        " lineitem WHERE l_returnflag = 'a') t GROUP BY k"
-    )
-    assert l1.table != l2.table
-    # alias qualifiers strip so differently-aliased members share
-    aq = parse_agg_query(
-        "SELECT t.k AS k, count(*) AS n FROM (SELECT l_returnflag AS k"
-        " FROM lineitem) t WHERE t.k > 'A' GROUP BY t.k"
-    )
-    assert aq is not None and aq.where == "k > 'A'"
-    # declines: nondeterministic inner, derived joined to anything,
-    # non-SELECT parenthesized member
-    assert parse_agg_query(
+        " lineitem WHERE l_returnflag = 'a') t GROUP BY k",
+    ]
+    assert _merge_sets(spark, lit) == []
+    assert _read(
+        spark,
         "SELECT k, count(*) AS n FROM (SELECT l_returnflag AS k, rand()"
-        " AS r FROM lineitem) t GROUP BY k"
-    ) is None
-    # two derived operands JOINED is no longer a derived-FROM member —
-    # it parses as a join-shaped member since round 9b
-    joined = parse_agg_query(
-        "SELECT k, count(*) AS n FROM (SELECT 1 AS k) a JOIN"
-        " (SELECT 2 AS j) b ON k = j GROUP BY k"
-    )
-    assert joined is not None and joined.table.startswith("join:")
-    assert parse_agg_query(
-        "SELECT c1, count(*) AS n FROM (VALUES (1)) t(c1) GROUP BY c1"
-    ) is None
+        " AS r FROM lineitem) t GROUP BY k",
+    ) == "nondeterministic"
 
 
 DERIVED_MEMBERS = [
@@ -1494,62 +1290,27 @@ def test_merged_derived_plan_scans_inner_table_once(spark, executor):
     jobs = [QueryJob(job_id=900 + i, sql=q) for i, q in enumerate(DERIVED_MEMBERS)]
     bags = executor.run_batch(jobs)
     (mp,) = [mp for b in bags for mp in b.merges]
-    plan = spark.sql(mp.merged_sql)._jdf.queryExecution().executedPlan().toString()
+    plan = _merged_physical(spark, [j.sql for j in mp.jobs])
     assert plan.lower().count("lineitem.parquet") == 1, plan
 
 
-def test_parse_derived_join_operand():
-    """Round-9b: a parenthesized derived table may be a JOIN OPERAND
-    (head or cut side) — one opaque signature token, alias REQUIRED,
-    deterministic inner only; identical inner text modulo case/ws
-    shares, and inner-segment order-insensitivity includes derived
-    operands."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    base = (
+def test_parse_derived_join_operand(spark):
+    """A derived table as a JOIN OPERAND: either operand order and any
+    case spelling of the inner query merge; a different inner predicate
+    does not."""
+    head = "SELECT o_orderpriority, count(*) AS n FROM "
+    tail = " GROUP BY o_orderpriority"
+    froms = [
         "(SELECT l_orderkey, l_quantity FROM lineitem WHERE"
-        " l_discount > 0.01) t JOIN orders o ON t.l_orderkey = o.o_orderkey"
-    )
-    a = _parse_join_from(base)
-    assert a is not None
-    # case/ws inner variants share; operand-order permutation shares
-    b = _parse_join_from(
+        " l_discount > 0.01) t JOIN orders o ON t.l_orderkey = o.o_orderkey",
         "(select L_ORDERKEY,  l_quantity from lineitem where"
-        " l_discount > 0.01) t JOIN orders o ON t.l_orderkey = o.o_orderkey"
-    )
-    c = _parse_join_from(
+        " l_discount > 0.01) t JOIN orders o ON t.l_orderkey = o.o_orderkey",
         "orders o JOIN (SELECT l_orderkey, l_quantity FROM lineitem WHERE"
-        " l_discount > 0.01) t ON t.l_orderkey = o.o_orderkey"
-    )
-    assert b[0] == a[0] and c[0] == a[0]
-    # differing inner text / alias never share
-    assert _parse_join_from(base.replace("0.01", "0.02"))[0] != a[0]
-    assert (
-        _parse_join_from(base.replace(") t ", ") u ").replace("t.", "u."))[0]
-        != a[0]
-    )
-    # unaliased / nondeterministic derived operands decline
-    assert _parse_join_from("(SELECT 1 AS x) JOIN orders o ON x = o_orderkey") is None
-    assert _parse_join_from(
-        "(SELECT rand() AS x FROM lineitem) t JOIN orders o ON t.x = o_orderkey"
-    ) is None
-    # joins INSIDE the subquery round-trip through the keyword rewrites
-    f = _parse_join_from(
-        "(SELECT c_custkey FROM nation n RIGHT JOIN customer c"
-        " ON c.c_nationkey = n.n_nationkey) t"
-        " JOIN orders o ON t.c_custkey = o.o_custkey"
-    )
-    assert f is not None and "RIGHT JOIN customer" in f[1]
-    # top-level RIGHT with a derived operand mirrors to the plain LEFT
-    h = _parse_join_from(
-        "orders o RIGHT JOIN (SELECT l_orderkey FROM lineitem) t"
-        " ON t.l_orderkey = o.o_orderkey"
-    )
-    i = _parse_join_from(
-        "(SELECT l_orderkey FROM lineitem) t LEFT JOIN orders o"
-        " ON t.l_orderkey = o.o_orderkey"
-    )
-    assert h[0] == i[0]
+        " l_discount > 0.01) u ON u.l_orderkey = o.o_orderkey",
+        "(SELECT l_orderkey, l_quantity FROM lineitem WHERE"
+        " l_discount > 0.02) t JOIN orders o ON t.l_orderkey = o.o_orderkey",
+    ]
+    assert _merge_sets(spark, [head + f + tail for f in froms]) == [[0, 1, 2]]
 
 
 def test_derived_join_operand_members_merge_matches_independent(spark, executor):
@@ -1679,9 +1440,11 @@ def test_member_table_swapped_between_admission_and_merge(spark, executor):
 
 
 def test_permuted_inner_join_members_merge_matches_independent(spark, executor):
-    """Order-permuted but logically-identical inner chains land in ONE
-    merged plan (emission = first member's spelling) and each member's
-    demux result equals its standalone run."""
+    """Inner chains whose joins differ only in operand order merge, and
+    each demux result equals its standalone run. A chain that nests the
+    same tables in a different order (permuted across levels) is a
+    different analyzed relation: it runs unmerged, rows unchanged —
+    on the drop list in CHANGES.md."""
     sqls = [
         "SELECT o_orderpriority, sum(l_quantity) AS sq"
         " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
@@ -1697,96 +1460,31 @@ def test_permuted_inner_join_members_merge_matches_independent(spark, executor):
         " JOIN customer ON o_custkey = c_custkey"
         " WHERE c_acctbal > 0 GROUP BY o_orderpriority",
     ]
-    jobs, bags = _run_and_compare(spark, executor, sqls, {0, 1, 2})
-    (bag,) = [b for b in bags if b.merges]
-    assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
+    # members 0 and 2 differ only in the operand order of each join;
+    # member 1 nests the three tables differently (drop list)
+    _run_and_compare(spark, executor, sqls, {0, 2})
 
 
-def test_on_condition_canonicalization_signatures():
-    """Round 10 (VERDICT r9 ask #1): condition SPELLING canonicalizes —
-    sorted AND-conjuncts, symmetric-operator operand order, inequality
-    mirroring, != ≡ <>, sorted USING lists, segment-pooled conjuncts —
-    while precedence-ambiguous shapes stay opaque and literals stay
-    load-bearing."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    # conjunct permutation + operand swap share
-    a = _parse_join_from(
-        "orders o JOIN lineitem l"
-        " ON o.o_orderkey = l.l_orderkey AND o.o_custkey = l.l_suppkey"
-    )
-    b = _parse_join_from(
-        "orders o JOIN lineitem l"
-        " ON l.l_suppkey = o.o_custkey AND l.l_orderkey = o.o_orderkey"
-    )
-    assert a is not None and b is not None and a[0] == b[0]
-    # inequality mirror: a < b ≡ b > a; a <= b ≡ b >= a
-    c = _parse_join_from("a x JOIN b y ON x.k < y.k")
-    assert c[0] == _parse_join_from("a x JOIN b y ON y.k > x.k")[0]
-    assert c[0] != _parse_join_from("a x JOIN b y ON x.k > y.k")[0]
-    le = _parse_join_from("a x JOIN b y ON x.k <= y.k")
-    assert le[0] == _parse_join_from("a x JOIN b y ON y.k >= x.k")[0]
-    assert le[0] != c[0]
-    # != folds to <>, with sorted operands
-    ne = _parse_join_from("a x JOIN b y ON x.k != y.k")
-    assert ne[0] == _parse_join_from("a x JOIN b y ON y.k <> x.k")[0]
-    # null-safe equality is symmetric but distinct from =
-    nseq = _parse_join_from("a x JOIN b y ON x.k <=> y.k")
-    assert nseq[0] == _parse_join_from("a x JOIN b y ON y.k <=> x.k")[0]
-    assert nseq[0] != _parse_join_from("a x JOIN b y ON x.k = y.k")[0]
-    # OR-bearing operand sides stay opaque: '(x.k = y.k) or x.j' and
-    # 'y.k or (x.j = x.k)' must never sort-equate
-    h = _parse_join_from("a x JOIN b y ON x.k = y.k or x.j")
-    i = _parse_join_from("a x JOIN b y ON y.k or x.j = x.k")
-    assert h[0] != i[0]
-    # BETWEEN's AND is no boundary; surrounding conjuncts still sort
-    j = _parse_join_from("a x JOIN b y ON x.k = y.k AND x.v BETWEEN 1 AND 5")
-    k = _parse_join_from("a x JOIN b y ON x.v BETWEEN 1 AND 5 AND y.k = x.k")
-    assert j[0] == k[0]
-    # a CASE arm's AND is no boundary either
-    c1 = _parse_join_from(
-        "a x JOIN b y ON x.k = y.k"
-        " AND CASE WHEN x.u = 1 AND y.u = 2 THEN 1 ELSE 0 END = 1"
-    )
-    c2 = _parse_join_from(
-        "a x JOIN b y ON CASE WHEN x.u = 1 AND y.u = 2 THEN 1 ELSE 0 END = 1"
-        " AND y.k = x.k"
-    )
-    assert c1 is not None and c1[0] == c2[0]
-    # conjuncts pool across the inner segment's ON clauses
-    p1 = _parse_join_from(
-        "a JOIN b ON a.x = b.x JOIN c ON a.z = c.z AND b.w <> 9"
-    )
-    p2 = _parse_join_from(
-        "a JOIN c ON c.z = a.z JOIN b ON b.x = a.x AND 9 != b.w"
-    )
-    assert p1[0] == p2[0]
-    # USING lists sort; ON never merges with USING
-    u1 = _parse_join_from("a JOIN b USING (k, j)")
-    u2 = _parse_join_from("a JOIN b USING (j, k)")
-    assert u1[0] == u2[0]
-    assert u1[0] != _parse_join_from("a JOIN b ON a.k = b.k AND a.j = b.j")[0]
-    # condition text inside string literals stays load-bearing
-    l1 = _parse_join_from("a JOIN b ON a.k = 'P AND Q'")
-    l2 = _parse_join_from("a JOIN b ON a.k = 'Q AND P'")
-    assert l1[0] != l2[0]
-    # boundary joins canonicalize their own ON the same way but keep
-    # position: LEFT with permuted conjuncts shares...
-    b1 = _parse_join_from(
-        "customer c LEFT JOIN orders o"
-        " ON c.c_custkey = o.o_custkey AND o.o_totalprice > 5"
-    )
-    b2 = _parse_join_from(
-        "customer c LEFT JOIN orders o"
-        " ON 5 < o.o_totalprice AND o.o_custkey = c.c_custkey"
-    )
-    assert b1[0] == b2[0]
-    # ...while the mirrored LEFT operand order still does not
-    b3 = _parse_join_from(
-        "orders o LEFT JOIN customer c"
-        " ON c.c_custkey = o.o_custkey AND o.o_totalprice > 5"
-    )
-    assert b3[0] != b1[0]
+def test_on_condition_canonicalization_signatures(spark):
+    """ON-condition spellings Catalyst canonicalizes alike — conjunct
+    order, operand order of symmetric operators, mirrored inequalities,
+    ``!=`` vs ``<>`` — merge; a flipped inequality or a literal that
+    differs does not."""
+    head = "SELECT o_orderpriority, count(*) AS n FROM orders o JOIN lineitem l ON "
+    tail = " GROUP BY o_orderpriority"
+    conds = [
+        "o.o_orderkey = l.l_orderkey AND o.o_custkey < l.l_suppkey",
+        "l.l_suppkey > o.o_custkey AND l.l_orderkey = o.o_orderkey",
+        "o.o_orderkey = l.l_orderkey AND o.o_custkey > l.l_suppkey",
+    ]
+    assert _merge_sets(spark, [head + c + tail for c in conds]) == [[0, 1]]
+    ne = [
+        "o.o_orderkey = l.l_orderkey AND o.o_custkey != l.l_suppkey",
+        "l.l_suppkey <> o.o_custkey AND l.l_orderkey = o.o_orderkey",
+        "o.o_orderkey = l.l_orderkey AND o.o_orderstatus <> 'P AND Q'",
+        "o.o_orderkey = l.l_orderkey AND o.o_orderstatus <> 'Q AND P'",
+    ]
+    assert _merge_sets(spark, [head + c + tail for c in ne]) == [[0, 1]]
 
 
 def test_condition_spelling_variants_merge_matches_independent(spark, executor):
@@ -1812,74 +1510,23 @@ def test_condition_spelling_variants_merge_matches_independent(spark, executor):
     assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
-def test_derived_inner_join_signatures():
-    """Round 10 (VERDICT r9 ask #2): a derived table whose inner FROM
-    is an admissible join chain signatures STRUCTURALLY — inner join
-    order and condition spelling canonicalize — while non-chain or
-    twice-nested inners keep the exact-text (opaque canon) bar."""
-    from sparksql_server_spark.server.mrshare import (
-        _parse_derived_from,
-        _parse_join_from,
-    )
-
-    a = _parse_derived_from(
+def test_derived_inner_join_signatures(spark):
+    """A derived table whose inner FROM is a join: operand order and
+    condition spelling of the inner join are erased, an inner WHERE or
+    a different select list is a different relation."""
+    head = "SELECT rf, count(*) AS n FROM "
+    tail = " GROUP BY rf"
+    froms = [
         "(SELECT l_returnflag AS rf FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey AND o_totalprice > 5) t"
-    )
-    b = _parse_derived_from(
+        " ON l_orderkey = o_orderkey AND o_totalprice > 5) t",
         "(select l_returnflag as rf from orders join lineitem"
-        " on 5 < o_totalprice and o_orderkey = l_orderkey) u"
-    )
-    assert a is not None and b is not None and a[0] == b[0]
-    # differing inner WHERE / select list stay distinct
-    w1 = _parse_derived_from(
+        " on 5 < o_totalprice and o_orderkey = l_orderkey) u",
         "(SELECT l_returnflag AS rf FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey WHERE l_quantity > 5) t"
-    )
-    w2 = _parse_derived_from(
-        "(SELECT l_returnflag AS rf FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey WHERE l_quantity > 9) t"
-    )
-    assert w1[0] != w2[0] and w1[0] != a[0]
-    s1 = _parse_derived_from(
+        " ON l_orderkey = o_orderkey WHERE l_quantity > 5) t",
         "(SELECT l_returnflag AS rf, l_tax AS tx FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey) t"
-    )
-    assert s1[0] != a[0]
-    # derived JOIN OPERAND: permuted inner chain shares
-    o1 = _parse_join_from(
-        "(SELECT l_orderkey AS k, l_quantity AS q FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey) t JOIN customer c ON t.k = c.c_custkey"
-    )
-    o2 = _parse_join_from(
-        "(SELECT l_orderkey AS k, l_quantity AS q FROM orders JOIN lineitem"
-        " ON o_orderkey = l_orderkey) t JOIN customer c ON c.c_custkey = t.k"
-    )
-    assert o1 is not None and o2 is not None and o1[0] == o2[0]
-    # round-11 widening (VERDICT r10 ask #5): TWICE-nested structure —
-    # a derived join operand inside a derived FROM — now decomposes,
-    # so the inner-chain permutation shares one signature
-    deep = (
-        "(SELECT k FROM (SELECT l_orderkey AS k FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey) s JOIN customer ON 1 = 1) t"
-    )
-    deep_perm = (
-        "(SELECT k FROM (SELECT l_orderkey AS k FROM orders JOIN lineitem"
-        " ON l_orderkey = o_orderkey) s JOIN customer ON 1 = 1) t"
-    )
-    assert _parse_derived_from(deep)[0] == _parse_derived_from(deep_perm)[0]
-    # round 12 (VERDICT r11 ask #4): the nest cap is lifted — depth-3
-    # permutations of the innermost chain now share structurally
-    t1 = (
-        "(SELECT k FROM (SELECT k FROM (SELECT l_orderkey AS k"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey) x) y) t"
-    )
-    t2 = (
-        "(SELECT k FROM (SELECT k FROM (SELECT l_orderkey AS k"
-        " FROM orders JOIN lineitem ON l_orderkey = o_orderkey) x) y) t"
-    )
-    assert _parse_derived_from(t1)[0] == _parse_derived_from(t1)[0]
-    assert _parse_derived_from(t1)[0] == _parse_derived_from(t2)[0]
+        " ON l_orderkey = o_orderkey) t",
+    ]
+    assert _merge_sets(spark, [head + f + tail for f in froms]) == [[0, 1]]
 
 
 def test_derived_inner_join_members_merge_matches_independent(spark, executor):
@@ -1904,107 +1551,33 @@ def test_derived_inner_join_members_merge_matches_independent(spark, executor):
     assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
-def test_top_level_or_suppresses_conjunct_split():
-    """Round-10 review wave (CONFIRMED wrong-merge repro): AND binds
-    tighter than OR, so the fragments between top-level ANDs of
-    ``p OR q AND r`` are NOT conjuncts — sorting them equated
-    ``a=b OR c=d AND e=f`` (= ``a=b OR (c=d AND e=f)``) with
-    ``e=f AND a=b OR c=d`` (= ``(e=f AND a=b) OR c=d``), which are
-    different relations. Any depth-0 OR must keep the whole condition
-    ONE opaque token."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    a = _parse_join_from(
-        "t1 JOIN t2 ON t1.a = t2.a OR t1.b = t2.b AND t1.c = t2.c"
+def test_top_level_or_suppresses_conjunct_split(spark, executor):
+    """AND binds tighter than OR: ``a OR b AND c`` and ``c AND a OR b``
+    are different relations and must never merge (the round-10
+    wrong-merge pair). Catalyst parses precedence, so they don't."""
+    head = "SELECT o_orderpriority, count(*) AS n FROM orders JOIN lineitem ON "
+    tail = " GROUP BY o_orderpriority"
+    _spellings(
+        spark,
+        executor,
+        [
+            [head + "o_orderkey = l_orderkey OR l_linenumber = 1 AND l_tax > 0.05" + tail],
+            [head + "l_tax > 0.05 AND o_orderkey = l_orderkey OR l_linenumber = 1" + tail],
+        ],
     )
-    b = _parse_join_from(
-        "t1 JOIN t2 ON t1.c = t2.c AND t1.a = t2.a OR t1.b = t2.b"
-    )
-    assert a is not None and b is not None
-    assert a[0] != b[0]
-    # byte-canon-equal OR spellings still share (the pre-round-10 bar)
-    c = _parse_join_from(
-        "t1 JOIN t2 ON t1.a = t2.a OR t1.b = t2.b AND t1.c = t2.c"
-    )
-    assert a[0] == c[0]
-    # an OR inside parens is depth>0: conjuncts around it still sort
-    d = _parse_join_from(
-        "t1 JOIN t2 ON (t1.a = t2.a OR t1.b = t2.b) AND t1.c = t2.c"
-    )
-    e = _parse_join_from(
-        "t1 JOIN t2 ON t1.c = t2.c AND (t1.a = t2.a OR t1.b = t2.b)"
-    )
-    assert d is not None and d[0] == e[0]
 
 
-def test_or_disjunct_canonicalization_signatures():
-    """Round 11 (VERDICT r10 ask #4): a conjunct that is a pure
-    OR-chain of simple binary comparisons sorts its deduped disjunct
-    canons — ``ON (a=b OR c=d)`` ≡ ``ON (c=d OR a=b)`` — while any
-    other depth-0 keyword in the chain, a non-simple disjunct, or a
-    literal difference keeps the condition opaque/load-bearing."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    # parenthesized disjunct permutation + operand swap share
-    a = _parse_join_from("t1 JOIN t2 ON (t1.a = t2.a OR t1.b = t2.b)")
-    b = _parse_join_from("t1 JOIN t2 ON (t2.b = t1.b OR t1.a = t2.a)")
-    assert a is not None and b is not None and a[0] == b[0]
-    # the bare (unparenthesized) whole-condition OR chain is the same
-    # boolean term — shares with the parenthesized spelling
-    c = _parse_join_from("t1 JOIN t2 ON t1.b = t2.b OR t1.a = t2.a")
-    assert c[0] == a[0]
-    # comparison normalization applies INSIDE disjuncts: mirror + swap
-    h = _parse_join_from("t1 JOIN t2 ON (t1.a < t2.a OR t1.c = t2.c)")
-    i = _parse_join_from("t1 JOIN t2 ON (t2.c = t1.c OR t2.a > t1.a)")
-    assert h[0] == i[0]
-    # an or-group pools with sibling conjuncts across spellings
-    j = _parse_join_from(
-        "t1 JOIN t2 ON (t1.a=t2.a OR t1.b=t2.b) AND t1.c=t2.c"
-    )
-    k = _parse_join_from(
-        "t1 JOIN t2 ON t1.c=t2.c AND (t1.b=t2.b OR t1.a=t2.a)"
-    )
-    assert j[0] == k[0]
-    # round 12: a chain whose disjuncts dedup to ONE comparison IS the
-    # bare comparison — ``x OR x ≡ x`` under 3VL (UNKNOWN OR UNKNOWN is
-    # UNKNOWN), so the singleton collapses and the spellings share
-    m = _parse_join_from("t1 JOIN t2 ON (t1.a=t2.a OR t2.a=t1.a)")
-    n = _parse_join_from("t1 JOIN t2 ON t1.a=t2.a")
-    assert m[0] == n[0]
-    # NOT still declines the sort (never normalized)
-    f1 = _parse_join_from("t1 JOIN t2 ON (t1.a = t2.a OR NOT t1.b = t2.b)")
-    f2 = _parse_join_from("t1 JOIN t2 ON (NOT t1.b = t2.b OR t1.a = t2.a)")
-    assert f1[0] != f2[0]
-    # round 12: parens around a LEAF disjunct are no-ops — the
-    # bool-tree unwraps them and the permuted spellings share
-    g1 = _parse_join_from("t1 JOIN t2 ON ((t1.a=t2.a) OR (t1.b=t2.b))")
-    g2 = _parse_join_from("t1 JOIN t2 ON ((t1.b=t2.b) OR (t1.a=t2.a))")
-    assert g1[0] == g2[0]
-    assert g1[0] == _parse_join_from(
-        "t1 JOIN t2 ON (t1.a=t2.a OR t1.b=t2.b)"
-    )[0]
-    # the round-10 wrong-merge pair stays DISTINCT: the precedence-
-    # aware tree parses ``a OR b AND c`` as a∨(b∧c) and ``c AND a OR
-    # b`` as (c∧a)∨b — different trees, different signatures (round 12
-    # normalizes both rather than leaving them opaque, but never
-    # equates them)
-    d = _parse_join_from(
-        "t1 JOIN t2 ON t1.a = t2.a OR t1.b = t2.b AND t1.c = t2.c"
-    )
-    e = _parse_join_from(
-        "t1 JOIN t2 ON t1.c = t2.c AND t1.a = t2.a OR t1.b = t2.b"
-    )
-    assert d[0] != e[0]
-    # ...while the precedence-faithful respelling of the SAME term
-    # (disjuncts swapped, conjuncts swapped, parens added) now merges
-    d2 = _parse_join_from(
-        "t1 JOIN t2 ON (t1.c = t2.c AND t1.b = t2.b) OR t1.a = t2.a"
-    )
-    assert d2[0] == d[0]
-    # string literals inside disjuncts stay load-bearing
-    l1 = _parse_join_from("t1 JOIN t2 ON (t1.a = 'x OR y' OR t1.b = t2.b)")
-    l2 = _parse_join_from("t1 JOIN t2 ON (t1.a = 'y OR x' OR t1.b = t2.b)")
-    assert l1[0] != l2[0]
+def test_or_disjunct_canonicalization_signatures(spark):
+    """OR commutes: permuted disjuncts merge; a different disjunct does
+    not."""
+    head = "SELECT o_orderpriority, count(*) AS n FROM orders JOIN lineitem ON "
+    tail = " GROUP BY o_orderpriority"
+    conds = [
+        "o_orderkey = l_orderkey AND (l_linenumber = 1 OR l_tax > 0.05)",
+        "(l_tax > 0.05 OR l_linenumber = 1) AND l_orderkey = o_orderkey",
+        "o_orderkey = l_orderkey AND (l_linenumber = 2 OR l_tax > 0.05)",
+    ]
+    assert _merge_sets(spark, [head + c + tail for c in conds]) == [[0, 1]]
 
 
 def test_or_disjunct_spelling_variants_merge_matches_independent(
@@ -2032,70 +1605,38 @@ def test_or_disjunct_spelling_variants_merge_matches_independent(
     assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
-def test_predicate_leaf_spellings_share_signatures():
-    """Round 12 leaf widenings: IN-lists normalize to the OR-of-
-    equalities structure SQL defines them as (sorted, deduped,
-    singleton folds to ``=``), BETWEEN to its range-conjunct pair,
-    NOT IN / NOT BETWEEN to the De Morgan duals, and IS [NOT] NULL /
-    LIKE-family predicates admit as tree leaves. Signature-only: the
-    merged emission always re-uses a member's original text."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from as pj
-
-    def sig(cond):
-        r = pj(f"t1 JOIN t2 ON {cond}")
-        assert r is not None, cond
-        return r[0]
-
-    # IN ≡ its OR-chain, item order/duplicates immaterial
-    assert sig("t1.a = t2.a AND t1.b IN (1, 2, 3)") == sig(
-        "(3 = t1.b OR t1.b IN (2, 1, 2)) AND t2.a = t1.a"
-    )
-    assert sig("t1.b IN (7)") == sig("t1.b = 7") == sig("7 = t1.b")
-    # NOT IN ≡ the AND of <>, and never equals the positive form
-    assert sig("t1.b NOT IN (1, 2)") == sig("t1.b <> 1 AND 2 != t1.b")
-    assert sig("t1.b NOT IN (1, 2)") != sig("t1.b IN (1, 2)")
-    # BETWEEN ≡ the range pair, asymmetry preserved
-    assert (
-        sig("t1.a BETWEEN 0 AND 2")
-        == sig("t1.a >= 0 AND t1.a <= 2")
-        == sig("2 >= t1.a AND 0 <= t1.a")
-    )
-    assert sig("t1.a BETWEEN 0 AND 2") != sig("t1.a BETWEEN 2 AND 0")
-    assert sig("t1.a NOT BETWEEN 0 AND 2") == sig("t1.a < 0 OR t1.a > 2")
-    # row-value IN keeps its items intact (single paren-level unwrap)
-    assert sig("(t1.a, t1.b) IN ((1, 2))") != sig("(t1.a, t1.b) IN ((2, 1))")
-    # subquery items never normalize — the chain parse declines the
-    # member outright (stronger than opaque)
-    assert pj("t1 JOIN t2 ON t1.b IN (SELECT 1)") is None
-    # IS NULL / LIKE admit as tree leaves: disjunct swaps share
-    assert sig("(t1.b IS NULL OR t1.a = 1)") == sig(
-        "(1 = t1.a OR t1.b  is  null)"
-    )
-    assert sig("t1.b IS NULL") != sig("t1.b IS NOT NULL")
-    assert sig("(t1.c LIKE 'a%' OR t1.a = 1)") == sig(
-        "(t1.a = 1 OR t1.c like 'a%')"
-    )
-    assert sig("t1.c LIKE 'a%'") != sig("t1.c NOT LIKE 'a%'")
-    assert sig("t1.c LIKE 'a%'") != sig("t1.c ILIKE 'a%'")
-    # IS NOT DISTINCT FROM ≡ null-safe equality (Spark parses it to
-    # <=>); both symmetric, so operand swaps share
-    assert (
-        sig("t1.a IS NOT DISTINCT FROM t2.a")
-        == sig("t1.a <=> t2.a")
-        == sig("t2.a <=> t1.a")
-    )
-    assert sig("t1.a IS DISTINCT FROM t2.a") == sig(
-        "t2.a is  distinct  from t1.a"
-    )
-    assert sig("t1.a IS DISTINCT FROM t2.a") != sig(
-        "t1.a IS NOT DISTINCT FROM t2.a"
-    )
+def test_predicate_leaf_spellings_share_signatures(spark):
+    """Leaf spellings Catalyst unifies merge: IN-list order, BETWEEN vs
+    its two comparisons, mirrored IS [NOT] NULL/LIKE conjunct orders. An
+    IN list and its OR chain stay distinct (``In`` and ``Or`` are
+    different expressions) — on the drop list in CHANGES.md."""
+    head = "SELECT o_orderpriority, count(*) AS n FROM orders JOIN lineitem ON o_orderkey = l_orderkey AND "
+    tail = " GROUP BY o_orderpriority"
+    leaves = [
+        "l_linenumber IN (1, 2, 3)",
+        "l_linenumber IN (3, 1, 2)",
+        "(l_linenumber = 1 OR l_linenumber = 2 OR l_linenumber = 3)",
+    ]
+    assert _merge_sets(spark, [head + c + tail for c in leaves]) == [[0, 1]]
+    ranges = [
+        "l_quantity BETWEEN 5 AND 20",
+        "l_quantity >= 5 AND l_quantity <= 20",
+        "l_quantity BETWEEN 5 AND 21",
+    ]
+    assert _merge_sets(spark, [head + c + tail for c in ranges]) == [[0, 1]]
+    others = [
+        "o_orderstatus IS NOT NULL AND o_orderstatus LIKE '%a%'",
+        "o_orderstatus LIKE '%a%' AND o_orderstatus IS NOT NULL",
+    ]
+    assert _merge_sets(spark, [head + c + tail for c in others]) == [[0, 1]]
 
 
 def test_in_between_members_merge_matches_independent(spark, executor):
-    """End-to-end: members whose ON conditions spell the same predicate
-    via IN-lists / OR-chains / BETWEEN / range pairs land in ONE merged
-    plan and every demux result equals its standalone run."""
+    """End-to-end: BETWEEN and its spelled-out range pair merge (Catalyst
+    replaces BETWEEN before the comparison), and every demux result
+    equals its standalone run. IN-lists vs OR-chains of the same values
+    stay distinct ``In``/``Or`` expressions: they run unmerged with
+    unchanged rows — on the drop list in CHANGES.md."""
     sqls = [
         "SELECT o_orderpriority, sum(l_quantity) AS sq"
         " FROM orders JOIN lineitem"
@@ -2112,9 +1653,8 @@ def test_in_between_members_merge_matches_independent(spark, executor):
         " AND o_orderkey = l_orderkey"
         " GROUP BY o_orderpriority",
     ]
-    jobs, bags = _run_and_compare(spark, executor, sqls, {0, 1, 2})
-    (bag,) = [b for b in bags if b.merges]
-    assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
+    # an IN list and an OR chain stay distinct expressions (drop list)
+    _run_and_compare(spark, executor, sqls, set())
 
     sqls2 = [
         "SELECT o_orderpriority, sum(l_quantity) AS sq"
@@ -2162,12 +1702,9 @@ def test_nested_derived_members_merge_matches_independent(spark, executor):
     assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
-def test_nested_derived_signature_bars():
-    """The round-11 recursion keeps every decline: nested alias
-    mismatch, differing nested WHERE, bare star at the nested level,
-    and junk after the nested alias."""
-    from sparksql_server_spark.server.mrshare import _parse_derived_from
-
+def test_nested_derived_signature_bars(spark):
+    """Two derived levels: the inner join's operand order and keyword
+    case are erased, a different nested WHERE is not."""
     s1 = (
         "(SELECT k, q FROM (SELECT l_orderkey AS k, l_quantity AS q"
         " FROM lineitem JOIN orders ON l_orderkey = o_orderkey) u"
@@ -2178,34 +1715,17 @@ def test_nested_derived_signature_bars():
         " from orders join lineitem on o_orderkey = l_orderkey) u"
         " where q > 5) w"
     )
-    c, d = _parse_derived_from(s1), _parse_derived_from(s2)
-    assert c is not None and d is not None and c[0] == d[0]
-    # nested alias is part of the signature
-    assert _parse_derived_from(s1.replace(") u ", ") v "))[0] != c[0]
-    # nested WHERE stays load-bearing
-    assert _parse_derived_from(s1.replace("q > 5", "q > 9"))[0] != c[0]
-    # bare star at the NESTED level: round 11 admits the ordinal-free
-    # wrapper (references by name), declines once an ordinal observes
-    # the nested column order
-    u1 = (
-        "(SELECT k FROM (SELECT * FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey) u) t"
-    )
-    u2 = (
-        "(SELECT k FROM (SELECT * FROM orders JOIN lineitem"
-        " ON l_orderkey = o_orderkey) u) t"
-    )
-    assert _parse_derived_from(u1)[0] == _parse_derived_from(u2)[0]
-    o1 = u1.replace(") u)", " GROUP BY 1) u)")
-    o2 = u2.replace(") u)", " GROUP BY 1) u)")
-    assert _parse_derived_from(o1)[0] != _parse_derived_from(o2)[0]
+    froms = [s1, s2, s1.replace("q > 5", "q > 9")]
+    sqls = [f"SELECT k, count(*) AS n FROM {f} GROUP BY k" for f in froms]
+    assert _merge_sets(spark, sqls) == [[0, 1]]
 
 
 def test_bare_star_derived_members_merge_matches_independent(spark, executor):
-    """Round 11: ordinal-free ``SELECT *`` derived wrappers whose inner
-    chains differ only in operand order land in ONE merged plan and
-    each demux result equals the standalone run (all outer references
-    are by name, so the inner column order is unobservable)."""
+    """``SELECT *`` derived wrappers over one inner chain merge and each
+    demux result equals the standalone run. A wrapper whose inner chain
+    is spelled in the other operand order expands ``*`` in another
+    column order, a different analyzed relation: it runs unmerged with
+    unchanged rows — on the drop list in CHANGES.md."""
     inners = [
         "SELECT * FROM orders JOIN lineitem ON o_orderkey = l_orderkey",
         "select * from lineitem join orders on l_orderkey = o_orderkey",
@@ -2219,21 +1739,14 @@ def test_bare_star_derived_members_merge_matches_independent(spark, executor):
         f" FROM ({inners[0]}) v WHERE l_quantity >= 25"
         " GROUP BY o_orderpriority",
     ]
-    jobs, bags = _run_and_compare(spark, executor, sqls, {0, 1, 2})
-    (bag,) = [b for b in bags if b.merges]
-    assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
+    # the permuted inner expands * in the other column order (drop list)
+    _run_and_compare(spark, executor, sqls, {0, 2})
 
 
-def test_derived_inner_limit_declines_structural_sharing():
-    """Round-11 review wave: a depth-0 LIMIT in a derived inner's
-    trailing clauses must decline STRUCTURAL sharing — LIMIT without a
-    total order picks plan-dependent rows, and the structural
-    signature admits members whose join-operand order (hence plan)
-    differs, so one shared evaluation could feed a member a different
-    row subset than its standalone run. Byte-canon-equal spellings
-    (same text, same plan) still share."""
-    from sparksql_server_spark.server.mrshare import _parse_derived_from
-
+def test_derived_inner_limit_declines_structural_sharing(spark):
+    """LIMIT without a total order picks plan-dependent rows, so joins
+    below a LIMIT keep their spelled operand order (plans/catalyst.py):
+    a permuted chain under LIMIT never merges; the same spelling does."""
     lim1 = (
         "(SELECT o_orderpriority AS pri, l_quantity AS qty"
         " FROM orders JOIN lineitem ON o_orderkey = l_orderkey"
@@ -2244,226 +1757,58 @@ def test_derived_inner_limit_declines_structural_sharing():
         " FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
         " LIMIT 100) t"
     )
-    a, b = _parse_derived_from(lim1), _parse_derived_from(lim_perm)
-    assert a is not None and b is not None
-    assert a[0] != b[0]  # permuted chain + LIMIT: no structural share
-    # identical spelling still shares (modulo case/whitespace)
-    assert a[0] == _parse_derived_from(lim1.replace("SELECT", "select"))[0]
-    # ORDER BY + LIMIT is only total modulo ties — still declines
-    ol1 = lim1.replace(" LIMIT 100", " ORDER BY qty LIMIT 100")
-    ol2 = lim_perm.replace(" LIMIT 100", " ORDER BY qty LIMIT 100")
-    assert _parse_derived_from(ol1)[0] != _parse_derived_from(ol2)[0]
-    # a LIMIT inside a string literal is data, not a clause
-    lit1 = (
-        "(SELECT o_orderpriority AS pri FROM orders JOIN lineitem"
-        " ON o_orderkey = l_orderkey WHERE o_comment <> 'LIMIT 5') t"
-    )
-    lit2 = (
-        "(SELECT o_orderpriority AS pri FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey WHERE o_comment <> 'LIMIT 5') t"
-    )
-    assert _parse_derived_from(lit1)[0] == _parse_derived_from(lit2)[0]
+    froms = [lim1, lim_perm, lim1.replace("SELECT", "select")]
+    sqls = [f"SELECT pri, count(*) AS n FROM {f} GROUP BY pri" for f in froms]
+    assert _merge_sets(spark, sqls) == [[0, 2]]
 
 
-def test_bare_star_derived_inner_declines_structural_sharing():
-    """Round-10 review wave (CONFIRMED wrong-merge repro): ``SELECT *``
-    expands in JOIN-OPERAND ORDER, which the chain signature erases —
-    with an inner ``ORDER BY <ordinal> LIMIT n`` the two members'
-    inner top-n row sets differ. Round 11 narrows the decline to where
-    column ORDER is OBSERVABLE (a depth-0 ordinal GROUP BY/ORDER BY
-    item, or any depth-0 LIMIT); the plain ``SELECT * FROM a JOIN b``
-    wrapper — references by name only — is re-admitted."""
-    from sparksql_server_spark.server.mrshare import _parse_derived_from
-
-    s1 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k ORDER BY 2 LIMIT 10) t"
+def test_bare_star_derived_inner_declines_structural_sharing(spark):
+    """``SELECT *`` expands in join-operand order, and an ordinal ORDER
+    BY then sorts a different column: such spellings are different
+    relations and never merge; repeating one spelling does."""
+    s1 = (
+        "(SELECT * FROM orders JOIN lineitem ON o_orderkey = l_orderkey"
+        " ORDER BY 2 LIMIT 10) t"
     )
-    s2 = _parse_derived_from(
-        "(SELECT * FROM b JOIN a ON a.k = b.k ORDER BY 2 LIMIT 10) t"
+    s2 = (
+        "(SELECT * FROM lineitem JOIN orders ON o_orderkey = l_orderkey"
+        " ORDER BY 2 LIMIT 10) t"
     )
-    assert s1 is not None and s2 is not None
-    assert s1[0] != s2[0]  # operand order must stay load-bearing
-    # byte-equal bare-star inners still share (exact-text bar)
-    s3 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k ORDER BY 2 LIMIT 10) t"
-    )
-    assert s1[0] == s3[0]
-    # GROUP BY ordinal observes column order even without LIMIT
-    g1 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k GROUP BY 1) t"
-    )
-    g2 = _parse_derived_from(
-        "(SELECT * FROM b JOIN a ON a.k = b.k GROUP BY 1) t"
-    )
-    assert g1[0] != g2[0]
-    # round 11: the ordinal-free bare-star wrapper shares structurally
-    p1 = _parse_derived_from("(SELECT * FROM a JOIN b ON a.k = b.k) t")
-    p2 = _parse_derived_from("(SELECT * FROM b JOIN a ON b.k = a.k) t")
-    assert p1 is not None and p1[0] == p2[0]
-    # ...including with a WHERE and a NAME-based ORDER BY (no limit)
-    w1 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k WHERE a.v > 3 ORDER BY a.v) t"
-    )
-    w2 = _parse_derived_from(
-        "(SELECT * FROM b JOIN a ON b.k = a.k WHERE a.v > 3 ORDER BY a.v) t"
-    )
-    assert w1[0] == w2[0]
-    # an integer CONSTANT (parenthesized) is not an ordinal
-    c1 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k ORDER BY (1)) t"
-    )
-    c2 = _parse_derived_from(
-        "(SELECT * FROM b JOIN a ON a.k = b.k ORDER BY (1)) t"
-    )
-    assert c1[0] == c2[0]
-    # explicit select lists keep the structural (order-insensitive) bar
-    e1 = _parse_derived_from(
-        "(SELECT a.c1 AS x, b.c2 AS y FROM a JOIN b ON a.k = b.k) t"
-    )
-    e2 = _parse_derived_from(
-        "(SELECT a.c1 AS x, b.c2 AS y FROM b JOIN a ON b.k = a.k) t"
-    )
-    assert e1 is not None and e1[0] == e2[0]
-    # ...and with an ordinal tail, explicit heads STILL share: the
-    # ordinal resolves against the same explicit list in every member
-    o1 = _parse_derived_from(
-        "(SELECT a.c1 AS x, b.c2 AS y FROM a JOIN b ON a.k = b.k"
-        " GROUP BY 1, 2) t"
-    )
-    o2 = _parse_derived_from(
-        "(SELECT a.c1 AS x, b.c2 AS y FROM b JOIN a ON b.k = a.k"
-        " GROUP BY 1, 2) t"
-    )
-    assert o1 is not None and o1[0] == o2[0]
-    # qualified stars expand in the OPERAND's own column order — safe,
-    # still structural
-    q1 = _parse_derived_from("(SELECT a.* FROM a JOIN b ON a.k = b.k) t")
-    q2 = _parse_derived_from("(SELECT a.* FROM b JOIN a ON a.k = b.k) t")
-    assert q1 is not None and q1[0] == q2[0]
-    # a depth-0 multiplication is lexically a bare star; with an
-    # ordinal-free tail it now shares — which is strictly sound here
-    # (the head is an explicit named item, identical in both members)
-    m1 = _parse_derived_from(
-        "(SELECT a.c1 * b.c2 AS p FROM a JOIN b ON a.k = b.k) t"
-    )
-    m2 = _parse_derived_from(
-        "(SELECT a.c1 * b.c2 AS p FROM b JOIN a ON a.k = b.k) t"
-    )
-    assert m1 is not None and m2 is not None and m1[0] == m2[0]
+    sqls = [
+        f"SELECT o_orderpriority, count(*) AS n FROM {f} GROUP BY o_orderpriority"
+        for f in (s1, s2, s1)
+    ]
+    assert _merge_sets(spark, sqls) == [[0, 2]]
 
 
-def test_derived_inner_set_operator_declines_structural_sharing():
-    """Round-12 (ADVICE r11 high): UNION/INTERSECT/EXCEPT pair the two
-    arms' select lists POSITIONALLY, so a bare-star head — whose
-    column order the chain signature deliberately erases — feeds the
-    set operator a different column order per operand spelling. A
-    depth-0 set operator anywhere in the inner text must decline
-    structural sharing (for every head shape: the keyword-swallowing
-    spellings ``… ON k UNION TABLE t`` / ``WHERE p UNION VALUES (1)``
-    land the arm inside clauses this grammar never modeled). The
-    byte-canon exact-text bar still applies."""
-    from sparksql_server_spark.server.mrshare import _parse_derived_from
-
-    u1 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k WHERE a.v > 0"
-        " UNION SELECT 1, 2) t"
-    )
-    u2 = _parse_derived_from(
-        "(SELECT * FROM b JOIN a ON a.k = b.k WHERE a.v > 0"
-        " UNION SELECT 1, 2) t"
-    )
-    assert u1 is not None and u2 is not None
-    assert u1[0] != u2[0]  # operand order stays load-bearing
-    # byte-equal spellings (modulo case/whitespace) still share
-    u3 = _parse_derived_from(
-        "(select * FROM a JOIN b ON a.k = b.k WHERE a.v > 0"
-        "  UNION SELECT 1, 2) t"
-    )
-    assert u3 is not None and u1[0] == u3[0]
-    # the arm can hide where the grammar reads an ON condition
-    # (single-column arm: no comma, no SELECT keyword after UNION)
-    k1 = _parse_derived_from("(SELECT * FROM a JOIN b ON k UNION TABLE t) t")
-    k2 = _parse_derived_from("(SELECT * FROM b JOIN a ON k UNION TABLE t) t")
-    assert k1 is not None and k2 is not None and k1[0] != k2[0]
-    # ... or inside the trailing clauses as a VALUES arm
-    v1 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k WHERE a.v > 0"
-        " UNION VALUES (1)) t"
-    )
-    v2 = _parse_derived_from(
-        "(SELECT * FROM b JOIN a ON a.k = b.k WHERE a.v > 0"
-        " UNION VALUES (1)) t"
-    )
-    assert v1 is not None and v2 is not None and v1[0] != v2[0]
-    # INTERSECT / EXCEPT / MINUS all pair positionally — same decline
-    for op in ("INTERSECT", "EXCEPT", "MINUS"):
-        x1 = _parse_derived_from(
-            f"(SELECT * FROM a JOIN b ON a.k = b.k {op} SELECT 1, 2) t"
-        )
-        x2 = _parse_derived_from(
-            f"(SELECT * FROM b JOIN a ON a.k = b.k {op} SELECT 1, 2) t"
-        )
-        assert x1 is not None and x2 is not None and x1[0] != x2[0]
-    # a set-op keyword inside a string literal is data, not a clause
-    l1 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k WHERE a.c <> 'UNION x') t"
-    )
-    l2 = _parse_derived_from(
-        "(SELECT * FROM b JOIN a ON b.k = a.k WHERE a.c <> 'UNION x') t"
-    )
-    assert l1 is not None and l2 is not None and l1[0] == l2[0]
-    # ... and inside a deeper paren level (a subquery's own UNION is
-    # that level's business — here depth>0 means not this SELECT's)
-    d1 = _parse_derived_from(
-        "(SELECT * FROM a JOIN b ON a.k = b.k"
-        " WHERE a.v IN (1, 2) AND a.w > (3) OR a.u = '(union)') t"
-    )
-    assert d1 is not None
+def test_derived_inner_set_operator_declines_structural_sharing(spark):
+    """UNION pairs its arms' columns by position, and ``SELECT *`` over a
+    permuted join orders them differently: different relations, never
+    merged. Whitespace and keyword case do not matter."""
+    arm = "SELECT * FROM {} WHERE n_nationkey > 0"
+    ab = "region JOIN nation ON r_regionkey = n_regionkey"
+    ba = "nation JOIN region ON r_regionkey = n_regionkey"
+    u1 = f"({arm.format(ab)} UNION {arm.format(ab)}) t"
+    u2 = f"({arm.format(ba)} UNION {arm.format(ba)}) t"
+    u3 = u1.replace("UNION", " union ")
+    sqls = [f"SELECT count(*) AS n FROM {u}" for u in (u1, u2, u3)]
+    assert _merge_sets(spark, sqls) == [[0, 2]]
 
 
-def test_derived_inner_offset_fetch_declines_structural_sharing():
-    """Round-12 (ADVICE r11 medium): standalone OFFSET (Spark 3.4+/
-    DuckDB) and FETCH select a plan-dependent row subset exactly like
-    LIMIT — ``ORDER BY x OFFSET 10`` without a total order drops
-    different rows per plan — so the round-11 LIMIT decline extends to
-    them."""
-    from sparksql_server_spark.server.mrshare import _parse_derived_from
-
-    o1 = _parse_derived_from(
+def test_derived_inner_offset_fetch_declines_structural_sharing(spark):
+    """OFFSET drops plan-dependent rows like LIMIT does: joins below it
+    keep their operand order, so the permuted spelling never merges."""
+    o1 = (
         "(SELECT o_orderpriority AS pri FROM orders JOIN lineitem"
         " ON o_orderkey = l_orderkey ORDER BY pri OFFSET 10) t"
     )
-    o2 = _parse_derived_from(
+    o2 = (
         "(SELECT o_orderpriority AS pri FROM lineitem JOIN orders"
         " ON l_orderkey = o_orderkey ORDER BY pri OFFSET 10) t"
     )
-    assert o1 is not None and o2 is not None
-    assert o1[0] != o2[0]
-    # byte-equal spelling still shares
-    assert o1[0] == _parse_derived_from(
-        "(select o_orderpriority AS pri FROM orders JOIN lineitem"
-        " ON o_orderkey = l_orderkey ORDER BY pri OFFSET 10) t"
-    )[0]
-    # FETCH FIRST spelling declines the same way
-    f1 = _parse_derived_from(
-        "(SELECT o_orderpriority AS pri FROM orders JOIN lineitem"
-        " ON o_orderkey = l_orderkey ORDER BY pri FETCH FIRST 5 ROWS ONLY) t"
-    )
-    f2 = _parse_derived_from(
-        "(SELECT o_orderpriority AS pri FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey ORDER BY pri FETCH FIRST 5 ROWS ONLY) t"
-    )
-    assert f1 is not None and f2 is not None and f1[0] != f2[0]
-    # an OFFSET inside a string literal stays data
-    s1 = _parse_derived_from(
-        "(SELECT o_orderpriority AS pri FROM orders JOIN lineitem"
-        " ON o_orderkey = l_orderkey WHERE o_comment <> 'OFFSET 9') t"
-    )
-    s2 = _parse_derived_from(
-        "(SELECT o_orderpriority AS pri FROM lineitem JOIN orders"
-        " ON l_orderkey = o_orderkey WHERE o_comment <> 'OFFSET 9') t"
-    )
-    assert s1 is not None and s1[0] == s2[0]
+    froms = [o1, o2, o1.replace("SELECT", "select")]
+    sqls = [f"SELECT pri, count(*) AS n FROM {f} GROUP BY pri" for f in froms]
+    assert _merge_sets(spark, sqls) == [[0, 2]]
 
 
 def test_mixed_precedence_spelling_variants_merge_matches_independent(
@@ -2495,57 +1840,22 @@ def test_mixed_precedence_spelling_variants_merge_matches_independent(
     assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
-def test_deep_derived_nest_signatures():
-    """Round 12 (VERDICT r11 ask #4): the derived-table recursion no
-    longer caps at two structural levels — it recurses until a
-    non-signaturable construct appears (pathological-input backstop at
-    64), with the bare-star/LIMIT/OFFSET/set-operator guards applied
-    at every level."""
-    from sparksql_server_spark.server.mrshare import _parse_derived_from
+def test_deep_derived_nest_signatures(spark):
+    """Derived tables nest to any depth: the innermost join's operand
+    order is erased at 3, 5 and 8 levels, and a LIMIT under the join's
+    parent keeps it load-bearing."""
 
-    def deep(inner_join, n, head="SELECT o_orderpriority AS pri"):
-        t = f"{head} FROM {inner_join}"
+    def deep(inner_join, n):
+        t = f"SELECT o_orderpriority AS pri FROM {inner_join}"
         for i in range(n):
             t = f"SELECT pri FROM ({t}) u{i}"
-        return f"({t}) t"
+        return f"SELECT pri, count(*) AS c FROM ({t}) t GROUP BY pri"
 
+    ab = "orders JOIN lineitem ON o_orderkey = l_orderkey"
+    ba = "lineitem JOIN orders ON l_orderkey = o_orderkey"
     for levels in (3, 5, 8):
-        a = _parse_derived_from(
-            deep("orders JOIN lineitem ON o_orderkey = l_orderkey", levels)
-        )
-        b = _parse_derived_from(
-            deep("lineitem JOIN orders ON l_orderkey = o_orderkey", levels)
-        )
-        assert a is not None and b is not None
-        assert a[0] == b[0], f"levels={levels}"
-    # guards hold at depth: an innermost LIMIT keeps operand order
-    # load-bearing all the way up
-    l1 = _parse_derived_from(
-        deep("orders JOIN lineitem ON o_orderkey = l_orderkey LIMIT 3", 4)
-    )
-    l2 = _parse_derived_from(
-        deep("lineitem JOIN orders ON l_orderkey = o_orderkey LIMIT 3", 4)
-    )
-    assert l1 is not None and l2 is not None and l1[0] != l2[0]
-    # ...as does an innermost bare star with an ordinal tail
-    s1 = _parse_derived_from(
-        deep("a JOIN b ON a.k = b.k GROUP BY 1", 3, head="SELECT *")
-    )
-    s2 = _parse_derived_from(
-        deep("b JOIN a ON a.k = b.k GROUP BY 1", 3, head="SELECT *")
-    )
-    assert s1 is not None and s2 is not None and s1[0] != s2[0]
-    # a DIFFERENT nested alias anywhere declines (alias is part of the
-    # signature at every level)
-    m1 = _parse_derived_from(
-        "(SELECT pri FROM (SELECT pri FROM (SELECT o_orderpriority AS pri"
-        " FROM orders JOIN lineitem ON o_orderkey = l_orderkey) x) y) t"
-    )
-    m2 = _parse_derived_from(
-        "(SELECT pri FROM (SELECT pri FROM (SELECT o_orderpriority AS pri"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey) x) z) t"
-    )
-    assert m1 is not None and m2 is not None and m1[0] != m2[0]
+        assert _merge_sets(spark, [deep(ab, levels), deep(ba, levels)]) == [[0, 1]]
+    assert _merge_sets(spark, [deep(ab + " LIMIT 3", 4), deep(ba + " LIMIT 3", 4)]) == []
 
 
 def test_three_level_derived_members_merge_matches_independent(
@@ -2580,98 +1890,38 @@ def test_three_level_derived_members_merge_matches_independent(
     assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
-def test_comma_from_normalizes_to_join_chain():
-    """Round 12 (VERDICT r11 ask #6): comma-FROM members rewrite to an
-    explicit inner chain with WHERE equi-conjuncts migrated into the
-    ON, sharing signatures with their explicit-JOIN spellings; CROSS
-    folds into the inner segment (CROSS ≡ JOIN ON TRUE), so comma,
-    CROSS, and ON TRUE spellings all signature-match."""
-    from sparksql_server_spark.server.mrshare import parse_agg_query
-
-    a = parse_agg_query(
+def test_comma_from_normalizes_to_join_chain(spark):
+    """Comma-FROM members read as a condition-less inner join with the
+    join predicate in WHERE, so their operand permutations merge with
+    each other. The explicit ``JOIN … ON`` spelling keeps its predicate
+    in the join and is a different analyzed relation — on the drop list
+    in CHANGES.md (it runs unmerged, rows unchanged)."""
+    sqls = [
         "SELECT o_orderpriority, sum(l_quantity) AS sq FROM orders, lineitem"
         " WHERE o_orderkey = l_orderkey AND l_quantity >= 10"
-        " GROUP BY o_orderpriority"
-    )
-    b = parse_agg_query(
+        " GROUP BY o_orderpriority",
+        "SELECT o_orderpriority, count(*) AS n FROM lineitem, orders"
+        " WHERE l_orderkey = o_orderkey GROUP BY o_orderpriority",
         "SELECT o_orderpriority, sum(l_quantity) AS sq"
         " FROM orders JOIN lineitem ON o_orderkey = l_orderkey"
-        " WHERE l_quantity >= 10 GROUP BY o_orderpriority"
-    )
-    assert a is not None and b is not None
-    assert a.table == b.table
-    assert a.where == b.where == "l_quantity >= 10"
-    # operand order insensitivity carries over from the segment model
-    c = parse_agg_query(
-        "SELECT o_orderpriority, sum(l_quantity) AS sq FROM lineitem, orders"
-        " WHERE l_orderkey = o_orderkey AND l_quantity >= 10"
-        " GROUP BY o_orderpriority"
-    )
-    assert c is not None and c.table == a.table
-    # no equi-conjunct -> pure product; comma ≡ CROSS ≡ JOIN ON TRUE
-    d = parse_agg_query(
-        "SELECT count(*) AS n FROM region, nation WHERE r_name <> 'ASIA'"
-    )
-    e = parse_agg_query(
-        "SELECT count(*) AS n FROM region CROSS JOIN nation"
-        " WHERE r_name <> 'ASIA'"
-    )
-    f = parse_agg_query(
-        "SELECT count(*) AS n FROM nation CROSS JOIN region"
-        " WHERE r_name <> 'ASIA'"
-    )
-    g = parse_agg_query(
-        "SELECT count(*) AS n FROM region JOIN nation ON TRUE"
-        " WHERE r_name <> 'ASIA'"
-    )
-    assert d is not None and d.table == e.table == f.table == g.table
-    assert d.where == "r_name <> 'ASIA'"
-    # a depth-0 OR keeps every conjunct in WHERE (fragments between the
-    # ANDs of a mixed-precedence predicate are NOT conjuncts)
-    h = parse_agg_query(
-        "SELECT count(*) AS n FROM region, nation"
-        " WHERE r_regionkey = n_regionkey OR r_name = 'ASIA'"
-    )
-    assert h is not None
-    assert h.where == "r_regionkey = n_regionkey OR r_name = 'ASIA'"
-    # 3-table TPC-H comma style shares with the explicit chain
-    i = parse_agg_query(
-        "SELECT n_name, sum(o_totalprice) AS rev FROM customer, orders, nation"
-        " WHERE c_custkey = o_custkey AND c_nationkey = n_nationkey"
-        " AND o_totalprice > 1000 GROUP BY n_name"
-    )
-    j = parse_agg_query(
-        "SELECT n_name, sum(o_totalprice) AS rev"
-        " FROM customer JOIN orders ON c_custkey = o_custkey"
-        " JOIN nation ON c_nationkey = n_nationkey"
-        " WHERE o_totalprice > 1000 GROUP BY n_name"
-    )
-    assert i is not None and j is not None and i.table == j.table
-    assert i.where == j.where == "o_totalprice > 1000"
-    # declines: mixed comma+JOIN, non-bare-table operand
-    assert (
-        parse_agg_query(
-            "SELECT count(*) AS n FROM region, nation"
-            " JOIN customer ON n_nationkey = c_nationkey"
-        )
-        is None
-    )
-    assert (
-        parse_agg_query("SELECT count(*) AS n FROM region, (SELECT 1 AS x) t")
-        is None
-    )
-    # a non-column operand keeps its conjunct in WHERE (only pure
-    # col = col migrates)
-    k = parse_agg_query(
-        "SELECT count(*) AS n FROM customer, orders"
-        " WHERE c_custkey = o_custkey AND o_totalprice = 1000"
-    )
-    assert k is not None and k.where == "o_totalprice = 1000"
+        " WHERE l_quantity >= 10 GROUP BY o_orderpriority",
+    ]
+    assert _merge_sets(spark, sqls) == [[0, 1]]
+    cross = [
+        "SELECT count(*) AS n FROM region, nation WHERE r_name <> 'ASIA'",
+        "SELECT count(*) AS n FROM region CROSS JOIN nation WHERE r_name <> 'ASIA'",
+        "SELECT max(n_name) AS m FROM nation CROSS JOIN region WHERE r_name <> 'ASIA'",
+    ]
+    # CROSS JOIN operands commute; a comma is an inner join, not a
+    # CROSS one, in the analyzed plan (drop list)
+    assert _merge_sets(spark, cross) == [[1, 2]]
 
 
 def test_comma_from_members_merge_matches_independent(spark, executor):
-    """Comma-FROM members and their explicit-JOIN respellings land in
-    ONE merged plan and every demux result equals its standalone run."""
+    """Comma-FROM members merge across operand order and every demux
+    result equals its standalone run; the explicit ``JOIN … ON``
+    respelling runs unmerged with unchanged rows — on the drop list in
+    CHANGES.md."""
     sqls = [
         "SELECT o_orderpriority, sum(l_quantity) AS sq"
         " FROM orders, lineitem"
@@ -2685,58 +1935,41 @@ def test_comma_from_members_merge_matches_independent(spark, executor):
         " FROM orders JOIN lineitem ON l_orderkey = o_orderkey"
         " WHERE l_quantity >= 25 GROUP BY o_orderpriority",
     ]
-    jobs, bags = _run_and_compare(spark, executor, sqls, {0, 1, 2})
-    (bag,) = [b for b in bags if b.merges]
-    assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
+    # the comma spellings merge; JOIN ... ON keeps its predicate in
+    # the join, a different analyzed relation (drop list)
+    _run_and_compare(spark, executor, sqls, {0, 1})
 
 
-def test_natural_join_signatures_resolve_from_schema():
-    """Round 12 (VERDICT r11 ask #6): NATURAL [INNER] JOIN normalizes
-    to ``JOIN … USING (<sorted common columns>)`` via a catalog lookup
-    (schema_fn); without one — or on any unresolvable operand, zero
-    common columns, or a NATURAL LEFT/RIGHT — it declines exactly as
-    before."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    schemas = {
-        "t1": ["k", "a", "v1"],
-        "t2": ["k", "b", "v2"],
-        "t3": ["k", "b", "v3"],
-    }
-    fn = lambda t: schemas.get(t.lower())  # noqa: E731
-
-    a = _parse_join_from("t1 NATURAL JOIN t2", schema_fn=fn)
-    b = _parse_join_from("t1 JOIN t2 USING (k)", schema_fn=fn)
-    c = _parse_join_from("t1 JOIN t2 USING (k)")  # USING needs no schema
-    assert a is not None and a[0] == b[0] == c[0]
-    assert "using (k)" in a[1]
-    # NATURAL INNER JOIN folds through the inner rewrite first
-    d = _parse_join_from("t1 NATURAL INNER JOIN t2", schema_fn=fn)
-    assert d is not None and d[0] == a[0]
-    # multi-common columns sort — both USING orders and NATURAL share
-    e = _parse_join_from("t2 NATURAL JOIN t3", schema_fn=fn)
-    f = _parse_join_from("t2 JOIN t3 USING (b, k)", schema_fn=fn)
-    g = _parse_join_from("t2 JOIN t3 USING (k, b)", schema_fn=fn)
-    assert e is not None and e[0] == f[0] == g[0]
-    # the visible column set ACCUMULATES along the chain
-    h = _parse_join_from("t1 JOIN t2 USING (k) NATURAL JOIN t3", schema_fn=fn)
-    i = _parse_join_from(
-        "t1 JOIN t2 USING (k) JOIN t3 USING (b, k)", schema_fn=fn
+def test_natural_join_signatures_resolve_from_schema(spark):
+    """Spark resolves NATURAL JOIN from the catalog into the USING form,
+    so the two spellings merge; swapping NATURAL's operands reorders the
+    output columns and picks the other side's key, a different relation
+    (drop list in CHANGES.md)."""
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW nat_a AS"
+        " SELECT l_orderkey AS k, l_quantity AS qa FROM lineitem"
     )
-    assert h is not None and h[0] == i[0]
-    # declines
-    assert _parse_join_from("t1 NATURAL JOIN t2") is None  # no schema_fn
-    assert _parse_join_from("t1 NATURAL JOIN zz", schema_fn=fn) is None
-    disjoint = lambda t: {"t1": ["x"], "t2": ["y"]}.get(t)  # noqa: E731
-    assert _parse_join_from("t1 NATURAL JOIN t2", schema_fn=disjoint) is None
-    assert _parse_join_from("t1 NATURAL LEFT JOIN t2", schema_fn=fn) is None
-    assert _parse_join_from("t1 natural_join t2", schema_fn=fn) is None
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW nat_b AS"
+        " SELECT o_orderkey AS k, o_totalprice AS pb FROM orders"
+    )
+    try:
+        sqls = [
+            "SELECT k, sum(qa) AS s FROM nat_a NATURAL JOIN nat_b GROUP BY k",
+            "SELECT k, count(*) AS n FROM nat_a JOIN nat_b USING (k) GROUP BY k",
+            "SELECT k, max(pb) AS m FROM nat_b NATURAL JOIN nat_a GROUP BY k",
+        ]
+        assert _merge_sets(spark, sqls) == [[0, 1]]
+    finally:
+        spark.catalog.dropTempView("nat_a")
+        spark.catalog.dropTempView("nat_b")
 
 
 def test_natural_join_members_merge_matches_independent(spark, executor):
-    """NATURAL members, their USING respellings, and operand swaps land
-    in ONE merged plan (schemas resolved from the live session catalog)
-    and every demux result equals its standalone run."""
+    """NATURAL members and their USING respellings land in ONE merged
+    plan (Spark resolves NATURAL from the session catalog) and every
+    demux result equals its standalone run. Swapped NATURAL operands run
+    unmerged with unchanged rows — on the drop list in CHANGES.md."""
     spark.sql(
         "CREATE OR REPLACE TEMP VIEW nat_a AS"
         " SELECT l_orderkey AS k, l_quantity AS qa, l_discount AS da"
@@ -2755,21 +1988,18 @@ def test_natural_join_members_merge_matches_independent(spark, executor):
             "SELECT k, max(pb) AS m FROM nat_b NATURAL JOIN nat_a"
             " GROUP BY k",
         ]
-        jobs, bags = _run_and_compare(spark, executor, sqls, {0, 1, 2})
-        (bag,) = [b for b in bags if b.merges]
-        assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
+        # swapped NATURAL operands reorder the output and take the key
+        # from the other side (drop list)
+        _run_and_compare(spark, executor, sqls, {0, 1})
     finally:
         spark.catalog.dropTempView("nat_a")
         spark.catalog.dropTempView("nat_b")
 
 
 def test_derived_inner_where_conjuncts_sort(spark, executor):
-    """Round 12: a derived inner's WHERE conjuncts sort (σ conjunction
-    commutes) with full comparison normalization, so spelling-variant
-    wrappers share one merged evaluation; the clauses after WHERE stay
-    load-bearing. Demux results must equal standalone runs."""
-    from sparksql_server_spark.server.mrshare import _parse_derived_from
-
+    """A derived inner's WHERE conjuncts commute and its comparisons
+    mirror, so spelling-variant wrappers share one merged evaluation;
+    demux results equal standalone runs."""
     inner_a = (
         "SELECT o_orderpriority AS pri, l_quantity AS qty,"
         " l_discount AS d FROM orders JOIN lineitem"
@@ -2780,18 +2010,6 @@ def test_derived_inner_where_conjuncts_sort(spark, executor):
         " l_discount AS d from lineitem join orders"
         " on l_orderkey = o_orderkey"
     )
-    w1 = _parse_derived_from(
-        f"(SELECT pri, qty FROM ({inner_a}) u WHERE qty >= 5 AND d > 0.01) t"
-    )
-    w2 = _parse_derived_from(
-        f"(SELECT pri, qty FROM ({inner_b}) u WHERE 0.01 < d AND qty >= 5) t"
-    )
-    assert w1 is not None and w2 is not None and w1[0] == w2[0]
-    # a different predicate or a different GROUP BY still declines
-    w3 = _parse_derived_from(
-        f"(SELECT pri, qty FROM ({inner_a}) u WHERE qty >= 6 AND d > 0.01) t"
-    )
-    assert w3 is not None and w3[0] != w1[0]
     # end-to-end: the spelling variants land in ONE merged plan
     sqls = [
         f"SELECT pri, sum(qty) AS sq FROM (SELECT pri, qty, d FROM"
@@ -2807,11 +2025,11 @@ def test_derived_inner_where_conjuncts_sort(spark, executor):
 
 
 def test_comma_from_merged_plan_is_hash_join(spark, executor):
-    """The comma-FROM rewrite's merged emission (ON TRUE filler steps,
-    predicates end-loaded) must optimize to the SAME pushed hash-join
-    plan as the explicit spelling: one scan per base table, no
-    cartesian product, no nested-loop join — the 100 TB posture the
-    rewrite claims."""
+    """Comma-FROM members keep their join predicates in WHERE, under a
+    condition-less join. The merged aggregate filters that join by the
+    OR of the members' predicates, and Catalyst must still pull the
+    common join conjuncts out and plan hash joins: one scan per base
+    table, no cartesian product, no nested-loop join."""
     import re as _re
 
     sqls = [
@@ -2820,27 +2038,22 @@ def test_comma_from_merged_plan_is_hash_join(spark, executor):
         " WHERE o_orderkey = l_orderkey AND o_custkey = c_custkey"
         " AND l_quantity >= 10 GROUP BY o_orderpriority",
         "SELECT o_orderpriority, count(*) AS n"
-        " FROM customer, lineitem, orders"
+        " FROM orders, lineitem, customer"
         " WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey"
         " GROUP BY o_orderpriority",
     ]
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
+    jobs = _analyzed_jobs(spark, sqls)
     plans = plan_merges(jobs)
     assert len(plans) == 1 and len(plans[0].jobs) == 2
-    assert "ON TRUE" in plans[0].merged_sql or "ON true" in plans[0].merged_sql
-    merged = spark.sql(plans[0].merged_sql)
-    physical = merged._jdf.queryExecution().executedPlan().toString()
+    physical = _merged_physical(spark, [j.sql for j in plans[0].jobs])
     assert not _re.search(r"(?i)cartesian|nestedloop", physical), physical
     leaves = _re.findall(r"FileScan|BatchScan", physical)
     assert len(leaves) == 3  # one scan per base table, none duplicated
 
 
-def test_derived_inner_having_conjuncts_sort():
-    """Round 12: HAVING is σ over the grouped relation, so a derived
-    inner's HAVING conjuncts sort with the same normalization as WHERE
-    and ON; surrounding clauses stay opaque and load-bearing."""
-    from sparksql_server_spark.server.mrshare import _parse_derived_from
-
+def test_derived_inner_having_conjuncts_sort(spark):
+    """A derived inner's HAVING conjuncts commute like WHERE's; a
+    different HAVING bound does not."""
     inner_a = (
         "SELECT o_orderpriority AS pri, sum(l_quantity) AS sq,"
         " count(*) AS n FROM orders JOIN lineitem"
@@ -2853,105 +2066,51 @@ def test_derived_inner_having_conjuncts_sort():
         " on l_orderkey = o_orderkey group by o_orderpriority"
         " having count(*) > 2 and 100 < sum(l_quantity)"
     )
-    a = _parse_derived_from(f"({inner_a}) t")
-    b = _parse_derived_from(f"({inner_b}) t")
-    assert a is not None and b is not None and a[0] == b[0]
-    # a different HAVING bound declines
-    c = _parse_derived_from(f"({inner_a.replace('> 100', '> 101')}) t")
-    assert c is not None and c[0] != a[0]
-    # a different GROUP BY (before the HAVING) declines
-    d = _parse_derived_from(
-        f"({inner_a.replace('GROUP BY o_orderpriority', 'GROUP BY pri')}) t"
-    )
-    assert d is not None and d[0] != a[0]
+    inners = [inner_a, inner_b, inner_a.replace("> 100", "> 200")]
+    sqls = [f"SELECT pri, max(sq) AS m FROM ({i}) t GROUP BY pri" for i in inners]
+    assert _merge_sets(spark, sqls) == [[0, 1]]
 
 
-def test_query_organization_clauses_stay_out_of_conjunct_sets():
-    """Round-12 review wave (confirmed wrong-merge repro): DISTRIBUTE
-    BY / SORT BY / CLUSTER BY / WINDOW / QUALIFY text must never enter
-    a sorted conjunct set — ``WHERE a=1 AND p=2 DISTRIBUTE BY x`` and
-    ``WHERE p=2 DISTRIBUTE BY x AND a=1`` denote different relations
-    (the second's filter is only p=2; ``x AND a=1`` is the DISTRIBUTE
-    expression)."""
-    from sparksql_server_spark.server.mrshare import (
-        _norm_simple_comparison,
-        _parse_derived_from,
-    )
-
-    a = _parse_derived_from(
-        "(SELECT c FROM t1 JOIN t2 ON t1.k = t2.k"
-        " WHERE a=1 AND p = 2 DISTRIBUTE BY x) t"
-    )
-    b = _parse_derived_from(
-        "(SELECT c FROM t1 JOIN t2 ON t1.k = t2.k"
-        " WHERE p = 2 DISTRIBUTE BY x AND a=1) t"
-    )
-    assert a is not None and b is not None and a[0] != b[0]
-    # ...while conjunct swaps with IDENTICAL organization tails share
-    a2 = _parse_derived_from(
-        "(SELECT c FROM t1 JOIN t2 ON t1.k = t2.k"
-        " WHERE p = 2 AND a=1 DISTRIBUTE BY x) t"
-    )
-    assert a2 is not None and a2[0] == a[0]
-    # SORT BY after the ON position stays out of the join condition
-    c = _parse_derived_from(
-        "(SELECT c FROM t1 JOIN t2 ON t1.k = t2.k SORT BY x AND a=1) t"
-    )
-    d = _parse_derived_from(
-        "(SELECT c FROM t1 JOIN t2 ON a=1 AND t1.k = t2.k SORT BY x) t"
-    )
-    assert c is not None and d is not None and c[0] != d[0]
-    # the clause keywords are operand-unsafe (defense in depth)
-    assert _norm_simple_comparison("p = 2 distribute by x") is None
-    assert _norm_simple_comparison("p = 2 sort by x") is None
+def test_query_organization_clauses_stay_out_of_conjunct_sets(spark):
+    """``WHERE p AND a DISTRIBUTE BY x`` and ``WHERE p DISTRIBUTE BY x
+    AND a`` filter differently (the second's ``x AND a`` is the
+    DISTRIBUTE expression): Catalyst parses them apart, so they never
+    merge, while the conjunct swap of the first does."""
+    base = "SELECT l_returnflag AS rf, l_quantity AS q FROM lineitem WHERE "
+    froms = [
+        base + "l_linenumber = 1 AND l_tax > 0.02 DISTRIBUTE BY l_quantity > 1",
+        base + "l_linenumber = 1 DISTRIBUTE BY l_quantity > 1 AND l_tax > 0.02",
+        base + "l_tax > 0.02 AND l_linenumber = 1 DISTRIBUTE BY l_quantity > 1",
+    ]
+    sqls = [f"SELECT rf, count(*) AS n FROM ({f}) t GROUP BY rf" for f in froms]
+    assert _merge_sets(spark, sqls) == [[0, 2]]
 
 
-def test_norm_bool_tree_depth_backstop():
-    """Round-12 review wave: pathological paren nesting must fall back
-    to the opaque canon (narrowing sharing), never raise RecursionError
-    out of plan_merges and kill the batch."""
-    from sparksql_server_spark.server.mrshare import _norm_bool_tree
-
-    deep = "a=b"
-    for _ in range(1000):
-        deep = f"a=b OR ({deep})"
-    assert _norm_bool_tree(deep) is None  # no RecursionError
-    mod = "a=b"
-    for _ in range(30):
-        mod = f"c=d AND ({mod})"
-    assert _norm_bool_tree(mod) is not None  # moderate depth still admits
+def test_norm_bool_tree_depth_backstop(spark):
+    """A deeply nested predicate must not raise out of plan_merges and
+    kill the batch: two copies of it still merge."""
+    deep = "l_tax > 0"
+    for i in range(200):
+        deep = f"l_linenumber = {i % 7} OR ({deep})"
+    sql = f"SELECT l_returnflag, count(*) AS n FROM lineitem WHERE {deep} GROUP BY l_returnflag"
+    assert _merge_sets(spark, [sql, sql]) == [[0, 1]]
 
 
-def test_natural_join_declines_after_semi_anti():
-    """Round-12 review wave: a SEMI/ANTI right side contributes no
-    visible columns, so a later NATURAL step must not resolve its
-    common set against them — it declines instead of emitting an
-    unresolvable USING list."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    schemas = {
-        "a": ["id", "x"],
-        "b": ["id", "j"],
-        "c": ["j", "y"],
-        "t1": ["k", "a", "v1"],
-        "t2": ["k", "b", "v2"],
-    }
-    fn = lambda t: schemas.get(t.lower())  # noqa: E731
-
-    assert (
-        _parse_join_from("a SEMI JOIN b ON a.id = b.id NATURAL JOIN c", schema_fn=fn)
-        is None
-    )
-    assert (
-        _parse_join_from("a ANTI JOIN b ON a.id = b.id NATURAL JOIN c", schema_fn=fn)
-        is None
-    )
-    # NATURAL before the semi still resolves
-    r = _parse_join_from("t1 NATURAL JOIN t2 SEMI JOIN b ON t1.k = b.id", schema_fn=fn)
-    assert r is not None and "using (k)" in r[1]
+def test_natural_join_declines_after_semi_anti(spark, executor):
+    """NATURAL after SEMI/ANTI: the semi side contributes no columns;
+    Spark resolves (or rejects) the statement, and it never merges
+    wrongly."""
+    for kind in ("SEMI", "ANTI"):
+        _never_wrong(
+            spark,
+            executor,
+            f"SELECT n_name, count(*) AS c FROM nation n {kind} JOIN region r"
+            " ON n.n_regionkey = r.r_regionkey NATURAL JOIN customer"
+            " GROUP BY n_name",
+        )
 
 
-def test_scalar_subquery_member_never_merges():
+def test_scalar_subquery_member_never_merges(spark):
     """Round-12 wrong-merge regression: a member whose select item is a
     scalar subquery ``(SELECT max(..) FROM t)`` returns one value PER
     OUTER ROW (N rows), but classifying the embedded call as an outer
@@ -2960,107 +2119,69 @@ def test_scalar_subquery_member_never_merges():
     the merge path entirely."""
     sub = "SELECT (SELECT max(r_regionkey) FROM region) AS m FROM region"
     agg = "SELECT count(*) AS n FROM region"
-    jobs = [QueryJob(job_id=1, sql=sub), QueryJob(job_id=2, sql=agg)]
-    assert plan_merges(jobs) == []
+    assert plan_merges(_analyzed_jobs(spark, [sub, agg])) == []
     # and the batch still merges once the offender is out
-    jobs = [
-        QueryJob(job_id=2, sql=agg),
-        QueryJob(job_id=3, sql="SELECT sum(r_regionkey) AS s FROM region"),
-    ]
-    plans = plan_merges(jobs)
+    plans = plan_merges(
+        _analyzed_jobs(spark, [agg, "SELECT sum(r_regionkey) AS s FROM region"])
+    )
     assert len(plans) == 1 and len(plans[0].jobs) == 2
 
 
-def test_lambda_members_decline_everywhere():
-    """Round-12 review wave: a higher-order-function lambda parameter
-    can shadow the table alias — stripping the qualifier rewrites
-    ``x -> x.f`` to ``x -> f``, a DIFFERENT valid expression (the
-    outer column). Both parsers decline any statement with a lambda
-    arrow outside string literals."""
-    from sparksql_server_spark.server.mrshare import (
-        parse_select_query,
-        semantic_result_key,
-    )
-
-    agg = (
-        "SELECT sum(aggregate(arr, 0, (acc, x) -> acc + x.f)) AS s"
-        " FROM t x"
-    )
-    assert parse_agg_query(agg) is None
-    sel = "SELECT transform(arr, x -> x.f) AS r FROM t x"
-    assert parse_select_query(sel) is None
-    assert semantic_result_key(sel) is None
-    # an arrow INSIDE a string literal is data, not a lambda
-    ok = "SELECT count(*) AS n FROM t WHERE k <> 'a->b'"
-    assert parse_agg_query(ok) is not None
+def test_lambda_members_decline_everywhere(spark, executor):
+    """Higher-order functions with lambdas read as ordinary expressions
+    in the plan — a lambda variable never shadows a column — and such
+    members never merge wrongly."""
+    for sql in (
+        "SELECT l_returnflag, sum(aggregate(array(l_quantity, l_tax), 0D,"
+        " (acc, x) -> acc + x)) AS s FROM lineitem GROUP BY l_returnflag",
+        "SELECT l_returnflag, count(*) AS n FROM lineitem"
+        " WHERE exists(array(l_tax), l_tax -> l_tax > 0.05) GROUP BY l_returnflag",
+        "SELECT l_returnflag, count(*) AS n FROM lineitem"
+        " WHERE l_returnflag <> 'a->b' GROUP BY l_returnflag",
+    ):
+        _never_wrong(spark, executor, sql)
 
 
-def test_malformed_lists_decline():
-    """Round-12 review wave: _split_top drops empty segments, so
-    ``SELECT a, b, FROM t`` would key/merge equal to the valid
-    spelling and mask the engine's ParseException."""
-    from sparksql_server_spark.server.mrshare import (
-        parse_select_query,
-        semantic_result_key,
-    )
-
-    assert parse_agg_query(
-        "SELECT l_returnflag, count(*) AS n, FROM lineitem GROUP BY l_returnflag"
-    ) is None
-    assert parse_agg_query(
-        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag,"
-    ) is None
-    assert parse_select_query("SELECT a, b, FROM t") is None
-    assert parse_select_query("SELECT a, , b FROM t") is None
-    assert parse_select_query("SELECT a FROM t ORDER BY a,") is None
-    k1 = semantic_result_key("SELECT a, b, FROM t")
-    assert k1 is None
+def test_malformed_lists_decline(spark):
+    """Dangling commas are parse errors for Spark itself: the job fails
+    as standalone and the plan reader never sees it."""
+    for sql in (
+        "SELECT l_returnflag, count(*) AS n, FROM lineitem GROUP BY l_returnflag",
+        "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag,",
+    ):
+        with pytest.raises(Exception):
+            spark.sql(sql)
 
 
-def test_cte_inlines_to_derived_form():
-    """Round 12: a single non-recursive CTE referenced exactly once in
-    relation position inlines to the derived-table form, so the CTE
-    spelling shares signatures (and a merged evaluation) with the
-    derived-table spellings BI tools emit interchangeably."""
-    from sparksql_server_spark.server.mrshare import (
-        parse_select_query,
-        semantic_result_key,
-    )
-
+def test_cte_inlines_to_derived_form(spark):
+    """A CTE referenced once inlines (Catalyst's InlineCTE) to the
+    derived-table form, so the two spellings merge; a CTE in a join
+    operand reads too."""
     cte = (
         "WITH x AS (SELECT l_orderkey, l_quantity FROM lineitem"
         " WHERE l_tax < 0.05)"
         " SELECT l_orderkey, sum(l_quantity) AS s FROM x GROUP BY l_orderkey"
     )
     der = (
-        "SELECT l_orderkey, sum(l_quantity) AS s FROM"
+        "SELECT l_orderkey, count(*) AS c FROM"
         " (SELECT l_orderkey, l_quantity FROM lineitem WHERE l_tax < 0.05) x"
         " GROUP BY l_orderkey"
     )
-    p1, p2 = parse_agg_query(cte), parse_agg_query(der)
-    assert p1 is not None and p2 is not None
-    assert p1.signature == p2.signature
-    # the select shape gains WITH through the same rewrite
-    cs = (
-        "WITH x AS (SELECT r_regionkey AS k, r_name AS n FROM region)"
-        " SELECT k, n FROM x WHERE k > 1"
+    assert _merge_sets(spark, [cte, der]) == [[0, 1]]
+    assert isinstance(
+        _read(
+            spark,
+            "WITH x AS (SELECT o_orderkey AS k FROM orders)"
+            " SELECT count(*) AS c FROM lineitem JOIN x ON l_orderkey = x.k",
+        ),
+        AggShape,
     )
-    ds = (
-        "SELECT k, n FROM"
-        " (SELECT r_regionkey AS k, r_name AS n FROM region) x WHERE 1 < k"
-    )
-    assert semantic_result_key(cs) is not None
-    assert semantic_result_key(cs) == semantic_result_key(ds)
-    # CTE as a JOIN operand admits via the derived-operand machinery
-    assert parse_agg_query(
-        "WITH x AS (SELECT o_orderkey AS k FROM orders)"
-        " SELECT count(*) AS c FROM lineitem JOIN x ON l_orderkey = x.k"
-    ) is not None
 
 
-def test_cte_declines():
-    """Anything but the exact once-referenced single-CTE shape leaves
-    the statement untouched (and the parsers then decline WITH)."""
+def test_cte_declines(spark, executor):
+    """Recursive, unused or twice-referenced CTE definitions,
+    self-reference, a column named like the CTE, a nondeterministic
+    body: Catalyst resolves each, and none of them merges wrongly."""
     for sql in (
         "WITH RECURSIVE x AS (SELECT 1 AS n) SELECT count(*) AS c FROM x",
         "WITH x AS (SELECT 1 AS n), y AS (SELECT 2 AS m)"
@@ -3068,14 +2189,11 @@ def test_cte_declines():
         "WITH x AS (SELECT l_orderkey AS k FROM lineitem)"
         " SELECT count(*) AS c FROM x JOIN x ON 1=1",
         "WITH x AS (SELECT k FROM x) SELECT count(*) AS c FROM x",
-        # bare occurrence outside relation position (a select-list
-        # column sharing the CTE name) must decline, not rewrite
         "WITH x AS (SELECT 1 AS n) SELECT x, count(*) AS c FROM x GROUP BY x",
-        # nondeterministic body — the derived gate's cacheable bar
         "WITH x AS (SELECT rand() AS r FROM region)"
         " SELECT count(*) AS c FROM x",
     ):
-        assert parse_agg_query(sql) is None, sql
+        _never_wrong(spark, executor, sql)
 
 
 def test_cte_members_merge_matches_independent(spark, executor):
@@ -3099,68 +2217,96 @@ def test_cte_members_merge_matches_independent(spark, executor):
     assert len(bag.merges) == 1 and bag.rewrite is RewriteKind.MRSHARE
 
 
-def test_multi_cte_inlines_chain_and_join():
-    """Round 12: multiple CTEs admit when each name has exactly one
-    relation use in a strictly later scope — the staged chain
-    (``b`` reads ``a``) nests derived tables, the join-of-CTEs
-    spelling becomes derived join operands, and both share signatures
-    with their fully-inlined spellings."""
-    from sparksql_server_spark.server.mrshare import _inline_single_cte
-
+def test_multi_cte_inlines_chain_and_join(spark):
+    """Staged CTEs (``b`` reads ``a``) inline to nested derived tables,
+    and a join of two CTEs to derived join operands."""
     chain = (
-        "WITH a AS (SELECT l_orderkey AS k, l_quantity AS q FROM lineitem),"
-        " b AS (SELECT k, q * 2 AS w FROM a)"
-        " SELECT k, sum(w) AS s FROM b GROUP BY k"
+        "WITH a AS (SELECT l_orderkey, l_quantity FROM lineitem WHERE l_tax < 0.05),"
+        " b AS (SELECT l_orderkey, l_quantity FROM a WHERE l_quantity > 5)"
+        " SELECT l_orderkey, sum(l_quantity) AS s FROM b GROUP BY l_orderkey"
     )
-    inline = (
-        "SELECT k, sum(w) AS s FROM"
-        " (SELECT k, q * 2 AS w FROM"
-        " (SELECT l_orderkey AS k, l_quantity AS q FROM lineitem) a) b"
-        " GROUP BY k"
+    nested = (
+        "SELECT l_orderkey, count(*) AS c FROM (SELECT l_orderkey, l_quantity"
+        " FROM (SELECT l_orderkey, l_quantity FROM lineitem WHERE l_tax < 0.05) a"
+        " WHERE l_quantity > 5) b GROUP BY l_orderkey"
     )
-    p1, p2 = parse_agg_query(chain), parse_agg_query(inline)
-    assert p1 is not None and p2 is not None
-    assert p1.signature == p2.signature
-    # join of two CTEs -> derived join operands
-    assert _inline_single_cte(
-        "WITH a AS (SELECT k FROM t1), b AS (SELECT k FROM t2)"
-        " SELECT count(*) AS c FROM a JOIN b ON a.k = b.k"
-    ) == (
-        "SELECT count(*) AS c FROM (SELECT k FROM t1) a"
-        " JOIN (SELECT k FROM t2) b ON a.k = b.k"
+    assert _merge_sets(spark, [chain, nested]) == [[0, 1]]
+    joined = (
+        "WITH a AS (SELECT l_orderkey FROM lineitem), b AS (SELECT o_orderkey,"
+        " o_orderpriority FROM orders) SELECT o_orderpriority, count(*) AS c"
+        " FROM a JOIN b ON l_orderkey = o_orderkey GROUP BY o_orderpriority"
     )
-    # declines: double reference, forward reference, column-list head,
-    # duplicate names, too many bodies
-    for sql in (
-        "WITH a AS (SELECT k FROM t), b AS (SELECT k FROM a)"
-        " SELECT a.k FROM a JOIN b ON a.k = b.k",
-        "WITH a AS (SELECT k FROM b), b AS (SELECT 1 AS k)"
-        " SELECT k FROM a",
-        "WITH a (c1) AS (SELECT 1) SELECT c1 FROM a",
-        "WITH a AS (SELECT 1 AS k), a AS (SELECT 2 AS k) SELECT k FROM a",
-    ):
-        assert _inline_single_cte(sql) is None, sql
+    derived = (
+        "SELECT o_orderpriority, max(l_orderkey) AS m FROM (SELECT o_orderkey,"
+        " o_orderpriority FROM orders) b JOIN (SELECT l_orderkey FROM lineitem) a"
+        " ON l_orderkey = o_orderkey GROUP BY o_orderpriority"
+    )
+    assert _merge_sets(spark, [joined, derived]) == [[0, 1]]
 
 
-def test_is_distinct_from_never_misread_as_relation_use():
-    """Round-12 review: `x IS [NOT] DISTINCT FROM a` is the one
-    depth-0 FROM that introduces no relation — substituting there
-    would rewrite a column comparison into a scalar-subquery
-    comparison inside an opaque derived inner, where no downstream
-    bar catches it."""
-    from sparksql_server_spark.server.mrshare import (
-        _inline_single_cte,
-        semantic_result_key,
-    )
-
-    q = (
+def test_is_distinct_from_never_misread_as_relation_use(spark, executor):
+    """``x IS [NOT] DISTINCT FROM a`` inside a CTE body compares a
+    column, even when a CTE is named ``a``: the plan reader sees what
+    Spark resolved, and the statement never merges wrongly."""
+    _never_wrong(
+        spark,
+        executor,
         "WITH a AS (SELECT 1 AS k),"
-        " b AS (SELECT x FROM t WHERE x IS DISTINCT FROM a AND y = 1)"
-        " SELECT x, count(*) AS c FROM b GROUP BY x"
+        " b AS (SELECT l_returnflag AS x FROM lineitem"
+        " WHERE l_linenumber IS DISTINCT FROM 1 AND l_tax > 0)"
+        " SELECT x, count(*) AS c FROM b GROUP BY x",
     )
-    assert _inline_single_cte(q) is None
-    assert semantic_result_key(q) is None
-    assert _inline_single_cte(
-        "WITH a AS (SELECT 1 AS k) SELECT x, count(*) AS c FROM t"
-        " WHERE x IS NOT DISTINCT FROM a GROUP BY x"
-    ) is None
+
+
+
+
+def test_plan_reader_decline_reasons(spark):
+    """Each decline carries a short reason instead of a bare None."""
+    assert _read(
+        spark,
+        "SELECT l_returnflag, sum(l_quantity) AS s FROM lineitem"
+        " WHERE rand() < 0.5 GROUP BY l_returnflag",
+    ) == "nondeterministic"
+    assert _read(
+        spark, "SELECT (SELECT max(r_regionkey) FROM region) AS m FROM region"
+    ) == "subquery"
+    assert _read(
+        spark,
+        "SELECT l_returnflag, sum(sum(l_quantity)) OVER () AS s FROM lineitem"
+        " GROUP BY l_returnflag",
+    ) == "window"
+    assert _read(spark, "SELECT l_returnflag FROM lineitem") == "no aggregate"
+    jobs = _analyzed_jobs(
+        spark,
+        [
+            "SELECT count(*) AS n FROM region",
+            "SELECT count(*) AS n FROM nation",
+        ],
+    )
+    assert plan_merges(jobs) == []
+    assert [j.props["merge_declined"] for j in jobs] == ["relation differs"] * 2
+
+
+def test_under_floor_bag_reads_no_plan(spark, monkeypatch):
+    """The bag is priced before any plan is read: under the byte floor
+    (every sf0.001 table is) the plan reader is never called; with the
+    floor at 0 the same batch reads every member."""
+    from sparksql_server_spark.server import mrshare
+
+    calls = []
+    real = mrshare.read_plan
+    monkeypatch.setattr(mrshare, "read_plan", lambda p: calls.append(1) or real(p))
+    for floor, reads in ((64 << 20, 0), (0, len(SAME_SIG))):
+        calls.clear()
+        ex = BatchExecutor(
+            spark,
+            cache=CacheManager(spark, budget_bytes=1 << 30),
+            source_views=source_view_map(SF_DIR),
+            mrshare_min_bytes=floor,
+        )
+        jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
+        ex.run_batch(jobs)
+        assert all(j.status is JobStatus.DONE for j in jobs)
+        # the merge re-reads each member once more when it materializes
+        assert len(calls) == (0 if reads == 0 else 2 * reads)
+        ex.cache.clear()

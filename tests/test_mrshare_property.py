@@ -1,27 +1,43 @@
-"""Generative gate for the MRShare merge transformation.
+"""Generative gate for MRShare merges and plan-keyed result caching.
 
-The merge rewrite is engine-agnostic SQL -> SQL, so its semantics can
-be property-checked WITHOUT a JVM: run the original queries on DuckDB,
-run the merged SQL + per-job demux on DuckDB, compare. Hypothesis
-drives the query shapes (key subsets, predicate pools, aggregate pools,
-aliasing) far past what the hand-written cases in test_mrshare.py
-cover. Same-signature merges only — grouping_id() bit order is a
-Spark-specific pin (tests/test_mrshare.py covers it end-to-end).
+Two properties, both checked on Spark at sf0.001 (lineitem and friends)
+and on two tiny NULL-bearing views, ``t1``/``t2``:
+
+- merged == direct: a Hypothesis-drawn batch of aggregations over one
+  relation merges into ONE plan (server/mrshare.py), and every member's
+  demuxed rows equal its standalone run;
+- equal key => equal result: respellings Catalyst proves equivalent
+  (conjunct and disjunct order, mirrored comparisons, IN-list order,
+  BETWEEN vs its range, CTE vs derived table) share a result-cache key
+  (server/results.py) and compute the same rows, and two independently
+  drawn statements whose keys collide compute the same rows.
+
+Example counts are bounded so the whole file stays a few minutes of
+tier-1 time: each example analyzes and runs real Spark queries.
 """
 
 from __future__ import annotations
 
 import re
 
-import duckdb
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from sparksql_server_spark.catalog import register_tables
+from sparksql_server_spark.plans.catalyst import analyzed
 from sparksql_server_spark.server.model import QueryJob
-from sparksql_server_spark.server.mrshare import parse_agg_query, plan_merges
+from sparksql_server_spark.server.mrshare import (
+    AggShape,
+    build_merge,
+    plan_merges,
+    read_plan,
+    reread,
+)
+from sparksql_server_spark.server.results import ResultCache
+from tests.conftest import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
+EXAMPLES = 25
 
 KEYS = ["l_returnflag", "l_linestatus", "l_linenumber"]
 PREDS = [
@@ -44,7 +60,7 @@ AGGS = [
 ]
 
 
-# post-aggregation predicates (round-5 widening): HAVING is demux-only
+# post-aggregation predicates: HAVING is re-applied per member at demux
 HAVINGS = [
     None,
     "count(*) > 2",
@@ -96,400 +112,114 @@ def merge_batch(draw):
 
 
 @pytest.fixture(scope="module")
-def duck_li():
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM '{SF_DIR}/lineitem.parquet'"
+def tables(spark):
+    """The sf0.001 views plus two tiny join tables with NULLs in every
+    column — the regime where a rewrite that is only sound under
+    2-valued logic would diverge."""
+    register_tables(spark, SF_DIR)
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW t1 AS SELECT * FROM VALUES"
+        " (0, 1), (1, NULL), (2, 2), (NULL, 0), (1, 1) AS v(a, b)"
     )
-    yield con
-    con.close()
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW t2 AS SELECT * FROM VALUES"
+        " (0, NULL), (1, 2), (NULL, NULL), (2, 1), (1, 0) AS v(a, b)"
+    )
+    yield spark
+    spark.catalog.dropTempView("t1")
+    spark.catalog.dropTempView("t2")
 
 
-def _rows(con, sql):
-    out = []
-    for row in con.sql(sql).fetchall():
-        # floats normalize to 12 significant digits, not absolute
-        # decimals: double aggregation is summation-order-dependent in
-        # the last ulps, and on ~1e8-scale sums a 1e-6 ABSOLUTE round
-        # still exposes them (370219732.58 vs ...58000__1__)
-        norm = tuple(
-            float(f"{v:.12g}") if isinstance(v, float) else v for v in row
-        )
-        out.append(norm)
+def _rows(df):
+    """Sorted rows; floats to 12 significant digits (double aggregation
+    is summation-order-dependent in the last ulps)."""
+    out = [
+        tuple(float(f"{v:.12g}") if isinstance(v, float) else v for v in row)
+        for row in df.collect()
+    ]
     return sorted(out, key=repr)
 
 
-@settings(max_examples=60, deadline=None)
-@given(batch=merge_batch())
-def test_merged_demux_equals_direct_on_duckdb(duck_li, batch):
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(batch)]
-    for j in jobs:  # all generated shapes must be parseable...
-        assert parse_agg_query(j.sql) is not None, j.sql
+def _merged_equals_direct(spark, sqls):
+    """All of ``sqls`` merge into ONE plan, and each member's demuxed
+    rows equal its standalone run."""
+    jobs = [
+        QueryJob(job_id=i, sql=q, plan=analyzed(spark.sql(q)))
+        for i, q in enumerate(sqls)
+    ]
+    for j in jobs:
+        assert isinstance(read_plan(j.plan), AggShape), j.sql
     plans = plan_merges(jobs, max_distinct_aggs=10, cost_split=False)
-    # ...and same-signature batches must merge into ONE plan
-    assert len(plans) == 1 and len(plans[0].jobs) == len(jobs)
-    mp = plans[0]
-    duck_li.execute(f"CREATE OR REPLACE TEMP VIEW {mp.view} AS {mp.merged_sql}")
-    try:
-        for job in jobs:
-            direct = _rows(duck_li, job.sql)
-            merged = _rows(duck_li, mp.demux_sql[job.job_id])
-            assert merged == direct, (
-                f"divergence for {job.sql!r}\n merged sql: {mp.merged_sql}"
-            )
-    finally:
-        duck_li.execute(f"DROP VIEW IF EXISTS {mp.view}")
+    assert len(plans) == 1 and len(plans[0].jobs) == len(jobs), sqls
+    _, demux = build_merge(spark, reread(plans[0], spark))
+    for job, rows in zip(plans[0].jobs, demux):
+        assert _rows(rows) == _rows(spark.sql(job.sql)), f"divergence for {job.sql!r}"
 
 
-# ---------------------------------------------------------------------------
-# join-chain admission (rounds 6-8b): generative merged==direct gate over
-# every admitted join type, including cross-spelling merges (INNER/OUTER
-# keywords, bare vs LEFT SEMI/ANTI, RIGHT chains mirrored to LEFT)
+def _key(spark, sql):
+    return ResultCache.key(None, sql, spark)
 
 
-def _duck_dialect(sql: str) -> str:
-    """DuckDB spells Spark's LEFT SEMI/ANTI JOIN as bare SEMI/ANTI."""
-    import re
-
-    return re.sub(r"\bLEFT\s+(SEMI|ANTI)\s+JOIN\b", r"\1 JOIN", sql, flags=re.I)
+def _join_sql(cond):
+    return "SELECT t1.a, t1.b, t2.a, t2.b FROM t1 JOIN t2 ON " + cond
 
 
-# (signature-equal FROM spellings, key pool, agg pool, predicate pool)
+def _same_key_and_rows(spark, q1, q2):
+    k1, k2 = _key(spark, q1), _key(spark, q2)
+    assert k1 is not None and k1 == k2, f"{q1!r} vs {q2!r}"
+    assert _rows(spark.sql(q1)) == _rows(spark.sql(q2)), f"{q1!r} vs {q2!r}"
+
+
+def _key_equal_implies_rows_equal(spark, q1, q2):
+    """Vacuous for most draws by design: collisions are exactly what the
+    key claims equivalent."""
+    k1, k2 = _key(spark, q1), _key(spark, q2)
+    assert k1 is not None and k2 is not None
+    if k1 == k2:
+        assert _rows(spark.sql(q1)) == _rows(spark.sql(q2)), (
+            f"key-equal but result-different: {q1!r} vs {q2!r}"
+        )
+
+
+
+@settings(max_examples=EXAMPLES, deadline=None)
+@given(batch=merge_batch())
+def test_merged_demux_equals_direct_on_duckdb(tables, batch):
+    """Named for the engine the direct runs used before the merge moved
+    onto Catalyst plans; both sides now run on Spark."""
+    _merged_equals_direct(tables, batch)
+
+
 JOIN_POOLS = [
-    (
+    (  # inner star: operand order, INNER keyword, aliases, ON spelling
         [
-            "customer c JOIN orders o ON c_custkey = o_custkey",
-            "customer c INNER JOIN orders o ON c_custkey = o_custkey",
+            "lineitem JOIN orders ON l_orderkey = o_orderkey",
+            "orders JOIN lineitem ON o_orderkey = l_orderkey",
+            "orders o INNER JOIN lineitem l ON l.l_orderkey = o.o_orderkey",
+        ],
+        ["o_orderpriority", "o_orderstatus", "l_returnflag"],
+        ["count(*)", "sum(l_quantity)", "max(o_totalprice)", "avg(l_discount)",
+         "count(DISTINCT l_suppkey)"],
+        [None, "l_discount > 0.02", "o_totalprice > 100000", "l_quantity < -1"],
+    ),
+    (  # LEFT chain with real null extension, and its RIGHT mirror
+        [
+            "customer LEFT JOIN orders ON c_custkey = o_custkey",
+            "orders RIGHT JOIN customer ON o_custkey = c_custkey",
+            "customer c LEFT OUTER JOIN orders o ON o.o_custkey = c.c_custkey",
         ],
         ["c_mktsegment", "o_orderpriority"],
-        ["count(*)", "sum(o_totalprice)", "max(c_acctbal)", "min(o_orderdate)",
-         "count(DISTINCT o_orderpriority)"],
-        [None, "c_acctbal > 0", "o_totalprice > 50000",
-         "c_acctbal <= 0 AND o_totalprice > 10000"],
-    ),
-    (
-        [
-            "customer c LEFT JOIN orders o ON c_custkey = o_custkey",
-            "customer c LEFT OUTER JOIN orders o ON c_custkey = o_custkey",
-            "orders o RIGHT JOIN customer c ON c_custkey = o_custkey",
-            "orders o RIGHT OUTER JOIN customer c ON c_custkey = o_custkey",
-        ],
-        ["c_mktsegment"],
         ["count(*)", "count(o_orderkey)", "sum(o_totalprice)", "max(c_acctbal)"],
-        [None, "c_acctbal > 0", "c_acctbal <= 0"],
+        [None, "c_acctbal > 0", "o_totalprice > 100000"],
     ),
-    (
+    (  # FULL join, either operand order
         [
-            "customer c FULL JOIN orders o"
-            " ON c_custkey = o_custkey AND o_totalprice > 150000",
-            "customer c FULL OUTER JOIN orders o"
-            " ON c_custkey = o_custkey AND o_totalprice > 150000",
-            # round 9: FULL is symmetric — the mirror spelling shares
-            "orders o FULL JOIN customer c"
-            " ON c_custkey = o_custkey AND o_totalprice > 150000",
+            "customer FULL JOIN orders ON c_custkey = o_custkey AND o_totalprice > 150000",
+            "orders FULL JOIN customer ON o_totalprice > 150000 AND o_custkey = c_custkey",
         ],
-        ["c_mktsegment"],
+        ["c_mktsegment", "o_orderstatus"],
         ["count(*)", "count(o_orderkey)", "sum(o_totalprice)"],
-        [None, "c_acctbal > 1000"],
-    ),
-    (
-        [
-            "orders o SEMI JOIN lineitem l ON o.o_orderkey = l.l_orderkey",
-            "orders o LEFT SEMI JOIN lineitem l ON o.o_orderkey = l.l_orderkey",
-        ],
-        ["o_orderpriority", "o_orderstatus"],
-        ["count(*)", "sum(o_totalprice)", "min(o_orderdate)"],
-        [None, "o_totalprice > 50000", "o_totalprice <= 50000"],
-    ),
-    (
-        [
-            "orders o ANTI JOIN lineitem l ON o.o_orderkey = l.l_orderkey",
-            "orders o LEFT ANTI JOIN lineitem l ON o.o_orderkey = l.l_orderkey",
-        ],
-        ["o_orderpriority"],
-        ["count(*)", "max(o_totalprice)"],
-        [None, "o_totalprice > 50000"],
-    ),
-    (
-        [
-            # deep RIGHT (r8c): normalizes to orders LEFT JOIN
-            # (customer JOIN nation ...) via the parenthesized prefix
-            "customer c JOIN nation nt ON c.c_nationkey = nt.n_nationkey"
-            " RIGHT JOIN orders o ON c.c_custkey = o.o_custkey",
-            "customer c INNER JOIN nation nt ON c.c_nationkey = nt.n_nationkey"
-            " RIGHT OUTER JOIN orders o ON c.c_custkey = o.o_custkey",
-        ],
-        ["c_mktsegment"],
-        ["count(*)", "count(c_custkey)", "sum(o_totalprice)"],
-        [None, "o_totalprice > 50000", "c_acctbal > 0"],
-    ),
-    (
-        ["region r CROSS JOIN nation n"],
-        ["r_name"],
-        ["count(*)", "min(n_nationkey)", "count(DISTINCT n_regionkey)"],
-        [None, "n_regionkey = r_regionkey", "n_name < r_name"],
-    ),
-    (
-        ["lineitem a JOIN lineitem b USING (l_orderkey)"],
-        ["l_orderkey"],
-        ["count(*)", "max(a.l_tax)", "sum(b.l_quantity)"],
-        [None, "a.l_linenumber = 1", "b.l_quantity > 10"],
-    ),
-    (
-        # round-9: inner-join ORDER permutations share a signature (all
-        # four spellings are valid standalone and compute one relation)
-        [
-            "customer c JOIN orders o ON c.c_custkey = o.o_custkey"
-            " JOIN nation nt ON c.c_nationkey = nt.n_nationkey",
-            "customer c JOIN nation nt ON c.c_nationkey = nt.n_nationkey"
-            " JOIN orders o ON c.c_custkey = o.o_custkey",
-            "nation nt JOIN customer c ON c.c_nationkey = nt.n_nationkey"
-            " JOIN orders o ON c.c_custkey = o.o_custkey",
-            "orders o JOIN customer c ON c.c_custkey = o.o_custkey"
-            " JOIN nation nt ON c.c_nationkey = nt.n_nationkey",
-        ],
-        ["c_mktsegment", "o_orderpriority"],
-        ["count(*)", "sum(o_totalprice)", "max(c_acctbal)",
-         "count(DISTINCT nt.n_name)"],
-        [None, "c_acctbal > 0", "o_totalprice > 50000"],
-    ),
-    (
-        # round-9: derived-table FROM members — identical inner text
-        # modulo case/whitespace/alias shares one opaque signature token
-        [
-            "(SELECT l_returnflag AS rf, l_quantity AS qty, l_discount"
-            " AS disc, l_suppkey AS sk FROM lineitem WHERE l_linenumber <= 5) t",
-            "(select l_returnflag AS rf,  l_quantity AS qty, l_discount"
-            " AS disc, l_suppkey AS sk from LINEITEM where l_linenumber <= 5) u",
-        ],
-        ["rf"],
-        ["count(*)", "sum(qty)", "max(disc)", "count(DISTINCT sk)"],
-        [None, "disc > 0.02", "qty >= 25"],
-    ),
-    (
-        # round-9b: derived-table JOIN OPERANDS — inner case/ws variants
-        # and operand-order permutations share one signature
-        [
-            "(SELECT l_orderkey AS k, l_quantity AS qty FROM lineitem"
-            " WHERE l_linenumber <= 3) t JOIN orders o ON t.k = o.o_orderkey",
-            "(select l_orderkey AS k,  l_quantity AS qty from LINEITEM"
-            " where l_linenumber <= 3) t JOIN orders o ON t.k = o.o_orderkey",
-            "orders o JOIN (SELECT l_orderkey AS k, l_quantity AS qty"
-            " FROM lineitem WHERE l_linenumber <= 3) t ON t.k = o.o_orderkey",
-        ],
-        ["o_orderpriority"],
-        ["count(*)", "sum(qty)", "max(o_totalprice)"],
-        [None, "qty >= 25", "o_totalprice > 50000"],
-    ),
-    (
-        # round-10: ON-condition spelling variance — conjunct order,
-        # symmetric-operator operand order, inequality mirroring
-        # (a > b ≡ b < a), and != vs <> all canonicalize to one
-        # signature (VERDICT r9 ask #1)
-        [
-            "customer c JOIN orders o ON c.c_custkey = o.o_custkey"
-            " AND o.o_totalprice > 1000",
-            "customer c JOIN orders o ON o.o_totalprice > 1000"
-            " AND o.o_custkey = c.c_custkey",
-            "customer c INNER JOIN orders o ON 1000 < o.o_totalprice"
-            " AND c.c_custkey = o.o_custkey",
-        ],
-        ["c_mktsegment", "o_orderpriority"],
-        ["count(*)", "sum(o_totalprice)", "max(c_acctbal)"],
-        [None, "c_acctbal > 0", "o_orderstatus = 'F'"],
-    ),
-    (
-        # round-10: conjuncts POOL across an inner segment's ON
-        # clauses — which JOIN step a filter conjunct is spelled on is
-        # not semantics (σ commutes within the segment); <> and !=
-        # fold together with sorted operands
-        [
-            "customer c JOIN orders o ON c.c_custkey = o.o_custkey"
-            " JOIN nation nt ON c.c_nationkey = nt.n_nationkey"
-            " AND nt.n_regionkey <> 99",
-            "customer c JOIN nation nt ON nt.n_nationkey = c.c_nationkey"
-            " JOIN orders o ON o.o_custkey = c.c_custkey"
-            " AND 99 != nt.n_regionkey",
-        ],
-        ["c_mktsegment"],
-        ["count(*)", "sum(o_totalprice)", "max(nt.n_name)"],
         [None, "c_acctbal > 0"],
-    ),
-    (
-        # round-10: BETWEEN's AND is not a conjunction boundary; the
-        # surrounding conjuncts still sort around it
-        [
-            "customer c JOIN orders o ON c.c_custkey = o.o_custkey"
-            " AND o.o_totalprice BETWEEN 1000 AND 200000",
-            "customer c JOIN orders o ON o.o_totalprice BETWEEN 1000"
-            " AND 200000 AND c.c_custkey = o.o_custkey",
-        ],
-        ["o_orderpriority"],
-        ["count(*)", "min(o_orderdate)", "max(c_acctbal)"],
-        [None, "c_acctbal <= 0"],
-    ),
-    (
-        # round-10: USING column lists sort (the condition is a SET of
-        # column equalities; members are explicit-item aggregations so
-        # output-column order is unobservable)
-        [
-            "lineitem a JOIN lineitem b USING (l_orderkey, l_linenumber)",
-            "lineitem a JOIN lineitem b USING (l_linenumber, l_orderkey)",
-        ],
-        ["l_orderkey"],
-        ["count(*)", "max(a.l_tax)", "sum(b.l_quantity)"],
-        [None, "a.l_quantity > 10"],
-    ),
-    (
-        # round-10: derived tables whose INNER text is a join chain —
-        # inner join order and condition spelling canonicalize through
-        # the same segment signature (VERDICT r9 ask #2)
-        [
-            "(SELECT o_orderpriority AS pri, l_quantity AS qty,"
-            " l_discount AS disc FROM orders JOIN lineitem"
-            " ON o_orderkey = l_orderkey) t",
-            "(select o_orderpriority AS pri, l_quantity AS qty,"
-            " l_discount AS disc from lineitem join orders"
-            " on l_orderkey = o_orderkey) u",
-        ],
-        ["pri"],
-        ["count(*)", "sum(qty)", "max(disc)"],
-        [None, "disc > 0.02", "qty >= 25"],
-    ),
-    (
-        # round-10 review wave: a depth-0 OR suppresses the conjunct
-        # split, so OR-bearing conditions share only byte-canon-equal
-        # spellings (case/whitespace variants below) — and the merged
-        # demux must preserve the OR/AND precedence end-to-end
-        # (test_top_level_or_suppresses_conjunct_split pins that
-        # conjunct-permuted OR spellings do NOT share)
-        [
-            "lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey"
-            " OR l.l_partkey = o.o_custkey AND l.l_linenumber = 1",
-            "lineitem l join orders o on l.l_orderkey = o.o_orderkey"
-            "  OR   l.l_partkey = o.o_custkey  AND  l.l_linenumber = 1",
-        ],
-        ["o_orderstatus"],
-        ["count(*)", "sum(l.l_quantity)"],
-        [None, "o.o_totalprice > 1000"],
-    ),
-    (
-        # round-11 (VERDICT r10 ask #4): a pure OR-chain of simple
-        # comparisons sorts its disjunct set — parenthesized or bare,
-        # with comparison normalization applying INSIDE disjuncts —
-        # and pools with sibling conjuncts across spellings
-        [
-            "orders o JOIN lineitem l"
-            " ON o.o_orderkey = l.l_orderkey"
-            " AND (l.l_discount > 0.05 OR l.l_tax < 0.03)",
-            "orders o JOIN lineitem l"
-            " ON (0.03 > l.l_tax OR l.l_discount > 0.05)"
-            " AND l.l_orderkey = o.o_orderkey",
-            "orders o INNER JOIN lineitem l"
-            " ON (l.l_tax < 0.03 OR l.l_discount > 0.05)"
-            " AND o.o_orderkey = l.l_orderkey",
-        ],
-        ["o_orderpriority"],
-        ["count(*)", "sum(l.l_quantity)", "max(o.o_totalprice)"],
-        [None, "l.l_quantity >= 10", "o.o_totalprice > 50000"],
-    ),
-    (
-        # round-11: the bare whole-condition OR chain shares with its
-        # parenthesized spelling (parenthesizing a whole boolean term
-        # is a no-op) and with the disjunct permutation
-        [
-            "lineitem l JOIN orders o"
-            " ON l.l_orderkey = o.o_orderkey OR l.l_partkey = o.o_custkey",
-            "lineitem l JOIN orders o"
-            " ON (o.o_custkey = l.l_partkey OR o.o_orderkey = l.l_orderkey)",
-        ],
-        ["o_orderstatus"],
-        ["count(*)", "sum(l.l_quantity)"],
-        [None, "o.o_totalprice > 1000"],
-    ),
-    (
-        # round-11 (VERDICT r10 ask #5): TWO-level derived members —
-        # the inner FROM is itself a derived table whose innermost
-        # join chain permutes/respells; the nested alias must match
-        [
-            "(SELECT pri, qty FROM (SELECT o_orderpriority AS pri,"
-            " l_quantity AS qty FROM orders JOIN lineitem"
-            " ON o_orderkey = l_orderkey) u WHERE qty >= 5) t",
-            "(select pri, qty from (select o_orderpriority as pri,"
-            " l_quantity as qty from lineitem join orders"
-            " on l_orderkey = o_orderkey) u where qty >= 5) v",
-        ],
-        ["pri"],
-        ["count(*)", "sum(qty)", "max(qty)"],
-        [None, "qty >= 25"],
-    ),
-    (
-        # round-11 (VERDICT r10 gap #3): ordinal-free bare-star derived
-        # wrappers — the inner column order is unobservable (outer
-        # references by name; no ordinal, no LIMIT), so operand-order
-        # permutations of the inner chain share
-        [
-            "(SELECT * FROM orders JOIN lineitem"
-            " ON o_orderkey = l_orderkey) t",
-            "(select * from lineitem join orders"
-            " on l_orderkey = o_orderkey) u",
-        ],
-        ["o_orderpriority"],
-        ["count(*)", "sum(l_quantity)", "max(l_extendedprice)"],
-        [None, "l_discount > 0.02", "l_quantity >= 25"],
-    ),
-    (
-        # round-9: permutation WITHIN the inner segment after a LEFT
-        # boundary (both inner operands hang off the head/boundary
-        # relations, so both orders are valid)
-        [
-            "customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey"
-            " JOIN nation nt ON c.c_nationkey = nt.n_nationkey"
-            " JOIN lineitem l ON l.l_orderkey = o.o_orderkey",
-            "customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey"
-            " JOIN lineitem l ON l.l_orderkey = o.o_orderkey"
-            " JOIN nation nt ON c.c_nationkey = nt.n_nationkey",
-        ],
-        ["c_mktsegment"],
-        ["count(*)", "sum(l.l_quantity)", "max(nt.n_name)"],
-        [None, "c.c_acctbal > 0"],
-    ),
-    (
-        # round-12: comma-FROM members rewrite to the explicit inner
-        # chain with their WHERE equi-conjunct migrated into ON, so
-        # they merge with each other AND with the JOIN spelling.
-        # Every pred carries the equi conjunct (in some spelling) so
-        # all variants land on the same pooled condition set.
-        [
-            "customer c, orders o",
-            "orders o, customer c",
-            "customer c JOIN orders o ON c_custkey = o_custkey",
-        ],
-        ["c_mktsegment", "o_orderpriority"],
-        ["count(*)", "sum(o_totalprice)", "max(c_acctbal)"],
-        [
-            "c_custkey = o_custkey",
-            "o_custkey = c_custkey AND c_acctbal > 0",
-            "o_totalprice > 50000 AND c_custkey = o_custkey",
-            "c_custkey = o_custkey AND c_acctbal <= 0"
-            " AND o_totalprice > 10000",
-        ],
-    ),
-    (
-        # round-12: a comma product with NO equi conjunct rewrites to a
-        # CROSS chain and merges with the explicit CROSS spellings
-        # (CROSS folds into the inner segment, so operand order is
-        # free); non-equi col-col predicates stay in WHERE on every
-        # spelling
-        [
-            "region r, nation n",
-            "nation n, region r",
-            "region r CROSS JOIN nation n",
-            "nation n CROSS JOIN region r",
-        ],
-        ["r_name"],
-        ["count(*)", "min(n_nationkey)", "count(DISTINCT n_regionkey)"],
-        [None, "n_name < r_name", "n_regionkey > r_regionkey"],
     ),
 ]
 
@@ -517,53 +247,48 @@ def join_batch(draw):
     return out
 
 
-@pytest.fixture(scope="module")
-def duck_tpch():
-    con = duckdb.connect()
-    for t in ["customer", "orders", "lineitem", "region", "nation"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    yield con
-    con.close()
-
-
-@settings(max_examples=60, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(batch=join_batch())
-def test_join_chain_merged_demux_equals_direct_on_duckdb(duck_tpch, batch):
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(batch)]
-    for j in jobs:
-        assert parse_agg_query(j.sql) is not None, j.sql
-    plans = plan_merges(jobs, max_distinct_aggs=10, cost_split=False)
-    # spelling variants of one chain share a signature -> ONE plan
-    assert len(plans) == 1 and len(plans[0].jobs) == len(jobs)
-    mp = plans[0]
-    duck_tpch.execute(
-        f"CREATE OR REPLACE TEMP VIEW {mp.view} AS {_duck_dialect(mp.merged_sql)}"
+def test_join_chain_merged_demux_equals_direct_on_duckdb(tables, batch):
+    _merged_equals_direct(tables, batch)
+
+
+def test_natural_join_merged_demux_equals_direct_on_duckdb(tables):
+    """NATURAL members and their USING respellings merge into one plan
+    whose demux equals the standalone runs (swapped NATURAL operands are
+    a different relation — drop list)."""
+    spark = tables
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW nat_a AS SELECT l_orderkey AS k,"
+        " l_quantity AS qa, l_discount AS da FROM lineitem"
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW nat_b AS SELECT o_orderkey AS k,"
+        " o_totalprice AS pb, o_orderpriority AS pri FROM orders"
     )
     try:
-        for job in jobs:
-            direct = _rows(duck_tpch, _duck_dialect(job.sql))
-            merged = _rows(duck_tpch, mp.demux_sql[job.job_id])
-            assert merged == direct, (
-                f"divergence for {job.sql!r}\n merged sql: {mp.merged_sql}"
-            )
+        _merged_equals_direct(
+            spark,
+            [
+                "SELECT pri, sum(qa) AS s FROM nat_a NATURAL JOIN nat_b"
+                " WHERE da > 0.02 GROUP BY pri",
+                "SELECT pri, count(*) AS n FROM nat_a JOIN nat_b USING (k)"
+                " GROUP BY pri",
+                "SELECT pri, min(qa) AS mn FROM nat_a JOIN nat_b USING (k)"
+                " WHERE pb > 1000 GROUP BY pri",
+            ],
+        )
     finally:
-        duck_tpch.execute(f"DROP VIEW IF EXISTS {mp.view}")
+        spark.catalog.dropTempView("nat_a")
+        spark.catalog.dropTempView("nat_b")
 
 
 # ---------------------------------------------------------------------------
-# condition-canonicalizer soundness (round 11): the property the merge
-# path actually rests on is SIGNATURE-EQUAL => RELATION-EQUAL. Random
-# AND/OR condition trees are rendered twice — once verbatim, once
-# re-spelled by exactly the commutations the canonicalizer claims are
-# semantics-free (conjunct order, disjunct order inside a pure paren-OR
-# group, symmetric-operand swap, inequality mirroring, != <-> <>) — and
-# both the positive direction (the re-spelling shares the signature)
-# and the soundness direction (ANY sig-equal pair of generated
-# conditions, including unrelated random ones, computes the same join
-# relation on NULL-bearing data in DuckDB) are asserted.
-
+# equal key => equal result over random ON conditions. Each condition is
+# rendered twice — plainly, and re-spelled by rewrites Catalyst's
+# canonical form erases (conjunct/disjunct order, operand swap of
+# symmetric operators, inequality mirroring, != <-> <>) — and both
+# directions are asserted on the NULL-bearing t1/t2.
 
 _COLS = ["t1.a", "t1.b", "t2.a", "t2.b"]
 _CONSTS = ["0", "1", "2", "NULL"]
@@ -572,8 +297,10 @@ _OPS = ["=", "<", ">", "<=", ">=", "<>", "!="]
 
 @st.composite
 def _atom(draw):
+    # a column compared with itself is degenerate: Catalyst orders
+    # comparison operands by hash, and equal operands cannot be ordered
     lhs = draw(st.sampled_from(_COLS))
-    rhs = draw(st.sampled_from(_COLS + _CONSTS))
+    rhs = draw(st.sampled_from([c for c in _COLS + _CONSTS if c != lhs]))
     op = draw(st.sampled_from(_OPS))
     return (lhs, op, rhs)
 
@@ -581,7 +308,7 @@ def _atom(draw):
 @st.composite
 def _cond_tree(draw):
     """[conjunct, ...] where a conjunct is an atom or a pure OR-group
-    (list of atoms). Exactly the grammar the canonicalizer admits."""
+    (list of atoms)."""
     n = draw(st.integers(1, 3))
     out = []
     for _ in range(n):
@@ -628,78 +355,25 @@ def _render(draw, tree, respell):
     return " AND ".join(parts)
 
 
-@pytest.fixture(scope="module")
-def duck_nulls():
-    """Tiny join tables with NULLs in every column — the regime where a
-    canonicalization that is only 2-valued-logic-sound would diverge."""
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE t1 AS SELECT * FROM (VALUES"
-        " (0, 1), (1, NULL), (2, 2), (NULL, 0), (1, 1)) v(a, b)"
-    )
-    con.execute(
-        "CREATE TABLE t2 AS SELECT * FROM (VALUES"
-        " (0, NULL), (1, 2), (NULL, NULL), (2, 1), (1, 0)) v(a, b)"
-    )
-    yield con
-    con.close()
-
-
-def _join_rows(con, cond):
-    rows = con.sql(
-        "SELECT t1.a, t1.b, t2.a, t2.b FROM t1 JOIN t2 ON " + cond
-    ).fetchall()
-    return sorted(rows, key=repr)
-
-
-@settings(max_examples=120, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(data=st.data())
-def test_condition_respellings_share_signature_and_relation(duck_nulls, data):
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
+def test_condition_respellings_share_signature_and_relation(tables, data):
     tree = data.draw(_cond_tree())
     c1 = data.draw(_render(tree, False))
     c2 = data.draw(_render(tree, True))
-    s1 = _parse_join_from(f"t1 JOIN t2 ON {c1}")
-    s2 = _parse_join_from(f"t1 JOIN t2 ON {c2}")
-    assert s1 is not None and s2 is not None
-    # positive direction: the allowed commutations preserve the signature
-    assert s1[0] == s2[0], f"{c1!r} vs {c2!r}"
-    # soundness direction on the same pair: identical relation under 3VL
-    assert _join_rows(duck_nulls, c1) == _join_rows(duck_nulls, c2), (
-        f"{c1!r} vs {c2!r}"
-    )
+    _same_key_and_rows(tables, _join_sql(c1), _join_sql(c2))
 
 
-@settings(max_examples=120, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(data=st.data())
-def test_sig_equal_random_conditions_compute_equal_relations(duck_nulls, data):
-    """The pure soundness gate: two INDEPENDENTLY drawn conditions that
-    happen to share a signature must compute the same relation. (Most
-    draws differ — the assertion is vacuous there by design; collisions
-    are exactly the cases the canonicalizer equates.)"""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
+def test_sig_equal_random_conditions_compute_equal_relations(tables, data):
     c1 = data.draw(_render(data.draw(_cond_tree()), True))
     c2 = data.draw(_render(data.draw(_cond_tree()), True))
-    s1 = _parse_join_from(f"t1 JOIN t2 ON {c1}")
-    s2 = _parse_join_from(f"t1 JOIN t2 ON {c2}")
-    assert s1 is not None and s2 is not None
-    if s1[0] == s2[0]:
-        assert _join_rows(duck_nulls, c1) == _join_rows(duck_nulls, c2), (
-            f"sig-equal but relation-different: {c1!r} vs {c2!r}"
-        )
+    _key_equal_implies_rows_equal(tables, _join_sql(c1), _join_sql(c2))
 
 
-# ---------------------------------------------------------------------------
-# round 12 (VERDICT r11 ask #3): the canonicalizer now admits arbitrary
-# AND/OR trees of simple comparisons under SQL precedence (OR loosest,
-# parens group). Random NESTED trees are rendered twice — once plainly,
-# once re-spelled by exactly the claimed-semantics-free rewrites
-# (children permute at every node, same-operator nesting flattens or
-# re-parenthesizes, atoms mirror/swap) — and both directions are
-# asserted on the NULL-bearing DuckDB tables.
-
+# nested AND/OR trees under SQL precedence: children permute at every
+# node, same-operator nesting flattens or re-parenthesizes
 
 @st.composite
 def _bool_tree_node(draw, depth=0):
@@ -727,78 +401,43 @@ def _render_btree(draw, node, respell, parent_op=None):
     return body
 
 
-@settings(max_examples=120, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(data=st.data())
-def test_nested_tree_respellings_share_signature_and_relation(duck_nulls, data):
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
+def test_nested_tree_respellings_share_signature_and_relation(tables, data):
     tree = data.draw(_bool_tree_node())
     c1 = _render_btree(data.draw, tree, False)
     c2 = _render_btree(data.draw, tree, True)
-    s1 = _parse_join_from(f"t1 JOIN t2 ON {c1}")
-    s2 = _parse_join_from(f"t1 JOIN t2 ON {c2}")
-    assert s1 is not None and s2 is not None
-    assert s1[0] == s2[0], f"{c1!r} vs {c2!r}"
-    assert _join_rows(duck_nulls, c1) == _join_rows(duck_nulls, c2), (
-        f"{c1!r} vs {c2!r}"
-    )
+    _same_key_and_rows(tables, _join_sql(c1), _join_sql(c2))
 
 
-@settings(max_examples=150, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(data=st.data())
-def test_sig_equal_random_nested_trees_compute_equal_relations(duck_nulls, data):
-    """Soundness gate over the widened grammar: two INDEPENDENTLY drawn
-    nested AND/OR conditions that happen to share a signature must
-    compute the same relation under 3VL."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
+def test_sig_equal_random_nested_trees_compute_equal_relations(tables, data):
     c1 = _render_btree(data.draw, data.draw(_bool_tree_node()), True)
     c2 = _render_btree(data.draw, data.draw(_bool_tree_node()), True)
-    s1 = _parse_join_from(f"t1 JOIN t2 ON {c1}")
-    s2 = _parse_join_from(f"t1 JOIN t2 ON {c2}")
-    assert s1 is not None and s2 is not None
-    if s1[0] == s2[0]:
-        assert _join_rows(duck_nulls, c1) == _join_rows(duck_nulls, c2), (
-            f"sig-equal but relation-different: {c1!r} vs {c2!r}"
-        )
+    _key_equal_implies_rows_equal(tables, _join_sql(c1), _join_sql(c2))
 
 
-def test_mixed_precedence_known_pairs(duck_nulls):
-    """Pin the r10 wrong-merge pair DISTINCT while its parenthesized
-    disambiguations merge — the exact line the round-12 widening must
-    not cross."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
-    def sig(c):
-        p = _parse_join_from(f"t1 JOIN t2 ON {c}")
-        assert p is not None
-        return p[0]
-
-    # OR binds loosest: these two denote different relations
-    a = "t1.a = t2.a OR t1.b = t2.b AND t1.a = 0"
-    b = "t1.b = t2.b AND t1.a = t2.a OR t1.a = 0"
-    assert sig(a) != sig(b)
-    assert _join_rows(duck_nulls, a) != _join_rows(duck_nulls, b)
-    # the precedence-faithful respelling of `a` DOES merge with it
-    a2 = "(t1.b = t2.b AND t1.a = 0) OR t1.a = t2.a"
-    assert sig(a) == sig(a2)
-    assert _join_rows(duck_nulls, a) == _join_rows(duck_nulls, a2)
-    # paren-wrapped conjunction ≡ split conjunction (token splice)
-    assert sig("(t1.a = t2.a AND t1.b = t2.b)") == sig(
-        "t1.b = t2.b AND t1.a = t2.a"
+def test_mixed_precedence_known_pairs(tables):
+    """The round-10 wrong-merge pair keys apart while its parenthesized
+    disambiguation keys together."""
+    spark = tables
+    a = _join_sql("t1.a = t2.a OR t1.b = t2.b AND t1.a = 0")
+    b = _join_sql("t1.b = t2.b AND t1.a = t2.a OR t1.a = 0")
+    assert _key(spark, a) != _key(spark, b)
+    assert _rows(spark.sql(a)) != _rows(spark.sql(b))
+    _same_key_and_rows(spark, a, _join_sql("(t1.b = t2.b AND t1.a = 0) OR t1.a = t2.a"))
+    _same_key_and_rows(
+        spark,
+        _join_sql("(t1.a = t2.a AND t1.b = t2.b)"),
+        _join_sql("t1.b = t2.b AND t1.a = t2.a"),
     )
 
 
-# ---------------------------------------------------------------------------
-# round 12 leaf widenings: IN-lists (≡ OR-of-equalities, sorted/deduped,
-# singleton folds to =), NOT IN (≡ AND of <>), BETWEEN (≡ range pair),
-# NOT BETWEEN (≡ OR of violations), IS [NOT] NULL leaves. Random nested
-# trees over the widened atom grammar are rendered plainly and re-spelled
-# by exactly the claimed-semantics-free rewrites (IN ↔ chain expansion,
-# item permutation/duplication, BETWEEN ↔ range spelling, plus all the
-# r10-r12 commutations), asserted in both directions on the NULL-bearing
-# DuckDB tables — the regime where a 2VL-only rewrite would diverge.
-
+# widened leaves: IN lists (item order), NOT IN, BETWEEN (vs its spelled
+# range), NOT BETWEEN, IS [NOT] NULL, IS [NOT] DISTINCT FROM. An IN list
+# and its OR chain are NOT respellings here: Catalyst keeps In and Or
+# apart (drop list in CHANGES.md).
 
 @st.composite
 def _pred_atom(draw):
@@ -828,8 +467,9 @@ def _pred_atom(draw):
         return ("in", lhs, items, draw(st.booleans()))
     if kind == "between":
         lhs = draw(st.sampled_from(_COLS))
-        lo = draw(st.sampled_from(_COLS + _CONSTS))
-        hi = draw(st.sampled_from(_COLS + _CONSTS))
+        bounds = [c for c in _COLS + _CONSTS if c != lhs]
+        lo = draw(st.sampled_from(bounds))
+        hi = draw(st.sampled_from(bounds))
         return ("between", lhs, lo, hi, draw(st.booleans()))
     return ("isnull", draw(st.sampled_from(_COLS)), draw(st.booleans()))
 
@@ -851,31 +491,17 @@ def _render_pred(draw, a, respell):
         return f"{lhs} {mid} {rhs}"
     if a[0] == "between":
         _, lhs, lo, hi, neg = a
-        if not respell or draw(st.booleans()):
+        if neg or not respell or draw(st.booleans()):
             return f"{lhs} {'NOT ' if neg else ''}BETWEEN {lo} AND {hi}"
         # spell the range out (the equivalence under test)
-        if neg:
-            parts = [(lhs, "<", lo), (lhs, ">", hi)]
-            joiner = " OR "
-        else:
-            parts = [(lhs, ">=", lo), (lhs, "<=", hi)]
-            joiner = " AND "
-        parts = list(draw(st.permutations(parts)))
-        body = joiner.join(_render_atom(p, True, draw) for p in parts)
+        parts = list(draw(st.permutations([(lhs, ">=", lo), (lhs, "<=", hi)])))
+        body = " AND ".join(_render_atom(p, True, draw) for p in parts)
         return f"({body})"
     _, lhs, items, neg = a
     items = list(items)
-    if not respell or draw(st.booleans()):
-        if respell:
-            items = list(draw(st.permutations(items)))
-            if draw(st.booleans()):
-                items.append(draw(st.sampled_from(items)))  # duplicate
-        return f"{lhs} {'NOT ' if neg else ''}IN ({', '.join(items)})"
-    # chain expansion (the equivalence under test)
-    op, joiner = ("<>", " AND ") if neg else ("=", " OR ")
-    items = list(draw(st.permutations(items)))
-    body = joiner.join(_render_atom((lhs, op, it), True, draw) for it in items)
-    return f"({body})"
+    if respell:
+        items = list(draw(st.permutations(items)))
+    return f"{lhs} {'NOT ' if neg else ''}IN ({', '.join(items)})"
 
 
 @st.composite
@@ -901,108 +527,28 @@ def _render_ptree(draw, node, respell, parent_op=None):
     return body
 
 
-@settings(max_examples=120, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(data=st.data())
-def test_widened_leaf_respellings_share_signature_and_relation(
-    duck_nulls, data
-):
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
+def test_widened_leaf_respellings_share_signature_and_relation(tables, data):
     tree = data.draw(_pred_tree_node())
     c1 = _render_ptree(data.draw, tree, False)
     c2 = _render_ptree(data.draw, tree, True)
-    s1 = _parse_join_from(f"t1 JOIN t2 ON {c1}")
-    s2 = _parse_join_from(f"t1 JOIN t2 ON {c2}")
-    assert s1 is not None and s2 is not None
-    assert s1[0] == s2[0], f"{c1!r} vs {c2!r}"
-    assert _join_rows(duck_nulls, c1) == _join_rows(duck_nulls, c2), (
-        f"{c1!r} vs {c2!r}"
-    )
+    _same_key_and_rows(tables, _join_sql(c1), _join_sql(c2))
 
 
-@settings(max_examples=150, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(data=st.data())
-def test_sig_equal_widened_leaf_trees_compute_equal_relations(
-    duck_nulls, data
-):
-    """Soundness gate over the leaf-widened grammar: two INDEPENDENTLY
-    drawn conditions (IN ↔ chain, BETWEEN ↔ range collisions included)
-    that share a signature must compute the same relation under 3VL."""
-    from sparksql_server_spark.server.mrshare import _parse_join_from
-
+def test_sig_equal_widened_leaf_trees_compute_equal_relations(tables, data):
     c1 = _render_ptree(data.draw, data.draw(_pred_tree_node()), True)
     c2 = _render_ptree(data.draw, data.draw(_pred_tree_node()), True)
-    s1 = _parse_join_from(f"t1 JOIN t2 ON {c1}")
-    s2 = _parse_join_from(f"t1 JOIN t2 ON {c2}")
-    assert s1 is not None and s2 is not None
-    if s1[0] == s2[0]:
-        assert _join_rows(duck_nulls, c1) == _join_rows(duck_nulls, c2), (
-            f"sig-equal but relation-different: {c1!r} vs {c2!r}"
-        )
+    _key_equal_implies_rows_equal(tables, _join_sql(c1), _join_sql(c2))
 
 
-def test_natural_join_merged_demux_equals_direct_on_duckdb(duck_tpch):
-    """Round 12: NATURAL members (schema_fn-resolved), their USING
-    respellings, and operand swaps share ONE merged plan whose demux
-    results equal the direct DuckDB runs — engine-independent proof of
-    the catalog-resolved rewrite. Views with a shared column name are
-    built over TPC-H parquet (prefix naming means base tables share
-    nothing)."""
-    duck_tpch.execute(
-        "CREATE OR REPLACE VIEW nat_a AS SELECT l_orderkey AS k,"
-        " l_quantity AS qa, l_discount AS da FROM lineitem"
-    )
-    duck_tpch.execute(
-        "CREATE OR REPLACE VIEW nat_b AS SELECT o_orderkey AS k,"
-        " o_totalprice AS pb, o_orderpriority AS pri FROM orders"
-    )
-    schemas = {
-        "nat_a": ["k", "qa", "da"],
-        "nat_b": ["k", "pb", "pri"],
-    }
-    fn = lambda t: schemas.get(t.lower())  # noqa: E731
-    sqls = [
-        "SELECT pri, sum(qa) AS s FROM nat_a NATURAL JOIN nat_b"
-        " WHERE da > 0.02 GROUP BY pri",
-        "SELECT pri, count(*) AS n FROM nat_a JOIN nat_b USING (k)"
-        " GROUP BY pri",
-        "SELECT pri, max(pb) AS m FROM nat_b NATURAL JOIN nat_a"
-        " GROUP BY pri",
-        "SELECT pri, min(qa) AS mn FROM nat_b JOIN nat_a USING (k)"
-        " WHERE pb > 1000 GROUP BY pri",
-    ]
-    jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
-    plans = plan_merges(
-        jobs, cost_split=False, schema_fn_for=lambda job: fn
-    )
-    assert len(plans) == 1 and len(plans[0].jobs) == 4
-    mp = plans[0]
-    duck_tpch.execute(
-        f"CREATE OR REPLACE TEMP VIEW {mp.view} AS {_duck_dialect(mp.merged_sql)}"
-    )
-    try:
-        for job in jobs:
-            direct = _rows(duck_tpch, _duck_dialect(job.sql))
-            merged = _rows(duck_tpch, mp.demux_sql[job.job_id])
-            assert merged == direct, (
-                f"divergence for {job.sql!r}\n merged sql: {mp.merged_sql}"
-            )
-    finally:
-        duck_tpch.execute(f"DROP VIEW IF EXISTS {mp.view}")
-        duck_tpch.execute("DROP VIEW IF EXISTS nat_a")
-        duck_tpch.execute("DROP VIEW IF EXISTS nat_b")
-
-
-# ---------------------------------------------------------------------------
-# round 12: projection/selection semantic result keys. The property the
-# result cache rests on is KEY-EQUAL => RESULT-EQUAL (values as a
-# multiset AND client-visible column names). Random single-table
-# selects over the NULL-bearing t1 are drawn as a STRUCTURE and
-# rendered twice — once plainly, once re-spelled by exactly the
-# claimed-unobservable rewrites (keyword case, qualified vs bare
-# column refs, aliased-expression case/whitespace, conjunct/mirror
-# respelling of the WHERE, trailing ASC) — and both directions are
-# asserted on DuckDB.
+# projection/selection keys: values AND column names must agree for
+# equal keys. Random selects over t1 are drawn as a structure and
+# rendered twice — plainly and re-spelled (keyword case, qualified vs
+# bare columns, expression case/whitespace, WHERE respelling, trailing
+# ASC, CTE vs derived table).
 
 _SEL_ITEMS = [
     ("col", "a"),
@@ -1011,9 +557,17 @@ _SEL_ITEMS = [
     ("expr", "a * 2", "d2"),
     ("expr", "coalesce(b, 0)", "cb"),
     # window item over a TOTAL order (t1's (a, b) pairs are unique), so
-    # both renderings are deterministic on DuckDB
+    # both renderings are deterministic
     ("expr", "row_number() over (order by a, b)", "rn"),
 ]
+
+
+def _no_self_compare_on_t1(tree) -> bool:
+    """Selects read t1 only (t2 columns are renamed to t1's): keep the
+    atoms whose sides stay distinct after the rename."""
+    atoms = [c for conj in tree for c in ([conj] if isinstance(conj, tuple) else conj)]
+    t1 = lambda side: side.replace("t2.", "t1.")  # noqa: E731
+    return all(t1(lhs) != t1(rhs) for lhs, _op, rhs in atoms)
 
 
 @st.composite
@@ -1021,7 +575,7 @@ def _sel_struct(draw):
     items = draw(
         st.lists(st.sampled_from(_SEL_ITEMS), min_size=1, max_size=3)
     )
-    where = draw(st.none() | _cond_tree())
+    where = draw(st.none() | _cond_tree().filter(_no_self_compare_on_t1))
     order = draw(
         st.lists(
             st.tuples(
@@ -1031,8 +585,7 @@ def _sel_struct(draw):
         )
     )
     # wrap=True renders the FROM as a CTE or derived-table spelling of
-    # the same inner select — key-equal through the WITH->derived
-    # inlining, result-equal on DuckDB
+    # the same inner select — key-equal once Catalyst inlines the CTE
     wrap = draw(st.booleans())
     return items, where, order, wrap
 
@@ -1042,11 +595,8 @@ def _sel_render(struct, respell, draw):
     rel = "w" if wrap else "t1"
 
     def qual(col):
-        # rel.a and a resolve identically on the single-relation shape;
-        # the qualifier never reaches output names, so the key strips
-        # it — but ONLY in WHERE/ORDER here (a qualified bare select
-        # item stays observable-equal too, exercised via 'col' items
-        # rendered verbatim both times)
+        # rel.a and a resolve to one attribute on the single-relation
+        # shape (a qualified select item would be observable-equal too)
         return f"{rel}.{col}" if respell and draw(st.booleans()) else col
 
     rendered = []
@@ -1062,7 +612,7 @@ def _sel_render(struct, respell, draw):
                     # "orderby") in window items
                     expr = re.sub(r"\s*([(),*+])\s*", r"\1", expr)
                 if draw(st.booleans()):
-                    expr = expr.upper()  # folded canon: case-free
+                    expr = expr.upper()  # identifiers are case-insensitive
             kw_as = "AS" if not respell or draw(st.booleans()) else "as"
             rendered.append(f"{expr} {kw_as} {it[2]}")
     if wrap:
@@ -1097,40 +647,32 @@ def _sel_render(struct, respell, draw):
     return sql
 
 
-def _sel_result(con, sql):
-    rel = con.sql(sql)
-    return [d[0] for d in rel.description], sorted(rel.fetchall(), key=repr)
+def _sel_result(spark, sql):
+    df = spark.sql(sql)
+    return list(df.columns), _rows(df)
 
 
-@settings(max_examples=120, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(data=st.data())
-def test_select_respellings_share_key_and_result(duck_nulls, data):
-    from sparksql_server_spark.server.mrshare import semantic_result_key
-
+def test_select_respellings_share_key_and_result(tables, data):
     struct = data.draw(_sel_struct())
     q1 = _sel_render(struct, False, data.draw)
     q2 = _sel_render(struct, True, data.draw)
-    k1, k2 = semantic_result_key(q1), semantic_result_key(q2)
+    k1, k2 = _key(tables, q1), _key(tables, q2)
     assert k1 is not None and k1 == k2, f"{q1!r} vs {q2!r}"
-    assert _sel_result(duck_nulls, q1) == _sel_result(duck_nulls, q2), (
-        f"{q1!r} vs {q2!r}"
-    )
+    assert _sel_result(tables, q1) == _sel_result(tables, q2), f"{q1!r} vs {q2!r}"
 
 
-@settings(max_examples=120, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(data=st.data())
-def test_key_equal_random_selects_compute_equal_results(duck_nulls, data):
-    """Pure soundness: two INDEPENDENTLY drawn selects whose semantic
-    keys collide must compute the same result — values AND column
-    names. (Most draws differ; collisions are exactly what the key
-    claims equivalent.)"""
-    from sparksql_server_spark.server.mrshare import semantic_result_key
-
+def test_key_equal_random_selects_compute_equal_results(tables, data):
+    """Two independently drawn selects whose keys collide must compute
+    the same result — values AND column names."""
     q1 = _sel_render(data.draw(_sel_struct()), True, data.draw)
     q2 = _sel_render(data.draw(_sel_struct()), True, data.draw)
-    k1, k2 = semantic_result_key(q1), semantic_result_key(q2)
+    k1, k2 = _key(tables, q1), _key(tables, q2)
     assert k1 is not None and k2 is not None
     if k1 == k2:
-        assert _sel_result(duck_nulls, q1) == _sel_result(duck_nulls, q2), (
+        assert _sel_result(tables, q1) == _sel_result(tables, q2), (
             f"key-equal but result-different: {q1!r} vs {q2!r}"
         )

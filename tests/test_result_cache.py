@@ -7,8 +7,10 @@ import time
 
 import pytest
 
+from sparksql_server_spark.catalog import register_tables
 from sparksql_server_spark.server import WorkSharingServer, client_request
 from sparksql_server_spark.server.results import (
+    PlanKey,
     ResultCache,
     cacheable_sql,
     tables_from_fingerprints,
@@ -16,6 +18,13 @@ from sparksql_server_spark.server.results import (
 from tests.conftest import SF_DIR
 
 Q = "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"
+
+
+@pytest.fixture
+def K(spark):
+    """Clean-namespace key of a statement, resolved in ``spark``."""
+    register_tables(spark, SF_DIR)
+    return lambda sql, sid=None: ResultCache.key(sid, sql, spark)
 
 
 # -- unit: the cacheability guard ------------------------------------------
@@ -44,29 +53,26 @@ def test_cacheable_sql(sql, ok):
     assert cacheable_sql(sql) is ok
 
 
-def test_key_preserves_whitespace_inside_literals():
-    """ADVICE r4 high: whitespace normalization must not reach inside
-    string literals — WHERE name='a  b' and WHERE name='a b' are
-    different queries and must never share a cache key."""
-    k1 = ResultCache.key(None, "SELECT * FROM t WHERE name = 'a  b'")
-    k2 = ResultCache.key(None, "SELECT * FROM t WHERE name = 'a b'")
-    assert k1 != k2
-    # whitespace OUTSIDE literals still normalizes (that's the point)
-    k3 = ResultCache.key(None, "SELECT  *\n FROM t  WHERE name = 'a  b'")
-    assert k3 == k1
+def test_key_preserves_whitespace_inside_literals(K):
+    """Whitespace inside a string literal is query semantics — WHERE
+    name='a  b' and WHERE name='a b' are different queries and must
+    never share a key; whitespace outside literals never reaches the
+    plan at all."""
+    k1 = K("SELECT r_name FROM region WHERE r_name = 'a  b'")
+    assert k1 != K("SELECT r_name FROM region WHERE r_name = 'a b'")
+    assert K("SELECT  r_name\n FROM region  WHERE r_name = 'a  b'") == k1
     # escaped quote does not flip the in-string state
-    k4 = ResultCache.key(None, r"SELECT 'don\'t  stop' AS s,  1 AS n")
-    k5 = ResultCache.key(None, r"SELECT 'don\'t stop' AS s, 1 AS n")
-    assert k4 != k5
-    # double-quoted and backtick-quoted spans are also preserved
-    assert ResultCache.key(None, 'SELECT "x  y"') != ResultCache.key(None, 'SELECT "x y"')
+    assert K(r"SELECT 'don\'t  stop' AS s,  1 AS n") != K(
+        r"SELECT 'don\'t stop' AS s, 1 AS n"
+    )
+    assert K('SELECT "x  y" AS v') != K('SELECT "x y" AS v')
 
 
 def test_put_discards_stale_generation():
     """ADVICE r4 low: a put whose pre-submit epoch predates an
     invalidation must be discarded, not served for up to TTL."""
     rc = ResultCache()
-    k = ResultCache.key(None, "q")
+    k = ("", "q")
     gen = rc.generation
     rc.invalidate_all()  # a command ran while the query was in flight
     rc.put(k, {"v": 1}, generation=gen)
@@ -105,15 +111,15 @@ def test_keys_intersect_directory_containment():
 
 def test_taint_refuses_overlapping_puts_until_expiry():
     rc = ResultCache()
-    k1, k2 = ResultCache.key(None, "q1"), ResultCache.key(None, "q2")
+    k1, k2 = ("", "q1"), ("", "q2")
     rc.taint_tables(frozenset({"region"}), ttl_seconds=0.4)
     rc.put(k1, {"v": 1}, tables=frozenset({"region", "/d/region.parquet"}))
     assert rc.get(k1) is None  # refused: reads the tainted table
     rc.put(k2, {"v": 2}, tables=frozenset({"nation"}))
     assert rc.get(k2) == {"v": 2}  # unrelated read set caches fine
     # unknown read set cannot prove disjointness -> refused
-    rc.put(ResultCache.key(None, "q3"), {"v": 3}, tables=None)
-    assert rc.get(ResultCache.key(None, "q3")) is None
+    rc.put(("", "q3"), {"v": 3}, tables=None)
+    assert rc.get(("", "q3")) is None
     time.sleep(0.45)
     rc.put(k1, {"v": 4}, tables=frozenset({"region"}))
     assert rc.get(k1) == {"v": 4}  # taint expired
@@ -128,7 +134,7 @@ def test_invalidate_advances_generation_even_when_empty():
 
 def test_oversized_result_not_pinned():
     rc = ResultCache(max_rows_per_entry=3)
-    k = ResultCache.key(None, "q")
+    k = ("", "q")
     rc.put(k, {"rows": [[1]] * 4})
     assert rc.get(k) is None  # declined: re-running beats pinning RAM
     rc.put(k, {"rows": [[1]] * 3})
@@ -172,7 +178,7 @@ def test_invalidate_tables_scoped_and_epoch():
     from sparksql_server_spark.server.results import ResultCache
 
     rc = ResultCache()
-    ka, kb, ku = (ResultCache.key(None, s) for s in ("qa", "qb", "qu"))
+    ka, kb, ku = (("", s) for s in ("qa", "qb", "qu"))
     rc.put(ka, {"v": "a"}, tables=frozenset({"part", "/x/part.parquet"}))
     rc.put(kb, {"v": "b"}, tables=frozenset({"region"}))
     rc.put(ku, {"v": "u"}, tables=None)  # unknown read set
@@ -191,7 +197,7 @@ def test_bump_generation_discards_puts_without_flushing():
     from sparksql_server_spark.server.results import ResultCache
 
     rc = ResultCache()
-    k1, k2 = ResultCache.key(None, "q1"), ResultCache.key(None, "q2")
+    k1, k2 = ("", "q1"), ("", "q2")
     rc.put(k1, {"v": 1}, tables=frozenset({"t"}))
     g0 = rc.generation
     rc.bump_generation()  # command ARRIVED (hasn't executed yet)
@@ -202,7 +208,7 @@ def test_bump_generation_discards_puts_without_flushing():
 
 def test_lru_and_ttl():
     rc = ResultCache(max_entries=2, ttl_seconds=0.2)
-    k1, k2, k3 = (ResultCache.key(None, s) for s in ("a", "b", "c"))
+    k1, k2, k3 = (("", s) for s in ("a", "b", "c"))
     rc.put(k1, {"v": 1})
     rc.put(k2, {"v": 2})
     rc.put(k3, {"v": 3})  # evicts k1 (LRU bound 2)
@@ -232,14 +238,12 @@ def test_repeat_query_served_from_cache(server):
     assert stats["result_cache_hits"] >= 1
 
 
-def test_semantic_keys_hit_across_spellings():
-    """Round 12: statements in the canonical aggregation shape key the
-    result cache by the merge path's spelling-insensitive parse —
-    conjunct order, IN-list vs OR-chain, and join operand order hit the
-    SAME entry across time. Anything observable (output alias spelling,
-    select-item order, a predicate constant) keys differently, and
-    non-shape / nondeterministic statements keep the text key."""
-    K = lambda s: ResultCache.key(None, s)  # noqa: E731
+def test_semantic_keys_hit_across_spellings(K, spark):
+    """Keys are Catalyst's canonical plan: conjunct order, comparison
+    direction, IN-list order and join operand order hit the SAME entry.
+    Anything observable (output alias spelling, select-item order, a
+    LIMIT) keys apart. An IN list and its OR chain stay two keys (drop
+    list in CHANGES.md)."""
     assert K(
         "SELECT l_returnflag, sum(l_quantity) AS s FROM lineitem"
         " WHERE l_discount > 0.02 AND l_tax < 0.05 GROUP BY l_returnflag"
@@ -247,12 +251,13 @@ def test_semantic_keys_hit_across_spellings():
         "select l_returnflag, SUM( l_quantity ) as s from lineitem"
         " where l_tax < 0.05 and 0.02 < l_discount group by l_returnflag"
     )
-    assert K(
+    in_list = (
         "SELECT l_returnflag, sum(l_quantity) AS s FROM lineitem"
         " WHERE l_linenumber IN (1, 2) GROUP BY l_returnflag"
-    ) == K(
-        "SELECT l_returnflag, sum(l_quantity) AS s FROM lineitem"
-        " WHERE l_linenumber = 2 OR l_linenumber = 1 GROUP BY l_returnflag"
+    )
+    assert K(in_list) == K(in_list.replace("IN (1, 2)", "IN (2, 1)"))
+    assert K(in_list) != K(
+        in_list.replace("l_linenumber IN (1, 2)", "(l_linenumber = 2 OR l_linenumber = 1)")
     )
     assert K(
         "SELECT o_orderpriority, count(*) AS n FROM orders JOIN lineitem"
@@ -274,23 +279,31 @@ def test_semantic_keys_hit_across_spellings():
         " FROM lineitem GROUP BY l_returnflag"
     )  # column order observable
     assert K(base + " LIMIT 5") != K(base + " LIMIT 6")
-    # nondeterministic and non-shape statements fall back to text keys
-    assert isinstance(
-        K(base.replace("GROUP BY", "WHERE rand() < 0.5 GROUP BY"))[1], str
-    )
-    assert isinstance(K("SELECT * FROM lineitem LIMIT 5")[1], str)
-    # session namespaces stay disjoint for the same semantic key
-    assert K(base) != ResultCache.key("sess1", base)
-    assert K(base) != ResultCache.key_root(base)
+    # every analyzable statement keys on its plan; nondeterministic ones
+    # are kept out of the cache by the server's cacheable_sql gate
+    assert isinstance(K("SELECT * FROM lineitem LIMIT 5"), PlanKey)
+    assert K("SELECT * FROM no_such_table") is None
+    assert not cacheable_sql(base.replace("GROUP BY", "WHERE rand() < 0.5 GROUP BY"))
+    # session namespaces stay disjoint for the same plan
+    assert K(base) != K(base, "sess1")
+    assert K(base) != ResultCache.key_root(base, spark)
 
 
 def test_semantic_respelling_served_from_cache(server):
+    """A conjunct-swapped, mirrored, IN-permuted respelling is served
+    from the cache; the OR-chain spelling of the IN list is a different
+    plan (drop list in CHANGES.md) and runs, with the same rows."""
     q1 = (
         "SELECT l_returnflag, sum(l_quantity) AS sq FROM lineitem"
         " WHERE l_discount > 0.02 AND l_linenumber IN (1, 2)"
         " GROUP BY l_returnflag"
     )
     q2 = (
+        "select l_returnflag, sum( l_quantity ) AS sq from lineitem"
+        " where l_linenumber in (2, 1)"
+        " and 0.02 < l_discount group by l_returnflag"
+    )
+    q3 = (
         "select l_returnflag, sum( l_quantity ) AS sq from lineitem"
         " where (l_linenumber = 2 or l_linenumber = 1)"
         " and 0.02 < l_discount group by l_returnflag"
@@ -303,6 +316,9 @@ def test_semantic_respelling_served_from_cache(server):
         map(tuple, first["rows"])
     )
     assert second["columns"] == first["columns"]
+    third = client_request(server.address, {"sql": q3})
+    assert third["status"] == "done" and "cached" not in third
+    assert sorted(map(tuple, third["rows"])) == sorted(map(tuple, first["rows"]))
 
 
 def test_command_invalidation_is_write_set_scoped(server, tmp_path):
@@ -460,19 +476,19 @@ def test_taint_starvation_is_scoped_and_counted():
     for _ in range(50):
         rc.taint_tables(frozenset({"a"}), 5.0)
     # queries reading A are refused (their input may be mid-command) …
-    ka = ResultCache.key(None, "SELECT * FROM a")
+    ka = ("", "SELECT * FROM a")
     for i in range(10):
         rc.put(ka, {"v": i}, tables=frozenset({"a"}))
     assert rc.get(ka) is None
     assert rc.stats()["result_cache_taint_refused"] == 10
     # … while unrelated-table queries cache at full hit rate THROUGHOUT
     for i in range(10):
-        kb = ResultCache.key(None, f"SELECT {i} FROM b")
+        kb = ("", f"SELECT {i} FROM b")
         rc.put(kb, {"v": i}, tables=frozenset({"b"}))
         assert rc.get(kb) == {"v": i}
     assert rc.stats()["result_cache_taint_refused"] == 10  # none refused
     # unknown read sets refuse conservatively under ANY live taint
-    rc.put(ResultCache.key(None, "SELECT ?"), {"v": 1}, tables=None)
+    rc.put(("", "SELECT ?"), {"v": 1}, tables=None)
     assert rc.stats()["result_cache_taint_refused"] == 11
     # the live list is pruned, not accumulated forever
     assert rc.stats()["result_cache_live_taints"] == 50
@@ -707,14 +723,13 @@ def test_cache_vs_merge_interleaving_pool_was_not_vacuous():
     assert _EXERCISED["cmds"] > 0, _EXERCISED
 
 
-def test_select_shape_semantic_keys():
-    """Round 12: plain projection/selection statements (no aggregation)
-    key by the spelling-insensitive select shape — conjunct order,
-    IN-vs-OR, qualifier spelling, and join operand order hit ONE
-    entry; anything observable (item order, output-name case, LIMIT
-    value, ORDER BY direction) keys apart; DISTINCT / star / OFFSET /
-    window / subquery shapes keep the text key."""
-    K = lambda s: ResultCache.key(None, s)  # noqa: E731
+def test_select_shape_semantic_keys(K):
+    """Projection/selection statements key on their plan too: conjunct
+    order, mirrored comparisons, qualifier spelling and join operand
+    order hit ONE entry; item order, output-name case, LIMIT value and
+    ORDER BY direction key apart. DISTINCT, star, OFFSET and subquery
+    shapes get plan keys as well. IN vs OR stays two keys (drop
+    list)."""
     assert K(
         "SELECT r_regionkey, r_name FROM region"
         " WHERE r_regionkey > 1 AND r_name <> 'ASIA' ORDER BY r_regionkey"
@@ -722,17 +737,12 @@ def test_select_shape_semantic_keys():
         "select r_regionkey, r_name from region"
         " where 'ASIA' <> r_name and 1 < r_regionkey order by r_regionkey ASC"
     )
-    assert K(
-        "SELECT o_orderkey FROM orders WHERE o_orderstatus IN ('O','F')"
-    ) == K(
-        "SELECT o_orderkey FROM orders"
-        " WHERE o_orderstatus = 'F' OR o_orderstatus = 'O'"
+    assert K("SELECT o_orderkey FROM orders WHERE o_orderstatus IN ('O','F')") == K(
+        "SELECT o_orderkey FROM orders WHERE o_orderstatus IN ('F','O')"
     )
-    # single-table alias qualifiers are unobservable
     assert K("SELECT c.c_name AS n FROM customer c WHERE c.c_acctbal > 100") == K(
         "SELECT c_name AS n FROM customer WHERE 100 < c_acctbal"
     )
-    # join operand order with verbatim items
     assert K(
         "SELECT o_orderpriority AS p FROM orders JOIN lineitem"
         " ON o_orderkey = l_orderkey WHERE l_tax < 0.05"
@@ -740,8 +750,7 @@ def test_select_shape_semantic_keys():
         "SELECT o_orderpriority AS p FROM lineitem JOIN orders"
         " ON l_orderkey = o_orderkey WHERE 0.05 > l_tax"
     )
-    # observables key apart
-    assert K("SELECT r_name FROM region") != K("SELECT R_NAME FROM region")
+    assert K("SELECT r_name AS n FROM region") != K("SELECT r_name AS N FROM region")
     assert K("SELECT r_name, r_regionkey FROM region") != K(
         "SELECT r_regionkey, r_name FROM region"
     )
@@ -751,15 +760,9 @@ def test_select_shape_semantic_keys():
     assert K("SELECT r_name FROM region ORDER BY r_name") != K(
         "SELECT r_name FROM region ORDER BY r_name DESC"
     )
-    # unaliased expression names are case-faithful but whitespace-blind
     assert K("SELECT r_regionkey+1 FROM region") == K(
         "SELECT r_regionkey + 1 FROM region"
     )
-    assert K("SELECT r_regionkey + 1 FROM region") != K(
-        "SELECT R_REGIONKEY + 1 FROM region"
-    )
-    # non-shape statements keep text keys (strings, not tuples);
-    # window OVER items ADMIT (see test_window_items_key_semantically)
     for q in (
         "SELECT * FROM region",
         "SELECT DISTINCT r_name FROM region",
@@ -768,7 +771,7 @@ def test_select_shape_semantic_keys():
         "SELECT r_name FROM region"
         " WHERE r_regionkey IN (SELECT n_regionkey FROM nation)",
     ):
-        assert isinstance(K(q)[1], str), q
+        assert isinstance(K(q), PlanKey), q
 
 
 def test_select_respelling_served_from_cache(server):
@@ -780,7 +783,7 @@ def test_select_respelling_served_from_cache(server):
     q2 = (
         "select o_orderkey, o_totalprice from orders"
         " where 1000 < o_totalprice"
-        " and (o_orderstatus = 'F' or o_orderstatus = 'O')"
+        " and o_orderstatus in ('F', 'O')"
         " order by o_orderkey ASC limit 20"
     )
     first = client_request(server.address, {"sql": q1})
@@ -788,10 +791,9 @@ def test_select_respelling_served_from_cache(server):
     second = client_request(server.address, {"sql": q2})
     assert second["status"] == "done" and second.get("cached") is True
     assert second["rows"] == first["rows"]
-    assert second["columns"] == first["columns"]
 
 
-def test_limit_subsumption_unit():
+def test_limit_subsumption_unit(K):
     """Round 12: a semantic-key miss differing ONLY in a smaller LIMIT
     serves the cached rows' prefix — an un-LIMITed source serves any
     LIMIT, a LIMIT-m source serves n <= m, never the reverse; text
@@ -800,36 +802,34 @@ def test_limit_subsumption_unit():
     base = "SELECT r_regionkey AS k FROM region ORDER BY r_regionkey"
     rows20 = [[i] for i in range(20)]
     rc.put(
-        ResultCache.key(None, base + " LIMIT 20"),
+        K(base + " LIMIT 20"),
         {"status": "done", "rows": rows20, "n_rows": 20, "columns": ["k"]},
     )
-    out = rc.get(ResultCache.key(None, base + " LIMIT 5"))
+    out = rc.get(K(base + " LIMIT 5"))
     assert out is not None and out["rows"] == rows20[:5] and out["n_rows"] == 5
     assert rc.limit_subsumed_hits == 1
     # a LARGER limit must miss (the source may have clipped rows 21+)
-    assert rc.get(ResultCache.key(None, base + " LIMIT 30")) is None
+    assert rc.get(K(base + " LIMIT 30")) is None
     # an un-LIMITed source serves any limit, even above its row count
     rc.put(
-        ResultCache.key(None, base),
+        K(base),
         {"status": "done", "rows": rows20, "n_rows": 20, "columns": ["k"]},
     )
-    out = rc.get(ResultCache.key(None, base + " LIMIT 30"))
+    out = rc.get(K(base + " LIMIT 30"))
     assert out is not None and out["rows"] == rows20 and out["n_rows"] == 20
     # the cached source entry must not be mutated by slicing
-    full = rc.get(ResultCache.key(None, base + " LIMIT 20"))
+    full = rc.get(K(base + " LIMIT 20"))
     assert full["rows"] == rows20 and full["n_rows"] == 20
     # respelled smaller-limit spelling subsumes too (semantic base)
     out = rc.get(
-        ResultCache.key(
-            None,
-            "select r_regionkey as k from region order by r_regionkey"
+        K("select r_regionkey as k from region order by r_regionkey"
             " ASC limit 3",
         )
     )
     assert out is not None and out["rows"] == rows20[:3]
     # namespaces stay disjoint
-    assert rc.get(ResultCache.key("s1", base + " LIMIT 5")) is None
-    # text keys never subsume
+    assert rc.get(K(base + " LIMIT 5", "s1")) is None
+    # keys that are not plan keys never subsume
     rc.put(("", "some text key"), {"status": "done", "rows": rows20})
     assert rc.get(("", "some text key limit 5")) is None
 
@@ -855,7 +855,7 @@ def test_limit_subsumption_served_from_server(server):
     assert stats["result_cache_limit_subsumed_hits"] >= 1
 
 
-def test_limit_subsumption_after_exact_entry_expires():
+def test_limit_subsumption_after_exact_entry_expires(K):
     """Round-12 review: a TTL-expired exact entry must fall through to
     subsumption — the request is served exactly as it would be with no
     stale entry present."""
@@ -865,45 +865,41 @@ def test_limit_subsumption_after_exact_entry_expires():
     base = "SELECT r_regionkey AS k FROM region ORDER BY r_regionkey"
     rows = [[i] for i in range(10)]
     rc.put(
-        ResultCache.key(None, base + " LIMIT 5"),
+        K(base + " LIMIT 5"),
         {"status": "done", "rows": rows[:5], "n_rows": 5, "columns": ["k"]},
     )
     _time.sleep(0.25)  # exact entry expires
     rc.put(
-        ResultCache.key(None, base),
+        K(base),
         {"status": "done", "rows": rows, "n_rows": 10, "columns": ["k"]},
     )
-    out = rc.get(ResultCache.key(None, base + " LIMIT 5"))
+    out = rc.get(K(base + " LIMIT 5"))
     assert out is not None and out["rows"] == rows[:5] and out["n_rows"] == 5
     assert rc.limit_subsumed_hits == 1
 
 
-def test_window_items_key_semantically():
-    """Round 12: window (OVER) items admit to the SELECT shape — the
-    whole spec rides the item canon (any spec difference keys apart);
-    the merge path keeps declining OVER (merging changes row
-    multiplicity, which changes window results)."""
-    K = lambda s: ResultCache.key(None, s)  # noqa: E731
+def test_window_items_key_semantically(K):
+    """Window (OVER) items key on their plan: respellings of one spec
+    share a key, any spec difference keys apart, and windowed
+    aggregations key like any other statement."""
     a = (
         "SELECT o_orderkey, row_number() OVER (ORDER BY o_totalprice DESC)"
         " AS rn FROM orders WHERE o_orderstatus IN ('O','F')"
     )
     b = (
         "select o_orderkey, ROW_NUMBER() over ( order by o_totalprice DESC )"
-        " AS rn from orders where o_orderstatus = 'F' or o_orderstatus = 'O'"
+        " AS rn from orders where o_orderstatus in ('F', 'O')"
     )
-    assert K(a) == K(b) and not isinstance(K(a)[1], str)
+    assert K(a) == K(b) and isinstance(K(a), PlanKey)
     assert K(a) != K(a.replace("DESC", "ASC"))
-    # windowed aggregations, QUALIFY, and named WINDOW stay on text keys
-    for q in (
-        "SELECT o_orderpriority, count(*) AS n,"
-        " rank() OVER (ORDER BY count(*)) AS r"
-        " FROM orders GROUP BY o_orderpriority",
-        "SELECT a, row_number() OVER (ORDER BY a) AS rn FROM t"
-        " QUALIFY rn = 1",
-        "SELECT a, count(*) OVER w AS c FROM t WINDOW w AS (PARTITION BY a)",
-    ):
-        assert isinstance(K(q)[1], str), q
+    assert isinstance(
+        K(
+            "SELECT o_orderpriority, count(*) AS n,"
+            " rank() OVER (ORDER BY count(*)) AS r"
+            " FROM orders GROUP BY o_orderpriority"
+        ),
+        PlanKey,
+    )
 
 
 def test_window_respelling_served_from_cache(server):
@@ -924,7 +920,7 @@ def test_window_respelling_served_from_cache(server):
     assert second["rows"] == first["rows"]
 
 
-def test_limit_subsumption_on_aggregation_shape():
+def test_limit_subsumption_on_aggregation_shape(K):
     """The subsumption rule is shape-agnostic: "sem" keys also carry
     LIMIT as the final element, so a cached un-LIMITed aggregation
     serves its LIMITed respellings."""
@@ -935,13 +931,11 @@ def test_limit_subsumption_on_aggregation_shape():
     )
     rows = [["A", 30], ["B", 20], ["C", 10]]
     rc.put(
-        ResultCache.key(None, base),
+        K(base),
         {"status": "done", "rows": rows, "n_rows": 3, "columns": ["l_returnflag", "n"]},
     )
     out = rc.get(
-        ResultCache.key(
-            None,
-            "select l_returnflag, COUNT( * ) as n from lineitem"
+        K("select l_returnflag, COUNT( * ) as n from lineitem"
             " group by l_returnflag order by n DESC limit 2",
         )
     )
@@ -949,30 +943,98 @@ def test_limit_subsumption_on_aggregation_shape():
     assert rc.limit_subsumed_hits == 1
 
 
-def test_comment_markers_decline_semantic_keys():
-    """Round-12 review: comment markers are unmodeled by the canon
-    lexer — whitespace collapse could fuse `a - -1` toward `a --1`,
-    whose `--…` Spark lexes as a line comment (a different statement).
-    Any marker outside string literals declines to text keys, where
-    byte-distinct spellings can never collide."""
-    K = lambda s: ResultCache.key(None, s)  # noqa: E731
-    assert not isinstance(K("SELECT a - -1 AS x FROM t")[1], str)
-    assert isinstance(K("SELECT a --1 AS x FROM t")[1], str)
-    assert K("SELECT a - -1 AS x FROM t") != K("SELECT a --1 AS x FROM t")
-    assert isinstance(K("SELECT a AS x /* c */ FROM t")[1], str)
-    # markers inside string literals are data, not comments
-    assert not isinstance(
-        K("SELECT o_orderkey FROM orders WHERE o_comment <> 'a--b'")[1], str
+def test_comment_markers_decline_semantic_keys(K):
+    """Comments are Spark's lexer's business: ``a - -1`` is arithmetic
+    while ``a --1`` starts a line comment, so the two are different
+    statements with different keys; a block comment changes nothing;
+    comment markers inside literals are data."""
+    minus = K("SELECT r_regionkey - -1 AS x FROM region")
+    assert isinstance(minus, PlanKey)
+    assert minus != K("SELECT r_regionkey --1 AS x FROM region\n FROM region")
+    assert K("SELECT r_name AS x /* c */ FROM region") == K(
+        "SELECT r_name AS x FROM region"
+    )
+    assert K("SELECT o_orderkey FROM orders WHERE o_orderstatus <> 'a--b'") != K(
+        "SELECT o_orderkey FROM orders WHERE o_orderstatus <> 'a'"
     )
 
 
-def test_order_item_asc_parity_after_non_word_char():
-    """Round-12 review: the grammar-default trailing ASC strips from
-    the RAW order item, so parenthesized and window order items get
-    the same ASC-is-default parity as bare columns."""
-    K = lambda s: ResultCache.key(None, s)  # noqa: E731
+def test_order_item_asc_parity_after_non_word_char(K):
+    """ASC is the default sort direction, parenthesized or not, and a
+    column named ``asc`` is an ordinary sort key."""
     assert K("SELECT o_orderkey FROM orders ORDER BY (o_orderkey + 1)") == K(
         "SELECT o_orderkey FROM orders ORDER BY (o_orderkey + 1) ASC"
     )
-    # a bare column named `asc` is not stripped to emptiness
-    assert K("SELECT o_orderkey FROM orders ORDER BY asc") is not None
+    assert K("SELECT o_orderkey AS asc FROM orders ORDER BY asc") is not None
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_dashboard_hot_spellings_served_from_cache(server, seed):
+    """Every hot query of the dashboard benchmark workload, sent through
+    a live server: after its canonical spelling, each variant spelling
+    (swapped conjuncts, permuted IN list, swapped join operands) is
+    answered from the cache, and the LIMIT-12 variant by subsumption of
+    the cached LIMIT-30 rows."""
+    from perfbench.workloads import dashboard_hot
+
+    for spellings in dashboard_hot(seed):
+        first = client_request(server.address, {"sql": spellings[0]})
+        assert first["status"] == "done", first
+        for variant in spellings[1:]:
+            before = client_request(server.address, {"server_stats": True})["stats"]
+            got = client_request(server.address, {"sql": variant})
+            assert got["status"] == "done" and got.get("cached") is True, variant
+            after = client_request(server.address, {"server_stats": True})["stats"]
+            if " LIMIT 12" in variant:
+                assert (
+                    after["result_cache_limit_subsumed_hits"]
+                    == before["result_cache_limit_subsumed_hits"] + 1
+                )
+                assert got["rows"] == first["rows"][:12]
+            else:
+                assert sorted(map(tuple, got["rows"])) == sorted(
+                    map(tuple, first["rows"])
+                )
+
+
+def test_keys_stay_exact(spark, server):
+    """Plan keys never widen what one text means: the same text over two
+    same-schema temp views is two keys; a temp view redefined in a dirty
+    session is a new key (and new rows); a swapped output alias or
+    select-item order is a different key."""
+    register_tables(spark, SF_DIR)
+    a, b = spark.newSession(), spark.newSession()
+    register_tables(a, SF_DIR)
+    register_tables(b, SF_DIR)
+    spark.table("region").filter("r_regionkey < 2").createOrReplaceTempView("rv")
+    a.sql("CREATE TEMP VIEW rv AS SELECT * FROM region WHERE r_regionkey < 2")
+    b.sql("CREATE TEMP VIEW rv AS SELECT * FROM region WHERE r_regionkey >= 2")
+    try:
+        q = "SELECT count(*) AS n FROM rv"
+        assert ResultCache.key(None, q, a) != ResultCache.key(None, q, b)
+        assert ResultCache.key(None, q, a) == ResultCache.key(None, q, spark)
+    finally:
+        spark.catalog.dropTempView("rv")
+
+    def ask(sql):
+        return client_request(server.address, {"sql": sql, "session": "exact"})
+
+    assert ask("CREATE TEMP VIEW ev AS SELECT * FROM region WHERE r_regionkey < 2")[
+        "status"
+    ] == "done"
+    first = ask("SELECT count(*) AS n FROM ev")
+    assert first["rows"] == [[2]] and "cached" not in first
+    assert ask("SELECT count(*) AS n FROM ev").get("cached") is True
+    assert ask(
+        "CREATE OR REPLACE TEMP VIEW ev AS SELECT * FROM region WHERE r_regionkey < 4"
+    )["status"] == "done"
+    again = ask("SELECT count(*) AS n FROM ev")
+    assert again["rows"] == [[4]] and "cached" not in again
+
+    K = lambda s: ResultCache.key(None, s, spark)  # noqa: E731
+    assert K("SELECT r_name AS a, r_regionkey AS b FROM region") != K(
+        "SELECT r_name AS b, r_regionkey AS a FROM region"
+    )
+    assert K("SELECT r_name, r_regionkey FROM region") != K(
+        "SELECT r_regionkey, r_name FROM region"
+    )

@@ -1040,7 +1040,7 @@ class TestClusterSizing:
         job2.fingerprints = frozenset({"hdfs://warehouse/big"})
         from sparksql_server_spark.server.mrshare import MergePlan
 
-        mp = MergePlan(jobs=[job, job2], merged_sql="", demux_sql={}, view="v")
+        mp = MergePlan(jobs=[job, job2])
         assert ex._merge_source_bytes(mp) == 512 << 20  # admits the floor
         for j in mp.jobs:
             j.fingerprints = frozenset({"hdfs://warehouse/small"})
@@ -2930,7 +2930,9 @@ class TestJdbcTempViewMirror:
             res = srv.answer_jdbc(q, sid)
             assert res["rows"][0][0] == exp, res
             # ...and is cached PRIVATELY, never in the shared namespace
-            assert srv.results.get(ResultCache.key(None, q)) is None
+            view_session = srv.session_for(sid)
+            assert srv.results.get(ResultCache.key(None, q, view_session)) is None
+            assert srv.results.get(ResultCache.key(sid, q, view_session)) is not None
             # root never learned the view
             import pytest as _pytest
             with _pytest.raises(Exception):
@@ -2940,7 +2942,7 @@ class TestJdbcTempViewMirror:
             qb = "SELECT count(*) AS n FROM supplier WHERE s_acctbal > 0"
             resb = srv.answer_jdbc(qb, sid)
             assert resb["rows"][0][0] > 0
-            assert srv.results.get(ResultCache.key(None, qb)) is not None
+            assert srv.results.get(ResultCache.key(None, qb, spark)) is not None
         finally:
             srv.shutdown()
             srv.executor.cache.clear()
@@ -3092,7 +3094,7 @@ class TestJdbcTempViewMirror:
             q = "SELECT count(*) AS n FROM nation"
             real_n = spark.table("nation").count()
             assert srv.answer_jdbc(q, sid)["rows"][0][0] == real_n
-            assert srv.results.get(ResultCache.key(None, q)) is not None
+            assert srv.results.get(ResultCache.key(None, q, spark)) is not None
             with srv._session_lock:
                 assert sid not in srv._dirty_sessions
                 assert not any(
