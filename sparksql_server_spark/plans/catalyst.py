@@ -6,10 +6,11 @@ The merge planner (server/mrshare.py) and the result cache
 ``canonicalized`` erases expression ids and alias names and puts
 commutative operands, comparisons and IN lists in one order, so
 ``sameResult`` unifies conjunct order, ``a < b`` vs ``b > a`` and IN-list
-permutations. :func:`normalize` adds three more erasures before the
-comparison: two of Catalyst's own optimizer rules (CTE inlining, and the
-replacement of runtime-replaceable expressions such as BETWEEN) and a
-fixed operand order for commutative joins (:func:`order_joins`).
+permutations. :func:`normalize` adds four more erasures before the
+comparison: three of Catalyst's own optimizer rules (CTE inlining, the
+replacement of runtime-replaceable expressions such as BETWEEN, and the
+collapse of adjacent windows over one window spec) and a fixed operand
+order for commutative joins (:func:`order_joins`).
 """
 
 from __future__ import annotations
@@ -118,12 +119,16 @@ def order_joins(plan: Any) -> Any:
 def normalize(plan: Any) -> Any:
     """An analyzed plan with the spellings Catalyst's canonical form
     keeps apart erased: a CTE and the derived table it names, BETWEEN
-    and its two comparisons, and the operand order of commutative
-    joins."""
+    and its two comparisons, the operand order of commutative joins, and
+    the split of one window spec into stacked windows. (The analyzer
+    groups window items by spec with name-sensitive equality, so
+    ``OVER (ORDER BY a)`` next to ``OVER (ORDER BY A)`` becomes two
+    windows; ``CollapseWindow`` compares specs semantically.)"""
     rules = "org.apache.spark.sql.catalyst.optimizer."
     plan = _inline_cte().apply(plan)
     plan = jvm(rules + "ReplaceExpressions.apply")(plan)
     plan = jvm(rules + "RewriteWithExpression.apply")(plan)
+    plan = jvm(rules + "CollapseWindow.apply")(plan)
     return order_joins(plan)
 
 

@@ -8,8 +8,9 @@ by (session namespace, query) is served straight from the gateway until
 something invalidates it.
 
 The query part of the key is the analyzed plan ``session.sql()``
-returns, normalized (CTEs inlined, BETWEEN replaced, commutative join
-operands in a fixed order — plans/catalyst.py) and with a top literal
+returns, normalized (CTEs inlined, BETWEEN replaced, adjacent windows
+over one spec collapsed, commutative join operands in a fixed order —
+plans/catalyst.py) and with a top literal
 LIMIT split off. Entries are bucketed by
 (namespace, ``semanticHash``, output column names, LIMIT), and a lookup
 confirms a candidate with ``sameResult``, because a 32-bit hash does not

@@ -892,6 +892,14 @@ def test_window_items_key_semantically(K):
     )
     assert K(a) == K(b) and isinstance(K(a), PlanKey)
     assert K(a) != K(a.replace("DESC", "ASC"))
+    # two items over one spec whose column case differs: the analyzer
+    # stacks two windows where the same-case spelling builds one
+    two = (
+        "SELECT row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS r1,"
+        " rank() OVER (ORDER BY o_totalprice, o_orderkey) AS r2 FROM orders"
+    )
+    assert K(two) == K(two.replace("rank() OVER (ORDER BY o_totalprice, o_orderkey)",
+                                   "RANK() OVER (ORDER BY O_TOTALPRICE, O_ORDERKEY)"))
     assert isinstance(
         K(
             "SELECT o_orderpriority, count(*) AS n,"
