@@ -393,7 +393,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries interpreted HOF lambdas, so the duplication was doubly
     expensive). Plan: 2 scans → 1 RDD scan + its build
     (plans/r13/dedup_simhash_pairs_*.txt). Interleaved same-JVM A/B at
-    sf0.1, both arm orders (tools/specs/simhash_lsheval.py): steady-min
+    sf0.1, both arm orders (tools/specs/simhash_lsheval.py in commit 16a0a24): steady-min
     1.58/1.64 → 1.27/1.27 s, first(2nd position) 2.64 → 2.60 s;
     194,580 rows bit-equal in all runs. Same one-live-pin hygiene as
     the other pin_view operators.
@@ -492,7 +492,7 @@ def _shingle_kept_materialized(spark: SparkSession, view: str) -> DataFrame:
     Scan ExistingRDD at all three consumers; join strategy and
     exchange count unchanged (plans/r13/dedup_ngram_jaccard_*.txt).
     Interleaved same-JVM A/B at sf0.1, both arm orders
-    (tools/specs/shingle_pin.py): ngram_jaccard steady-min 1.76/1.90 →
+    (tools/specs/shingle_pin.py in commit 16a0a24): ngram_jaccard steady-min 1.76/1.90 →
     1.48/1.88 s, first(2nd-position) 3.06 → 2.27 s;
     shingle_containment steady-min 1.62/2.10 → 1.45/1.77 s, first
     3.84 → 2.15 s; 500 rows bit-equal in all four runs. Block
@@ -509,7 +509,7 @@ def _shingle_kept_materialized(spark: SparkSession, view: str) -> DataFrame:
     a whole DISTINCT shuffle removed (per-doc dedup is a Python set).
 
     Round-9 floor measurement (VERDICT r8 ask #5; sf0.1, fresh session
-    with warmed Arrow workers, tools/opt_ab.py on one query, 3 trials/arm):
+    with warmed Arrow workers, tools/opt_ab.py (commit 16a0a24) on one query, 3 trials/arm):
     dedup_shingle_containment first-exec 7.17/5.62/8.80 s (this build)
     vs 7.85/7.01/7.72 s (HOF build) — a noise-dominated WASH (means
     7.19 vs 7.53); steady 2.33 vs 2.36 — also a wash, the Arrow batch
@@ -582,7 +582,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     store and reused for incremental screening.)
 
     Round-10 first-exec floor measurement (VERDICT r9 ask #5; sf0.1,
-    warmed fresh sessions, single-query tools/opt_ab.py regime): first
+    warmed fresh sessions, single-query tools/opt_ab.py (commit 16a0a24) regime): first
     6.71/6.56/7.47 s vs steady-min 2.65/2.57/2.53. Stage-isolated, the
     gap splits ~2.6 s in the shingle build+spill (4.69 first / 2.09
     steady alone) and ~1.2 s in the pair-join + count-join rest (4.64
@@ -1129,7 +1129,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure computing the same min-reachable label.
 
     Round-9 floor measurement (VERDICT r8 ask #5; sf0.1, fresh
-    session, tools/opt_ab.py on one query): first-exec 8.06 s vs steady
+    session, tools/opt_ab.py (commit 16a0a24) on one query): first-exec 8.06 s vs steady
     2.98 s. The delta is compile, split across the shared MinHash band
     pipeline (_mh_candidate_ctes — the same expression the whole LSH
     family compiles, already barrier-optimized with pin() in r8) and
@@ -1492,7 +1492,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inter sides) — the dedup_lsh_eval_pr shape — so materialize it
     # once behind pin_view instead of letting CTE inlining re-run the
     # explode+DISTINCT per consumer. Interleaved same-session A/B
-    # (tools/specs/mh_cal_pin.py, 2 rounds × 3 trials): first-exec
+    # (tools/specs/mh_cal_pin.py in commit 16a0a24, 2 rounds × 3 trials): first-exec
     # 6.30 → 2.29 s (second full exec 8.7/2.8 → 2.0/1.4), steady-min
     # 1.43 → 1.39 s (wash); values identical to the last ulp of the
     # two order-sensitive avg() columns (diff ≤ 6e-16, comparator

@@ -166,7 +166,7 @@ def graph_pagerank_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SQL must be regenerated to match the same iteration count anyway,
     # which keeps the bound honest.
     # Round-9 floor measurement (VERDICT r8 ask #5; sf0.1, fresh
-    # session, tools/opt_ab.py on one query): first-exec 9.99 s vs steady
+    # session, tools/opt_ab.py (commit 16a0a24) on one query): first-exec 9.99 s vs steady
     # 2.33 s. A/B'd the per-iteration pin (eager localCheckpoint of the
     # tiny rank vector, 3 flat plans instead of one 3-join plan):
     # MEASURED WORSE in both regimes — first 11.2/11.9 s, steady
@@ -329,7 +329,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     which DuckDB materializes once by itself.
 
     Round-10 first-exec floor measurement (VERDICT r9 ask #5; sf0.1,
-    warmed fresh sessions, single-query tools/opt_ab.py regime): first
+    warmed fresh sessions, single-query tools/opt_ab.py (commit 16a0a24) regime): first
     9.24/11.42/9.25 s vs steady-min 2.55/2.38/1.55. Stage-isolated,
     the basket/HOF/pair stage owns ~2.2 s of the gap (4.55 first /
     2.31 steady alone); the orientation + wedge join + rollup rest

@@ -479,7 +479,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the |suppliers|-sized aggregate once; both consumers read the
     pinned rows (plans/r13/tpch_q15_top_supplier_*.txt: lineitem
     scans 2 → 1). Interleaved same-JVM A/B at sf0.1, both arm orders
-    (tools/specs/tpch_q15_q17.py): steady-min 0.51/0.53 → 0.42/0.39 s,
+    (tools/specs/tpch_q15_q17.py in commit 16a0a24): steady-min 0.51/0.53 → 0.42/0.39 s,
     first(2nd position) 1.00 → 0.79 s, 1 row bit-equal. The oracle
     keeps the single-statement CTE text."""
     from sparksql_server_spark.operators.scratch import pin_view
@@ -538,7 +538,7 @@ def tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0.2 * (CAST(sum(DECIMAL(18,6)) AS DOUBLE) / count)). One lineitem
     scan, one l_partkey shuffle
     (plans/r13/tpch_q17_small_quantity_*.txt). Interleaved same-JVM
-    A/B at sf0.1, both arm orders (tools/specs/tpch_q15_q17.py):
+    A/B at sf0.1, both arm orders (tools/specs/tpch_q15_q17.py in commit 16a0a24):
     steady-min 0.66/0.59 → 0.38/0.33 s, 1 row BIT-equal (the double
     sums associate identically: same rows, same per-part grouping).
     The oracle keeps the canonical correlated text."""

@@ -152,3 +152,13 @@ def output_names(plan: Any) -> tuple[str, ...]:
     """Result column names; ``canonicalized`` erases them, clients see
     them. One gateway call: the schema travels as JSON."""
     return tuple(f["name"] for f in json.loads(plan.schema().json())["fields"])
+
+
+def deterministic(plan: Any) -> bool:
+    """Whether re-running an analyzed plan returns the same rows: it has
+    no nondeterministic expression (rand, uuid, reflect, …, subqueries
+    included) and no ``CURRENT_LIKE`` one (current time, date, time
+    zone, user, database), which the optimizer fixes once per run."""
+    return bool(plan.deterministic()) and not plan.containsPattern(
+        pattern("CURRENT_LIKE")
+    )

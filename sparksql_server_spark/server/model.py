@@ -33,6 +33,9 @@ class QueryJob:
     # recognised keys: "output" (parquet sink path), "pool" (FAIR pool)
     props: dict[str, Any] = field(default_factory=dict)
     status: JobStatus = JobStatus.QUEUED
+    # statement verdict (scheduler.classify): False for commands. The
+    # gateway classifies at intake; None until then
+    is_query: bool | None = None
     submitted_at: float = field(default_factory=time.monotonic)
     # filled during execution
     error: str | None = None

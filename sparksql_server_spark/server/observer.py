@@ -51,17 +51,8 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
-# _top_level_fields re-exported: the observer's tests pin the width
-# counting through this module
-from sparksql_server_spark.plans.analysis import _top_level_fields, parse_scans  # noqa: F401
+from sparksql_server_spark.plans.analysis import parse_scans
 from sparksql_server_spark.server.cache import CacheManager
-
-
-def scan_events(plan_description: str) -> list[tuple[str, str, int]]:
-    """(source_path, format, n_read_columns) per file scan in a plan
-    description — the DataFrame-side parser (``parse_scans``), so both
-    sides share one set of explain-format quirks."""
-    return [(p, fmt, ncols) for p, ncols, fmt in parse_scans(plan_description)]
 
 
 class ScanObserver:
@@ -140,7 +131,9 @@ class ScanObserver:
             # sections, and a self-join scans one source twice — either
             # way it is ONE execution's worth of repeat-scan evidence
             per_exec: dict[str, tuple[str, int]] = {}
-            for source, fmt, ncols in scan_events(e.physicalPlanDescription()):
+            # the DataFrame-side parser: both sides share one set of
+            # explain-format quirks
+            for source, ncols, fmt in parse_scans(e.physicalPlanDescription()):
                 if source not in self.source_views:
                     continue  # not a relation we can cache by name
                 cur = per_exec.get(source)

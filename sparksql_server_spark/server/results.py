@@ -23,8 +23,10 @@ redefined temp view is a different key.
 Safety rules (all conservative):
 - only complete inline results are cached (sink jobs and truncated
   inline results never);
-- queries containing non-deterministic or time-dependent functions
-  (rand, uuid, now, current_timestamp/date, …) are never cached;
+- a query whose analyzed plan is not deterministic (rand, uuid,
+  reflect, …) or holds a CURRENT_LIKE expression (current time, date,
+  time zone, user, database — fixed once per run) gets no key, so it is
+  never cached;
 - commands invalidate by WRITE SET: each cached entry records the
   tables its plan read (from the detector's leaf fingerprints), and a
   command whose target tables parse out of its SQL flushes only the
@@ -53,31 +55,11 @@ from typing import Any, Optional
 
 from sparksql_server_spark.plans.catalyst import (
     analyzed,
+    deterministic,
     normalize,
     output_names,
     peel_limit,
 )
-
-# functions whose results depend on when/where the query runs.
-# reflect/java_method call arbitrary JVM code (UUID.randomUUID and
-# friends) — treat any use as nondeterministic; randstr/uniform are the
-# Spark 4 random generators; curdate aliases current_date (round-12
-# review: these escaped both the result cache AND the merge path's
-# full-member gate, which reuses this scanner)
-_NONDETERMINISTIC = re.compile(
-    r"\b(rand|randn|randstr|uniform|random|uuid|shuffle|now|current_timestamp|"
-    r"current_date|curdate|current_timezone|unix_timestamp|localtimestamp|"
-    r"monotonically_increasing_id|input_file_name|spark_partition_id|"
-    r"reflect|java_method)\s*\(",
-    re.I,
-)
-# current_date/current_timestamp are valid WITHOUT parens too
-_NONDET_BARE = re.compile(r"\b(current_timestamp|current_date|localtimestamp)\b", re.I)
-
-
-def cacheable_sql(sql: str) -> bool:
-    return not (_NONDETERMINISTIC.search(sql) or _NONDET_BARE.search(sql))
-
 
 # write-set extraction: statement shapes whose TARGET relation is
 # syntactically fixed. One alternation, first capture group = target.
@@ -197,11 +179,15 @@ class PlanKey(tuple):
 
 
 def _plan_key(ns: str, sql: str, session: Any) -> Optional[PlanKey]:
-    """None when no key can be built — the statement does not analyze
-    (the job then reports the error) or its plan cannot be read: such a
-    request runs uncached rather than failing."""
+    """None when no key can be built — the plan is not
+    :func:`deterministic` (its rows may differ on a re-run), the
+    statement does not analyze (the job then reports the error) or its
+    plan cannot be read: such a request runs uncached rather than
+    failing."""
     try:
         plan = analyzed(session.sql(sql))
+        if not deterministic(plan):
+            return None
         rest, limit = peel_limit(normalize(plan))
         return PlanKey(ns, rest, output_names(plan), limit)
     except Exception:

@@ -20,11 +20,13 @@ from __future__ import annotations
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor, wait
+from typing import Any
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import SparkSession
 
 from sparksql_server_spark.plans.analysis import scan_fingerprints, scan_nodes
-from sparksql_server_spark.plans.catalyst import analyzed
+from sparksql_server_spark.plans.catalyst import analyzed, kind
 from sparksql_server_spark.server.batcher import preschedule
 from sparksql_server_spark.server.cache import CacheManager, _dir_bytes
 from sparksql_server_spark.server.detector import detect_sharing
@@ -37,6 +39,38 @@ from sparksql_server_spark.server.mrshare import (
 )
 
 MAX_INLINE_ROWS = 10_000
+
+_STATEMENT_MARKERS = (
+    "org.apache.spark.sql.catalyst.plans.logical.Command",
+    "org.apache.spark.sql.catalyst.plans.logical.ParsedStatement",
+)
+
+
+def classify(session: SparkSession, sql: str) -> tuple[bool, Any]:
+    """``(is_query, parsed plan)`` of one statement, from one parse by
+    ``session``'s parser (no analysis, no execution).
+
+    Commands (DDL/DML — CREATE/INSERT/DROP/CACHE/SET…, and SQL-scripting
+    blocks) execute EAGERLY at ``sql()`` time in Spark, so analyzing
+    them as queries would run them twice; they also never share scans,
+    so they skip detection and execute exactly once in ``_run_job``.
+    A statement is a command when its parsed plan is a Catalyst
+    ``Command`` or ``ParsedStatement``, looking through CTE nodes first:
+    ``WITH s AS (...) INSERT INTO ...`` starts with a query keyword but
+    is DML. Unparseable text is ``(True, None)``, so the real error
+    surfaces from ``sql()`` in the normal path."""
+    try:
+        plan = session._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+    except Exception:
+        return True, None
+    gateway = session.sparkContext._gateway
+    node = plan
+    for _ in range(3):  # WITH wraps the main statement
+        if kind(node) not in ("UnresolvedWith", "WithCTE"):
+            break
+        node = node.children().head()
+    command = any(is_instance_of(gateway, node, m) for m in _STATEMENT_MARKERS)
+    return not command, plan
 
 
 class BatchExecutor:
@@ -99,7 +133,6 @@ class BatchExecutor:
         # updates under contention, and the failure/fallback counters
         # exist precisely to never under-report
         self._stats_lock = threading.Lock()
-        self._is_query_memo: dict[str, bool] = {}
 
     def _bump_stat(self, key: str, n: int = 1) -> None:
         with self._stats_lock:
@@ -107,71 +140,13 @@ class BatchExecutor:
 
     # -- analysis ---------------------------------------------------------
 
-    def _is_query(self, sql: str) -> bool:
-        """Memoized front of :meth:`_classify_sql` — the verdict is a
-        pure function of the text, and the gateway consults it two to
-        three times per request (intake, post-batch flush scan, JDBC
-        answer path), each a serial py4j parse round-trip on a hot
-        thread without this."""
-        hit = self._is_query_memo.get(sql)
-        if hit is None:
-            hit = self._classify_sql(sql)
-            with self._stats_lock:
-                if len(self._is_query_memo) >= 4096:
-                    self._is_query_memo.clear()  # crude bound; refill is cheap
-                self._is_query_memo[sql] = hit
-        return hit
-
-    def _classify_sql(self, sql: str) -> bool:
-        """True for plan-producing statements. Commands (DDL/DML —
-        CREATE/INSERT/DROP/CACHE/SET…) execute EAGERLY at ``sql()``
-        time in Spark, so fingerprinting them in analyze() would run
-        them twice; they also never share scans, so they skip detection
-        and execute exactly once in ``_run_job``.
-
-        Classification PARSES the statement (no analysis, no
-        execution) and checks the parsed plan against Catalyst's
-        ``Command`` / ``ParsedStatement`` markers, unwrapping CTE
-        nodes first. A keyword check is not enough — a CTE-led
-        ``WITH s AS (...) INSERT INTO ...`` starts with a query
-        keyword but is DML (round-1 bug: the old keyword whitelist
-        executed such statements twice, once in analyze and once in
-        the runner), and a leading comment hides the keyword entirely.
-        Unparseable text is treated as a query so the real error
-        surfaces from ``sql()`` in the normal path."""
-        try:
-            plan = (
-                self.spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-            )
-            # SQL-scripting blocks (BEGIN … END, Spark 4) parse to
-            # CompoundBody — not a Command subclass, but sql() runs the
-            # whole script eagerly, so the query path would execute it
-            # twice and its arbitrary statements must never be
-            # fingerprinted/merged. Route it down the execute-once
-            # command path (which also invalidates the result cache —
-            # scripts may contain DDL).
-            if plan.getClass().getSimpleName() == "CompoundBody":
-                return False
-            # WITH wraps the main statement; classify what it wraps
-            for _ in range(3):
-                if plan.getClass().getSimpleName() in ("UnresolvedWith", "WithCTE"):
-                    plan = plan.children().head()
-                else:
-                    break
-            jcls = self.spark._jvm.java.lang.Class.forName
-            for marker in (
-                "org.apache.spark.sql.catalyst.plans.logical.Command",
-                "org.apache.spark.sql.catalyst.plans.logical.ParsedStatement",
-            ):
-                if jcls(marker).isInstance(plan):
-                    return False
-            return True
-        except Exception:
-            return True
-
     def analyze(self, job: QueryJob) -> None:
-        """Resolve the job's plan (no execution) and fingerprint its scans."""
-        if not self._is_query(job.sql):
+        """Resolve the job's plan (no execution) and fingerprint its scans.
+        Jobs arriving unclassified (built outside the gateway) are
+        classified here, once."""
+        if job.is_query is None:
+            job.is_query = classify(job.session or self.spark, job.sql)[0]
+        if not job.is_query:
             job.fingerprints = frozenset()
             return
         df = (job.session or self.spark).sql(job.sql)
@@ -344,6 +319,8 @@ class BatchExecutor:
             if view is None:
                 continue
             fractions = self._read_fractions(source, view, jobs)
+            if fractions is None:
+                continue
             fmt = next(
                 (j.read_formats[source] for j in jobs if source in j.read_formats),
                 None,
@@ -360,14 +337,19 @@ class BatchExecutor:
 
     def _read_fractions(
         self, source: str, view: str, jobs: list[QueryJob]
-    ) -> list[float]:
+    ) -> list[float] | None:
         """Per sharing job: the fraction of the table's columns its plan
-        reads from ``source`` (1.0 when unknown — conservative toward
-        the pre-cost-model behavior)."""
+        reads from ``source`` (1.0 when the job's width is unknown).
+        None when the table's width is unknown — ``view`` no longer
+        resolves (dropped or replaced since registration) — and unknown
+        declines, as in ``ScanObserver._table_width``: caching it would
+        fail the whole batch."""
         try:
-            total = len(self.spark.table(view).columns) or 1
+            total = len(self.spark.table(view).columns)
         except Exception:
-            total = 1
+            return None
+        if not total:
+            return None
         return [
             min(1.0, job.read_cols.get(source, total) / total)
             for job in jobs

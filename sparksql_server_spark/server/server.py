@@ -20,9 +20,10 @@ DAGListener.scala:104):
     request : {"cancel": id}    (cancel a queued or running job)
     response: {"id": N, "cancelled": true|false}
 
-    A repeat of identical deterministic query text (same session) with a
-    complete inline result is served from the gateway's result cache
-    ("cached": true in the reply); any command flushes that cache.
+    A repeat of a query whose analyzed plan is deterministic (same
+    session namespace) with a complete inline result is served from the
+    gateway's result cache ("cached": true in the reply); commands
+    flush the entries their write set touches.
 
     request : {"server_stats": true}   (optimizer-decision counters —
               the queryable form of the reference's per-batch logging)
@@ -57,22 +58,23 @@ from pyspark.sql import SparkSession
 
 from sparksql_server_spark.catalog import TABLES, register_tables
 from sparksql_server_spark.functions.udfs import register_udfs, register_udtfs
+from sparksql_server_spark.plans.catalyst import analyzed, deterministic, to_df
 from sparksql_server_spark.server.batcher import WindowBatcher
-from sparksql_server_spark.server.jdbc_proxy import (
-    benign_jdbc_command,
-    mirrorable_jdbc_drop_view,
-    mirrorable_jdbc_set,
-    mirrorable_jdbc_temp_view,
-)
 from sparksql_server_spark.server.cache import CacheManager
+from sparksql_server_spark.server.jdbc_proxy import (
+    benign_command,
+    dropped_view,
+    mirrorable_set,
+    set_assignment,
+    temp_view,
+)
 from sparksql_server_spark.server.model import QueryJob
 from sparksql_server_spark.server.results import (
     ResultCache,
-    cacheable_sql,
     command_write_set,
     tables_from_fingerprints,
 )
-from sparksql_server_spark.server.scheduler import BatchExecutor
+from sparksql_server_spark.server.scheduler import BatchExecutor, classify
 
 import os
 
@@ -317,7 +319,7 @@ class WorkSharingServer:
         One unresolvable writer -> whole flush."""
         write_set: set[str] = set()
         for j in batch:
-            if not self.executor._is_query(j.sql):
+            if not j.is_query:
                 if j.props.get("_rc_flushed"):
                     # wait-path commands flush synchronously after
                     # completion (read-your-writes); re-flushing here
@@ -446,12 +448,12 @@ class WorkSharingServer:
         sql: str,
         props: dict[str, Any] | None = None,
         session: SparkSession | None = None,
+        is_query: bool | None = None,
     ) -> QueryJob:
         with self._id_lock:
             self._next_id += 1
-            job = QueryJob(
-                job_id=self._next_id, sql=sql, props=props or {}, session=session
-            )
+            job = QueryJob(job_id=self._next_id, sql=sql, props=props or {},
+                           session=session, is_query=is_query)
             # insertion and cap-eviction are serialized under the same
             # lock: a concurrent submit during the sorted() iteration
             # below would otherwise mutate the dict mid-iteration
@@ -492,15 +494,16 @@ class WorkSharingServer:
         without the re-flush, a result cached inside the window
         survives until TTL). The epoch bump at arrival additionally
         discards every put from a query in flight across this call."""
-        if not self.executor._is_query(sql):
-            if benign_jdbc_command(sql):
+        is_query, plan = classify(self.spark, sql)
+        if not is_query:
+            if benign_command(plan):
                 # whitelisted housekeeping (USE default, conf reads,
-                # hive.server2.* knobs — benign_jdbc_command): no
+                # hive.server2.* knobs — benign_command): no
                 # catalog effect, so no flush, no taint, no epoch bump.
                 # Without this, every BI connect's `USE default` cost a
                 # whole-cache invalidation (its write set is
                 # unresolvable → invalidate_all)
-                self._mirror_benign_set(sql)
+                self._mirror_set(set_assignment(plan))
                 return
             self.results.bump_generation()
             ws = self._resolve_write_set(sql, self.spark)
@@ -531,11 +534,16 @@ class WorkSharingServer:
             t.daemon = True
             t.start()
             return
-        job = self.submit(sql, {"prime_only": True})
+        job = self.submit(sql, {"prime_only": True}, is_query=True)
         job.done_event.wait(timeout)
 
-    def _mirror_benign_set(self, sql: str, session_id: str | None = None) -> None:
-        """Apply an allowlisted performance-conf SET assignment to the
+    def _mirror_set(
+        self,
+        pair: tuple[str, str] | None,
+        session_id: str | None = None,
+        root: bool = True,
+    ) -> None:
+        """Apply an allowlisted performance-conf SET ``pair`` to the
         gateway's root session (round 9, VERDICT r8 ask #3) so its
         plan shaping tracks the client's intent. The root session is
         SHARED across clean JDBC clients — deliberately: substitution
@@ -543,7 +551,7 @@ class WorkSharingServer:
         key is results-free, so the worst another client sees is a
         different partition count (last-writer-wins, like any shared
         engine's perf knobs). Values are TYPE-VALIDATED before this is
-        reached (mirrorable_jdbc_set, ADVICE r9): a value that sets
+        reached (jdbc_proxy.mirrorable_set, ADVICE r9): a value that sets
         cleanly but fails at plan time (e.g. a bogus adaptive
         cost-evaluator class) would break every subsequent gateway
         query for all clean clients, so unvalidatable values decline
@@ -563,20 +571,22 @@ class WorkSharingServer:
         plan shaping. SETs sent BEFORE the first view mirror are
         re-announced by the proxy once the session exists
         (conn.pending_sets), so the private session never silently
-        drops the client's earlier intent (round-10 review wave)."""
-        pair = mirrorable_jdbc_set(sql)
+        drops the client's earlier intent (round-10 review wave); that
+        replay passes ``root=False``, because root received those SETs
+        at send time."""
         if pair is None:
             return
-        try:
-            self.spark.conf.set(pair[0], pair[1])
-        except Exception:  # noqa: BLE001 — bad value: gateway keeps
-            # its current conf; results are unaffected by definition
-            return
+        if root:
+            try:
+                self.spark.conf.set(*pair)
+            except Exception:  # noqa: BLE001 — bad value: gateway keeps
+                # its current conf; results are unaffected by definition
+                return
         if session_id is not None:
-            live = self._log_jdbc_set(session_id, pair[0], pair[1])
+            live = self._log_jdbc_set(session_id, *pair)
             if live is not None:
                 try:
-                    live.conf.set(pair[0], pair[1])
+                    live.conf.set(*pair)
                 except Exception:  # noqa: BLE001 — same contract as root
                     pass
 
@@ -593,24 +603,19 @@ class WorkSharingServer:
             live = self._sessions.get(session_id)
         return live[0] if live is not None else None
 
-    def replay_jdbc_sets(self, session_id: str, stmts: list) -> None:
-        """SESSION-ONLY mirror of the SETs a connection sent BEFORE its
-        first view mirror (proxy ``replay_sets=`` channel). Root is
-        deliberately NOT touched: these statements were applied to root
-        at SEND time, and re-writing root now would clobber newer
-        writes from other clients with stale values (round-10 review
-        wave). Values re-validate here — the channel is as exposed as
-        answer()."""
-        sess = self.session_for(session_id)
-        for stmt in stmts:
-            pair = mirrorable_jdbc_set(str(stmt))
-            if pair is None:
-                continue
-            try:
-                sess.conf.set(pair[0], pair[1])
-            except Exception:  # noqa: BLE001 — perf-only, keep going
-                continue
-            self._log_jdbc_set(session_id, pair[0], pair[1])
+    def replay_jdbc_sets(self, session_id: str | None, pairs: list) -> None:
+        """Mirror SET (key, value) pairs the proxy read off the wire
+        (its ``replay_sets=`` channel). ``session_id`` None: an
+        OpenSession overlay's pairs, mirrored to root like a
+        statement-form SET. A session id: the SETs a connection sent
+        BEFORE its first view mirror, replayed into that new session
+        ONLY — they were applied to root at SEND time, and re-writing
+        root now would clobber newer writes from other clients with
+        stale values (round-10 review wave). Pairs re-validate here —
+        the channel is as exposed as answer()."""
+        for key, value in pairs:
+            pair = mirrorable_set(str(key), str(value))
+            self._mirror_set(pair, session_id, root=session_id is None)
 
     def _mirror_drop_view(
         self, name: str, session_id: str
@@ -704,7 +709,9 @@ class WorkSharingServer:
         happened) and HiveServer2's own execution still benefits from
         whatever the window cached; None only when nothing ran
         (pre-execution failure), where the proxy gates + forwards as
-        in round 6.
+        in round 6. The statement is classified once, by the parser of
+        the session it would run in, and commands are read from that
+        parse (:meth:`_answer_jdbc_command`).
 
         Queries resolve against the ROOT session: substitution is only
         reachable from connections that have run no command, and such
@@ -737,52 +744,6 @@ class WorkSharingServer:
         ``answer`` (round-6 behavior: window priming only, single
         execution always)."""
         try:
-            if not self.executor._is_query(sql):
-                if benign_jdbc_command(sql):
-                    # session housekeeping with provably no semantic
-                    # effect (USE default, conf reads, hive.server2.*
-                    # transport knobs, allowlisted perf-conf SETs):
-                    # the proxy forwards it but KEEPS substitution
-                    # enabled — BI tools emit these at connect, and
-                    # demoting on them turned the merge win off for
-                    # exactly the clients it targets (VERDICT r7 ask
-                    # #1, widened to SET assignments by r8 ask #3)
-                    self._mirror_benign_set(sql, session_id)
-                    return {"passthrough": "benign"}
-                tv = mirrorable_jdbc_temp_view(sql)
-                if tv is not None and cacheable_sql(tv[0]):
-                    stmt, name, _body = tv
-                    sid = session_id or f"jdbc-{uuid.uuid4().hex[:16]}"
-                    try:
-                        self.session_for(sid).sql(stmt).collect()
-                    except Exception:
-                        # the gateway could not mirror it (view exists
-                        # without OR REPLACE, recursive OR REPLACE over
-                        # a registered base-table view, unresolvable
-                        # body): its session state may now diverge from
-                        # what HiveServer2 will hold after the forward
-                        # — demote, the only safe direction
-                        return {"passthrough": "command"}
-                    with self._session_lock:
-                        # private result keys from now on: this
-                        # session's text resolves through its views
-                        self._dirty_sessions.add(sid)
-                        self._jdbc_replay.setdefault(sid, []).append(
-                            ("sql", stmt, name.lower())
-                        )
-                    # OR REPLACE of an earlier mirror: private entries
-                    # derived from the old definition must not survive.
-                    # No global epoch bump — the view is invisible to
-                    # every other session, and this connection's own
-                    # statements are serialized by the proxy pump.
-                    self.results.invalidate_session(sid)
-                    return {"passthrough": "mirrored", "session": sid}
-                dv = mirrorable_jdbc_drop_view(sql)
-                if dv is not None and session_id is not None:
-                    out = self._mirror_drop_view(dv, session_id)
-                    if out is not None:
-                        return out
-                return {"passthrough": "command"}
             # view-bearing connections route to their session ONLY when
             # the text could reference a mirrored view (lowercased
             # substring over-approximation — catches backquoting and
@@ -797,13 +758,17 @@ class WorkSharingServer:
                 and self._mentions_mirrored_view(sql, session_id)
                 else None
             )
-            res = self.handle_request(
-                {"sql": sql, "session": route_sid}
-                if route_sid is not None
-                else {"sql": sql}
-            )
+            session = self.session_for(route_sid)
+            is_query, plan = classify(session, sql)
+            if is_query:
+                res = self._run_sql(sql, route_sid, session, True, {}, True)
         except Exception:
             return None
+        if not is_query:
+            try:
+                return self._answer_jdbc_command(sql, plan, session, session_id)
+            except Exception:  # a command the gateway cannot read demotes
+                return {"passthrough": "command"}
         if (
             res.get("status") != "done"
             or res.get("rows") is None
@@ -818,6 +783,59 @@ class WorkSharingServer:
             "dtypes": res.get("dtypes"),
             "rows": res["rows"],
         }
+
+    def _answer_jdbc_command(
+        self, sql: str, plan: Any, session: SparkSession, session_id: str | None
+    ) -> dict[str, Any]:
+        """answer_jdbc's reply to a command, read from its parsed
+        ``plan``: benign (a mirrored SET adds its pair under "set"),
+        mirrored (temp-view create or drop), or a demoting command."""
+        if benign_command(plan):
+            # session housekeeping with provably no semantic effect
+            # (USE default, conf reads, hive.server2.* transport knobs,
+            # allowlisted perf-conf SETs): the proxy forwards it but
+            # KEEPS substitution enabled — BI tools emit these at
+            # connect, and demoting on them turned the merge win off
+            # for exactly the clients it targets (VERDICT r7 ask #1,
+            # widened to SET assignments by r8 ask #3)
+            pair = set_assignment(plan)
+            self._mirror_set(pair, session_id)
+            if pair is None:
+                return {"passthrough": "benign"}
+            return {"passthrough": "benign", "set": pair}
+        view = temp_view(plan)
+        if view is not None and deterministic(analyzed(to_df(session, view[1]))):
+            name = view[0]
+            sid = session_id or f"jdbc-{uuid.uuid4().hex[:16]}"
+            try:
+                self.session_for(sid).sql(sql).collect()
+            except Exception:
+                # the gateway could not mirror it (view exists without
+                # OR REPLACE, recursive OR REPLACE over a registered
+                # base-table view): its session state may now diverge
+                # from what HiveServer2 will hold after the forward —
+                # demote, the only safe direction
+                return {"passthrough": "command"}
+            with self._session_lock:
+                # private result keys from now on: this session's text
+                # resolves through its views
+                self._dirty_sessions.add(sid)
+                self._jdbc_replay.setdefault(sid, []).append(
+                    ("sql", sql, name.lower())
+                )
+            # OR REPLACE of an earlier mirror: private entries derived
+            # from the old definition must not survive. No global
+            # epoch bump — the view is invisible to every other
+            # session, and this connection's own statements are
+            # serialized by the proxy pump.
+            self.results.invalidate_session(sid)
+            return {"passthrough": "mirrored", "session": sid}
+        name = dropped_view(plan)
+        if name is not None and session_id is not None:
+            out = self._mirror_drop_view(name, session_id)
+            if out is not None:
+                return out
+        return {"passthrough": "command"}
 
     def handle_request(self, req: dict[str, Any]) -> dict[str, Any]:
         if "status" in req:  # {"status": id} -> poll a submitted job
@@ -844,13 +862,14 @@ class WorkSharingServer:
         # collided with the clean shared one
         req_sid = req.get("session") or None
         session = self.session_for(req_sid)
+        is_query = classify(session, sql)[0]
         if "explain" in req:  # plan introspection: immediate, never queued
             # only plan-producing statements: ``session.sql`` EXECUTES
             # commands (DDL/DML) eagerly at plan time, so explaining an
             # INSERT/DROP here would run the side effect — outside any
             # job group, uncancellable, unaccounted. Commands must go
             # through the queue as normal jobs.
-            if not self.executor._is_query(sql):
+            if not is_query:
                 return {
                     "status": "error",
                     "error": "explain accepts queries only "
@@ -865,19 +884,31 @@ class WorkSharingServer:
         props = dict(req.get("props") or {})
         if "output" in req:
             props["output"] = req["output"]
+        return self._run_sql(
+            sql, req_sid, session, is_query, props, req.get("wait", True)
+        )
 
+    def _run_sql(
+        self,
+        sql: str,
+        sid: str | None,
+        session: SparkSession,
+        is_query: bool,
+        props: dict[str, Any],
+        wait: bool,
+    ) -> dict[str, Any]:
+        """Run one classified statement through the window: result-cache
+        lookup and put for queries, write-set flushes for writers."""
         # result cache (server/results.py): a repeat of a deterministic
         # query with inline results is served from the gateway; commands
         # flush by write set after running (whole cache when the write
         # set can't be parsed)
-        is_query = self.executor._is_query(sql)
         if is_query and "output" in props:
             # a sink job is a WRITER: a query over the output path
             # batched concurrently could otherwise cache pre-overwrite
             # rows under a still-valid epoch (same hazard the command
             # path bumps for)
             self.results.bump_generation()
-        sid = req_sid
         resolved_ws: frozenset[str] | None = None
         if not is_query:
             # bump the put-epoch at ARRIVAL, before the command runs: a
@@ -893,7 +924,7 @@ class WorkSharingServer:
             # read) and carry it for the post-execution flushes
             resolved_ws = self._resolve_write_set(sql, session)
             props["_resolved_write_set"] = resolved_ws
-            if req.get("wait", True):
+            if wait:
                 # the wait path below flushes synchronously after the
                 # command completes; claim it NOW so the batch loop's
                 # flush (which may run before this handler wakes)
@@ -916,12 +947,7 @@ class WorkSharingServer:
         # to other clean sessions
         rc_generation = self.results.generation
         rc_key = None
-        if (
-            is_query
-            and "output" not in props
-            and req.get("wait", True)
-            and cacheable_sql(sql)
-        ):
+        if is_query and "output" not in props and wait:
             with self._session_lock:
                 clean = (
                     not self._root_dirty
@@ -941,8 +967,13 @@ class WorkSharingServer:
                 cached["cached"] = True
                 return cached
 
-        job = self.submit(sql, props, session=None if session is self.spark else session)
-        if req.get("wait", True):
+        job = self.submit(
+            sql,
+            props,
+            session=None if session is self.spark else session,
+            is_query=is_query,
+        )
+        if wait:
             job.done_event.wait()
             result = job.result()
             if not is_query:

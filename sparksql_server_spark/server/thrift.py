@@ -62,6 +62,9 @@ increasing strength:
   proxy docstring: over-inline-cap results fall back to forwarding,
   the first command (or a non-benign OpenSession overlay, or a
   pre-V6 client protocol) demotes its connection to gate+forward.
+  Whether a statement is a command, benign housekeeping or a mirrorable
+  temp view is Spark's verdict: the gateway parses it once with the
+  requesting session's parser and reads the Catalyst node.
 
 Single-instance-per-JVM: the port/bind-host travel through process-
 global JVM system properties and HiveThriftServer2 itself is a

@@ -78,7 +78,8 @@ PIN_VIEW_QUERIES = [
     ("dedup_ngram_jaccard", "jacc_kept_mat"),
     ("dedup_shingle_containment", "cont_kept_mat"),
     # r13: CacheScope.finish -> finish_pin adopters (per-operator
-    # interleaved A/Bs: tools/ab_inline.py tools/specs/finish_pin.py)
+    # interleaved A/Bs: tools/ab_inline.py tools/specs/finish_pin.py, both
+    # in commit 16a0a24)
     ("agg_hll_running_distinct", "hll_running_mat"),
     ("dedup_simhash_pairs", "simhash_sig_mat"),
     ("tpch_q15_top_supplier", "q15_revenue"),

@@ -30,6 +30,7 @@ from sparksql_server_spark.server.mrshare import (
     plan_merges,
     read_plan,
 )
+from sparksql_server_spark.server.scheduler import classify
 from sparksql_server_spark.server.server import source_view_map
 from tests.conftest import SF_DIR
 
@@ -272,7 +273,7 @@ def _never_wrong(spark, executor, sql):
     exactly as standalone), declined by the plan reader with a reason,
     or read as the mergeable shape — and then an identical twin merges
     with it and both return the standalone rows."""
-    if not executor._is_query(sql):
+    if not classify(spark, sql)[0]:
         return
     try:
         verdict = _read(spark, sql)

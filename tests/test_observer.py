@@ -15,13 +15,13 @@ import time
 import pytest
 
 from sparksql_server_spark.catalog import register_tables
-from sparksql_server_spark.plans.analysis import parse_scans, scan_nodes
-from sparksql_server_spark.server.cache import CacheManager
-from sparksql_server_spark.server.observer import (
-    ScanObserver,
+from sparksql_server_spark.plans.analysis import (
     _top_level_fields,
-    scan_events,
+    parse_scans,
+    scan_nodes,
 )
+from sparksql_server_spark.server.cache import CacheManager
+from sparksql_server_spark.server.observer import ScanObserver
 from tests.conftest import SF_DIR
 
 
@@ -56,11 +56,11 @@ def test_scan_events_parses_live_plan(spark):
     hits = [
         ev
         for d in descs
-        for ev in scan_events(d)
+        for ev in parse_scans(d)
         if ev[0].endswith("supplier.parquet")
     ]
     assert hits, "no supplier scan event parsed from the status store"
-    source, fmt, ncols = hits[-1]
+    source, ncols, fmt = hits[-1]
     assert source == SF_DIR + "/supplier.parquet"
     assert fmt == "parquet"
     # pruned ReadSchema: the query touches 2 columns of 7
@@ -79,8 +79,8 @@ def test_scan_events_do_not_cross_scan_boundaries():
         "   Location: InMemoryFileIndex(1 paths)[file:/data/t.parquet]\n"
         "   ReadSchema: struct<b:int,c:int>\n"
     )
-    events = scan_events(desc)
-    assert events == [("/data/t.parquet", "parquet", 2)]
+    events = parse_scans(desc)
+    assert events == [("/data/t.parquet", 2, "parquet")]
 
 
 def test_parse_scans_ignores_scan_text_in_pushed_filters():

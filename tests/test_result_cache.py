@@ -12,7 +12,6 @@ from sparksql_server_spark.server import WorkSharingServer, client_request
 from sparksql_server_spark.server.results import (
     PlanKey,
     ResultCache,
-    cacheable_sql,
     tables_from_fingerprints,
 )
 from tests.conftest import SF_DIR
@@ -49,8 +48,10 @@ def K(spark):
         ("SELECT uniform(0, 10) AS u FROM region", False),
     ],
 )
-def test_cacheable_sql(sql, ok):
-    assert cacheable_sql(sql) is ok
+def test_cacheable_sql(K, sql, ok):
+    """Eligibility is read from the analyzed plan: a nondeterministic or
+    CURRENT_LIKE plan gets no key."""
+    assert (K(sql) is not None) is ok
 
 
 def test_key_preserves_whitespace_inside_literals(K):
@@ -279,11 +280,10 @@ def test_semantic_keys_hit_across_spellings(K, spark):
         " FROM lineitem GROUP BY l_returnflag"
     )  # column order observable
     assert K(base + " LIMIT 5") != K(base + " LIMIT 6")
-    # every analyzable statement keys on its plan; nondeterministic ones
-    # are kept out of the cache by the server's cacheable_sql gate
+    # every analyzable deterministic statement keys on its plan
     assert isinstance(K("SELECT * FROM lineitem LIMIT 5"), PlanKey)
     assert K("SELECT * FROM no_such_table") is None
-    assert not cacheable_sql(base.replace("GROUP BY", "WHERE rand() < 0.5 GROUP BY"))
+    assert K(base.replace("GROUP BY", "WHERE rand() < 0.5 GROUP BY")) is None
     # session namespaces stay disjoint for the same plan
     assert K(base) != K(base, "sess1")
     assert K(base) != ResultCache.key_root(base, spark)
@@ -461,6 +461,20 @@ def test_nondeterministic_query_not_cached(server):
     client_request(server.address, {"sql": sql})
     again = client_request(server.address, {"sql": sql})
     assert "cached" not in again
+
+
+def test_reflected_uuid_is_never_served_from_cache(server):
+    """try_reflect calls arbitrary JVM code, so its analyzed plan is
+    nondeterministic: the repeat runs again and returns a new UUID."""
+    sql = (
+        "SELECT try_reflect('java.util.UUID', 'randomUUID') AS u"
+        " FROM region WHERE r_regionkey = 0"
+    )
+    first = client_request(server.address, {"sql": sql})
+    second = client_request(server.address, {"sql": sql})
+    assert first["status"] == second["status"] == "done", (first, second)
+    assert "cached" not in second
+    assert first["rows"] != second["rows"]
 
 
 def test_taint_starvation_is_scoped_and_counted():

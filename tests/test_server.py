@@ -19,6 +19,7 @@ from sparksql_server_spark.server import (
     client_request,
     detect_sharing,
 )
+from sparksql_server_spark.server.scheduler import classify
 from sparksql_server_spark.server.server import source_view_map
 from sparksql_server_spark.catalog import register_tables
 from tests.conftest import SF_DIR
@@ -1239,13 +1240,12 @@ class TestSqlScripting:
     — the same trap the CTE-led-INSERT classification already guards."""
 
     def test_script_classified_as_command(self, spark):
-        ex = BatchExecutor(spark)
-        assert ex._is_query("BEGIN SELECT 1 AS x; END") is False
+        assert classify(spark, "BEGIN SELECT 1 AS x; END")[0] is False
         assert (
-            ex._is_query("BEGIN DECLARE v INT DEFAULT 3; SELECT v AS x; END")
+            classify(spark, "BEGIN DECLARE v INT DEFAULT 3; SELECT v AS x; END")[0]
             is False
         )
-        assert ex._is_query("SELECT 1 AS x") is True
+        assert classify(spark, "SELECT 1 AS x")[0] is True
 
     def test_script_round_trip_executes_once(self, spark, tmp_path):
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
@@ -1296,9 +1296,20 @@ import threading as _th
 
 from sparksql_server_spark.server.jdbc_proxy import (
     JdbcLineProxy,
-    parse_call,
+    benign_command,
+    parse_call_ex,
+    set_assignment,
     statements_in_frame,
+    temp_view,
 )
+
+
+def _read(spark, reader, sql):
+    """``reader`` applied to ``sql`` as the gateway applies it: to the
+    parsed plan of a command. None for queries and for text Spark's
+    parser rejects."""
+    is_query, plan = classify(spark, sql)
+    return None if is_query else reader(plan)
 
 
 def _tstr(b: bytes) -> bytes:
@@ -1402,13 +1413,13 @@ class TestThriftParsing:
     def test_extracts_statement_and_end(self):
         sql = "SELECT count(*) FROM lineitem WHERE l_tax > 0.01"
         msg = _exec_stmt_call(sql)
-        end, name, stmt = parse_call(msg + b"XTRA")
-        assert (end, name, stmt) == (len(msg), "ExecuteStatement", sql)
+        p = parse_call_ex(msg + b"XTRA")
+        assert (p[0], p[1], p[3]) == (len(msg), "ExecuteStatement", sql)
 
     def test_non_execute_calls_skip_generically(self):
         msg = _open_session_call()
-        end, name, stmt = parse_call(msg)
-        assert (end, name, stmt) == (len(msg), "OpenSession", None)
+        p = parse_call_ex(msg)
+        assert (p[0], p[1], p[3]) == (len(msg), "OpenSession", None)
 
     def test_every_prefix_is_incomplete_not_error(self):
         """A split TCP read can end at ANY byte: every strict prefix
@@ -1416,11 +1427,11 @@ class TestThriftParsing:
         demote the connection to blind."""
         msg = _exec_stmt_call("SELECT 1")
         for i in range(len(msg)):
-            assert parse_call(msg[:i]) is None, i
+            assert parse_call_ex(msg[:i]) is None, i
 
     def test_garbage_raises_for_blind_demotion(self):
         with pytest.raises(ValueError):
-            parse_call(b"\x00\x00\x00\x05hello world")
+            parse_call_ex(b"\x00\x00\x00\x05hello world")
 
     def test_statements_in_frame(self):
         a, b = _exec_stmt_call("SELECT 1"), _exec_stmt_call("SELECT 2")
@@ -1431,7 +1442,8 @@ class TestThriftParsing:
 
 class TestBenignJdbcCommand:
     """Whitelist for session-housekeeping statements that keep a
-    proxied connection substitution-clean (VERDICT r7 ask #1)."""
+    proxied connection substitution-clean (VERDICT r7 ask #1), read
+    from Spark's parse of each statement."""
 
     @pytest.mark.parametrize(
         "sql",
@@ -1443,7 +1455,6 @@ class TestBenignJdbcCommand:
             "/* BI tool */ USE default",
             "SET",
             "SET -v",
-            "set -V",
             "SET hive.server2.thrift.resultset.max.fetch.size",
             "SET mapreduce.job.reduces",
             "SET hive.server2.thrift.resultset.max.fetch.size=1000",
@@ -1461,10 +1472,8 @@ class TestBenignJdbcCommand:
             "reset;",
         ],
     )
-    def test_benign(self, sql):
-        from sparksql_server_spark.server.jdbc_proxy import benign_jdbc_command
-
-        assert benign_jdbc_command(sql), sql
+    def test_benign(self, spark, sql):
+        assert _read(spark, benign_command, sql), sql
 
     @pytest.mark.parametrize(
         "sql",
@@ -1492,97 +1501,104 @@ class TestBenignJdbcCommand:
             "ADD JAR /tmp/x.jar",
             "-- only a comment",
             "SET `weird key`=1",
+            # Spark's parser reads only a lowercase -v (HiveServer2
+            # rejects the statement too)
+            "set -V",
         ],
     )
-    def test_not_benign(self, sql):
-        from sparksql_server_spark.server.jdbc_proxy import benign_jdbc_command
+    def test_not_benign(self, spark, sql):
+        assert not _read(spark, benign_command, sql), sql
 
-        assert not benign_jdbc_command(sql), sql
+    def test_mirrorable_set_extraction(self, spark):
+        def set_pair(sql):
+            return _read(spark, set_assignment, sql)
 
-    def test_mirrorable_set_extraction(self):
-        from sparksql_server_spark.server.jdbc_proxy import mirrorable_jdbc_set
-
-        assert mirrorable_jdbc_set("SET spark.sql.shuffle.partitions=6") == (
+        assert set_pair("SET spark.sql.shuffle.partitions=6") == (
             "spark.sql.shuffle.partitions",
             "6",
         )
         # allowlist matches case-insensitively, but the key mirrors in
         # the client's ORIGINAL spelling — Spark conf keys are
         # case-sensitive, so folding would set a dead key
-        assert mirrorable_jdbc_set(
+        assert set_pair(
             "/* bi */ set spark.sql.autoBroadcastJoinThreshold = 64m ;"
         ) == ("spark.sql.autoBroadcastJoinThreshold", "64m")
         # benign-but-not-mirrorable: hive.server2.* is meaningless to Spark
-        assert mirrorable_jdbc_set("SET hive.server2.async.exec.threads=9") is None
+        assert set_pair("SET hive.server2.async.exec.threads=9") is None
         # reads, unknown keys, non-SETs
-        assert mirrorable_jdbc_set("SET spark.sql.shuffle.partitions") is None
-        assert mirrorable_jdbc_set("SET spark.sql.ansi.enabled=true") is None
-        assert mirrorable_jdbc_set("USE default") is None
+        assert set_pair("SET spark.sql.shuffle.partitions") is None
+        assert set_pair("SET spark.sql.ansi.enabled=true") is None
+        assert set_pair("USE default") is None
 
-    def test_mirrorable_value_validation(self):
+    def test_mirrorable_value_validation(self, spark):
         """Round 10 (ADVICE r9): the mirror target is the SHARED root
         session, so values must parse as the key's conf type BEFORE
         mirroring — a value that sets cleanly but fails at plan time
         (bogus adaptive class name) would break every clean client."""
-        from sparksql_server_spark.server.jdbc_proxy import mirrorable_jdbc_set
+
+        def set_pair(sql):
+            return _read(spark, set_assignment, sql)
 
         # typed values pass
-        assert mirrorable_jdbc_set("SET spark.sql.adaptive.enabled=TRUE") == (
+        assert set_pair("SET spark.sql.adaptive.enabled=TRUE") == (
             "spark.sql.adaptive.enabled",
             "TRUE",
         )
-        assert mirrorable_jdbc_set(
+        assert set_pair(
             "SET spark.sql.adaptive.advisoryPartitionSizeInBytes=128MB"
         ) == ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128MB")
-        assert mirrorable_jdbc_set("SET spark.sql.broadcastTimeout=600s") == (
+        assert set_pair("SET spark.sql.broadcastTimeout=600s") == (
             "spark.sql.broadcastTimeout",
             "600s",
         )
-        assert mirrorable_jdbc_set(
+        assert set_pair(
             "SET spark.sql.autoBroadcastJoinThreshold=-1"
         ) == ("spark.sql.autoBroadcastJoinThreshold", "-1")
         # type mismatches decline
-        assert mirrorable_jdbc_set("SET spark.sql.shuffle.partitions=auto") is None
-        assert mirrorable_jdbc_set("SET spark.sql.adaptive.enabled=maybe") is None
+        assert set_pair("SET spark.sql.shuffle.partitions=auto") is None
+        assert set_pair("SET spark.sql.adaptive.enabled=maybe") is None
         # adaptive.* is a CLOSED set: class-name / free-string keys
         # (the plan-time-bomb surface) are not mirrorable
         assert (
-            mirrorable_jdbc_set(
+            set_pair(
                 "SET spark.sql.adaptive.customCostEvaluatorClass=com.x.Bogus"
             )
             is None
         )
         assert (
-            mirrorable_jdbc_set(
+            set_pair(
                 "SET spark.sql.adaptive.optimizer.excludedRules=org.x.Rule"
             )
             is None
         )
 
-    def test_mirrorable_trailing_comment_trim(self):
+    def test_mirrorable_trailing_comment_trim(self, spark):
         """Round 10 (ADVICE r9): 'SET k=v -- tweak' previously mirrored
         the literal value 'v -- tweak'; string-typed keys stored the
-        garbage in the shared session. One trailing comment trims;
-        embedded markers decline."""
-        from sparksql_server_spark.server.jdbc_proxy import mirrorable_jdbc_set
+        garbage in the shared session. Spark's SetCommand keeps the
+        comment in the value, so one trailing comment trims; embedded
+        markers decline."""
 
-        assert mirrorable_jdbc_set(
+        def set_pair(sql):
+            return _read(spark, set_assignment, sql)
+
+        assert set_pair(
             "SET spark.sql.shuffle.partitions=200 -- tweak"
         ) == ("spark.sql.shuffle.partitions", "200")
-        assert mirrorable_jdbc_set(
+        assert set_pair(
             "SET spark.scheduler.pool=etl /* nightly */"
         ) == ("spark.scheduler.pool", "etl")
         # '--' opens a comment even unspaced (Spark's lexer does the
         # same to the forwarded statement, so the trim MATCHES what
         # HiveServer2 will apply)
-        assert mirrorable_jdbc_set("SET spark.scheduler.pool=etl--x") == (
+        assert set_pair("SET spark.scheduler.pool=etl--x") == (
             "spark.scheduler.pool",
             "etl",
         )
         # unclosed block, text after a block, or comment-only value: decline
-        assert mirrorable_jdbc_set("SET spark.scheduler.pool=etl /* x") is None
-        assert mirrorable_jdbc_set("SET spark.scheduler.pool=a/*x*/b") is None
-        assert mirrorable_jdbc_set("SET spark.scheduler.pool= -- gone") is None
+        assert set_pair("SET spark.scheduler.pool=etl /* x") is None
+        assert set_pair("SET spark.scheduler.pool=a/*x*/b") is None
+        assert set_pair("SET spark.scheduler.pool= -- gone") is None
 
     def test_mirror_applies_to_gateway_session(self, spark):
         from sparksql_server_spark.server import WorkSharingServer
@@ -1594,8 +1610,12 @@ class TestBenignJdbcCommand:
             srv.prime("SET spark.sql.shuffle.partitions=6")
             assert spark.conf.get("spark.sql.shuffle.partitions") == "6"
             # answer_jdbc path mirrors too, reporting benign passthrough
+            # the reply carries the mirrored pair for the proxy
             out = srv.answer_jdbc("SET spark.sql.shuffle.partitions=12")
-            assert out == {"passthrough": "benign"}
+            assert out == {
+                "passthrough": "benign",
+                "set": ("spark.sql.shuffle.partitions", "12"),
+            }
             assert spark.conf.get("spark.sql.shuffle.partitions") == "12"
             # a malformed value is swallowed (forward carries the error)
             srv.answer_jdbc("SET spark.sql.shuffle.partitions=not_a_number")
@@ -2140,15 +2160,8 @@ class TestThriftSubstitution:
         gated = []
 
         def answer(sql):
-            from sparksql_server_spark.server.jdbc_proxy import (
-                benign_jdbc_command,
-            )
-
-            s = sql.lstrip().upper()
-            if s.startswith(("USE", "SET", "RESET")):
-                if benign_jdbc_command(sql):
-                    return {"passthrough": "benign"}
-                return {"passthrough": "command"}
+            if sql.lstrip().upper().startswith(("USE", "SET", "RESET")):
+                return {"passthrough": "benign"}
             return dict(self.ANSWER)
 
         proxy = JdbcLineProxy(ups.address, gate=gated.append, answer=answer).start()
@@ -2184,14 +2197,8 @@ class TestThriftSubstitution:
         ups = _Upstream()
 
         def answer(sql):
-            from sparksql_server_spark.server.jdbc_proxy import (
-                benign_jdbc_command,
-            )
-
-            if sql.lstrip().upper().startswith(("USE", "SET")):
-                if benign_jdbc_command(sql):
-                    return {"passthrough": "benign"}
-                return {"passthrough": "command"}
+            if sql.lstrip().upper().startswith("USE"):
+                return {"passthrough": "command"}  # USE warehouse2
             return dict(self.ANSWER)
 
         proxy = JdbcLineProxy(ups.address, gate=lambda s: None, answer=answer).start()
@@ -2842,6 +2849,46 @@ class TestGatewayHardeningR8:
             srv.executor.cache.clear()
 
 
+def test_caching_rewrite_over_an_unresolvable_view_declines(spark):
+    """A root client dropped the view the caching rewrite names a
+    shared source by. Its width is then unknown, and unknown declines:
+    two named-session queries over the source run uncached in one
+    window instead of failing the batch in cacheTable."""
+    import threading
+
+    srv = WorkSharingServer(spark, SF_DIR, window_size=2, max_wait=3.0)
+    srv.executor.cache = CacheManager(
+        spark, min_bytes=0, benefit_factor=0.0, columnar_benefit_factor=0.0
+    )
+    srv.start()
+    try:
+        assert client_request(srv.address, {"sql": "DROP VIEW orders"})["status"] == "done"
+        sqls = {
+            "s1": "SELECT count(*) AS n FROM orders",
+            "s2": "SELECT count(*) AS n FROM orders WHERE o_totalprice > 0",
+        }
+        out = {}
+
+        def ask(sid):
+            out[sid] = client_request(srv.address, {"sql": sqls[sid], "session": sid})
+
+        threads = [threading.Thread(target=ask, args=(sid,)) for sid in sqls]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        n = spark.read.parquet(f"{SF_DIR}/orders.parquet").count()
+        assert out["s1"]["status"] == "done", out["s1"]
+        assert out["s1"]["rows"] == [[n]]
+        assert out["s2"]["status"] == "done", out["s2"]
+        assert srv.executor.stats["batches"] == 2  # the DROP, then one window
+        assert not srv.executor.cache.cached_sources
+    finally:
+        register_tables(spark, SF_DIR, ("orders",))
+        srv.shutdown()
+        srv.executor.cache.clear()
+
+
 class TestJdbcTempViewMirror:
     """Round 10 (VERDICT r9 ask #3): a deterministic CREATE TEMPORARY
     VIEW no longer demotes a JDBC connection for life — the gateway
@@ -2850,16 +2897,19 @@ class TestJdbcTempViewMirror:
     merged root path, replays the mirror if the session is reaped, and
     drops everything on connection close."""
 
-    def test_parser_accepts_only_bare_temp_view_shapes(self):
-        from sparksql_server_spark.server.jdbc_proxy import (
-            mirrorable_jdbc_temp_view as tv,
-        )
+    def test_parser_accepts_only_bare_temp_view_shapes(self, spark):
+        from sparksql_server_spark.plans.catalyst import kind
+
+        def tv(sql):
+            return _read(spark, temp_view, sql)
 
         got = tv("CREATE TEMPORARY VIEW topc AS SELECT 1 AS x")
-        assert got == ("CREATE TEMPORARY VIEW topc AS SELECT 1 AS x", "topc", "SELECT 1 AS x")
-        assert tv("create or replace temp view `V2` as select * from t")[1] == "V2"
-        assert tv("-- bi tool\nCREATE TEMP VIEW v AS SELECT 2;")[1] == "v"
-        assert tv("CREATE TEMPORARY VIEW IF NOT EXISTS v AS SELECT 2")[1] == "v"
+        assert got[0] == "topc" and kind(got[1]) == "Project"
+        assert tv("create or replace temp view `V2` as select * from t")[0] == "V2"
+        assert tv("-- bi tool\nCREATE TEMP VIEW v AS SELECT 2;")[0] == "v"
+        # Spark's parser rejects IF NOT EXISTS on a temporary view
+        # (HiveServer2 rejects the statement too)
+        assert tv("CREATE TEMPORARY VIEW IF NOT EXISTS v AS SELECT 2") is None
         # declines: global namespace is CROSS-session on HiveServer2;
         # qualified/dotted names aren't temp views; column lists and
         # other DDL shapes don't match; compound text never whitelists
@@ -3136,8 +3186,8 @@ class TestJdbcTempViewMirror:
 class TestOverlayPerfConfMirror:
     """Round 10: connect-time ``set:hiveconf:<perf key>`` overlay
     entries get the same treatment as statement-form SETs — benign for
-    allowlisted keys with type-valid values, mirrored through answer(),
-    demote otherwise."""
+    allowlisted keys with type-valid values, mirrored as (key, value)
+    pairs through replay_sets, demote otherwise."""
 
     def test_benign_open_conf_accepts_mirrorable_perf_keys(self):
         from sparksql_server_spark.server.jdbc_proxy import (
@@ -3148,7 +3198,7 @@ class TestOverlayPerfConfMirror:
         ok = {"set:hiveconf:spark.sql.shuffle.partitions": "6"}
         assert benign_open_conf(ok)
         assert mirrorable_open_conf_sets(ok) == [
-            "SET spark.sql.shuffle.partitions=6"
+            ("spark.sql.shuffle.partitions", "6")
         ]
         # type-invalid value, unknown key, hivevar: all demote as before
         assert not benign_open_conf(
@@ -3166,21 +3216,22 @@ class TestOverlayPerfConfMirror:
         }
         assert benign_open_conf(mixed)
         assert mirrorable_open_conf_sets(mixed) == [
-            "SET spark.sql.autoBroadcastJoinThreshold=64MB"
+            ("spark.sql.autoBroadcastJoinThreshold", "64MB")
         ]
 
     def test_overlay_mirrors_and_keeps_substitution(self):
         ups = _Upstream()
-        calls = []
+        calls, mirrored = [], []
 
         def answer(s, sid=None):
             calls.append(s)
-            if s.lower().startswith("set"):
-                return {"passthrough": "benign"}
             return {"columns": ["x"], "rows": [[1]]}
 
         proxy = JdbcLineProxy(
-            ups.address, gate=lambda s: None, answer=answer
+            ups.address,
+            gate=lambda s: None,
+            answer=answer,
+            replay_sets=lambda sid, pairs: mirrored.append((sid, list(pairs))),
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -3192,7 +3243,9 @@ class TestOverlayPerfConfMirror:
                 c.sendall(_exec_stmt_call("SELECT 1", seq=2))
                 name, _s, d = _recv_reply(c)
                 assert name == "ExecuteStatement" and d[0][1][1] == 0
-            assert calls[0] == "SET spark.sql.shuffle.partitions=6"
+            # the overlay pair mirrors to root; no SET text is rebuilt
+            assert mirrored == [(None, [("spark.sql.shuffle.partitions", "6")])]
+            assert calls == ["SELECT 1"]
             assert proxy.stats["statements_answered"] == 1
         finally:
             proxy.stop()
