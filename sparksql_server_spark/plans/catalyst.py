@@ -156,9 +156,11 @@ def output_names(plan: Any) -> tuple[str, ...]:
 
 def deterministic(plan: Any) -> bool:
     """Whether re-running an analyzed plan returns the same rows: it has
-    no nondeterministic expression (rand, uuid, reflect, …, subqueries
-    included) and no ``CURRENT_LIKE`` one (current time, date, time
-    zone, user, database), which the optimizer fixes once per run."""
+    no nondeterministic expression (rand, uuid, reflect, …) and no
+    ``CURRENT_LIKE`` one (current time, date, time zone, user,
+    database), which the optimizer fixes once per run. Both checks
+    reach into subqueries: a subquery expression is deterministic only
+    when its plan is, and it carries its plan's tree-pattern bits."""
     return bool(plan.deterministic()) and not plan.containsPattern(
         pattern("CURRENT_LIKE")
     )

@@ -499,7 +499,9 @@ def mirrorable_set(key: str, value: str) -> Optional[tuple[str, str]]:
 # The gateway parses each statement once, with the requesting session's
 # own parser (scheduler.classify), and reads the parsed Catalyst node
 # here: a statement is whatever Spark says it is. Text the parser
-# rejects (HiveServer2 rejects it too) reads as no shape at all.
+# rejects has no plan to read: the gateway runs it as a query, the
+# query fails, and the reply asks the proxy to forward it, leaving the
+# connection clean (HiveServer2 rejects the text too).
 
 
 def _set_kv(plan: Any) -> Optional[tuple[str, Optional[str]]]:

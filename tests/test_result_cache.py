@@ -46,6 +46,38 @@ def K(spark):
         ("SELECT curdate() AS d", False),
         ("SELECT randstr(8) AS s FROM region", False),
         ("SELECT uniform(0, 10) AS u FROM region", False),
+        # a CURRENT_LIKE call inside a scalar or IN subquery, or a
+        # subquery nested in one, is still read from the analyzed plan
+        (
+            "SELECT o_orderkey FROM orders"
+            " WHERE o_orderdate > (SELECT date_sub(current_date(), 7))",
+            False,
+        ),
+        (
+            "SELECT r_name FROM region"
+            " WHERE r_regionkey < (SELECT hour(current_timestamp()))",
+            False,
+        ),
+        (
+            "SELECT r_name FROM region"
+            " WHERE r_regionkey IN (SELECT day(current_date()))",
+            False,
+        ),
+        (
+            "SELECT r_name FROM region"
+            " WHERE r_regionkey IN (SELECT hour(current_timestamp()))",
+            False,
+        ),
+        (
+            "SELECT r_name FROM region WHERE r_regionkey IN (SELECT n_regionkey"
+            " FROM nation WHERE n_nationkey < (SELECT day(current_date())))",
+            False,
+        ),
+        (
+            "SELECT r_name FROM region"
+            " WHERE r_regionkey IN (SELECT n_regionkey FROM nation)",
+            True,
+        ),
     ],
 )
 def test_cacheable_sql(K, sql, ok):

@@ -1501,13 +1501,32 @@ class TestBenignJdbcCommand:
             "ADD JAR /tmp/x.jar",
             "-- only a comment",
             "SET `weird key`=1",
-            # Spark's parser reads only a lowercase -v (HiveServer2
-            # rejects the statement too)
-            "set -V",
         ],
     )
     def test_not_benign(self, spark, sql):
         assert not _read(spark, benign_command, sql), sql
+
+    @pytest.mark.parametrize(
+        "sql",
+        [
+            # Spark's parser reads only a lowercase -v
+            "set -V",
+            "CREATE TEMPORARY VIEW IF NOT EXISTS v AS SELECT 2",
+        ],
+    )
+    def test_parser_rejected_text_runs_as_a_failing_query(self, spark, sql):
+        """Text Spark's parser rejects is no command at all: the gateway
+        runs it as a query, the query fails, and the reply asks the
+        proxy to forward (HiveServer2 rejects the text too). It is
+        neither benign nor a demoting command."""
+        from sparksql_server_spark.server import WorkSharingServer
+
+        assert classify(spark, sql) == (True, None)
+        srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.05).start()
+        try:
+            assert srv.answer_jdbc(sql) == {"fallback": True}
+        finally:
+            srv.shutdown()
 
     def test_mirrorable_set_extraction(self, spark):
         def set_pair(sql):
@@ -3044,6 +3063,9 @@ class TestJdbcTempViewMirror:
         try:
             for ddl in (
                 "CREATE TEMPORARY VIEW r AS SELECT rand() AS x",   # nondeterministic
+                # CURRENT_LIKE inside a subquery of the body
+                "CREATE TEMPORARY VIEW d AS SELECT r_name FROM region"
+                " WHERE r_regionkey < (SELECT day(current_date()))",
                 "CREATE GLOBAL TEMPORARY VIEW g AS SELECT 1 AS x", # cross-session
                 "CREATE TEMPORARY VIEW nation AS SELECT 1 AS x",   # exists, no OR REPLACE
                 "DROP VIEW somev",
