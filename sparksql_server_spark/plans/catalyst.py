@@ -51,6 +51,17 @@ def kind(node: Any) -> str:
     return node.getClass().getSimpleName()
 
 
+def statement(plan: Any) -> tuple[Any, str]:
+    """The statement node of a parsed plan and its simple class name,
+    looking through CTE nodes: ``WITH s AS (...) INSERT INTO ...``
+    is an INSERT."""
+    node, name = plan, kind(plan)
+    while name in ("UnresolvedWith", "WithCTE"):
+        node = node.children().head()
+        name = kind(node)
+    return node, name
+
+
 @functools.lru_cache(maxsize=None)
 def pattern(name: str) -> Any:
     return jvm(f"org.apache.spark.sql.catalyst.trees.TreePattern.{name}")()

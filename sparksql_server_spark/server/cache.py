@@ -82,20 +82,30 @@ class CacheEntry:
 class CacheManager:
     """Size-aware admission + LRU eviction over cached temp views."""
 
+    # a source is cached only when at least this many batch jobs share it
+    min_sharers = 2
+    # Fraction of the executor's FREE storage memory a build may
+    # claim. The round-1 regression: admission trusted a configured
+    # budget the JVM didn't actually have (a default-config session
+    # has ~455 MB storage, not our tuned 8 GB), so the build
+    # spilled/evicted and the "optimized" batch ran slower than
+    # plain concurrent execution. Admission now observes the real
+    # memory manager and declines when the build won't fit —
+    # declining falls back to concurrent-uncached, which already
+    # beats back-to-back ~3×, so a batch never does worse than it.
+    storage_headroom = 0.8
+
     def __init__(
         self,
         spark: SparkSession,
         budget_bytes: int = 4 << 30,
-        min_sharers: int = 2,
         min_bytes: int = 64 << 20,
         benefit_factor: float = 1.2,
         columnar_benefit_factor: float = 6.0,
         mem_expansion: float = 4.0,
-        storage_headroom: float = 0.8,
     ) -> None:
         self.spark = spark
         self.budget = budget_bytes
-        self.min_sharers = min_sharers
         # Columnar sources (parquet/orc) need a much larger shared
         # workload before caching pays: their rescan is a vectorized
         # decode of page-cached bytes, so a warm InMemoryRelation read
@@ -113,16 +123,6 @@ class CacheManager:
         # snappy parquet decodes ~2-6× bigger; row-text is roughly
         # size-neutral (measured 161 MB csv → 113 MB in-memory).
         self.mem_expansion = mem_expansion
-        # Fraction of the executor's FREE storage memory a build may
-        # claim. The round-1 regression: admission trusted a configured
-        # budget the JVM didn't actually have (a default-config session
-        # has ~455 MB storage, not our tuned 8 GB), so the build
-        # spilled/evicted and the "optimized" batch ran slower than
-        # plain concurrent execution. Admission now observes the real
-        # memory manager and declines when the build won't fit —
-        # declining falls back to concurrent-uncached, which already
-        # beats back-to-back ~3×, so a batch never does worse than it.
-        self.storage_headroom = storage_headroom
         # sources whose build was observed not to fit (never retried)
         self._rejected: set[str] = set()
         # one lock guards _entries/_rejected: since round 5 the

@@ -13,7 +13,7 @@ import threading
 import time
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import Any
+from typing import Any, Callable
 
 
 class JobStatus(str, Enum):
@@ -67,6 +67,10 @@ class QueryJob:
     # sharing one SparkContext — temp views/conf isolate, the plan cache
     # and InMemoryRelations stay shared, so work-sharing crosses sessions.
     session: Any = field(default=None, repr=False)
+    # called once the job has run (or failed while running), before
+    # done_event releases its client: the gateway puts its writers'
+    # result-cache flush here
+    on_done: Callable[[], None] | None = field(default=None, repr=False)
     done_event: threading.Event = field(default_factory=threading.Event, repr=False)
     # guards the QUEUED→RUNNING / QUEUED→cancelled transition so the
     # runner and a concurrent cancel() can't both claim the job

@@ -29,10 +29,12 @@ Safety rules (all conservative):
   never cached;
 - commands invalidate by WRITE SET: each cached entry records the
   tables its plan read (from the detector's leaf fingerprints), and a
-  command whose target tables parse out of its SQL flushes only the
-  intersecting entries — a log INSERT no longer zeroes the dashboard
-  hit rate. Any command whose write set canNOT be resolved (SET, ADD
-  JAR, unrecognized syntax) keeps the whole-cache flush: a false
+  command whose target table Spark's parse names
+  (:func:`command_write_set`) flushes only the intersecting entries —
+  a log INSERT no longer zeroes the dashboard hit rate. The flush runs
+  once, when the writer job completes and before its client is
+  released. Any command that names no target table (SET, ADD JAR,
+  EXECUTE IMMEDIATE, a directory write) keeps the whole-cache flush: a false
   retention is a wrong answer while a false invalidation only costs a
   re-run. EVERY flush — scoped or full — bumps the put-epoch, so a
   query in flight concurrently with any command can never insert its
@@ -47,72 +49,60 @@ driver-memory footprint a few MB.
 
 from __future__ import annotations
 
-import re
 import threading
 import time
 from collections import OrderedDict
 from typing import Any, Optional
 
+from py4j.java_gateway import JavaObject
+
 from sparksql_server_spark.plans.catalyst import (
     analyzed,
     deterministic,
+    kind,
     normalize,
     output_names,
     peel_limit,
+    pylist,
+    statement,
 )
 
-# write-set extraction: statement shapes whose TARGET relation is
-# syntactically fixed. One alternation, first capture group = target.
-# Matching is on the literal-stripped normalized text so a table name
-# inside a string can't spoof it. Anything that doesn't match resolves
-# to None -> whole-cache flush (SET changes evaluation semantics, ADD
-# JAR/unknown syntax could do anything).
-_WRITE_TARGET = re.compile(
-    r"^\s*(?:"
-    r"INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`]+)"
-    r"|UPDATE\s+([\w.`]+)\s"
-    r"|DELETE\s+FROM\s+([\w.`]+)"
-    r"|MERGE\s+INTO\s+([\w.`]+)"
-    r"|DROP\s+(?:TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?([\w.`]+)"
-    r"|ALTER\s+(?:TABLE|VIEW)\s+([\w.`]+)"
-    r"|TRUNCATE\s+(?:TABLE\s+)?([\w.`]+)"
-    r"|CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?(?:TEMP\s+|TEMPORARY\s+)?"
-    r"(?:TABLE|VIEW)\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.`]+)"
-    r"|REFRESH\s+(?:TABLE\s+)?([\w.`]+)"
-    r"|ANALYZE\s+TABLE\s+([\w.`]+)"
-    r"|(?:CACHE\s+(?:LAZY\s+)?|UNCACHE\s+)TABLE\s+(?:IF\s+EXISTS\s+)?([\w.`]+)"
-    r")",
-    re.I,
+# parsed name nodes whose first field is the target's multipart name
+_NAME_NODES = (
+    "UnresolvedRelation",
+    "UnresolvedIdentifier",
+    "UnresolvedTable",
+    "UnresolvedTableOrView",
+    "UnresolvedView",
 )
 
 
-def _bare_name(name: str) -> str:
-    """`db`.`tbl` / db.tbl -> tbl (cached entries key tables by the
-    unqualified basename of their scan fingerprints)."""
-    return name.replace("`", "").rsplit(".", 1)[-1].lower()
-
-
-def command_write_set(sql: str) -> Optional[frozenset[str]]:
-    """The set of table names a command statement writes/redefines, or
-    None when the statement shape isn't recognized (callers must then
-    flush everything). Multi-statement inputs are not a gateway shape
-    (one request = one statement), so only the head is inspected.
+def command_write_set(plan: Any) -> Optional[frozenset[str]]:
+    """The table names a parsed command (``scheduler.classify``'s plan)
+    writes or redefines, or None when it names no target table (callers
+    must then flush everything). The target is the command's first
+    constructor field when that field names a relation — INSERT,
+    UPDATE, DELETE, MERGE, DROP, ALTER, TRUNCATE, CREATE, REFRESH,
+    ANALYZE, CACHE/UNCACHE — or a CREATE VIEW / CACHE TABLE AS name.
+    Everything else is None: SET, USE, ADD JAR, scripts, namespaces,
+    EXECUTE IMMEDIATE (its target is inside a string) and ``INSERT
+    OVERWRITE [LOCAL] DIRECTORY``, which writes a path.
 
     Both the unqualified basename (cached entries key tables that way)
-    and the full qualified name (so _resolve_write_set can look up
-    ``db.tbl`` in the catalog, not whatever ``tbl`` means in the
-    current database) are returned. ``INSERT OVERWRITE [LOCAL]
-    DIRECTORY`` writes a PATH the regex cannot capture -> None, the
-    whole-cache flush (the captured pseudo-target would otherwise
-    silently scope the flush to a table named 'directory')."""
-    m = _WRITE_TARGET.match(sql.strip())
-    if not m:
-        return None
-    target = next(g for g in m.groups() if g)
-    qualified = target.replace("`", "").lower()
-    if qualified in ("directory", "local"):
-        return None
-    return frozenset({_bare_name(target), qualified})
+    and the full qualified name (so the server can look up ``db.tbl``
+    in the catalog, not whatever ``tbl`` means in the current database)
+    are returned."""
+    node, name = statement(plan)
+    if name == "CacheTableAsSelect":
+        parts = [node.tempViewName()]
+    elif name == "CreateViewCommand":
+        parts = pylist(node.name().nameParts())
+    else:
+        target = node.productElement(0) if node.productArity() else None
+        if not isinstance(target, JavaObject) or kind(target) not in _NAME_NODES:
+            return None
+        parts = pylist(target.productElement(0))
+    return frozenset({parts[-1].lower(), ".".join(parts).lower()})
 
 
 _EXTENSIONS = (".parquet", ".orc", ".csv", ".json", ".txt", ".avro", ".xml")

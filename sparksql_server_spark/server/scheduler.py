@@ -26,7 +26,7 @@ from py4j.java_gateway import is_instance_of
 from pyspark.sql import SparkSession
 
 from sparksql_server_spark.plans.analysis import scan_fingerprints, scan_nodes
-from sparksql_server_spark.plans.catalyst import analyzed, kind
+from sparksql_server_spark.plans.catalyst import analyzed, statement
 from sparksql_server_spark.server.batcher import preschedule
 from sparksql_server_spark.server.cache import CacheManager, _dir_bytes
 from sparksql_server_spark.server.detector import detect_sharing
@@ -44,6 +44,9 @@ _STATEMENT_MARKERS = (
     "org.apache.spark.sql.catalyst.plans.logical.Command",
     "org.apache.spark.sql.catalyst.plans.logical.ParsedStatement",
 )
+# statements Spark also runs eagerly at ``sql()`` time that are neither
+# a Command nor a ParsedStatement when parsed
+_EAGER = ("InsertIntoDir", "UnresolvedExecuteImmediate")
 
 
 def classify(session: SparkSession, sql: str) -> tuple[bool, Any]:
@@ -55,39 +58,38 @@ def classify(session: SparkSession, sql: str) -> tuple[bool, Any]:
     them as queries would run them twice; they also never share scans,
     so they skip detection and execute exactly once in ``_run_job``.
     A statement is a command when its parsed plan is a Catalyst
-    ``Command`` or ``ParsedStatement``, looking through CTE nodes first:
-    ``WITH s AS (...) INSERT INTO ...`` starts with a query keyword but
-    is DML. Unparseable text is ``(True, None)``, so the real error
-    surfaces from ``sql()`` in the normal path."""
+    ``Command`` or ``ParsedStatement``, an ``INSERT OVERWRITE
+    DIRECTORY`` or an ``EXECUTE IMMEDIATE``, looking through CTE nodes
+    first (:func:`statement`). Unparseable text is ``(True, None)``, so
+    the real error surfaces from ``sql()`` in the normal path."""
     try:
         plan = session._jsparkSession.sessionState().sqlParser().parsePlan(sql)
     except Exception:
         return True, None
     gateway = session.sparkContext._gateway
-    node = plan
-    for _ in range(3):  # WITH wraps the main statement
-        if kind(node) not in ("UnresolvedWith", "WithCTE"):
-            break
-        node = node.children().head()
-    command = any(is_instance_of(gateway, node, m) for m in _STATEMENT_MARKERS)
+    node, name = statement(plan)
+    command = name in _EAGER or any(
+        is_instance_of(gateway, node, m) for m in _STATEMENT_MARKERS
+    )
     return not command, plan
 
 
 class BatchExecutor:
     """Executes window batches of QueryJobs over one SparkSession."""
 
+    # pool threads running one batch's jobs
+    max_concurrency = 16
+
     def __init__(
         self,
         spark: SparkSession,
         cache: CacheManager | None = None,
-        max_concurrency: int = 16,
         source_views: dict[str, str] | None = None,
         enable_mrshare: bool = True,
         mrshare_min_bytes: int = 64 << 20,
     ) -> None:
         self.spark = spark
         self.cache = cache or CacheManager(spark)
-        self.max_concurrency = max_concurrency
         # MRShare-style aggregation merging (server/mrshare.py ≙ B8).
         # Same-signature merges replace N scans + N shuffles with one
         # of each (measured ~2x faster than both concurrent-unmerged
@@ -501,4 +503,8 @@ class BatchExecutor:
             sc.setLocalProperty("spark.scheduler.pool", None)
             for src in job.fingerprints:
                 self.cache.touch(src)
-            job.done_event.set()
+            try:
+                if job.on_done is not None:
+                    job.on_done()
+            finally:
+                job.done_event.set()

@@ -47,12 +47,13 @@ text; no code crosses the boundary.
 
 from __future__ import annotations
 
+import functools
 import json
 import socket
 import socketserver
 import threading
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -173,8 +174,8 @@ class WorkSharingServer:
         # command (temp view, SET, DDL — anything that could change how
         # ITS text resolves) it is marked dirty and keys privately from
         # then on; the command also bumps the put-epoch at arrival and
-        # flushes its write set (whole cache when unparseable) after
-        # running, so nothing stale survives the transition either way.
+        # flushes its write set (whole cache when it names no table)
+        # on completion, so nothing stale survives the transition.
         self._dirty_sessions: set[str] = set()
         # per-JDBC-connection mirror replay log (round 10, VERDICT r9
         # ask #3): the statements the gateway mirrored into a
@@ -260,13 +261,6 @@ class WorkSharingServer:
                 continue
             try:
                 self.executor.run_batch(batch)
-                # a command anywhere in the batch may have changed
-                # table state; a SINK job ("output" prop) may have
-                # overwritten a path a cached query read. Flush served
-                # results regardless of the client's wait mode —
-                # scoped to the batch's union write set when every
-                # writer's target resolves, whole-cache otherwise.
-                self._flush_results_for_batch(batch)
             except Exception as exc:  # noqa: BLE001 — loop must survive
                 # run_batch guards per-job analyze/execute, but a fault
                 # in detection or the cache rewrite would otherwise kill
@@ -282,18 +276,18 @@ class WorkSharingServer:
                         job.done_event.set()
 
     def _resolve_write_set(
-        self, sql: str, session: SparkSession
+        self, plan: Any, session: SparkSession
     ) -> frozenset[str] | None:
-        """Write set of a command, expanded to invalidation keys:
-        the parsed target names PLUS the targets' current scan
-        fingerprints (path + basename). Resolution runs at command
-        ARRIVAL, before execution — a table's name and its storage
-        location basename can differ (CREATE ... LOCATION), cached
-        entries key by fingerprint paths, and resolving pre-execution
-        is the only moment a DROP target or a to-be-replaced view
-        still resolves to the files today's entries actually read.
-        None = unparseable statement -> callers flush everything."""
-        ws = command_write_set(sql)
+        """Write set of a parsed command, expanded to invalidation keys:
+        the target names PLUS the targets' current scan fingerprints
+        (path + basename). Resolution runs at command ARRIVAL, before
+        execution — a table's name and its storage location basename
+        can differ (CREATE ... LOCATION), cached entries key by
+        fingerprint paths, and resolving pre-execution is the only
+        moment a DROP target or a to-be-replaced view still resolves to
+        the files today's entries actually read. None = no target
+        table -> callers flush everything."""
+        ws = command_write_set(plan)
         if ws is None:
             return None
         from sparksql_server_spark.plans.analysis import scan_fingerprints
@@ -310,35 +304,13 @@ class WorkSharingServer:
                 pass
         return frozenset(keys)
 
-    def _flush_results_for_batch(self, batch) -> None:
-        """Post-execution result-cache flush, scoped to the batch's
-        write set. Writers: commands (write set resolved at arrival in
-        handle_request, carried on the job) and sink jobs (write set =
-        the output path, plus its basename so a sink overwriting
-        ``/x/part.parquet`` flushes entries that read table ``part``).
-        One unresolvable writer -> whole flush."""
-        write_set: set[str] = set()
-        for j in batch:
-            if not j.is_query:
-                if j.props.get("_rc_flushed"):
-                    # wait-path commands flush synchronously after
-                    # completion (read-your-writes); re-flushing here
-                    # runs LATE on the loop thread and would wipe
-                    # entries legitimately cached AFTER the command
-                    # finished (observed as a flaky full-suite test)
-                    continue
-                ws = j.props.get("_resolved_write_set", ...)
-                if ws is ...:  # command that bypassed handle_request
-                    ws = command_write_set(j.sql)
-                if ws is None:
-                    self.results.invalidate_all()
-                    return
-                write_set |= ws
-            out = j.props.get("output")
-            if out and not j.props.get("_rc_sink_flushed"):
-                write_set |= tables_from_fingerprints({str(out).rstrip("/")})
-        if write_set:
-            self.results.invalidate_tables(frozenset(write_set))
+    def _flush_write_set(self, ws: frozenset[str] | None) -> None:
+        """Drop the cached results a writer may have changed: those
+        reading ``ws``, or all of them when it is None."""
+        if ws is None:
+            self.results.invalidate_all()
+        else:
+            self.results.invalidate_tables(ws)
 
     # -- request handling -------------------------------------------------
 
@@ -449,11 +421,12 @@ class WorkSharingServer:
         props: dict[str, Any] | None = None,
         session: SparkSession | None = None,
         is_query: bool | None = None,
+        on_done: Callable[[], None] | None = None,
     ) -> QueryJob:
         with self._id_lock:
             self._next_id += 1
             job = QueryJob(job_id=self._next_id, sql=sql, props=props or {},
-                           session=session, is_query=is_query)
+                           session=session, is_query=is_query, on_done=on_done)
             # insertion and cap-eviction are serialized under the same
             # lock: a concurrent submit during the sorted() iteration
             # below would otherwise mutate the dict mid-iteration
@@ -506,15 +479,8 @@ class WorkSharingServer:
                 self._mirror_set(set_assignment(plan))
                 return
             self.results.bump_generation()
-            ws = self._resolve_write_set(sql, self.spark)
-
-            def _flush() -> None:
-                if ws is None:
-                    self.results.invalidate_all()
-                else:
-                    self.results.invalidate_tables(ws)
-
-            _flush()
+            ws = self._resolve_write_set(plan, self.spark)
+            self._flush_write_set(ws)
             # the command executes on HiveServer2 AFTER the proxy
             # forwards the frame, at a time the gateway never
             # observes: the re-flush timer handles the common fast
@@ -523,14 +489,18 @@ class WorkSharingServer:
             # command (a command outliving the timer otherwise
             # re-opens the stale-cache window — review r7). Only
             # RESOLVED write shapes taint: the long-running dangers
-            # (INSERT/MERGE ... SELECT) all parse, while ws=None means
-            # SET/ADD JAR-class statements whose effects live in
-            # HiveServer2 session state the gateway's own executions
+            # (INSERT/MERGE ... SELECT) name their table, while ws=None
+            # is mostly SET/ADD JAR-class statements whose effects live
+            # in HiveServer2 session state the gateway's own executions
             # never see — a 10-minute global put-freeze for those
-            # would cost far more than it protects
+            # would cost far more than it protects. (EXECUTE IMMEDIATE
+            # and INSERT OVERWRITE DIRECTORY also read as None: the two
+            # flushes are all they get.)
             if ws is not None:
                 self.results.taint_tables(ws, self.jdbc_command_taint_seconds)
-            t = threading.Timer(self.jdbc_command_reflush_seconds, _flush)
+            t = threading.Timer(
+                self.jdbc_command_reflush_seconds, self._flush_write_set, (ws,)
+            )
             t.daemon = True
             t.start()
             return
@@ -761,7 +731,7 @@ class WorkSharingServer:
             session = self.session_for(route_sid)
             is_query, plan = classify(session, sql)
             if is_query:
-                res = self._run_sql(sql, route_sid, session, True, {}, True)
+                res = self._run_sql(sql, route_sid, session, True, plan, {}, True)
         except Exception:
             return None
         if not is_query:
@@ -862,7 +832,7 @@ class WorkSharingServer:
         # collided with the clean shared one
         req_sid = req.get("session") or None
         session = self.session_for(req_sid)
-        is_query = classify(session, sql)[0]
+        is_query, plan = classify(session, sql)
         if "explain" in req:  # plan introspection: immediate, never queued
             # only plan-producing statements: ``session.sql`` EXECUTES
             # commands (DDL/DML) eagerly at plan time, so explaining an
@@ -877,15 +847,15 @@ class WorkSharingServer:
                 }
             mode = req["explain"] if isinstance(req["explain"], str) else "formatted"
             df = session.sql(sql)
-            plan = df._jdf.queryExecution().explainString(
+            text = df._jdf.queryExecution().explainString(
                 session._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
             )
-            return {"status": "done", "plan": plan}
+            return {"status": "done", "plan": text}
         props = dict(req.get("props") or {})
         if "output" in req:
             props["output"] = req["output"]
         return self._run_sql(
-            sql, req_sid, session, is_query, props, req.get("wait", True)
+            sql, req_sid, session, is_query, plan, props, req.get("wait", True)
         )
 
     def _run_sql(
@@ -894,42 +864,38 @@ class WorkSharingServer:
         sid: str | None,
         session: SparkSession,
         is_query: bool,
+        plan: Any,
         props: dict[str, Any],
         wait: bool,
     ) -> dict[str, Any]:
-        """Run one classified statement through the window: result-cache
-        lookup and put for queries, write-set flushes for writers."""
+        """Run one classified statement (``plan`` is its parse) through
+        the window: result-cache lookup and put for queries, a
+        write-set flush for writers."""
         # result cache (server/results.py): a repeat of a deterministic
-        # query with inline results is served from the gateway; commands
-        # flush by write set after running (whole cache when the write
-        # set can't be parsed)
-        if is_query and "output" in props:
-            # a sink job is a WRITER: a query over the output path
-            # batched concurrently could otherwise cache pre-overwrite
-            # rows under a still-valid epoch (same hazard the command
-            # path bumps for)
+        # query with inline results is served from the gateway. A
+        # writer — a command, or a sink job ("output" prop) overwriting
+        # a path cached queries may have read — flushes its write set
+        # when its job completes, before the job releases any waiting
+        # client (read-your-writes), whatever the client's wait mode
+        on_done = None
+        output = props.get("output")
+        if not is_query or output:
+            # bump the put-epoch at ARRIVAL, before the writer runs: a
+            # query batched concurrently with it could otherwise
+            # execute with the writer's in-progress state visible and
+            # insert that result under a still-valid epoch (ADVICE r6
+            # medium). Existing entries stay — they predate the write;
+            # the completion flush removes the ones it touches.
             self.results.bump_generation()
-        resolved_ws: frozenset[str] | None = None
+            # resolve a command's write set NOW (a DROP target still
+            # exists; a replaced view still points at the files cached
+            # entries read); None, the whole cache, when it names no
+            # table. A sink job writes its output path.
+            ws = frozenset() if is_query else self._resolve_write_set(plan, session)
+            if output and ws is not None:
+                ws |= tables_from_fingerprints({str(output).rstrip("/")})
+            on_done = functools.partial(self._flush_write_set, ws)
         if not is_query:
-            # bump the put-epoch at ARRIVAL, before the command runs: a
-            # query batched concurrently with this command could
-            # otherwise execute with the command's in-progress session/
-            # catalog state visible and insert that result under a
-            # still-valid epoch (ADVICE r6 medium). Existing entries
-            # stay — they predate the command; the post-batch scoped
-            # flush removes the ones it touches.
-            self.results.bump_generation()
-            # resolve the write set NOW (a DROP target still exists;
-            # a replaced view still points at the files cached entries
-            # read) and carry it for the post-execution flushes
-            resolved_ws = self._resolve_write_set(sql, session)
-            props["_resolved_write_set"] = resolved_ws
-            if wait:
-                # the wait path below flushes synchronously after the
-                # command completes; claim it NOW so the batch loop's
-                # flush (which may run before this handler wakes)
-                # skips the job either way
-                props["_rc_flushed"] = True
             # conservative: mark BEFORE execution (a failed command
             # may still have partially changed session state). The ROOT
             # session dirties too: a root CREATE TEMP VIEW shadows a
@@ -972,31 +938,12 @@ class WorkSharingServer:
             props,
             session=None if session is self.spark else session,
             is_query=is_query,
+            on_done=on_done,
         )
         if wait:
             job.done_event.wait()
             result = job.result()
-            if not is_query:
-                # synchronous read-your-writes: flush before replying so
-                # this client's immediate next query can't hit a stale
-                # entry; mark the job so the batch loop does NOT
-                # re-flush later (a late redundant flush would wipe
-                # entries cached after the command completed)
-                if resolved_ws is None:
-                    self.results.invalidate_all()
-                else:
-                    self.results.invalidate_tables(resolved_ws)
-            elif "output" in props:
-                # sink jobs are writers too: the client is unblocked at
-                # done_event, BEFORE the loop thread's post-batch flush
-                # (which waits on every other job in the batch), so an
-                # immediate re-read of the overwritten path could be
-                # served the pre-overwrite entry without this
-                self.results.invalidate_tables(
-                    tables_from_fingerprints({str(props["output"]).rstrip("/")})
-                )
-                job.props["_rc_sink_flushed"] = True
-            if is_query and (
+            if (
                 rc_key is not None
                 and job.status.value == "done"
                 and job.rows is not None

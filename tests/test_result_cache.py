@@ -12,8 +12,10 @@ from sparksql_server_spark.server import WorkSharingServer, client_request
 from sparksql_server_spark.server.results import (
     PlanKey,
     ResultCache,
+    command_write_set,
     tables_from_fingerprints,
 )
+from sparksql_server_spark.server.scheduler import classify
 from tests.conftest import SF_DIR
 
 Q = "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"
@@ -114,19 +116,21 @@ def test_put_discards_stale_generation():
     assert rc.get(k) == {"v": 2}
 
 
-def test_insert_overwrite_directory_is_unresolvable():
-    """Review r7: 'INSERT OVERWRITE DIRECTORY' must fall back to the
-    whole-cache flush — the regex would otherwise capture the keyword
-    DIRECTORY (or LOCAL) as a table name and scope the flush to a
-    table nothing reads."""
-    from sparksql_server_spark.server.results import command_write_set
+def _write_set(spark, sql):
+    """Write set of ``sql`` read from the parse the gateway makes."""
+    return command_write_set(classify(spark, sql)[1])
 
-    assert command_write_set("INSERT OVERWRITE DIRECTORY '/data/t' SELECT 1") is None
+
+def test_insert_overwrite_directory_is_unresolvable(spark):
+    """Review r7: 'INSERT OVERWRITE DIRECTORY' writes a path, not a
+    table, so it must fall back to the whole-cache flush rather than
+    scope the flush to a table nothing reads."""
+    assert _write_set(spark, "INSERT OVERWRITE DIRECTORY '/data/t' SELECT 1") is None
     assert (
-        command_write_set("INSERT OVERWRITE LOCAL DIRECTORY '/d' SELECT 1") is None
+        _write_set(spark, "INSERT OVERWRITE LOCAL DIRECTORY '/d' SELECT 1") is None
     )
     # a real table target still resolves, qualified AND bare
-    ws = command_write_set("INSERT INTO db2.`tbl` SELECT 1")
+    ws = _write_set(spark, "INSERT INTO db2.`tbl` SELECT 1")
     assert ws == frozenset({"tbl", "db2.tbl"})
 
 
@@ -195,12 +199,13 @@ def test_oversized_result_not_pinned():
         ("SET spark.sql.shuffle.partitions=8", None),
         ("ADD JAR /tmp/x.jar", None),
         ("BEGIN SELECT 1; END", None),
+        # the parse sees through a leading CTE or comment
+        ("WITH s AS (SELECT 1 AS k) INSERT INTO t SELECT k FROM s", {"t"}),
+        ("/* etl */ INSERT INTO region VALUES (1)", {"region"}),
     ],
 )
-def test_command_write_set(sql, expect):
-    from sparksql_server_spark.server.results import command_write_set
-
-    got = command_write_set(sql)
+def test_command_write_set(spark, sql, expect):
+    got = _write_set(spark, sql)
     assert (got if got is None else set(got)) == expect
 
 
@@ -385,6 +390,117 @@ def test_command_invalidation_is_write_set_scoped(server, tmp_path):
         )
     finally:
         client_request(server.address, {"sql": "DROP TABLE IF EXISTS rc_scope"})
+
+
+def test_cte_and_comment_led_commands_flush_only_their_target(server, tmp_path):
+    """A command led by WITH or by a comment names its target in the
+    parse just as a bare one does: writing rc_scope keeps region's
+    cached entry."""
+    out = str(tmp_path / "t_led")
+    mk = client_request(
+        server.address,
+        {"sql": f"CREATE TABLE rc_scope USING parquet LOCATION '{out}' "
+                "AS SELECT r_regionkey AS k FROM region"},
+    )
+    assert mk["status"] == "done", mk
+    try:
+        qa = "SELECT count(*) AS n FROM rc_scope"
+        n0 = client_request(server.address, {"sql": qa})["rows"][0][0]
+        client_request(server.address, {"sql": Q})
+        for i, cmd in enumerate(
+            (
+                "WITH s AS (SELECT 998 AS k) INSERT INTO rc_scope SELECT k FROM s",
+                "/* etl */ INSERT INTO rc_scope VALUES (999)",
+            ),
+            start=1,
+        ):
+            assert client_request(server.address, {"sql": Q}).get("cached") is True
+            ins = client_request(server.address, {"sql": cmd})
+            assert ins["status"] == "done", ins
+            a = client_request(server.address, {"sql": qa})
+            assert "cached" not in a and a["rows"][0][0] == n0 + i, (cmd, a)
+            assert client_request(server.address, {"sql": Q}).get("cached") is True, (
+                f"{cmd!r} must not flush an entry over an untouched table"
+            )
+    finally:
+        client_request(server.address, {"sql": "DROP TABLE IF EXISTS rc_scope"})
+
+
+def test_execute_immediate_runs_once_and_flushes(server, tmp_path):
+    """EXECUTE IMMEDIATE runs eagerly in Spark but parses to no Command
+    node: it must still run once, as a command, and flush the cache
+    (its target sits inside a string, so the whole cache)."""
+    loc = tmp_path / "ei"
+    loc.mkdir()
+    mk = client_request(
+        server.address,
+        {"sql": f"CREATE TABLE ei_t (x INT) USING parquet LOCATION '{loc}'"},
+    )
+    assert mk["status"] == "done", mk
+    try:
+        q = "SELECT count(*) AS n FROM ei_t"
+        assert client_request(server.address, {"sql": q})["rows"] == [[0]]
+        assert client_request(server.address, {"sql": q}).get("cached") is True
+        ins = client_request(
+            server.address, {"sql": "EXECUTE IMMEDIATE 'INSERT INTO ei_t VALUES (7)'"}
+        )
+        assert ins["status"] == "done", ins
+        after = client_request(server.address, {"sql": q})
+        assert "cached" not in after and after["rows"] == [[1]], after
+        # a query through EXECUTE IMMEDIATE runs on the command path:
+        # its rows come back, never from the cache
+        sel = {"sql": "EXECUTE IMMEDIATE 'SELECT x FROM ei_t'"}
+        for _ in range(2):
+            r = client_request(server.address, sel)
+            assert r["status"] == "done" and r["rows"] == [[7]], r
+            assert "cached" not in r
+    finally:
+        client_request(server.address, {"sql": "DROP TABLE IF EXISTS ei_t"})
+
+
+def test_insert_overwrite_directory_runs_once_and_flushes(server, spark, tmp_path):
+    """INSERT OVERWRITE DIRECTORY writes once, like one spark.sql of the
+    statement, and a cached read of the directory re-runs after it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id():
+        ex = store.executionsList()
+        return ex.apply(ex.size() - 1).executionId() if ex.size() else -1
+
+    def writes_since(low):
+        """Executions after ``low`` that wrote files (collecting a
+        command's result re-prints its plan under a CommandResult)."""
+        ex, n = store.executionsList(), 0
+        for k in range(ex.size() - 1, -1, -1):
+            e = ex.apply(k)
+            if e.executionId() <= low:
+                break
+            plan = e.physicalPlanDescription()
+            n += "InsertIntoHadoopFsRelationCommand" in plan and (
+                "CommandResult" not in plan
+            )
+        return n
+
+    d = tmp_path / "iod"
+    write = (
+        f"INSERT OVERWRITE DIRECTORY '{d}' USING parquet"
+        " SELECT r_regionkey FROM region WHERE r_regionkey < {n}"
+    )
+    low = last_id()
+    spark.sql(write.format(n=2))
+    direct = writes_since(low)
+    assert direct >= 1
+    low = last_id()
+    r = client_request(server.address, {"sql": write.format(n=2)})
+    assert r["status"] == "done", r
+    assert writes_since(low) == direct
+    q = {"sql": f"SELECT count(*) AS n FROM parquet.`{d}`"}
+    assert client_request(server.address, q)["rows"] == [[2]]
+    assert client_request(server.address, q).get("cached") is True
+    r = client_request(server.address, {"sql": write.format(n=5)})
+    assert r["status"] == "done", r
+    again = client_request(server.address, q)
+    assert "cached" not in again and again["rows"] == [[5]], again
 
 
 def test_unresolvable_command_flushes_everything(server):

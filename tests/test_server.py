@@ -315,7 +315,7 @@ class TestGatewayHardening:
         srv.shutdown()
         srv.executor.cache.clear()
 
-    def test_explain_rejects_commands(self, spark, server):
+    def test_explain_rejects_commands(self, spark, server, tmp_path):
         """``spark.sql()`` executes DDL/DML EAGERLY at plan time, so an
         {"explain": ..., "sql": "CREATE/DROP ..."} must be rejected —
         not silently run outside any job group."""
@@ -326,6 +326,23 @@ class TestGatewayHardening:
         assert reply["status"] == "error"
         # and the side effect really did NOT happen
         assert not spark.catalog.tableExists("explain_leak")
+        # EXECUTE IMMEDIATE runs its statement eagerly too, though its
+        # parse is no Command node
+        spark.sql(
+            f"CREATE TABLE explain_ei (x INT) USING parquet LOCATION '{tmp_path}'"
+        )
+        try:
+            reply = client_request(
+                server.address,
+                {
+                    "explain": "formatted",
+                    "sql": "EXECUTE IMMEDIATE 'INSERT INTO explain_ei VALUES (7)'",
+                },
+            )
+            assert reply["status"] == "error"
+            assert spark.sql("SELECT * FROM explain_ei").count() == 0
+        finally:
+            spark.sql("DROP TABLE IF EXISTS explain_ei")
         # plain queries still explain fine
         ok = client_request(
             server.address, {"explain": "simple", "sql": "SELECT 1 AS one"}
