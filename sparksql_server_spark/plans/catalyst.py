@@ -53,13 +53,39 @@ def kind(node: Any) -> str:
 
 def statement(plan: Any) -> tuple[Any, str]:
     """The statement node of a parsed plan and its simple class name,
-    looking through CTE nodes: ``WITH s AS (...) INSERT INTO ...``
-    is an INSERT."""
+    looking through CTE nodes (``WITH s AS (...) INSERT INTO ...`` is
+    an INSERT) and through a constant ``IDENTIFIER(...)`` clause
+    (:func:`built`). A clause naming a variable or parameter stays a
+    ``PlanWithUnresolvedIdentifier``: only analysis binds it."""
     node, name = plan, kind(plan)
-    while name in ("UnresolvedWith", "WithCTE"):
-        node = node.children().head()
+    while name in ("UnresolvedWith", "WithCTE", "PlanWithUnresolvedIdentifier"):
+        if name == "PlanWithUnresolvedIdentifier":
+            inner = built(node)
+            if inner is None:
+                break
+            node = inner
+        else:
+            node = node.children().head()
         name = kind(node)
     return node, name
+
+
+def built(node: Any) -> Optional[Any]:
+    """The plan a parsed ``IDENTIFIER(...)`` clause
+    (``PlanWithUnresolvedIdentifier``) stands for, named as the
+    analyzer will name it, or None when the clause's argument is not a
+    constant string or names nothing the statement accepts."""
+    expr = node.identifierExpr()
+    if not expr.foldable():
+        return None
+    try:
+        parts = jvm(
+            "org.apache.spark.sql.catalyst.analysis.IdentifierResolution"
+            ".evalIdentifierExpr"
+        )(expr)
+        return node.planBuilder().apply(parts, node.children())
+    except Exception:  # Spark's own error surfaces when sql() runs it
+        return None
 
 
 @functools.lru_cache(maxsize=None)

@@ -58,6 +58,7 @@ from py4j.java_gateway import JavaObject
 
 from sparksql_server_spark.plans.catalyst import (
     analyzed,
+    built,
     deterministic,
     kind,
     normalize,
@@ -81,12 +82,14 @@ def command_write_set(plan: Any) -> Optional[frozenset[str]]:
     """The table names a parsed command (``scheduler.classify``'s plan)
     writes or redefines, or None when it names no target table (callers
     must then flush everything). The target is the command's first
-    constructor field when that field names a relation — INSERT,
-    UPDATE, DELETE, MERGE, DROP, ALTER, TRUNCATE, CREATE, REFRESH,
-    ANALYZE, CACHE/UNCACHE — or a CREATE VIEW / CACHE TABLE AS name.
-    Everything else is None: SET, USE, ADD JAR, scripts, namespaces,
-    EXECUTE IMMEDIATE (its target is inside a string) and ``INSERT
-    OVERWRITE [LOCAL] DIRECTORY``, which writes a path.
+    constructor field when that field names a relation, aliased or
+    not (:func:`_name_node`) — INSERT, UPDATE, DELETE, MERGE, DROP,
+    ALTER, TRUNCATE, CREATE, REFRESH, ANALYZE, CACHE/UNCACHE — or a
+    CREATE VIEW / CACHE TABLE AS name. Everything else is None: SET,
+    USE, ADD JAR, scripts, namespaces, EXECUTE IMMEDIATE (its target is
+    inside a string), an IDENTIFIER clause over a variable or
+    parameter, and ``INSERT OVERWRITE [LOCAL] DIRECTORY``, which writes
+    a path.
 
     Both the unqualified basename (cached entries key tables that way)
     and the full qualified name (so the server can look up ``db.tbl``
@@ -98,11 +101,27 @@ def command_write_set(plan: Any) -> Optional[frozenset[str]]:
     elif name == "CreateViewCommand":
         parts = pylist(node.name().nameParts())
     else:
-        target = node.productElement(0) if node.productArity() else None
-        if not isinstance(target, JavaObject) or kind(target) not in _NAME_NODES:
+        target = _name_node(node.productElement(0) if node.productArity() else None)
+        if target is None:
             return None
         parts = pylist(target.productElement(0))
     return frozenset({parts[-1].lower(), ".".join(parts).lower()})
+
+
+def _name_node(field: Any) -> Optional[Any]:
+    """The name node a command's first field holds, looking through
+    the alias of an aliased target (``MERGE INTO t AS x``, ``UPDATE t
+    x``, ``DELETE FROM t x``) and through a constant ``IDENTIFIER(...)``
+    clause; None when the field names no relation."""
+    while isinstance(field, JavaObject):
+        name = kind(field)
+        if name == "SubqueryAlias":
+            field = field.child()
+        elif name == "PlanWithUnresolvedIdentifier":
+            field = built(field)
+        else:
+            return field if name in _NAME_NODES else None
+    return None
 
 
 _EXTENSIONS = (".parquet", ".orc", ".csv", ".json", ".txt", ".avro", ".xml")

@@ -45,8 +45,14 @@ _STATEMENT_MARKERS = (
     "org.apache.spark.sql.catalyst.plans.logical.ParsedStatement",
 )
 # statements Spark also runs eagerly at ``sql()`` time that are neither
-# a Command nor a ParsedStatement when parsed
-_EAGER = ("InsertIntoDir", "UnresolvedExecuteImmediate")
+# a Command nor a ParsedStatement when parsed, and an IDENTIFIER(...)
+# statement whose name only analysis binds, so whose kind is unknown:
+# run once as a command, which is also right for a query
+_EAGER = (
+    "InsertIntoDir",
+    "UnresolvedExecuteImmediate",
+    "PlanWithUnresolvedIdentifier",
+)
 
 
 def classify(session: SparkSession, sql: str) -> tuple[bool, Any]:
@@ -60,8 +66,10 @@ def classify(session: SparkSession, sql: str) -> tuple[bool, Any]:
     A statement is a command when its parsed plan is a Catalyst
     ``Command`` or ``ParsedStatement``, an ``INSERT OVERWRITE
     DIRECTORY`` or an ``EXECUTE IMMEDIATE``, looking through CTE nodes
-    first (:func:`statement`). Unparseable text is ``(True, None)``, so
-    the real error surfaces from ``sql()`` in the normal path."""
+    and constant ``IDENTIFIER(...)`` clauses first (:func:`statement`);
+    an ``IDENTIFIER`` clause it cannot look through is a command too.
+    Unparseable text is ``(True, None)``, so the real error surfaces
+    from ``sql()`` in the normal path."""
     try:
         plan = session._jsparkSession.sessionState().sqlParser().parsePlan(sql)
     except Exception:

@@ -279,8 +279,10 @@ class WorkSharingServer:
         self, plan: Any, session: SparkSession
     ) -> frozenset[str] | None:
         """Write set of a parsed command, expanded to invalidation keys:
-        the target names PLUS the targets' current scan fingerprints
-        (path + basename). Resolution runs at command ARRIVAL, before
+        the target names PLUS the targets' current read set as a cached
+        entry records it — scan fingerprints and scan locations (path +
+        basename; an empty table lists no files but still prints its
+        Location). Resolution runs at command ARRIVAL, before
         execution — a table's name and its storage location basename
         can differ (CREATE ... LOCATION), cached entries key by
         fingerprint paths, and resolving pre-execution is the only
@@ -290,13 +292,14 @@ class WorkSharingServer:
         ws = command_write_set(plan)
         if ws is None:
             return None
-        from sparksql_server_spark.plans.analysis import scan_fingerprints
+        from sparksql_server_spark.plans.analysis import scan_fingerprints, scan_nodes
 
         keys: set[str] = set(ws)
         for t in ws:
             try:
+                df = session.table(t)
                 keys |= tables_from_fingerprints(
-                    scan_fingerprints(session.table(t))
+                    scan_fingerprints(df) | {loc for loc, _, _ in scan_nodes(df)}
                 )
             except Exception:
                 # target doesn't exist yet (CREATE) or isn't a
@@ -493,8 +496,9 @@ class WorkSharingServer:
             # is mostly SET/ADD JAR-class statements whose effects live
             # in HiveServer2 session state the gateway's own executions
             # never see — a 10-minute global put-freeze for those
-            # would cost far more than it protects. (EXECUTE IMMEDIATE
-            # and INSERT OVERWRITE DIRECTORY also read as None: the two
+            # would cost far more than it protects. (EXECUTE IMMEDIATE,
+            # INSERT OVERWRITE DIRECTORY and a write to IDENTIFIER(<a
+            # variable or parameter>) also read as None: the two
             # flushes are all they get.)
             if ws is not None:
                 self.results.taint_tables(ws, self.jdbc_command_taint_seconds)

@@ -202,6 +202,17 @@ def test_oversized_result_not_pinned():
         # the parse sees through a leading CTE or comment
         ("WITH s AS (SELECT 1 AS k) INSERT INTO t SELECT k FROM s", {"t"}),
         ("/* etl */ INSERT INTO region VALUES (1)", {"region"}),
+        # an aliased target parses under a SubqueryAlias
+        ("MERGE INTO tgt AS t USING src s ON t.k = s.k WHEN MATCHED THEN DELETE",
+         {"tgt"}),
+        ("UPDATE orders o SET x = 1", {"orders"}),
+        ("DELETE FROM lineitem AS l WHERE 1=1", {"lineitem"}),
+        # IDENTIFIER('...') names the target the way the analyzer will;
+        # a parameter or variable name is bound only by analysis
+        ("INSERT INTO IDENTIFIER('db.id_t') VALUES (7)", {"id_t", "db.id_t"}),
+        ("DELETE FROM IDENTIFIER('id_' || 't') AS d WHERE 1=1", {"id_t"}),
+        ("CREATE TABLE IDENTIFIER('c') (x INT)", {"c"}),
+        ("INSERT INTO IDENTIFIER(:p) VALUES (1)", None),
     ],
 )
 def test_command_write_set(spark, sql, expect):
@@ -393,9 +404,10 @@ def test_command_invalidation_is_write_set_scoped(server, tmp_path):
 
 
 def test_cte_and_comment_led_commands_flush_only_their_target(server, tmp_path):
-    """A command led by WITH or by a comment names its target in the
-    parse just as a bare one does: writing rc_scope keeps region's
-    cached entry."""
+    """A command led by WITH or by a comment, or naming its target in
+    an IDENTIFIER clause (no Command node in the parse), names that
+    target just as a bare one does: it runs once, and writing rc_scope
+    keeps region's cached entry."""
     out = str(tmp_path / "t_led")
     mk = client_request(
         server.address,
@@ -411,6 +423,7 @@ def test_cte_and_comment_led_commands_flush_only_their_target(server, tmp_path):
             (
                 "WITH s AS (SELECT 998 AS k) INSERT INTO rc_scope SELECT k FROM s",
                 "/* etl */ INSERT INTO rc_scope VALUES (999)",
+                "INSERT INTO IDENTIFIER('rc_scope') VALUES (1000)",
             ),
             start=1,
         ):
@@ -424,6 +437,31 @@ def test_cte_and_comment_led_commands_flush_only_their_target(server, tmp_path):
             )
     finally:
         client_request(server.address, {"sql": "DROP TABLE IF EXISTS rc_scope"})
+
+
+def test_insert_into_empty_table_flushes_its_entry(server, tmp_path):
+    """A cached read of an empty table lists no files, only the scan's
+    Location, which need not be named like the table: an INSERT into
+    it must still flush that entry, and only that entry."""
+    loc = tmp_path / "stored_elsewhere"
+    loc.mkdir()
+    mk = client_request(
+        server.address,
+        {"sql": f"CREATE TABLE empty_t (x INT) USING parquet LOCATION '{loc}'"},
+    )
+    assert mk["status"] == "done", mk
+    try:
+        q = "SELECT count(*) AS n FROM empty_t"
+        client_request(server.address, {"sql": Q})
+        assert client_request(server.address, {"sql": q})["rows"] == [[0]]
+        assert client_request(server.address, {"sql": q}).get("cached") is True
+        ins = client_request(server.address, {"sql": "INSERT INTO empty_t VALUES (6)"})
+        assert ins["status"] == "done", ins
+        after = client_request(server.address, {"sql": q})
+        assert "cached" not in after and after["rows"] == [[1]], after
+        assert client_request(server.address, {"sql": Q}).get("cached") is True
+    finally:
+        client_request(server.address, {"sql": "DROP TABLE IF EXISTS empty_t"})
 
 
 def test_execute_immediate_runs_once_and_flushes(server, tmp_path):
@@ -736,6 +774,38 @@ def test_jdbc_command_taint_blocks_caching_in_the_window(spark):
         time.sleep(2.1)
         client_request(srv.address, {"sql": q})
         assert client_request(srv.address, {"sql": q}).get("cached") is True
+    finally:
+        srv.shutdown()
+        srv.executor.cache.clear()
+
+
+@pytest.mark.parametrize(
+    "cmd",
+    [
+        "MERGE INTO region AS t USING nation s ON t.r_regionkey = s.n_regionkey"
+        " WHEN MATCHED THEN DELETE",
+        "UPDATE region r SET r_comment = ''",
+        "DELETE FROM IDENTIFIER('region') AS r WHERE 1=1",
+    ],
+)
+def test_jdbc_aliased_write_taints_its_target(spark, cmd):
+    """A JDBC write whose target carries an alias or an IDENTIFIER
+    clause still names that target, so prime() taints it: a query over
+    the written table is not cached while the command may still be
+    running on HiveServer2, and an unrelated table caches normally."""
+    srv = WorkSharingServer(
+        spark, SF_DIR, window_size=1, max_wait=0.1,
+        jdbc_command_reflush_seconds=0.1,
+    ).start()
+    try:
+        q = "SELECT count(*) AS n FROM region"
+        q_other = "SELECT count(*) AS n FROM nation"
+        srv.prime(cmd)
+        time.sleep(0.3)  # past the re-flush timer
+        client_request(srv.address, {"sql": q})
+        assert "cached" not in client_request(srv.address, {"sql": q})
+        client_request(srv.address, {"sql": q_other})
+        assert client_request(srv.address, {"sql": q_other}).get("cached") is True
     finally:
         srv.shutdown()
         srv.executor.cache.clear()

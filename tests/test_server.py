@@ -332,15 +332,17 @@ class TestGatewayHardening:
             f"CREATE TABLE explain_ei (x INT) USING parquet LOCATION '{tmp_path}'"
         )
         try:
-            reply = client_request(
-                server.address,
-                {
-                    "explain": "formatted",
-                    "sql": "EXECUTE IMMEDIATE 'INSERT INTO explain_ei VALUES (7)'",
-                },
-            )
-            assert reply["status"] == "error"
-            assert spark.sql("SELECT * FROM explain_ei").count() == 0
+            for sql in (
+                "EXECUTE IMMEDIATE 'INSERT INTO explain_ei VALUES (7)'",
+                # and an INSERT whose target is an IDENTIFIER clause
+                # parses to a PlanWithUnresolvedIdentifier, no Command
+                "INSERT INTO IDENTIFIER('explain_ei') VALUES (8)",
+            ):
+                reply = client_request(
+                    server.address, {"explain": "formatted", "sql": sql}
+                )
+                assert reply["status"] == "error", sql
+                assert spark.sql("SELECT * FROM explain_ei").count() == 0, sql
         finally:
             spark.sql("DROP TABLE IF EXISTS explain_ei")
         # plain queries still explain fine
@@ -1263,6 +1265,19 @@ class TestSqlScripting:
             is False
         )
         assert classify(spark, "SELECT 1 AS x")[0] is True
+
+    def test_identifier_clause_classified_by_its_statement(self, spark):
+        """A statement named by IDENTIFIER(...) parses to a
+        PlanWithUnresolvedIdentifier whatever it is; the verdict comes
+        from the statement it builds. A name only analysis can bind (a
+        parameter) leaves the kind unknown, which runs as a command."""
+        assert classify(spark, "INSERT INTO IDENTIFIER('t') VALUES (1)")[0] is False
+        assert classify(spark, "CREATE TABLE IDENTIFIER('c') (x INT)")[0] is False
+        assert classify(spark, "INSERT INTO IDENTIFIER(:p) VALUES (1)")[0] is False
+        # an argument Spark rejects is left for sql() to report
+        assert classify(spark, "INSERT INTO IDENTIFIER(1) VALUES (1)")[0] is False
+        assert classify(spark, "TABLE IDENTIFIER('region')")[0] is True
+        assert classify(spark, "SELECT * FROM IDENTIFIER('region')")[0] is True
 
     def test_script_round_trip_executes_once(self, spark, tmp_path):
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
