@@ -1,3 +1,1 @@
 """Plan introspection utilities."""
-
-from sparksql_server_spark.plans.analysis import scan_fingerprints  # noqa: F401

@@ -1,12 +1,11 @@
-"""Scan-source fingerprinting of analyzed plans.
+"""Scan-source fingerprinting of physical plans.
 
 The reference walks each job's RDD DAG to its leaf RDDs and keys
 sharing on the leaf's input-source string
 (``SRV/detector/rules/ScanSharing.scala:58-74`` — ``getInput`` takes
-``rdd.toString.split(" "){0}`` of each leaf). Our equivalent walks the
-*analyzed logical plan* of a DataFrame and fingerprints its leaf
-relations — file-source leaves by their root file paths, view/table
-leaves by catalog name.
+``rdd.toString.split(" "){0}`` of each leaf). Ours walks a DataFrame's
+*physical plan* to its file scans over py4j (:func:`scan_nodes`); the
+observer, which sees only plan text, parses it (:func:`parse_scans`).
 
 This is plan-level Python inspection above Catalyst, exactly where the
 reference sat above the DAG scheduler (SURVEY.md §4.1): cross-query
@@ -16,37 +15,60 @@ concerns don't belong inside the per-query optimizer.
 from __future__ import annotations
 
 import re
+from typing import Any
 
 from pyspark.sql import DataFrame
 
-
-def scan_fingerprints(df: DataFrame) -> frozenset[str]:
-    """Return the set of input-source identifiers feeding ``df``.
-
-    Uses ``df.inputFiles()`` (public API; resolves file-source leaves
-    after view expansion). Fingerprints are scheme-normalized data-file
-    paths: two queries over the same table list the same files, so
-    their sets overlap regardless of whether the table is a single
-    parquet file or a directory of part-files; part-files of a
-    directory table additionally collapse to the table root so the
-    fingerprint matches the catalog's source path.
-    """
-    roots: set[str] = set()
-    for f in df.inputFiles():
-        path = f
-        if path.startswith("file:"):  # file:///x -> /x
-            path = "/" + path.removeprefix("file:").lstrip("/")
-        base = path.rsplit("/", 1)[-1]
-        if base.startswith("part-"):  # directory table -> table root
-            path = path.rsplit("/", 1)[0]
-        roots.add(path)
-    return frozenset(roots)
+from sparksql_server_spark.plans.catalyst import kind, pylist
 
 
-def shares_scan(a: frozenset[str], b: frozenset[str]) -> bool:
-    """True when two fingerprint sets overlap (reference:
-    ``ScanSharing.check``, ScanSharing.scala:84-92)."""
-    return not a.isdisjoint(b)
+def source_path(path: str) -> str:
+    """``path`` in fingerprint form: ``file:`` URIs become bare paths."""
+    if path.startswith("file:"):
+        return "/" + path.removeprefix("file:").lstrip("/")
+    return path
+
+
+class Scan(tuple):
+    """``(root, width, format)`` of one file scan: a :func:`source_path`,
+    the number of top-level columns read, the file format. A ``cached``
+    scan sits behind an in-memory relation and reads memory."""
+
+    cached = False
+
+
+def scan_nodes(df: DataFrame) -> list[Scan]:
+    """Every file scan of ``df``'s executed plan, one per root path
+    (``read.parquet(a, b)`` gives two): the leaves of an adaptive
+    plan's input plan and of its subquery plans, and of the plan behind
+    each in-memory scan. Planning only, no execution."""
+    out: list[Scan] = []
+
+    def visit(plan: Any, cached: bool) -> None:
+        if kind(plan) == "AdaptiveSparkPlanExec":
+            plan = plan.inputPlan()
+        for tree in [plan, *pylist(plan.subqueriesAll())]:
+            for leaf in pylist(tree.collectLeaves()):
+                name = kind(leaf)
+                if name == "AdaptiveSparkPlanExec":  # a subquery's plan
+                    visit(leaf, cached)
+                elif name == "InMemoryTableScanExec":
+                    visit(leaf.relation().cachedPlan(), True)
+                elif name == "FileSourceScanExec":
+                    relation = leaf.relation()
+                    width, fmt = leaf.requiredSchema().size(), relation.toString()
+                    for root in pylist(relation.location().rootPaths()):
+                        out.append(Scan((source_path(root.toString()), width, fmt)))
+                        out[-1].cached = cached
+
+    visit(df._jdf.queryExecution().executedPlan(), False)
+    return out
+
+
+def scan_fingerprints(scans: list[Scan]) -> frozenset[str]:
+    """The input sources of a plan: the roots of its :func:`scan_nodes`
+    that read files."""
+    return frozenset(s[0] for s in scans if not s.cached)
 
 
 def _top_level_fields(struct_body: str) -> int:
@@ -92,17 +114,14 @@ _SCAN_BLOCK = re.compile(
 
 def parse_scans(plan_text: str) -> list[tuple[str, int, str]]:
     """(source root, pruned-ReadSchema width, file format) per file
-    scan in a plan description, paths normalized to the
-    ``scan_fingerprints`` form.
+    scan in a plan description, paths in :func:`source_path` form: the
+    observer's :func:`scan_nodes`, for plans it sees only as text.
 
     A multi-path Location prints comma-separated and every printed path
-    is a source. Honest cap: Spark 4.1 elides a multi-root index to its
-    FIRST root plus "... N entries" regardless of
-    maxMetadataStringLength, so extra roots of a read.parquet(p1, p2)
-    scan are unrecoverable here — the width/format maps are a
-    cost-model heuristic keyed by what the plan shows, while DETECTION
-    correctness rests on ``scan_fingerprints`` (df.inputFiles), which
-    sees every root."""
+    is a source. Honest cap of the text: Spark 4.1 elides a multi-root
+    index to its FIRST root plus "... N entries" regardless of
+    maxMetadataStringLength, so the observer misses the extra roots of
+    a read.parquet(p1, p2) scan; :func:`scan_nodes` sees them all."""
     out: list[tuple[str, int, str]] = []
     for m in _SCAN_BLOCK.finditer(plan_text):
         fmt, location, schema = m.group(1).lower(), m.group(2), m.group(3)
@@ -111,19 +130,5 @@ def parse_scans(plan_text: str) -> list[tuple[str, int, str]]:
             p = p.strip()
             if not p or p.startswith("..."):
                 continue
-            if p.startswith("file:"):
-                p = "/" + p.removeprefix("file:").lstrip("/")
-            out.append((p, width, fmt))
+            out.append((source_path(p), width, fmt))
     return out
-
-
-def scan_nodes(df: DataFrame) -> list[tuple[str, int, str]]:
-    """All file-scan nodes of ``df``'s formatted physical plan, as
-    (source root, pruned-ReadSchema width, file format) tuples.
-    Planning only, no execution."""
-    jvm = df.sparkSession._jvm
-    return parse_scans(
-        df._jdf.queryExecution().explainString(
-            jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-    )

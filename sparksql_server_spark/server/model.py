@@ -57,9 +57,9 @@ class QueryJob:
     # per scanned source: its file format ("parquet", "csv", …) —
     # cache admission is format-aware (rescan cost differs ~10×)
     read_formats: dict[str, str] = field(default_factory=dict)
-    # analyzed logical plan (JVM object) resolved at batch time by
-    # BatchExecutor.analyze(); the merge planner reads it, and the
-    # executor drops it once the batch is planned
+    # analyzed logical plan (JVM object), stored by the gateway at intake
+    # or built by BatchExecutor.analyze(); the merge planner reads it, and
+    # the executor drops it once the batch is planned
     plan: Any = field(default=None, repr=False)
     # isolated client session (spark.newSession()); None = server root.
     # The reference's per-client state was the shipped jar + re-registered

@@ -131,8 +131,7 @@ class ScanObserver:
             # sections, and a self-join scans one source twice — either
             # way it is ONE execution's worth of repeat-scan evidence
             per_exec: dict[str, tuple[str, int]] = {}
-            # the DataFrame-side parser: both sides share one set of
-            # explain-format quirks
+            # a status-store execution carries its plan only as text
             for source, ncols, fmt in parse_scans(e.physicalPlanDescription()):
                 if source not in self.source_views:
                     continue  # not a relation we can cache by name

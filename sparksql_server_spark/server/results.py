@@ -7,18 +7,17 @@ front-end can also share RESULTS across time: an inline result keyed
 by (session namespace, query) is served straight from the gateway until
 something invalidates it.
 
-The query part of the key is the analyzed plan ``session.sql()``
-returns, normalized (CTEs inlined, BETWEEN replaced, adjacent windows
-over one spec collapsed, commutative join operands in a fixed order —
-plans/catalyst.py) and with a top literal
-LIMIT split off. Entries are bucketed by
-(namespace, ``semanticHash``, output column names, LIMIT), and a lookup
-confirms a candidate with ``sameResult``, because a 32-bit hash does not
-identify a plan. Catalyst's canonical form makes conjunct order,
-comparison direction and IN-list order one key; output names (which
-canonicalization erases) and column order key apart. Because the plan is
-resolved in the requesting session, the same text over a different or
-redefined temp view is a different key.
+The query part of the key is the analyzed plan the gateway builds once
+per query, at intake, normalized (CTEs inlined, BETWEEN replaced,
+adjacent windows over one spec collapsed, commutative join operands in a
+fixed order — plans/catalyst.py) and with a top literal LIMIT split off.
+Entries are bucketed by (namespace, ``semanticHash``, output column
+names, LIMIT), and a lookup confirms a candidate with ``sameResult``,
+because a 32-bit hash does not identify a plan. Catalyst's canonical
+form makes conjunct order, comparison direction and IN-list order one
+key; output names (which canonicalization erases) and column order key
+apart. Because the plan is resolved in the requesting session, the same
+text over a different or redefined temp view is a different key.
 
 Safety rules (all conservative):
 - only complete inline results are cached (sink jobs and truncated
@@ -28,13 +27,13 @@ Safety rules (all conservative):
   time zone, user, database — fixed once per run) gets no key, so it is
   never cached;
 - commands invalidate by WRITE SET: each cached entry records the
-  tables its plan read (from the detector's leaf fingerprints), and a
-  command whose target table Spark's parse names
-  (:func:`command_write_set`) flushes only the intersecting entries —
+  tables its plan read (the roots of its file scans), and a command
+  whose target Spark's parse names (:func:`command_write_set`: a
+  table, or a directory path) flushes only the intersecting entries —
   a log INSERT no longer zeroes the dashboard hit rate. The flush runs
   once, when the writer job completes and before its client is
-  released. Any command that names no target table (SET, ADD JAR,
-  EXECUTE IMMEDIATE, a directory write) keeps the whole-cache flush: a false
+  released. Any command that names no target (SET, ADD JAR, an
+  IDENTIFIER clause over a variable) keeps the whole-cache flush: a false
   retention is a wrong answer while a false invalidation only costs a
   re-run. EVERY flush — scoped or full — bumps the put-epoch, so a
   query in flight concurrently with any command can never insert its
@@ -56,8 +55,8 @@ from typing import Any, Optional
 
 from py4j.java_gateway import JavaObject
 
+from sparksql_server_spark.plans.analysis import source_path
 from sparksql_server_spark.plans.catalyst import (
-    analyzed,
     built,
     deterministic,
     kind,
@@ -78,24 +77,41 @@ _NAME_NODES = (
 )
 
 
-def command_write_set(plan: Any) -> Optional[frozenset[str]]:
-    """The table names a parsed command (``scheduler.classify``'s plan)
-    writes or redefines, or None when it names no target table (callers
-    must then flush everything). The target is the command's first
-    constructor field when that field names a relation, aliased or
-    not (:func:`_name_node`) — INSERT, UPDATE, DELETE, MERGE, DROP,
-    ALTER, TRUNCATE, CREATE, REFRESH, ANALYZE, CACHE/UNCACHE — or a
-    CREATE VIEW / CACHE TABLE AS name. Everything else is None: SET,
-    USE, ADD JAR, scripts, namespaces, EXECUTE IMMEDIATE (its target is
-    inside a string), an IDENTIFIER clause over a variable or
-    parameter, and ``INSERT OVERWRITE [LOCAL] DIRECTORY``, which writes
-    a path.
+def command_write_set(plan: Any, session: Any) -> Optional[frozenset[str]]:
+    """What a parsed command (``scheduler.classify``'s plan) writes or
+    redefines, or None when it names no target (callers must then
+    flush everything). The target is the command's first constructor
+    field when that field names a relation, aliased or not
+    (:func:`_name_node`) — INSERT, UPDATE, DELETE, MERGE, DROP, ALTER,
+    TRUNCATE, CREATE, REFRESH, ANALYZE, CACHE/UNCACHE — or a CREATE
+    VIEW / CACHE TABLE AS name. ``EXECUTE IMMEDIATE '<statement>'``
+    writes what its literal statement writes, parsed by ``session``'s
+    parser; ``INSERT OVERWRITE [LOCAL] DIRECTORY`` writes its path, in
+    fingerprint form. Everything else is None: SET, USE, ADD JAR,
+    scripts, namespaces, an ``EXECUTE IMMEDIATE`` whose statement is
+    not a literal, and an IDENTIFIER clause over a variable or
+    parameter.
 
-    Both the unqualified basename (cached entries key tables that way)
-    and the full qualified name (so the server can look up ``db.tbl``
-    in the catalog, not whatever ``tbl`` means in the current database)
-    are returned."""
+    For a table, both the unqualified basename (cached entries key
+    tables that way) and the full qualified name (so the server can
+    look up ``db.tbl`` in the catalog, not whatever ``tbl`` means in
+    the current database) are returned."""
     node, name = statement(plan)
+    if name == "UnresolvedExecuteImmediate":
+        text = node.productElement(0)
+        if kind(text) != "Literal" or text.dataType().typeName() != "string":
+            return None
+        parser = session._jsparkSession.sessionState().sqlParser()
+        try:
+            inner = parser.parsePlan(text.value().toString())
+        except Exception:  # Spark's own error surfaces when it runs
+            return None
+        return command_write_set(inner, session)
+    if name == "InsertIntoDir":
+        location = node.storage().locationUri()
+        if location.isEmpty():
+            return None
+        return frozenset({source_path(location.get().toString())})
     if name == "CacheTableAsSelect":
         parts = [node.tempViewName()]
     elif name == "CreateViewCommand":
@@ -128,12 +144,11 @@ _EXTENSIONS = (".parquet", ".orc", ".csv", ".json", ".txt", ".avro", ".xml")
 
 
 def tables_from_fingerprints(fingerprints) -> frozenset[str]:
-    """Map scan fingerprints (normalized source paths, see
-    plans/analysis.py::scan_fingerprints) to invalidation keys: the
-    full path AND the basename with a known data extension stripped
-    (``/data/sf0.1/part.parquet`` -> {that path, 'part'}), so both a
-    ``INSERT INTO part`` write set and a sink job's output PATH can
-    intersect it."""
+    """Map scan roots (plans/analysis.py::scan_nodes) to invalidation
+    keys: the full path AND the basename with a known data extension
+    stripped (``/data/sf0.1/part.parquet`` -> {that path, 'part'}), so
+    both a ``INSERT INTO part`` write set and a sink job's output PATH
+    can intersect it."""
     keys: set[str] = set()
     for path in fingerprints:
         keys.add(path)
@@ -187,15 +202,13 @@ class PlanKey(tuple):
         )
 
 
-def _plan_key(ns: str, sql: str, session: Any) -> Optional[PlanKey]:
-    """None when no key can be built — the plan is not
-    :func:`deterministic` (its rows may differ on a re-run), the
-    statement does not analyze (the job then reports the error) or its
-    plan cannot be read: such a request runs uncached rather than
-    failing."""
+def _plan_key(ns: str, plan: Any) -> Optional[PlanKey]:
+    """None when no key can be built — the statement did not analyze
+    (``plan`` is None; the job then reports the error), the plan is not
+    :func:`deterministic` (its rows may differ on a re-run) or cannot be
+    read: such a request runs uncached rather than failing."""
     try:
-        plan = analyzed(session.sql(sql))
-        if not deterministic(plan):
+        if plan is None or not deterministic(plan):
             return None
         rest, limit = peel_limit(normalize(plan))
         return PlanKey(ns, rest, output_names(plan), limit)
@@ -249,21 +262,21 @@ class ResultCache:
         self._taints: list[tuple[Optional[frozenset[str]], float]] = []
 
     @staticmethod
-    def key(session_id: Optional[str], sql: str, session: Any) -> Optional[PlanKey]:
-        """Key of ``sql`` as ``session`` resolves it. Named sessions
-        live under an "s:" prefix so the reserved namespaces ("" =
-        clean shared, "root" = dirty root session) can never collide
-        with a client-chosen session id."""
+    def key(session_id: Optional[str], plan: Any) -> Optional[PlanKey]:
+        """Key of a query's analyzed ``plan``, as its session resolved
+        it. Named sessions live under an "s:" prefix so the reserved
+        namespaces ("" = clean shared, "root" = dirty root session) can
+        never collide with a client-chosen session id."""
         ns = "" if session_id is None else f"s:{session_id}"
-        return _plan_key(ns, sql, session)
+        return _plan_key(ns, plan)
 
     @staticmethod
-    def key_root(sql: str, session: Any) -> Optional[PlanKey]:
+    def key_root(plan: Any) -> Optional[PlanKey]:
         """Private namespace for the ROOT session once a root command
         has run: root temp views shadow shared tables for root's own
         queries only, so its results must neither serve nor be served
         from the clean cross-session namespace."""
-        return _plan_key("root", sql, session)
+        return _plan_key("root", plan)
 
     def invalidate_session(self, session_id: str) -> int:
         """Drop every private entry of a named session (called when the

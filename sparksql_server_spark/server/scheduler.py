@@ -26,7 +26,7 @@ from py4j.java_gateway import is_instance_of
 from pyspark.sql import SparkSession
 
 from sparksql_server_spark.plans.analysis import scan_fingerprints, scan_nodes
-from sparksql_server_spark.plans.catalyst import analyzed, statement
+from sparksql_server_spark.plans.catalyst import analyzed, statement, to_df
 from sparksql_server_spark.server.batcher import preschedule
 from sparksql_server_spark.server.cache import CacheManager, _dir_bytes
 from sparksql_server_spark.server.detector import detect_sharing
@@ -151,19 +151,21 @@ class BatchExecutor:
     # -- analysis ---------------------------------------------------------
 
     def analyze(self, job: QueryJob) -> None:
-        """Resolve the job's plan (no execution) and fingerprint its scans.
-        Jobs arriving unclassified (built outside the gateway) are
-        classified here, once."""
+        """Fingerprint the job's scans from the analyzed plan the gateway
+        stored (no execution). A job without one — prime-only, built
+        outside the gateway, or failed at intake — is parsed here, and
+        classified first when it arrives unclassified."""
+        sess = job.session or self.spark
         if job.is_query is None:
-            job.is_query = classify(job.session or self.spark, job.sql)[0]
+            job.is_query = classify(sess, job.sql)[0]
         if not job.is_query:
             job.fingerprints = frozenset()
             return
-        df = (job.session or self.spark).sql(job.sql)
+        df = sess.sql(job.sql) if job.plan is None else to_df(sess, job.plan)
         job.plan = analyzed(df)
-        job.fingerprints = scan_fingerprints(df)
-        # one formatted-plan render feeds both admission inputs
-        for location, ncols, fmt in scan_nodes(df):
+        scans = scan_nodes(df)
+        job.fingerprints = scan_fingerprints(scans)
+        for location, ncols, fmt in scans:
             job.read_cols[location] = max(job.read_cols.get(location, 0), ncols)
             job.read_formats[location] = fmt
 
@@ -349,8 +351,8 @@ class BatchExecutor:
         self, source: str, view: str, jobs: list[QueryJob]
     ) -> list[float] | None:
         """Per sharing job: the fraction of the table's columns its plan
-        reads from ``source`` (1.0 when the job's width is unknown).
-        None when the table's width is unknown — ``view`` no longer
+        reads from ``source`` (1.0 for fingerprints set without a scan
+        walk). None when the table's width is unknown — ``view`` no longer
         resolves (dropped or replaced since registration) — and unknown
         declines, as in ``ScanObserver._table_width``: caching it would
         fail the whole batch."""

@@ -59,6 +59,7 @@ from pyspark.sql import SparkSession
 
 from sparksql_server_spark.catalog import TABLES, register_tables
 from sparksql_server_spark.functions.udfs import register_udfs, register_udtfs
+from sparksql_server_spark.plans.analysis import scan_nodes
 from sparksql_server_spark.plans.catalyst import analyzed, deterministic, to_df
 from sparksql_server_spark.server.batcher import WindowBatcher
 from sparksql_server_spark.server.cache import CacheManager
@@ -279,32 +280,25 @@ class WorkSharingServer:
         self, plan: Any, session: SparkSession
     ) -> frozenset[str] | None:
         """Write set of a parsed command, expanded to invalidation keys:
-        the target names PLUS the targets' current read set as a cached
-        entry records it — scan fingerprints and scan locations (path +
-        basename; an empty table lists no files but still prints its
-        Location). Resolution runs at command ARRIVAL, before
-        execution — a table's name and its storage location basename
-        can differ (CREATE ... LOCATION), cached entries key by
-        fingerprint paths, and resolving pre-execution is the only
-        moment a DROP target or a to-be-replaced view still resolves to
-        the files today's entries actually read. None = no target
-        table -> callers flush everything."""
-        ws = command_write_set(plan)
+        the target names PLUS the roots of the targets' file scans, as
+        cached entries record them (an empty table has a root too).
+        Resolved at command ARRIVAL: a table's name and its location
+        basename can differ (CREATE ... LOCATION), and only before
+        execution does a DROP target or a to-be-replaced view still
+        resolve to the files cached entries read. None = no target ->
+        callers flush everything."""
+        ws = command_write_set(plan, session)
         if ws is None:
             return None
-        from sparksql_server_spark.plans.analysis import scan_fingerprints, scan_nodes
-
         keys: set[str] = set(ws)
         for t in ws:
             try:
-                df = session.table(t)
-                keys |= tables_from_fingerprints(
-                    scan_fingerprints(df) | {loc for loc, _, _ in scan_nodes(df)}
-                )
+                scans = scan_nodes(session.table(t))
             except Exception:
                 # target doesn't exist yet (CREATE) or isn't a
                 # relation — nothing can have read it under this name
-                pass
+                continue
+            keys |= tables_from_fingerprints(root for root, _, _ in scans)
         return frozenset(keys)
 
     def _flush_write_set(self, ws: frozenset[str] | None) -> None:
@@ -424,12 +418,14 @@ class WorkSharingServer:
         props: dict[str, Any] | None = None,
         session: SparkSession | None = None,
         is_query: bool | None = None,
+        plan: Any = None,
         on_done: Callable[[], None] | None = None,
     ) -> QueryJob:
         with self._id_lock:
             self._next_id += 1
             job = QueryJob(job_id=self._next_id, sql=sql, props=props or {},
-                           session=session, is_query=is_query, on_done=on_done)
+                           session=session, is_query=is_query, plan=plan,
+                           on_done=on_done)
             # insertion and cap-eviction are serialized under the same
             # lock: a concurrent submit during the sorted() iteration
             # below would otherwise mutate the dict mid-iteration
@@ -496,10 +492,10 @@ class WorkSharingServer:
             # is mostly SET/ADD JAR-class statements whose effects live
             # in HiveServer2 session state the gateway's own executions
             # never see — a 10-minute global put-freeze for those
-            # would cost far more than it protects. (EXECUTE IMMEDIATE,
-            # INSERT OVERWRITE DIRECTORY and a write to IDENTIFIER(<a
-            # variable or parameter>) also read as None: the two
-            # flushes are all they get.)
+            # would cost far more than it protects. (A write to
+            # IDENTIFIER(<a variable or parameter>) and an EXECUTE
+            # IMMEDIATE of a non-literal statement also read as None:
+            # the two flushes are all they get.)
             if ws is not None:
                 self.results.taint_tables(ws, self.jdbc_command_taint_seconds)
             t = threading.Timer(
@@ -916,6 +912,11 @@ class WorkSharingServer:
         # stale-keyed insertion below is discarded rather than served
         # to other clean sessions
         rc_generation = self.results.generation
+        if is_query and plan is not None:
+            try:  # the one analysis: the key and the batch's scan walk read it
+                plan = analyzed(to_df(session, plan))
+            except Exception:  # analyze() re-parses it; the job reports the error
+                plan = None
         rc_key = None
         if is_query and "output" not in props and wait:
             with self._session_lock:
@@ -927,11 +928,11 @@ class WorkSharingServer:
             # the key is the query's analyzed plan, resolved in the
             # requesting session (its temp views are part of it)
             if clean:
-                rc_key = ResultCache.key(None, sql, session)
+                rc_key = ResultCache.key(None, plan)
             elif sid is None:
-                rc_key = ResultCache.key_root(sql, session)
+                rc_key = ResultCache.key_root(plan)
             else:
-                rc_key = ResultCache.key(sid, sql, session)
+                rc_key = ResultCache.key(sid, plan)
             cached = None if rc_key is None else self.results.get(rc_key)
             if cached is not None:
                 cached["cached"] = True
@@ -942,6 +943,7 @@ class WorkSharingServer:
             props,
             session=None if session is self.spark else session,
             is_query=is_query,
+            plan=plan if is_query else None,
             on_done=on_done,
         )
         if wait:
@@ -953,16 +955,13 @@ class WorkSharingServer:
                 and job.rows is not None
                 and not job.props.get("truncated")
             ):
-                # a scan served from a cached table lists no input
-                # files, but its plan still prints the scan's Location:
-                # the read set is both. An empty one is stored as
-                # unknown (None), which every scoped flush drops
-                read_set = job.fingerprints | job.read_cols.keys()
+                # read set: every scan root, cached tables' too (None
+                # when empty: every scoped flush drops it)
                 self.results.put(
                     rc_key,
                     result,
                     generation=rc_generation,
-                    tables=tables_from_fingerprints(read_set) if read_set else None,
+                    tables=tables_from_fingerprints(job.read_cols) or None,
                 )
             return result
         return {"id": job.job_id, "status": job.status.value}

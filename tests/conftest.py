@@ -11,8 +11,18 @@ sys.path.insert(0, "/root/repo")
 
 from sparksql_server_spark import get_session  # noqa: E402
 from sparksql_server_spark.catalog import TABLES  # noqa: E402
+from sparksql_server_spark.plans.catalyst import analyzed  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def analyzed_plan(session, sql):
+    """The analyzed plan the gateway keys ``sql`` by in ``session``, or
+    None when the statement does not analyze."""
+    try:
+        return analyzed(session.sql(sql))
+    except Exception:
+        return None
 
 
 @pytest.fixture(scope="session")

@@ -36,7 +36,7 @@ from sparksql_server_spark.server.mrshare import (
     reread,
 )
 from sparksql_server_spark.server.results import ResultCache
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, analyzed_plan
 
 EXAMPLES = 25
 
@@ -183,7 +183,7 @@ def _merged_equals_direct(spark, sqls):
 
 
 def _key(spark, sql):
-    return ResultCache.key(None, sql, spark)
+    return ResultCache.key(None, analyzed_plan(spark, sql))
 
 
 def _join_sql(cond):

@@ -106,6 +106,16 @@ def test_scan_nodes_live_plan_with_scan_literal(spark):
     assert scan_nodes(df) == [(SF_DIR + "/supplier.parquet", 2, "parquet")]
 
 
+def test_scan_nodes_lists_every_root(spark):
+    """A read of several paths is one scan over several roots, whose
+    printed plan shows only the first ("... 1 entries"): the plan walk
+    lists each root with the scan's width and format."""
+    a, b = SF_DIR + "/region.parquet", SF_DIR + "/nation.parquet"
+    df = spark.read.parquet(a, b)
+    width = len(df.columns)
+    assert sorted(scan_nodes(df)) == [(b, width, "parquet"), (a, width, "parquet")]
+
+
 # -- unit: low-water bookkeeping over out-of-order completions --------------
 
 

@@ -16,7 +16,7 @@ from sparksql_server_spark.server.results import (
     tables_from_fingerprints,
 )
 from sparksql_server_spark.server.scheduler import classify
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, analyzed_plan
 
 Q = "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"
 
@@ -25,7 +25,7 @@ Q = "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"
 def K(spark):
     """Clean-namespace key of a statement, resolved in ``spark``."""
     register_tables(spark, SF_DIR)
-    return lambda sql, sid=None: ResultCache.key(sid, sql, spark)
+    return lambda sql, sid=None: ResultCache.key(sid, analyzed_plan(spark, sql))
 
 
 # -- unit: the cacheability guard ------------------------------------------
@@ -118,20 +118,7 @@ def test_put_discards_stale_generation():
 
 def _write_set(spark, sql):
     """Write set of ``sql`` read from the parse the gateway makes."""
-    return command_write_set(classify(spark, sql)[1])
-
-
-def test_insert_overwrite_directory_is_unresolvable(spark):
-    """Review r7: 'INSERT OVERWRITE DIRECTORY' writes a path, not a
-    table, so it must fall back to the whole-cache flush rather than
-    scope the flush to a table nothing reads."""
-    assert _write_set(spark, "INSERT OVERWRITE DIRECTORY '/data/t' SELECT 1") is None
-    assert (
-        _write_set(spark, "INSERT OVERWRITE LOCAL DIRECTORY '/d' SELECT 1") is None
-    )
-    # a real table target still resolves, qualified AND bare
-    ws = _write_set(spark, "INSERT INTO db2.`tbl` SELECT 1")
-    assert ws == frozenset({"tbl", "db2.tbl"})
+    return command_write_set(classify(spark, sql)[1], spark)
 
 
 def test_keys_intersect_directory_containment():
@@ -213,6 +200,15 @@ def test_oversized_result_not_pinned():
         ("DELETE FROM IDENTIFIER('id_' || 't') AS d WHERE 1=1", {"id_t"}),
         ("CREATE TABLE IDENTIFIER('c') (x INT)", {"c"}),
         ("INSERT INTO IDENTIFIER(:p) VALUES (1)", None),
+        # EXECUTE IMMEDIATE writes what its literal statement writes
+        ("EXECUTE IMMEDIATE 'INSERT INTO t VALUES (1)'", {"t"}),
+        ("EXECUTE IMMEDIATE 'INSERT INTO db.t VALUES (?)' USING 1", {"t", "db.t"}),
+        ("EXECUTE IMMEDIATE stmt_var", None),
+        # a directory write writes its path, in fingerprint form
+        ("INSERT OVERWRITE DIRECTORY '/data/t' SELECT 1", {"/data/t"}),
+        ("INSERT OVERWRITE LOCAL DIRECTORY '/d' SELECT 1", {"/d"}),
+        ("INSERT OVERWRITE DIRECTORY USING parquet"
+         " OPTIONS (path 'file:///data/o') SELECT 1", {"/data/o"}),
     ],
 )
 def test_command_write_set(spark, sql, expect):
@@ -334,7 +330,7 @@ def test_semantic_keys_hit_across_spellings(K, spark):
     assert K(base.replace("GROUP BY", "WHERE rand() < 0.5 GROUP BY")) is None
     # session namespaces stay disjoint for the same plan
     assert K(base) != K(base, "sess1")
-    assert K(base) != ResultCache.key_root(base, spark)
+    assert K(base) != ResultCache.key_root(analyzed_plan(spark, base))
 
 
 def test_semantic_respelling_served_from_cache(server):
@@ -786,11 +782,13 @@ def test_jdbc_command_taint_blocks_caching_in_the_window(spark):
         " WHEN MATCHED THEN DELETE",
         "UPDATE region r SET r_comment = ''",
         "DELETE FROM IDENTIFIER('region') AS r WHERE 1=1",
+        "EXECUTE IMMEDIATE 'DELETE FROM region WHERE 1=1'",
     ],
 )
 def test_jdbc_aliased_write_taints_its_target(spark, cmd):
     """A JDBC write whose target carries an alias or an IDENTIFIER
-    clause still names that target, so prime() taints it: a query over
+    clause, or sits inside an EXECUTE IMMEDIATE literal, still names
+    that target, so prime() taints it: a query over
     the written table is not cached while the command may still be
     running on HiveServer2, and an unrelated table caches normally."""
     srv = WorkSharingServer(
@@ -1251,8 +1249,9 @@ def test_keys_stay_exact(spark, server):
     b.sql("CREATE TEMP VIEW rv AS SELECT * FROM region WHERE r_regionkey >= 2")
     try:
         q = "SELECT count(*) AS n FROM rv"
-        assert ResultCache.key(None, q, a) != ResultCache.key(None, q, b)
-        assert ResultCache.key(None, q, a) == ResultCache.key(None, q, spark)
+        ka, kb = (ResultCache.key(None, analyzed_plan(s, q)) for s in (a, b))
+        assert ka != kb
+        assert ka == ResultCache.key(None, analyzed_plan(spark, q))
     finally:
         spark.catalog.dropTempView("rv")
 
@@ -1271,7 +1270,7 @@ def test_keys_stay_exact(spark, server):
     again = ask("SELECT count(*) AS n FROM ev")
     assert again["rows"] == [[4]] and "cached" not in again
 
-    K = lambda s: ResultCache.key(None, s, spark)  # noqa: E731
+    K = lambda s: ResultCache.key(None, analyzed_plan(spark, s))  # noqa: E731
     assert K("SELECT r_name AS a, r_regionkey AS b FROM region") != K(
         "SELECT r_name AS b, r_regionkey AS a FROM region"
     )

@@ -22,7 +22,7 @@ from sparksql_server_spark.server import (
 from sparksql_server_spark.server.scheduler import classify
 from sparksql_server_spark.server.server import source_view_map
 from sparksql_server_spark.catalog import register_tables
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, analyzed_plan
 
 
 def _job(i, sql, fps=()):
@@ -195,6 +195,34 @@ class TestBatchExecutor:
             assert job.status is JobStatus.DONE, job.error
             assert job.rows == exp
 
+    def test_scalar_subquery_source_is_fingerprinted(self, executor):
+        """A scalar subquery's scan is one of the job's sources: the
+        plan walk reads subquery plans as well as the main one."""
+        job = QueryJob(
+            job_id=1,
+            sql="SELECT (SELECT max(r_regionkey) FROM region), count(*) FROM part",
+        )
+        executor.analyze(job)
+        assert job.fingerprints == {
+            SF_DIR + "/region.parquet",
+            SF_DIR + "/part.parquet",
+        }
+
+    def test_cached_source_is_read_but_not_fingerprinted(self, executor):
+        """A scan served from the scan cache reads memory: it is in the
+        job's read set (width and format) but is no fingerprint, so it
+        neither joins a bag nor prices a merge."""
+        src, nation = SF_DIR + "/supplier.parquet", SF_DIR + "/nation.parquet"
+        assert executor.cache.ensure_cached(src, "supplier", "parquet")
+        job = QueryJob(
+            job_id=1,
+            sql="SELECT s_name, n_name FROM supplier"
+            " JOIN nation ON s_nationkey = n_nationkey",
+        )
+        executor.analyze(job)
+        assert job.fingerprints == {nation}
+        assert set(job.read_cols) == {src, nation}
+
     def test_analysis_error_is_job_error(self, executor):
         jobs = [QueryJob(job_id=1, sql="SELECT * FROM no_such_table")]
         executor.run_batch(jobs)
@@ -281,6 +309,33 @@ class TestServerTCP:
         )
         assert reply["status"] == "done", reply
         assert reply["rows"][0][0] == "automobile"
+
+    def test_uncached_query_is_planned_once(self, server, monkeypatch):
+        """An uncached gateway query is parsed once (classify) and
+        analyzed once, at intake; its one ``SparkSession.sql`` call is
+        its execution, and no plan text is parsed on its way."""
+        from pyspark.sql import SparkSession
+
+        from sparksql_server_spark.plans import analysis
+
+        sqls, texts = [], []
+        sql, parse_scans = SparkSession.sql, analysis.parse_scans
+
+        def counted_sql(self, query, *a, **kw):
+            sqls.append(query)
+            return sql(self, query, *a, **kw)
+
+        def counted_parse(text):
+            texts.append(text)
+            return parse_scans(text)
+
+        monkeypatch.setattr(SparkSession, "sql", counted_sql)
+        monkeypatch.setattr(analysis, "parse_scans", counted_parse)
+        q = "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey"
+        reply = client_request(server.address, {"sql": q})
+        assert reply["status"] == "done" and "cached" not in reply, reply
+        assert sqls == [q]
+        assert texts == []
 
     def test_missing_sql(self, server):
         reply = client_request(server.address, {"wat": 1})
@@ -454,7 +509,7 @@ class TestRegisteredUDFs:
     def test_l2_norm_matches_jvm_expression(self, spark):
         from sparksql_server_spark.functions.udfs import register_udfs
         from sparksql_server_spark.catalog import register_tables
-        from tests.conftest import SF_DIR
+        from tests.conftest import SF_DIR, analyzed_plan
 
         register_udfs(spark)
         register_tables(spark, SF_DIR, ("embeddings",))
@@ -1653,7 +1708,7 @@ class TestBenignJdbcCommand:
 
     def test_mirror_applies_to_gateway_session(self, spark):
         from sparksql_server_spark.server import WorkSharingServer
-        from tests.conftest import SF_DIR
+        from tests.conftest import SF_DIR, analyzed_plan
 
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.05)
         before = spark.conf.get("spark.sql.shuffle.partitions")
@@ -3032,8 +3087,9 @@ class TestJdbcTempViewMirror:
             assert res["rows"][0][0] == exp, res
             # ...and is cached PRIVATELY, never in the shared namespace
             view_session = srv.session_for(sid)
-            assert srv.results.get(ResultCache.key(None, q, view_session)) is None
-            assert srv.results.get(ResultCache.key(sid, q, view_session)) is not None
+            plan = analyzed_plan(view_session, q)
+            assert srv.results.get(ResultCache.key(None, plan)) is None
+            assert srv.results.get(ResultCache.key(sid, plan)) is not None
             # root never learned the view
             import pytest as _pytest
             with _pytest.raises(Exception):
@@ -3043,7 +3099,9 @@ class TestJdbcTempViewMirror:
             qb = "SELECT count(*) AS n FROM supplier WHERE s_acctbal > 0"
             resb = srv.answer_jdbc(qb, sid)
             assert resb["rows"][0][0] > 0
-            assert srv.results.get(ResultCache.key(None, qb, spark)) is not None
+            assert srv.results.get(
+                ResultCache.key(None, analyzed_plan(spark, qb))
+            ) is not None
         finally:
             srv.shutdown()
             srv.executor.cache.clear()
@@ -3198,7 +3256,9 @@ class TestJdbcTempViewMirror:
             q = "SELECT count(*) AS n FROM nation"
             real_n = spark.table("nation").count()
             assert srv.answer_jdbc(q, sid)["rows"][0][0] == real_n
-            assert srv.results.get(ResultCache.key(None, q, spark)) is not None
+            assert srv.results.get(
+                ResultCache.key(None, analyzed_plan(spark, q))
+            ) is not None
             with srv._session_lock:
                 assert sid not in srv._dirty_sessions
                 assert not any(
