@@ -217,10 +217,10 @@ def _timed_batch(
     cache_floor: int = 1 << 40,
     enable_mrshare: bool = False,
 ):
-    """Time one ``run_batch`` of ``queries`` through a fresh executor
-    and return (seconds, bags). The default cache floor sits
-    above any table, vetoing admission; whatever the batch cached is
-    released after the clock stops. A failed job makes the timing
+    """Time one batch of ``queries`` through a fresh executor, until
+    its last job has finished, and return (seconds, bags). The default
+    cache floor sits above any table, vetoing admission; whatever the
+    batch cached is released after the clock stops. A failed job makes the timing
     invalid, so it is reported on stderr."""
     ex = BatchExecutor(
         spark,
@@ -230,9 +230,10 @@ def _timed_batch(
     )
     jobs = [QueryJob(job_id=base_id + i, sql=q) for i, q in enumerate(queries)]
     t0 = time.monotonic()
-    bags = ex.run_batch(jobs)
+    bags = ex.run_batch_and_wait(jobs)
     dt = time.monotonic() - t0
     ex.cache.clear()
+    ex.close()
     failed = [j for j in jobs if j.status.value != "done"]
     if failed:
         print(
@@ -510,7 +511,7 @@ def main() -> None:
 
         jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(queries)]
         t0 = time.monotonic()
-        executor.run_batch(jobs)
+        executor.run_batch_and_wait(jobs)
         timings[f"shared_scan_batched_n{n}"] = round(time.monotonic() - t0, 3)
         executor.cache.clear()
     # keep the legacy pair for cross-round comparability (n=5 values)

@@ -15,7 +15,11 @@ The honest rebuild of DAGQueue + the WorksharingExecutor poll loop:
   expires inside the window it is still queued in — exactly the
   window-latency blindness the reference documented as its own gap
   (PROJECT-INTERNALS.md:53). Deadline-free traffic is byte-identical:
-  the trigger never fires when no queued job carries a deadline.
+  the trigger never fires when no queued job carries a deadline;
+- end a batch at its first writer (``QueryJob.writes``): a read queued
+  behind a write must be planned after the write has run, so it waits
+  for the next batch, which the executor plans only once the writer's
+  batch has finished (scheduler.py).
 """
 
 from __future__ import annotations
@@ -81,14 +85,21 @@ class WindowBatcher:
         with self._lock:
             return len(self._queue)
 
-    def next_batch(self, block: bool = True) -> list[QueryJob]:
-        """Return the next ready batch ([] when non-blocking and none).
+    def next_batch(
+        self, block: bool = True, timeout: float | None = None
+    ) -> list[QueryJob]:
+        """Return the next ready batch, or [] when none is ready and
+        ``block`` is False or ``timeout`` seconds have passed (None:
+        wait until one is). A blocked call wakes when a window fills and
+        polls every ``poll_interval`` for the age trigger.
 
-        FIFO fairness: the whole waiting queue drains as one batch (the
-        reference drains window-many; draining all preserves order and
-        lets the detector find larger sharing groups). Before returning,
-        the batch passes through the pre-scheduler ordering.
+        FIFO fairness: the waiting queue drains as one batch, up to and
+        including its first writer (the reference drains window-many;
+        draining all preserves order and lets the detector find larger
+        sharing groups). Before returning, the batch passes through the
+        pre-scheduler ordering.
         """
+        end = None if timeout is None else time.monotonic() + timeout
         while True:
             with self._lock:
                 ready = (
@@ -101,13 +112,19 @@ class WindowBatcher:
                     or self._deadline_urgent()
                 )
                 if ready:
-                    batch = list(self._queue)
-                    self._queue.clear()
+                    n = next(
+                        (i + 1 for i, j in enumerate(self._queue) if j.writes),
+                        len(self._queue),
+                    )
+                    batch = [self._queue.popleft() for _ in range(n)]
                     self._wakeup.clear()
                     return preschedule(batch)
-            if not block:
+            pause = self.poll_interval
+            if end is not None:
+                pause = min(pause, end - time.monotonic())
+            if not block or pause <= 0:
                 return []
-            self._wakeup.wait(timeout=self.poll_interval)
+            self._wakeup.wait(timeout=pause)
 
 
 def preschedule(batch: list[QueryJob]) -> list[QueryJob]:

@@ -18,6 +18,12 @@ Caching happens at *table* granularity via ``spark.catalog.cacheTable``:
 after that, Catalyst substitutes the InMemoryRelation into EVERY
 query over the table automatically — the declarative equivalent of the
 reference's manual DAG surgery (Caching.scala:67-83 ``replaceScan``).
+
+Batches overlap (scheduler.py), so an eviction made to admit batch
+k+1's relation can uncache a view that a still-running job of batch k
+scans. Spark then recomputes the partitions it no longer finds in
+memory from the source: results are unchanged, only that job's speed
+is affected.
 """
 
 from __future__ import annotations
@@ -125,12 +131,10 @@ class CacheManager:
         self.mem_expansion = mem_expansion
         # sources whose build was observed not to fit (never retried)
         self._rejected: set[str] = set()
-        # one lock guards _entries/_rejected: since round 5 the
+        # one lock guards _entries/_rejected writes: since round 5 the
         # ScanObserver primes this manager from ITS OWN thread while
-        # scheduler pool threads touch()/evict concurrently — unlocked,
-        # an observer eviction between touch()'s membership check and
-        # its index raised KeyError inside _run_job's finally, skipping
-        # done_event.set() and hanging a wait=True client. Reentrant:
+        # the batch loop admits and evicts (touch() stamps without it —
+        # see there). Reentrant:
         # ensure_cached holds it across the build (also the
         # double-build guard) and calls _evict_until inside.
         self._lock = threading.RLock()
@@ -325,9 +329,14 @@ class CacheManager:
         return True, mem_total
 
     def touch(self, source: str) -> None:
-        with self._lock:
-            if source in self._entries:
-                self._entries[source].last_used = time.monotonic()
+        """Stamp ``source``'s entry as used now. Lock-free: a job calls
+        this as it finishes, before its client is released, and
+        ``ensure_cached`` holds the lock across a whole build of a later
+        batch's relation. One ``dict.get`` is atomic, and stamping an
+        entry evicted a moment before is harmless."""
+        entry = self._entries.get(source)
+        if entry is not None:
+            entry.last_used = time.monotonic()
 
     def _evict_until(self, free_target: int) -> None:
         used = sum(e.bytes for e in self._entries.values())

@@ -88,6 +88,12 @@ class QueryJob:
             return None
         return self.submitted_at + d / 1000.0
 
+    @property
+    def writes(self) -> bool:
+        """A command, or a query writing a sink: a job that can change
+        what later reads see. An unclassified job counts as a read."""
+        return self.is_query is False or bool(self.props.get("output"))
+
     def result(self) -> dict[str, Any]:
         out: dict[str, Any] = {
             "id": self.job_id,

@@ -1,4 +1,4 @@
-"""Batch executor — detector → cache rewrite → concurrent FAIR-pool run.
+"""Batch executor — detector → cache rewrite → run on a shared pool.
 
 The modern form of the reference's optimize/rewrite/schedule pipeline
 (WorksharingExecutor.scala:65-98 → OptimizationExecutor →
@@ -8,18 +8,27 @@ RewriteExecutor → FIFOStrategy):
 - for shared bags, cache the common relations (cache.py, ≙ the
   Caching rewrite — but declaratively: cacheTable + Catalyst's
   InMemoryRelation substitution replaces DAG surgery);
-- run the first job of a cached bag synchronously to materialize the
-  cache, then the remaining jobs concurrently in FAIR scheduler pools
-  (≙ FIFOStrategy.scala:64-77 cache-first ordering + its
-  JobConcurrent threads :107-111, with a bounded pool instead of
-  unbounded raw threads — SURVEY.md §7 hard-part #3).
+- materialize a cached bag's relation (and any MRShare merge) before
+  its jobs start (≙ FIFOStrategy.scala:64-77 cache-first ordering),
+  then hand the jobs to one executor-wide pool in FAIR scheduler pools
+  (≙ its JobConcurrent threads :107-111, with a bounded pool instead
+  of unbounded raw threads — SURVEY.md §7 hard-part #3).
+
+Unlike the reference, which drains a window, runs it and only then
+polls again, ``run_batch`` returns as soon as a read-only batch's jobs
+are submitted: batch k+1 is detected, admitted and started while batch
+k's jobs still run, so a short query is not held behind the slowest job
+of the window before it. The pool's ``max_concurrency`` workers bound
+the jobs in flight across all overlapping batches. A batch holding a
+writer (``QueryJob.writes``) is a fence: it waits for every job in
+flight before it is planned, and for its own jobs before it returns.
 """
 
 from __future__ import annotations
 
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor, wait
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from typing import Any
 
 from py4j.java_gateway import is_instance_of
@@ -85,7 +94,8 @@ def classify(session: SparkSession, sql: str) -> tuple[bool, Any]:
 class BatchExecutor:
     """Executes window batches of QueryJobs over one SparkSession."""
 
-    # pool threads running one batch's jobs
+    # pool threads running jobs: the one bound on jobs in flight,
+    # shared by every overlapping batch
     max_concurrency = 16
 
     def __init__(
@@ -120,6 +130,17 @@ class BatchExecutor:
         import uuid
 
         self._group_ns = uuid.uuid4().hex[:8]
+        # FIFO: jobs start in each batch's prescheduled order, batch by
+        # batch. close() stops it
+        self._pool = ThreadPoolExecutor(
+            max_workers=self.max_concurrency,
+            thread_name_prefix=f"batch-{self._group_ns}",
+        )
+        # submitted jobs not yet finished, and merge members not yet
+        # finished -> their merge (keyed by id(job)); under _flight_lock
+        self._in_flight: dict[Future, QueryJob] = {}
+        self._merge_of: dict[int, MergePlan] = {}
+        self._flight_lock = threading.Lock()
         # running decision counters (the reference logged its optimizer
         # decisions per batch; this is the queryable form — see the
         # gateway's {"server_stats": true} request)
@@ -172,8 +193,12 @@ class BatchExecutor:
     # -- execution --------------------------------------------------------
 
     def run_batch(self, jobs: list[QueryJob]) -> list[SharingBag]:
-        """Detect → rewrite → execute one batch; returns the bags for
-        introspection/tests."""
+        """Detect → rewrite → start one batch's jobs on the pool; returns
+        the bags (introspection/tests) once the next batch may be
+        planned. A read-only batch returns as soon as its jobs are
+        submitted. A batch holding a writer first waits for every job in
+        flight, and returns only once its own jobs have finished.
+        Callers wait on each job's ``done_event`` for its result."""
         for job in jobs:
             if not job.fingerprints:
                 try:
@@ -183,6 +208,11 @@ class BatchExecutor:
                     job.error = f"{type(exc).__name__}: {exc}"
                     self._bump_stat("jobs_failed")
                     job.done_event.set()
+        fence = any(job.writes for job in jobs)
+        if fence:
+            with self._flight_lock:
+                in_flight = list(self._in_flight)
+            wait(in_flight)
 
         bags = detect_sharing([j for j in jobs if j.status is JobStatus.QUEUED])
 
@@ -191,40 +221,46 @@ class BatchExecutor:
         # fully-merged bag doesn't also burn cache budget on a relation
         # that will now be scanned once.
         merges: list[MergePlan] = []
-        if self.enable_mrshare:
-            for bag in bags:
-                # prime-only jobs (jdbc_proxy window members) never
-                # merge: their demux result would be discarded — the
-                # client's own engine runs the full original statement
-                # — so a merge admitted on their count is pure waste.
-                # They still count for bag membership and cache
-                # admission below, which IS their sharing payoff.
-                offered = [
-                    j
-                    for j in bag.jobs
-                    if j.status is JobStatus.QUEUED and not j.props.get("prime_only")
-                ]
-                # price the bag before reading any plan: a merge shares
-                # one of the bag's shared sources, so a bag whose
-                # largest is under the floor cannot hold a merge
-                if len(offered) < 2 or self._bytes_of(bag.shared_sources) < (
-                    self.mrshare_min_bytes
-                ):
-                    continue
-                for mp in plan_merges(offered):
-                    if self._merge_source_bytes(mp) < self.mrshare_min_bytes:
-                        continue  # scan too cheap to repay merge overhead
-                    if self._materialize_merge(mp):
-                        merges.append(mp)
-                        bag.merges.append(mp)
-        for job in jobs:
-            job.plan = None  # planned: free the JVM-side plan
-        merged_ids = {j.job_id for mp in merges for j in mp.jobs}
+        try:
+            if self.enable_mrshare:
+                for bag in bags:
+                    # prime-only jobs (jdbc_proxy window members) never
+                    # merge: their demux result would be discarded — the
+                    # client's own engine runs the full original statement
+                    # — so a merge admitted on their count is pure waste.
+                    # They still count for bag membership and cache
+                    # admission below, which IS their sharing payoff.
+                    offered = [
+                        j
+                        for j in bag.jobs
+                        if j.status is JobStatus.QUEUED
+                        and not j.props.get("prime_only")
+                    ]
+                    # price the bag before reading any plan: a merge
+                    # shares one of the bag's shared sources, so a bag
+                    # whose largest is under the floor cannot hold a merge
+                    if len(offered) < 2 or self._bytes_of(bag.shared_sources) < (
+                        self.mrshare_min_bytes
+                    ):
+                        continue
+                    for mp in plan_merges(offered):
+                        if self._merge_source_bytes(mp) < self.mrshare_min_bytes:
+                            continue  # scan too cheap to repay merge overhead
+                        if self._materialize_merge(mp):
+                            merges.append(mp)
+                            bag.merges.append(mp)
+            for job in jobs:
+                job.plan = None  # planned: free the JVM-side plan
+            merged_ids = {j.job_id for mp in merges for j in mp.jobs}
 
-        for bag in bags:
-            self._apply_caching_rewrite(bag, exclude=merged_ids)
-            if bag.merges and bag.rewrite is RewriteKind.NOOP:
-                bag.rewrite = RewriteKind.MRSHARE
+            for bag in bags:
+                self._apply_caching_rewrite(bag, exclude=merged_ids)
+                if bag.merges and bag.rewrite is RewriteKind.NOOP:
+                    bag.rewrite = RewriteKind.MRSHARE
+        except BaseException:
+            for mp in merges:
+                self._release_merge(mp)
+            raise
 
         self._bump_stat("batches")
         self._bump_stat("jobs_run", len(jobs))
@@ -238,29 +274,64 @@ class BatchExecutor:
         # _apply_caching_rewrite: ensure_cached materializes the shared
         # relation with a cheap count, so ALL jobs — bag #1 included —
         # then run concurrently on warm cache. Merged jobs' demux queries
-        # run against the persisted merged aggregate the same way.
+        # run against the persisted merged aggregate the same way; the
+        # last member to finish releases it (_leave_merge), so merged
+        # relations stay batch-scoped and can't bypass the CacheManager's
+        # byte budget (hygiene gate: tests/test_cache_hygiene.py).
         #
         # Submission order re-applies the pre-scheduler key (ADVICE r9):
         # detect_sharing regrouped the prescheduled batch into bags, and
         # submitting in bag order would let a tight-deadline job grouped
-        # into a LATER bag queue behind slack jobs whenever the batch
-        # exceeds max_concurrency — the deadline_urgent FAIR pool only
-        # helps once the Spark job has actually started.
+        # into a LATER bag queue behind slack jobs whenever the jobs in
+        # flight exceed max_concurrency — the deadline_urgent FAIR pool
+        # only helps once the Spark job has actually started.
         ordered = preschedule([job for bag in bags for job in bag.jobs])
-        try:
-            with ThreadPoolExecutor(max_workers=self.max_concurrency) as pool:
-                futures = [
-                    pool.submit(self._run_job, job, self._job_pool(job))
-                    for job in ordered
-                ]
-                wait(futures)
-        finally:
-            # merged relations are batch-scoped: release them so they
-            # can't bypass the CacheManager's byte budget (hygiene gate:
-            # tests/test_cache_hygiene.py)
+        with self._flight_lock:
             for mp in merges:
-                self._release_merge(mp)
+                for job in mp.jobs:
+                    self._merge_of[id(job)] = mp
+        futures: list[Future] = []
+        try:
+            for job in ordered:
+                futures.append(self._submit(job))
+        except BaseException:  # pool closed: the loop fails the batch
+            for job in ordered[len(futures):]:
+                self._leave_merge(job)
+            raise
+        if fence:
+            wait(futures)
         return bags
+
+    def run_batch_and_wait(self, jobs: list[QueryJob]) -> list[SharingBag]:
+        """``run_batch``, then wait until every one of ``jobs`` has
+        finished: for callers that read a whole batch's results at once
+        (tests, bench.py)."""
+        bags = self.run_batch(jobs)
+        for job in jobs:
+            job.done_event.wait()
+        return bags
+
+    def _submit(self, job: QueryJob) -> Future:
+        future = self._pool.submit(self._run_job, job, self._job_pool(job))
+        with self._flight_lock:
+            self._in_flight[future] = job
+        future.add_done_callback(self._landed)
+        return future
+
+    def _landed(self, future: Future) -> None:
+        with self._flight_lock:
+            self._in_flight.pop(future, None)
+
+    def close(self) -> None:
+        """Stop the pool: jobs not yet started fail as cancelled, running
+        ones finish; returns once every pool thread has exited."""
+        with self._flight_lock:
+            pending = list(self._in_flight.items())
+        for future, job in pending:
+            if future.cancel():  # never started: no _run_job will see it
+                self.cancel(job)
+                self._leave_merge(job)
+        self._pool.shutdown(wait=True)
 
     # -- MRShare merge (B8) ----------------------------------------------
 
@@ -308,6 +379,18 @@ class BatchExecutor:
                 except Exception:  # JVM already torn down — nothing to free
                     pass
             return False
+
+    def _leave_merge(self, job: QueryJob) -> None:
+        """``job`` has finished: drop it from its merge, if any. The
+        last member to leave releases the merged relation."""
+        job.props.pop("demux", None)
+        with self._flight_lock:
+            mp = self._merge_of.pop(id(job), None)
+            last = mp is not None and not any(
+                id(j) in self._merge_of for j in mp.jobs
+            )
+        if last:
+            self._release_merge(mp)
 
     def _release_merge(self, mp: MergePlan) -> None:
         for job in mp.jobs:
@@ -448,9 +531,12 @@ class BatchExecutor:
     def _run_job(self, job: QueryJob, pool_name: str) -> None:
         """Execute one job in the calling thread, inside a FAIR pool."""
         with job.state_lock:
-            if job.status is not JobStatus.QUEUED:  # e.g. cancelled while queued
-                return
-            job.status = JobStatus.RUNNING
+            claimed = job.status is JobStatus.QUEUED  # not cancelled while queued
+            if claimed:
+                job.status = JobStatus.RUNNING
+        if not claimed:
+            self._leave_merge(job)
+            return
         sess = job.session or self.spark
         try:
             # pool threads have no JVM active session; Python data
@@ -514,6 +600,7 @@ class BatchExecutor:
             for src in job.fingerprints:
                 self.cache.touch(src)
             try:
+                self._leave_merge(job)
                 if job.on_done is not None:
                     job.on_done()
             finally:

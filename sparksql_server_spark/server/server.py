@@ -244,23 +244,29 @@ class WorkSharingServer:
         self._tcp.shutdown()
         self._tcp.server_close()
         self._loop_thread.join(timeout=30)
+        self.executor.close()
 
     def _run_loop(self) -> None:
         while not self._stop.is_set():
             try:
-                batch = self.batcher.next_batch(block=False)
+                # wakes when a window fills; the timeout re-checks the
+                # age trigger and shutdown
+                batch = self.batcher.next_batch(timeout=0.05)
             except Exception:  # noqa: BLE001 — queue already drained;
                 # jobs in the lost window are unrecoverable here, but
                 # the loop itself must never die (it is the server's
-                # only execution thread). Back off before retrying so a
+                # only planning thread). Back off before retrying so a
                 # persistently-raising next_batch can't busy-spin this
                 # thread at 100% CPU.
                 self._stop.wait(0.05)
                 continue
             if not batch:
-                self._stop.wait(0.05)
                 continue
             try:
+                # plans the batch and starts its jobs on the executor's
+                # pool; for a read-only batch it returns right away, so
+                # the next window is planned while these jobs run. A
+                # batch with a writer returns once it has finished
                 self.executor.run_batch(batch)
             except Exception as exc:  # noqa: BLE001 — loop must survive
                 # run_batch guards per-job analyze/execute, but a fault
@@ -450,8 +456,9 @@ class WorkSharingServer:
         execution itself is skipped because the caller's own engine
         (HiveServer2) performs the one real execution after this
         returns, against whatever the batch cached. Blocks until the
-        statement's batch has run (the reference imposed exactly this
-        window latency on every client, WorksharingExecutor.scala:65-98).
+        statement's batch has been planned and its job has had its turn
+        on the executor's pool (the reference imposed this window
+        latency on every client, WorksharingExecutor.scala:65-98).
 
         Commands are not gated — they pass straight to the caller's
         engine — but they flush the gateway result cache (scoped to the

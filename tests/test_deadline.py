@@ -143,7 +143,7 @@ def test_tight_deadline_completes_first_under_contention(spark):
         tight = _heavy(99, 2006, deadline_ms=120_000)
         batch = preschedule(slack + [tight])
         assert batch[0].job_id == 99  # EDF put the late arrival first
-        ex.run_batch(batch)
+        ex.run_batch_and_wait(batch)
         for j in slack + [tight]:
             assert j.status is JobStatus.DONE, f"job {j.job_id}: {j.error}"
             assert j.finished_at is not None
@@ -170,7 +170,7 @@ def test_deadline_miss_surfaces_in_stats(spark):
     )
     missed = _job(1, sql="SELECT count(*) AS n FROM region", deadline_ms=0.001)
     met = _job(2, sql="SELECT count(*) AS n FROM nation", deadline_ms=300_000)
-    ex.run_batch([missed, met])
+    ex.run_batch_and_wait([missed, met])
     assert missed.status is JobStatus.DONE and met.status is JobStatus.DONE
     assert ex.stats["deadline_jobs"] == 2
     assert ex.stats["deadline_misses"] == 1
@@ -199,7 +199,7 @@ def test_deadline_job_merges_and_completes(spark):
         QueryJob(job_id=0, sql=sqls[0], props={"deadline_ms": 300_000}),
         QueryJob(job_id=1, sql=sqls[1]),
     ]
-    bags = ex.run_batch(jobs)
+    bags = ex.run_batch_and_wait(jobs)
     assert any(b.merges for b in bags)  # the pair merged
     for j, exp in zip(jobs, expected):
         assert j.status is JobStatus.DONE and sorted(j.rows) == exp

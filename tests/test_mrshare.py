@@ -224,7 +224,7 @@ def _run_and_compare(spark, executor, sqls, expect_merged_ids):
         _null_safe(tuple(r) for r in spark.sql(q).collect()) for q in sqls
     ]
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
-    bags = executor.run_batch(jobs)
+    bags = executor.run_batch_and_wait(jobs)
     merged = {j.job_id for b in bags for mp in b.merges for j in mp.jobs}
     assert merged == set(expect_merged_ids)
     for job, exp in zip(jobs, expected):
@@ -569,7 +569,7 @@ def test_grouping_sets_bound_declines(spark):
         f"SELECT {c} AS k, count(*) AS n FROM orders GROUP BY {c}" for c in cols
     ]
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
-    bags = ex.run_batch(jobs)
+    bags = ex.run_batch_and_wait(jobs)
     assert all(not b.merges for b in bags)
     for job, q in zip(jobs, sqls):
         assert job.status is JobStatus.DONE
@@ -589,7 +589,7 @@ def test_multi_distinct_bound_packs_within_cap(spark, executor):
         sorted(tuple(r) for r in spark.sql(q).collect()) for q in sqls
     ]
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
-    bags = executor.run_batch(jobs)
+    bags = executor.run_batch_and_wait(jobs)
     merged = {j.job_id for b in bags for mp in b.merges for j in mp.jobs}
     assert len(merged) == 2, "a feasible D=2 pair merges; the third runs alone"
     for job, exp in zip(jobs, expected):
@@ -614,7 +614,7 @@ def test_merged_sink_output(tmp_path, spark, executor):
         QueryJob(job_id=0, sql=SAME_SIG[0], props={"output": out}),
         QueryJob(job_id=1, sql=SAME_SIG[1]),
     ]
-    bags = executor.run_batch(jobs)
+    bags = executor.run_batch_and_wait(jobs)
     assert any(b.merges for b in bags)
     assert jobs[0].status is JobStatus.DONE, jobs[0].error
     got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
@@ -628,7 +628,7 @@ def test_sessions_do_not_cross_merge(spark, executor):
         QueryJob(job_id=0, sql=SAME_SIG[0]),
         QueryJob(job_id=1, sql=SAME_SIG[1], session=other),
     ]
-    bags = executor.run_batch(jobs)
+    bags = executor.run_batch_and_wait(jobs)
     assert all(not b.merges for b in bags)
     for job in jobs:
         assert job.status is JobStatus.DONE, job.error
@@ -640,13 +640,87 @@ def test_merged_relation_released_after_batch(spark, executor):
     wrong #1 applies to the server itself too)."""
     before = persistent_rdd_ids(spark)
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
-    executor.run_batch(jobs)
+    executor.run_batch_and_wait(jobs)
     assert all(j.status is JobStatus.DONE for j in jobs)
     leaked = persistent_rdd_ids(spark) - before
     assert leaked == set(), f"merge leaked persistent RDDs: {leaked}"
     # and the temp view is gone
     views = {t.name for t in spark.catalog.listTables() if t.tableType == "TEMPORARY"}
     assert not any(v.startswith("mrshare_") for v in views)
+
+
+def test_merged_relation_released_by_members_under_overlap(spark, executor):
+    """Batches overlap: a merge's members finish while the next batch's
+    job still runs, and the last of them releases the merged relation —
+    the release waits for neither the loop nor the later batch."""
+    before = persistent_rdd_ids(spark)
+    members = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
+    # ~6k lineitem rows x 2 ms of sleep: outlives the members by far
+    slow = QueryJob(
+        job_id=99,
+        sql="SELECT max(z) AS z FROM (SELECT reflect('java.lang.Thread', 'sleep',"
+        " CAST(l_linenumber % 1 + 2 AS BIGINT)) AS z FROM lineitem)",
+    )
+    bags = executor.run_batch(members)
+    assert any(b.merges for b in bags)
+    executor.run_batch([slow])
+    try:
+        for job in members:
+            assert job.done_event.wait(120)
+            assert job.status is JobStatus.DONE, f"job {job.job_id}: {job.error}"
+        assert not slow.done_event.is_set()  # batch k+1 still runs
+        assert persistent_rdd_ids(spark) == before
+    finally:
+        executor.cancel(slow)
+        slow.done_event.wait(60)
+    assert persistent_rdd_ids(spark) == before
+
+
+def test_each_merge_released_once_by_concurrent_members():
+    """Members of many merges leave from more threads than cores with a
+    short switch interval: every merged relation is released exactly
+    once, by the last of its members."""
+    import sys
+    import threading
+
+    from sparksql_server_spark.server.mrshare import MergePlan
+
+    class Relation:
+        def __init__(self) -> None:
+            self.unpersists = 0
+
+        def unpersist(self) -> None:
+            self.unpersists += 1
+
+    ex = BatchExecutor(None, cache=CacheManager(None))
+    merges = []
+    for m in range(200):
+        mp = MergePlan(jobs=[QueryJob(job_id=m * 4 + i, sql="") for i in range(4)])
+        mp.df = Relation()
+        merges.append(mp)
+        for job in mp.jobs:
+            ex._merge_of[id(job)] = mp
+    relations = [mp.df for mp in merges]
+    members = [job for mp in merges for job in mp.jobs]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda k=k: [
+                ex._leave_merge(j) for j in members[k::16]
+            ])
+            for k in range(16)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+        ex.close()
+    assert [r.unpersists for r in relations] == [1] * len(merges)
+    assert not ex._merge_of and all(mp.df is None for mp in merges)
 
 
 def test_small_scans_not_merged_by_default(spark):
@@ -661,7 +735,7 @@ def test_small_scans_not_merged_by_default(spark):
         source_views=source_view_map(SF_DIR),  # default mrshare_min_bytes
     )
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG[:2])]
-    bags = ex.run_batch(jobs)
+    bags = ex.run_batch_and_wait(jobs)
     assert all(not b.merges for b in bags)
     for job in jobs:
         # priced under the floor before any plan was read
@@ -677,7 +751,7 @@ def test_disabled_flag_runs_unmerged(spark):
         enable_mrshare=False,
     )
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG[:2])]
-    bags = ex.run_batch(jobs)
+    bags = ex.run_batch_and_wait(jobs)
     assert all(not b.merges for b in bags)
     for job, q in zip(jobs, SAME_SIG[:2]):
         assert job.status is JobStatus.DONE
@@ -1289,7 +1363,7 @@ def test_merged_derived_plan_scans_inner_table_once(spark, executor):
     — the merged job's plan contains exactly ONE lineitem scan where
     the unmerged batch would run three."""
     jobs = [QueryJob(job_id=900 + i, sql=q) for i, q in enumerate(DERIVED_MEMBERS)]
-    bags = executor.run_batch(jobs)
+    bags = executor.run_batch_and_wait(jobs)
     (mp,) = [mp for b in bags for mp in b.merges]
     plan = _merged_physical(spark, [j.sql for j in mp.jobs])
     assert plan.lower().count("lineitem.parquet") == 1, plan
@@ -1370,7 +1444,7 @@ def test_member_table_dropped_between_admission_and_merge(spark, executor):
     )
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
     try:
-        bags = executor.run_batch(jobs)
+        bags = executor.run_batch_and_wait(jobs)
     finally:
         register_tables(spark, SF_DIR)  # restore for later tests
     assert fired  # the interleaving actually exercised
@@ -1398,7 +1472,7 @@ def test_member_table_dropped_after_merge_serves_one_snapshot(spark, executor):
     )
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
     try:
-        bags = executor.run_batch(jobs)
+        bags = executor.run_batch_and_wait(jobs)
     finally:
         register_tables(spark, SF_DIR)
     assert fired
@@ -1427,7 +1501,7 @@ def test_member_table_swapped_between_admission_and_merge(spark, executor):
     fired = _hook_materialize(executor, "before", swap)
     jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
     try:
-        bags = executor.run_batch(jobs)
+        bags = executor.run_batch_and_wait(jobs)
         post_expected = [
             _null_safe(tuple(r) for r in spark.sql(q).collect()) for q in SAME_SIG
         ]
@@ -2306,7 +2380,7 @@ def test_under_floor_bag_reads_no_plan(spark, monkeypatch):
             mrshare_min_bytes=floor,
         )
         jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(SAME_SIG)]
-        ex.run_batch(jobs)
+        ex.run_batch_and_wait(jobs)
         assert all(j.status is JobStatus.DONE for j in jobs)
         # the merge re-reads each member once more when it materializes
         assert len(calls) == (0 if reads == 0 else 2 * reads)

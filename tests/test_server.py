@@ -150,6 +150,30 @@ class TestBatcher:
         assert 5.0 <= got["elapsed"] <= 5.0 + 0.05 + 0.5, got["elapsed"]
 
 
+    def test_writer_ends_its_batch(self):
+        """A drain stops at the first writer (a command or a sink job):
+        reads queued behind a write go to the next batch, which the
+        executor plans only after the write has run."""
+        b = WindowBatcher(window_size=1, max_wait=60)
+        for job in (
+            _job(1, "x"),
+            QueryJob(job_id=2, sql="INSERT INTO t VALUES (1)", is_query=False),
+            _job(3, "y"),
+            QueryJob(job_id=4, sql="SELECT 1", props={"output": "/x"}, is_query=True),
+            _job(5, "z"),
+        ):
+            b.submit(job)
+        assert [j.job_id for j in b.next_batch(block=False)] == [1, 2]
+        assert [j.job_id for j in b.next_batch(block=False)] == [3, 4]
+        assert [j.job_id for j in b.next_batch(block=False)] == [5]
+
+    def test_blocking_drain_gives_up_after_timeout(self):
+        b = WindowBatcher(window_size=2, max_wait=60)
+        t0 = time.monotonic()
+        assert b.next_batch(timeout=0.1) == []
+        assert 0.1 <= time.monotonic() - t0 < 1.0
+
+
 QUERIES = [
     "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag",
     "SELECT l_linestatus, CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS q"
@@ -187,7 +211,7 @@ class TestBatchExecutor:
             [tuple(r) for r in spark.sql(q).collect()] for q in QUERIES
         ]
         jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(QUERIES)]
-        bags = executor.run_batch(jobs)
+        bags = executor.run_batch_and_wait(jobs)
         # lineitem is shared by 3 jobs -> its bag must take the caching path
         caching_bags = [b for b in bags if b.rewrite is RewriteKind.CACHING]
         assert len(caching_bags) == 1 and len(caching_bags[0].jobs) == 3
@@ -225,7 +249,7 @@ class TestBatchExecutor:
 
     def test_analysis_error_is_job_error(self, executor):
         jobs = [QueryJob(job_id=1, sql="SELECT * FROM no_such_table")]
-        executor.run_batch(jobs)
+        executor.run_batch_and_wait(jobs)
         assert jobs[0].status is JobStatus.ERROR
         assert "no_such_table" in (jobs[0].error or "")
 
@@ -240,7 +264,7 @@ class TestBatchExecutor:
             source_views=source_view_map(SF_DIR),
         )
         jobs = [QueryJob(job_id=i, sql=QUERIES[i]) for i in range(2)]
-        bags = ex.run_batch(jobs)
+        bags = ex.run_batch_and_wait(jobs)
         assert all(b.rewrite is RewriteKind.NOOP for b in bags)
         assert all(j.status is JobStatus.DONE for j in jobs)
         assert not ex.cache.cached_sources
@@ -251,7 +275,7 @@ class TestBatchExecutor:
             QueryJob(job_id=1, sql=QUERIES[0], props={"output": out}),
             QueryJob(job_id=2, sql=QUERIES[1]),
         ]
-        executor.run_batch(jobs)
+        executor.run_batch_and_wait(jobs)
         assert jobs[0].status is JobStatus.DONE
         assert [tuple(r) for r in spark.read.parquet(out).orderBy("l_returnflag").collect()] == [
             tuple(r) for r in spark.sql(QUERIES[0]).collect()
@@ -791,14 +815,14 @@ class TestReadFractionCostModel:
             QueryJob(job_id=i, sql=f"SELECT count(*) AS n FROM lineitem WHERE l_linenumber = {i+1}")
             for i in range(3)
         ]
-        bags = ex.run_batch(narrow)
+        bags = ex.run_batch_and_wait(narrow)
         assert all(b.rewrite is RewriteKind.NOOP for b in bags)
         assert not ex.cache.cached_sources
         wide = [
             QueryJob(job_id=10 + i, sql="SELECT * FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 5")
             for i in range(2)
         ]
-        bags = ex.run_batch(wide)
+        bags = ex.run_batch_and_wait(wide)
         try:
             assert any(b.rewrite is RewriteKind.CACHING for b in bags)
             assert ex.cache.cached_sources
@@ -857,7 +881,7 @@ class TestWideBatch:
             source_views=source_view_map(SF_DIR),
         )
         jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
-        bags = ex.run_batch(jobs)
+        bags = ex.run_batch_and_wait(jobs)
 
         # bags partition the batch
         bag_job_ids = sorted(j.job_id for b in bags for j in b.jobs)
@@ -923,7 +947,7 @@ class TestWideBatch:
             source_views=source_view_map(SF_DIR),
         )
         jobs = [QueryJob(job_id=i, sql=q) for i, q in enumerate(sqls)]
-        bags = ex.run_batch(jobs)
+        bags = ex.run_batch_and_wait(jobs)
 
         assert sorted(j.job_id for b in bags for j in b.jobs) == list(range(len(jobs)))
         select_bags = [b for b in bags if any("FROM" in j.sql for j in b.jobs)]
@@ -1167,8 +1191,162 @@ class TestCancellation:
         ex = BatchExecutor(spark, cache=CacheManager(spark), source_views={})
         job = QueryJob(job_id=999, sql="SELECT count(*) AS n FROM region")
         assert ex.cancel(job)
-        ex.run_batch([job])
+        ex.run_batch_and_wait([job])
         assert job.status is JobStatus.ERROR and job.error == "cancelled"
+
+
+def _sleepy(ms: int) -> str:
+    """A sleep of ``ms`` per row of a table with an int column ``v``
+    (the argument depends on the column, so it is not constant-folded)."""
+    return f"reflect('java.lang.Thread', 'sleep', CAST(v % 1 + {ms} AS BIGINT))"
+
+
+class TestOverlappingBatches:
+    """Read-only batches overlap: the loop plans the next window while
+    the last one's jobs run; a writer fences."""
+
+    @pytest.fixture()
+    def server(self, spark):
+        srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.05).start()
+        yield srv
+        srv.shutdown()
+        srv.executor.cache.clear()
+
+    @staticmethod
+    def _job_of(server, reply) -> QueryJob:
+        return server._jobs[reply["id"]]
+
+    def test_fast_query_not_held_behind_slow_batch(self, server):
+        """Client B's fast query, in the window after client A's
+        CPU-heavy one, is answered while A is still running."""
+        import threading
+
+        from tests.test_deadline import _heavy
+
+        heavy = _heavy(0, 4000).sql
+        replies: dict[str, float] = {}
+
+        def client_a() -> None:
+            r = client_request(server.address, {"sql": heavy})
+            assert r["status"] == "done", r
+            replies["a"] = time.monotonic()
+
+        t = threading.Thread(target=client_a, daemon=True)
+        t.start()
+        for _ in range(400):  # until A's job is running
+            running = [j for j in server._jobs.values() if j.sql == heavy]
+            if running and running[0].status is JobStatus.RUNNING:
+                break
+            time.sleep(0.025)
+        else:
+            raise AssertionError("heavy query never started")
+        r = client_request(server.address, {"sql": "SELECT 1 AS x"})
+        replies["b"] = time.monotonic()
+        assert r["status"] == "done" and r["rows"] == [[1]]
+        t.join(timeout=300)
+        assert replies["b"] < replies["a"], replies
+
+    def test_writer_fences_reads_on_both_sides(self, spark, server):
+        """A read submitted before a slow writer returns the pre-write
+        rows, and the writer starts only once that read has finished;
+        a read submitted after the writer sees the write."""
+        spark.sql("DROP TABLE IF EXISTS fence_c")
+        spark.sql("CREATE TABLE fence_c (v INT) USING parquet")
+        spark.sql("INSERT INTO fence_c VALUES (1)")
+        try:
+            before = client_request(server.address, {
+                "sql": "SELECT count(*) AS n, max(z) AS z"
+                f" FROM (SELECT {_sleepy(1500)} AS z FROM fence_c)",
+                "wait": False,
+            })
+            for _ in range(400):
+                if self._job_of(server, before).status is JobStatus.RUNNING:
+                    break
+                time.sleep(0.025)
+            writer = client_request(server.address, {
+                "sql": "INSERT INTO fence_c SELECT v + 1 FROM fence_c"
+                f" WHERE {_sleepy(1500)} IS NOT NULL",
+                "wait": False,
+            })
+            after = client_request(
+                server.address, {"sql": "SELECT count(*) AS n FROM fence_c"}
+            )
+            read, write = self._job_of(server, before), self._job_of(server, writer)
+            assert read.done_event.wait(60) and write.done_event.wait(60)
+            assert read.status is JobStatus.DONE, read.error
+            assert write.status is JobStatus.DONE, write.error
+            assert read.rows[0][0] == 1
+            assert write.finished_at - write.elapsed >= read.finished_at
+            assert after["status"] == "done" and after["rows"] == [[2]], after
+        finally:
+            spark.sql("DROP TABLE IF EXISTS fence_c")
+
+    def test_no_wait_writer_then_dependent_read(self, spark):
+        """A "wait": false CREATE followed by a read of the new table in
+        the same session, both queued in one window: the drain ends at
+        the CREATE, and the read is planned after the CREATE ran."""
+        spark.sql("DROP TABLE IF EXISTS fence_t")
+        server = WorkSharingServer(spark, SF_DIR, window_size=2, max_wait=0.5).start()
+        try:
+            r = client_request(server.address, {
+                "sql": "CREATE TABLE fence_t USING parquet AS"
+                " SELECT id FROM range(10)",
+                "session": "s1",
+                "wait": False,
+            })
+            assert r["status"] == "queued", r
+            n = client_request(server.address, {
+                "sql": "SELECT count(*) AS n FROM fence_t", "session": "s1",
+            })
+            assert n["status"] == "done" and n["rows"] == [[10]], n
+            assert self._job_of(server, r).status is JobStatus.DONE
+        finally:
+            server.shutdown()
+            spark.sql("DROP TABLE IF EXISTS fence_t")
+
+    def test_finished_job_not_held_by_cache_build(self, spark):
+        """A job's last-used stamp does not wait for the cache lock,
+        which a build of a later batch's relation holds for its whole
+        materialization."""
+        import threading
+
+        ex = BatchExecutor(spark, cache=CacheManager(spark), source_views={})
+        job = _job(1, "SELECT 1 AS x", {SF_DIR + "/region.parquet"})
+        held, release = threading.Event(), threading.Event()
+
+        def build() -> None:
+            with ex.cache._lock:
+                held.set()
+                release.wait(10)
+
+        t = threading.Thread(target=build, daemon=True)
+        t.start()
+        assert held.wait(10)
+        try:
+            t0 = time.monotonic()
+            ex.run_batch([job])
+            assert job.done_event.wait(10)
+            elapsed = time.monotonic() - t0
+        finally:
+            release.set()
+            t.join()
+            ex.close()
+        assert job.status is JobStatus.DONE, job.error
+        assert elapsed < 5.0, elapsed
+
+    def test_shutdown_stops_pool_threads(self, spark):
+        import threading
+
+        srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.05).start()
+        prefix = f"batch-{srv.executor._group_ns}"
+        try:
+            r = client_request(srv.address, {"sql": "SELECT 1 AS x"})
+            assert r["status"] == "done"
+            assert any(t.name.startswith(prefix) for t in threading.enumerate())
+        finally:
+            srv.shutdown()
+            srv.executor.cache.clear()
+        assert not [t.name for t in threading.enumerate() if t.name.startswith(prefix)]
 
 
 class TestRegisteredUDTFs:
