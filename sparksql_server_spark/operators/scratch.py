@@ -201,7 +201,8 @@ class CacheScope:
         """:func:`finish` with the parquet round trip replaced by an
         eager pin (r13, guide §5): materialize `result` as a
         localCheckpoint via :func:`pin_view`, release every OTHER RDD
-        persisted since the scope opened, return the pinned relation.
+        persisted since the scope opened and not pinned by
+        :func:`pin_view`, return the pinned relation.
 
         The pinned result deliberately outlives the call — the same
         bounded posture as the pin_view operators (one live copy per
@@ -219,7 +220,10 @@ class CacheScope:
         out = pin_view(self.spark, result, view)  # eager; consumes the caches
         # the release set is read AFTER the eager pin: SQL caches only
         # register their RDD when they materialize, which for lazily
-        # .cache()d build relations happens during the pin action
-        pin_rid = int(out._jdf.queryExecution().analyzed().rdd().id())
-        unpersist_ids(self.spark, self.new_ids() - {pin_rid})
+        # .cache()d build relations happens during the pin action. Every
+        # registered pin stays: this result's, and any pin_view made
+        # while the scope was open
+        with _pin_lock:
+            pinned = set(_pinned_views.values())
+        unpersist_ids(self.spark, self.new_ids() - pinned)
         return out

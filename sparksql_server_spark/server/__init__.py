@@ -13,4 +13,3 @@ from sparksql_server_spark.server.cache import CacheManager  # noqa: F401
 from sparksql_server_spark.server.scheduler import BatchExecutor  # noqa: F401
 from sparksql_server_spark.server.server import WorkSharingServer, client_request  # noqa: F401
 from sparksql_server_spark.server.client import SparkSQLClient  # noqa: F401
-from sparksql_server_spark.server.observer import ScanObserver  # noqa: F401

@@ -131,10 +131,10 @@ class CacheManager:
         self.mem_expansion = mem_expansion
         # sources whose build was observed not to fit (never retried)
         self._rejected: set[str] = set()
-        # one lock guards _entries/_rejected writes: since round 5 the
-        # ScanObserver primes this manager from ITS OWN thread while
-        # the batch loop admits and evicts (touch() stamps without it —
-        # see there). Reentrant:
+        # one lock guards _entries/_rejected writes: the batch loop
+        # admits, builds and evicts while server threads read
+        # cached_sources (server_stats) and pool threads stamp entries
+        # (touch() stamps without it — see there). Reentrant:
         # ensure_cached holds it across the build (also the
         # double-build guard) and calls _evict_until inside.
         self._lock = threading.RLock()
@@ -295,13 +295,13 @@ class CacheManager:
         estimate). The measured size feeds future evict-to-admit math.
 
         Attribution is by the storage-info NAME ("In-memory table
-        <view>"), not by an id delta alone: with the out-of-band
-        observer enabled, ensure_cached runs concurrently with the
-        batch loop's MRShare merge persists, and an id-delta would
-        attribute the merge's (possibly spilled) RDD to this build —
-        failing the fit check and permanently blacklisting an innocent
-        source, or inflating mem_bytes and corrupting later
-        evict-to-admit math. The delta stays as the fallback when no
+        <view>"), not by an id delta alone: other code on the same
+        SparkContext can persist an RDD while a build runs — a
+        client's ``CACHE TABLE`` that HiveServer2 runs for a forwarded
+        JDBC frame, an operator pin made by a co-hosted driver — and
+        an id delta would attribute such an RDD to this build, failing the fit check and permanently blacklisting
+        an innocent source, or inflating mem_bytes and corrupting
+        later evict-to-admit math. The delta stays as the fallback when no
         name matches (a future Spark renaming the pattern degrades to
         the old behavior, never to always-fit)."""
         mem_total = 0

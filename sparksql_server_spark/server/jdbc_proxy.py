@@ -3,11 +3,12 @@
 The reference ran EVERY client through the batching window
 (WorksharingExecutor.scala:65-98): statements queue, the optimizer sees
 the whole batch, rewrites fire BEFORE anything executes. HiveServer2
-cannot do that — it executes each statement eagerly on arrival — so
-round 5 bridged only the after-the-fact half (server/observer.py watches
-completed executions and primes the scan cache for the NEXT query).
-This proxy closes the remaining gap, pre-execution, with no client
-change beyond the port number:
+cannot do that — it executes each statement eagerly on arrival. This
+proxy is the JDBC door's one bridge into the window, pre-execution,
+with no client change beyond the port number. A client that connects
+to HiveServer2 directly runs unshared: its statements are never
+batched, counted for cache admission or merged (they still read any
+relation the gateway has cached):
 
     beeline/Tableau ──> JdbcLineProxy ──> HiveServer2 (same JVM/driver)
                             │ hold ExecuteStatement

@@ -29,8 +29,11 @@ class QueryJob:
 
     job_id: int
     sql: str
-    # piggybacked metadata, the DAGMetadata descriptor analogue:
-    # recognised keys: "output" (parquet sink path), "pool" (FAIR pool)
+    # the client's piggybacked metadata, the DAGMetadata descriptor
+    # analogue: "output" (sink path), "output_mode", "output_format",
+    # "partition_by", "pool" (FAIR pool), "priority", "deadline_ms".
+    # The executor's own state lives in the typed fields below, so no
+    # client key can steer it
     props: dict[str, Any] = field(default_factory=dict)
     status: JobStatus = JobStatus.QUEUED
     # statement verdict (scheduler.classify): False for commands. The
@@ -50,6 +53,18 @@ class QueryJob:
     # monotonic completion instant (set by the executor) — deadline
     # accounting and test ordering assertions read it
     finished_at: float | None = None
+    # a window-priming member (WorkSharingServer.prime): analyzed and
+    # counted for sharing, never executed here
+    prime_only: bool = False
+    # set by BatchExecutor: this member's rows over its merge's
+    # persisted relation (a DataFrame), while the merge is live
+    demux: Any = field(default=None, repr=False)
+    # set by BatchExecutor.cancel on a running job
+    cancel_requested: bool = False
+    # inline rows stopped at the scheduler's MAX_INLINE_ROWS
+    truncated: bool = False
+    # why mrshare.plan_merges did not merge this job, if it did not
+    merge_declined: str | None = None
     fingerprints: frozenset[str] = frozenset()
     # per scanned source: how many columns this job's plan reads
     # (pruned ReadSchema width — cache-admission cost model input)
@@ -110,7 +125,7 @@ class QueryJob:
             out["n_rows"] = self.n_rows
         if self.rows is not None:
             out["rows"] = self.rows
-        if self.props.get("truncated"):
+        if self.truncated:
             # inline results stop at the scheduler's MAX_INLINE_ROWS —
             # without this flag a clipped result set is
             # indistinguishable from a genuine one of the same size

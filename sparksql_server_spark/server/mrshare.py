@@ -36,7 +36,7 @@ concurrent unmerged runs and was retired.
 
 :func:`read_plan` declines with a short reason (``subquery``,
 ``nondeterministic``, ``window``, ``no aggregate``, …) and
-:func:`plan_merges` records it on the job as ``props["merge_declined"]``
+:func:`plan_merges` records it on the job as ``QueryJob.merge_declined``
 (``relation differs`` for a member with no partner). A declined merge
 costs nothing: the member runs unchanged.
 
@@ -374,7 +374,7 @@ def _place(job: QueryJob, groups: dict) -> None:
     resolved at batch time, or record why it declines."""
     shape = "not analyzed" if job.plan is None else read_plan(job.plan)
     if isinstance(shape, str):
-        job.props["merge_declined"] = shape
+        job.merge_declined = shape
         return
     member = (job, shape)
     bucket = groups.setdefault(
@@ -401,13 +401,13 @@ def plan_merges(
     ``SplitMRShareJobs`` analog) decides WHICH consecutive cost-sorted
     members of such a group merge together. ``max_distinct_aggs`` bounds
     DISTINCT aggregates per merged plan — each adds its own Expand in
-    Spark. A job that does not merge gets ``props["merge_declined"]``."""
+    Spark. A job that does not merge gets a ``merge_declined`` reason."""
     groups: dict[tuple, list[list[tuple[QueryJob, AggShape]]]] = {}
     for job in jobs:
         try:
             _place(job, groups)
         except Exception as exc:  # a plan the reader cannot walk never merges
-            job.props["merge_declined"] = f"unreadable plan ({type(exc).__name__})"
+            job.merge_declined = f"unreadable plan ({type(exc).__name__})"
 
     plans: list[MergePlan] = []
     for members in sorted(
@@ -428,5 +428,5 @@ def plan_merges(
                     MergePlan(jobs=[j for j, _ in group], session=group[0][0].session)
                 )
             else:
-                group[0][0].props["merge_declined"] = "relation differs"
+                group[0][0].merge_declined = "relation differs"
     return plans

@@ -84,13 +84,15 @@ def command_write_set(plan: Any, session: Any) -> Optional[frozenset[str]]:
     field when that field names a relation, aliased or not
     (:func:`_name_node`) — INSERT, UPDATE, DELETE, MERGE, DROP, ALTER,
     TRUNCATE, CREATE, REFRESH, ANALYZE, CACHE/UNCACHE — or a CREATE
-    VIEW / CACHE TABLE AS name. ``EXECUTE IMMEDIATE '<statement>'``
-    writes what its literal statement writes, parsed by ``session``'s
-    parser; ``INSERT OVERWRITE [LOCAL] DIRECTORY`` writes its path, in
-    fingerprint form. Everything else is None: SET, USE, ADD JAR,
-    scripts, namespaces, an ``EXECUTE IMMEDIATE`` whose statement is
-    not a literal, and an IDENTIFIER clause over a variable or
-    parameter.
+    VIEW / CACHE TABLE AS name. ``EXECUTE IMMEDIATE <statement>``
+    writes what its statement writes when the parse already resolves
+    it to a constant string (a literal, or ``'...' || '...'``),
+    evaluated and parsed by ``session``'s parser; ``INSERT OVERWRITE
+    [LOCAL] DIRECTORY`` writes its path, in fingerprint form.
+    Everything else is None: SET, USE, ADD JAR, scripts, namespaces, an
+    ``EXECUTE IMMEDIATE`` of a variable or of an expression the parse
+    leaves unresolved (a function call such as ``concat(...)``), and an
+    IDENTIFIER clause over a variable or parameter.
 
     For a table, both the unqualified basename (cached entries key
     tables that way) and the full qualified name (so the server can
@@ -99,11 +101,13 @@ def command_write_set(plan: Any, session: Any) -> Optional[frozenset[str]]:
     node, name = statement(plan)
     if name == "UnresolvedExecuteImmediate":
         text = node.productElement(0)
-        if kind(text) != "Literal" or text.dataType().typeName() != "string":
-            return None
         parser = session._jsparkSession.sessionState().sqlParser()
         try:
-            inner = parser.parsePlan(text.value().toString())
+            if not (text.resolved() and text.foldable()) or (
+                text.dataType().typeName() != "string"
+            ):
+                return None
+            inner = parser.parsePlan(text.eval(None).toString())
         except Exception:  # Spark's own error surfaces when it runs
             return None
         return command_write_set(inner, session)

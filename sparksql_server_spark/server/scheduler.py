@@ -234,7 +234,7 @@ class BatchExecutor:
                         j
                         for j in bag.jobs
                         if j.status is JobStatus.QUEUED
-                        and not j.props.get("prime_only")
+                        and not j.prime_only
                     ]
                     # price the bag before reading any plan: a merge
                     # shares one of the bag's shared sources, so a bag
@@ -370,7 +370,7 @@ class BatchExecutor:
             df.count()  # materialize: the one shared scan+aggregate
             mp.df = df
             for job, rows in zip(mp.jobs, demux):
-                job.props["demux"] = rows
+                job.demux = rows
             return True
         except Exception:
             if df is not None:
@@ -383,7 +383,7 @@ class BatchExecutor:
     def _leave_merge(self, job: QueryJob) -> None:
         """``job`` has finished: drop it from its merge, if any. The
         last member to leave releases the merged relation."""
-        job.props.pop("demux", None)
+        job.demux = None
         with self._flight_lock:
             mp = self._merge_of.pop(id(job), None)
             last = mp is not None and not any(
@@ -394,7 +394,7 @@ class BatchExecutor:
 
     def _release_merge(self, mp: MergePlan) -> None:
         for job in mp.jobs:
-            job.props.pop("demux", None)
+            job.demux = None
         if mp.df is not None:
             try:
                 mp.df.unpersist()
@@ -437,8 +437,7 @@ class BatchExecutor:
         reads from ``source`` (1.0 for fingerprints set without a scan
         walk). None when the table's width is unknown — ``view`` no longer
         resolves (dropped or replaced since registration) — and unknown
-        declines, as in ``ScanObserver._table_width``: caching it would
-        fail the whole batch."""
+        declines: caching it would fail the whole batch."""
         try:
             total = len(self.spark.table(view).columns)
         except Exception:
@@ -467,7 +466,7 @@ class BatchExecutor:
                 job.done_event.set()
                 return True
         if job.status is JobStatus.RUNNING:
-            job.props["cancel_requested"] = True
+            job.cancel_requested = True
             group = f"{self._group_ns}-job{job.job_id}"
             sc = self.spark.sparkContext
             # ...AndFutureJobs (SPARK-44194) fails jobs submitted after
@@ -504,7 +503,7 @@ class BatchExecutor:
 
     def _execute(self, job: QueryJob, df) -> None:
         """Run ``df`` as ``job``'s result: a sink write or inline rows."""
-        if job.props.get("cancel_requested"):  # cancelled during planning
+        if job.cancel_requested:  # cancelled during planning
             raise RuntimeError("cancelled")
         output = job.props.get("output")
         if output:
@@ -526,7 +525,7 @@ class BatchExecutor:
             job.rows = [tuple(r) for r in rows]
             job.n_rows = len(rows)
             if truncated:
-                job.props["truncated"] = True
+                job.truncated = True
 
     def _run_job(self, job: QueryJob, pool_name: str) -> None:
         """Execute one job in the calling thread, inside a FAIR pool."""
@@ -556,7 +555,7 @@ class BatchExecutor:
         )
         start = time.monotonic()
         try:
-            if job.props.get("prime_only"):
+            if job.prime_only:
                 # window-priming member (server/jdbc_proxy.py): its
                 # analysis fed detection and its presence fed cache
                 # admission; the one real execution happens in the
@@ -568,14 +567,14 @@ class BatchExecutor:
             # demux = this member's rows over the persisted merged
             # aggregate (set by _materialize_merge); absent on the
             # normal path
-            demux = job.props.get("demux")
+            demux = job.demux
             if demux is None:
                 self._execute(job, sess.sql(job.sql))
             else:
                 try:
                     self._execute(job, demux)
                 except Exception:
-                    if job.props.get("cancel_requested"):
+                    if job.cancel_requested:
                         raise
                     # a failing demux must not fail the member job: fall
                     # back to its original SQL on the normal path

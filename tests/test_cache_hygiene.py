@@ -16,6 +16,8 @@ from sparksql_server_spark.operators import QUERIES
 from sparksql_server_spark.operators.scratch import (
     CacheScope,
     persistent_rdd_ids,
+    pin_view,
+    unpersist_ids,
 )
 
 from conftest import SF_DIR
@@ -63,6 +65,29 @@ def test_cache_scope_releases_only_its_own(spark):
         assert ids_now  # outside's RDD still registered
     finally:
         outside.unpersist()
+
+
+def test_finish_pin_keeps_pins_made_inside_its_scope(spark):
+    """finish_pin releases the scope's own caches, not a relation that
+    pin_view registered while the scope was open."""
+    scope = CacheScope(spark)
+    inner = pin_view(spark, spark.range(30), "scope_inner_pin")
+    pins = {int(inner._jdf.queryExecution().analyzed().rdd().id())}
+    before_build = persistent_rdd_ids(spark)
+    build = spark.range(40).cache()
+    build.count()
+    build_ids = persistent_rdd_ids(spark) - before_build
+    try:
+        out = scope.finish_pin(build.selectExpr("id * 3 AS x"), "scope_outer_pin")
+        pins.add(int(out._jdf.queryExecution().analyzed().rdd().id()))
+        assert out.count() == 40
+        live = persistent_rdd_ids(spark)
+        assert pins <= live
+        assert build_ids and not build_ids & live
+    finally:
+        unpersist_ids(spark, pins)
+        spark.catalog.dropTempView("scope_inner_pin")
+        spark.catalog.dropTempView("scope_outer_pin")
 
 
 # operators that deliberately keep ONE pinned relation alive across

@@ -605,7 +605,7 @@ def test_unmergeable_shapes_run_normal_path(spark, executor):
         " FROM lineitem GROUP BY l_returnflag",  # window function — declined
     ]
     jobs, _ = _run_and_compare(spark, executor, sqls, {0, 1})
-    assert jobs[2].props["merge_declined"] == "window"
+    assert jobs[2].merge_declined == "window"
 
 
 def test_merged_sink_output(tmp_path, spark, executor):
@@ -739,7 +739,7 @@ def test_small_scans_not_merged_by_default(spark):
     assert all(not b.merges for b in bags)
     for job in jobs:
         # priced under the floor before any plan was read
-        assert job.status is JobStatus.DONE and "merge_declined" not in job.props
+        assert job.status is JobStatus.DONE and job.merge_declined is None
 
 
 def test_disabled_flag_runs_unmerged(spark):
@@ -2359,7 +2359,7 @@ def test_plan_reader_decline_reasons(spark):
         ],
     )
     assert plan_merges(jobs) == []
-    assert [j.props["merge_declined"] for j in jobs] == ["relation differs"] * 2
+    assert [j.merge_declined for j in jobs] == ["relation differs"] * 2
 
 
 def test_under_floor_bag_reads_no_plan(spark, monkeypatch):

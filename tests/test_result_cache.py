@@ -204,6 +204,10 @@ def test_oversized_result_not_pinned():
         ("EXECUTE IMMEDIATE 'INSERT INTO t VALUES (1)'", {"t"}),
         ("EXECUTE IMMEDIATE 'INSERT INTO db.t VALUES (?)' USING 1", {"t", "db.t"}),
         ("EXECUTE IMMEDIATE stmt_var", None),
+        # a statement the parse folds to a constant string is evaluated;
+        # a function call stays unresolved until analysis
+        ("EXECUTE IMMEDIATE 'INSERT INTO ' || 't VALUES (1)'", {"t"}),
+        ("EXECUTE IMMEDIATE concat('INSERT INTO ', 't VALUES (1)')", None),
         # a directory write writes its path, in fingerprint form
         ("INSERT OVERWRITE DIRECTORY '/data/t' SELECT 1", {"/data/t"}),
         ("INSERT OVERWRITE LOCAL DIRECTORY '/d' SELECT 1", {"/d"}),
@@ -502,16 +506,17 @@ def test_insert_overwrite_directory_runs_once_and_flushes(server, spark, tmp_pat
         return ex.apply(ex.size() - 1).executionId() if ex.size() else -1
 
     def writes_since(low):
-        """Executions after ``low`` that wrote files (collecting a
-        command's result re-prints its plan under a CommandResult)."""
+        """Executions after ``low`` whose plan graph runs a file write
+        (collecting a command's result adds a CommandResult leaf only)."""
         ex, n = store.executionsList(), 0
         for k in range(ex.size() - 1, -1, -1):
             e = ex.apply(k)
             if e.executionId() <= low:
                 break
-            plan = e.physicalPlanDescription()
-            n += "InsertIntoHadoopFsRelationCommand" in plan and (
-                "CommandResult" not in plan
+            nodes = store.planGraph(e.executionId()).allNodes()
+            n += any(
+                nodes.apply(i).name() == "Execute InsertIntoHadoopFsRelationCommand"
+                for i in range(nodes.size())
             )
         return n
 
@@ -783,12 +788,13 @@ def test_jdbc_command_taint_blocks_caching_in_the_window(spark):
         "UPDATE region r SET r_comment = ''",
         "DELETE FROM IDENTIFIER('region') AS r WHERE 1=1",
         "EXECUTE IMMEDIATE 'DELETE FROM region WHERE 1=1'",
+        "EXECUTE IMMEDIATE 'DELETE FROM ' || 'region WHERE 1=1'",
     ],
 )
 def test_jdbc_aliased_write_taints_its_target(spark, cmd):
     """A JDBC write whose target carries an alias or an IDENTIFIER
-    clause, or sits inside an EXECUTE IMMEDIATE literal, still names
-    that target, so prime() taints it: a query over
+    clause, or sits inside a constant EXECUTE IMMEDIATE statement,
+    still names that target, so prime() taints it: a query over
     the written table is not cached while the command may still be
     running on HiveServer2, and an unrelated table caches normally."""
     srv = WorkSharingServer(

@@ -22,6 +22,7 @@ from sparksql_server_spark.server import (
 from sparksql_server_spark.server.scheduler import classify
 from sparksql_server_spark.server.server import source_view_map
 from sparksql_server_spark.catalog import register_tables
+from sparksql_server_spark.plans.analysis import scan_nodes
 from tests.conftest import SF_DIR, analyzed_plan
 
 
@@ -337,29 +338,21 @@ class TestServerTCP:
     def test_uncached_query_is_planned_once(self, server, monkeypatch):
         """An uncached gateway query is parsed once (classify) and
         analyzed once, at intake; its one ``SparkSession.sql`` call is
-        its execution, and no plan text is parsed on its way."""
+        its execution."""
         from pyspark.sql import SparkSession
 
-        from sparksql_server_spark.plans import analysis
-
-        sqls, texts = [], []
-        sql, parse_scans = SparkSession.sql, analysis.parse_scans
+        sqls = []
+        sql = SparkSession.sql
 
         def counted_sql(self, query, *a, **kw):
             sqls.append(query)
             return sql(self, query, *a, **kw)
 
-        def counted_parse(text):
-            texts.append(text)
-            return parse_scans(text)
-
         monkeypatch.setattr(SparkSession, "sql", counted_sql)
-        monkeypatch.setattr(analysis, "parse_scans", counted_parse)
         q = "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey"
         reply = client_request(server.address, {"sql": q})
         assert reply["status"] == "done" and "cached" not in reply, reply
         assert sqls == [q]
-        assert texts == []
 
     def test_missing_sql(self, server):
         reply = client_request(server.address, {"wat": 1})
@@ -380,6 +373,24 @@ class TestServerTCP:
                 return
             time.sleep(0.1)
         raise AssertionError("job never finished")
+
+
+def test_scan_nodes_live_plan_with_scan_literal(spark):
+    register_tables(spark, SF_DIR, ("supplier",))
+    df = spark.sql(
+        "SELECT s_name, s_acctbal FROM supplier WHERE s_name = 'Scan x'"
+    )
+    assert scan_nodes(df) == [(SF_DIR + "/supplier.parquet", 2, "parquet")]
+
+
+def test_scan_nodes_lists_every_root(spark):
+    """A read of several paths is one scan over several roots, whose
+    printed plan shows only the first ("... 1 entries"): the plan walk
+    lists each root with the scan's width and format."""
+    a, b = SF_DIR + "/region.parquet", SF_DIR + "/nation.parquet"
+    df = spark.read.parquet(a, b)
+    width = len(df.columns)
+    assert sorted(scan_nodes(df)) == [(b, width, "parquet"), (a, width, "parquet")]
 
 
 class TestGatewayHardening:
@@ -479,6 +490,22 @@ class TestGatewayHardening:
         ok = client_request(server.address, {"sql": "SELECT 2 AS y"})
         assert ok["status"] == "done" and ok["rows"] == [[2]]
 
+    @pytest.mark.parametrize(
+        "props", [{"prime_only": True}, {"demux": "x"}, {"cancel_requested": True}]
+    )
+    def test_client_props_cannot_steer_the_executor(self, server, props):
+        """The executor keeps its own job state in typed fields, not in
+        the client's props: a client naming one of them still gets its
+        rows, and no fallback is counted."""
+        before = client_request(server.address, {"server_stats": True})["stats"]
+        reply = client_request(
+            server.address,
+            {"sql": "SELECT count(*) AS n FROM nation", "props": props},
+        )
+        assert reply["status"] == "done" and reply["rows"] == [[25]], reply
+        after = client_request(server.address, {"server_stats": True})["stats"]
+        assert after["mrshare_demux_fallbacks"] == before["mrshare_demux_fallbacks"]
+
     def test_truncated_flag_on_wire(self):
         """A clipped inline result says so — without the flag a
         MAX_INLINE_ROWS result is indistinguishable from a genuine one
@@ -486,7 +513,7 @@ class TestGatewayHardening:
         job = QueryJob(job_id=1, sql="SELECT 1")
         job.rows, job.n_rows, job.columns = [(1,)], 1, ["x"]
         assert "truncated" not in job.result()
-        job.props["truncated"] = True
+        job.truncated = True
         assert job.result()["truncated"] is True
 
 
@@ -2033,7 +2060,7 @@ class TestJdbcLineProxy:
             # client's engine owns the one real execution)
             jobs = list(srv._jobs.values())
             assert len(jobs) == 2
-            assert all(j.props.get("prime_only") for j in jobs)
+            assert all(j.prime_only for j in jobs)
             assert all(j.status is JobStatus.DONE for j in jobs)
             assert all(j.rows is None for j in jobs)
         finally:

@@ -84,31 +84,8 @@ ex3 = beeline("EXPLAIN SELECT count(*) FROM lineitem")
 lines = [ln for ln in r.stdout.splitlines()
          if ln and "\t" in ln and not ln.startswith("0: jdbc")]
 
-# --- observer bridge (round 5): JDBC queries never enter the batcher,
-# but the ScanObserver watches the shared status store and primes the
-# cache after repeated scans — a LATER JDBC connection then plans the
-# in-memory scan with no client change
-import time
-from sparksql_server_spark.server.cache import CacheManager
-from sparksql_server_spark.server.observer import ScanObserver
-cm = CacheManager(spark, budget_bytes=1 << 30, min_bytes=0,
-                  benefit_factor=0.0, columnar_benefit_factor=0.0)
-obs = ScanObserver(spark, cm,
-                   {"/root/testdata/sf0.001/orders.parquet": "orders"},
-                   min_repeats=2)
-obs.poll_once(); obs._recent.clear()
-b1 = beeline("SELECT count(*) FROM orders WHERE o_totalprice > 1000")
-b2 = beeline("SELECT o_orderstatus, count(*) FROM orders GROUP BY o_orderstatus")
-deadline = time.monotonic() + 30
-while time.monotonic() < deadline and not spark.catalog.isCached("orders"):
-    obs.poll_once()
-    time.sleep(0.2)
-bridge_cached = spark.catalog.isCached("orders")
-ex_orders = beeline("EXPLAIN SELECT count(*) FROM orders")
 print(f"RESULT:rc={r.returncode};rows={len(lines)};cache={inmem(ex1)};"
-      f"late_cache={inmem(ex3)};ex_rc={ex1.returncode};ex3_rc={ex3.returncode};"
-      f"bridge={bridge_cached};bridge_plan={inmem(ex_orders)};"
-      f"b_rc={b1.returncode}{b2.returncode}")
+      f"late_cache={inmem(ex3)};ex_rc={ex1.returncode};ex3_rc={ex3.returncode}")
 
 # --- JDBC-line proxy (round 6, VERDICT r5 #3): statements reach the
 # WINDOW before execution. Two beeline clients connect CONCURRENTLY
@@ -116,7 +93,7 @@ print(f"RESULT:rc={r.returncode};rows={len(lines)};cache={inmem(ex1)};"
 # batch, the shared `part` scan is detected + cached, then HiveServer2
 # executes each against the warm cache. Reference parity: all clients
 # through the window (WorksharingExecutor.scala:65-98).
-import threading
+import threading, time
 from sparksql_server_spark.server import WorkSharingServer
 from sparksql_server_spark.server.cache import CacheManager as _CM
 from sparksql_server_spark.server.jdbc_proxy import JdbcLineProxy
@@ -344,13 +321,6 @@ def test_thrift_jdbc_round_trip(tmp_path):
     # after two earlier ones closed, still plans the in-memory scan
     # (shared-catalog tables; temp views lost this — VERDICT r3 gap #5)
     assert "late_cache=True" in result, result
-    # observer bridge: two REAL JDBC queries over orders (no gateway
-    # involvement) primed the shared cache, and a later JDBC
-    # connection's EXPLAIN shows the in-memory scan (VERDICT r4
-    # missing #2 — the caching half of work sharing now reaches the
-    # thrift door)
-    assert "bridge=True" in result, result
-    assert "bridge_plan=True" in result, result
     # JDBC-line proxy (VERDICT r5 #3): two REAL beeline clients routed
     # through the proxy — their statements were gated through the
     # window (SASL frames parsed, ExecuteStatement extracted), landed
