@@ -40,12 +40,18 @@ demotes the connection to gate+forward for its remaining lifetime.
 
 The proxy never judges SQL text itself. The gateway parses each
 statement once, with the requesting session's own parser, and the
-readers below (:func:`benign_command`, :func:`set_assignment`,
-:func:`temp_view`, :func:`dropped_view`) read the parsed Catalyst node;
-``answer()``'s reply tells the proxy what the statement was, including
-the (key, value) of a mirrored SET. Only the OpenSession overlay map,
-which is not SQL, is checked here, with the same SET validator
-(:func:`mirrorable_set`).
+readers below (:func:`benign_command`, :func:`temp_view`,
+:func:`dropped_view`) read the parsed Catalyst node; ``answer()``'s
+reply tells the proxy what the statement was. Only the OpenSession
+overlay map, which is not SQL, is checked here, against the same key
+allowlist (:func:`benign_open_conf`).
+
+A client's conf never reaches the gateway. A perf-conf ``SET`` on the
+allowlist (statement or overlay form) is benign: it is forwarded to
+HiveServer2, which applies it to that client's own session, and the
+connection stays substitution-clean. The gateway's sessions keep the
+server's own configuration, so no client can reshape the plans of
+another.
 
 Wire knowledge used (all public Apache Thrift / HiveServer2 spec):
 
@@ -78,7 +84,6 @@ demand evidence, never its own cache policy.
 
 from __future__ import annotations
 
-import re
 import socket
 import socketserver
 import struct
@@ -358,14 +363,14 @@ def benign_open_conf(conf: dict[str, str]) -> bool:
     what a shared-catalog query means: the default database selection,
     server-side thrift transport knobs (fetch sizing etc. — they
     shape RESPONSE BATCHING, which the substitution controls anyway,
-    never query semantics), and — round 10 — result-semantics-free
-    perf-conf assignments with type-valid values (the same
-    :func:`mirrorable_set` check the ``SET k=v`` statement path makes:
-    BI tools pass the SAME knobs through the JDBC URL's ``?hiveconf:``
-    overlay form, and demoting on the overlay while accepting the
-    statement was an arbitrary seam). Anything else — set:hivevar
-    substitutions, engine/exec confs, a non-default database — must
-    demote the connection to gate+forward."""
+    never query semantics), and result-semantics-free perf-conf keys
+    (:data:`_PERF_SET_KEYS`, the allowlist the ``SET k=v`` statement
+    path reads: BI tools pass the SAME knobs through the JDBC URL's
+    ``?hiveconf:`` overlay form). Only the key is read: HiveServer2
+    applies the value to the client's own session, never the gateway.
+    Anything else — set:hivevar substitutions, engine/exec confs, a
+    non-default database — must demote the connection to
+    gate+forward."""
     for k, v in conf.items():
         if k == "use:database":
             if v != "default":
@@ -373,127 +378,46 @@ def benign_open_conf(conf: dict[str, str]) -> bool:
         elif k.startswith(_HIVECONF + "hive.server2."):
             continue
         elif not k.startswith(_HIVECONF) or (
-            mirrorable_set(k[len(_HIVECONF) :], v) is None
+            k[len(_HIVECONF) :].strip().lower() not in _PERF_SET_KEYS
         ):
             return False
     return True
 
 
-def mirrorable_open_conf_sets(conf: Optional[dict]) -> list[tuple[str, str]]:
-    """The mirrorable ``(key, value)`` pairs of an OpenSession
-    overlay's perf-conf entries (empty when none). The proxy hands them
-    to the gateway through ``replay_sets``, so its plan shaping tracks
-    overlay-form clients exactly like statement-form ones."""
-    return [
-        pair
-        for k, v in (conf or {}).items()
-        if k.startswith(_HIVECONF)
-        and (pair := mirrorable_set(k[len(_HIVECONF) :], v)) is not None
-    ]
-
-
 # SET-assignment keys that shape WHERE/HOW a plan executes but provably
-# cannot change WHAT a query returns (round 9, VERDICT r8 ask #3): BI
-# tools emit performance-conf assignments at connect, and demoting on
-# them turned substitution off for exactly the clients it targets.
-# Parallelism, broadcast sizing, adaptive re-planning and scheduler
-# placement change partition counts and join strategies — never rows.
-# Keys NOT on this list (hivevar substitutions, ANSI/timezone/case
-# sensitivity, arbitrary k=v) still demote: unknown means unsafe.
-#
-# Round 10 (ADVICE r9): each key carries a VALUE validator. A value
-# that sets cleanly but fails at PLAN time (e.g. a bogus
-# spark.sql.adaptive.customCostEvaluatorClass, formerly admitted by a
-# bare adaptive.* prefix) would break every subsequent gateway query
-# for ALL clean JDBC clients — the mirror writes the SHARED root
-# session. So adaptive.* is now a closed set of known numeric/boolean/
-# byte-size knobs (class-name and free-string adaptive keys demote),
-# and every value must parse as the key's conf type BEFORE mirroring.
-_INT_VALUE = re.compile(r"^-?\d+$")
-_BYTES_VALUE = re.compile(r"^-?\d+\s*(b|k|kb|m|mb|g|gb|t|tb|p|pb)?$", re.I)
-_DURATION_VALUE = re.compile(r"^\d+\s*(us|ms|s|m|min|h|d)?$", re.I)
-_BOOL_VALUE = re.compile(r"^(true|false)$", re.I)
-_NUMBER_VALUE = re.compile(r"^-?\d+(\.\d+)?$")
-_POOL_VALUE = re.compile(r"^[\w.\-]+$")
-
-_MIRRORABLE_SET_KEYS: dict[str, "re.Pattern[str]"] = {
-    "spark.sql.shuffle.partitions": _INT_VALUE,
-    "spark.sql.autobroadcastjointhreshold": _BYTES_VALUE,
-    "spark.sql.broadcasttimeout": _DURATION_VALUE,
-    "spark.sql.files.maxpartitionbytes": _BYTES_VALUE,
-    "spark.sql.files.opencostinbytes": _BYTES_VALUE,
-    "spark.scheduler.pool": _POOL_VALUE,
-    # adaptive.* — known-safe plan-shaping knobs only (closed set)
-    "spark.sql.adaptive.enabled": _BOOL_VALUE,
-    "spark.sql.adaptive.coalescepartitions.enabled": _BOOL_VALUE,
-    "spark.sql.adaptive.coalescepartitions.parallelismfirst": _BOOL_VALUE,
-    "spark.sql.adaptive.coalescepartitions.minpartitionsize": _BYTES_VALUE,
-    "spark.sql.adaptive.coalescepartitions.initialpartitionnum": _INT_VALUE,
-    "spark.sql.adaptive.advisorypartitionsizeinbytes": _BYTES_VALUE,
-    "spark.sql.adaptive.autobroadcastjointhreshold": _BYTES_VALUE,
-    "spark.sql.adaptive.skewjoin.enabled": _BOOL_VALUE,
-    "spark.sql.adaptive.skewjoin.skewedpartitionfactor": _NUMBER_VALUE,
-    "spark.sql.adaptive.skewjoin.skewedpartitionthresholdinbytes": _BYTES_VALUE,
-    "spark.sql.adaptive.localshufflereader.enabled": _BOOL_VALUE,
-    "spark.sql.adaptive.forceoptimizeskewedjoin": _BOOL_VALUE,
-    "spark.sql.adaptive.optimizeskewsinrebalancepartitions.enabled": _BOOL_VALUE,
-    "spark.sql.adaptive.rebalancepartitionssmallpartitionfactor": _NUMBER_VALUE,
-    "spark.sql.adaptive.maxshuffledhashjoinlocalmapthreshold": _BYTES_VALUE,
-}
-
-
-def _strip_trailing_value_comment(value: str) -> Optional[str]:
-    """``value`` with one trailing ``-- ...`` / ``/* ... */`` segment
-    removed, or None when comment markers sit anywhere else (ADVICE
-    r9: 'SET spark.scheduler.pool=etl -- tweak' previously mirrored
-    the literal value 'etl -- tweak' into the shared session; numeric
-    confs rejected it at set time but STRING-typed keys stored the
-    garbage). Mirrorable values are all bare tokens — none legally
-    contains a comment marker — so anything that still has one after
-    the trim declines (and the statement demotes: unknown is unsafe)."""
-    v = value.strip()
-    dash = v.find("--")
-    if dash >= 0:
-        v = v[:dash].rstrip()
-    blk = v.find("/*")
-    if blk >= 0:
-        end = v.find("*/", blk + 2)
-        if end < 0 or v[end + 2 :].strip():
-            return None  # unclosed, or trailing text after the block
-        v = v[:blk].rstrip()
-    if "--" in v or "/*" in v or "*/" in v or not v:
-        return None
-    return v
-
-
-def mirrorable_set(key: str, value: str) -> Optional[tuple[str, str]]:
-    """``(key, value)`` when ``key`` is on the result-semantics-free
-    allowlist AND ``value`` parses as that key's conf type — the
-    gateway MIRRORS these into its session so its plan shaping tracks
-    the client's intent — else None. The one SET validator: the
-    statement path passes the pair Spark's parser read off a
-    ``SET k=v`` (:func:`set_assignment`), the OpenSession overlay path
-    the pair from the overlay map. hive.server2.* assignments are
-    benign (transport knobs) but meaningless to Spark, so they are not
-    mirrored. A value that fails its validator declines (→ the
-    connection demotes): the mirror target is the SHARED root session,
-    and a value that sets cleanly but explodes at plan time would break
-    every clean client (ADVICE r9)."""
-    # allowlist matching is case-insensitive, but the returned key is
-    # the client's ORIGINAL spelling: Spark conf keys are
-    # case-sensitive (verified: setting the lowercased
-    # autobroadcastjointhreshold leaves the real camelCase entry
-    # untouched), so mirroring a case-folded key would silently set a
-    # dead key — the mirror must apply exactly what HiveServer2 will
-    # apply on the forwarded statement
-    key = key.strip()
-    validator = _MIRRORABLE_SET_KEYS.get(key.lower())
-    if validator is None:
-        return None
-    cleaned = _strip_trailing_value_comment(value)
-    if cleaned is None or validator.match(cleaned) is None:
-        return None
-    return key, cleaned
+# cannot change WHAT a query returns: BI tools emit performance-conf
+# assignments at connect, and demoting on them turned substitution off
+# for exactly the clients it targets. Parallelism, broadcast sizing,
+# adaptive re-planning and scheduler placement change partition counts
+# and join strategies — never rows. Keys NOT on this list (hivevar
+# substitutions, ANSI/timezone/case sensitivity, class-name and
+# free-string adaptive keys, arbitrary k=v) still demote: unknown means
+# unsafe. Lowercased: the match is case-insensitive.
+_PERF_SET_KEYS = frozenset(
+    {
+        "spark.sql.shuffle.partitions",
+        "spark.sql.autobroadcastjointhreshold",
+        "spark.sql.broadcasttimeout",
+        "spark.sql.files.maxpartitionbytes",
+        "spark.sql.files.opencostinbytes",
+        "spark.scheduler.pool",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescepartitions.enabled",
+        "spark.sql.adaptive.coalescepartitions.parallelismfirst",
+        "spark.sql.adaptive.coalescepartitions.minpartitionsize",
+        "spark.sql.adaptive.coalescepartitions.initialpartitionnum",
+        "spark.sql.adaptive.advisorypartitionsizeinbytes",
+        "spark.sql.adaptive.autobroadcastjointhreshold",
+        "spark.sql.adaptive.skewjoin.enabled",
+        "spark.sql.adaptive.skewjoin.skewedpartitionfactor",
+        "spark.sql.adaptive.skewjoin.skewedpartitionthresholdinbytes",
+        "spark.sql.adaptive.localshufflereader.enabled",
+        "spark.sql.adaptive.forceoptimizeskewedjoin",
+        "spark.sql.adaptive.optimizeskewsinrebalancepartitions.enabled",
+        "spark.sql.adaptive.rebalancepartitionssmallpartitionfactor",
+        "spark.sql.adaptive.maxshuffledhashjoinlocalmapthreshold",
+    }
+)
 
 
 # -- statement readers over Spark's parse ----------------------------------
@@ -505,32 +429,15 @@ def mirrorable_set(key: str, value: str) -> Optional[tuple[str, str]]:
 # connection clean (HiveServer2 rejects the text too).
 
 
-def _set_kv(plan: Any) -> Optional[tuple[str, Optional[str]]]:
-    """A parsed ``SET``'s (key, value or None for a read); None for a
-    bare ``SET`` and for every other statement."""
-    if kind(plan) != "SetCommand" or plan.kv().isEmpty():
-        return None
-    kv = plan.kv().get()
-    value = kv._2()
-    return kv._1(), None if value.isEmpty() else value.get()
-
-
-def set_assignment(plan: Any) -> Optional[tuple[str, str]]:
-    """The mirrorable ``(key, value)`` of a parsed ``SET k=v``, else
-    None."""
-    kv = _set_kv(plan)
-    if kv is None or kv[1] is None:
-        return None
-    return mirrorable_set(*kv)
-
-
 def benign_command(plan: Any) -> bool:
     """True for a parsed session-housekeeping command that provably
     cannot change what a shared-catalog query means, so the proxy keeps
     the connection SUBSTITUTION-CLEAN across it (VERDICT r7 ask #1: BI
     tools open every connection with such housekeeping, and demoting on
     it turned substitution off for exactly the clients it targets).
-    The statement still forwards to HiveServer2 either way.
+    The statement still forwards to HiveServer2 either way, and the
+    gateway applies none of it: a benign SET changes only the client's
+    own HiveServer2 session.
 
     - ``USE default`` (``SetCatalogAndNamespace [default]``): the
       database the gateway already resolves against.
@@ -538,12 +445,12 @@ def benign_command(plan: Any) -> bool:
       value): conf READS.
     - ``SET hive.server2.*=...``: thrift transport/fetch knobs, which
       shape response batching, never rows.
-    - ``SET <k>=<v>`` passing :func:`mirrorable_set` (round 9, VERDICT
-      r8 ask #3): plan-shaping knobs the gateway also MIRRORS.
+    - ``SET <k>=<v>`` with ``k`` on :data:`_PERF_SET_KEYS`:
+      plan-shaping knobs. Only the key is read; the value is
+      HiveServer2's to accept or reject for the client's session.
     - bare ``RESET`` (``ResetCommand`` without a key): reachable while
       clean only when nothing non-benign was ever set, so what it
-      un-does was results-free anyway (the gateway does not mirror it:
-      its session confs are shared bootstrap state).
+      un-does was results-free anyway.
 
     Everything else (other SETs, hivevar substitutions, DDL/DML,
     ADD JAR) demotes, matching :func:`benign_open_conf`."""
@@ -556,12 +463,10 @@ def benign_command(plan: Any) -> bool:
             p.lower() for p in pylist(ns.multipartIdentifier())
         ] == ["default"]
     if node == "SetCommand":
-        kv = _set_kv(plan)
-        if kv is None or kv[1] is None:
-            return True
-        return kv[0].lower().startswith("hive.server2.") or (
-            mirrorable_set(*kv) is not None
-        )
+        if plan.kv().isEmpty() or plan.kv().get()._2().isEmpty():
+            return True  # bare SET, SET -v or SET <key>: a read
+        key = plan.kv().get()._1().strip().lower()
+        return key.startswith("hive.server2.") or key in _PERF_SET_KEYS
     return False
 
 
@@ -994,7 +899,6 @@ class _Conn:
         "wlock",
         "skip_gate_once",
         "session_id",
-        "pending_sets",
     )
 
     def __init__(self) -> None:
@@ -1009,14 +913,6 @@ class _Conn:
         # when the connection closes (mirroring HiveServer2 dropping
         # the client's temp views with its session)
         self.session_id: Optional[str] = None
-        # mirrorable SET (key, value) pairs seen while clean and
-        # session-less: a per-connection gateway session created LATER
-        # (first view mirror) starts from default conf, so these are re-announced
-        # to the server with the new session id the moment it exists —
-        # otherwise the private session silently dropped the client's
-        # earlier plan-shaping intent (round-10 review wave). Bounded:
-        # 64 entries, oldest dropped (perf-only state).
-        self.pending_sets: list[tuple[str, str]] = []
         # set when the NEXT forwarded statement must skip the prime
         # gate: answer() already ran it through a full window batch
         # before declining substitution (a second window wait buys
@@ -1033,13 +929,6 @@ class _Conn:
         # locally-synthesized responses
         self.wlock = threading.Lock()
 
-    def buffer_set(self, pair: tuple[str, str]) -> None:
-        """Remember a mirrorable SET pair for a per-connection session
-        created later by a view mirror (one bounded push, shared by the
-        overlay and statement entry paths)."""
-        self.pending_sets.append(pair)
-        del self.pending_sets[:-64]
-
 
 class JdbcLineProxy:
     """TCP pass-through in front of a HiveServer2 port that gates
@@ -1050,9 +939,11 @@ class JdbcLineProxy:
     does, the frame is forwarded anyway (sharing is best-effort; the
     client's query must not be).
 
-    ``answer`` (round 7, VERDICT r6 ask #7) enables MERGE substitution:
-    when set, a held ExecuteStatement whose SQL the gateway can fully
-    answer (``WorkSharingServer.answer_jdbc``) is NOT forwarded —
+    ``answer(sql, session_id)`` (round 7, VERDICT r6 ask #7) enables
+    MERGE substitution: when set, a held ExecuteStatement whose SQL the
+    gateway can fully answer (``WorkSharingServer.answer_jdbc``; the
+    session id is None until the connection mirrors a temp view) is
+    NOT forwarded —
     the proxy synthesizes the TExecuteStatementResp itself and serves
     the operation lifecycle (GetOperationStatus → FINISHED,
     GetResultSetMetadata → typed schema, FetchResults → one columnar
@@ -1064,9 +955,11 @@ class JdbcLineProxy:
     statement (SET/USE/DDL — anything mutating HiveServer2 session
     state the gateway cannot see) demotes the connection to gate+
     forward for its remaining lifetime. Exceptions: whitelisted benign
-    housekeeping and mirrorable perf-conf SETs (benign_command),
-    and — round 10 — deterministic CREATE TEMPORARY VIEW statements,
-    which the gateway mirrors into a per-connection session
+    housekeeping and allowlisted perf-conf SETs (benign_command),
+    which forward to HiveServer2 and change only the client's own
+    session there (the gateway never applies a client's conf), and
+    deterministic CREATE TEMPORARY VIEW statements, which the gateway
+    mirrors into a per-connection session
     (``res["session"]`` → ``conn.session_id``, released via
     ``release=`` on connection close) so the connection keeps
     substitution. Result columns ship in their
@@ -1082,9 +975,8 @@ class JdbcLineProxy:
         gate: Callable[[str], None],
         host: str = "127.0.0.1",
         port: int = 0,
-        answer: Optional[Callable[..., Optional[dict]]] = None,
+        answer: Optional[Callable[[str, Optional[str]], Optional[dict]]] = None,
         release: Optional[Callable[[str], None]] = None,
-        replay_sets: Optional[Callable[[Optional[str], list], None]] = None,
     ) -> None:
         self.upstream = upstream
         self.gate = gate
@@ -1094,16 +986,6 @@ class JdbcLineProxy:
         # with it (WorkSharingServer.release_jdbc_session). Only
         # connections that actually mirrored DDL carry a session id.
         self.release = release
-        # called with (session_id, SET (key, value) pairs)
-        # (WorkSharingServer.replay_jdbc_sets): once with None and an
-        # OpenSession overlay's mirrorable pairs, which mirror to the
-        # root session, and once with the new session id when a
-        # connection's first view mirror creates its gateway session —
-        # a SESSION-ONLY replay of the pairs it sent before: those were
-        # applied to root at SEND time, and re-writing root now would
-        # clobber newer writes from other clients with stale values
-        # (round-10 review wave #2)
-        self.replay_sets = replay_sets
         # counters are read-modify-write from concurrent handler/pump
         # threads; dict += is not atomic in CPython (ADVICE r6)
         self._stats_lock = threading.Lock()
@@ -1361,18 +1243,6 @@ class JdbcLineProxy:
             conn.clean = False
         if oproto is not None and oproto < 5:
             conn.clean = False
-        if conn.clean and oconf:
-            # overlay-form perf confs mirror exactly like statement-form
-            # SETs (round 10): to root now, and buffered for a
-            # per-connection session created later by a view mirror
-            pairs = mirrorable_open_conf_sets(oconf)
-            if pairs and self.replay_sets is not None:
-                try:
-                    self.replay_sets(None, pairs)
-                except Exception:
-                    pass  # perf-only; never break the pump
-            for pair in pairs:
-                conn.buffer_set(pair)
 
     def _apply_frame_fences(self, conn: _Conn, payload: bytes) -> None:
         """Walk every message in a SASL data frame and apply the
@@ -1428,14 +1298,8 @@ class JdbcLineProxy:
             try:
                 # once this connection carries a gateway session (it
                 # mirrored a temp view), every statement resolves
-                # against that session; the two-arg form is only used
-                # then, so single-arg answer callables (tests, bespoke
-                # deployments) keep working
-                res = (
-                    self.answer(stmt, conn.session_id)
-                    if conn.session_id is not None
-                    else self.answer(stmt)
-                )
+                # against that session; None until then
+                res = self.answer(stmt, conn.session_id)
                 if res is None:
                     return None  # pre-execution failure — gate + forward
                 if res.get("passthrough") == "command":
@@ -1453,39 +1317,17 @@ class JdbcLineProxy:
                     # forwards so HiveServer2's own session matches.
                     # No gate: a temp view has no shared-catalog
                     # effect to flush and no scan to share.
-                    fresh = conn.session_id is None
                     conn.session_id = res.get("session") or conn.session_id
-                    if fresh and conn.session_id is not None:
-                        # the session was just created: hand the SETs
-                        # this connection sent earlier to the
-                        # SESSION-ONLY replay channel (NOT answer(),
-                        # whose SET path writes the shared root — a
-                        # replayed old value would clobber newer root
-                        # writes from other clients)
-                        if conn.pending_sets and self.replay_sets is not None:
-                            try:
-                                self.replay_sets(
-                                    conn.session_id, list(conn.pending_sets)
-                                )
-                            except Exception:
-                                pass  # perf-only; never break the pump
-                        conn.pending_sets.clear()
                     conn.skip_gate_once = True
                     return None
                 if res.get("passthrough") == "benign":
                     # session housekeeping that provably cannot change
                     # query semantics (USE default, conf reads,
-                    # hive.server2.* transport knobs — see
-                    # benign_command): forward so HiveServer2's
-                    # session stays consistent, but do NOT demote, and
-                    # skip the gate — there is no catalog effect to
-                    # flush and no scan to share (VERDICT r7 ask #1)
-                    pair = res.get("set")
-                    if conn.session_id is None and pair:
-                        # a mirrored SET: remember it for a
-                        # per-connection session created later by a
-                        # view mirror (see _Conn.pending_sets)
-                        conn.buffer_set(tuple(pair))
+                    # hive.server2.* transport knobs, perf-conf SETs —
+                    # see benign_command): forward so HiveServer2
+                    # applies it to this client's session, but do NOT
+                    # demote, and skip the gate — there is no catalog
+                    # effect to flush and no scan to share
                     conn.skip_gate_once = True
                     return None
                 if res.get("fallback"):

@@ -66,8 +66,6 @@ from sparksql_server_spark.server.cache import CacheManager
 from sparksql_server_spark.server.jdbc_proxy import (
     benign_command,
     dropped_view,
-    mirrorable_set,
-    set_assignment,
     temp_view,
 )
 from sparksql_server_spark.server.model import QueryJob
@@ -155,14 +153,14 @@ class WorkSharingServer:
         # idle-timeout contract of every SQL server).
         self.max_sessions = max_sessions
         self.session_idle_timeout = session_idle_timeout
-        # prime(): delay before a JDBC command's second result-cache
-        # flush — sized past frame-forward + HiveServer2 execution
+        # prime(): horizon during which every put is refused after a
+        # JDBC command whose write set is unresolvable — sized past
+        # frame-forward + HiveServer2 execution
         self.jdbc_command_reflush_seconds = jdbc_command_reflush_seconds
         # prime(): horizon during which puts touching a JDBC command's
         # write set are refused — the command executes out of band and
-        # the gateway never observes its completion, so the re-flush
-        # timer alone reopens the stale-cache window for any command
-        # that outlives it; the taint closes it in the safe direction
+        # the gateway never observes its completion, so the horizon is
+        # sized generously past any real command
         self.jdbc_command_taint_seconds = jdbc_command_taint_seconds
         self._sessions: dict[str, tuple[SparkSession, float]] = {}
         self._session_lock = threading.Lock()
@@ -178,15 +176,15 @@ class WorkSharingServer:
         # on completion, so nothing stale survives the transition.
         self._dirty_sessions: set[str] = set()
         # per-JDBC-connection mirror replay log (round 10, VERDICT r9
-        # ask #3): the statements the gateway mirrored into a
-        # connection's session, in arrival order — ("sql", stmt) for
-        # temp-view DDL, ("set", key, value) for mirrorable SETs. If
-        # the session is ever idle-reaped and recreated, session_for
-        # REPLAYS the log so the fresh session's catalog still matches
-        # the client's HiveServer2 session: without the replay a temp
-        # view SHADOWING a base table would silently resolve to the
-        # base table and the gateway would answer wrong rows.
-        self._jdbc_replay: dict[str, list[tuple[str, ...]]] = {}
+        # ask #3): the temp views the gateway mirrored into a
+        # connection's session, in arrival order, as (lowercased view
+        # name, CREATE ... statement). If the session is ever
+        # idle-reaped and recreated, session_for REPLAYS the log so the
+        # fresh session's catalog still matches the client's
+        # HiveServer2 session: without the replay a temp view
+        # SHADOWING a base table would silently resolve to the base
+        # table and the gateway would answer wrong rows.
+        self._jdbc_replay: dict[str, list[tuple[str, str]]] = {}
         # True once a command ran on the ROOT session (temp views there
         # shadow shared tables for root's own queries)
         self._root_dirty = False
@@ -336,17 +334,14 @@ class WorkSharingServer:
         # catalog matches the client's HiveServer2 session (a mirrored
         # temp view shadowing a base table MUST shadow it here too, or
         # answered rows diverge)
-        for entry in replay:
+        for _name, stmt in replay:
             try:
-                if entry[0] == "sql":
-                    sess.sql(entry[1]).collect()
-                else:  # ("set", key, value)
-                    sess.conf.set(entry[1], entry[2])
+                sess.sql(stmt).collect()
             except Exception:
-                # a replay member failing (dropped base table, refused
-                # conf) leaves a catalog we cannot vouch for: the dirty
-                # mark below keys it privately and queries over the
-                # missing view fall back
+                # a replay member failing (dropped base table) leaves a
+                # catalog we cannot vouch for: the dirty mark below
+                # keys it privately and queries over the missing view
+                # fall back
                 pass
         with self._session_lock:
             hit = self._sessions.get(session_id)
@@ -371,34 +366,24 @@ class WorkSharingServer:
                     lru = min(self._sessions, key=lambda s: self._sessions[s][1])
                     del self._sessions[lru]
                     self.results.invalidate_session(lru)
-            # close the snapshot window (review wave): a _mirror_*
-            # write that landed between the snapshot above and this
-            # insertion would otherwise be lost until the next reap.
-            # SET entries re-apply wholesale (idempotent, one per key
-            # after the log's keyed dedup, conf.set is cheap); DDL
-            # applies its positional tail only (sql entries are
-            # append-ordered; the proxy serializes per connection, so
-            # a mid-build sql write is a reap-vs-DDL race at most)
+            # close the snapshot window (review wave): a mirror write
+            # that landed between the snapshot above and this insertion
+            # would otherwise be lost until the next reap. The log is
+            # append-ordered, so only its tail past the snapshot
+            # applies (the proxy serializes per connection, so a
+            # mid-build write is a reap-vs-DDL race at most)
             current = list(self._jdbc_replay.get(session_id) or ())
-            snap_sql = sum(1 for e in replay if e[0] == "sql")
-            cur_sql = [e for e in current if e[0] == "sql"]
-            for entry in cur_sql[snap_sql:]:
+            for _name, stmt in current[len(replay) :]:
                 try:
-                    sess.sql(entry[1]).collect()
+                    sess.sql(stmt).collect()
                 except Exception:
                     pass
-            for entry in current:
-                if entry[0] == "set":
-                    try:
-                        sess.conf.set(entry[1], entry[2])
-                    except Exception:
-                        pass
             self._sessions[session_id] = (sess, now)
             # a fresh session has a clean catalog: a reaped-and-
             # recreated id rejoins the shared result namespace —
             # unless it replayed mirrored DDL, which implies dirty
             self._dirty_sessions.discard(session_id)
-            if any(e[0] == "sql" for e in current):
+            if current:
                 self._dirty_sessions.add(session_id)
         return sess
 
@@ -451,133 +436,50 @@ class WorkSharingServer:
         may change the shared catalog that cached gateway results were
         derived from. The command only EXECUTES on HiveServer2 after
         this returns and the proxy forwards the frame, so a gateway
-        query could run and cache a pre-change result in that window —
-        the flush therefore runs twice: immediately (read-your-writes
-        for anything already cached) and again on a short timer sized
-        past frame-forward + HiveServer2 execution latency (ADVICE r6:
-        without the re-flush, a result cached inside the window
-        survives until TTL). The epoch bump at arrival additionally
-        discards every put from a query in flight across this call."""
+        query could run and cache a pre-change result in that window.
+        The epoch bump at arrival discards every put from a query in
+        flight across this call, and a taint refuses every later put
+        that could read the command's effect until a horizon past its
+        execution. Benign housekeeping, perf-conf SETs included, just
+        returns: HiveServer2 applies it to the client's own session
+        and the gateway applies none of it."""
         is_query, plan = classify(self.spark, sql)
         if not is_query:
             if benign_command(plan):
                 # whitelisted housekeeping (USE default, conf reads,
-                # hive.server2.* knobs — benign_command): no
-                # catalog effect, so no flush, no taint, no epoch bump.
-                # Without this, every BI connect's `USE default` cost a
-                # whole-cache invalidation (its write set is
-                # unresolvable → invalidate_all)
-                self._mirror_set(set_assignment(plan))
+                # hive.server2.* knobs, perf-conf SETs —
+                # benign_command): no catalog effect, so no flush, no
+                # taint, no epoch bump. Without this, every BI
+                # connect's `USE default` cost a whole-cache
+                # invalidation (its write set is unresolvable →
+                # invalidate_all)
                 return
             self.results.bump_generation()
             ws = self._resolve_write_set(plan, self.spark)
             self._flush_write_set(ws)
             # the command executes on HiveServer2 AFTER the proxy
             # forwards the frame, at a time the gateway never
-            # observes: the re-flush timer handles the common fast
-            # command, the write-set taint refuses puts that read the
-            # written tables until a horizon generously past any real
-            # command (a command outliving the timer otherwise
-            # re-opens the stale-cache window — review r7). Only
-            # RESOLVED write shapes taint: the long-running dangers
-            # (INSERT/MERGE ... SELECT) name their table, while ws=None
-            # is mostly SET/ADD JAR-class statements whose effects live
-            # in HiveServer2 session state the gateway's own executions
-            # never see — a 10-minute global put-freeze for those
-            # would cost far more than it protects. (A write to
-            # IDENTIFIER(<a variable or parameter>) and an EXECUTE
-            # IMMEDIATE of a variable or of a non-constant statement
-            # also read as None: the two flushes are all they get.)
-            if ws is not None:
-                self.results.taint_tables(ws, self.jdbc_command_taint_seconds)
-            t = threading.Timer(
-                self.jdbc_command_reflush_seconds, self._flush_write_set, (ws,)
+            # observes: the taint refuses puts that could read its
+            # effect until a horizon past its execution. A RESOLVED
+            # write set taints its tables generously past any real
+            # command: the long-running dangers (INSERT/MERGE ...
+            # SELECT) name their table. ws=None is mostly SET/ADD
+            # JAR-class statements whose effects live in HiveServer2
+            # session state the gateway's own executions never see —
+            # a 10-minute global put-freeze for those would cost far
+            # more than it protects, so they freeze every put for the
+            # short horizon only. (A write to IDENTIFIER(<a variable
+            # or parameter>) and an EXECUTE IMMEDIATE of a variable or
+            # of a non-constant statement also read as None.)
+            self.results.taint_tables(
+                ws,
+                self.jdbc_command_taint_seconds
+                if ws is not None
+                else self.jdbc_command_reflush_seconds,
             )
-            t.daemon = True
-            t.start()
             return
         job = self.submit(sql, is_query=True, prime_only=True)
         job.done_event.wait(timeout)
-
-    def _mirror_set(
-        self,
-        pair: tuple[str, str] | None,
-        session_id: str | None = None,
-        root: bool = True,
-    ) -> None:
-        """Apply an allowlisted performance-conf SET ``pair`` to the
-        gateway's root session (round 9, VERDICT r8 ask #3) so its
-        plan shaping tracks the client's intent. The root session is
-        SHARED across clean JDBC clients — deliberately: substitution
-        and cross-client merging only work there, and every mirrorable
-        key is results-free, so the worst another client sees is a
-        different partition count (last-writer-wins, like any shared
-        engine's perf knobs). Values are TYPE-VALIDATED before this is
-        reached (jdbc_proxy.mirrorable_set, ADVICE r9): a value that sets
-        cleanly but fails at plan time (e.g. a bogus adaptive
-        cost-evaluator class) would break every subsequent gateway
-        query for all clean clients, so unvalidatable values decline
-        upstream and demote. The try/except is belt-and-braces for
-        set-time rejection of a validated-but-still-refused value —
-        the forward still carries it to HiveServer2, whose own error
-        the client sees; the gateway's results stay correct either
-        way.
-
-        ``session_id`` (round 10, VERDICT r9 ask #3): a connection that
-        mirrored temp-view DDL answers view queries against its OWN
-        gateway session, whose SQLConf is independent of root's — the
-        SET applies to ROOT (where the connection's base-table queries
-        still run, last-writer-wins as for any shared engine's perf
-        knobs) AND to the live per-connection session, and joins the
-        replay log so a reaped-and-recreated session keeps the client's
-        plan shaping. SETs sent BEFORE the first view mirror are
-        re-announced by the proxy once the session exists
-        (conn.pending_sets), so the private session never silently
-        drops the client's earlier intent (round-10 review wave); that
-        replay passes ``root=False``, because root received those SETs
-        at send time."""
-        if pair is None:
-            return
-        if root:
-            try:
-                self.spark.conf.set(*pair)
-            except Exception:  # noqa: BLE001 — bad value: gateway keeps
-                # its current conf; results are unaffected by definition
-                return
-        if session_id is not None:
-            live = self._log_jdbc_set(session_id, *pair)
-            if live is not None:
-                try:
-                    live.conf.set(*pair)
-                except Exception:  # noqa: BLE001 — same contract as root
-                    pass
-
-    def _log_jdbc_set(self, session_id: str, key: str, value: str):
-        """Record a mirrored SET in the session's replay log — LAST
-        VALUE PER KEY (review wave: per-statement appends made the log
-        unbounded for a BI connection toggling one knob per dashboard
-        query, and a reap-recreate replayed every stale value) — and
-        return the live session if one exists."""
-        with self._session_lock:
-            log = self._jdbc_replay.setdefault(session_id, [])
-            log[:] = [e for e in log if not (e[0] == "set" and e[1] == key)]
-            log.append(("set", key, value))
-            live = self._sessions.get(session_id)
-        return live[0] if live is not None else None
-
-    def replay_jdbc_sets(self, session_id: str | None, pairs: list) -> None:
-        """Mirror SET (key, value) pairs the proxy read off the wire
-        (its ``replay_sets=`` channel). ``session_id`` None: an
-        OpenSession overlay's pairs, mirrored to root like a
-        statement-form SET. A session id: the SETs a connection sent
-        BEFORE its first view mirror, replayed into that new session
-        ONLY — they were applied to root at SEND time, and re-writing
-        root now would clobber newer writes from other clients with
-        stale values (round-10 review wave). Pairs re-validate here —
-        the channel is as exposed as answer()."""
-        for key, value in pairs:
-            pair = mirrorable_set(str(key), str(value))
-            self._mirror_set(pair, session_id, root=session_id is None)
 
     def _mirror_drop_view(
         self, name: str, session_id: str
@@ -602,7 +504,7 @@ class WorkSharingServer:
         low = name.lower()
         with self._session_lock:
             entries = self._jdbc_replay.get(session_id) or []
-            if not any(e[0] == "sql" and e[2] == low for e in entries):
+            if not any(view == low for view, _ in entries):
                 return None
         sess = self.session_for(session_id)
         try:
@@ -615,12 +517,10 @@ class WorkSharingServer:
             return {"passthrough": "command"}
         with self._session_lock:
             kept = [
-                e
-                for e in self._jdbc_replay.get(session_id, [])
-                if not (e[0] == "sql" and e[2] == low)
+                e for e in self._jdbc_replay.get(session_id, []) if e[0] != low
             ]
             self._jdbc_replay[session_id] = kept
-            if not any(e[0] == "sql" for e in kept):
+            if not kept:
                 self._dirty_sessions.discard(session_id)
         self.results.invalidate_session(session_id)
         return {"passthrough": "mirrored", "session": session_id}
@@ -635,8 +535,7 @@ class WorkSharingServer:
         SHADOWS a base table, so misses must be impossible, false hits
         merely forgo a merge."""
         with self._session_lock:
-            entries = self._jdbc_replay.get(session_id) or ()
-            names = [e[2] for e in entries if e[0] == "sql"]
+            names = [view for view, _ in self._jdbc_replay.get(session_id) or ()]
         low = sql.lower()
         return any(n in low for n in names)
 
@@ -664,6 +563,10 @@ class WorkSharingServer:
         inline result; {"passthrough": "command"} for commands (the
         proxy demotes the connection and forwards — commands mutate
         HiveServer2 session state the gateway cannot see);
+        {"passthrough": "benign"} for session housekeeping, allowlisted
+        perf-conf SETs included (the proxy forwards it and the
+        connection stays clean; the gateway applies no client conf, so
+        a SET changes only the client's own HiveServer2 session);
         {"fallback": True} when the statement executed through the
         window but the result can't be substituted faithfully (error,
         sink job, truncation past the inline cap) — the proxy then
@@ -750,21 +653,19 @@ class WorkSharingServer:
         self, sql: str, plan: Any, session: SparkSession, session_id: str | None
     ) -> dict[str, Any]:
         """answer_jdbc's reply to a command, read from its parsed
-        ``plan``: benign (a mirrored SET adds its pair under "set"),
-        mirrored (temp-view create or drop), or a demoting command."""
+        ``plan``: benign, mirrored (temp-view create or drop), or a
+        demoting command."""
         if benign_command(plan):
             # session housekeeping with provably no semantic effect
             # (USE default, conf reads, hive.server2.* transport knobs,
             # allowlisted perf-conf SETs): the proxy forwards it but
             # KEEPS substitution enabled — BI tools emit these at
             # connect, and demoting on them turned the merge win off
-            # for exactly the clients it targets (VERDICT r7 ask #1,
-            # widened to SET assignments by r8 ask #3)
-            pair = set_assignment(plan)
-            self._mirror_set(pair, session_id)
-            if pair is None:
-                return {"passthrough": "benign"}
-            return {"passthrough": "benign", "set": pair}
+            # for exactly the clients it targets. The gateway applies
+            # none of it: HiveServer2 applies a SET to the client's
+            # own session, and the gateway's sessions keep the
+            # server's configuration
+            return {"passthrough": "benign"}
         view = temp_view(plan)
         if view is not None and deterministic(analyzed(to_df(session, view[1]))):
             name = view[0]
@@ -782,9 +683,7 @@ class WorkSharingServer:
                 # private result keys from now on: this session's text
                 # resolves through its views
                 self._dirty_sessions.add(sid)
-                self._jdbc_replay.setdefault(sid, []).append(
-                    ("sql", sql, name.lower())
-                )
+                self._jdbc_replay.setdefault(sid, []).append((name.lower(), sql))
             # OR REPLACE of an earlier mirror: private entries derived
             # from the old definition must not survive. No global
             # epoch bump — the view is invisible to every other

@@ -59,7 +59,9 @@ read any relation the gateway has cached). The proxy has two regimes:
   pre-V6 client protocol) demotes its connection to gate+forward.
   Whether a statement is a command, benign housekeeping or a mirrorable
   temp view is Spark's verdict: the gateway parses it once with the
-  requesting session's parser and reads the Catalyst node.
+  requesting session's parser and reads the Catalyst node. A benign
+  perf-conf ``SET`` is forwarded: HiveServer2 applies it to that
+  client's own session, and the gateway never applies it.
 
 Single-instance-per-JVM: the port/bind-host travel through process-
 global JVM system properties and HiveThriftServer2 itself is a

@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, not any other copy on disk
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from sparksql_server_spark import get_session  # noqa: E402
 from sparksql_server_spark.catalog import TABLES  # noqa: E402

@@ -15,8 +15,12 @@ session-scoped ``spark`` fixture already owns it.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+
+# the checkout under test; the worker imports the package from here
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # One representative per query family; events/asof/json cover the
 # TIMESTAMP(NANOS) read path that broke in round 2.
@@ -60,7 +64,7 @@ SMOKE_QUERIES = [
 
 _WORKER = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 import duckdb
 from pyspark.sql import SparkSession
 
@@ -136,11 +140,11 @@ print("RESULT:" + json.dumps(failures))
 
 def test_default_config_smoke():
     proc = subprocess.run(
-        [sys.executable, "-c", _WORKER, json.dumps(SMOKE_QUERIES)],
+        [sys.executable, "-c", _WORKER, json.dumps(SMOKE_QUERIES), REPO],
         capture_output=True,
         text=True,
         timeout=900,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     result_lines = [
         ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT:")

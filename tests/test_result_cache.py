@@ -740,29 +740,25 @@ def test_benign_jdbc_housekeeping_preserves_cache_and_substitution(server):
 
 def test_jdbc_command_taint_blocks_caching_in_the_window(spark):
     """ADVICE r6 + review r7: prime() flushes BEFORE the JDBC command
-    executes on HiveServer2, and a fixed re-flush timer alone reopens
-    the window for any command that outlives it. The write-set taint
-    closes it in the safe direction: while the taint is live, queries
-    READING the written table execute but are not cached (their input
-    may reflect pre- or mid-command state); unrelated tables cache
-    normally; after the taint expires, caching resumes."""
+    executes on HiveServer2, so a query in that window could cache a
+    pre-command result. The write-set taint closes it in the safe
+    direction: while the taint is live, queries READING the written
+    table execute but are not cached (their input may reflect pre- or
+    mid-command state); unrelated tables cache normally; after the
+    taint expires, caching resumes."""
     from sparksql_server_spark.server import WorkSharingServer, client_request
 
     srv = WorkSharingServer(
         spark, SF_DIR, window_size=1, max_wait=0.1,
-        jdbc_command_reflush_seconds=0.1,
         jdbc_command_taint_seconds=2.0,
     )
     srv.start()
     try:
         q = "SELECT count(*) AS n FROM region"
         q_other = "SELECT count(*) AS n FROM nation"
-        # JDBC command arrives at the gate (flush #1 fires now; the
+        # JDBC command arrives at the gate (the flush fires now; the
         # command itself would execute on HiveServer2 AFTER this)
         srv.prime("REFRESH TABLE region")
-        # let the short re-flush timer pass so its generation bump
-        # cannot race the puts this test asserts on
-        time.sleep(0.3)
         # a racing gateway query over the WRITTEN table runs fine but
         # its result is refused by the taint — no stale entry can form
         # no matter how long HiveServer2 takes
@@ -778,6 +774,31 @@ def test_jdbc_command_taint_blocks_caching_in_the_window(spark):
     finally:
         srv.shutdown()
         srv.executor.cache.clear()
+
+
+def test_unscoped_jdbc_command_refuses_puts_within_its_horizon(spark):
+    """A JDBC command that names no target may change anything once
+    HiveServer2 runs it, at a time the gateway never observes: every
+    put within ``jdbc_command_reflush_seconds`` of its arrival is
+    refused rather than cached and served, and caching resumes after
+    the horizon."""
+    srv = WorkSharingServer(
+        spark, SF_DIR, window_size=1, max_wait=0.1,
+        jdbc_command_reflush_seconds=0.5,
+    )
+    srv.prime("SET spark.sql.ansi.enabled=false")
+    k = ("", "SELECT count(*) AS n FROM nation")
+    srv.results.put(
+        k, {"rows": [[25]]}, generation=srv.results.generation,
+        tables=frozenset({"nation"}),
+    )
+    assert srv.results.get(k) is None
+    time.sleep(0.6)
+    srv.results.put(
+        k, {"rows": [[25]]}, generation=srv.results.generation,
+        tables=frozenset({"nation"}),
+    )
+    assert srv.results.get(k) == {"rows": [[25]]}
 
 
 @pytest.mark.parametrize(
@@ -797,15 +818,11 @@ def test_jdbc_aliased_write_taints_its_target(spark, cmd):
     still names that target, so prime() taints it: a query over
     the written table is not cached while the command may still be
     running on HiveServer2, and an unrelated table caches normally."""
-    srv = WorkSharingServer(
-        spark, SF_DIR, window_size=1, max_wait=0.1,
-        jdbc_command_reflush_seconds=0.1,
-    ).start()
+    srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
     try:
         q = "SELECT count(*) AS n FROM region"
         q_other = "SELECT count(*) AS n FROM nation"
         srv.prime(cmd)
-        time.sleep(0.3)  # past the re-flush timer
         client_request(srv.address, {"sql": q})
         assert "cached" not in client_request(srv.address, {"sql": q})
         client_request(srv.address, {"sql": q_other})
@@ -819,8 +836,8 @@ def test_jdbc_aliased_write_taints_its_target(spark, cmd):
 #
 # The result cache's interaction surface with the merge path grew three
 # rounds running (merged members seed the cache under their original
-# SQL; derived tables, mirrored SETs and deadline pools all route
-# through the same batch) while the cache tests stayed example-based.
+# SQL; derived tables and deadline pools all route through the same
+# batch) while the cache tests stayed example-based.
 # This pool interleaves MERGED BATCHES (same-signature aggregations
 # submitted concurrently into one window), CACHE HITS (repeat texts)
 # and INVALIDATING COMMANDS (OR REPLACE of a temp view the query pool

@@ -4,6 +4,7 @@ window batching, and the TCP protocol."""
 
 from __future__ import annotations
 
+import re
 import time
 
 import pytest
@@ -1590,7 +1591,6 @@ from sparksql_server_spark.server.jdbc_proxy import (
     JdbcLineProxy,
     benign_command,
     parse_call_ex,
-    set_assignment,
     statements_in_frame,
     temp_view,
 )
@@ -1752,7 +1752,7 @@ class TestBenignJdbcCommand:
             "SET hive.server2.thrift.resultset.max.fetch.size=1000",
             "SET hive.server2.logging.operation.level = NONE",
             # round 9 (VERDICT r8 ask #3): result-semantics-free
-            # perf-conf assignments keep substitution on (and mirror)
+            # perf-conf assignments keep substitution on
             "SET spark.sql.shuffle.partitions=1",
             "set SPARK.SQL.SHUFFLE.PARTITIONS = 64;",
             "SET spark.sql.autoBroadcastJoinThreshold=64m",
@@ -1760,6 +1760,11 @@ class TestBenignJdbcCommand:
             "SET spark.sql.adaptive.skewJoin.enabled=false",
             "SET spark.scheduler.pool=etl",
             "SET spark.sql.files.maxPartitionBytes=268435456",
+            # only the key is read: the value is HiveServer2's to
+            # accept or reject for the client's own session, and the
+            # gateway never applies it
+            "SET spark.sql.shuffle.partitions=not_a_number",
+            "SET spark.scheduler.pool=etl /* unclosed",
             "RESET",
             "reset;",
         ],
@@ -1779,12 +1784,10 @@ class TestBenignJdbcCommand:
             "SET spark.sql.legacy.timeParserPolicy=LEGACY",
             "SET hivevar:tbl=lineitem",
             "SET hiveconf:hive.exec.parallel=true",
-            # round 10 (ADVICE r9): allowlisted KEYS with unvalidatable
-            # VALUES demote — the mirror writes the SHARED root session
-            "SET spark.sql.shuffle.partitions=not_a_number",
+            # adaptive.* is a closed set: class-name and free-string
+            # keys are off the allowlist
             "SET spark.sql.adaptive.customCostEvaluatorClass=com.x.Bogus",
             "SET spark.sql.adaptive.optimizer.excludedRules=org.x.Rule",
-            "SET spark.scheduler.pool=etl /* unclosed",
             "RESET spark.sql.ansi.enabled",  # targeted reset — not bare
             "USE default; DROP TABLE t",  # compound text never whitelists
             "SET x=1; SET y=2",
@@ -1820,119 +1823,27 @@ class TestBenignJdbcCommand:
         finally:
             srv.shutdown()
 
-    def test_mirrorable_set_extraction(self, spark):
-        def set_pair(sql):
-            return _read(spark, set_assignment, sql)
-
-        assert set_pair("SET spark.sql.shuffle.partitions=6") == (
-            "spark.sql.shuffle.partitions",
-            "6",
-        )
-        # allowlist matches case-insensitively, but the key mirrors in
-        # the client's ORIGINAL spelling — Spark conf keys are
-        # case-sensitive, so folding would set a dead key
-        assert set_pair(
-            "/* bi */ set spark.sql.autoBroadcastJoinThreshold = 64m ;"
-        ) == ("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # benign-but-not-mirrorable: hive.server2.* is meaningless to Spark
-        assert set_pair("SET hive.server2.async.exec.threads=9") is None
-        # reads, unknown keys, non-SETs
-        assert set_pair("SET spark.sql.shuffle.partitions") is None
-        assert set_pair("SET spark.sql.ansi.enabled=true") is None
-        assert set_pair("USE default") is None
-
-    def test_mirrorable_value_validation(self, spark):
-        """Round 10 (ADVICE r9): the mirror target is the SHARED root
-        session, so values must parse as the key's conf type BEFORE
-        mirroring — a value that sets cleanly but fails at plan time
-        (bogus adaptive class name) would break every clean client."""
-
-        def set_pair(sql):
-            return _read(spark, set_assignment, sql)
-
-        # typed values pass
-        assert set_pair("SET spark.sql.adaptive.enabled=TRUE") == (
-            "spark.sql.adaptive.enabled",
-            "TRUE",
-        )
-        assert set_pair(
-            "SET spark.sql.adaptive.advisoryPartitionSizeInBytes=128MB"
-        ) == ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128MB")
-        assert set_pair("SET spark.sql.broadcastTimeout=600s") == (
-            "spark.sql.broadcastTimeout",
-            "600s",
-        )
-        assert set_pair(
-            "SET spark.sql.autoBroadcastJoinThreshold=-1"
-        ) == ("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # type mismatches decline
-        assert set_pair("SET spark.sql.shuffle.partitions=auto") is None
-        assert set_pair("SET spark.sql.adaptive.enabled=maybe") is None
-        # adaptive.* is a CLOSED set: class-name / free-string keys
-        # (the plan-time-bomb surface) are not mirrorable
-        assert (
-            set_pair(
-                "SET spark.sql.adaptive.customCostEvaluatorClass=com.x.Bogus"
-            )
-            is None
-        )
-        assert (
-            set_pair(
-                "SET spark.sql.adaptive.optimizer.excludedRules=org.x.Rule"
-            )
-            is None
-        )
-
-    def test_mirrorable_trailing_comment_trim(self, spark):
-        """Round 10 (ADVICE r9): 'SET k=v -- tweak' previously mirrored
-        the literal value 'v -- tweak'; string-typed keys stored the
-        garbage in the shared session. Spark's SetCommand keeps the
-        comment in the value, so one trailing comment trims; embedded
-        markers decline."""
-
-        def set_pair(sql):
-            return _read(spark, set_assignment, sql)
-
-        assert set_pair(
-            "SET spark.sql.shuffle.partitions=200 -- tweak"
-        ) == ("spark.sql.shuffle.partitions", "200")
-        assert set_pair(
-            "SET spark.scheduler.pool=etl /* nightly */"
-        ) == ("spark.scheduler.pool", "etl")
-        # '--' opens a comment even unspaced (Spark's lexer does the
-        # same to the forwarded statement, so the trim MATCHES what
-        # HiveServer2 will apply)
-        assert set_pair("SET spark.scheduler.pool=etl--x") == (
-            "spark.scheduler.pool",
-            "etl",
-        )
-        # unclosed block, text after a block, or comment-only value: decline
-        assert set_pair("SET spark.scheduler.pool=etl /* x") is None
-        assert set_pair("SET spark.scheduler.pool=a/*x*/b") is None
-        assert set_pair("SET spark.scheduler.pool= -- gone") is None
-
-    def test_mirror_applies_to_gateway_session(self, spark):
-        from sparksql_server_spark.server import WorkSharingServer
-        from tests.conftest import SF_DIR, analyzed_plan
-
+    def test_perf_set_leaves_gateway_conf_unchanged(self, spark):
+        """A perf-conf SET is forwarded and never applied by the
+        gateway: its root session is shared by every clean client, so
+        one client's SET must not reshape another's plans."""
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.05)
         before = spark.conf.get("spark.sql.shuffle.partitions")
         try:
-            srv.prime("SET spark.sql.shuffle.partitions=6")
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "6"
-            # answer_jdbc path mirrors too, reporting benign passthrough
-            # the reply carries the mirrored pair for the proxy
-            out = srv.answer_jdbc("SET spark.sql.shuffle.partitions=12")
-            assert out == {
-                "passthrough": "benign",
-                "set": ("spark.sql.shuffle.partitions", "12"),
-            }
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "12"
-            # a malformed value is swallowed (forward carries the error)
-            srv.answer_jdbc("SET spark.sql.shuffle.partitions=not_a_number")
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "12"
+            for sql in (
+                "SET spark.sql.shuffle.partitions=6",
+                "SET spark.sql.shuffle.partitions=not_a_number",
+            ):
+                assert srv.prime(sql) is None
+                assert srv.answer_jdbc(sql) == {"passthrough": "benign"}
+            assert spark.conf.get("spark.sql.shuffle.partitions") == before
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", before)
+        # the shared root session still plans with its own partitioning
+        plan = spark.sql(
+            "SELECT l_returnflag, count(*) FROM lineitem GROUP BY l_returnflag"
+        )._jdf.queryExecution().executedPlan().toString()
+        assert re.search(rf"hashpartitioning\(l_returnflag#\d+, {before}\)", plan), plan
 
 
 class TestJdbcLineProxy:
@@ -2224,7 +2135,7 @@ class TestThriftSubstitution:
         OpenSession)."""
         ups = _Upstream()
         proxy = JdbcLineProxy(
-            ups.address, gate=lambda s: None, answer=lambda s: dict(self.ANSWER)
+            ups.address, gate=lambda s: None, answer=lambda s, sid=None: dict(self.ANSWER)
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2274,7 +2185,7 @@ class TestThriftSubstitution:
     def test_sasl_frame_answered_locally(self):
         ups = _Upstream()
         proxy = JdbcLineProxy(
-            ups.address, gate=lambda s: None, answer=lambda s: dict(self.ANSWER)
+            ups.address, gate=lambda s: None, answer=lambda s, sid=None: dict(self.ANSWER)
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2302,7 +2213,7 @@ class TestThriftSubstitution:
         ups = _Upstream()
         gated = []
         proxy = JdbcLineProxy(
-            ups.address, gate=gated.append, answer=lambda s: None
+            ups.address, gate=gated.append, answer=lambda s, sid=None: None
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2321,7 +2232,7 @@ class TestThriftSubstitution:
         though the answer callback would serve them."""
         ups = _Upstream()
 
-        def answer(sql):
+        def answer(sql, sid=None):
             if sql.lstrip().upper().startswith("SET"):
                 return {"passthrough": "command"}
             return dict(self.ANSWER)
@@ -2351,7 +2262,7 @@ class TestThriftSubstitution:
             "rows": [[f"r{i}", i] for i in range(7)],
         }
         proxy = JdbcLineProxy(
-            ups.address, gate=lambda s: None, answer=lambda s: dict(big)
+            ups.address, gate=lambda s: None, answer=lambda s, sid=None: dict(big)
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2394,7 +2305,7 @@ class TestThriftSubstitution:
         must return ERROR_STATUS — and leave the cursor untouched."""
         ups = _Upstream()
         proxy = JdbcLineProxy(
-            ups.address, gate=lambda s: None, answer=lambda s: dict(self.ANSWER)
+            ups.address, gate=lambda s: None, answer=lambda s, sid=None: dict(self.ANSWER)
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2470,7 +2381,7 @@ class TestThriftSubstitution:
         ups = _Upstream()
         gated = []
 
-        def answer(sql):
+        def answer(sql, sid=None):
             if sql.lstrip().upper().startswith(("USE", "SET", "RESET")):
                 return {"passthrough": "benign"}
             return dict(self.ANSWER)
@@ -2507,7 +2418,7 @@ class TestThriftSubstitution:
         cannot see — it must demote as before."""
         ups = _Upstream()
 
-        def answer(sql):
+        def answer(sql, sid=None):
             if sql.lstrip().upper().startswith("USE"):
                 return {"passthrough": "command"}  # USE warehouse2
             return dict(self.ANSWER)
@@ -2531,7 +2442,7 @@ class TestThriftSubstitution:
         HiveServer2 operations) forward untouched."""
         ups = _Upstream()
         proxy = JdbcLineProxy(
-            ups.address, gate=lambda s: None, answer=lambda s: dict(self.ANSWER)
+            ups.address, gate=lambda s: None, answer=lambda s, sid=None: dict(self.ANSWER)
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2816,7 +2727,7 @@ class TestThriftEncoderProperties:
         the demotion (the client may close them late)."""
         ups = _Upstream()
 
-        def answer(sql):
+        def answer(sql, sid=None):
             if "SET" in sql:
                 return {"passthrough": "command"}
             return {"columns": ["x"], "rows": [["1"]]}
@@ -2876,7 +2787,7 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s: {"columns": ["x"], "rows": [["a"], ["b"]]},
+            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["a"], ["b"]]},
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2907,7 +2818,7 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s: {"columns": ["x"], "rows": [["1"]]},
+            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["1"]]},
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2936,7 +2847,7 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s: {"columns": ["x"], "rows": [["1"]]},
+            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["1"]]},
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2961,7 +2872,7 @@ class TestOpenSessionConfFence:
         ups = _Upstream()
         gated = []
         proxy = JdbcLineProxy(
-            ups.address, gate=gated.append, answer=lambda s: {"fallback": True}
+            ups.address, gate=gated.append, answer=lambda s, sid=None: {"fallback": True}
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2994,7 +2905,7 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s: {"columns": ["x"], "rows": [["1"]]},
+            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["1"]]},
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -3017,7 +2928,7 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s: {"columns": ["x"], "rows": [["1"]]},
+            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["1"]]},
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -3240,14 +3151,14 @@ class TestJdbcTempViewMirror:
         ups = _Upstream()
         calls, released = [], []
 
-        def answer(sql, session=None):
-            calls.append((sql, session))
+        def answer(sql, sid=None):
+            calls.append((sql, sid))
             if sql.startswith("CREATE"):
                 return {"passthrough": "mirrored", "session": "s-77"}
             return {"columns": ["x"], "rows": [[1]]}
 
         proxy = JdbcLineProxy(
-            ups.address, gate=lambda s: None, answer=lambda s, sid=None: answer(s, sid),
+            ups.address, gate=lambda s: None, answer=answer,
             release=released.append,
         ).start()
         try:
@@ -3336,16 +3247,21 @@ class TestJdbcTempViewMirror:
                 "CREATE OR REPLACE TEMPORARY VIEW nation AS SELECT * FROM region"
             )
             sid = out["session"]
-            srv.answer_jdbc("SET spark.sql.shuffle.partitions=7", sid)
+            assert srv.answer_jdbc("SET spark.sql.shuffle.partitions=7", sid) == {
+                "passthrough": "benign"
+            }
             # simulate the idle reap: the session object is dropped
             with srv._session_lock:
                 srv._sessions.pop(sid)
                 srv._dirty_sessions.discard(sid)
-            # the recreated session must hold the shadow AND the conf
+            # the recreated session must hold the shadow; the SET was
+            # the client's own, so the conf stays the server's
             res = srv.answer_jdbc("SELECT count(*) AS n FROM nation", sid)
             assert res["rows"][0][0] == 5, res
             sess = srv.session_for(sid)
-            assert sess.conf.get("spark.sql.shuffle.partitions") == "7"
+            assert sess.conf.get(
+                "spark.sql.shuffle.partitions"
+            ) == spark.newSession().conf.get("spark.sql.shuffle.partitions")
             with srv._session_lock:
                 assert sid in srv._dirty_sessions
             srv.release_jdbc_session(sid)
@@ -3368,71 +3284,6 @@ class TestJdbcTempViewMirror:
             ):
                 assert srv.answer_jdbc(ddl) == {"passthrough": "command"}, ddl
         finally:
-            srv.shutdown()
-            srv.executor.cache.clear()
-
-    def test_pending_sets_reach_the_late_created_session(self, spark):
-        """Round-10 review wave: a mirrorable SET sent BEFORE the first
-        view mirror landed only in root — the per-connection session
-        created later started from default conf, silently dropping the
-        client's plan-shaping intent. The proxy now re-announces
-        buffered SETs the moment the session exists."""
-        srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
-        ups = _Upstream()
-        proxy = JdbcLineProxy(
-            ups.address, gate=srv.prime, answer=srv.answer_jdbc,
-            release=srv.release_jdbc_session,
-            replay_sets=srv.replay_jdbc_sets,
-        ).start()
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            with socket.create_connection(proxy.address) as c:
-                m1 = _exec_stmt_call("SET spark.sql.shuffle.partitions=11", seq=1)
-                c.sendall(m1)
-                assert ups.wait_bytes(len(m1)) == len(m1)
-                assert spark.conf.get("spark.sql.shuffle.partitions") == "11"
-                # ANOTHER client writes root before this one's view
-                # mirror: the buffered replay must NOT clobber it back
-                # to 11 (review wave: session-only replay channel)
-                spark.conf.set("spark.sql.shuffle.partitions", "200")
-                m2 = _exec_stmt_call(
-                    "CREATE TEMPORARY VIEW psets AS SELECT 1 AS x", seq=2
-                )
-                c.sendall(m2)
-                assert ups.wait_bytes(len(m1) + len(m2)) == len(m1) + len(m2)
-                with srv._session_lock:
-                    sids = list(srv._jdbc_replay)
-                assert len(sids) == 1, sids
-                sid = sids[0]
-                sess = srv.session_for(sid)
-                # the pre-view SET reached the late-created session...
-                assert sess.conf.get("spark.sql.shuffle.partitions") == "11"
-                # ...without re-writing the shared root session
-                assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
-                # ...and its replay log, so a reap+recreate keeps it
-                with srv._session_lock:
-                    entries = srv._jdbc_replay[sid]
-                assert ("set", "spark.sql.shuffle.partitions", "11") in entries
-                # a post-view SET lands in BOTH root and the session
-                m3 = _exec_stmt_call("SET spark.sql.shuffle.partitions=13", seq=3)
-                c.sendall(m3)
-                assert ups.wait_bytes(len(m1) + len(m2) + len(m3)) == (
-                    len(m1) + len(m2) + len(m3)
-                )
-                assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
-                assert sess.conf.get("spark.sql.shuffle.partitions") == "13"
-                # the replay log keeps LAST VALUE PER KEY (bounded by
-                # the allowlist size, not the connection's SET count)
-                with srv._session_lock:
-                    sets = [
-                        e for e in srv._jdbc_replay[sid]
-                        if e[0] == "set" and e[1] == "spark.sql.shuffle.partitions"
-                    ]
-                assert sets == [("set", "spark.sql.shuffle.partitions", "13")]
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
-            proxy.stop()
-            ups.close()
             srv.shutdown()
             srv.executor.cache.clear()
 
@@ -3502,56 +3353,42 @@ class TestJdbcTempViewMirror:
             srv.executor.cache.clear()
 
 
-class TestOverlayPerfConfMirror:
-    """Round 10: connect-time ``set:hiveconf:<perf key>`` overlay
-    entries get the same treatment as statement-form SETs — benign for
-    allowlisted keys with type-valid values, mirrored as (key, value)
-    pairs through replay_sets, demote otherwise."""
+class TestOverlayPerfConf:
+    """Connect-time ``set:hiveconf:<perf key>`` overlay entries get the
+    same treatment as statement-form SETs: benign for allowlisted keys,
+    demoting otherwise. Neither form reaches the gateway's sessions:
+    HiveServer2 applies it to the client's own session."""
 
-    def test_benign_open_conf_accepts_mirrorable_perf_keys(self):
-        from sparksql_server_spark.server.jdbc_proxy import (
-            benign_open_conf,
-            mirrorable_open_conf_sets,
-        )
+    def test_benign_open_conf_accepts_allowlisted_perf_keys(self):
+        from sparksql_server_spark.server.jdbc_proxy import benign_open_conf
 
-        ok = {"set:hiveconf:spark.sql.shuffle.partitions": "6"}
-        assert benign_open_conf(ok)
-        assert mirrorable_open_conf_sets(ok) == [
-            ("spark.sql.shuffle.partitions", "6")
-        ]
-        # type-invalid value, unknown key, hivevar: all demote as before
-        assert not benign_open_conf(
+        assert benign_open_conf({"set:hiveconf:spark.sql.shuffle.partitions": "6"})
+        # only the key is read: the value is HiveServer2's to judge
+        assert benign_open_conf(
             {"set:hiveconf:spark.sql.shuffle.partitions": "lots"}
         )
+        # unknown key, hivevar: demote
         assert not benign_open_conf(
             {"set:hiveconf:spark.sql.ansi.enabled": "true"}
         )
         assert not benign_open_conf({"set:hivevar:x": "1"})
-        # transport knobs stay benign but are NOT mirrored (meaningless
-        # to Spark); original key spelling is preserved in the mirror
-        mixed = {
-            "set:hiveconf:hive.server2.thrift.resultset.default.fetch.size": "500",
-            "set:hiveconf:spark.sql.autoBroadcastJoinThreshold": "64MB",
-        }
-        assert benign_open_conf(mixed)
-        assert mirrorable_open_conf_sets(mixed) == [
-            ("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        ]
+        # transport knobs and any key spelling stay benign
+        assert benign_open_conf(
+            {
+                "set:hiveconf:hive.server2.thrift.resultset.default.fetch.size": "500",
+                "set:hiveconf:spark.sql.autoBroadcastJoinThreshold": "64MB",
+            }
+        )
 
-    def test_overlay_mirrors_and_keeps_substitution(self):
+    def test_overlay_perf_conf_keeps_substitution(self):
         ups = _Upstream()
-        calls, mirrored = [], []
+        calls = []
 
         def answer(s, sid=None):
             calls.append(s)
             return {"columns": ["x"], "rows": [[1]]}
 
-        proxy = JdbcLineProxy(
-            ups.address,
-            gate=lambda s: None,
-            answer=answer,
-            replay_sets=lambda sid, pairs: mirrored.append((sid, list(pairs))),
-        ).start()
+        proxy = JdbcLineProxy(ups.address, gate=lambda s: None, answer=answer).start()
         try:
             with socket.create_connection(proxy.address) as c:
                 opens = _open_session_with_conf(
@@ -3562,10 +3399,57 @@ class TestOverlayPerfConfMirror:
                 c.sendall(_exec_stmt_call("SELECT 1", seq=2))
                 name, _s, d = _recv_reply(c)
                 assert name == "ExecuteStatement" and d[0][1][1] == 0
-            # the overlay pair mirrors to root; no SET text is rebuilt
-            assert mirrored == [(None, [("spark.sql.shuffle.partitions", "6")])]
+            # the overlay reaches the gateway as nothing: no SET text
+            # is rebuilt and answer() sees only the query
             assert calls == ["SELECT 1"]
             assert proxy.stats["statements_answered"] == 1
         finally:
             proxy.stop()
             ups.close()
+
+    def test_perf_sets_reach_no_gateway_session(self, spark):
+        """Statement SETs through answer_jdbc and prime, and an
+        OpenSession overlay through the proxy: each is benign, the
+        connection's next SELECT is answered, and the shared root
+        session keeps its own values throughout and after close."""
+        keys = {
+            "spark.sql.shuffle.partitions": "1",
+            "spark.sql.adaptive.enabled": "false",
+        }
+        start = {k: spark.conf.get(k) for k in keys}
+        assert start != keys
+        sets = [f"SET {k}={v}" for k, v in keys.items()]
+        srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
+        ups = _Upstream()
+        proxy = JdbcLineProxy(
+            ups.address, gate=srv.prime, answer=srv.answer_jdbc,
+            release=srv.release_jdbc_session,
+        ).start()
+        try:
+            for sql in sets:
+                assert srv.answer_jdbc(sql) == {"passthrough": "benign"}
+                assert srv.prime(sql) is None
+            with socket.create_connection(proxy.address) as c:
+                opens = _open_session_with_conf(
+                    {f"set:hiveconf:{k}": v for k, v in keys.items()}
+                )
+                c.sendall(opens)
+                sent = len(opens)
+                for seq, sql in enumerate(sets, start=2):
+                    msg = _exec_stmt_call(sql, seq=seq)
+                    c.sendall(msg)
+                    sent += len(msg)
+                    assert ups.wait_bytes(sent) == sent  # forwarded
+                c.sendall(_exec_stmt_call("SELECT count(*) FROM region", seq=9))
+                name, _s, d = _recv_reply(c)
+                assert name == "ExecuteStatement" and d[0][1][1] == 0
+                assert proxy.stats["statements_answered"] == 1
+                assert {k: spark.conf.get(k) for k in keys} == start
+            assert {k: spark.conf.get(k) for k in keys} == start
+        finally:
+            for k, v in start.items():
+                spark.conf.set(k, v)
+            proxy.stop()
+            ups.close()
+            srv.shutdown()
+            srv.executor.cache.clear()

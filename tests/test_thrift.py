@@ -27,10 +27,12 @@ except ImportError:
     pass
 
 BEELINE = os.path.join(PYSPARK_HOME or "", "bin", "beeline")
+# the checkout under test; the worker imports the package from here
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _WORKER = r"""
 import os, subprocess, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from pyspark.sql import SparkSession
 from sparksql_server_spark.server.thrift import (
     register_shared_catalog, start_thriftserver, thriftserver_available,
@@ -145,8 +147,7 @@ srv.executor.mrshare_min_bytes = 0       # sf0.001 is under the 64MiB floor
 plans_before = srv.executor.stats["mrshare_plans"]
 proxy2 = JdbcLineProxy(("localhost", PORT), gate=srv.prime,
                        answer=srv.answer_jdbc,
-                       release=srv.release_jdbc_session,
-                       replay_sets=srv.replay_jdbc_sets).start()
+                       release=srv.release_jdbc_session).start()
 p2 = proxy2.address[1]
 res3 = {}
 def via_sub(name, sql):
@@ -214,13 +215,15 @@ print(f"RESULT5:irc={res6.returncode};"
       f"ianswered={proxy2.stats['statements_answered'] - ans_before};"
       f"irows_ok={got_n == exp_n};got={got_n};exp={exp_n}")
 
-# --- round 9 (VERDICT r8 ask #3): a mirrorable perf-conf SET
-# assignment keeps the connection substitution-clean AND mirrors into
-# the gateway session. Two concurrent beeline clients each open with
+# --- round 9 (VERDICT r8 ask #3): an allowlisted perf-conf SET
+# assignment keeps the connection substitution-clean; it is forwarded
+# to the client's own HiveServer2 session and never applied by the
+# gateway. Two concurrent beeline clients each open with
 # SET spark.sql.shuffle.partitions=6 before same-signature
 # aggregations over the uncached supplier table: both SELECTs must be
-# answered from ONE merged execution, and the gateway session must
-# now read shuffle.partitions=6. An unknown-key SET still demotes.
+# answered from ONE merged execution, and the shared root session must
+# still read its own shuffle.partitions (8, set above). An unknown-key
+# SET still demotes.
 plans_before = srv.executor.stats["mrshare_plans"]
 ans_before = proxy2.stats["statements_answered"]
 qg = ("SELECT s_nationkey, count(*) AS n FROM supplier"
@@ -250,7 +253,7 @@ res10 = subprocess.run(
 print(f"RESULT6:src={res9['g'].returncode}{res9['h'].returncode};"
       f"sanswered={ans_mid - ans_before};"
       f"smerged={srv.executor.stats['mrshare_plans'] - plans_before};"
-      f"mirrored={spark.conf.get('spark.sql.shuffle.partitions')};"
+      f"root_parts={spark.conf.get('spark.sql.shuffle.partitions')};"
       # subset: beeline also prints the SET statement's own key\tvalue row
       f"grows_ok={exp_g <= got_g};"
       f"drc={res10.returncode};"
@@ -297,7 +300,7 @@ proxy2.stop(); srv.shutdown()
 )
 def test_thrift_jdbc_round_trip(tmp_path):
     proc = subprocess.run(
-        [sys.executable, "-c", _WORKER, BEELINE, PYSPARK_HOME],
+        [sys.executable, "-c", _WORKER, BEELINE, PYSPARK_HOME, REPO],
         capture_output=True,
         text=True,
         timeout=600,
@@ -384,18 +387,18 @@ def test_thrift_jdbc_round_trip(tmp_path):
     # round 9 (VERDICT r8 ask #3): connections opening with an
     # allowlisted perf-conf SET assignment stay substitution-clean —
     # both SELECTs answered from ONE merged execution — and the
-    # assignment is mirrored into the gateway session; an unknown-key
-    # SET still demotes (its SELECT forwarded, not answered)
+    # assignment never reaches the gateway's shared root session; an
+    # unknown-key SET still demotes (its SELECT forwarded, not answered)
     results6 = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT6:")]
     assert results6, (
-        f"mirrorable-SET leg died\nstdout: {proc.stdout[-2000:]}\n"
+        f"perf-conf SET leg died\nstdout: {proc.stdout[-2000:]}\n"
         f"stderr: {proc.stderr[-2000:]}"
     )
     r6 = results6[0]
     assert "src=00" in r6, r6
     assert "sanswered=2" in r6, r6
     assert "smerged=1" in r6, r6
-    assert "mirrored=6" in r6, r6
+    assert "root_parts=8" in r6, r6
     assert "grows_ok=True" in r6, r6
     assert "drc=0" in r6, r6        # demoted query still succeeds...
     assert "danswered=0" in r6, r6  # ...via forwarding, never answered
