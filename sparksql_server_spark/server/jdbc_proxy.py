@@ -38,13 +38,21 @@ overlay (set:hivevar/engine confs, non-default database — connect-time
 session state the gateway cannot see) or the first command statement
 demotes the connection to gate+forward for its remaining lifetime.
 
+A connection's own temp views do not demote it. HiveServer2 holds them
+in the client's session; the proxy keeps only their lowercased names
+(``_Conn.views``), passes them on every ``answer()`` call and forwards
+each statement that names one, so a connection that opened with a
+housekeeping view still has its base-table statements answered from
+the gateway's root session (cross-client merges, shared result cache).
+
 The proxy never judges SQL text itself. The gateway parses each
 statement once, with the requesting session's own parser, and the
 readers below (:func:`benign_command`, :func:`temp_view`,
 :func:`dropped_view`) read the parsed Catalyst node; ``answer()``'s
-reply tells the proxy what the statement was. Only the OpenSession
-overlay map, which is not SQL, is checked here, against the same key
-allowlist (:func:`benign_open_conf`).
+reply tells the proxy what the statement was, and carries the
+connection's new set of view names when it created or dropped one.
+Only the OpenSession overlay map, which is not SQL, is checked here,
+against the same key allowlist (:func:`benign_open_conf`).
 
 A client's conf never reaches the gateway. A perf-conf ``SET`` on the
 allowlist (statement or overlay form) is benign: it is forwarded to
@@ -471,21 +479,20 @@ def benign_command(plan: Any) -> bool:
 
 
 def _plain_name(name: str) -> bool:
-    # a backquoted dotted name is one part to the parser; the mirror
+    # a backquoted dotted name is one part to the parser; the proxy
     # keeps to plain identifiers, the names BI tools generate
     return bool(name) and "." not in name
 
 
 def temp_view(plan: Any) -> Optional[tuple[str, Any]]:
     """``(name, body plan)`` when ``plan`` is a parsed
-    ``CREATE [OR REPLACE] TEMPORARY VIEW <name> AS <query>`` the gateway
-    could mirror into a per-connection session (round 10, VERDICT r9
-    ask #3) — else None. The view must be a ``LocalTempView`` (GLOBAL
-    temporary views live in the global_temp namespace, CROSS-session
-    on HiveServer2 — a per-connection mirror could not be faithful)
-    with a plain one-part name and no column list. DETERMINISM of the
-    body is the server's call, read from the body's analyzed plan;
-    this reader decides only the SHAPE."""
+    ``CREATE [OR REPLACE] TEMPORARY VIEW <name> AS <query>`` whose name
+    a connection may keep without being demoted — else None. The view
+    must be a ``LocalTempView`` (GLOBAL temporary views live in the
+    global_temp namespace, CROSS-session on HiveServer2, so another
+    connection's statements could read them) with a plain one-part
+    name and no column list. Whether the body analyzes is the
+    server's call; this reader decides only the SHAPE."""
     if kind(plan) != "CreateViewCommand":
         return None
     name = plan.name()
@@ -501,9 +508,9 @@ def temp_view(plan: Any) -> Optional[tuple[str, Any]]:
 
 def dropped_view(plan: Any) -> Optional[str]:
     """The name when ``plan`` is a parsed ``DROP VIEW [IF EXISTS]
-    <name>`` over a plain one-part name — the only drop shape the
-    gateway may mirror, and only (the server checks) when the name is
-    one of THIS connection's mirrored temp views: a drop of anything
+    <name>`` over a plain one-part name — the only drop shape that
+    keeps a connection clean, and only (the server checks) when the
+    name is one of THIS connection's temp views: a drop of anything
     else could target a SHARED catalog view, which is a real command
     and demotes."""
     if kind(plan) != "DropView" or kind(plan.child()) != "UnresolvedIdentifier":
@@ -898,7 +905,7 @@ class _Conn:
         "ops",
         "wlock",
         "skip_gate_once",
-        "session_id",
+        "views",
     )
 
     def __init__(self) -> None:
@@ -906,13 +913,11 @@ class _Conn:
         # mutate HiveServer2 session state the gateway cannot see, so
         # substitution is disabled for the rest of the connection
         self.clean = True
-        # set when the gateway MIRRORED session-scoped DDL (a temp
-        # view) for this connection (round 10, VERDICT r9 ask #3):
-        # subsequent statements are answered against the named gateway
-        # session instead of root, and the proxy releases the session
-        # when the connection closes (mirroring HiveServer2 dropping
-        # the client's temp views with its session)
-        self.session_id: Optional[str] = None
+        # lowercased names of the temp views this connection created
+        # and has not dropped, as the gateway's replies report them:
+        # HiveServer2 holds the views, and a statement naming one is
+        # forwarded to it
+        self.views: frozenset[str] = frozenset()
         # set when the NEXT forwarded statement must skip the prime
         # gate: answer() already ran it through a full window batch
         # before declining substitution (a second window wait buys
@@ -939,15 +944,14 @@ class JdbcLineProxy:
     does, the frame is forwarded anyway (sharing is best-effort; the
     client's query must not be).
 
-    ``answer(sql, session_id)`` (round 7, VERDICT r6 ask #7) enables
-    MERGE substitution: when set, a held ExecuteStatement whose SQL the
-    gateway can fully answer (``WorkSharingServer.answer_jdbc``; the
-    session id is None until the connection mirrors a temp view) is
-    NOT forwarded —
-    the proxy synthesizes the TExecuteStatementResp itself and serves
-    the operation lifecycle (GetOperationStatus → FINISHED,
-    GetResultSetMetadata → typed schema, FetchResults → one columnar
-    V6 row batch, Close/CancelOperation) from the gateway result. Two
+    ``answer(sql, views)`` enables MERGE substitution: when set, a held
+    ExecuteStatement whose SQL the gateway can fully answer
+    (``WorkSharingServer.answer_jdbc``; ``views`` is the connection's
+    set of temp-view names) is NOT forwarded — the proxy synthesizes
+    the TExecuteStatementResp itself and serves the operation lifecycle
+    (GetOperationStatus → FINISHED, GetResultSetMetadata → typed
+    schema, FetchResults → one columnar V6 row batch,
+    Close/CancelOperation) from the gateway result. Two
     same-signature statements arriving in one window then cost ONE
     merged execution and HiveServer2 never runs either — the
     reference's all-clients-through-the-window endpoint, completed.
@@ -957,12 +961,12 @@ class JdbcLineProxy:
     forward for its remaining lifetime. Exceptions: whitelisted benign
     housekeeping and allowlisted perf-conf SETs (benign_command),
     which forward to HiveServer2 and change only the client's own
-    session there (the gateway never applies a client's conf), and
-    deterministic CREATE TEMPORARY VIEW statements, which the gateway
-    mirrors into a per-connection session
-    (``res["session"]`` → ``conn.session_id``, released via
-    ``release=`` on connection close) so the connection keeps
-    substitution. Result columns ship in their
+    session there (the gateway never applies a client's conf), and the
+    connection's own ``CREATE TEMPORARY VIEW`` / ``DROP VIEW``
+    statements, which forward too: the reply's ``views`` becomes
+    ``conn.views``, and every later statement naming one of those
+    views is forwarded to HiveServer2, which holds them. Result
+    columns ship in their
     native TColumn arms (BIGINT/DOUBLE/BOOLEAN; temporal and decimal
     values as strings under TIMESTAMP/DATE/STRING type ids — Hive's
     own wire form, so typed JDBC getters work). Limitation,
@@ -975,17 +979,11 @@ class JdbcLineProxy:
         gate: Callable[[str], None],
         host: str = "127.0.0.1",
         port: int = 0,
-        answer: Optional[Callable[[str, Optional[str]], Optional[dict]]] = None,
-        release: Optional[Callable[[str], None]] = None,
+        answer: Optional[Callable[[str, frozenset[str]], Optional[dict]]] = None,
     ) -> None:
         self.upstream = upstream
         self.gate = gate
         self.answer = answer
-        # called with a connection's gateway session id when the
-        # connection closes — the server drops the mirrored temp views
-        # with it (WorkSharingServer.release_jdbc_session). Only
-        # connections that actually mirrored DDL carry a session id.
-        self.release = release
         # counters are read-modify-write from concurrent handler/pump
         # threads; dict += is not atomic in CPython (ADVICE r6)
         self._stats_lock = threading.Lock()
@@ -1012,18 +1010,7 @@ class JdbcLineProxy:
                         daemon=True,
                     )
                     t.start()
-                    try:
-                        outer._pump_client(self.request, up, conn)
-                    finally:
-                        # only the client pump answers through the
-                        # session, so it is released as soon as the
-                        # client is done, not after the upstream drain
-                        if conn.session_id is not None and outer.release is not None:
-                            try:
-                                outer.release(conn.session_id)
-                            except Exception:  # release is best-effort —
-                                # an idle-reap already cleans up eventually
-                                pass
+                    outer._pump_client(self.request, up, conn)
                     t.join(timeout=5)
                 finally:
                     for s in (up, self.request):
@@ -1296,10 +1283,7 @@ class JdbcLineProxy:
             if self.answer is None or not conn.clean:
                 return None
             try:
-                # once this connection carries a gateway session (it
-                # mirrored a temp view), every statement resolves
-                # against that session; None until then
-                res = self.answer(stmt, conn.session_id)
+                res = self.answer(stmt, conn.views)
                 if res is None:
                     return None  # pre-execution failure — gate + forward
                 if res.get("passthrough") == "command":
@@ -1308,33 +1292,17 @@ class JdbcLineProxy:
                     # forward
                     conn.clean = False
                     return None
-                if res.get("passthrough") == "mirrored":
-                    # session-scoped deterministic DDL the gateway
-                    # REPLAYED into a per-connection session (round 10,
-                    # VERDICT r9 ask #3): the connection stays
-                    # substitution-clean, future statements resolve
-                    # against that session, and the statement still
-                    # forwards so HiveServer2's own session matches.
-                    # No gate: a temp view has no shared-catalog
-                    # effect to flush and no scan to share.
-                    conn.session_id = res.get("session") or conn.session_id
-                    conn.skip_gate_once = True
-                    return None
-                if res.get("passthrough") == "benign":
-                    # session housekeeping that provably cannot change
-                    # query semantics (USE default, conf reads,
-                    # hive.server2.* transport knobs, perf-conf SETs —
-                    # see benign_command): forward so HiveServer2
-                    # applies it to this client's session, but do NOT
-                    # demote, and skip the gate — there is no catalog
-                    # effect to flush and no scan to share
-                    conn.skip_gate_once = True
-                    return None
-                if res.get("fallback"):
-                    # the gateway DID run the statement through a full
-                    # window batch but the result can't be substituted
-                    # (error/sink/truncated) — forward, but skip the
-                    # gate: a second window pass buys nothing
+                if res.get("passthrough") or res.get("fallback"):
+                    # benign housekeeping (benign_command), a statement
+                    # over or creating/dropping this connection's own
+                    # temp views, or one the window already ran but
+                    # cannot substitute (error/sink/truncated): forward
+                    # so HiveServer2 runs it in this client's session,
+                    # keep the connection clean, and skip the gate — no
+                    # catalog effect to flush, and a (second) window
+                    # pass buys no sharing
+                    if "views" in res:
+                        conn.views = frozenset(res["views"])
                     conn.skip_gate_once = True
                     return None
                 import os as _os

@@ -57,14 +57,19 @@ from py4j.java_gateway import JavaObject
 
 from sparksql_server_spark.plans.analysis import source_path
 from sparksql_server_spark.plans.catalyst import (
+    analyzed,
     built,
     deterministic,
+    jvm,
     kind,
     normalize,
     output_names,
+    pattern,
     peel_limit,
     pylist,
+    seq,
     statement,
+    to_df,
 )
 
 # parsed name nodes whose first field is the target's multipart name
@@ -85,14 +90,14 @@ def command_write_set(plan: Any, session: Any) -> Optional[frozenset[str]]:
     (:func:`_name_node`) — INSERT, UPDATE, DELETE, MERGE, DROP, ALTER,
     TRUNCATE, CREATE, REFRESH, ANALYZE, CACHE/UNCACHE — or a CREATE
     VIEW / CACHE TABLE AS name. ``EXECUTE IMMEDIATE <statement>``
-    writes what its statement writes when the parse already resolves
-    it to a constant string (a literal, or ``'...' || '...'``),
-    evaluated and parsed by ``session``'s parser; ``INSERT OVERWRITE
-    [LOCAL] DIRECTORY`` writes its path, in fingerprint form.
-    Everything else is None: SET, USE, ADD JAR, scripts, namespaces, an
-    ``EXECUTE IMMEDIATE`` of a variable or of an expression the parse
-    leaves unresolved (a function call such as ``concat(...)``), and an
-    IDENTIFIER clause over a variable or parameter.
+    writes what its statement writes when that is a constant string
+    (:func:`_constant_string`: a literal, ``'...' || '...'``, or a
+    call such as ``concat(...)`` over constants), parsed by
+    ``session``'s parser; ``INSERT OVERWRITE [LOCAL] DIRECTORY`` writes
+    its path, in fingerprint form. Everything else is None: SET, USE,
+    ADD JAR, scripts, namespaces, an ``EXECUTE IMMEDIATE`` of a
+    variable or of a nondeterministic expression, and an IDENTIFIER
+    clause over a variable or parameter.
 
     For a table, both the unqualified basename (cached entries key
     tables that way) and the full qualified name (so the server can
@@ -100,14 +105,12 @@ def command_write_set(plan: Any, session: Any) -> Optional[frozenset[str]]:
     the current database) are returned."""
     node, name = statement(plan)
     if name == "UnresolvedExecuteImmediate":
-        text = node.productElement(0)
+        text = _constant_string(node.productElement(0), session)
+        if text is None:
+            return None
         parser = session._jsparkSession.sessionState().sqlParser()
         try:
-            if not (text.resolved() and text.foldable()) or (
-                text.dataType().typeName() != "string"
-            ):
-                return None
-            inner = parser.parsePlan(text.eval(None).toString())
+            inner = parser.parsePlan(text)
         except Exception:  # Spark's own error surfaces when it runs
             return None
         return command_write_set(inner, session)
@@ -126,6 +129,37 @@ def command_write_set(plan: Any, session: Any) -> Optional[frozenset[str]]:
             return None
         parts = pylist(target.productElement(0))
     return frozenset({parts[-1].lower(), ".".join(parts).lower()})
+
+
+def _constant_string(expr: Any, session: Any) -> Optional[str]:
+    """The value of a parsed expression that is a constant string, or
+    None. An expression the parse leaves unresolved (a function call)
+    is resolved by ``session``'s analyzer as a one-row projection; it
+    is evaluated only when foldable, deterministic and string-typed.
+    One that names a variable stays None: over one row a name can
+    only be a session variable, and only the session that runs the
+    statement binds it (a JDBC client's lives on HiveServer2)."""
+    try:
+        if expr.containsPattern(pattern("UNRESOLVED_ATTRIBUTE")):
+            return None
+        if not expr.resolved():
+            alias = jvm("org.apache.spark.sql.catalyst.analysis.UnresolvedAlias")(
+                expr, jvm("scala.Option").empty()
+            )
+            one_row = jvm(
+                "org.apache.spark.sql.catalyst.plans.logical.OneRowRelation"
+            )()
+            project = jvm("org.apache.spark.sql.catalyst.plans.logical.Project")(
+                seq([alias]), one_row
+            )
+            expr = analyzed(to_df(session, project)).projectList().head().child()
+        if not (expr.foldable() and expr.deterministic()) or (
+            expr.dataType().typeName() != "string"
+        ):
+            return None
+        return expr.eval(None).toString()
+    except Exception:  # unresolvable here, or NULL
+        return None
 
 
 def _name_node(field: Any) -> Optional[Any]:

@@ -42,7 +42,9 @@ scan sharing still works ACROSS sessions.
 Security note (SURVEY.md §7): the reference accepted serialized JVM
 objects + jars over the wire and deserialized them with a custom
 classloader (ClassLoaderOIS — RCE by design). We accept only SQL
-text; no code crosses the boundary.
+text, and the gateway's sessions refuse the SQL functions that call
+JVM methods by name (``reflect``, ``java_method``, ``try_reflect``;
+:func:`refuse_reflection`), so no code crosses the boundary.
 """
 
 from __future__ import annotations
@@ -52,7 +54,6 @@ import json
 import socket
 import socketserver
 import threading
-import uuid
 from typing import Any, Callable
 
 from pyspark.sql import SparkSession
@@ -60,7 +61,7 @@ from pyspark.sql import SparkSession
 from sparksql_server_spark.catalog import TABLES, register_tables
 from sparksql_server_spark.functions.udfs import register_udfs, register_udtfs
 from sparksql_server_spark.plans.analysis import scan_nodes
-from sparksql_server_spark.plans.catalyst import analyzed, deterministic, to_df
+from sparksql_server_spark.plans.catalyst import analyzed, jvm, to_df
 from sparksql_server_spark.server.batcher import WindowBatcher
 from sparksql_server_spark.server.cache import CacheManager
 from sparksql_server_spark.server.jdbc_proxy import (
@@ -82,6 +83,22 @@ import os
 def source_view_map(sf_dir: str) -> dict[str, str]:
     """fingerprint (table root path) -> view name, for the cache rewrite."""
     return {os.path.join(sf_dir, f"{t}.parquet"): t for t in TABLES}
+
+
+# built-in functions that call any JVM method named in their arguments
+# (``reflect('java.lang.System', 'exit', 0)`` would stop the server)
+_REFLECTION = ("reflect", "java_method", "try_reflect")
+
+
+def refuse_reflection(session: SparkSession) -> None:
+    """Drop the reflection functions from ``session``'s function
+    registry: a call to one then fails analysis with
+    UNRESOLVED_ROUTINE. Each ``newSession()`` starts from Spark's
+    built-in registry again, so every gateway session needs the call."""
+    registry = session._jsparkSession.sessionState().functionRegistry()
+    ident = jvm("org.apache.spark.sql.catalyst.FunctionIdentifier")
+    for name in _REFLECTION:
+        registry.dropFunction(ident.apply(name))
 
 
 class WorkSharingServer:
@@ -107,6 +124,7 @@ class WorkSharingServer:
         register_tables(spark, sf_dir)
         register_udfs(spark)  # the vetted UDF surface (no code over the wire)
         register_udtfs(spark)
+        refuse_reflection(spark)
         # the vetted custom connectors (sources/pysource.py): lets
         # gateway jobs read format("synthetic_events") and write
         # output_format="jsonl_dir" — still no code over the wire
@@ -175,16 +193,6 @@ class WorkSharingServer:
         # flushes its write set (whole cache when it names no table)
         # on completion, so nothing stale survives the transition.
         self._dirty_sessions: set[str] = set()
-        # per-JDBC-connection mirror replay log (round 10, VERDICT r9
-        # ask #3): the temp views the gateway mirrored into a
-        # connection's session, in arrival order, as (lowercased view
-        # name, CREATE ... statement). If the session is ever
-        # idle-reaped and recreated, session_for REPLAYS the log so the
-        # fresh session's catalog still matches the client's
-        # HiveServer2 session: without the replay a temp view
-        # SHADOWING a base table would silently resolve to the base
-        # table and the gateway would answer wrong rows.
-        self._jdbc_replay: dict[str, list[tuple[str, str]]] = {}
         # True once a command ran on the ROOT session (temp views there
         # shadow shared tables for root's own queries)
         self._root_dirty = False
@@ -316,33 +324,16 @@ class WorkSharingServer:
             if hit is not None:
                 self._sessions[session_id] = (hit[0], now)
                 return hit[0]
-            # snapshot the mirror log; the build below runs UNLOCKED
-            replay = list(self._jdbc_replay.get(session_id) or ())
-        # Session construction + registration + mirror replay run
-        # OUTSIDE the lock (round-10 review wave): replaying logged
-        # DDL is eager Spark work — holding _session_lock through it
-        # stalled every other thread's session lookup, dirty-check and
-        # JDBC routing for the duration. A concurrent same-id creation
-        # is resolved below: first insertion wins, the loser's session
-        # is discarded (rare — the proxy serializes per connection;
-        # only a TCP client reusing one id across sockets can race).
+        # Session construction + registration run OUTSIDE the lock, so
+        # they stall no other thread's session lookup or dirty-check. A
+        # concurrent same-id creation is resolved below: first
+        # insertion wins, the loser's session is discarded (rare — only
+        # a TCP client reusing one id across sockets can race).
         sess = self.spark.newSession()
         register_tables(sess, self._sf_dir)
         register_udfs(sess)
         register_udtfs(sess)
-        # replay the JDBC mirror log so a reaped-and-recreated session's
-        # catalog matches the client's HiveServer2 session (a mirrored
-        # temp view shadowing a base table MUST shadow it here too, or
-        # answered rows diverge)
-        for _name, stmt in replay:
-            try:
-                sess.sql(stmt).collect()
-            except Exception:
-                # a replay member failing (dropped base table) leaves a
-                # catalog we cannot vouch for: the dirty mark below
-                # keys it privately and queries over the missing view
-                # fall back
-                pass
+        refuse_reflection(sess)
         with self._session_lock:
             hit = self._sessions.get(session_id)
             if hit is not None:  # lost the creation race
@@ -366,25 +357,10 @@ class WorkSharingServer:
                     lru = min(self._sessions, key=lambda s: self._sessions[s][1])
                     del self._sessions[lru]
                     self.results.invalidate_session(lru)
-            # close the snapshot window (review wave): a mirror write
-            # that landed between the snapshot above and this insertion
-            # would otherwise be lost until the next reap. The log is
-            # append-ordered, so only its tail past the snapshot
-            # applies (the proxy serializes per connection, so a
-            # mid-build write is a reap-vs-DDL race at most)
-            current = list(self._jdbc_replay.get(session_id) or ())
-            for _name, stmt in current[len(replay) :]:
-                try:
-                    sess.sql(stmt).collect()
-                except Exception:
-                    pass
             self._sessions[session_id] = (sess, now)
             # a fresh session has a clean catalog: a reaped-and-
-            # recreated id rejoins the shared result namespace —
-            # unless it replayed mirrored DDL, which implies dirty
+            # recreated id rejoins the shared result namespace
             self._dirty_sessions.discard(session_id)
-            if current:
-                self._dirty_sessions.add(session_id)
         return sess
 
     def submit(
@@ -442,7 +418,13 @@ class WorkSharingServer:
         that could read the command's effect until a horizon past its
         execution. Benign housekeeping, perf-conf SETs included, just
         returns: HiveServer2 applies it to the client's own session
-        and the gateway applies none of it."""
+        and the gateway applies none of it.
+
+        A query is parsed once and analyzed at intake, like
+        :meth:`_run_sql`'s. One that root cannot parse or analyze (a
+        demoted connection's query over its own temp view) returns at
+        once: the gateway cannot read its scans, so waiting out a
+        window for it buys no sharing."""
         is_query, plan = classify(self.spark, sql)
         if not is_query:
             if benign_command(plan):
@@ -478,127 +460,56 @@ class WorkSharingServer:
                 else self.jdbc_command_reflush_seconds,
             )
             return
-        job = self.submit(sql, is_query=True, prime_only=True)
+        if plan is None:
+            return
+        try:
+            plan = analyzed(to_df(self.spark, plan))
+        except Exception:  # HiveServer2 resolves it, or reports the error
+            return
+        job = self.submit(sql, is_query=True, plan=plan, prime_only=True)
         job.done_event.wait(timeout)
 
-    def _mirror_drop_view(
-        self, name: str, session_id: str
+    def answer_jdbc(
+        self, sql: str, views: frozenset[str] = frozenset()
     ) -> dict[str, Any] | None:
-        """Mirror ``DROP VIEW <name>`` when ``name`` is one of this
-        connection's mirrored temp views (round 10 — completes the
-        temp-view lifecycle: create-use-drop churn is the normal BI
-        pattern and demoting on the drop threw away the create's win).
-        Returns the 'mirrored' passthrough on success, None when the
-        name is not a mirrored view (→ the caller demotes: the drop
-        could target a SHARED catalog view, a real command).
-
-        On both engines DROP VIEW removes the session temp view first;
-        if the mirrored view SHADOWED a registered base table, the
-        gateway re-registers that single base view so the name resolves
-        exactly as it now does in the client's HiveServer2 session (the
-        catalog table). The view's entries leave the replay log; when
-        no mirrored views remain the session rejoins the shared
-        result-cache namespace — its catalog matches the shared one
-        again (the only commands ever run in a jdbc session come
-        through this mirror path)."""
-        low = name.lower()
-        with self._session_lock:
-            entries = self._jdbc_replay.get(session_id) or []
-            if not any(view == low for view, _ in entries):
-                return None
-        sess = self.session_for(session_id)
-        try:
-            sess.catalog.dropTempView(name)
-            if low in TABLES:
-                register_tables(sess, self._sf_dir, (low,))
-        except Exception:
-            # the gateway session may now diverge from HiveServer2's —
-            # demote, the only safe direction
-            return {"passthrough": "command"}
-        with self._session_lock:
-            kept = [
-                e for e in self._jdbc_replay.get(session_id, []) if e[0] != low
-            ]
-            self._jdbc_replay[session_id] = kept
-            if not kept:
-                self._dirty_sessions.discard(session_id)
-        self.results.invalidate_session(session_id)
-        return {"passthrough": "mirrored", "session": session_id}
-
-    def _mentions_mirrored_view(self, sql: str, session_id: str) -> bool:
-        """True when ``sql`` could reference a temp view mirrored for
-        this connection. Substring containment on the lowercased text —
-        deliberately over-approximate (a view name inside a string
-        literal routes to the session too): routing to the session is
-        always CORRECT (it holds the same catalog plus the views), only
-        root routing carries the wrong-rows hazard when a mirrored view
-        SHADOWS a base table, so misses must be impossible, false hits
-        merely forgo a merge."""
-        with self._session_lock:
-            names = [view for view, _ in self._jdbc_replay.get(session_id) or ()]
-        low = sql.lower()
-        return any(n in low for n in names)
-
-    def release_jdbc_session(self, session_id: str) -> None:
-        """Drop a JDBC connection's mirrored gateway session (round 10,
-        VERDICT r9 ask #3) — called by the proxy when the connection
-        closes, mirroring HiveServer2 dropping the client's temp views
-        with its session. Its private cached results die with it (a
-        later connection reusing the id would otherwise be served
-        results derived from the dead catalog)."""
-        with self._session_lock:
-            self._sessions.pop(session_id, None)
-            self._dirty_sessions.discard(session_id)
-            self._jdbc_replay.pop(session_id, None)
-        self.results.invalidate_session(session_id)
-
-    def answer_jdbc(self, sql: str, session_id: str | None = None) -> dict[str, Any] | None:
         """Full gateway answering for the JDBC-line proxy's merge
-        substitution (round 7, VERDICT r6 ask #7): instead of a
-        prime-only pass, the statement is executed THROUGH the window
-        as a normal job — detection, caching rewrite AND the MRShare
-        merge all apply, so two same-signature proxied statements in
-        one window cost one merged execution and HiveServer2 runs
-        neither. Returns {"columns", "dtypes", "rows"} for a complete
-        inline result; {"passthrough": "command"} for commands (the
-        proxy demotes the connection and forwards — commands mutate
-        HiveServer2 session state the gateway cannot see);
-        {"passthrough": "benign"} for session housekeeping, allowlisted
-        perf-conf SETs included (the proxy forwards it and the
-        connection stays clean; the gateway applies no client conf, so
-        a SET changes only the client's own HiveServer2 session);
-        {"fallback": True} when the statement executed through the
-        window but the result can't be substituted faithfully (error,
-        sink job, truncation past the inline cap) — the proxy then
-        forwards WITHOUT a second prime gate (the window pass already
-        happened) and HiveServer2's own execution still benefits from
-        whatever the window cached; None only when nothing ran
-        (pre-execution failure), where the proxy gates + forwards as
-        in round 6. The statement is classified once, by the parser of
-        the session it would run in, and commands are read from that
-        parse (:meth:`_answer_jdbc_command`).
+        substitution: instead of a prime-only pass, the statement is
+        executed THROUGH the window as a normal job — detection, caching
+        rewrite AND the MRShare merge all apply, so two same-signature
+        proxied statements in one window cost one merged execution and
+        HiveServer2 runs neither. ``views`` holds the lowercased names
+        of the temp views the connection created (the proxy keeps them;
+        the gateway holds no state per JDBC connection). Replies:
 
-        Queries resolve against the ROOT session: substitution is only
-        reachable from connections that have run no command, and such
-        connections see exactly the shared catalog — the same
-        clean-session argument the cross-client result cache rests on.
+        - ``{"columns", "dtypes", "rows"}`` for a complete inline
+          result;
+        - ``{"passthrough": "view"}`` for a query whose lowercased text
+          contains a name in ``views``: HiveServer2, which holds the
+          client's temp views, answers it. Containment over-approximates
+          (a view name inside a literal counts), so a view that shadows
+          a base table is never answered from root;
+        - ``{"passthrough": "view", "views": [...]}`` for a temp-view
+          create or drop the connection may keep (the new set of
+          names; :meth:`_answer_jdbc_command`);
+        - ``{"passthrough": "benign"}`` for session housekeeping,
+          allowlisted perf-conf SETs included: HiveServer2 applies it to
+          the client's own session, the gateway applies none of it;
+        - ``{"passthrough": "command"}`` for every other command: it
+          mutates HiveServer2 session state the gateway cannot see, so
+          the proxy demotes the connection;
+        - ``{"fallback": True}`` when the statement executed through
+          the window but the result can't be substituted faithfully
+          (error, sink job, truncation past the inline cap);
+        - None only when nothing ran (pre-execution failure).
 
-        Exception (round 10, VERDICT r9 ask #3): one class of command
-        no longer demotes. A deterministic
-        ``CREATE [OR REPLACE] TEMPORARY VIEW v AS <select>`` is
-        MIRRORED into a per-connection gateway session (created lazily,
-        id returned to the proxy, dropped on connection close via
-        :meth:`release_jdbc_session`) and the statement still forwards
-        so HiveServer2's session matches. From then on ``session_id``
-        arrives on every call and the connection's statements resolve
-        against that session — its temp views shadow exactly what the
-        client's HiveServer2 session shadows, MRShare merging keys by
-        session so cross-session merges never mix namespaces
-        (mrshare.py groups members by session), and the result cache keys
-        the session privately (``_dirty_sessions``). Nondeterministic
-        bodies, GLOBAL temp views, and every other DDL shape demote as
-        before. If the session is idle-reaped, ``session_for`` replays
-        the mirror log so the recreated catalog still matches.
+        On every reply but a result and ``command`` the proxy forwards
+        the statement without a prime gate and keeps the connection
+        clean. Queries parse and resolve against the ROOT session:
+        substitution is reachable only from connections that have run
+        no command but housekeeping and their own temp views, and a
+        query naming none of those views sees exactly the shared
+        catalog — the same clean-session argument the cross-client
+        result cache rests on.
 
         Cost note: a query whose result exceeds the inline cap is
         executed here, discarded, and re-executed by HiveServer2 after
@@ -606,32 +517,19 @@ class WorkSharingServer:
         dashboard-sized results (where the merge/cache/result-cache
         wins live) and taxes bulk extracts. Deployments serving
         mostly-bulk JDBC traffic should run the proxy without
-        ``answer`` (round-6 behavior: window priming only, single
-        execution always)."""
+        ``answer`` (window priming only, single execution always)."""
         try:
-            # view-bearing connections route to their session ONLY when
-            # the text could reference a mirrored view (lowercased
-            # substring over-approximation — catches backquoting and
-            # errs toward the session, never toward root): everything
-            # else answers from root, where cross-client MRShare
-            # merging and the shared result-cache namespace still
-            # apply. The common BI shape — one housekeeping view plus
-            # base-table dashboards — therefore keeps the merge win.
-            route_sid = (
-                session_id
-                if session_id is not None
-                and self._mentions_mirrored_view(sql, session_id)
-                else None
-            )
-            session = self.session_for(route_sid)
-            is_query, plan = classify(session, sql)
+            is_query, plan = classify(self.spark, sql)
             if is_query:
-                res = self._run_sql(sql, route_sid, session, True, plan, {}, True)
+                low = sql.lower()
+                if any(v in low for v in views):
+                    return {"passthrough": "view"}
+                res = self._run_sql(sql, None, self.spark, True, plan, {}, True)
         except Exception:
             return None
         if not is_query:
             try:
-                return self._answer_jdbc_command(sql, plan, session, session_id)
+                return self._answer_jdbc_command(sql, plan, views)
             except Exception:  # a command the gateway cannot read demotes
                 return {"passthrough": "command"}
         if (
@@ -650,52 +548,39 @@ class WorkSharingServer:
         }
 
     def _answer_jdbc_command(
-        self, sql: str, plan: Any, session: SparkSession, session_id: str | None
+        self, sql: str, plan: Any, views: frozenset[str]
     ) -> dict[str, Any]:
         """answer_jdbc's reply to a command, read from its parsed
-        ``plan``: benign, mirrored (temp-view create or drop), or a
-        demoting command."""
+        ``plan``: benign, a temp-view create or drop the connection
+        keeps (``views`` is its set of names before the statement), or
+        a demoting command.
+
+        A ``CREATE [OR REPLACE] TEMPORARY VIEW v`` of :func:`temp_view`'s
+        shape adds ``v`` when its body analyzes in root and its text
+        names no other view of the connection: then HiveServer2's
+        CREATE succeeds too, so a later ``DROP VIEW v`` drops that temp
+        view and can never reach a shared catalog view of the same
+        name. ``DROP VIEW [IF EXISTS] v`` removes ``v`` when the
+        connection created it. The gateway executes neither."""
         if benign_command(plan):
             # session housekeeping with provably no semantic effect
             # (USE default, conf reads, hive.server2.* transport knobs,
             # allowlisted perf-conf SETs): the proxy forwards it but
             # KEEPS substitution enabled — BI tools emit these at
             # connect, and demoting on them turned the merge win off
-            # for exactly the clients it targets. The gateway applies
-            # none of it: HiveServer2 applies a SET to the client's
-            # own session, and the gateway's sessions keep the
-            # server's configuration
+            # for exactly the clients it targets
             return {"passthrough": "benign"}
         view = temp_view(plan)
-        if view is not None and deterministic(analyzed(to_df(session, view[1]))):
-            name = view[0]
-            sid = session_id or f"jdbc-{uuid.uuid4().hex[:16]}"
-            try:
-                self.session_for(sid).sql(sql).collect()
-            except Exception:
-                # the gateway could not mirror it (view exists without
-                # OR REPLACE, recursive OR REPLACE over a registered
-                # base-table view): its session state may now diverge
-                # from what HiveServer2 will hold after the forward —
-                # demote, the only safe direction
+        if view is not None:
+            name = view[0].lower()
+            low = sql.lower()
+            if any(v in low for v in views - {name}):
                 return {"passthrough": "command"}
-            with self._session_lock:
-                # private result keys from now on: this session's text
-                # resolves through its views
-                self._dirty_sessions.add(sid)
-                self._jdbc_replay.setdefault(sid, []).append((name.lower(), sql))
-            # OR REPLACE of an earlier mirror: private entries derived
-            # from the old definition must not survive. No global
-            # epoch bump — the view is invisible to every other
-            # session, and this connection's own statements are
-            # serialized by the proxy pump.
-            self.results.invalidate_session(sid)
-            return {"passthrough": "mirrored", "session": sid}
+            to_df(self.spark, view[1])  # raises (→ demote) unless it analyzes
+            return {"passthrough": "view", "views": sorted(views | {name})}
         name = dropped_view(plan)
-        if name is not None and session_id is not None:
-            out = self._mirror_drop_view(name, session_id)
-            if out is not None:
-                return out
+        if name is not None and name.lower() in views:
+            return {"passthrough": "view", "views": sorted(views - {name.lower()})}
         return {"passthrough": "command"}
 
     def handle_request(self, req: dict[str, Any]) -> dict[str, Any]:

