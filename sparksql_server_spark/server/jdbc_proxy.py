@@ -66,8 +66,12 @@ Wire knowledge used (all public Apache Thrift / HiveServer2 spec):
 - TBinaryProtocol strict framing: ``i32(0x8001_0001) name:string
   seqid:i32 args:struct``; struct fields are ``type:byte id:i16
   value`` until a 0x00 stop byte; containers carry their element
-  types + count. ``ExecuteStatement`` args = field 1 struct
-  TExecuteStatementReq{1: TSessionHandle, 2: string statement, ...}.
+  types + count. ONE generic reader (:func:`_read`) decodes any value
+  — a struct into ``{field id: value}`` — and :func:`parse_call`
+  turns a message into a :class:`Call`; the proxy then reads the few
+  fields it needs by path through the TCLIService request structs
+  (``ExecuteStatement`` args field 1 = TExecuteStatementReq{1:
+  TSessionHandle, 2: string statement, ...}; see :meth:`Call.get`).
 - TSaslTransport (hive.server2.authentication=NONE → SASL/PLAIN):
   negotiation messages are ``status:byte len:i32 payload`` with status
   in 1..5 (START/OK/BAD/ERROR/COMPLETE); after the handshake every
@@ -75,8 +79,13 @@ Wire knowledge used (all public Apache Thrift / HiveServer2 spec):
   first byte is 0x00 — statuses are 1..5 — which disambiguates the two
   phases without tracking the server side of the handshake.
 - NOSASL (raw TBinaryProtocol, ``;auth=noSasl``): no framing; message
-  boundaries come from fully parsing each message, which the generic
-  field-skipper below does for arbitrary structs.
+  boundaries come from fully parsing each message.
+
+Both transports feed ONE unit path (``JdbcLineProxy._unit``): a raw
+message, or a SASL data frame parsed once into its messages, is either
+answered locally (exactly one complete message the proxy owns) or
+forwarded byte for byte after its ``ExecuteStatement`` calls are
+gated.
 
 Anything unparseable demotes the CONNECTION to blind pass-through
 (never corrupt, never drop — a proxy that breaks the wire is worse
@@ -96,7 +105,7 @@ import socket
 import socketserver
 import struct
 import threading
-from typing import Any, Callable, Optional
+from typing import Any, Callable, NamedTuple, Optional
 
 from sparksql_server_spark.plans.catalyst import kind, pylist
 
@@ -105,7 +114,19 @@ _STOP, _BOOL, _BYTE, _DOUBLE = 0, 2, 3, 4
 _I16, _I32, _I64, _STRING = 6, 8, 10, 11
 _STRUCT, _MAP, _SET, _LIST = 12, 13, 14, 15
 _UUID = 16  # thrift 0.18+
-_FIXED = {_BOOL: 1, _BYTE: 1, _DOUBLE: 8, _I16: 2, _I32: 4, _I64: 8, _UUID: 16}
+# fixed-width types: (width, struct format); a uuid reads as its bytes
+_FIXED = {
+    _BOOL: (1, ">?"),
+    _BYTE: (1, ">b"),
+    _DOUBLE: (8, ">d"),
+    _I16: (2, ">h"),
+    _I32: (4, ">i"),
+    _I64: (8, ">q"),
+    _UUID: (16, None),
+}
+# deepest nesting a message may have: TCLIService requests nest five
+# levels; a deeper message is malformed, not a reason to recurse
+_MAX_DEPTH = 64
 
 _VERSION_MASK = 0xFFFF0000
 _VERSION_1 = 0x80010000
@@ -120,247 +141,67 @@ def _need(buf: bytes, pos: int, n: int) -> None:
         raise _Incomplete
 
 
-def _skip(buf: bytes, pos: int, ttype: int) -> int:
-    """Advance past one value of ``ttype``; raises _Incomplete on a
-    short buffer, ValueError on a malformed/unknown type."""
-    width = _FIXED.get(ttype)
-    if width is not None:
+def _count(buf: bytes, pos: int) -> int:
+    """The non-negative i32 length or element count at ``pos``."""
+    _need(buf, pos, 4)
+    (n,) = struct.unpack_from(">i", buf, pos)
+    if n < 0:
+        raise ValueError("negative length")
+    return n
+
+
+def _read(buf: bytes, pos: int, ttype: int, depth: int = 0) -> tuple[Any, int]:
+    """Decode one TBinaryProtocol value of ``ttype`` at ``pos``; returns
+    ``(value, end)``. A struct reads as ``{field id: value}``, a list or
+    set as a list, a map as a dict, a string as bytes, a fixed-width
+    value as int, bool, float (double) or bytes (uuid). Raises
+    _Incomplete on a short buffer, ValueError on a negative length, an
+    unknown type or nesting past ``_MAX_DEPTH``."""
+    if depth > _MAX_DEPTH:
+        raise ValueError("thrift value nested too deep")
+    fixed = _FIXED.get(ttype)
+    if fixed is not None:
+        width, fmt = fixed
         _need(buf, pos, width)
-        return pos + width
+        if fmt is None:
+            return buf[pos : pos + width], pos + width
+        return struct.unpack_from(fmt, buf, pos)[0], pos + width
     if ttype == _STRING:
-        _need(buf, pos, 4)
-        (n,) = struct.unpack_from(">i", buf, pos)
-        if n < 0:
-            raise ValueError("negative string length")
+        n = _count(buf, pos)
         _need(buf, pos + 4, n)
-        return pos + 4 + n
+        return buf[pos + 4 : pos + 4 + n], pos + 4 + n
     if ttype == _STRUCT:
+        fields: dict[int, Any] = {}
         while True:
             _need(buf, pos, 1)
             ft = buf[pos]
-            pos += 1
             if ft == _STOP:
-                return pos
-            _need(buf, pos, 2)
-            pos = _skip(buf, pos + 2, ft)
+                return fields, pos + 1
+            _need(buf, pos + 1, 2)
+            (fid,) = struct.unpack_from(">h", buf, pos + 1)
+            fields[fid], pos = _read(buf, pos + 3, ft, depth + 1)
     if ttype in (_SET, _LIST):
-        _need(buf, pos, 5)
-        et = buf[pos]
-        (n,) = struct.unpack_from(">i", buf, pos + 1)
-        if n < 0:
-            raise ValueError("negative container size")
+        _need(buf, pos, 1)
+        et, n = buf[pos], _count(buf, pos + 1)
         pos += 5
+        items = []
         for _ in range(n):
-            pos = _skip(buf, pos, et)
-        return pos
+            item, pos = _read(buf, pos, et, depth + 1)
+            items.append(item)
+        return items, pos
     if ttype == _MAP:
-        _need(buf, pos, 6)
-        kt, vt = buf[pos], buf[pos + 1]
-        (n,) = struct.unpack_from(">i", buf, pos + 2)
-        if n < 0:
-            raise ValueError("negative map size")
+        _need(buf, pos, 2)
+        kt, vt, n = buf[pos], buf[pos + 1], _count(buf, pos + 2)
         pos += 6
+        entries: dict[Any, Any] = {}
         for _ in range(n):
-            pos = _skip(buf, pos, kt)
-            pos = _skip(buf, pos, vt)
-        return pos
+            start = pos
+            key, pos = _read(buf, pos, kt, depth + 1)
+            if isinstance(key, (dict, list)):  # unhashable: key by its bytes
+                key = buf[start:pos]
+            entries[key], pos = _read(buf, pos, vt, depth + 1)
+        return entries, pos
     raise ValueError(f"unknown thrift type {ttype}")
-
-
-def _statement_from_args(buf: bytes, pos: int) -> tuple[int, Optional[str]]:
-    """Walk the ExecuteStatement args struct; returns (end, statement).
-    The statement is args field 1 (TExecuteStatementReq) → field 2
-    (string). Every other field is skipped generically."""
-    stmt: Optional[str] = None
-    while True:
-        _need(buf, pos, 1)
-        ft = buf[pos]
-        pos += 1
-        if ft == _STOP:
-            return pos, stmt
-        _need(buf, pos, 2)
-        (fid,) = struct.unpack_from(">h", buf, pos)
-        pos += 2
-        if ft == _STRUCT and fid == 1:  # TExecuteStatementReq
-            while True:
-                _need(buf, pos, 1)
-                it = buf[pos]
-                pos += 1
-                if it == _STOP:
-                    break
-                _need(buf, pos, 2)
-                (iid,) = struct.unpack_from(">h", buf, pos)
-                pos += 2
-                if it == _STRING and iid == 2:  # statement
-                    _need(buf, pos, 4)
-                    (n,) = struct.unpack_from(">i", buf, pos)
-                    if n < 0:
-                        raise ValueError("negative string length")
-                    _need(buf, pos + 4, n)
-                    stmt = buf[pos + 4 : pos + 4 + n].decode("utf-8", "replace")
-                    pos += 4 + n
-                else:
-                    pos = _skip(buf, pos, it)
-        else:
-            pos = _skip(buf, pos, ft)
-
-
-def _handle_guid_from_args(
-    buf: bytes, pos: int
-) -> tuple[int, Optional[bytes], int, int, int]:
-    """Walk a TCLIService request args struct extracting the operation/
-    session handle guid and (for FetchResults) the fetchType,
-    orientation and maxRows; returns (end, guid|None, fetch_type,
-    orientation, max_rows). Path: args field 1 (the *Req struct) →
-    field 1 (T{Operation,Session}Handle) → field 1 (THandleIdentifier)
-    → field 1 (binary guid). Everything else is skipped generically."""
-    guid: Optional[bytes] = None
-    fetch_type = 0
-    orientation = 0  # TFetchOrientation.FETCH_NEXT
-    max_rows = 0  # <=0: serve everything remaining in one batch
-    while True:
-        _need(buf, pos, 1)
-        ft = buf[pos]
-        pos += 1
-        if ft == _STOP:
-            return pos, guid, fetch_type, orientation, max_rows
-        _need(buf, pos, 2)
-        (fid,) = struct.unpack_from(">h", buf, pos)
-        pos += 2
-        if ft == _STRUCT and fid == 1:  # the *Req struct
-            while True:
-                _need(buf, pos, 1)
-                rt = buf[pos]
-                pos += 1
-                if rt == _STOP:
-                    break
-                _need(buf, pos, 2)
-                (rid,) = struct.unpack_from(">h", buf, pos)
-                pos += 2
-                if rt == _STRUCT and rid == 1:  # handle struct
-                    while True:
-                        _need(buf, pos, 1)
-                        ht = buf[pos]
-                        pos += 1
-                        if ht == _STOP:
-                            break
-                        _need(buf, pos, 2)
-                        (hid,) = struct.unpack_from(">h", buf, pos)
-                        pos += 2
-                        if ht == _STRUCT and hid == 1:  # THandleIdentifier
-                            while True:
-                                _need(buf, pos, 1)
-                                it = buf[pos]
-                                pos += 1
-                                if it == _STOP:
-                                    break
-                                _need(buf, pos, 2)
-                                (iid,) = struct.unpack_from(">h", buf, pos)
-                                pos += 2
-                                if it == _STRING and iid == 1:  # guid
-                                    _need(buf, pos, 4)
-                                    (n,) = struct.unpack_from(">i", buf, pos)
-                                    if n < 0:
-                                        raise ValueError("negative guid length")
-                                    _need(buf, pos + 4, n)
-                                    guid = bytes(buf[pos + 4 : pos + 4 + n])
-                                    pos += 4 + n
-                                else:
-                                    pos = _skip(buf, pos, it)
-                        else:
-                            pos = _skip(buf, pos, ht)
-                elif rt == _I16 and rid == 4:  # TFetchResultsReq.fetchType
-                    _need(buf, pos, 2)
-                    (fetch_type,) = struct.unpack_from(">h", buf, pos)
-                    pos += 2
-                elif rt == _I32 and rid == 2:  # TFetchResultsReq.orientation
-                    _need(buf, pos, 4)
-                    (orientation,) = struct.unpack_from(">i", buf, pos)
-                    pos += 4
-                elif rt == _I64 and rid == 3:  # TFetchResultsReq.maxRows
-                    _need(buf, pos, 8)
-                    (max_rows,) = struct.unpack_from(">q", buf, pos)
-                    pos += 8
-                else:
-                    pos = _skip(buf, pos, rt)
-        else:
-            pos = _skip(buf, pos, ft)
-
-
-# methods whose requests reference an operation handle the proxy may
-# own; anything else passes through untouched
-_OP_METHODS = frozenset(
-    {
-        "GetOperationStatus",
-        "GetResultSetMetadata",
-        "FetchResults",
-        "CloseOperation",
-        "CancelOperation",
-    }
-)
-
-
-def _open_conf_from_args(
-    buf: bytes, pos: int
-) -> tuple[int, dict[str, str], Optional[int]]:
-    """TOpenSessionReq's configuration overlay (field 4,
-    map<string,string>) and client_protocol (field 1, i32), plus the
-    args end offset. The overlay is the connect-time session state the
-    gateway cannot see — substitution must know it; the protocol
-    version gates the columnar (V6+) result encoding the substitution
-    emits."""
-    conf: dict[str, str] = {}
-    proto: Optional[int] = None
-    while True:
-        _need(buf, pos, 1)
-        ft = buf[pos]
-        pos += 1
-        if ft == _STOP:
-            return pos, conf, proto
-        _need(buf, pos, 2)
-        (fid,) = struct.unpack_from(">h", buf, pos)
-        pos += 2
-        if ft == _STRUCT and fid == 1:  # TOpenSessionReq
-            while True:
-                _need(buf, pos, 1)
-                rt = buf[pos]
-                pos += 1
-                if rt == _STOP:
-                    break
-                _need(buf, pos, 2)
-                (rid,) = struct.unpack_from(">h", buf, pos)
-                pos += 2
-                if rt == _I32 and rid == 1:  # client_protocol
-                    _need(buf, pos, 4)
-                    (proto,) = struct.unpack_from(">i", buf, pos)
-                    pos += 4
-                elif rt == _MAP and rid == 4:  # configuration
-                    _need(buf, pos, 6)
-                    kt, vt = buf[pos], buf[pos + 1]
-                    (n,) = struct.unpack_from(">i", buf, pos + 2)
-                    if n < 0:
-                        raise ValueError("negative map size")
-                    pos += 6
-                    for _ in range(n):
-                        if kt == _STRING and vt == _STRING:
-                            _need(buf, pos, 4)
-                            (kl,) = struct.unpack_from(">i", buf, pos)
-                            _need(buf, pos + 4, kl)
-                            k = buf[pos + 4 : pos + 4 + kl].decode("utf-8", "replace")
-                            pos += 4 + kl
-                            _need(buf, pos, 4)
-                            (vl,) = struct.unpack_from(">i", buf, pos)
-                            _need(buf, pos + 4, vl)
-                            v = buf[pos + 4 : pos + 4 + vl].decode("utf-8", "replace")
-                            pos += 4 + vl
-                            conf[k] = v
-                        else:
-                            pos = _skip(buf, pos, kt)
-                            pos = _skip(buf, pos, vt)
-                else:
-                    pos = _skip(buf, pos, rt)
-        else:
-            pos = _skip(buf, pos, ft)
 
 
 _HIVECONF = "set:hiveconf:"
@@ -519,78 +360,74 @@ def dropped_view(plan: Any) -> Optional[str]:
     return parts[0] if len(parts) == 1 and _plain_name(parts[0]) else None
 
 
-def parse_call_ex(
-    buf: bytes, pos: int = 0
-) -> Optional[
-    tuple[
-        int,
-        str,
-        int,
-        Optional[str],
-        Optional[bytes],
-        int,
-        int,
-        Optional[dict],
-        Optional[int],
-        int,
-    ]
-]:
+class Call(NamedTuple):
+    """One strict-TBinaryProtocol CALL message: where it ends, its
+    method ``name`` and ``seqid``, and its decoded ``args`` struct
+    (:func:`_read`). Paths into ``args`` follow the public TCLIService
+    IDL: every request is args field 1, the T<method>Req struct."""
+
+    end: int
+    name: str
+    seqid: int
+    args: dict
+
+    def get(self, path: tuple[int, ...], typ: type) -> Any:
+        """The ``args`` value at ``path`` (field ids, outermost first)
+        when it is exactly a ``typ``, else None: a field of the wrong
+        type reads as absent."""
+        value: Any = self.args
+        for fid in path:
+            value = value.get(fid) if type(value) is dict else None
+        return value if type(value) is typ else None
+
+    @property
+    def statement(self) -> Optional[str]:
+        """ExecuteStatement's SQL (TExecuteStatementReq field 2), or
+        None for every other call and for an empty statement."""
+        if self.name != "ExecuteStatement":
+            return None
+        sql = self.get((1, 2), bytes)
+        return sql.decode("utf-8", "replace") if sql else None
+
+
+def parse_call(buf: bytes, pos: int = 0) -> Optional[Call]:
     """Parse one strict-TBinaryProtocol CALL message starting at
-    ``pos``. Returns ``(end, method_name, seqid, statement, op_guid,
-    fetch_type, orientation, open_conf, client_protocol, max_rows)`` —
-    ``statement`` for ExecuteStatement, ``op_guid``/``fetch_type``/
-    ``orientation``/``max_rows`` for operation-scoped methods,
-    ``open_conf`` (the configuration overlay map) and
-    ``client_protocol`` for OpenSession — or None when the buffer ends
-    mid-message (read more and retry). Raises ValueError on bytes that
-    are not a strict Thrift message."""
+    ``pos``; None when the buffer ends mid-message (read more and
+    retry). Raises ValueError on bytes that are not a strict Thrift
+    message."""
     try:
         _need(buf, pos, 4)
         (version,) = struct.unpack_from(">I", buf, pos)
         if (version & _VERSION_MASK) != _VERSION_1:
             raise ValueError(f"not a strict thrift message: 0x{version:08x}")
-        pos += 4
-        _need(buf, pos, 4)
-        (nlen,) = struct.unpack_from(">i", buf, pos)
-        if not 0 <= nlen <= 1024:
+        if _count(buf, pos + 4) > 1024:
             raise ValueError("implausible method-name length")
-        _need(buf, pos + 4, nlen)
-        name = buf[pos + 4 : pos + 4 + nlen].decode("utf-8", "replace")
-        pos += 4 + nlen
-        _need(buf, pos, 4)
-        (seqid,) = struct.unpack_from(">i", buf, pos)
-        pos += 4
-        stmt: Optional[str] = None
-        guid: Optional[bytes] = None
-        fetch_type = 0
-        orientation = 0
-        max_rows = 0
-        open_conf: Optional[dict] = None
-        open_proto: Optional[int] = None
-        if name == "ExecuteStatement":
-            pos, stmt = _statement_from_args(buf, pos)
-        elif name in _OP_METHODS:
-            pos, guid, fetch_type, orientation, max_rows = _handle_guid_from_args(
-                buf, pos
-            )
-        elif name == "OpenSession":
-            pos, open_conf, open_proto = _open_conf_from_args(buf, pos)
-        else:
-            pos = _skip(buf, pos, _STRUCT)
-        return (
-            pos,
-            name,
-            seqid,
-            stmt,
-            guid,
-            fetch_type,
-            orientation,
-            open_conf,
-            open_proto,
-            max_rows,
-        )
+        name, pos = _read(buf, pos + 4, _STRING)
+        seqid, pos = _read(buf, pos, _I32)
+        args, end = _read(buf, pos, _STRUCT)
+        return Call(end, name.decode("utf-8", "replace"), seqid, args)
     except _Incomplete:
         return None
+
+
+def parse_frame(payload: bytes) -> tuple[list[Call], bool]:
+    """The calls in a SASL data frame's payload, parsed once, in order
+    (normally exactly one; a batching client may pack more), and
+    whether they fill the payload exactly. A malformed or partial tail
+    ends the list: the calls before it still count, the tail is
+    HiveServer2's to reject."""
+    calls: list[Call] = []
+    pos = 0
+    try:
+        while pos < len(payload):
+            call = parse_call(payload, pos)
+            if call is None:
+                break
+            calls.append(call)
+            pos = call.end
+    except ValueError:
+        pass
+    return calls, pos == len(payload)
 
 
 # ---------------------------------------------------------------------------
@@ -683,8 +520,7 @@ _HIVE_STRING, _HIVE_TIMESTAMP, _HIVE_DATE = 7, 8, 17
 
 
 # Spark dtype simpleString (prefix) -> (encoding kind, Hive TTypeId).
-# Schema-first: when the gateway ships df.dtypes, the declared type
-# decides — an empty or all-NULL result keeps its column types and the
+# The declared type decides — an empty or all-NULL result keeps its column types and the
 # same statement always reports the same schema.
 _DTYPE_KINDS = {
     "boolean": ("bool", _HIVE_BOOLEAN),
@@ -700,63 +536,22 @@ _DTYPE_KINDS = {
 
 
 def column_kinds(
-    columns: list[list], dtypes: list[str] | None = None
+    columns: list[list], dtypes: list[str] | None
 ) -> tuple[list[str], list[int]]:
-    """(encoding kind, Hive TTypeId) per column.
-
-    Schema-first: with ``dtypes`` (Spark ``df.dtypes`` simpleStrings,
-    shipped by the gateway) the declared type decides, so empty and
-    all-NULL results report the same schema as populated ones.
-    Without dtypes, fall back to inferring from the collected Python
-    values — Spark columns are homogeneously typed, so the first
-    non-null value decides and a mixed column (never produced by a
-    DataFrame collect) falls back to strings. int64-overflowing
-    Python ints (possible via DECIMAL(38)) and every non-scalar
-    render as strings, which is also Hive's wire format for those
-    types."""
-    import datetime as _dt
-
-    if dtypes is not None and len(dtypes) == len(columns):
-        kinds, type_ids = [], []
-        for dt_str in dtypes:
-            base = dt_str.split("(")[0]
-            if base == "timestamp_ntz":
-                base = "timestamp"
-            kind, tid = _DTYPE_KINDS.get(base, ("string", _HIVE_STRING))
-            kinds.append(kind)
-            type_ids.append(tid)
-        return kinds, type_ids
-
-    kinds: list[str] = []
-    type_ids: list[int] = []
-    for col in columns:
-        nn = [v for v in col if v is not None]
-        kind, tid = "string", _HIVE_STRING
-        if nn:
-            v0 = nn[0]
-            if isinstance(v0, bool):
-                if all(isinstance(v, bool) for v in nn):
-                    kind, tid = "bool", _HIVE_BOOLEAN
-            elif isinstance(v0, int):
-                if all(
-                    isinstance(v, int)
-                    and not isinstance(v, bool)
-                    and -(1 << 63) <= v < (1 << 63)
-                    for v in nn
-                ):
-                    kind, tid = "i64", _HIVE_BIGINT
-            elif isinstance(v0, float):
-                if all(isinstance(v, float) for v in nn):
-                    kind, tid = "double", _HIVE_DOUBLE
-            elif isinstance(v0, _dt.datetime):
-                if all(isinstance(v, _dt.datetime) for v in nn):
-                    tid = _HIVE_TIMESTAMP
-            elif isinstance(v0, _dt.date):
-                if all(
-                    isinstance(v, _dt.date) and not isinstance(v, _dt.datetime)
-                    for v in nn
-                ):
-                    tid = _HIVE_DATE
+    """(encoding kind, Hive TTypeId) per column, read from ``dtypes``
+    (Spark ``df.dtypes`` simpleStrings, which the gateway ships with
+    every result): the declared type decides, so empty and all-NULL
+    results report the same schema as populated ones. Raises
+    ValueError unless ``dtypes`` names one type per column — the
+    caller then forwards the statement instead of answering it."""
+    if dtypes is None or len(dtypes) != len(columns):
+        raise ValueError("result carries no dtypes for its columns")
+    kinds, type_ids = [], []
+    for dt_str in dtypes:
+        base = dt_str.split("(")[0]
+        if base == "timestamp_ntz":
+            base = "timestamp"
+        kind, tid = _DTYPE_KINDS.get(base, ("string", _HIVE_STRING))
         kinds.append(kind)
         type_ids.append(tid)
     return kinds, type_ids
@@ -878,24 +673,6 @@ def encode_status_only_resp(name: str, seqid: int) -> bytes:
     return _reply(name, seqid, _f_struct(1, _STATUS_OK) + b"\x00")
 
 
-def statements_in_frame(payload: bytes) -> list[str]:
-    """Every ExecuteStatement SQL string in a SASL data frame's payload
-    (normally exactly one message per frame; a batching client may pack
-    more). Unparseable payloads yield [] — forwarded ungated."""
-    out: list[str] = []
-    pos = 0
-    try:
-        while pos < len(payload):
-            parsed = parse_call_ex(payload, pos)
-            if parsed is None:  # trailing partial message — HS2's problem
-                break
-            pos, name, stmt = parsed[0], parsed[1], parsed[3]
-            if name == "ExecuteStatement" and stmt:
-                out.append(stmt)
-    except ValueError:
-        return []
-    return out
-
 
 class _Conn:
     """Per-connection interception state."""
@@ -904,7 +681,6 @@ class _Conn:
         "clean",
         "ops",
         "wlock",
-        "skip_gate_once",
         "views",
     )
 
@@ -918,12 +694,6 @@ class _Conn:
         # HiveServer2 holds the views, and a statement naming one is
         # forwarded to it
         self.views: frozenset[str] = frozenset()
-        # set when the NEXT forwarded statement must skip the prime
-        # gate: answer() already ran it through a full window batch
-        # before declining substitution (a second window wait buys
-        # nothing), or it is whitelisted benign housekeeping with no
-        # catalog effect to flush (benign_command)
-        self.skip_gate_once = False
         # locally-answered operations: guid -> {"columns", "colmajor",
         # "kinds", "type_ids", "n_rows", "offset"} — FetchResults
         # serves [offset, offset+maxRows) per FETCH_NEXT and advances
@@ -1036,7 +806,10 @@ class JdbcLineProxy:
         return self
 
     def stop(self) -> None:
-        self._tcp.shutdown()
+        # socketserver's shutdown() waits for a serve_forever loop, so
+        # an unstarted proxy only closes its socket
+        if self._thread.is_alive():
+            self._tcp.shutdown()
         self._tcp.server_close()
 
     def _bump(self, counter: str) -> None:
@@ -1128,214 +901,189 @@ class JdbcLineProxy:
         conn: _Conn,
         mode: str,
     ) -> tuple[bytes, bool]:
-        """Forward every COMPLETE unit at the head of ``buf``; returns
-        (unconsumed tail, demoted). ``demoted`` means the tail is not
-        the protocol we thought — the caller flushes it and goes blind.
-        Forwarded bytes are consumed from the tail immediately, so a
-        mid-stream demotion can never re-send them. Units the gateway
-        answers locally are consumed WITHOUT forwarding, their
-        synthesized response written straight back to the client."""
+        """Hand every COMPLETE unit at the head of ``buf`` to
+        :meth:`_unit`; returns (unconsumed tail, demoted). A unit is a
+        raw NOSASL message or a SASL data frame; SASL negotiation
+        messages pass straight through. ``demoted`` means the tail is
+        not the protocol we thought — the caller flushes it and goes
+        blind. Handled units are consumed from the tail immediately,
+        so a mid-stream demotion can never re-send them."""
         while buf:
             if mode == "raw":
                 try:
-                    parsed = parse_call_ex(buf, 0)
+                    call = parse_call(buf)
                 except ValueError:
                     return buf, True
-                if parsed is None:
+                if call is None:
                     break  # incomplete message
-                (
-                    end, name, seqid, stmt, guid,
-                    ftype, orient, oconf, oproto, mrows,
-                ) = parsed
-                if name == "OpenSession":
-                    self._apply_open_fence(conn, oconf, oproto)
-                reply = self._local_reply(
-                    conn, name, seqid, stmt, guid, ftype, orient, mrows
-                )
-                if reply is not None:
-                    with conn.wlock:
-                        client.sendall(reply)
-                    buf = buf[end:]
+                n, calls, whole = call.end, [call], True
+            else:
+                # SASL: negotiation messages (status 1..5) pass through;
+                # data frames (first byte 0x00: length < 16 MiB) may
+                # carry an ExecuteStatement and are held for the gate
+                b0 = buf[0]
+                if 1 <= b0 <= 5:
+                    if len(buf) < 5:
+                        break
+                    (n,) = struct.unpack_from(">i", buf, 1)
+                    if n < 0:
+                        return buf, True
+                    if len(buf) < 5 + n:
+                        break
+                    up.sendall(buf[: 5 + n])
+                    buf = buf[5 + n :]
                     continue
-                if name == "ExecuteStatement" and stmt:
-                    if conn.skip_gate_once:
-                        # answer() already ran this statement through a
-                        # full window batch before declining — gating it
-                        # again would pay a second window wait for zero
-                        # additional sharing
-                        conn.skip_gate_once = False
-                    else:
-                        self._gate_safely(stmt)
-                up.sendall(buf[:end])
-                buf = buf[end:]
-                continue
-            # SASL: negotiation messages (status 1..5) pass through;
-            # data frames (first byte 0x00: length < 16 MiB) may carry
-            # an ExecuteStatement and are held for the gate
-            b0 = buf[0]
-            if 1 <= b0 <= 5:
-                if len(buf) < 5:
+                if b0 != 0:
+                    return buf, True
+                if len(buf) < 4:
                     break
-                (n,) = struct.unpack_from(">i", buf, 1)
+                (n,) = struct.unpack_from(">i", buf, 0)
                 if n < 0:
                     return buf, True
-                if len(buf) < 5 + n:
+                n += 4
+                if len(buf) < n:
                     break
-                up.sendall(buf[: 5 + n])
-                buf = buf[5 + n :]
-                continue
-            if b0 != 0:
-                return buf, True
-            if len(buf) < 4:
-                break
-            (n,) = struct.unpack_from(">i", buf, 0)
-            if n < 0:
-                return buf, True
-            if len(buf) < 4 + n:
-                break
-            payload = buf[4 : 4 + n]
-            # session fences first, over EVERY message in the frame: a
-            # pipelining client may pack a non-benign OpenSession
-            # together with other messages in one frame, and
-            # _frame_local_reply only inspects single-message frames —
-            # without this walk such an overlay would escape demotion
-            # and the connection would keep substituting against state
-            # the gateway cannot see (review r7)
-            self._apply_frame_fences(conn, payload)
-            reply = self._frame_local_reply(conn, payload)
-            if reply is not None:
-                with conn.wlock:
-                    client.sendall(struct.pack(">i", len(reply)) + reply)
-                buf = buf[4 + n :]
-                continue
-            for stmt in statements_in_frame(payload):
-                if conn.skip_gate_once:
-                    conn.skip_gate_once = False
-                else:
-                    self._gate_safely(stmt)
-            up.sendall(buf[: 4 + n])
-            buf = buf[4 + n :]
+                calls, whole = parse_frame(buf[4:n])
+            self._unit(conn, client, up, buf[:n], calls, whole, mode == "sasl")
+            buf = buf[n:]
         return buf, False
 
-    def _apply_open_fence(
-        self, conn: _Conn, oconf: Optional[dict], oproto: Optional[int]
-    ) -> None:
-        """Demote a connection whose OpenSession the substitution
-        cannot serve faithfully: a non-benign configuration overlay
-        (connect-time session state the gateway cannot see), or a
-        client protocol below V6 (=5) — such clients read the
-        row-based TRowSet arm, and the synthesized results are
-        columnar-only, so substituting would hand them empty rows."""
-        if oconf and not benign_open_conf(oconf):
-            conn.clean = False
-        if oproto is not None and oproto < 5:
-            conn.clean = False
-
-    def _apply_frame_fences(self, conn: _Conn, payload: bytes) -> None:
-        """Walk every message in a SASL data frame and apply the
-        OpenSession fences (conf overlay, protocol version).
-        Unparseable payloads apply nothing — they also answer nothing
-        and forward ungated, so no substitution can follow them on a
-        wrong premise."""
-        pos = 0
-        try:
-            while pos < len(payload):
-                parsed = parse_call_ex(payload, pos)
-                if parsed is None:
-                    break
-                pos = parsed[0]
-                if parsed[1] == "OpenSession":
-                    self._apply_open_fence(conn, parsed[7], parsed[8])
-        except ValueError:
-            return
-
-    def _frame_local_reply(self, conn: _Conn, payload: bytes) -> Optional[bytes]:
-        """Local reply for a SASL data frame, when the frame carries
-        exactly ONE message the proxy handles itself; multi-message
-        frames (batching clients) always pass through. Session fences
-        were already applied by _apply_frame_fences."""
-        try:
-            parsed = parse_call_ex(payload, 0)
-        except ValueError:
-            return None
-        if parsed is None or parsed[0] != len(payload):
-            return None
-        (
-            _end, name, seqid, stmt, guid,
-            ftype, orient, _oconf, _oproto, mrows,
-        ) = parsed
-        return self._local_reply(conn, name, seqid, stmt, guid, ftype, orient, mrows)
-
-    def _local_reply(
+    def _unit(
         self,
         conn: _Conn,
-        name: str,
-        seqid: int,
-        stmt: Optional[str],
-        guid: Optional[bytes],
-        ftype: int,
-        orient: int = 0,
-        mrows: int = 0,
-    ) -> Optional[bytes]:
-        """Synthesized response bytes when the proxy owns this request,
-        else None (caller gates/forwards as usual)."""
-        if name == "ExecuteStatement" and stmt:
-            if self.answer is None or not conn.clean:
-                return None
-            try:
-                res = self.answer(stmt, conn.views)
-                if res is None:
-                    return None  # pre-execution failure — gate + forward
-                if res.get("passthrough") == "command":
-                    # mutates HiveServer2 session state the gateway
-                    # cannot see: demote this connection for good,
-                    # forward
-                    conn.clean = False
-                    return None
-                if res.get("passthrough") or res.get("fallback"):
-                    # benign housekeeping (benign_command), a statement
-                    # over or creating/dropping this connection's own
-                    # temp views, or one the window already ran but
-                    # cannot substitute (error/sink/truncated): forward
-                    # so HiveServer2 runs it in this client's session,
-                    # keep the connection clean, and skip the gate — no
-                    # catalog effect to flush, and a (second) window
-                    # pass buys no sharing
-                    if "views" in res:
-                        conn.views = frozenset(res["views"])
-                    conn.skip_gate_once = True
-                    return None
-                import os as _os
+        client: socket.socket,
+        up: socket.socket,
+        unit: bytes,
+        calls: list[Call],
+        whole: bool,
+        sasl: bool,
+    ) -> None:
+        """Answer or forward one unit: ``unit`` is its bytes, ``calls``
+        the messages in it that parsed, ``whole`` whether they fill it.
 
-                op_guid, secret = _os.urandom(16), _os.urandom(16)
-                names = list(res.get("columns") or [])
-                rows = [list(r) for r in res.get("rows") or []]
-                colmajor = [[row[i] for row in rows] for i in range(len(names))]
-                kinds, type_ids = column_kinds(colmajor, res.get("dtypes"))
-            except Exception:
-                # malformed answer payload (short row, non-iterable):
-                # fall back to gate+forward instead of letting the
-                # exception unwind the connection pump (review r7)
-                return None
-            conn.ops[op_guid] = {
-                "columns": names,
-                "colmajor": colmajor,
-                "kinds": kinds,
-                "type_ids": type_ids,
-                "n_rows": len(rows),
-                "offset": 0,  # fetch cursor (FETCH_NEXT advances it)
-            }
-            self._bump("statements_answered")
-            return encode_execute_resp(seqid, op_guid, secret)
-        if guid is None or guid not in conn.ops:
+        The OpenSession fences apply to every parsed message first: a
+        pipelining client may pack a non-benign OpenSession together
+        with other messages in one frame, and such an overlay must
+        still demote the connection. The proxy answers a unit only
+        when it is exactly one complete message it owns (a SASL reply
+        goes back as one frame); otherwise each parsed
+        ``ExecuteStatement`` is gated — unless the answer path already
+        ran it through the window — and the unit's bytes are forwarded
+        unchanged."""
+        for call in calls:
+            if call.name == "OpenSession":
+                self._apply_open_fence(conn, call)
+        gate = True
+        if whole and len(calls) == 1:
+            reply, gate = self._local_reply(conn, calls[0])
+            if reply is not None:
+                if sasl:
+                    reply = struct.pack(">i", len(reply)) + reply
+                with conn.wlock:
+                    client.sendall(reply)
+                return
+        if gate:
+            for call in calls:
+                if stmt := call.statement:
+                    self._gate_safely(stmt)
+        up.sendall(unit)
+
+    @staticmethod
+    def _apply_open_fence(conn: _Conn, call: Call) -> None:
+        """Demote a connection whose OpenSession the substitution
+        cannot serve faithfully: a non-benign configuration overlay
+        (TOpenSessionReq field 4 — connect-time session state the
+        gateway cannot see), or a client protocol (field 1) below V6
+        (=5) — such clients read the row-based TRowSet arm, and the
+        synthesized results are columnar-only, so substituting would
+        hand them empty rows."""
+        overlay = call.get((1, 4), dict) or {}
+        conf = {
+            k.decode("utf-8", "replace"): v.decode("utf-8", "replace")
+            for k, v in overlay.items()
+            if type(k) is bytes and type(v) is bytes
+        }
+        if conf and not benign_open_conf(conf):
+            conn.clean = False
+        proto = call.get((1, 1), int)
+        if proto is not None and proto < 5:
+            conn.clean = False
+
+    def _local_reply(self, conn: _Conn, call: Call) -> tuple[Optional[bytes], bool]:
+        """``(reply, gate)``: the synthesized response bytes when the
+        proxy owns this request, else None and whether the forwarded
+        statement still needs the prime gate (False once the answer
+        path has run it through a full window batch)."""
+        stmt = call.statement
+        if not stmt:
+            return self._op_reply(conn, call), True
+        if self.answer is None or not conn.clean:
+            return None, True
+        try:
+            res = self.answer(stmt, conn.views)
+            if res is None:
+                return None, True  # pre-execution failure — gate + forward
+            if res.get("passthrough") == "command":
+                # mutates HiveServer2 session state the gateway
+                # cannot see: demote this connection for good,
+                # forward
+                conn.clean = False
+                return None, True
+            if res.get("passthrough") or res.get("fallback"):
+                # benign housekeeping (benign_command), a statement
+                # over or creating/dropping this connection's own
+                # temp views, or one the window already ran but
+                # cannot substitute (error/sink/truncated): forward
+                # so HiveServer2 runs it in this client's session,
+                # keep the connection clean, and skip the gate — no
+                # catalog effect to flush, and a (second) window
+                # pass buys no sharing
+                if "views" in res:
+                    conn.views = frozenset(res["views"])
+                return None, False
+            import os as _os
+
+            op_guid, secret = _os.urandom(16), _os.urandom(16)
+            names = list(res.get("columns") or [])
+            rows = [list(r) for r in res.get("rows") or []]
+            colmajor = [[row[i] for row in rows] for i in range(len(names))]
+            kinds, type_ids = column_kinds(colmajor, res.get("dtypes"))
+        except Exception:
+            # malformed answer payload (short row, non-iterable, no
+            # dtypes for its columns): fall back to gate+forward
+            # instead of letting the exception unwind the
+            # connection pump (review r7)
+            return None, True
+        conn.ops[op_guid] = {
+            "columns": names,
+            "colmajor": colmajor,
+            "kinds": kinds,
+            "type_ids": type_ids,
+            "n_rows": len(rows),
+            "offset": 0,  # fetch cursor (FETCH_NEXT advances it)
+        }
+        self._bump("statements_answered")
+        return encode_execute_resp(call.seqid, op_guid, secret), False
+
+    @staticmethod
+    def _op_reply(conn: _Conn, call: Call) -> Optional[bytes]:
+        """The response to a request naming an operation the proxy
+        answered, else None. The handle is T<method>Req field 1 →
+        TOperationHandle field 1 → THandleIdentifier field 1 (guid)."""
+        guid = call.get((1, 1, 1, 1), bytes)
+        op = conn.ops.get(guid) if guid is not None else None
+        if op is None:
             return None
-        op = conn.ops[guid]
+        name, seqid = call.name, call.seqid
         if name == "GetOperationStatus":
             return encode_status_resp(seqid)
         if name == "GetResultSetMetadata":
             return encode_metadata_resp(seqid, op["columns"], op["type_ids"])
         if name == "FetchResults":
-            if ftype != 0:  # operation-log fetch: empty batch
+            # TFetchResultsReq{2: orientation, 3: maxRows, 4: fetchType}
+            orient = call.get((1, 2), int) or 0
+            mrows = call.get((1, 3), int) or 0
+            if call.get((1, 4), int):  # operation-log fetch: empty batch
                 return encode_fetch_resp(seqid, [])
             if orient not in (0, 4):
                 # HiveServer2 supports only FETCH_NEXT/FETCH_FIRST and

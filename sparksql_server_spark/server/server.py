@@ -44,7 +44,9 @@ objects + jars over the wire and deserialized them with a custom
 classloader (ClassLoaderOIS — RCE by design). We accept only SQL
 text, and the gateway's sessions refuse the SQL functions that call
 JVM methods by name (``reflect``, ``java_method``, ``try_reflect``;
-:func:`refuse_reflection`), so no code crosses the boundary.
+:func:`refuse_reflection`), as does every session built on the
+SparkContext after the gateway, HiveServer2's per-connection sessions
+included, so no code crosses the boundary.
 """
 
 from __future__ import annotations
@@ -91,14 +93,20 @@ _REFLECTION = ("reflect", "java_method", "try_reflect")
 
 
 def refuse_reflection(session: SparkSession) -> None:
-    """Drop the reflection functions from ``session``'s function
-    registry: a call to one then fails analysis with
-    UNRESOLVED_ROUTINE. Each ``newSession()`` starts from Spark's
-    built-in registry again, so every gateway session needs the call."""
-    registry = session._jsparkSession.sessionState().functionRegistry()
+    """Drop the reflection functions from Spark's built-in function
+    registry and from ``session``'s already-built one: a call to one
+    then fails analysis with UNRESOLVED_ROUTINE. Every session built
+    afterwards refuses them too — ``newSession()`` clones the built-in
+    registry, a cloned session copies its parent's — so the gateway's
+    named sessions and HiveServer2's per-connection sessions need no
+    call of their own."""
     ident = jvm("org.apache.spark.sql.catalyst.FunctionIdentifier")
-    for name in _REFLECTION:
-        registry.dropFunction(ident.apply(name))
+    for registry in (
+        jvm("org.apache.spark.sql.catalyst.analysis.FunctionRegistry").builtin(),
+        session._jsparkSession.sessionState().functionRegistry(),
+    ):
+        for name in _REFLECTION:
+            registry.dropFunction(ident.apply(name))
 
 
 class WorkSharingServer:
@@ -230,10 +238,15 @@ class WorkSharingServer:
         return self
 
     def shutdown(self) -> None:
+        """Stop what :meth:`start` started: socketserver's shutdown()
+        waits for a serve_forever loop, so a server that never started
+        only closes its socket and its executor."""
         self._stop.set()
-        self._tcp.shutdown()
+        if self._tcp_thread.is_alive():
+            self._tcp.shutdown()
         self._tcp.server_close()
-        self._loop_thread.join(timeout=30)
+        if self._loop_thread.is_alive():
+            self._loop_thread.join(timeout=30)
         self.executor.close()
 
     def _run_loop(self) -> None:
@@ -333,7 +346,6 @@ class WorkSharingServer:
         register_tables(sess, self._sf_dir)
         register_udfs(sess)
         register_udtfs(sess)
-        refuse_reflection(sess)
         with self._session_lock:
             hit = self._sessions.get(session_id)
             if hit is not None:  # lost the creation race

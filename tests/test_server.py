@@ -1587,8 +1587,8 @@ import threading as _th
 from sparksql_server_spark.server.jdbc_proxy import (
     JdbcLineProxy,
     benign_command,
-    parse_call_ex,
-    statements_in_frame,
+    parse_call,
+    parse_frame,
     temp_view,
 )
 
@@ -1654,6 +1654,16 @@ def _frame(msg: bytes) -> bytes:
     return _st.pack(">i", len(msg)) + msg
 
 
+def _deep_call(depth: int) -> bytes:
+    """A GetInfo call whose args nest ``depth`` structs, each field 1
+    of the one around it."""
+    args = b"\x0c" + _st.pack(">h", 1)
+    return (
+        _st.pack(">I", 0x80010001) + _tstr(b"GetInfo") + _st.pack(">i", 1)
+        + args * depth + b"\x00" * (depth + 1)
+    )
+
+
 class _Upstream:
     """Fake HiveServer2: records the exact bytes of each connection."""
 
@@ -1698,17 +1708,32 @@ class _Upstream:
         self._srv.close()
 
 
+def _returns(stop, timeout: float = 10.0) -> bool:
+    """True when ``stop()`` returns without raising within ``timeout``
+    seconds (run on a daemon thread, so a hang cannot hold the run)."""
+    done = []
+
+    def run():
+        stop()
+        done.append(True)
+
+    t = _th.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout)
+    return done == [True]
+
+
 class TestThriftParsing:
     def test_extracts_statement_and_end(self):
         sql = "SELECT count(*) FROM lineitem WHERE l_tax > 0.01"
         msg = _exec_stmt_call(sql)
-        p = parse_call_ex(msg + b"XTRA")
-        assert (p[0], p[1], p[3]) == (len(msg), "ExecuteStatement", sql)
+        p = parse_call(msg + b"XTRA")
+        assert (p.end, p.name, p.statement) == (len(msg), "ExecuteStatement", sql)
 
     def test_non_execute_calls_skip_generically(self):
         msg = _open_session_call()
-        p = parse_call_ex(msg)
-        assert (p[0], p[1], p[3]) == (len(msg), "OpenSession", None)
+        p = parse_call(msg)
+        assert (p.end, p.name, p.statement) == (len(msg), "OpenSession", None)
 
     def test_every_prefix_is_incomplete_not_error(self):
         """A split TCP read can end at ANY byte: every strict prefix
@@ -1716,17 +1741,29 @@ class TestThriftParsing:
         demote the connection to blind."""
         msg = _exec_stmt_call("SELECT 1")
         for i in range(len(msg)):
-            assert parse_call_ex(msg[:i]) is None, i
+            assert parse_call(msg[:i]) is None, i
 
     def test_garbage_raises_for_blind_demotion(self):
         with pytest.raises(ValueError):
-            parse_call_ex(b"\x00\x00\x00\x05hello world")
+            parse_call(b"\x00\x00\x00\x05hello world")
 
     def test_statements_in_frame(self):
         a, b = _exec_stmt_call("SELECT 1"), _exec_stmt_call("SELECT 2")
-        assert statements_in_frame(a + b) == ["SELECT 1", "SELECT 2"]
-        assert statements_in_frame(_open_session_call()) == []
-        assert statements_in_frame(b"not thrift at all") == []
+        calls, whole = parse_frame(a + b)
+        assert [c.statement for c in calls] == ["SELECT 1", "SELECT 2"]
+        assert whole
+        calls, whole = parse_frame(_open_session_call())
+        assert [c.statement for c in calls] == [None] and whole
+        assert parse_frame(b"not thrift at all") == ([], False)
+        # a malformed tail ends the list; the calls before it count
+        calls, whole = parse_frame(a + b"not thrift")
+        assert [c.statement for c in calls] == ["SELECT 1"] and not whole
+
+    def test_deep_nesting_raises_value_error(self):
+        """A message nested past the reader's depth bound is malformed:
+        ValueError (blind pass-through), never RecursionError."""
+        with pytest.raises(ValueError):
+            parse_call(_deep_call(5000))
 
 
 class TestBenignJdbcCommand:
@@ -1897,6 +1934,31 @@ class TestJdbcLineProxy:
             assert proxy.stats["blind_connections"] == 1
         finally:
             proxy.stop()
+            ups.close()
+
+    def test_deep_nesting_goes_blind(self):
+        """A raw call nested 5,000 structs deep is not a message the
+        proxy can read: the connection goes blind and the bytes reach
+        the upstream unchanged, instead of the handler dying."""
+        ups = _Upstream()
+        proxy = JdbcLineProxy(ups.address, gate=lambda s: None).start()
+        try:
+            payload = _deep_call(5000)
+            with socket.create_connection(proxy.address) as s:
+                s.sendall(payload)
+                assert ups.wait_bytes(len(payload)) == len(payload)
+            assert bytes(ups.conns[0]) == payload
+            assert proxy.stats["blind_connections"] == 1
+        finally:
+            proxy.stop()
+            ups.close()
+
+    def test_stop_before_start_returns(self):
+        ups = _Upstream()
+        proxy = JdbcLineProxy(ups.address, gate=lambda s: None)
+        try:
+            assert _returns(proxy.stop)
+        finally:
             ups.close()
 
     def test_gate_failure_never_blocks_the_wire(self):
@@ -2123,6 +2185,7 @@ def _recv_reply(sock) -> tuple[str, int, dict]:
 class TestThriftSubstitution:
     ANSWER = {
         "columns": ["k", "n"],
+        "dtypes": ["string", "bigint"],
         "rows": [["a", 1], ["b", None], [None, 3]],
     }
 
@@ -2223,6 +2286,57 @@ class TestThriftSubstitution:
             proxy.stop()
             ups.close()
 
+    def test_rows_without_dtypes_are_forwarded(self):
+        """A reply whose rows carry no dtypes cannot be typed on the
+        wire: the statement is gated and forwarded, not answered."""
+        ups = _Upstream()
+        gated = []
+        answer = {"columns": ["x"], "rows": [[1]]}
+        proxy = JdbcLineProxy(
+            ups.address, gate=gated.append, answer=lambda s, sid=None: dict(answer)
+        ).start()
+        try:
+            with socket.create_connection(proxy.address) as c:
+                msg = _exec_stmt_call("SELECT 1 AS x")
+                c.sendall(msg)
+                assert ups.wait_bytes(len(msg)) == len(msg)
+            assert bytes(ups.conns[0]) == msg
+            assert gated == ["SELECT 1 AS x"]
+            assert proxy.stats["statements_answered"] == 0
+        finally:
+            proxy.stop()
+            ups.close()
+
+    def test_torn_sasl_stream(self):
+        """A SASL stream split into 13-byte reads: the answered frame
+        never reaches the upstream, everything else does byte for byte,
+        and only the unanswered statement is gated."""
+        ups = _Upstream()
+        gated = []
+
+        def answer(sql, sid=None):
+            return dict(self.ANSWER) if sql == "SELECT k, n FROM t" else None
+
+        proxy = JdbcLineProxy(ups.address, gate=gated.append, answer=answer).start()
+        try:
+            head = _sasl_handshake() + _frame(_open_session_call())
+            answered = _frame(_exec_stmt_call("SELECT k, n FROM t", seq=2))
+            tail = _frame(_exec_stmt_call("SELECT other FROM u", seq=3))
+            payload = head + answered + tail
+            with socket.create_connection(proxy.address) as c:
+                for i in range(0, len(payload), 13):
+                    c.sendall(payload[i : i + 13])
+                    time.sleep(0.001)
+                want = len(head) + len(tail)
+                assert ups.wait_bytes(want) == want
+            assert bytes(ups.conns[0]) == head + tail
+            assert gated == ["SELECT other FROM u"]
+            assert proxy.stats["statements_answered"] == 1
+            assert proxy.stats["blind_connections"] == 0
+        finally:
+            proxy.stop()
+            ups.close()
+
     def test_command_demotes_connection_for_good(self):
         """After a command, the gateway can no longer speak for this
         connection's session state: later SELECTs must forward even
@@ -2256,6 +2370,7 @@ class TestThriftSubstitution:
         ups = _Upstream()
         big = {
             "columns": ["k", "n"],
+            "dtypes": ["string", "bigint"],
             "rows": [[f"r{i}", i] for i in range(7)],
         }
         proxy = JdbcLineProxy(
@@ -2590,7 +2705,8 @@ class TestThriftEncoderProperties:
     def test_typed_fetch_roundtrip_property(self):
         """Typed TColumn arms: per-column homogeneous bool/i64/double/
         string data (with NULLs) encodes into the arm column_kinds
-        picks and decodes back to the exact values."""
+        picks from the column's dtype and decodes back to the exact
+        values."""
         import struct as _s
 
         from hypothesis import given, settings, strategies as st
@@ -2600,14 +2716,25 @@ class TestThriftEncoderProperties:
         )
 
         arm_for = {"bool": 1, "i64": 5, "double": 6, "string": 7}
+        # (Spark dtype, column values) pairs
         colgen = st.one_of(
-            st.lists(st.none() | st.booleans(), max_size=20),
-            st.lists(st.none() | st.integers(-(2**63), 2**63 - 1), max_size=20),
-            st.lists(
-                st.none() | st.floats(allow_nan=False, allow_infinity=False),
-                max_size=20,
+            st.tuples(
+                st.just("boolean"), st.lists(st.none() | st.booleans(), max_size=20)
             ),
-            st.lists(st.none() | st.text(max_size=12), max_size=20),
+            st.tuples(
+                st.just("bigint"),
+                st.lists(st.none() | st.integers(-(2**63), 2**63 - 1), max_size=20),
+            ),
+            st.tuples(
+                st.just("double"),
+                st.lists(
+                    st.none() | st.floats(allow_nan=False, allow_infinity=False),
+                    max_size=20,
+                ),
+            ),
+            st.tuples(
+                st.just("string"), st.lists(st.none() | st.text(max_size=12), max_size=20)
+            ),
         )
 
         @settings(max_examples=60, deadline=None)
@@ -2615,9 +2742,10 @@ class TestThriftEncoderProperties:
         def prop(seqid, data):
             ncols = data.draw(st.integers(0, 4))
             nrows = data.draw(st.integers(0, 20))
-            cols = [data.draw(colgen)[:nrows] + [None] * 0 for _ in range(ncols)]
-            cols = [c + [None] * (nrows - len(c)) for c in cols]
-            kinds, _tids = column_kinds(cols)
+            drawn = [data.draw(colgen) for _ in range(ncols)]
+            dtypes = [dt for dt, _c in drawn]
+            cols = [c[:nrows] + [None] * (nrows - len(c)) for _dt, c in drawn]
+            kinds, _tids = column_kinds(cols, dtypes)
             msg = encode_fetch_resp(seqid, cols, kinds)
             end, name, seq, d = _t_reply(msg)
             assert (end, name, seq) == (len(msg), "FetchResults", seqid)
@@ -2644,30 +2772,6 @@ class TestThriftEncoderProperties:
 
         prop()
 
-    def test_column_kinds_inference(self):
-        import datetime as dt
-
-        from sparksql_server_spark.server.jdbc_proxy import column_kinds
-
-        cols = [
-            [1, 2, None],                      # i64 / BIGINT
-            [True, None, False],               # bool / BOOLEAN
-            [1.5, None],                       # double / DOUBLE
-            ["a", None],                       # string / STRING
-            [dt.datetime(2026, 1, 1, 2), None],  # string / TIMESTAMP
-            [dt.date(2026, 1, 1), None],       # string / DATE
-            [1, "x"],                          # mixed -> string / STRING
-            [1 << 70],                         # overflows i64 -> string
-            [None, None],                      # all-null -> string
-            [],                                # empty -> string
-        ]
-        kinds, tids = column_kinds(cols)
-        assert kinds == [
-            "i64", "bool", "double", "string", "string",
-            "string", "string", "string", "string", "string",
-        ]
-        assert tids == [4, 0, 6, 7, 8, 17, 7, 7, 7, 7]
-
     def test_schema_first_kinds_survive_empty_and_allnull_results(self):
         """With the gateway's df.dtypes shipped, the declared schema
         decides the wire types — an empty or all-NULL result reports
@@ -2687,9 +2791,12 @@ class TestThriftEncoderProperties:
             assert tids == [7, 4, 6, 0, 8, 17, 7, 7]
         # int columns are widened to the i64 arm under a BIGINT id
         assert column_kinds([[1]], ["int"]) == (["i64"], [4])
-        # length mismatch or missing dtypes -> value inference
-        assert column_kinds([[1, 2]], None)[0] == ["i64"]
-        assert column_kinds([[1], [2]], ["bigint"])[0] == ["i64", "i64"]
+        # length mismatch or missing dtypes: no kinds (the proxy then
+        # forwards the statement, test_rows_without_dtypes_are_forwarded)
+        with pytest.raises(ValueError):
+            column_kinds([[1, 2]], None)
+        with pytest.raises(ValueError):
+            column_kinds([[1], [2]], ["bigint"])
 
     def test_metadata_type_ids(self):
         from sparksql_server_spark.server.jdbc_proxy import encode_metadata_resp
@@ -2727,7 +2834,7 @@ class TestThriftEncoderProperties:
         def answer(sql, sid=None):
             if "SET" in sql:
                 return {"passthrough": "command"}
-            return {"columns": ["x"], "rows": [["1"]]}
+            return {"columns": ["x"], "dtypes": ["string"], "rows": [["1"]]}
 
         proxy = JdbcLineProxy(ups.address, gate=lambda s: None, answer=answer).start()
         try:
@@ -2784,7 +2891,9 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["a"], ["b"]]},
+            answer=lambda s, sid=None: {
+                "columns": ["x"], "dtypes": ["string"], "rows": [["a"], ["b"]]
+            },
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2815,7 +2924,9 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["1"]]},
+            answer=lambda s, sid=None: {
+                "columns": ["x"], "dtypes": ["string"], "rows": [["1"]]
+            },
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2844,7 +2955,9 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["1"]]},
+            answer=lambda s, sid=None: {
+                "columns": ["x"], "dtypes": ["string"], "rows": [["1"]]
+            },
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2902,7 +3015,9 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["1"]]},
+            answer=lambda s, sid=None: {
+                "columns": ["x"], "dtypes": ["string"], "rows": [["1"]]
+            },
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2925,7 +3040,9 @@ class TestOpenSessionConfFence:
         proxy = JdbcLineProxy(
             ups.address,
             gate=lambda s: None,
-            answer=lambda s, sid=None: {"columns": ["x"], "rows": [["1"]]},
+            answer=lambda s, sid=None: {
+                "columns": ["x"], "dtypes": ["string"], "rows": [["1"]]
+            },
         ).start()
         try:
             with socket.create_connection(proxy.address) as c:
@@ -2982,6 +3099,11 @@ def test_substituted_repeat_statement_hits_result_cache(spark):
         srv.shutdown()
         srv.executor.cache.clear()
         ups.close()
+
+
+def test_shutdown_before_start_returns(spark):
+    srv = WorkSharingServer(spark, SF_DIR)
+    assert _returns(srv.shutdown)
 
 
 class TestGatewayHardeningR8:
@@ -3389,7 +3511,7 @@ class TestOverlayPerfConf:
 
         def answer(s, sid=None):
             calls.append(s)
-            return {"columns": ["x"], "rows": [[1]]}
+            return {"columns": ["x"], "dtypes": ["int"], "rows": [[1]]}
 
         proxy = JdbcLineProxy(ups.address, gate=lambda s: None, answer=answer).start()
         try:

@@ -111,6 +111,17 @@ srv.start()
 # HiveServer2 sessions use (temp views would shadow them)
 for t in TABLES:
     spark.catalog.dropTempView(t)
+
+# building the gateway dropped the reflection functions for every
+# session created afterwards: a HiveServer2 connection's own session
+# cannot call a JVM method by name either
+probe = "sparksql_server.hs2_probe"
+spark._jvm.java.lang.System.clearProperty(probe)
+refl = beeline(f"SELECT reflect('java.lang.System','setProperty','{probe}','1')")
+print(f"RESULT8:rrc={refl.returncode};"
+      f"unresolved={'UNRESOLVED_ROUTINE' in refl.stdout + refl.stderr};"
+      f"prop_unset={spark._jvm.java.lang.System.getProperty(probe) is None}")
+
 proxy = JdbcLineProxy(("localhost", PORT), gate=srv.prime).start()
 pport = proxy.address[1]
 
@@ -428,6 +439,17 @@ def test_thrift_jdbc_round_trip(tmp_path):
     assert "nrc=0" in r7, r7
     assert "nanswered=0" in r7, r7
     assert "nrows_ok=True" in r7, r7
+    # HiveServer2's per-connection sessions refuse reflection too: the
+    # statement fails to resolve and the JVM property stays unset
+    results8 = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT8:")]
+    assert results8, (
+        f"reflection leg died\nstdout: {proc.stdout[-2000:]}\n"
+        f"stderr: {proc.stderr[-2000:]}"
+    )
+    r8 = results8[0]
+    assert "rrc=0" not in r8, r8
+    assert "unresolved=True" in r8, r8
+    assert "prop_unset=True" in r8, r8
     shutil.rmtree(tmp_path / "metastore_db", ignore_errors=True)
 
 
