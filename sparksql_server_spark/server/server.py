@@ -47,6 +47,17 @@ JVM methods by name (``reflect``, ``java_method``, ``try_reflect``;
 :func:`refuse_reflection`), as does every session built on the
 SparkContext after the gateway, HiveServer2's per-connection sessions
 included, so no code crosses the boundary.
+
+The gateway plans without whole-stage codegen
+(``spark.sql.codegen.wholeStage=false`` on root while the server runs,
+and on every named session it creates). Each request carries its own
+literals, so whole-stage codegen would write new Java source for it:
+Janino compiles that class and HotSpot JIT-compiles it from cold, on
+every request. The interpreted operators are shared classes that stay
+JIT-warm across requests, so a request costs the JVM less CPU.
+``{"explain": ...}`` replies therefore carry no ``*(n)`` stage markers.
+HiveServer2's per-connection sessions (server/thrift.py) take their
+conf from the SparkContext and keep Spark's default.
 """
 
 from __future__ import annotations
@@ -85,6 +96,11 @@ import os
 def source_view_map(sf_dir: str) -> dict[str, str]:
     """fingerprint (table root path) -> view name, for the cache rewrite."""
     return {os.path.join(sf_dir, f"{t}.parquet"): t for t in TABLES}
+
+
+# off in every gateway session (module docstring: a per-request
+# generated class costs more than interpreting the plan)
+_WHOLE_STAGE = "spark.sql.codegen.wholeStage"
 
 
 # built-in functions that call any JVM method named in their arguments
@@ -129,9 +145,10 @@ class WorkSharingServer:
         jdbc_command_taint_seconds: float = 600.0,
     ) -> None:
         self.spark = spark
-        register_tables(spark, sf_dir)
-        register_udfs(spark)  # the vetted UDF surface (no code over the wire)
-        register_udtfs(spark)
+        self._sf_dir = sf_dir
+        # root's own setting, put back by shutdown(); None = unset
+        self._root_whole_stage = spark.conf.get(_WHOLE_STAGE, None)
+        self._prepare(spark)
         refuse_reflection(spark)
         # the vetted custom connectors (sources/pysource.py): lets
         # gateway jobs read format("synthetic_events") and write
@@ -168,7 +185,6 @@ class WorkSharingServer:
         # under sustained traffic while every other table is budgeted.
         self._jobs: dict[int, QueryJob] = {}
         self._jobs_cap = 4096
-        self._sf_dir = sf_dir
         # named client sessions, reaped by idle time under a count cap:
         # without a bound, every distinct client id pins a SparkSession
         # (temp-view catalog, SQL conf, plan caches) in driver memory
@@ -226,7 +242,11 @@ class WorkSharingServer:
             allow_reuse_address = True
             daemon_threads = True
 
-        self._tcp = Server((host, port), Handler)
+        try:
+            self._tcp = Server((host, port), Handler)
+        except OSError:  # port taken: no server will restore root
+            self._restore_root()
+            raise
         self.address = self._tcp.server_address
         self._tcp_thread = threading.Thread(target=self._tcp.serve_forever, daemon=True)
 
@@ -240,7 +260,9 @@ class WorkSharingServer:
     def shutdown(self) -> None:
         """Stop what :meth:`start` started: socketserver's shutdown()
         waits for a serve_forever loop, so a server that never started
-        only closes its socket and its executor."""
+        only closes its socket and its executor. Either way root gets
+        back the whole-stage codegen setting it had before the server
+        (servers sharing one root must shut down in reverse order)."""
         self._stop.set()
         if self._tcp_thread.is_alive():
             self._tcp.shutdown()
@@ -248,6 +270,23 @@ class WorkSharingServer:
         if self._loop_thread.is_alive():
             self._loop_thread.join(timeout=30)
         self.executor.close()
+        self._restore_root()
+
+    def _restore_root(self) -> None:
+        if self._root_whole_stage is None:
+            self.spark.conf.unset(_WHOLE_STAGE)
+        else:
+            self.spark.conf.set(_WHOLE_STAGE, self._root_whole_stage)
+
+    def _prepare(self, session: SparkSession) -> None:
+        """The one setup of a session the gateway executes in, root or
+        named: base tables, the vetted UDF/UDTF surface (no code over
+        the wire) and whole-stage codegen off. ``newSession()`` inherits
+        none of root's runtime conf, so each session gets it here."""
+        register_tables(session, self._sf_dir)
+        register_udfs(session)
+        register_udtfs(session)
+        session.conf.set(_WHOLE_STAGE, "false")
 
     def _run_loop(self) -> None:
         while not self._stop.is_set():
@@ -322,7 +361,7 @@ class WorkSharingServer:
 
     def session_for(self, session_id: str | None) -> SparkSession:
         """Root session, or a named isolated client session (lazily
-        created; base tables + the vetted UDFs registered once).
+        created and set up once by :meth:`_prepare`).
         Sessions idle past ``session_idle_timeout`` are reaped when the
         table would exceed ``max_sessions``; if every session is busy,
         the least-recently-used one goes (bounded memory beats
@@ -343,9 +382,7 @@ class WorkSharingServer:
         # insertion wins, the loser's session is discarded (rare — only
         # a TCP client reusing one id across sockets can race).
         sess = self.spark.newSession()
-        register_tables(sess, self._sf_dir)
-        register_udfs(sess)
-        register_udtfs(sess)
+        self._prepare(sess)
         with self._session_lock:
             hit = self._sessions.get(session_id)
             if hit is not None:  # lost the creation race

@@ -832,19 +832,22 @@ def test_unscoped_jdbc_command_refuses_puts_within_its_horizon(spark):
         spark, SF_DIR, window_size=1, max_wait=0.1,
         jdbc_command_reflush_seconds=0.5,
     )
-    srv.prime("SET spark.sql.ansi.enabled=false")
-    k = ("", "SELECT count(*) AS n FROM nation")
-    srv.results.put(
-        k, {"rows": [[25]]}, generation=srv.results.generation,
-        tables=frozenset({"nation"}),
-    )
-    assert srv.results.get(k) is None
-    time.sleep(0.6)
-    srv.results.put(
-        k, {"rows": [[25]]}, generation=srv.results.generation,
-        tables=frozenset({"nation"}),
-    )
-    assert srv.results.get(k) == {"rows": [[25]]}
+    try:
+        srv.prime("SET spark.sql.ansi.enabled=false")
+        k = ("", "SELECT count(*) AS n FROM nation")
+        srv.results.put(
+            k, {"rows": [[25]]}, generation=srv.results.generation,
+            tables=frozenset({"nation"}),
+        )
+        assert srv.results.get(k) is None
+        time.sleep(0.6)
+        srv.results.put(
+            k, {"rows": [[25]]}, generation=srv.results.generation,
+            tables=frozenset({"nation"}),
+        )
+        assert srv.results.get(k) == {"rows": [[25]]}
+    finally:
+        srv.shutdown()
 
 
 @pytest.mark.parametrize(

@@ -5,6 +5,7 @@ window batching, and the TCP protocol."""
 from __future__ import annotations
 
 import re
+import socket
 import time
 
 import pytest
@@ -1873,6 +1874,7 @@ class TestBenignJdbcCommand:
             assert spark.conf.get("spark.sql.shuffle.partitions") == before
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", before)
+            srv.shutdown()
         # the shared root session still plans with its own partitioning
         plan = spark.sql(
             "SELECT l_returnflag, count(*) FROM lineitem GROUP BY l_returnflag"
@@ -3104,6 +3106,47 @@ def test_substituted_repeat_statement_hits_result_cache(spark):
 def test_shutdown_before_start_returns(spark):
     srv = WorkSharingServer(spark, SF_DIR)
     assert _returns(srv.shutdown)
+
+
+def test_gateway_sessions_run_without_whole_stage_codegen(spark):
+    """Root and a named session execute without whole-stage codegen
+    while the gateway runs, with the rows codegen gives; shutdown, of
+    a started server or one never started, gives root back its own
+    setting, and so does a construction that fails."""
+    key = "spark.sql.codegen.wholeStage"
+    before = spark.conf.get(key, None)
+    q = ("SELECT l_returnflag, count(*) AS n, sum(l_quantity) AS q"
+         " FROM lineitem WHERE l_discount > 0.02 GROUP BY l_returnflag")
+    register_tables(spark, SF_DIR)
+    fresh = spark.sql(q)
+    expected = sorted(map(tuple, fresh.collect()))
+    # AQE shows the stage markers only once a query has run
+    assert "*(" in fresh._jdf.queryExecution().executedPlan().toString()
+    srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.1).start()
+    try:
+        for session in (srv.spark, srv.session_for("t")):
+            df = session.sql(q)
+            assert sorted(map(tuple, df.collect())) == expected
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "*(" not in plan, plan
+    finally:
+        srv.shutdown()
+    assert spark.conf.get(key, None) == before
+    with socket.socket() as taken:
+        taken.bind(("127.0.0.1", 0))
+        taken.listen()
+        with pytest.raises(OSError):
+            WorkSharingServer(spark, SF_DIR, port=taken.getsockname()[1])
+    assert spark.conf.get(key, None) == before
+    spark.conf.set(key, "true")
+    try:
+        WorkSharingServer(spark, SF_DIR).shutdown()
+        assert spark.conf.get(key, None) == "true"
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
 
 
 class TestGatewayHardeningR8:

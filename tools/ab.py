@@ -14,7 +14,11 @@ same rows.
 The session is a fresh JVM warmed like ``bench.py`` (bench.warm_session),
 so numbers are comparable to the bench's per-query regime. ``--conf``
 overrides apply at session build, context-time confs included. Prints
-one JSON line per arm: first, steady_min and every steady time.
+one JSON line per arm: first, steady_min and every steady time, each
+wall time beside the Spark JVM's CPU seconds over the same run
+(``*_cpu``: utime + stime of the JVM process, JIT and GC threads
+included). On a host whose cores are all busy, wall time hides work
+an arm saves; CPU time does not.
 """
 
 from __future__ import annotations
@@ -41,10 +45,21 @@ def _spec_arms(path: str) -> dict:
     return {"a": mod.build_a, "b": mod.build_b}
 
 
-def _timed(build, spark) -> float:
-    t0 = time.monotonic()
+def _jvm_cpu(pid: int) -> float:
+    """CPU seconds (user + system) the process ``pid`` has used."""
+    with open(f"/proc/{pid}/stat") as fh:
+        # fields after the parenthesized command name; utime and stime
+        # are fields 14 and 15 of the whole line
+        fields = fh.read().rpartition(")")[2].split()
+    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+
+
+def _timed(build, spark) -> tuple[float, float]:
+    """Wall seconds and JVM CPU seconds of one run of ``build``."""
+    pid = spark.sparkContext._gateway.proc.pid
+    c0, t0 = _jvm_cpu(pid), time.monotonic()
     _force(build(spark, SF_DIR))
-    return round(time.monotonic() - t0, 3)
+    return round(time.monotonic() - t0, 3), round(_jvm_cpu(pid) - c0, 3)
 
 
 def main(argv: list[str]) -> None:
@@ -66,19 +81,23 @@ def main(argv: list[str]) -> None:
     register_tables(spark, SF_DIR)
     warm_session(spark)
 
-    first: dict[str, float] = {}
-    steady: dict[str, list[float]] = {k: [] for k in arms}
+    first: dict[str, tuple[float, float]] = {}
+    steady: dict[str, list[tuple[float, float]]] = {k: [] for k in arms}
     for rnd in range(args.rounds):
         for arm in list(arms)[:: 1 if rnd % 2 == 0 else -1]:
-            dt = _timed(arms[arm], spark)
+            run = _timed(arms[arm], spark)
             if arm in first:
-                steady[arm].append(dt)
+                steady[arm].append(run)
             else:
-                first[arm] = dt
+                first[arm] = run
             steady[arm].extend(_timed(arms[arm], spark) for _ in range(args.trials))
     for arm in arms:
-        out = {"first": first[arm], "steady_min": min(steady[arm], default=None),
-               "steady_all": steady[arm]}
+        wall = [w for w, _ in steady[arm]]
+        cpu = [c for _, c in steady[arm]]
+        out = {"first": first[arm][0], "first_cpu": first[arm][1],
+               "steady_min": min(wall, default=None),
+               "steady_cpu_min": min(cpu, default=None),
+               "steady_all": wall, "steady_cpu_all": cpu}
         print(json.dumps({arm: out}), flush=True)
     if is_spec:
         da, db = (arms[k](spark, SF_DIR) for k in ("a", "b"))
