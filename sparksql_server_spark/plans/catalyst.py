@@ -6,11 +6,12 @@ The merge planner (server/mrshare.py) and the result cache
 ``canonicalized`` erases expression ids and alias names and puts
 commutative operands, comparisons and IN lists in one order, so
 ``sameResult`` unifies conjunct order, ``a < b`` vs ``b > a`` and IN-list
-permutations. :func:`normalize` adds four more erasures before the
+permutations. :func:`normalize` adds five more erasures before the
 comparison: three of Catalyst's own optimizer rules (CTE inlining, the
 replacement of runtime-replaceable expressions such as BETWEEN, and the
-collapse of adjacent windows over one window spec) and a fixed operand
-order for commutative joins (:func:`order_joins`).
+collapse of adjacent windows over one window spec), a fixed item order
+in each window (:func:`order_windows`) and a fixed operand order for
+commutative joins (:func:`order_joins`).
 """
 
 from __future__ import annotations
@@ -157,7 +158,8 @@ def normalize(plan: Any) -> Any:
     """An analyzed plan with the spellings Catalyst's canonical form
     keeps apart erased: a CTE and the derived table it names, BETWEEN
     and its two comparisons, the operand order of commutative joins, and
-    the split of one window spec into stacked windows. (The analyzer
+    the split of one window spec into stacked windows and the item order
+    that split leaves in the collapsed window. (The analyzer
     groups window items by spec with name-sensitive equality, so
     ``OVER (ORDER BY a)`` next to ``OVER (ORDER BY A)`` becomes two
     windows; ``CollapseWindow`` compares specs semantically.)"""
@@ -165,8 +167,35 @@ def normalize(plan: Any) -> Any:
     plan = _inline_cte().apply(plan)
     plan = jvm(rules + "ReplaceExpressions.apply")(plan)
     plan = jvm(rules + "RewriteWithExpression.apply")(plan)
-    plan = jvm(rules + "CollapseWindow.apply")(plan)
+    plan = order_windows(jvm(rules + "CollapseWindow.apply")(plan))
     return order_joins(plan)
+
+
+def order_windows(plan: Any) -> Any:
+    """``plan`` with each window's items in expression-id order — the
+    select-list order — and the projections above it collapsed.
+    ``CollapseWindow`` appends one window's items to the other's, so the
+    collapsed window lists the items of one spec in an order that
+    depends on how the analyzer split them, and the analyzer's Project
+    over the window lists the window's output in that order too. Plans
+    without a window come back untouched."""
+    window = pattern("WINDOW")
+    if not plan.containsPattern(window):
+        return plan
+
+    def walk(node: Any) -> Any:
+        if not node.containsPattern(window):
+            return node
+        node = node.withNewChildren(seq(walk(c) for c in pylist(node.children())))
+        if kind(node) != "Window":
+            return node
+        items = sorted(pylist(node.windowExpressions()), key=lambda e: e.exprId().id())
+        return node.copy(
+            seq(items), node.partitionSpec(), node.orderSpec(), node.child(), node.hint()
+        )
+
+    rules = "org.apache.spark.sql.catalyst.optimizer."
+    return jvm(rules + "CollapseProject.apply")(walk(plan))
 
 
 @functools.lru_cache(maxsize=None)

@@ -1202,6 +1202,15 @@ def test_window_items_key_semantically(K):
     )
     assert K(two) == K(two.replace("rank() OVER (ORDER BY o_totalprice, o_orderkey)",
                                    "RANK() OVER (ORDER BY O_TOTALPRICE, O_ORDERKEY)"))
+    # respelled items on both sides of a plain one: the collapsed window
+    # lists the items in the order the analyzer split them
+    spec = "OVER (ORDER BY o_totalprice, o_orderkey)"
+    three = (
+        f"SELECT row_number() {spec} AS r1, rank() {spec} AS r2,"
+        f" dense_rank() {spec} AS r3 FROM orders"
+    )
+    assert K(three) == K(three.replace(spec, spec.upper()).replace(
+        f"rank() {spec.upper()} AS r2", f"rank() {spec} AS r2"))
     assert isinstance(
         K(
             "SELECT o_orderpriority, count(*) AS n,"
