@@ -14,7 +14,7 @@ concerns don't belong inside the per-query optimizer.
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame
 
@@ -28,19 +28,31 @@ def source_path(path: str) -> str:
     return path
 
 
-class Scan(tuple):
-    """``(root, width, format)`` of one file scan: a :func:`source_path`,
-    the number of top-level columns read, the file format. A ``cached``
-    scan sits behind an in-memory relation and reads memory."""
+class Scan(NamedTuple):
+    """One root of a file scan, with what Spark's planning already knows
+    of it: the top-level columns the scan reads (``cols``, the pruned
+    ReadSchema), the relation's full ``width``, its file ``format`` and
+    the ``bytes`` of the files Spark listed for it. A ``cached`` scan
+    sits behind an in-memory relation and reads memory."""
 
-    cached = False
+    root: str
+    cols: int
+    width: int
+    format: str
+    bytes: int
+    cached: bool = False
 
 
 def scan_nodes(df: DataFrame) -> list[Scan]:
-    """Every file scan of ``df``'s executed plan, one per root path
-    (``read.parquet(a, b)`` gives two): the leaves of an adaptive
-    plan's input plan and of its subquery plans, and of the plan behind
-    each in-memory scan. Planning only, no execution."""
+    """Every file scan of ``df``'s executed plan, one per root path:
+    the leaves of an adaptive plan's input plan and of its subquery
+    plans, and of the plan behind each in-memory scan. Planning only, no
+    execution. The bytes come from the scan's own file index, one call
+    for every filesystem scheme Spark can scan: a cluster URI (hdfs://,
+    s3a://, …) is priced like a local path, never sized 0, which would
+    decline every merge and cache over it. A relation over several
+    roots (``read.parquet(a, b)``) prices each root at the relation's
+    total, because a merge or a cache shares the whole scan."""
     out: list[Scan] = []
 
     def visit(plan: Any, cached: bool) -> None:
@@ -55,10 +67,16 @@ def scan_nodes(df: DataFrame) -> list[Scan]:
                     visit(leaf.relation().cachedPlan(), True)
                 elif name == "FileSourceScanExec":
                     relation = leaf.relation()
-                    width, fmt = leaf.requiredSchema().size(), relation.toString()
-                    for root in pylist(relation.location().rootPaths()):
-                        out.append(Scan((source_path(root.toString()), width, fmt)))
-                        out[-1].cached = cached
+                    index = relation.location()
+                    facts = (
+                        leaf.requiredSchema().size(),
+                        relation.schema().size(),
+                        relation.toString(),
+                        int(index.sizeInBytes()),
+                        cached,
+                    )
+                    for root in pylist(index.rootPaths()):
+                        out.append(Scan(source_path(root.toString()), *facts))
 
     visit(df._jdf.queryExecution().executedPlan(), False)
     return out
@@ -67,4 +85,4 @@ def scan_nodes(df: DataFrame) -> list[Scan]:
 def scan_fingerprints(scans: list[Scan]) -> frozenset[str]:
     """The input sources of a plan: the roots of its :func:`scan_nodes`
     that read files."""
-    return frozenset(s[0] for s in scans if not s.cached)
+    return frozenset(s.root for s in scans if not s.cached)

@@ -15,6 +15,8 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Any, Callable
 
+from sparksql_server_spark.plans.analysis import Scan
+
 
 class JobStatus(str, Enum):
     QUEUED = "queued"
@@ -66,12 +68,10 @@ class QueryJob:
     # why mrshare.plan_merges did not merge this job, if it did not
     merge_declined: str | None = None
     fingerprints: frozenset[str] = frozenset()
-    # per scanned source: how many columns this job's plan reads
-    # (pruned ReadSchema width — cache-admission cost model input)
-    read_cols: dict[str, int] = field(default_factory=dict)
-    # per scanned source: its file format ("parquet", "csv", …) —
-    # cache admission is format-aware (rescan cost differs ~10×)
-    read_formats: dict[str, str] = field(default_factory=dict)
+    # per scanned root, cached ones too: the widest of its scans in this
+    # job's plan (plans.analysis.Scan: columns read, full width, format,
+    # listed bytes), the input that prices merges and caching
+    reads: dict[str, Scan] = field(default_factory=dict)
     # analyzed logical plan (JVM object), stored by the gateway at intake
     # or built by BatchExecutor.analyze(); the merge planner reads it, and
     # the executor drops it once the batch is planned

@@ -37,7 +37,7 @@ from pyspark.sql import SparkSession
 from sparksql_server_spark.plans.analysis import scan_fingerprints, scan_nodes
 from sparksql_server_spark.plans.catalyst import analyzed, statement, to_df
 from sparksql_server_spark.server.batcher import preschedule
-from sparksql_server_spark.server.cache import CacheManager, _dir_bytes
+from sparksql_server_spark.server.cache import CacheManager
 from sparksql_server_spark.server.detector import detect_sharing
 from sparksql_server_spark.server.model import JobStatus, QueryJob, RewriteKind, SharingBag
 from sparksql_server_spark.server.mrshare import (
@@ -89,6 +89,30 @@ def classify(session: SparkSession, sql: str) -> tuple[bool, Any]:
         is_instance_of(gateway, node, m) for m in _STATEMENT_MARKERS
     )
     return not command, plan
+
+
+def _bytes_of(sources, jobs: list[QueryJob]) -> int:
+    """Listed bytes of the largest of ``sources``, as ``jobs``' scans
+    recorded them: no filesystem access. 0 when no job recorded one
+    (fingerprints set without a scan walk), and unknown declines."""
+    return max(
+        (j.reads[s].bytes for j in jobs for s in sources if s in j.reads), default=0
+    )
+
+
+def _merge_source_bytes(mp: MergePlan) -> int:
+    """Listed bytes of the scan the merge would share: the member jobs'
+    common fingerprint (single-table aggregations have exactly one)."""
+    sets = [set(j.fingerprints) for j in mp.jobs if j.fingerprints]
+    return _bytes_of(set.intersection(*sets), mp.jobs) if sets else 0
+
+
+def _read_fractions(source: str, jobs: list[QueryJob]) -> list[float]:
+    """Per job sharing ``source``: the fraction of the relation's
+    columns its plan reads, from the job's scan record (1.0 for
+    fingerprints set without a scan walk)."""
+    scans = [j.reads.get(source) for j in jobs if source in j.fingerprints]
+    return [min(1.0, s.cols / s.width) if s and s.width else 1.0 for s in scans]
 
 
 class BatchExecutor:
@@ -186,9 +210,10 @@ class BatchExecutor:
         job.plan = analyzed(df)
         scans = scan_nodes(df)
         job.fingerprints = scan_fingerprints(scans)
-        for location, ncols, fmt in scans:
-            job.read_cols[location] = max(job.read_cols.get(location, 0), ncols)
-            job.read_formats[location] = fmt
+        for scan in scans:
+            seen = job.reads.get(scan.root)
+            if seen is None or scan.cols > seen.cols:
+                job.reads[scan.root] = scan
 
     # -- execution --------------------------------------------------------
 
@@ -239,12 +264,12 @@ class BatchExecutor:
                     # price the bag before reading any plan: a merge
                     # shares one of the bag's shared sources, so a bag
                     # whose largest is under the floor cannot hold a merge
-                    if len(offered) < 2 or self._bytes_of(bag.shared_sources) < (
+                    if len(offered) < 2 or _bytes_of(bag.shared_sources, bag.jobs) < (
                         self.mrshare_min_bytes
                     ):
                         continue
                     for mp in plan_merges(offered):
-                        if self._merge_source_bytes(mp) < self.mrshare_min_bytes:
+                        if _merge_source_bytes(mp) < self.mrshare_min_bytes:
                             continue  # scan too cheap to repay merge overhead
                         if self._materialize_merge(mp):
                             merges.append(mp)
@@ -335,20 +360,6 @@ class BatchExecutor:
 
     # -- MRShare merge (B8) ----------------------------------------------
 
-    def _bytes_of(self, sources) -> int:
-        """On-disk size of the largest of ``sources``. Non-local URIs
-        are priced through the Hadoop FileSystem (cache._dir_bytes), so
-        cluster sources admit by their real size instead of silently
-        declining. 0 when unknown — unknown declines."""
-        return max((_dir_bytes(s, self.spark) for s in sources), default=0)
-
-    def _merge_source_bytes(self, mp: MergePlan) -> int:
-        """On-disk size of the scan the merge would share: the member
-        jobs' common plan-leaf fingerprint (single-table aggregations
-        have exactly one)."""
-        sets = [set(j.fingerprints) for j in mp.jobs if j.fingerprints]
-        return self._bytes_of(set.intersection(*sets)) if sets else 0
-
     def _materialize_merge(self, mp: MergePlan) -> bool:
         """Run the merged aggregate ONCE (the shared pass), persist the
         result-sized relation, and point member jobs' execution at
@@ -413,42 +424,19 @@ class BatchExecutor:
             view = self.source_views.get(source)
             if view is None:
                 continue
-            fractions = self._read_fractions(source, view, jobs)
-            if fractions is None:
-                continue
-            fmt = next(
-                (j.read_formats[source] for j in jobs if source in j.read_formats),
-                None,
-            )
+            fractions = _read_fractions(source, jobs)
+            size = _bytes_of({source}, jobs)
+            fmt = next((j.reads[source].format for j in jobs if source in j.reads), None)
             if self.cache.should_cache(
                 source,
+                size,
                 n_sharers=len(fractions),
                 read_fractions=fractions,
                 source_format=fmt,
             ):
-                cached_any |= self.cache.ensure_cached(source, view, source_format=fmt)
+                cached_any |= self.cache.ensure_cached(source, view, size, fmt)
         if cached_any:
             bag.rewrite = RewriteKind.CACHING
-
-    def _read_fractions(
-        self, source: str, view: str, jobs: list[QueryJob]
-    ) -> list[float] | None:
-        """Per sharing job: the fraction of the table's columns its plan
-        reads from ``source`` (1.0 for fingerprints set without a scan
-        walk). None when the table's width is unknown — ``view`` no longer
-        resolves (dropped or replaced since registration) — and unknown
-        declines: caching it would fail the whole batch."""
-        try:
-            total = len(self.spark.table(view).columns)
-        except Exception:
-            return None
-        if not total:
-            return None
-        return [
-            min(1.0, job.read_cols.get(source, total) / total)
-            for job in jobs
-            if source in job.fingerprints
-        ]
 
     def cancel(self, job: QueryJob) -> bool:
         """Cancel a running job's Spark jobs (its job group); queued

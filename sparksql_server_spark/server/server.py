@@ -260,9 +260,10 @@ class WorkSharingServer:
     def shutdown(self) -> None:
         """Stop what :meth:`start` started: socketserver's shutdown()
         waits for a serve_forever loop, so a server that never started
-        only closes its socket and its executor. Either way root gets
-        back the whole-stage codegen setting it had before the server
-        (servers sharing one root must shut down in reverse order)."""
+        only closes its socket and its executor. Either way the scan
+        cache's relations are unpersisted, and root gets back the
+        whole-stage codegen setting it had before the server (servers
+        sharing one root must shut down in reverse order)."""
         self._stop.set()
         if self._tcp_thread.is_alive():
             self._tcp.shutdown()
@@ -270,6 +271,7 @@ class WorkSharingServer:
         if self._loop_thread.is_alive():
             self._loop_thread.join(timeout=30)
         self.executor.close()
+        self.executor.cache.clear()
         self._restore_root()
 
     def _restore_root(self) -> None:
@@ -346,7 +348,7 @@ class WorkSharingServer:
                 # target doesn't exist yet (CREATE) or isn't a
                 # relation — nothing can have read it under this name
                 continue
-            keys |= tables_from_fingerprints(root for root, _, _ in scans)
+            keys |= tables_from_fingerprints(s.root for s in scans)
         return frozenset(keys)
 
     def _flush_write_set(self, ws: frozenset[str] | None) -> None:
@@ -786,7 +788,7 @@ class WorkSharingServer:
                     rc_key,
                     result,
                     generation=rc_generation,
-                    tables=tables_from_fingerprints(job.read_cols) or None,
+                    tables=tables_from_fingerprints(job.reads) or None,
                 )
             return result
         return {"id": job.job_id, "status": job.status.value}

@@ -254,4 +254,3 @@ def test_deadline_drain_reaches_the_server_door(spark):
         assert elapsed2 >= 2.5, elapsed2  # the window still holds slack jobs
     finally:
         srv.shutdown()
-        srv.executor.cache.clear()

@@ -793,7 +793,6 @@ def test_cross_client_merge_through_tcp_server(spark):
             ]
     finally:
         srv.shutdown()
-        srv.executor.cache.clear()
 
 
 def test_merged_plan_scans_table_once(spark, executor):

@@ -246,7 +246,6 @@ def test_jsonl_sink_through_gateway(spark, tmp_path):
         assert back.count() == spark.table("region").count()
     finally:
         srv.shutdown()
-        srv.executor.cache.clear()
 
 
 def test_stream_reader_appends_deterministic_batches(registered):

@@ -7,7 +7,7 @@ import time
 
 import pytest
 
-from sparksql_server_spark.catalog import register_tables
+from sparksql_server_spark.catalog import _dir_bytes, register_tables
 from sparksql_server_spark.server import WorkSharingServer, client_request
 from sparksql_server_spark.server.results import (
     PlanKey,
@@ -274,7 +274,6 @@ def server(spark):
     srv = WorkSharingServer(spark, SF_DIR, window_size=2, max_wait=0.2).start()
     yield srv
     srv.shutdown()
-    srv.executor.cache.clear()
 
 
 def test_repeat_query_served_from_cache(server):
@@ -580,7 +579,7 @@ def test_result_over_cached_table_flushes_on_scoped_invalidation(server):
     as read set unknown: a scoped flush of the table's path keys has
     to drop it, never leave it served stale."""
     src = f"{SF_DIR}/supplier.parquet"
-    assert server.executor.cache.ensure_cached(src, "supplier", "parquet")
+    assert server.executor.cache.ensure_cached(src, "supplier", _dir_bytes(src), "parquet")
     qs = "SELECT count(*) AS n, max(s_acctbal) AS mx FROM supplier"
     # joined with an uncached table the file list is non-empty but
     # lacks the cached source, which must still be in the read set
@@ -819,7 +818,6 @@ def test_jdbc_command_taint_blocks_caching_in_the_window(spark):
         assert client_request(srv.address, {"sql": q}).get("cached") is True
     finally:
         srv.shutdown()
-        srv.executor.cache.clear()
 
 
 def test_unscoped_jdbc_command_refuses_puts_within_its_horizon(spark):
@@ -878,7 +876,6 @@ def test_jdbc_aliased_write_taints_its_target(spark, cmd):
         assert client_request(srv.address, {"sql": q_other}).get("cached") is True
     finally:
         srv.shutdown()
-        srv.executor.cache.clear()
 
 
 # -- round 10 (VERDICT r9 ask #7): generative interleaving gate --------------
@@ -1011,7 +1008,6 @@ def test_cache_vs_merge_interleaving_property(spark, ops):
             _check(spark, srv.handle_request({"sql": q}), q, _expected(spark, q))
     finally:
         srv.shutdown()
-        srv.executor.cache.clear()
         register_tables(spark, SF_DIR)  # restore the real nation view
 
 

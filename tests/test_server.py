@@ -4,6 +4,7 @@ window batching, and the TCP protocol."""
 
 from __future__ import annotations
 
+import math
 import re
 import socket
 import time
@@ -23,7 +24,7 @@ from sparksql_server_spark.server import (
 )
 from sparksql_server_spark.server.scheduler import classify
 from sparksql_server_spark.server.server import source_view_map
-from sparksql_server_spark.catalog import register_tables
+from sparksql_server_spark.catalog import _dir_bytes, register_tables
 from sparksql_server_spark.plans.analysis import scan_nodes
 from tests.conftest import SF_DIR, analyzed_plan
 
@@ -240,7 +241,7 @@ class TestBatchExecutor:
         job's read set (width and format) but is no fingerprint, so it
         neither joins a bag nor prices a merge."""
         src, nation = SF_DIR + "/supplier.parquet", SF_DIR + "/nation.parquet"
-        assert executor.cache.ensure_cached(src, "supplier", "parquet")
+        assert executor.cache.ensure_cached(src, "supplier", _dir_bytes(src), "parquet")
         job = QueryJob(
             job_id=1,
             sql="SELECT s_name, n_name FROM supplier"
@@ -248,7 +249,7 @@ class TestBatchExecutor:
         )
         executor.analyze(job)
         assert job.fingerprints == {nation}
-        assert set(job.read_cols) == {src, nation}
+        assert set(job.reads) == {src, nation}
 
     def test_analysis_error_is_job_error(self, executor):
         jobs = [QueryJob(job_id=1, sql="SELECT * FROM no_such_table")]
@@ -293,7 +294,6 @@ class TestServerTCP:
         ).start()
         yield srv
         srv.shutdown()
-        srv.executor.cache.clear()
 
     def test_round_trip(self, spark, server):
         reply = client_request(
@@ -382,17 +382,24 @@ def test_scan_nodes_live_plan_with_scan_literal(spark):
     df = spark.sql(
         "SELECT s_name, s_acctbal FROM supplier WHERE s_name = 'Scan x'"
     )
-    assert scan_nodes(df) == [(SF_DIR + "/supplier.parquet", 2, "parquet")]
+    src = SF_DIR + "/supplier.parquet"
+    width = len(spark.table("supplier").columns)
+    assert scan_nodes(df) == [(src, 2, width, "parquet", _dir_bytes(src), False)]
 
 
 def test_scan_nodes_lists_every_root(spark):
     """A read of several paths is one scan over several roots, whose
     printed plan shows only the first ("... 1 entries"): the plan walk
-    lists each root with the scan's width and format."""
+    lists each root with the scan's width and format, and prices each
+    at the relation's total, the scan a merge or a cache would share."""
     a, b = SF_DIR + "/region.parquet", SF_DIR + "/nation.parquet"
     df = spark.read.parquet(a, b)
     width = len(df.columns)
-    assert sorted(scan_nodes(df)) == [(b, width, "parquet"), (a, width, "parquet")]
+    total = _dir_bytes(a) + _dir_bytes(b)
+    assert sorted(scan_nodes(df)) == [
+        (b, width, width, "parquet", total, False),
+        (a, width, width, "parquet", total, False),
+    ]
 
 
 class TestGatewayHardening:
@@ -405,7 +412,6 @@ class TestGatewayHardening:
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.05).start()
         yield srv
         srv.shutdown()
-        srv.executor.cache.clear()
 
     def test_explain_rejects_commands(self, spark, server, tmp_path):
         """``spark.sql()`` executes DDL/DML EAGERLY at plan time, so an
@@ -599,7 +605,6 @@ class TestConcurrentClients:
             assert [r["rows"][0][0] for r in replies] == expected
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_mixed_stress_merges_cache_hits_and_commands(self, spark):
         """Adversarial interleaving: same-signature members (merge
@@ -683,7 +688,6 @@ class TestConcurrentClients:
             assert stats["mrshare_merged_jobs"] >= 2, stats
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 class TestPartitionedOutput:
@@ -711,7 +715,6 @@ class TestPartitionedOutput:
             assert dirs == {"o_orderstatus=F", "o_orderstatus=O", "o_orderstatus=P"}
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 class TestSessions:
@@ -753,7 +756,6 @@ class TestSessions:
             assert ex["status"] == "done" and "Physical Plan" in ex["plan"]
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 class TestClientLibrary:
@@ -778,7 +780,6 @@ class TestClientLibrary:
                 assert "Physical Plan" in c.explain("SELECT 1")
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 class TestReadFractionCostModel:
@@ -789,13 +790,13 @@ class TestReadFractionCostModel:
 
         register_tables(spark, SF_DIR)
         narrow = spark.sql("SELECT count(*) AS n FROM lineitem WHERE l_discount > 0.05")
-        cols = {p: n for p, n, _ in scan_nodes(narrow)}
+        cols = {s.root: s.cols for s in scan_nodes(narrow)}
         src = next(p for p in cols if p.endswith("lineitem.parquet"))
         assert cols[src] == 1
         # note: max(x) FROM (SELECT *) would NOT be wide — Catalyst
         # prunes through subqueries; only a full-row output reads all
         wide = spark.sql("SELECT * FROM lineitem")
-        assert [n for p, n, _ in scan_nodes(wide) if p == src][0] >= 11
+        assert [s.cols for s in scan_nodes(wide) if s.root == src][0] >= 11
 
     def test_narrow_bag_not_admitted_wide_bag_admitted(self, spark):
         """Σ read-fraction decides, with a format-aware bar: a cheap
@@ -804,26 +805,27 @@ class TestReadFractionCostModel:
         (min_bytes floored to 0 to isolate the fraction term)."""
         register_tables(spark, SF_DIR)
         src = SF_DIR + "/lineitem.parquet"
+        size = _dir_bytes(src)
         cm = CacheManager(spark, budget_bytes=1 << 30, min_bytes=0)
         # narrow queries never clear either bar
         assert not cm.should_cache(
-            src, n_sharers=10, read_fractions=[1 / 11] * 10, source_format="csv"
+            src, size, n_sharers=10, read_fractions=[1 / 11] * 10, source_format="csv"
         )
         # two full-width sharers clear the row-text bar (1.2) …
         assert cm.should_cache(
-            src, n_sharers=2, read_fractions=[1.0, 1.0], source_format="csv"
+            src, size, n_sharers=2, read_fractions=[1.0, 1.0], source_format="csv"
         )
         # … but not the columnar bar (rescan is a cheap vectorized
         # decode; measured batched 31.3 s vs concurrent 13.8 s when a
         # parquet bag this narrow was admitted)
         assert not cm.should_cache(
-            src, n_sharers=2, read_fractions=[1.0, 1.0], source_format="parquet"
+            src, size, n_sharers=2, read_fractions=[1.0, 1.0], source_format="parquet"
         )
         # unknown format gets the conservative columnar bar
-        assert not cm.should_cache(src, n_sharers=2, read_fractions=[1.0, 1.0])
+        assert not cm.should_cache(src, size, n_sharers=2, read_fractions=[1.0, 1.0])
         # a genuinely wide shared parquet workload still clears it
         assert cm.should_cache(
-            src, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
+            src, size, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
         )
 
     def test_executor_wires_fractions_through(self, spark):
@@ -1000,14 +1002,14 @@ class TestStorageAwareAdmission:
 
         register_tables(spark, SF_DIR)
         pq = spark.sql("SELECT count(*) AS n FROM lineitem")
-        fmts = {p: fmt for p, _, fmt in scan_nodes(pq)}
+        fmts = {s.root: s.format for s in scan_nodes(pq)}
         src = next(p for p in fmts if p.endswith("lineitem.parquet"))
         assert fmts[src] == "parquet"
 
         csv_dir = str(tmp_path / "t.csv")
         spark.table("region").write.option("header", True).csv(csv_dir)
         cdf = spark.read.option("header", True).csv(csv_dir)
-        assert {fmt for _, _, fmt in scan_nodes(cdf)} == {"csv"}
+        assert {s.format for s in scan_nodes(cdf)} == {"csv"}
 
     def test_declines_when_build_exceeds_free_storage(self, spark):
         """Round-1 regression gate: admission must observe the JVM's
@@ -1026,17 +1028,18 @@ class TestStorageAwareAdmission:
             # row-text estimate is a constant ~1.2×)
             mem_expansion=1e9,
         )
-        assert cm._free_storage_bytes() is not None  # observable in local mode
+        assert cm._free_storage_bytes() < math.inf  # observable in local mode
+        size = _dir_bytes(src)
         assert not cm.should_cache(
-            src, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
+            src, size, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
         )
         # ensure_cached independently re-checks and blacklists
-        assert not cm.ensure_cached(src, "lineitem", source_format="parquet")
+        assert not cm.ensure_cached(src, "lineitem", size, source_format="parquet")
         assert src in cm._rejected
         # blacklisted sources are never retried, whatever the workload
         cm.mem_expansion = 0.0
         assert not cm.should_cache(
-            src, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
+            src, size, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
         )
 
     def test_admission_counts_evictable_entries(self, spark):
@@ -1044,25 +1047,25 @@ class TestStorageAwareAdmission:
         (ensure_cached evicts before building), so admission must count
         it as free — otherwise the first table cached under pressure
         permanently locks out all later admissions."""
-        from sparksql_server_spark.server.cache import CacheEntry, _dir_bytes
+        from sparksql_server_spark.server.cache import CacheEntry
 
         register_tables(spark, SF_DIR)
         src = SF_DIR + "/lineitem.parquet"
         cm = CacheManager(spark, budget_bytes=1 << 40, min_bytes=0)
         free = cm._free_storage_bytes()
-        assert free and free > 0
+        assert 0 < free < math.inf
         size = _dir_bytes(src)
         # estimate lands between free and free+evictable (relative
         # math — independent of this JVM's actual heap size)
         cm.mem_expansion = (free * cm.storage_headroom * 1.5) / size
         assert not cm.should_cache(
-            src, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
+            src, size, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
         )
         cm._entries["other"] = CacheEntry(
             view="other", source="other", bytes=0, mem_bytes=free
         )
         assert cm.should_cache(
-            src, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
+            src, size, n_sharers=8, read_fractions=[1.0] * 8, source_format="parquet"
         )
 
     def test_build_fit_verification(self, spark):
@@ -1122,57 +1125,217 @@ class TestSessionReaping:
 
 
 class TestClusterSizing:
-    """Admission sizing for non-local sources (VERDICT r4 wrong #2):
-    cluster URIs must be priced through the Hadoop FileSystem, not
-    silently sized 0 (= decline)."""
+    """Admission sizing for non-local sources: a cluster URI is priced
+    by the bytes its scan recorded, like a local path, never silently
+    sized 0 (= decline)."""
 
-    def test_hadoop_filesystem_sizes_real_uri(self, spark):
-        """The JVM plumbing itself, against Hadoop's LocalFileSystem:
-        an explicit file: URI returns the directory's true byte size."""
-        from sparksql_server_spark.server.cache import (
-            _dir_bytes,
-            _hadoop_content_bytes,
-        )
-
-        src = SF_DIR + "/lineitem.parquet"
-        local_size = _dir_bytes(src)
-        assert local_size > 0
-        assert _hadoop_content_bytes(spark, "file://" + src) == local_size
-        # unknown scheme / unreachable filesystem -> 0, never an error
-        assert _hadoop_content_bytes(spark, "hdfs://nonexistent-nn:1/x") == 0
-
-    def test_nonlocal_uri_admits_and_declines_by_mocked_size(
-        self, spark, monkeypatch
-    ):
-        """A mocked hdfs:// fingerprint flows through both admission
-        floors: big enough -> cache admission and merge floor see the
-        real size; small -> both decline."""
-        import sparksql_server_spark.server.cache as cache_mod
-        from sparksql_server_spark.server.model import QueryJob
-
-        sizes = {"hdfs://warehouse/big": 512 << 20, "hdfs://warehouse/small": 1 << 20}
-        monkeypatch.setattr(
-            cache_mod,
-            "_hadoop_content_bytes",
-            lambda _spark, path: sizes.get(path, 0),
-        )
-        cm = CacheManager(spark, budget_bytes=1 << 40, min_bytes=64 << 20)
-        cm.mem_expansion = 0.0  # isolate the byte floor from memory fit
-        assert cm.should_cache("hdfs://warehouse/big", n_sharers=2)
-        assert not cm.should_cache("hdfs://warehouse/small", n_sharers=2)
-
-        ex = BatchExecutor(spark, cache=cm, mrshare_min_bytes=64 << 20)
-        job = QueryJob(job_id=0, sql="SELECT 1 AS x")
-        job.fingerprints = frozenset({"hdfs://warehouse/big"})
-        job2 = QueryJob(job_id=1, sql="SELECT 2 AS x")
-        job2.fingerprints = frozenset({"hdfs://warehouse/big"})
+    def test_nonlocal_uri_admits_and_declines_by_mocked_size(self, spark):
+        """hdfs:// sizes recorded on the jobs flow through both admission
+        floors: big enough -> the merge floor and cache admission see
+        the real size; small -> both decline."""
+        from sparksql_server_spark.plans.analysis import Scan
+        from sparksql_server_spark.server.model import QueryJob, SharingBag
         from sparksql_server_spark.server.mrshare import MergePlan
+        from sparksql_server_spark.server.scheduler import _merge_source_bytes
 
-        mp = MergePlan(jobs=[job, job2])
-        assert ex._merge_source_bytes(mp) == 512 << 20  # admits the floor
-        for j in mp.jobs:
-            j.fingerprints = frozenset({"hdfs://warehouse/small"})
-        assert ex._merge_source_bytes(mp) == 1 << 20  # priced, would decline
+        def bag(root, size):
+            jobs = []
+            for i in range(2):
+                job = QueryJob(job_id=i, sql=f"SELECT {i} AS x")
+                job.fingerprints = frozenset({root})
+                job.reads[root] = Scan(root, 1, 1, "parquet", size)
+                jobs.append(job)
+            return SharingBag(jobs=jobs, shared_sources=frozenset({root}))
+
+        big, small = "hdfs://warehouse/big", "hdfs://warehouse/small"
+        cm = CacheManager(  # isolate the byte floor: no fraction bar, no memory
+            spark, budget_bytes=1 << 40, min_bytes=64 << 20,
+            columnar_benefit_factor=0.0, mem_expansion=0.0,
+        )
+        builds = []
+        cm.ensure_cached = lambda *args: builds.append(args) or True
+        ex = BatchExecutor(spark, cache=cm, source_views={big: "b", small: "s"})
+        try:
+            admitted, declined = bag(big, 512 << 20), bag(small, 1 << 20)
+            assert _merge_source_bytes(MergePlan(jobs=admitted.jobs)) == 512 << 20
+            assert _merge_source_bytes(MergePlan(jobs=declined.jobs)) == 1 << 20
+            ex._apply_caching_rewrite(admitted)
+            ex._apply_caching_rewrite(declined)
+            assert builds == [(big, "b", 512 << 20, "parquet")]
+            assert admitted.rewrite is RewriteKind.CACHING
+            assert declined.rewrite is RewriteKind.NOOP
+        finally:
+            ex.close()
+
+
+class TestScanRecord:
+    """The plan walk records each scan's listed bytes and full width:
+    the numbers merges and caching are priced by."""
+
+    def test_every_table_records_its_bytes_and_width(self, spark):
+        from sparksql_server_spark.catalog import TABLES
+
+        register_tables(spark, SF_DIR)
+        for name in TABLES:
+            (scan,) = scan_nodes(spark.table(name))
+            assert scan.root == f"{SF_DIR}/{name}.parquet"
+            assert scan.bytes == _dir_bytes(scan.root), name
+            assert scan.width == len(spark.table(name).columns), name
+
+    def test_multi_part_csv_directory(self, spark, tmp_path):
+        """The bytes are those of the data files Spark lists: the part
+        files, not the checksums and markers beside them."""
+        import os
+
+        path = str(tmp_path / "region.csv")
+        register_tables(spark, SF_DIR, ("region",))
+        spark.table("region").repartition(3).write.option("header", True).csv(path)
+        parts = [f for f in os.listdir(path) if f.startswith("part-")]
+        assert len(parts) == 3
+        spark.read.option("header", True).csv(path).createOrReplaceTempView("region_csv")
+        try:
+            (scan,) = scan_nodes(spark.table("region_csv"))
+            assert scan.root == path and scan.format == "csv"
+            assert scan.bytes == sum(os.path.getsize(f"{path}/{f}") for f in parts)
+            assert scan.width == len(spark.table("region_csv").columns)
+        finally:
+            spark.catalog.dropTempView("region_csv")
+
+    def test_file_uri_is_priced_at_its_true_size(self, spark):
+        src = SF_DIR + "/lineitem.parquet"
+        (scan,) = scan_nodes(spark.read.parquet("file://" + src))
+        assert scan.root == src
+        assert scan.bytes == _dir_bytes(src) > 0
+
+
+class TestEviction:
+    """One least-recently-used loop evicts until both the byte budget
+    and the memory estimate fit a build."""
+
+    NATION, SUPPLIER, REGION, PART = (
+        f"{SF_DIR}/{t}.parquet" for t in ("nation", "supplier", "region", "part")
+    )
+
+    @pytest.fixture
+    def cm(self, spark):
+        register_tables(spark, SF_DIR, ("nation", "supplier", "region", "part"))
+        cm = CacheManager(spark, budget_bytes=1 << 40, min_bytes=0, mem_expansion=1.0)
+        cm.storage_headroom = 1.0
+        yield cm
+        cm.clear()
+
+    def _fill(self, cm, size=1, mem_bytes=0):
+        """nation, supplier, then region cached, least recent first."""
+        for src in (self.NATION, self.SUPPLIER, self.REGION):
+            view = src.rsplit("/", 1)[1].removesuffix(".parquet")
+            assert cm.ensure_cached(src, view, size, "parquet")
+            cm._entries[src].mem_bytes = mem_bytes
+            cm._entries[src].last_used = time.monotonic()
+            time.sleep(0.01)
+
+    def test_budget_alone_evicts_only_the_lru_entry(self, spark, cm):
+        cm._free_storage_bytes = lambda: math.inf
+        cm.budget = 100
+        self._fill(cm, size=30)
+        assert cm.ensure_cached(self.PART, "part", 30, "parquet")
+        assert cm.cached_sources == {self.SUPPLIER, self.REGION, self.PART}
+        assert not spark.catalog.isCached("nation")
+        assert spark.catalog.isCached("supplier")
+
+    def test_memory_alone_evicts_in_lru_order_until_it_fits(self, spark, cm):
+        cm._free_storage_bytes = lambda: 100
+        self._fill(cm, mem_bytes=30)
+        # 100 free: evicting nation frees 130, supplier 160 >= 150
+        assert cm.should_cache(self.PART, 150, n_sharers=2, source_format="parquet")
+        assert cm.ensure_cached(self.PART, "part", 150, "parquet")
+        assert cm.cached_sources == {self.REGION, self.PART}
+        assert not spark.catalog.isCached("nation")
+        assert not spark.catalog.isCached("supplier")
+
+    def test_a_build_that_cannot_fit_evicts_nothing(self, spark, cm):
+        cm._free_storage_bytes = lambda: 100
+        self._fill(cm, mem_bytes=30)
+        # 100 free + 90 evictable < 200: the same rule declines in both
+        assert not cm.should_cache(self.PART, 200, n_sharers=2, source_format="parquet")
+        assert not cm.ensure_cached(self.PART, "part", 200, "parquet")
+        assert cm.cached_sources == {self.NATION, self.SUPPLIER, self.REGION}
+        assert self.PART in cm._rejected
+
+    def test_a_failed_build_declines_without_blacklisting(self, spark, cm):
+        """A view that no longer resolves declines before anything is
+        evicted for it, and the source may be tried again."""
+        cm._free_storage_bytes = lambda: math.inf
+        cm.budget = 100
+        self._fill(cm, size=30)
+        assert not cm.ensure_cached(self.PART, "no_such_view", 30, "parquet")
+        assert self.PART not in cm._rejected
+        assert cm.cached_sources == {self.NATION, self.SUPPLIER, self.REGION}
+        assert spark.catalog.isCached("nation")
+
+
+def test_shutdown_releases_the_scan_cache(spark):
+    """A stopped server leaves no InMemoryRelation on the shared
+    SparkContext: shutdown() clears its scan cache."""
+    import threading
+
+    from sparksql_server_spark.operators.scratch import persistent_rdd_ids
+
+    register_tables(spark, SF_DIR, ("orders",))
+    before = persistent_rdd_ids(spark)
+    srv = WorkSharingServer(spark, SF_DIR, window_size=2, max_wait=3.0)
+    srv.executor.cache = cm = CacheManager(
+        spark, min_bytes=0, benefit_factor=0.0, columnar_benefit_factor=0.0
+    )
+    srv.start()
+    try:
+        sqls = [
+            "SELECT count(*) AS n FROM orders",
+            "SELECT count(*) AS n FROM orders WHERE o_totalprice > 0",
+        ]
+        threads = [
+            threading.Thread(target=client_request, args=(srv.address, {"sql": q}))
+            for q in sqls
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert cm.cached_sources == {SF_DIR + "/orders.parquet"}
+        assert spark.catalog.isCached("orders")
+    finally:
+        srv.shutdown()
+    try:
+        assert persistent_rdd_ids(spark) == before
+        assert not spark.catalog.isCached("orders")
+    finally:
+        cm.clear()
+
+
+def test_server_stats_does_not_wait_for_a_cache_build(spark):
+    """A build holds the cache lock for its whole length; server_stats
+    reads the cached sources without it."""
+    import threading
+
+    srv = WorkSharingServer(spark, SF_DIR, max_wait=0.1).start()
+    held, release = threading.Event(), threading.Event()
+
+    def build():
+        with srv.executor.cache._lock:
+            held.set()
+            release.wait(10)
+
+    holder = threading.Thread(target=build)
+    holder.start()
+    try:
+        assert held.wait(10)
+        t0 = time.monotonic()
+        reply = client_request(srv.address, {"server_stats": True})
+        assert time.monotonic() - t0 < 2
+        assert reply["stats"]["cached_sources"] == []
+    finally:
+        release.set()
+        holder.join()
+        srv.shutdown()
 
 
 class TestCancellation:
@@ -1207,7 +1370,6 @@ class TestCancellation:
                 assert c.sql("SELECT 1 AS one")["rows"] == [[1]]
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_cancel_queued_job_before_start(self, spark):
         """A job cancelled while still queued never runs."""
@@ -1236,7 +1398,6 @@ class TestOverlappingBatches:
         srv = WorkSharingServer(spark, SF_DIR, window_size=1, max_wait=0.05).start()
         yield srv
         srv.shutdown()
-        srv.executor.cache.clear()
 
     @staticmethod
     def _job_of(server, reply) -> QueryJob:
@@ -1371,7 +1532,6 @@ class TestOverlappingBatches:
             assert any(t.name.startswith(prefix) for t in threading.enumerate())
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
         assert not [t.name for t in threading.enumerate() if t.name.startswith(prefix)]
 
 
@@ -1453,7 +1613,6 @@ class TestGatewayCacheTable:
         finally:
             spark.catalog.uncacheTable("lineitem")
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 class TestProtocolRobustness:
@@ -1466,7 +1625,6 @@ class TestProtocolRobustness:
         srv = WorkSharingServer(spark, SF_DIR, window_size=2, max_wait=0.2).start()
         yield srv
         srv.shutdown()
-        srv.executor.cache.clear()
 
     def test_malformed_requests_get_error_replies(self, server):
         import json
@@ -1570,7 +1728,6 @@ class TestSqlScripting:
         finally:
             client_request(srv.address, {"sql": "DROP TABLE IF EXISTS script_ctr"})
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 # -- JDBC-line proxy (server/jdbc_proxy.py) --------------------------------
@@ -2039,7 +2196,6 @@ class TestJdbcLineProxy:
             proxy.stop()
             ups.close()
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_proxied_command_flushes_result_cache(self, spark):
         # taint disabled: this test pins the FLUSH scoping; the taint's
@@ -2068,7 +2224,6 @@ class TestJdbcLineProxy:
             assert "cached" not in client_request(srv.address, {"sql": q})
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 # --- round 7: Thrift-side merge substitution (VERDICT r6 ask #7) ----------
@@ -2485,7 +2640,6 @@ class TestThriftSubstitution:
             proxy.stop()
             ups.close()
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_benign_housekeeping_keeps_substitution(self):
         """VERDICT r7 ask #1: BI tools open connections with USE/SET
@@ -2633,7 +2787,6 @@ class TestThriftSubstitution:
         finally:
             proxy.stop()
             srv.shutdown()
-            srv.executor.cache.clear()
             ups.close()
 
 
@@ -3099,7 +3252,6 @@ def test_substituted_repeat_statement_hits_result_cache(spark):
     finally:
         proxy.stop()
         srv.shutdown()
-        srv.executor.cache.clear()
         ups.close()
 
 
@@ -3168,7 +3320,6 @@ class TestGatewayHardeningR8:
             assert nxt["status"] == "done" and nxt["rows"][0][0] == 2
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_root_session_command_leaves_shared_cache_namespace(self, spark):
         """A root-session (no 'session' field) command shadows shared
@@ -3199,7 +3350,6 @@ class TestGatewayHardeningR8:
             from sparksql_server_spark.catalog import register_tables
             register_tables(spark, SF_DIR)
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_empty_string_session_is_the_root_session(self, spark):
         """{'session': ''} canonicalizes to root: it previously created
@@ -3215,7 +3365,6 @@ class TestGatewayHardeningR8:
                 assert "" not in srv._sessions  # no named '' session exists
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_jobs_registry_is_bounded(self, spark):
         """The id->job registry must evict completed jobs past the cap
@@ -3230,7 +3379,6 @@ class TestGatewayHardeningR8:
             assert len(srv._jobs) <= 7  # cap + the in-flight newest
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 def test_caching_rewrite_over_an_unresolvable_view_declines(spark):
@@ -3270,7 +3418,6 @@ def test_caching_rewrite_over_an_unresolvable_view_declines(spark):
     finally:
         register_tables(spark, SF_DIR, ("orders",))
         srv.shutdown()
-        srv.executor.cache.clear()
 
 
 class TestJdbcTempViewMirror:
@@ -3371,7 +3518,6 @@ class TestJdbcTempViewMirror:
             proxy.stop()
             ups.close()
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_view_queries_pass_through_and_base_tables_answer_from_root(self, spark):
         from sparksql_server_spark.server.results import ResultCache
@@ -3417,7 +3563,6 @@ class TestJdbcTempViewMirror:
                 }
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_shadowing_view_routes_to_session_not_root(self, spark):
         """The hazard the routing must never miss: a view that SHADOWS a
@@ -3440,7 +3585,6 @@ class TestJdbcTempViewMirror:
             assert srv.results.stats()["result_cache_entries"] == 0
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_non_mirrorable_ddl_still_demotes(self, spark):
         """The connection keeps a created view only when HiveServer2's
@@ -3473,7 +3617,6 @@ class TestJdbcTempViewMirror:
             ) == {"passthrough": "view", "views": ["nation"]}
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
     def test_drop_of_created_view_stays_clean(self, spark):
         """DROP VIEW of a view THIS connection created stays clean and
@@ -3500,7 +3643,6 @@ class TestJdbcTempViewMirror:
             }
         finally:
             srv.shutdown()
-            srv.executor.cache.clear()
 
 
 def test_prime_returns_at_once_for_what_root_cannot_analyze(spark):
@@ -3518,7 +3660,6 @@ def test_prime_returns_at_once_for_what_root_cannot_analyze(spark):
             assert srv.executor.stats[stat] == before[stat], stat
     finally:
         srv.shutdown()
-        srv.executor.cache.clear()
 
 
 class TestOverlayPerfConf:
@@ -3619,4 +3760,3 @@ class TestOverlayPerfConf:
             proxy.stop()
             ups.close()
             srv.shutdown()
-            srv.executor.cache.clear()

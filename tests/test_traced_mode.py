@@ -62,8 +62,34 @@ def test_install_wraps_live_names_and_uninstall_restores_them(spans):
         (scheduler, "scan_nodes"),
         (scheduler, "detect_sharing"),
         (CacheManager, "ensure_cached"),
+        (CacheManager, "should_cache"),
+        (scheduler, "plan_merges"),
+        (ResultCache, "get"),
+        (ResultCache, "put"),
     ):
         assert key in patched, key
     after = _attrs(owners)
     assert after.keys() == before.keys()
     assert [k for k in before if after[k] is not before[k]] == []
+
+
+def test_run_counters_count_one_real_build(spans, spark):
+    """The always-on build counter wraps ``ensure_cached`` by its
+    signature: one real build over a tiny table counts once, and a
+    second call that finds the entry counts nothing."""
+    from sparksql_server_spark.catalog import _dir_bytes, register_tables
+    from sparksql_server_spark.server.cache import CacheManager
+    from tests.conftest import SF_DIR
+
+    register_tables(spark, SF_DIR, ("region",))
+    src = SF_DIR + "/region.parquet"
+    cm = CacheManager(spark, min_bytes=0)
+    counters = spans.RunCounters()
+    counters.install()
+    try:
+        assert cm.ensure_cached(src, "region", _dir_bytes(src), "parquet")
+        assert cm.ensure_cached(src, "region", _dir_bytes(src), "parquet")
+    finally:
+        counters.uninstall()
+        cm.clear()
+    assert counters.builds == 1
